@@ -2,12 +2,17 @@
 """Local replica of the driver's correctness gate: run graft.Verify output
 against the DuckDB oracle SQL and compare row-for-row.
 
-Usage: python3 scripts/check_oracle.py <sfDir> <verifyOutDir>
+Usage: python3 scripts/check_oracle.py <sfDir> <verifyOutDir> [q1,q2,...]
+
+The optional third argument is the comma-separated query filter Verify
+takes: only those queries are graded, and a filtered query with no Spark
+output (or no oracle) still counts as bad.
 """
 import json, sys, glob, os
 import duckdb
 
 sf_dir, out_dir = sys.argv[1], sys.argv[2]
+only = {n for n in sys.argv[3].split(",") if n} if len(sys.argv) > 3 else set()
 
 con = duckdb.connect()
 for t in ("region nation customer supplier part orders lineitem events "
@@ -37,7 +42,11 @@ def canon(rows, cols):
     return sorted(out)
 
 n_ok = n_bad = 0
-for name in sorted(oracles):
+for name in sorted(only or oracles):
+    if name not in oracles:
+        print(f"UNKNOWN  {name}: no oracle SQL")
+        n_bad += 1
+        continue
     if name in errors:
         print(f"ERR      {name}: {errors[name]}")
         n_bad += 1

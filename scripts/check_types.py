@@ -7,14 +7,16 @@ at author time: for each query in a graft.Verify output dir it compares
 the DuckDB-visible column types of the Spark parquet against the oracle
 SQL's DESCRIBE types.
 
-Usage: python3 scripts/check_types.py <sfDir> <verifyOutDir> [name ...]
-Exit 1 on any drift.
+Usage: python3 scripts/check_types.py <sfDir> <verifyOutDir> [q1,q2,...]
+The optional query filter has Verify's comma-separated syntax (several
+arguments are joined); a filtered query with no Spark output or no oracle
+still counts as drifted. Exit 1 on any drift.
 """
 import json, sys, glob, os
 import duckdb
 
 sf_dir, out_dir = sys.argv[1], sys.argv[2]
-only = set(sys.argv[3:])
+only = {n for a in sys.argv[3:] for n in a.split(",") if n}
 
 con = duckdb.connect()
 for t in ("region nation customer supplier part orders lineitem events "
@@ -31,8 +33,10 @@ def types_of(sql):
     return {r[0]: r[1] for r in con.execute(f"DESCRIBE {sql}").fetchall()}
 
 n_ok = n_bad = 0
-for name in sorted(oracles):
-    if only and name not in only:
+for name in sorted(only or oracles):
+    if name not in oracles:
+        print(f"UNKNOWN  {name}: no oracle SQL")
+        n_bad += 1
         continue
     files = glob.glob(os.path.join(out_dir, name, "*.parquet"))
     if not files:

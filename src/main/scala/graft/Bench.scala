@@ -380,26 +380,8 @@ object Bench {
     def wallSec: Double = (System.nanoTime() - benchT0) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // shuffle/spill/broadcast IO codec (see GraftSession.local — the
-      // same env hook and same measured zstd default, so the bench
-      // measures what the engine ships)
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "zstd"))
-      // local test tables are single small parquet files; split scans so
-      // all cores participate (a real deployment reads many large files)
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the shipped session: the bench measures what the engine ships
+    val spark = GraftSession.local(cpus.toInt)
     // the bounded pool-rank windows (Retrieval.scala, documented
     // <= 2*poolK pools by construction) and oracle-shape SQL emit
     // hundreds of "No Partition Defined for Window operation" WARNs per
@@ -447,10 +429,12 @@ object Bench {
     // wall regardless of cores, while every mandatory row's cost grows
     // as cores shrink, so a lower-core run must shed optional work
     // proportionally earlier to fit the same kill: BENCH_r19_c8 hit the
-    // hard rc 124 at 3573 s because its budget was still 3000). An
-    // explicit SPARK_GRAFT_BENCH_BUDGET_SEC stays absolute.
+    // hard rc 124 at 3573 s because its budget was still 3000), floored
+    // at 750 s so an env-less run (SPARK_GRAFT_CPUS defaults to 4) keeps
+    // its optional runs. An explicit SPARK_GRAFT_BENCH_BUDGET_SEC stays
+    // absolute.
     val budgetSec = envOr("SPARK_GRAFT_BENCH_BUDGET_SEC",
-      3000.0 * cpus.toInt / 32.0)(_.toDouble)
+      math.max(750.0, 3000.0 * cpus.toInt / 32.0))(_.toDouble)
     def overBudget: Boolean = wallSec > budgetSec
     // r20 shed policy (VERDICT r19 item 1a): the r19 shed dropped every
     // remaining 100x row to min-of-1 once the budget was EXHAUSTED —
@@ -712,9 +696,11 @@ object Bench {
       // — "Asked to cache already cached data" on every re-run). Every
       // timed run must compute from the parquet inputs: drop all cached
       // plans and persisted RDDs between runs. Outside the timed window
-      // by construction (sec is already taken).
+      // by construction (sec is already taken) — and blocking, so block
+      // removal IO cannot spill into the next run's window.
       spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = true))
       (sec, obs.get("n").asInstanceOf[Long])
     }
     // (min sec, rows, per-run secs, per-run 1-min loadavg); the warm-up

@@ -349,7 +349,10 @@ object Dedup {
         try {
           val out = pairs.persist(
             org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-          out.count() // eager: the pins can release before the caller's jobs
+          // eager: the pins can release before the caller's jobs; a failed
+          // fill must not leave the result-sized cache entry registered
+          try out.count()
+          catch { case e: Throwable => out.unpersist(); throw e }
           out
         } finally shPin.foreach(_.unpersist())
       } finally candidates.unpersist()

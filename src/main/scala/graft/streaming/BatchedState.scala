@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Micro-batch-versioned persisted state for standing dedup pipelines —
-  * the snapshot + delta layout that makes at-least-once `foreachBatch`
+  * the snapshot + delta layout that makes at-least-once micro-batch
   * appends idempotent WITHOUT any read-time dedup (the reference keeps
   * its analogous series state bounded with quotas + periodic reloads:
   * `task/sinker.go` series map; we need the same lifecycle story for

@@ -28,7 +28,7 @@ final class Metrics extends StreamingQueryListener {
   private val writeCount = new LongAdder
   private val writeSumMs = new LongAdder
 
-  /** Record one per-batch write duration (driver-side, from foreachBatch). */
+  /** Record one per-batch write duration (driver-side, from the batch handler). */
   def observeWriteMs(ms: Long): Unit = {
     writeCount.increment(); writeSumMs.add(ms)
     var i = 0

@@ -149,7 +149,7 @@ object SeriesDedup {
     override def close(): Unit = { exec.shutdownNow(); () }
   }
 
-  /** Batch-mode equivalent (used by foreachBatch pipelines and the oracle
+  /** Batch-mode equivalent (used by micro-batch pipelines and the oracle
     * queries): first row per sid, plus mid-changes vs a known snapshot.
     */
   def dedupBatch(rows: Dataset[SeriesRow]): Dataset[SeriesRow] = {

@@ -96,7 +96,7 @@ final class SinkerApp(
     schemas.put(task.name, newDims)
     restarts.merge(task.name, Integer.valueOf(1), (a, b) => Integer.valueOf(a + b))
     // restart asynchronously (stopping the query from inside its own
-    // foreachBatch would deadlock on the streaming lock), serialized on
+    // batch handler would deadlock on the streaming lock), serialized on
     // restartExec; skip if a bounce for this group is already queued
     if (pendingBounce.add(task.consumerGroup))
       restartExec.submit(new Runnable {

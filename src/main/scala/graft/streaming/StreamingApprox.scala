@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types._
 
 import graft.operators.ApproxAgg
@@ -23,23 +22,14 @@ import graft.operators.ApproxAgg
   * SEMI-join the broadcast batch keys; at most 512 register rows per
   * touched key per batch flow anywhere. [[compact]] folds files only.
   */
-final class StreamingUniqHll(spark: SparkSession, stateDir: String,
-    keyCol: String, valueCol: String, nBuckets: Int = 64)
-    extends Serializable {
+final class StreamingUniqHll(protected val spark: SparkSession,
+    protected val stateDir: String, keyCol: String, valueCol: String,
+    protected val nBuckets: Int = 64) extends KeyedFold {
 
-  private val state = new BatchedState(spark, s"$stateDir/regs", Seq("kb"))
+  protected val state = new BatchedState(spark, s"$stateDir/regs", Seq("kb"))
 
-  private def kBucket(k: Column): Column =
-    pmod(xxhash64(k), lit(nBuckets)).cast("int")
-
-  private val stateParams = Map("keyCol" -> keyCol, "valueCol" -> valueCol,
+  protected val stateParams = Map("keyCol" -> keyCol, "valueCol" -> valueCol,
     "p" -> ApproxAgg.HllP.toString, "nBuckets" -> nBuckets.toString)
-  @transient private var paramsChecked = false
-  private def ensureAdmissible(batchId: Long): Unit = if (!paramsChecked) {
-    BatchedState.validateParams(spark, stateDir, stateParams)
-    BatchedState.requireMonotonicBatchId(batchId, Seq(state), stateDir)
-    paramsChecked = true
-  }
 
   private val stateSchema = StructType(Seq(
     StructField("k", StringType), StructField("reg", IntegerType),
@@ -57,53 +47,25 @@ final class StreamingUniqHll(spark: SparkSession, stateDir: String,
   /** Seed the standing sketch from a (possibly empty) history, REPLACING
     * any previous state under `stateDir`.
     */
-  def seed(history: DataFrame): Unit = {
-    BatchedState.clearParams(spark, stateDir)
-    state.reset()
-    state.seed(batchRegisters(history).withColumn("kb", kBucket(col("k"))))
-    BatchedState.writeParams(spark, stateDir, stateParams)
-    paramsChecked = true
+  def seed(history: DataFrame): Unit = reseed {
+    state.seed(withKb(batchRegisters(history), "k"))
   }
 
   /** Admit micro-batch `batchId`: merge the batch's registers into the
     * standing sketch and emit (keyCol, est, n_regs) for every key
     * touched by the batch — the estimate over the key's full history.
     */
-  def admit(batch: DataFrame, batchId: Long): DataFrame = {
-    ensureAdmissible(batchId)
-    val fresh = batchRegisters(batch)
-      .withColumn("kb", kBucket(col("k"))).localCheckpoint()
-    val kbs = fresh.select("kb").distinct().collect().map(_.getInt(0))
-    val ref = state.read(before = batchId, fallback = Some(stateSchema))
-      .where(col("kb").isin(kbs.toIndexedSeq.map(Int.box): _*))
-      .join(broadcast(fresh.select(col("k")).distinct()), Seq("k"), "left_semi")
-      .select(col("k"), col("reg"), col("m"))
+  protected def admitBatch(batch: DataFrame, batchId: Long): DataFrame = {
+    val (fresh, pruned) = prunedRead(batchRegisters(batch), Seq("k"), batchId,
+      Some(stateSchema), distinctKeys = true)
+    val ref = pruned.select(col("k"), col("reg"), col("m"))
     val merged = foldRegisters(ref.unionByName(
         fresh.select(col("k"), col("reg"), col("m"))))
       .localCheckpoint() // materialize before the state append
-    state.append(merged.withColumn("kb", kBucket(col("k"))), batchId)
+    state.append(withKb(merged, "k"), batchId)
     ApproxAgg.hllEstimate(merged, Seq("k"))
       .select(col("k").as(keyCol), col("est"), col("n_regs"))
   }
-
-  /** File compaction only ([[StreamingReplacingMerge.compact]]
-    * contract).
-    */
-  def compact(upTo: Long = Long.MaxValue): Unit =
-    state.compact(Long.MinValue, upTo)
-
-  /** Run the standing sketch over a stream. */
-  def attach(source: DataFrame, outDir: String,
-      checkpointDir: String, autoCompactEvery: Int = 0): DataStreamWriter[Row] =
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admit(batch, batchId).write.mode("overwrite")
-          .parquet(s"$outDir/batch=$batchId")
-        if (autoCompactEvery > 0 && batchId > 0 &&
-          batchId % autoCompactEvery == 0) compact(upTo = batchId - 1)
-        ()
-      }
 }
 
 /** Standing streaming KMV distinct sketch — the streaming lift of
@@ -114,23 +76,14 @@ final class StreamingUniqHll(spark: SparkSession, stateDir: String,
   * max-fold). State stays <= k rows per key per append; reads prune to
   * the batch's `kb` buckets and semi-join the broadcast batch keys.
   */
-final class StreamingUniqKmv(spark: SparkSession, stateDir: String,
-    keyCol: String, valueCol: String, k: Int = 256, nBuckets: Int = 64)
-    extends Serializable {
+final class StreamingUniqKmv(protected val spark: SparkSession,
+    protected val stateDir: String, keyCol: String, valueCol: String,
+    k: Int = 256, protected val nBuckets: Int = 64) extends KeyedFold {
 
-  private val state = new BatchedState(spark, s"$stateDir/kmv", Seq("kb"))
+  protected val state = new BatchedState(spark, s"$stateDir/kmv", Seq("kb"))
 
-  private def kBucket(c: Column): Column =
-    pmod(xxhash64(c), lit(nBuckets)).cast("int")
-
-  private val stateParams = Map("keyCol" -> keyCol, "valueCol" -> valueCol,
+  protected val stateParams = Map("keyCol" -> keyCol, "valueCol" -> valueCol,
     "k" -> k.toString, "nBuckets" -> nBuckets.toString)
-  @transient private var paramsChecked = false
-  private def ensureAdmissible(batchId: Long): Unit = if (!paramsChecked) {
-    BatchedState.validateParams(spark, stateDir, stateParams)
-    BatchedState.requireMonotonicBatchId(batchId, Seq(state), stateDir)
-    paramsChecked = true
-  }
 
   private val stateSchema = StructType(Seq(
     StructField("k", StringType), StructField("h", LongType),
@@ -150,55 +103,26 @@ final class StreamingUniqKmv(spark: SparkSession, stateDir: String,
     df.groupBy(col("k")).agg(agg(col("h")).as("ks"))
   }
 
-  def seed(history: DataFrame): Unit = {
-    BatchedState.clearParams(spark, stateDir)
-    state.reset()
-    state.seed(foldMinK(batchHashes(history))
-      .select(col("k"), explode(col("ks")).as("h"))
-      .withColumn("kb", kBucket(col("k"))))
-    BatchedState.writeParams(spark, stateDir, stateParams)
-    paramsChecked = true
+  def seed(history: DataFrame): Unit = reseed {
+    state.seed(withKb(foldMinK(batchHashes(history))
+      .select(col("k"), explode(col("ks")).as("h")), "k"))
   }
 
   /** Admit micro-batch `batchId`: merge the batch's hashes into the
     * standing sketch and emit (keyCol, est, n_kept) for every key the
     * batch touched — the estimate over the key's full history.
     */
-  def admit(batch: DataFrame, batchId: Long): DataFrame = {
-    ensureAdmissible(batchId)
-    val fresh = batchHashes(batch)
-      .withColumn("kb", kBucket(col("k"))).localCheckpoint()
-    val kbs = fresh.select("kb").distinct().collect().map(_.getInt(0))
-    val ref = state.read(before = batchId, fallback = Some(stateSchema))
-      .where(col("kb").isin(kbs.toIndexedSeq.map(Int.box): _*))
-      .join(broadcast(fresh.select(col("k")).distinct()), Seq("k"), "left_semi")
-      .select(col("k"), col("h"))
+  protected def admitBatch(batch: DataFrame, batchId: Long): DataFrame = {
+    val (fresh, pruned) = prunedRead(batchHashes(batch), Seq("k"), batchId,
+      Some(stateSchema), distinctKeys = true)
+    val ref = pruned.select(col("k"), col("h"))
     val merged = foldMinK(ref.unionByName(fresh.select(col("k"), col("h"))))
       .localCheckpoint() // materialize before the state append
-    state.append(merged.select(col("k"), explode(col("ks")).as("h"))
-      .withColumn("kb", kBucket(col("k"))), batchId)
+    state.append(withKb(merged.select(col("k"), explode(col("ks")).as("h")),
+      "k"), batchId)
     ApproxAgg.kmvEstimate(merged, Seq("k"), k)
       .select(col("k").as(keyCol), col("est"), col("n_kept"))
   }
-
-  /** File compaction only ([[StreamingReplacingMerge.compact]]
-    * contract).
-    */
-  def compact(upTo: Long = Long.MaxValue): Unit =
-    state.compact(Long.MinValue, upTo)
-
-  /** Run the standing sketch over a stream. */
-  def attach(source: DataFrame, outDir: String,
-      checkpointDir: String, autoCompactEvery: Int = 0): DataStreamWriter[Row] =
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admit(batch, batchId).write.mode("overwrite")
-          .parquet(s"$outDir/batch=$batchId")
-        if (autoCompactEvery > 0 && batchId > 0 &&
-          batchId % autoCompactEvery == 0) compact(upTo = batchId - 1)
-        ()
-      }
 }
 
 /** Standing streaming quantile sketch — the streaming lift of
@@ -215,27 +139,18 @@ final class StreamingUniqKmv(spark: SparkSession, stateDir: String,
   * independent); reads prune to the batch's buckets and SEMI-join the
   * broadcast batch keys. [[compact]] folds files only.
   */
-final class StreamingQuantile(spark: SparkSession, stateDir: String,
-    keyCol: String, valueCol: String, quantiles: Seq[(String, Int, Int)],
-    scale: Int = 100, sigBits: Int = 8, nBuckets: Int = 64)
-    extends Serializable {
+final class StreamingQuantile(protected val spark: SparkSession,
+    protected val stateDir: String, keyCol: String, valueCol: String,
+    quantiles: Seq[(String, Int, Int)], scale: Int = 100, sigBits: Int = 8,
+    protected val nBuckets: Int = 64) extends KeyedFold {
 
   require(quantiles.nonEmpty, "at least one quantile")
 
-  private val state = new BatchedState(spark, s"$stateDir/hist", Seq("kb"))
+  protected val state = new BatchedState(spark, s"$stateDir/hist", Seq("kb"))
 
-  private def kBucket(k: Column): Column =
-    pmod(xxhash64(k), lit(nBuckets)).cast("int")
-
-  private val stateParams = Map("keyCol" -> keyCol, "valueCol" -> valueCol,
+  protected val stateParams = Map("keyCol" -> keyCol, "valueCol" -> valueCol,
     "scale" -> scale.toString, "sigBits" -> sigBits.toString,
     "nBuckets" -> nBuckets.toString)
-  @transient private var paramsChecked = false
-  private def ensureAdmissible(batchId: Long): Unit = if (!paramsChecked) {
-    BatchedState.validateParams(spark, stateDir, stateParams)
-    BatchedState.requireMonotonicBatchId(batchId, Seq(state), stateDir)
-    paramsChecked = true
-  }
 
   private val stateSchema = StructType(Seq(
     StructField("k", StringType), StructField("blo", LongType),
@@ -253,27 +168,18 @@ final class StreamingQuantile(spark: SparkSession, stateDir: String,
   /** Seed the standing histogram from a (possibly empty) history,
     * REPLACING any previous state under `stateDir`.
     */
-  def seed(history: DataFrame): Unit = {
-    BatchedState.clearParams(spark, stateDir)
-    state.reset()
-    state.seed(batchHist(history).withColumn("kb", kBucket(col("k"))))
-    BatchedState.writeParams(spark, stateDir, stateParams)
-    paramsChecked = true
+  def seed(history: DataFrame): Unit = reseed {
+    state.seed(withKb(batchHist(history), "k"))
   }
 
   /** Admit micro-batch `batchId`: fold the batch's histogram into the
     * standing one and emit (keyCol, n, quantiles...) for every touched
     * key over its full history.
     */
-  def admit(batch: DataFrame, batchId: Long): DataFrame = {
-    ensureAdmissible(batchId)
-    val fresh = batchHist(batch)
-      .withColumn("kb", kBucket(col("k"))).localCheckpoint()
-    val kbs = fresh.select("kb").distinct().collect().map(_.getInt(0))
-    val refRaw = state.read(before = batchId, fallback = Some(stateSchema))
-      .where(col("kb").isin(kbs.toIndexedSeq.map(Int.box): _*))
-      .join(broadcast(fresh.select(col("k")).distinct()), Seq("k"), "left_semi")
-      .select(col("k"), col("blo"), col("cnt"), col("batch"))
+  protected def admitBatch(batch: DataFrame, batchId: Long): DataFrame = {
+    val (fresh, pruned) = prunedRead(batchHist(batch), Seq("k"), batchId,
+      Some(stateSchema), distinctKeys = true)
+    val refRaw = pruned.select(col("k"), col("blo"), col("cnt"), col("batch"))
     // newest complete histogram per key (counts are not idempotent)
     val latest = refRaw.groupBy(col("k")).agg(max(col("batch")).as("batch"))
     val ref = refRaw.join(broadcast(latest), Seq("k", "batch"))
@@ -281,28 +187,9 @@ final class StreamingQuantile(spark: SparkSession, stateDir: String,
     val merged = foldHist(ref.unionByName(
         fresh.select(col("k"), col("blo"), col("cnt"))))
       .localCheckpoint() // materialize before the state append
-    state.append(merged.withColumn("kb", kBucket(col("k"))), batchId)
+    state.append(withKb(merged, "k"), batchId)
     ApproxAgg.quantilesOfHistogram(merged, Seq("k"), quantiles, scale)
       .select(col("k").as(keyCol) +: col("n") +: quantiles.map {
         case (name, _, _) => col(name) }: _*)
   }
-
-  /** File compaction only ([[StreamingReplacingMerge.compact]]
-    * contract).
-    */
-  def compact(upTo: Long = Long.MaxValue): Unit =
-    state.compact(Long.MinValue, upTo)
-
-  /** Run the standing quantile sketch over a stream. */
-  def attach(source: DataFrame, outDir: String,
-      checkpointDir: String, autoCompactEvery: Int = 0): DataStreamWriter[Row] =
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admit(batch, batchId).write.mode("overwrite")
-          .parquet(s"$outDir/batch=$batchId")
-        if (autoCompactEvery > 0 && batchId > 0 &&
-          batchId % autoCompactEvery == 0) compact(upTo = batchId - 1)
-        ()
-      }
 }

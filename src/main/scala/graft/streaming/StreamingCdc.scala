@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.operators.MergeSemantics
 
@@ -27,24 +26,16 @@ import graft.operators.MergeSemantics
   * deliberately not exposed on this tier). Idempotent overwrite appends
   * and replay-deterministic `read(before)` are [[BatchedState]]'s.
   */
-final class StreamingReplacingMerge(spark: SparkSession, stateDir: String,
-    keyCol: String, verCol: String, payloadCols: Seq[String],
-    nBuckets: Int = 64) extends Serializable {
+final class StreamingReplacingMerge(protected val spark: SparkSession,
+    protected val stateDir: String, keyCol: String, verCol: String,
+    payloadCols: Seq[String], protected val nBuckets: Int = 64)
+    extends KeyedFold {
 
   private val cols = Seq(keyCol, verCol) ++ payloadCols
-  private val state = new BatchedState(spark, s"$stateDir/rows", Seq("kb"))
+  protected val state = new BatchedState(spark, s"$stateDir/rows", Seq("kb"))
 
-  private def kBucket(k: Column): Column =
-    pmod(xxhash64(k), lit(nBuckets)).cast("int")
-
-  private val stateParams = Map("keyCol" -> keyCol, "verCol" -> verCol,
+  protected val stateParams = Map("keyCol" -> keyCol, "verCol" -> verCol,
     "payload" -> payloadCols.mkString(","), "nBuckets" -> nBuckets.toString)
-  @transient private var paramsChecked = false
-  private def ensureAdmissible(batchId: Long): Unit = if (!paramsChecked) {
-    BatchedState.validateParams(spark, stateDir, stateParams)
-    BatchedState.requireMonotonicBatchId(batchId, Seq(state), stateDir)
-    paramsChecked = true
-  }
 
   private def folded(df: DataFrame): DataFrame =
     MergeSemantics.replacingMerge(df.select(cols.map(col): _*),
@@ -53,12 +44,8 @@ final class StreamingReplacingMerge(spark: SparkSession, stateDir: String,
   /** Seed the standing view from an initial snapshot (folded to one row
     * per key), REPLACING any previous state under `stateDir`.
     */
-  def seed(snapshot: DataFrame): Unit = {
-    BatchedState.clearParams(spark, stateDir)
-    state.reset()
-    state.seed(folded(snapshot).withColumn("kb", kBucket(col(keyCol))))
-    BatchedState.writeParams(spark, stateDir, stateParams)
-    paramsChecked = true
+  def seed(snapshot: DataFrame): Unit = reseed {
+    state.seed(withKb(folded(snapshot), keyCol))
   }
 
   /** Upsert micro-batch `batchId` and return one row per touched key:
@@ -68,14 +55,8 @@ final class StreamingReplacingMerge(spark: SparkSession, stateDir: String,
     * batch's folded rows; replay overwrites them idempotently and
     * `read(before)` keeps the view the clean run saw.
     */
-  def admit(batch: DataFrame, batchId: Long): DataFrame = {
-    ensureAdmissible(batchId)
-    val fresh = folded(batch)
-      .withColumn("kb", kBucket(col(keyCol))).localCheckpoint()
-    val kbs = fresh.select("kb").distinct().collect().map(_.getInt(0))
-    val ref = state.read(before = batchId, fallback = Some(fresh.schema))
-      .where(col("kb").isin(kbs.toIndexedSeq.map(Int.box): _*))
-      .join(broadcast(fresh.select(col(keyCol))), Seq(keyCol), "left_semi")
+  protected def admitBatch(batch: DataFrame, batchId: Long): DataFrame = {
+    val (fresh, ref) = prunedRead(folded(batch), Seq(keyCol), batchId)
     val prev = folded(ref)
     val cur = folded(prev.unionByName(fresh.select(cols.map(col): _*)))
     // materialize BEFORE the state append: the plan references state
@@ -89,28 +70,4 @@ final class StreamingReplacingMerge(spark: SparkSession, stateDir: String,
     state.append(fresh, batchId)
     out
   }
-
-  /** FILE compaction only: folds deltas `<= upTo` into one snapshot
-    * without evicting any row — on this tier an aged row may still be an
-    * untouched key's current state, so the `keepFrom` TTL is not
-    * exposed. Call only for checkpoint-committed batch ids.
-    */
-  def compact(upTo: Long = Long.MaxValue): Unit =
-    state.compact(Long.MinValue, upTo)
-
-  /** Run the standing view over a stream: per micro-batch, admit +
-    * write the touched-key changelog to `outDir/batch=<id>` (overwrite —
-    * exactly-once per dir), optional periodic file compaction.
-    */
-  def attach(source: DataFrame, outDir: String,
-      checkpointDir: String, autoCompactEvery: Int = 0): DataStreamWriter[Row] =
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admit(batch, batchId).write.mode("overwrite")
-          .parquet(s"$outDir/batch=$batchId")
-        if (autoCompactEvery > 0 && batchId > 0 &&
-          batchId % autoCompactEvery == 0) compact(upTo = batchId - 1)
-        ()
-      }
 }

@@ -24,10 +24,10 @@ import graft.operators.{Dedup, Sampling, TextAnalysis}
   * against the grown set, earlier (replayed) batches provably don't
   * ([[BatchedState.read]]'s `before` cut).
   *
-  * Delivery: [[attach]] runs under `foreachBatch` (at-least-once) and
-  * writes each batch's rollup to `outDir/batch=<id>` with overwrite
-  * semantics, so a crash-replayed batch replaces its own output —
-  * exactly-once per batch dir, like [[StreamingDedup.attach]].
+  * Delivery: [[attach]] runs in the [[StandingOperator]] shell
+  * (at-least-once micro-batches) and writes each batch's rollup to
+  * `outDir/batch=<id>` with overwrite semantics, so a crash-replayed
+  * batch replaces its own output — exactly-once per batch dir.
   */
 final class StreamingCuration(spark: SparkSession, stateDir: String,
     idCol: String, textCol: String, sourceCol: String,
@@ -75,20 +75,14 @@ final class StreamingCuration(spark: SparkSession, stateDir: String,
         sum(TextAnalysis.wsTokenCount(col(textCol))).as("n_tokens"))
   }
 
-  /** See [[StreamingDedup.attach]]: per-batch overwrite parquet under
-    * `outDir/batch=<id>` — idempotent across crash replays.
+  /** Curate each micro-batch into `outDir/batch=<id>` (overwrite —
+    * idempotent across crash replays).
     */
   def attach(source: DataFrame, outDir: String,
       checkpointDir: String): DataStreamWriter[Row] =
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        curate(batch, batchId).write.mode("overwrite")
-          .parquet(s"$outDir/batch=$batchId")
-        ()
-      }
+    StandingOperator.sink(source, outDir, checkpointDir)(curate)(_ => ())
 
-  /** See [[StreamingDedup.compact]]. */
+  /** [[StreamingDecontamination]]'s `compact`. */
   def compact(keepFrom: Long = Long.MinValue,
       upTo: Long = Long.MaxValue): Unit = decon.compact(keepFrom, upTo)
 }

@@ -2,20 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
-import org.apache.spark.sql.Row
 
 import graft.operators.Dedup
-
-/** Bucket derivations shared by the dedup twins — one definition so the
-  * batch side and the persisted state can never disagree.
-  */
-private[streaming] object StateBuckets {
-  def idBucket(id: Column, nBuckets: Int): Column =
-    pmod(xxhash64(id), lit(nBuckets)).cast("int")
-  def bandBucket(band: Column, bandHash: Column, nBuckets: Int): Column =
-    pmod(xxhash64(band, bandHash), lit(nBuckets)).cast("int")
-}
+import StandingOperator.bucket
 
 /** Standing incremental near-dup admission — the streaming lift of
   * [[graft.operators.Dedup.nearDupsAgainstMinhash]]: the reference
@@ -45,24 +34,21 @@ private[streaming] object StateBuckets {
   *    crash-replayed batch replaces its half-landed delta instead of
   *    doubling rows — no read-time dedup anywhere.
   *
-  * Delivery: runs under `foreachBatch` (at-least-once). A replayed
+  * Delivery: at-least-once micro-batches ([[attach]]). A replayed
   * batch N reads state strictly `< N` ([[BatchedState.read]]), so it
   * sees exactly what the clean run saw even when the crashed attempt's
   * state append already landed, and [[attach]] writes pairs to a
   * per-batch dir with overwrite semantics — the pairs OUTPUT is
   * idempotent too (exactly-once per batch dir).
   */
-final class StreamingDedup(spark: SparkSession, stateDir: String,
-    idCol: String, textCol: String,
+final class StreamingDedup(protected val spark: SparkSession,
+    protected val stateDir: String, idCol: String, textCol: String,
     n: Int = 3, bands: Int = 8, rows: Int = 4,
-    threshold: Double = 0.7, nBuckets: Int = 32) extends Serializable {
+    threshold: Double = 0.7, nBuckets: Int = 32) extends EvictingOperator {
 
   private val shingles = new BatchedState(spark, s"$stateDir/shingles", Seq("ib"))
   private val banded   = new BatchedState(spark, s"$stateDir/banded", Seq("bb"))
-
-  private def idBucket(id: Column): Column = StateBuckets.idBucket(id, nBuckets)
-  private def bandBucket(band: Column, bandHash: Column): Column =
-    StateBuckets.bandBucket(band, bandHash, nBuckets)
+  protected def states: Seq[BatchedState] = Seq(shingles, banded)
 
   // signature/bucket geometry bakes into the stored rows: persisted at
   // seed time, validated before the first admission of each run.
@@ -71,15 +57,9 @@ final class StreamingDedup(spark: SparkSession, stateDir: String,
   // string-layout dir is missing the key and refuses loudly at the
   // first admission (validateParams treats an absent stored key as
   // drift) instead of failing on a parquet schema conflict mid-append
-  private val stateParams = Map("n" -> n.toString, "bands" -> bands.toString,
+  protected val stateParams = Map("n" -> n.toString, "bands" -> bands.toString,
     "rows" -> rows.toString, "nBuckets" -> nBuckets.toString,
     "shingles" -> "fp64")
-  @transient private var paramsChecked = false
-  private def ensureAdmissible(batchId: Long): Unit = if (!paramsChecked) {
-    BatchedState.validateParams(spark, stateDir, stateParams)
-    BatchedState.requireMonotonicBatchId(batchId, Seq(shingles, banded), stateDir)
-    paramsChecked = true
-  }
 
   /** Seed the persisted reference state, REPLACING any previous state
     * under `stateDir` (re-seeding starts a fresh corpus — stale admitted
@@ -101,32 +81,22 @@ final class StreamingDedup(spark: SparkSession, stateDir: String,
     * permanently) release via ContextCleaner once seed() returns and
     * the frame falls out of scope.
     */
-  def seed(reference: DataFrame): Unit = {
-    // marker off first, on last: a crash anywhere between leaves a
-    // state that admit() refuses loudly (validateParams) instead of a
-    // silently empty one
-    BatchedState.clearParams(spark, stateDir)
-    shingles.reset()
-    banded.reset()
+  def seed(reference: DataFrame): Unit = reseed {
     val (sh, _) = Dedup.prepMinhash(reference, idCol, textCol, n, bands, rows)
     val pinned = sh.localCheckpoint()
     shingles.seed(Dedup.shingleFingerprints(pinned)
-      .withColumn("ib", idBucket(col("id"))))
+      .withColumn("ib", bucket(nBuckets, col("id"))))
     val b = Dedup.lshBands(
       Dedup.minhashSignatureDF(pinned, "id", "shingles", bands * rows),
       col("id"), col("sig"), bands, rows)
-    banded.seed(b.withColumn("bb", bandBucket(col("band"), col("band_hash"))))
-    BatchedState.writeParams(spark, stateDir, stateParams)
-    paramsChecked = true
+    banded.seed(
+      b.withColumn("bb", bucket(nBuckets, col("band"), col("band_hash"))))
   }
 
-  /** Admit micro-batch `batchId`: cross-corpus (ref_id, new_id, jaccard)
-    * pairs against everything seeded or admitted in batches < batchId,
-    * then fold the batch into the state. Calling twice with the same id
-    * (a crash replay) yields the same pairs and the same state.
+  /** Cross-corpus (ref_id, new_id, jaccard) pairs of micro-batch
+    * `batchId` against everything seeded or admitted before it.
     */
-  def admit(batch: DataFrame, batchId: Long): DataFrame = {
-    ensureAdmissible(batchId)
+  protected def admitBatch(batch: DataFrame, batchId: Long): DataFrame = {
     // ONE materialized snapshot of the batch's shingles feeds both
     // derived tables (fingerprints AND banded signatures) — the same
     // single-snapshot discipline as [[seed]], |batch|-bounded
@@ -135,23 +105,21 @@ final class StreamingDedup(spark: SparkSession, stateDir: String,
     // pin the derived tables too (they feed three consumers: prune-set
     // collect, the joins, the state append)
     val shNew = Dedup.shingleFingerprints(shRaw)
-      .withColumn("ib", idBucket(col("id"))).localCheckpoint()
+      .withColumn("ib", bucket(nBuckets, col("id"))).localCheckpoint()
     val bNew = Dedup.lshBands(
         Dedup.minhashSignatureDF(shRaw, "id", "shingles", bands * rows),
         col("id"), col("sig"), bands, rows)
-      .withColumn("bb", bandBucket(col("band"), col("band_hash")))
+      .withColumn("bb", bucket(nBuckets, col("band"), col("band_hash")))
       .localCheckpoint()
     // band-bucket prune set of THIS batch (<= nBuckets values)
-    val bbs = bNew.select("bb").distinct().collect().map(_.getInt(0))
     val bRef = banded.read(before = batchId, fallback = Some(bNew.schema))
-      .where(col("bb").isin(bbs.toIndexedSeq.map(Int.box): _*))
+      .where(prunedTo(bNew, "bb"))
     val candidates =
       Dedup.bandCandidates(bRef, broadcast(bNew)).localCheckpoint()
     // shingle state pruned to the candidates' ref-id buckets
-    val ibs = candidates.select(idBucket(col("ref_id")).as("ib"))
-      .distinct().collect().map(_.getInt(0))
     val shRef = shingles.read(before = batchId, fallback = Some(shNew.schema))
-      .where(col("ib").isin(ibs.toIndexedSeq.map(Int.box): _*))
+      .where(prunedTo(
+        candidates.select(bucket(nBuckets, col("ref_id")).as("ib")), "ib"))
     // ref_id =!= new_id: a doc id re-arriving in a later batch must not
     // pair with its own earlier copy. The max-aggregate collapses the
     // one-row-per-stored-version fan-out a re-arrived id leaves in
@@ -168,42 +136,6 @@ final class StreamingDedup(spark: SparkSession, stateDir: String,
     banded.append(bNew, batchId)
     pairs
   }
-
-  /** Fold deltas `<= upTo` into one snapshot and evict rows admitted
-    * before batch `keepFrom` (age-based TTL; the seed corpus is batch
-    * -1). Only fold batch ids the stream's checkpoint has committed —
-    * pass `upTo` when the stream is live ([[attach]]'s auto-compaction
-    * passes `batchId - 1`, which is committed by the time batch
-    * `batchId` runs), or call with the stream stopped.
-    */
-  def compact(keepFrom: Long = Long.MinValue,
-      upTo: Long = Long.MaxValue): Unit = {
-    shingles.compact(keepFrom, upTo)
-    banded.compact(keepFrom, upTo)
-  }
-
-  /** Wire a streaming source into the standing pipeline: each
-    * micro-batch is admitted and its pairs land in
-    * `pairsDir/batch=<id>` with overwrite semantics — replays rewrite
-    * the same dir, so downstream readers of `pairsDir` see each batch's
-    * pairs exactly once. `autoCompactEvery = K` folds state every K
-    * batches (bounded to the already-committed ids), keeping delta file
-    * counts flat over an unbounded run — each fold rewrites the covered
-    * state, so pick K (or run [[compact]] out-of-band with a `keepFrom`
-    * TTL) to amortize that O(corpus/K) cost against the admission
-    * path's O(batch) shape.
-    */
-  def attach(source: DataFrame, pairsDir: String,
-      checkpointDir: String, autoCompactEvery: Int = 0): DataStreamWriter[Row] =
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admit(batch, batchId).write.mode("overwrite")
-          .parquet(s"$pairsDir/batch=$batchId")
-        if (autoCompactEvery > 0 && batchId > 0 &&
-          batchId % autoCompactEvery == 0) compact(upTo = batchId - 1)
-        ()
-      }
 }
 
 /** Streaming SemDeDup: semantic near-dup admission against a persisted
@@ -219,23 +151,18 @@ final class StreamingDedup(spark: SparkSession, stateDir: String,
   * is never shuffled. Same [[BatchedState]] idempotency/replay story as
   * [[StreamingDedup]].
   */
-final class StreamingSemanticDedup(spark: SparkSession, stateDir: String,
-    idCol: String, vecCol: String, nCells: Int,
-    threshold: Double = 0.99) extends Serializable {
+final class StreamingSemanticDedup(protected val spark: SparkSession,
+    protected val stateDir: String, idCol: String, vecCol: String,
+    nCells: Int, threshold: Double = 0.99) extends EvictingOperator {
 
   import graft.operators.Similarity
   import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
   private val vecs = new BatchedState(spark, s"$stateDir/vectors", Seq("cell"))
+  protected def states: Seq[BatchedState] = Seq(vecs)
   private val indexDir = s"$stateDir/index"
 
-  private val stateParams = Map("nCells" -> nCells.toString)
-  @transient private var paramsChecked = false
-  private def ensureAdmissible(batchId: Long): Unit = if (!paramsChecked) {
-    BatchedState.validateParams(spark, stateDir, stateParams)
-    BatchedState.requireMonotonicBatchId(batchId, Seq(vecs), stateDir)
-    paramsChecked = true
-  }
+  protected val stateParams = Map("nCells" -> nCells.toString)
 
   // the index is immutable after seed(): cache it instead of paying a
   // parquet read + driver collect per micro-batch
@@ -251,34 +178,27 @@ final class StreamingSemanticDedup(spark: SparkSession, stateDir: String,
     * different cell ids, so stale rows would be compared in the wrong
     * cells).
     */
-  def seed(reference: DataFrame): Unit = {
-    BatchedState.clearParams(spark, stateDir)
-    vecs.reset()
+  def seed(reference: DataFrame): Unit = reseed {
     val trained = Similarity.trainCentroids(reference, nCells, idCol, vecCol)
     Similarity.IvfIndex.save(trained, spark, indexDir)
     centroidsCache = trained
     vecs.seed(reference.select(col(idCol).as("id"),
         col(vecCol).cast(ArrayType(DoubleType)).as("v"))
       .withColumn("cell", trained.assignCell(col("v"))))
-    BatchedState.writeParams(spark, stateDir, stateParams)
-    paramsChecked = true
   }
 
-  /** Admit one batch: (ref_id, new_id, cell, cos) pairs within shared
-    * cells vs everything seeded or admitted in batches < batchId, then
-    * fold the batch into the state. Replay-idempotent.
+  /** (ref_id, new_id, cell, cos) pairs within shared cells vs everything
+    * seeded or admitted in batches < batchId.
     */
-  def admit(batch: DataFrame, batchId: Long): DataFrame = {
-    ensureAdmissible(batchId)
+  protected def admitBatch(batch: DataFrame, batchId: Long): DataFrame = {
     val fresh = batch.select(col(idCol).as("id"),
         col(vecCol).cast(ArrayType(DoubleType)).as("v"))
       .withColumn("cell", centroids.assignCell(col("v")))
       .localCheckpoint()
     // the batch's cell set is bounded by min(|batch|, nCells): scan
     // only those state partitions
-    val cells = fresh.select("cell").distinct().collect().map(_.getInt(0))
     val ref = vecs.read(before = batchId, fallback = Some(fresh.schema))
-      .where(col("cell").isin(cells.toIndexedSeq.map(Int.box): _*))
+      .where(prunedTo(fresh, "cell"))
     // max-aggregate: a re-arrived id leaves one state row per version —
     // emit ONE pair (best cos, its cell); pinned against later compact()
     val pairs = ref.as("l").join(broadcast(fresh).as("r"),
@@ -295,23 +215,6 @@ final class StreamingSemanticDedup(spark: SparkSession, stateDir: String,
     vecs.append(fresh, batchId)
     pairs
   }
-
-  /** See [[StreamingDedup.compact]]. */
-  def compact(keepFrom: Long = Long.MinValue,
-      upTo: Long = Long.MaxValue): Unit = vecs.compact(keepFrom, upTo)
-
-  /** See [[StreamingDedup.attach]]. */
-  def attach(source: DataFrame, pairsDir: String,
-      checkpointDir: String, autoCompactEvery: Int = 0): DataStreamWriter[Row] =
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admit(batch, batchId).write.mode("overwrite")
-          .parquet(s"$pairsDir/batch=$batchId")
-        if (autoCompactEvery > 0 && batchId > 0 &&
-          batchId % autoCompactEvery == 0) compact(upTo = batchId - 1)
-        ()
-      }
 }
 
 /** Standing paragraph-granularity exact dedup — the streaming lift of
@@ -330,23 +233,16 @@ final class StreamingSemanticDedup(spark: SparkSession, stateDir: String,
   * dedup. Idempotent appends / replay-deterministic reads / compaction
   * are [[BatchedState]]'s.
   */
-final class StreamingParagraphDedup(spark: SparkSession, stateDir: String,
-    idCol: String, textCol: String, nBuckets: Int = 32) extends Serializable {
+final class StreamingParagraphDedup(protected val spark: SparkSession,
+    protected val stateDir: String, idCol: String, textCol: String,
+    nBuckets: Int = 32) extends EvictingOperator {
 
   import graft.operators.TextAnalysis
 
   private val fps = new BatchedState(spark, s"$stateDir/fps", Seq("fb"))
+  protected def states: Seq[BatchedState] = Seq(fps)
 
-  private def fpBucket(fp: Column): Column =
-    pmod(xxhash64(fp), lit(nBuckets)).cast("int")
-
-  private val stateParams = Map("nBuckets" -> nBuckets.toString)
-  @transient private var paramsChecked = false
-  private def ensureAdmissible(batchId: Long): Unit = if (!paramsChecked) {
-    BatchedState.validateParams(spark, stateDir, stateParams)
-    BatchedState.requireMonotonicBatchId(batchId, Seq(fps), stateDir)
-    paramsChecked = true
-  }
+  protected val stateParams = Map("nBuckets" -> nBuckets.toString)
 
   /** (id, pos, para, fp) for every non-blank paragraph of a corpus. */
   private def paras(df: DataFrame): DataFrame =
@@ -358,24 +254,19 @@ final class StreamingParagraphDedup(spark: SparkSession, stateDir: String,
   /** Seed the seen-paragraph state from a reference corpus, REPLACING
     * any previous state under `stateDir`.
     */
-  def seed(reference: DataFrame): Unit = {
-    BatchedState.clearParams(spark, stateDir)
-    fps.reset()
+  def seed(reference: DataFrame): Unit = reseed {
     fps.seed(paras(reference).select(col("fp")).distinct()
-      .withColumn("fb", fpBucket(col("fp"))))
-    BatchedState.writeParams(spark, stateDir, stateParams)
-    paramsChecked = true
+      .withColumn("fb", bucket(nBuckets, col("fp"))))
   }
 
-  /** Admit micro-batch `batchId`: per-document cleaned text built from
-    * the paragraphs whose fingerprint is NEW (first occurrence within
-    * the batch by (id, pos), and unseen by batches < batchId), then
-    * fold the new fingerprints into the state. Documents whose every
-    * paragraph duplicates earlier content are absent from the output.
-    * Replay-idempotent. Returns (id, n_paras_kept, text_dedup).
+  /** Per-document cleaned text built from the paragraphs whose
+    * fingerprint is NEW (first occurrence within the batch by (id, pos),
+    * and unseen by batches < batchId); only the new fingerprints fold
+    * into the state. Documents whose every paragraph duplicates earlier
+    * content are absent from the output. Returns (id, n_paras_kept,
+    * text_dedup).
     */
-  def admit(batch: DataFrame, batchId: Long): DataFrame = {
-    ensureAdmissible(batchId)
+  protected def admitBatch(batch: DataFrame, batchId: Long): DataFrame = {
     // batch-internal first occurrence per fingerprint: min(struct) map-
     // side aggregate (never a window), one row per distinct batch fp
     val firstInBatch = paras(batch)
@@ -383,12 +274,11 @@ final class StreamingParagraphDedup(spark: SparkSession, stateDir: String,
       .agg(min(struct(col("id"), col("pos"), col("para"))).as("w"))
       .select(col("fp"), col("w.id").as("id"), col("w.pos").as("pos"),
         col("w.para").as("para"))
-      .withColumn("fb", fpBucket(col("fp")))
+      .withColumn("fb", bucket(nBuckets, col("fp")))
       .localCheckpoint()
-    val fbs = firstInBatch.select("fb").distinct().collect().map(_.getInt(0))
     val ref = fps.read(before = batchId, fallback =
         Some(firstInBatch.select(col("fp"), col("fb")).schema))
-      .where(col("fb").isin(fbs.toIndexedSeq.map(Int.box): _*))
+      .where(prunedTo(firstInBatch, "fb"))
     // membership via state-side SEMI against the broadcast batch fps
     // (output <= |batch| rows), then a bounded anti join — the pruned
     // state streams through broadcast joins, never shuffles
@@ -409,23 +299,6 @@ final class StreamingParagraphDedup(spark: SparkSession, stateDir: String,
     fps.append(kept.select(col("fp"), col("fb")), batchId)
     out
   }
-
-  /** See [[StreamingDedup.compact]]. */
-  def compact(keepFrom: Long = Long.MinValue,
-      upTo: Long = Long.MaxValue): Unit = fps.compact(keepFrom, upTo)
-
-  /** See [[StreamingDedup.attach]]. */
-  def attach(source: DataFrame, outDir: String,
-      checkpointDir: String, autoCompactEvery: Int = 0): DataStreamWriter[Row] =
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admit(batch, batchId).write.mode("overwrite")
-          .parquet(s"$outDir/batch=$batchId")
-        if (autoCompactEvery > 0 && batchId > 0 &&
-          batchId % autoCompactEvery == 0) compact(upTo = batchId - 1)
-        ()
-      }
 }
 
 /** Standing streaming decontamination — the streaming lift of
@@ -447,23 +320,15 @@ final class StreamingParagraphDedup(spark: SparkSession, stateDir: String,
   * stay unique without read-time dedup. Idempotent appends /
   * replay-deterministic reads / compaction are [[BatchedState]]'s.
   */
-final class StreamingDecontamination(spark: SparkSession, stateDir: String,
-    idCol: String, textCol: String, n: Int = 8, nBuckets: Int = 32)
-    extends Serializable {
+final class StreamingDecontamination(protected val spark: SparkSession,
+    protected val stateDir: String, idCol: String, textCol: String,
+    n: Int = 8, nBuckets: Int = 32) extends EvictingOperator {
 
   private val grams = new BatchedState(spark, s"$stateDir/grams", Seq("gb"))
+  protected def states: Seq[BatchedState] = Seq(grams)
 
-  private def gBucket(sg: Column): Column =
-    pmod(xxhash64(sg), lit(nBuckets)).cast("int")
-
-  private val stateParams =
+  protected val stateParams =
     Map("n" -> n.toString, "nBuckets" -> nBuckets.toString)
-  @transient private var paramsChecked = false
-  private def ensureAdmissible(batchId: Long): Unit = if (!paramsChecked) {
-    BatchedState.validateParams(spark, stateDir, stateParams)
-    BatchedState.requireMonotonicBatchId(batchId, Seq(grams), stateDir)
-    paramsChecked = true
-  }
 
   /** Distinct benchmark grams of a corpus ([[Dedup.wordShingles]]
     * semantics: per-doc distinct, whole text as the single gram for
@@ -472,17 +337,13 @@ final class StreamingDecontamination(spark: SparkSession, stateDir: String,
   private def benchGrams(bench: DataFrame, benchTextCol: String): DataFrame =
     bench.select(explode(Dedup.wordShingles(col(benchTextCol), n)).as("sg"))
       .distinct()
-      .withColumn("gb", gBucket(col("sg")))
+      .withColumn("gb", bucket(nBuckets, col("sg")))
 
   /** Seed the benchmark gram state, REPLACING any previous state under
     * `stateDir`.
     */
-  def seed(bench: DataFrame, benchTextCol: String): Unit = {
-    BatchedState.clearParams(spark, stateDir)
-    grams.reset()
+  def seed(bench: DataFrame, benchTextCol: String): Unit = reseed {
     grams.seed(benchGrams(bench, benchTextCol))
-    BatchedState.writeParams(spark, stateDir, stateParams)
-    paramsChecked = true
   }
 
   /** Fold a NEW benchmark release into the standing set at `batchId`
@@ -492,11 +353,10 @@ final class StreamingDecontamination(spark: SparkSession, stateDir: String,
     */
   def addBenchmark(bench: DataFrame, benchTextCol: String,
       batchId: Long): Unit = {
-    ensureAdmissible(batchId)
+    checkAdmission(batchId)
     val fresh = benchGrams(bench, benchTextCol).localCheckpoint()
-    val gbs = fresh.select("gb").distinct().collect().map(_.getInt(0))
     val ref = grams.read(before = batchId, fallback = Some(fresh.schema))
-      .where(col("gb").isin(gbs.toIndexedSeq.map(Int.box): _*))
+      .where(prunedTo(fresh, "gb"))
     val seen = ref.join(broadcast(fresh.select(col("sg"))),
       Seq("sg"), "left_semi")
     val novel = fresh.join(broadcast(seen.select(col("sg"))),
@@ -507,19 +367,16 @@ final class StreamingDecontamination(spark: SparkSession, stateDir: String,
   /** Gate micro-batch `batchId` against every benchmark gram admitted
     * before it. Returns one row per input doc:
     * (id, n_grams, n_hits, contaminated) — distinct-gram count,
-    * benchmark-hit count, and the drop verdict. Replay-idempotent (no
-    * state write).
+    * benchmark-hit count, and the drop verdict. No state write.
     */
-  def admit(batch: DataFrame, batchId: Long): DataFrame = {
-    ensureAdmissible(batchId)
+  protected def admitBatch(batch: DataFrame, batchId: Long): DataFrame = {
     val docGrams = batch.select(col(idCol).as("id"),
         explode(Dedup.wordShingles(col(textCol), n)).as("sg"))
-      .withColumn("gb", gBucket(col("sg")))
+      .withColumn("gb", bucket(nBuckets, col("sg")))
       .localCheckpoint()
-    val gbs = docGrams.select("gb").distinct().collect().map(_.getInt(0))
     val ref = grams.read(before = batchId, fallback =
         Some(docGrams.select(col("sg"), col("gb")).schema))
-      .where(col("gb").isin(gbs.toIndexedSeq.map(Int.box): _*))
+      .where(prunedTo(docGrams, "gb"))
     // membership via state-side SEMI against the broadcast batch grams
     // (output <= |batch grams|), then the per-doc hit count rides a
     // second broadcast — the pruned state streams, never shuffles
@@ -540,23 +397,6 @@ final class StreamingDecontamination(spark: SparkSession, stateDir: String,
         (coalesce(col("n_hits"), lit(0L)) > 0).as("contaminated"))
       .localCheckpoint()
   }
-
-  /** See [[StreamingDedup.compact]]. */
-  def compact(keepFrom: Long = Long.MinValue,
-      upTo: Long = Long.MaxValue): Unit = grams.compact(keepFrom, upTo)
-
-  /** See [[StreamingDedup.attach]]. */
-  def attach(source: DataFrame, outDir: String,
-      checkpointDir: String, autoCompactEvery: Int = 0): DataStreamWriter[Row] =
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admit(batch, batchId).write.mode("overwrite")
-          .parquet(s"$outDir/batch=$batchId")
-        if (autoCompactEvery > 0 && batchId > 0 &&
-          batchId % autoCompactEvery == 0) compact(upTo = batchId - 1)
-        ()
-      }
 }
 
 /** The embedding twin of [[StreamingDedup]]: persisted state is the
@@ -574,22 +414,21 @@ final class StreamingDecontamination(spark: SparkSession, stateDir: String,
   * Same [[BatchedState]] idempotency and replay determinism as the
   * minhash twin.
   */
-final class StreamingEmbeddingDedup(spark: SparkSession, stateDir: String,
-    idCol: String, vecCol: String, dims: Int,
-    nBits: Int = 384, bandBits: Int = 16,
-    threshold: Double = 0.99, nBuckets: Int = 32) extends Serializable {
+final class StreamingEmbeddingDedup(protected val spark: SparkSession,
+    protected val stateDir: String, idCol: String, vecCol: String,
+    dims: Int, nBits: Int = 384, bandBits: Int = 16,
+    threshold: Double = 0.99, nBuckets: Int = 32) extends EvictingOperator {
 
   import graft.operators.Similarity
 
   private val vecs = new BatchedState(spark, s"$stateDir/vectors", Seq("ib"))
   private val keys = new BatchedState(spark, s"$stateDir/keys", Seq("bb"))
-
-  private def idBucket(id: Column): Column = StateBuckets.idBucket(id, nBuckets)
+  protected def states: Seq[BatchedState] = Seq(vecs, keys)
 
   /** Packed (id, ks) -> exploded (id, band, key, bb) state rows. */
   private def explodeKeys(k: DataFrame): DataFrame =
     k.select(col("id"), posexplode(col("ks")).as(Seq("band", "key")))
-      .withColumn("bb", StateBuckets.bandBucket(col("band"), col("key"), nBuckets))
+      .withColumn("bb", bucket(nBuckets, col("band"), col("key")))
 
   // keysLayout guards the stored-row shape itself: a restart against a
   // dir written with the old packed layout must refuse via param drift,
@@ -597,52 +436,45 @@ final class StreamingEmbeddingDedup(spark: SparkSession, stateDir: String,
   // keyWidth pins the ks element width (ADVICE r19): if the streaming
   // prep ever enabled the batch path's int-key narrowing, persisted
   // int64 exploded state joined against int32 fresh keys would
-  // sign-extend in the band equi-join and silently miss pairs — param
-  // drift refuses the restart instead
-  private val stateParams = Map("dims" -> dims.toString,
+  // sign-extend in the band equi-join and silently miss pairs — a
+  // stored width other than int64 refuses the restart ([[admitLayout]])
+  protected val stateParams = Map("dims" -> dims.toString,
     "nBits" -> nBits.toString, "bandBits" -> bandBits.toString,
     "nBuckets" -> nBuckets.toString, "keysLayout" -> "banded",
     "keyWidth" -> "int64")
-  @transient private var paramsChecked = false
-  private def ensureAdmissible(batchId: Long): Unit = if (!paramsChecked) {
-    BatchedState.validateParams(spark, stateDir, stateParams)
-    BatchedState.requireMonotonicBatchId(batchId, Seq(vecs, keys), stateDir)
-    paramsChecked = true
-  }
+
+  // dirs seeded before the key existed carry no keyWidth: int64 is the
+  // only width ever shipped, so an absent key reads as int64
+  override protected def layoutKey: Option[String] = Some("keyWidth")
+  override protected def admitLayout(stored: Option[String]): Unit =
+    stored.filter(_ != "int64").foreach(refuseLayout(_, "int64"))
 
   /** Seed the persisted reference state, REPLACING any previous state
     * under `stateDir`.
     */
-  def seed(reference: DataFrame): Unit = {
-    BatchedState.clearParams(spark, stateDir)
-    vecs.reset()
-    keys.reset()
+  def seed(reference: DataFrame): Unit = reseed {
     val (v, k) = Similarity.prepEmbedding(reference, dims, nBits, bandBits,
       idCol, vecCol)
-    vecs.seed(v.withColumn("ib", idBucket(col("id"))))
+    vecs.seed(v.withColumn("ib", bucket(nBuckets, col("id"))))
     keys.seed(explodeKeys(k))
-    BatchedState.writeParams(spark, stateDir, stateParams)
-    paramsChecked = true
   }
 
-  def admit(batch: DataFrame, batchId: Long): DataFrame = {
-    ensureAdmissible(batchId)
+  protected def admitBatch(batch: DataFrame, batchId: Long): DataFrame = {
     val (vRaw, kRaw) = Similarity.prepEmbedding(batch, dims, nBits, bandBits,
       idCol, vecCol)
-    val vNew = vRaw.withColumn("ib", idBucket(col("id"))).localCheckpoint()
+    val vNew =
+      vRaw.withColumn("ib", bucket(nBuckets, col("id"))).localCheckpoint()
     val kNew = explodeKeys(kRaw).localCheckpoint()
     // band-bucket prune set of THIS batch (<= nBuckets values): the keys
     // state scan reads ONLY the matching bb= partitions
-    val bbs = kNew.select("bb").distinct().collect().map(_.getInt(0))
     val kRef = keys.read(before = batchId, fallback = Some(kNew.schema))
-      .where(col("bb").isin(bbs.toIndexedSeq.map(Int.box): _*))
+      .where(prunedTo(kNew, "bb"))
     val candidates =
       Similarity.bandCandidatesEmbeddingExploded(kRef, broadcast(kNew))
         .localCheckpoint()
-    val ibs = candidates.select(idBucket(col("ref_id")).as("ib"))
-      .distinct().collect().map(_.getInt(0))
     val vRef = vecs.read(before = batchId, fallback = Some(vNew.schema))
-      .where(col("ib").isin(ibs.toIndexedSeq.map(Int.box): _*))
+      .where(prunedTo(
+        candidates.select(bucket(nBuckets, col("ref_id")).as("ib")), "ib"))
     // max-aggregate: one pair per (ref, new) even when a re-arrived id
     // left several state versions; pinned against later compact()
     val pairs = Similarity.verifyCosine(broadcast(candidates), vRef, vNew,
@@ -655,26 +487,6 @@ final class StreamingEmbeddingDedup(spark: SparkSession, stateDir: String,
     keys.append(kNew, batchId)
     pairs
   }
-
-  /** See [[StreamingDedup.compact]]. */
-  def compact(keepFrom: Long = Long.MinValue,
-      upTo: Long = Long.MaxValue): Unit = {
-    vecs.compact(keepFrom, upTo)
-    keys.compact(keepFrom, upTo)
-  }
-
-  /** See [[StreamingDedup.attach]]. */
-  def attach(source: DataFrame, pairsDir: String,
-      checkpointDir: String, autoCompactEvery: Int = 0): DataStreamWriter[Row] =
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admit(batch, batchId).write.mode("overwrite")
-          .parquet(s"$pairsDir/batch=$batchId")
-        if (autoCompactEvery > 0 && batchId > 0 &&
-          batchId % autoCompactEvery == 0) compact(upTo = batchId - 1)
-        ()
-      }
 }
 
 /** The multimodal twin of [[StreamingDedup]]: standing incremental
@@ -721,10 +533,10 @@ final class StreamingEmbeddingDedup(spark: SparkSession, stateDir: String,
   * rows carry no multiplicity. The flag is a state param: reopening a
   * dir under the other mode refuses loudly (the layouts differ).
   */
-final class StreamingPhashDedup(spark: SparkSession, stateDir: String,
-    idCol: String, hashCol: String, maxHamming: Int = 3,
-    wideRecall: Boolean = false, nBuckets: Int = 32,
-    collapseBatch: Boolean = true) extends Serializable {
+final class StreamingPhashDedup(protected val spark: SparkSession,
+    protected val stateDir: String, idCol: String, hashCol: String,
+    maxHamming: Int = 3, wideRecall: Boolean = false, nBuckets: Int = 32,
+    collapseBatch: Boolean = true) extends EvictingOperator {
 
   if (wideRecall) require(maxHamming >= 0 && maxHamming < 8,
     "1-bit-probed 16-bit bands guarantee recall only for maxHamming <= 7")
@@ -733,9 +545,7 @@ final class StreamingPhashDedup(spark: SparkSession, stateDir: String,
       "pass wideRecall=true (1-bit band probing) for 4..7")
 
   private val fps = new BatchedState(spark, s"$stateDir/fps", Seq("bb"))
-
-  private def bandBucket(band: Column, key: Column): Column =
-    StateBuckets.bandBucket(band, key, nBuckets)
+  protected def states: Seq[BatchedState] = Seq(fps)
 
   // `layout=v1` is the STATE-LAYOUT version key (the minhash twin's
   // `shingles=fp64` discipline, r19): v1 = exploded exact-key rows
@@ -744,15 +554,9 @@ final class StreamingPhashDedup(spark: SparkSession, stateDir: String,
   // (validateParams treats an absent stored key as drift) instead of
   // failing on a parquet schema conflict mid-append when the layout
   // next changes.
-  private val stateParams = Map("maxHamming" -> maxHamming.toString,
+  protected val stateParams = Map("maxHamming" -> maxHamming.toString,
     "wideRecall" -> wideRecall.toString, "nBuckets" -> nBuckets.toString,
     "collapseBatch" -> collapseBatch.toString, "layout" -> "v1")
-  @transient private var paramsChecked = false
-  private def ensureAdmissible(batchId: Long): Unit = if (!paramsChecked) {
-    BatchedState.validateParams(spark, stateDir, stateParams)
-    BatchedState.requireMonotonicBatchId(batchId, Seq(fps), stateDir)
-    paramsChecked = true
-  }
 
   /** Per-batch normal form: (id, fp[, clique]). `collapseBatch` folds
     * identical fingerprints to (min id, count) — the clique-safe
@@ -775,7 +579,7 @@ final class StreamingPhashDedup(spark: SparkSession, stateDir: String,
         posexplode(array((0 until 4).map(b =>
           shiftright(col("fp"), b * 16).bitwiseAND(0xFFFFL)): _*))
           .as(Seq("band", "key")): _*)
-      .withColumn("bb", bandBucket(col("band"), col("key")))
+      .withColumn("bb", bucket(nBuckets, col("band"), col("key")))
 
   /** The batch-side probe rows: exact keys, plus each key's 16
     * single-bit flips when `wideRecall` (a <= 1-bit band difference
@@ -791,22 +595,18 @@ final class StreamingPhashDedup(spark: SparkSession, stateDir: String,
         }: _*)).as(Seq("band", "keys")): _*)
       .select(col("id") +: col("fp") +: carried :+ col("band") :+
         explode(col("keys")).as("key"): _*)
-      .withColumn("bb", bandBucket(col("band"), col("key")))
+      .withColumn("bb", bucket(nBuckets, col("band"), col("key")))
 
   /** Seed the persisted reference state, REPLACING any previous state
     * under `stateDir`.
     */
-  def seed(reference: DataFrame): Unit = {
-    BatchedState.clearParams(spark, stateDir)
-    fps.reset()
+  def seed(reference: DataFrame): Unit = reseed {
     fps.seed(bandRows(reference))
-    BatchedState.writeParams(spark, stateDir, stateParams)
-    paramsChecked = true
   }
 
-  /** Admit micro-batch `batchId`: hamming <= maxHamming pairs against
-    * everything seeded or admitted in batches < batchId, then fold the
-    * batch's EXACT-key rows into the state. Replay-idempotent.
+  /** Hamming <= maxHamming pairs of micro-batch `batchId` against
+    * everything seeded or admitted in batches < batchId; the batch's
+    * EXACT-key rows fold into the state.
     *
     * `collapseBatch` (default): (ref_id, new_id, hamming, clique_ref,
     * clique_new) — one row per (distinct state fingerprint, batch
@@ -817,18 +617,14 @@ final class StreamingPhashDedup(spark: SparkSession, stateDir: String,
     * re-arrived id with several state versions collapses to ONE pair at
     * the best (minimum) hamming.
     */
-  def admit(batch: DataFrame, batchId: Long): DataFrame = {
-    ensureAdmissible(batchId)
+  protected def admitBatch(batch: DataFrame, batchId: Long): DataFrame = {
     val bNew = bandRows(batch).localCheckpoint()
     val pNew =
       if (!wideRecall) bNew else probeRows(batch).localCheckpoint()
     // the batch's probe-bucket set (<= nBuckets values): the state scan
-    // reads ONLY matching bb= partitions — with an explicit empty-batch
-    // short-circuit, never a reliance on zero-arg isin() being false
-    val bbs = pNew.select("bb").distinct().collect().map(_.getInt(0))
+    // reads ONLY matching bb= partitions
     val ref = fps.read(before = batchId, fallback = Some(bNew.schema))
-      .where(if (bbs.isEmpty) lit(false)
-        else col("bb").isin(bbs.toIndexedSeq.map(Int.box): _*))
+      .where(prunedTo(pNew, "bb"))
     // state joins the broadcast batch probes on (band, key); the fp on
     // both sides makes hamming verification join-local — no verify join
     val joined = ref.as("l").join(broadcast(pNew).as("r"),
@@ -865,23 +661,6 @@ final class StreamingPhashDedup(spark: SparkSession, stateDir: String,
     fps.append(bNew, batchId)
     pairs
   }
-
-  /** See [[StreamingDedup.compact]]. */
-  def compact(keepFrom: Long = Long.MinValue,
-      upTo: Long = Long.MaxValue): Unit = fps.compact(keepFrom, upTo)
-
-  /** See [[StreamingDedup.attach]]. */
-  def attach(source: DataFrame, pairsDir: String,
-      checkpointDir: String, autoCompactEvery: Int = 0): DataStreamWriter[Row] =
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admit(batch, batchId).write.mode("overwrite")
-          .parquet(s"$pairsDir/batch=$batchId")
-        if (autoCompactEvery > 0 && batchId > 0 &&
-          batchId % autoCompactEvery == 0) compact(upTo = batchId - 1)
-        ()
-      }
 }
 
 /** The exact-substring twin of [[StreamingDedup]]: standing incremental
@@ -907,48 +686,39 @@ final class StreamingPhashDedup(spark: SparkSession, stateDir: String,
   * (never shuffles). Same [[BatchedState]] overwrite-idempotency and
   * `read(before)` replay determinism as the minhash twin.
   */
-final class StreamingSubstringDedup(spark: SparkSession, stateDir: String,
-    idCol: String, textCol: String, k: Int = 40, w: Int = 1,
-    nBuckets: Int = 32) extends Serializable {
+final class StreamingSubstringDedup(protected val spark: SparkSession,
+    protected val stateDir: String, idCol: String, textCol: String,
+    k: Int = 40, w: Int = 1, nBuckets: Int = 32) extends EvictingOperator {
 
   private val grams = new BatchedState(spark, s"$stateDir/grams", Seq("gb"))
   private val texts = new BatchedState(spark, s"$stateDir/texts", Seq("ib"))
+  protected def states: Seq[BatchedState] = Seq(grams, texts)
 
-  private def idBucket(id: Column): Column = StateBuckets.idBucket(id, nBuckets)
-  private def gBucket(h1: Column, h2: Column): Column =
-    pmod(xxhash64(h1, h2), lit(nBuckets)).cast("int")
-
-  private val stateParams = Map("k" -> k.toString, "w" -> w.toString,
-    "nBuckets" -> nBuckets.toString)
   // the stored pos width a fresh seed writes: dense dirs int32 (the
   // pre-kernel posexplode ordinal), winnowed dirs int64 (the kernel's
   // long p0)
   private def canonicalPos: String = if (w <= 1) "int32" else "int64"
-  @transient private var paramsChecked = false
-  private def ensureAdmissible(batchId: Long): Unit = if (!paramsChecked) {
-    BatchedState.validateParams(spark, stateDir, stateParams)
-    // `pos=int32|int64` is the STATE-LAYOUT key (the minhash twin's
-    // `shingles=fp64` discipline): the stored marker is the authority
-    // for the dir's pos width — unlike the caller-known geometry above
-    // it varies BY DIR (two historical dense widths), so admission
-    // adopts the stored value instead of validating a guess against it.
-    // A dir seeded before the key exists falls back to schema sniffing
-    // ([[densePosLong]]) — the documented migration path, no longer the
-    // only guard; anything else stored there refuses loudly.
-    BatchedState.readParams(spark, stateDir).get("pos") match {
+  protected val stateParams = Map("k" -> k.toString, "w" -> w.toString,
+    "nBuckets" -> nBuckets.toString, "pos" -> canonicalPos)
+
+  // `pos=int32|int64` is the STATE-LAYOUT key (the minhash twin's
+  // `shingles=fp64` discipline): the stored marker is the authority for
+  // the dir's pos width — unlike the caller-known geometry above it
+  // varies BY DIR (two historical dense widths), so admission adopts the
+  // stored value instead of validating a guess against it. A dir seeded
+  // before the key exists falls back to schema sniffing
+  // ([[densePosLong]]) — the documented migration path, no longer the
+  // only guard; anything else stored there refuses loudly.
+  override protected def layoutKey: Option[String] = Some("pos")
+  override protected def admitLayout(stored: Option[String]): Unit =
+    stored match {
       case Some("int32") if w <= 1 => densePosLongCache = Some(false)
       case Some("int64") => densePosLongCache = Some(true)
-      case Some(other) => throw new IllegalStateException(
-        s"state at $stateDir was built with different parameters — pos: " +
-          s"stored=$other caller=${canonicalPos}" +
-          (if (w > 1) " (winnowed dirs are uniformly int64)" else
-            " or int64 (the two historical dense widths)") +
-          ". Re-seed (reset) or restore the original values.")
+      case Some(other) => refuseLayout(other, canonicalPos,
+        if (w > 1) " (winnowed dirs are uniformly int64)"
+        else " or int64 (the two historical dense widths)")
       case None => () // pre-layout-key dir: width sniffed on first use
     }
-    BatchedState.requireMonotonicBatchId(batchId, Seq(grams, texts), stateDir)
-    paramsChecked = true
-  }
 
   /** One (id, h1, h2, pos, gb) witness row per distinct in-doc gram —
     * deduped IN THE KERNEL at both densities
@@ -964,7 +734,7 @@ final class StreamingSubstringDedup(spark: SparkSession, stateDir: String,
   // append must lay parquet of the DIR'S width next to its files, or
   // BatchedState.read hits a schema conflict at the next admit. Since
   // r19 the width is stored in the `_params` marker (`pos=` — see
-  // [[ensureAdmissible]]); for dirs seeded before the key existed it is
+  // [[admitLayout]]); for dirs seeded before the key existed it is
   // SNIFFED from the existing grams state once per instance — the
   // migration path (hardcoding either width orphans dirs of the other
   // era). Winnowed dirs are uniformly int64.
@@ -993,41 +763,32 @@ final class StreamingSubstringDedup(spark: SparkSession, stateDir: String,
     df.select(col(idCol).as("id"), explode(gramsExpr).as("hh"))
       .select(col("id"), col("hh.h1").as("h1"), col("hh.h2").as("h2"),
         pos.as("pos"))
-      .withColumn("gb", gBucket(col("h1"), col("h2")))
+      .withColumn("gb", bucket(nBuckets, col("h1"), col("h2")))
   }
 
   private def textsOf(df: DataFrame): DataFrame =
     df.select(col(idCol).as("id"), col(textCol).as("text"))
-      .withColumn("ib", idBucket(col("id")))
+      .withColumn("ib", bucket(nBuckets, col("id")))
 
   /** Seed the persisted reference state, REPLACING any previous state
     * under `stateDir`.
     */
-  def seed(reference: DataFrame): Unit = {
-    BatchedState.clearParams(spark, stateDir)
-    grams.reset()
-    texts.reset()
+  def seed(reference: DataFrame): Unit = reseed {
     // a fresh dir always takes the canonical width (int32 for dense) —
     // drop any width sniffed from the state this reset just deleted
     densePosLongCache = Some(w > 1)
     grams.seed(gramsOf(reference))
     texts.seed(textsOf(reference))
-    BatchedState.writeParams(spark, stateDir,
-      stateParams + ("pos" -> canonicalPos))
-    paramsChecked = true
   }
 
-  /** Admit micro-batch `batchId`: (ref_id, new_id) pairs sharing a
-    * verbatim k-char window against everything seeded or admitted in
-    * batches < batchId, then fold the batch in. Replay-idempotent.
+  /** (ref_id, new_id) pairs of micro-batch `batchId` sharing a verbatim
+    * k-char window with everything seeded or admitted before it.
     */
-  def admit(batch: DataFrame, batchId: Long): DataFrame = {
-    ensureAdmissible(batchId)
+  protected def admitBatch(batch: DataFrame, batchId: Long): DataFrame = {
     val gNew = gramsOf(batch).localCheckpoint()
     val tNew = textsOf(batch).localCheckpoint()
-    val gbs = gNew.select("gb").distinct().collect().map(_.getInt(0))
     val gRef = grams.read(before = batchId, fallback = Some(gNew.schema))
-      .where(col("gb").isin(gbs.toIndexedSeq.map(Int.box): _*))
+      .where(prunedTo(gNew, "gb"))
     // band on the 128-bit fingerprint; ONE coherent witness per pair
     val candidates = gRef
       .join(broadcast(gNew.select(col("id").as("new_id"), col("h1"),
@@ -1040,10 +801,9 @@ final class StreamingSubstringDedup(spark: SparkSession, stateDir: String,
       .select(col("ref_id"), col("new_id"), col("wit.pa").as("pa"),
         col("wit.pb").as("pb"))
       .localCheckpoint()
-    val ibs = candidates.select(idBucket(col("ref_id")).as("ib"))
-      .distinct().collect().map(_.getInt(0))
     val tRef = texts.read(before = batchId, fallback = Some(tNew.schema))
-      .where(col("ib").isin(ibs.toIndexedSeq.map(Int.box): _*))
+      .where(prunedTo(
+        candidates.select(bucket(nBuckets, col("ref_id")).as("ib")), "ib"))
     // witness windows re-extracted from the REAL text on both sides; a
     // re-arrived ref id may have several state versions — any verified
     // one proves the pair, distinct collapses the fan-out
@@ -1060,24 +820,4 @@ final class StreamingSubstringDedup(spark: SparkSession, stateDir: String,
     texts.append(tNew, batchId)
     pairs
   }
-
-  /** See [[StreamingDedup.compact]]. */
-  def compact(keepFrom: Long = Long.MinValue,
-      upTo: Long = Long.MaxValue): Unit = {
-    grams.compact(keepFrom, upTo)
-    texts.compact(keepFrom, upTo)
-  }
-
-  /** See [[StreamingDedup.attach]]. */
-  def attach(source: DataFrame, pairsDir: String,
-      checkpointDir: String, autoCompactEvery: Int = 0): DataStreamWriter[Row] =
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admit(batch, batchId).write.mode("overwrite")
-          .parquet(s"$pairsDir/batch=$batchId")
-        if (autoCompactEvery > 0 && batchId > 0 &&
-          batchId % autoCompactEvery == 0) compact(upTo = batchId - 1)
-        ()
-      }
 }

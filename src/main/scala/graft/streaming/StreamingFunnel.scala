@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types._
 
 import graft.operators.{EventAnalytics, MergeSemantics}
@@ -31,10 +30,11 @@ import graft.operators.{EventAnalytics, MergeSemantics}
   * (bounded by per-user activity) before the walk. Appends are
   * overwrite-idempotent; [[compact]] folds files only.
   */
-final class StreamingWindowFunnel(spark: SparkSession, stateDir: String,
-    userCol: String, tsCol: String, typeCol: String, steps: Seq[String],
-    windowSec: Long, nBuckets: Int = 64, mode: String = "default")
-    extends Serializable {
+final class StreamingWindowFunnel(protected val spark: SparkSession,
+    protected val stateDir: String, userCol: String, tsCol: String,
+    typeCol: String, steps: Seq[String], windowSec: Long,
+    protected val nBuckets: Int = 64, mode: String = "default")
+    extends KeyedFold {
 
   require(steps.nonEmpty, "at least one funnel step")
   require(steps.distinct.size == steps.size, "funnel steps must be distinct")
@@ -42,22 +42,13 @@ final class StreamingWindowFunnel(spark: SparkSession, stateDir: String,
   require(EventAnalytics.Modes.contains(mode),
     s"mode must be one of ${EventAnalytics.Modes}")
 
-  private val state = new BatchedState(spark, s"$stateDir/funnel", Seq("kb"))
+  protected val state = new BatchedState(spark, s"$stateDir/funnel", Seq("kb"))
   private val winMicros = windowSec * 1000000L
   private val k = steps.size
 
-  private def kBucket(u: Column): Column =
-    pmod(xxhash64(u), lit(nBuckets)).cast("int")
-
-  private val stateParams = Map("steps" -> steps.mkString(","),
+  protected val stateParams = Map("steps" -> steps.mkString(","),
     "windowSec" -> windowSec.toString, "nBuckets" -> nBuckets.toString,
     "mode" -> mode)
-  @transient private var paramsChecked = false
-  private def ensureAdmissible(batchId: Long): Unit = if (!paramsChecked) {
-    BatchedState.validateParams(spark, stateDir, stateParams)
-    BatchedState.requireMonotonicBatchId(batchId, Seq(state), stateDir)
-    paramsChecked = true
-  }
 
   private val stateSchema = StructType(Seq(
     StructField("u", LongType), StructField("best", IntegerType),
@@ -109,16 +100,12 @@ final class StreamingWindowFunnel(spark: SparkSession, stateDir: String,
   /** Initialize the standing state from a (possibly empty) history,
     * REPLACING any previous state under `stateDir`.
     */
-  def seed(events: DataFrame): Unit = {
-    BatchedState.clearParams(spark, stateDir)
-    state.reset()
+  def seed(events: DataFrame): Unit = reseed {
     val fresh = batchAgg(events)
       .withColumn("best", lit(null).cast("int"))
       .withColumn("tailT", lit(null).cast("array<bigint>"))
       .withColumn("tailS", lit(null).cast("array<int>"))
-    state.seed(applyBatch(fresh).withColumn("kb", kBucket(col("u"))))
-    BatchedState.writeParams(spark, stateDir, stateParams)
-    paramsChecked = true
+    state.seed(withKb(applyBatch(fresh), "u"))
   }
 
   /** Admit micro-batch `batchId`: returns (userCol, level) for every
@@ -126,42 +113,16 @@ final class StreamingWindowFunnel(spark: SparkSession, stateDir: String,
     * user's full history so far. Replay overwrites the state delta
     * idempotently and reads state strictly before `batchId`.
     */
-  def admit(batch: DataFrame, batchId: Long): DataFrame = {
-    ensureAdmissible(batchId)
-    val fresh = batchAgg(batch)
-      .withColumn("kb", kBucket(col("u"))).localCheckpoint()
-    val kbs = fresh.select("kb").distinct().collect().map(_.getInt(0))
-    val refRaw = state.read(before = batchId, fallback = Some(stateSchema))
-      .where(col("kb").isin(kbs.toIndexedSeq.map(Int.box): _*))
-      .join(broadcast(fresh.select(col("u"))), Seq("u"), "left_semi")
+  protected def admitBatch(batch: DataFrame, batchId: Long): DataFrame = {
+    val (fresh, pruned) =
+      prunedRead(batchAgg(batch), Seq("u"), batchId, Some(stateSchema))
+    val refRaw = pruned
       .select(col("u"), col("batch"), col("best"), col("tailT"), col("tailS"))
     val ref = MergeSemantics.replacingMerge(refRaw, Seq("u"), "batch")
       .drop("batch")
     val updated = applyBatch(fresh.join(ref, Seq("u"), "left"))
       .localCheckpoint() // materialize before the state append
-    state.append(updated.withColumn("kb", kBucket(col("u"))), batchId)
+    state.append(withKb(updated, "u"), batchId)
     updated.select(col("u").as(userCol), col("best").as("level"))
   }
-
-  /** FILE compaction only (the [[StreamingReplacingMerge.compact]]
-    * contract): an aged state row may still be an idle user's current
-    * funnel state, so the TTL is not exposed.
-    */
-  def compact(upTo: Long = Long.MaxValue): Unit =
-    state.compact(Long.MinValue, upTo)
-
-  /** Run the standing funnel over a stream: per micro-batch, admit +
-    * write the touched-user levels to `outDir/batch=<id>`.
-    */
-  def attach(source: DataFrame, outDir: String,
-      checkpointDir: String, autoCompactEvery: Int = 0): DataStreamWriter[Row] =
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admit(batch, batchId).write.mode("overwrite")
-          .parquet(s"$outDir/batch=$batchId")
-        if (autoCompactEvery > 0 && batchId > 0 &&
-          batchId % autoCompactEvery == 0) compact(upTo = batchId - 1)
-        ()
-      }
 }

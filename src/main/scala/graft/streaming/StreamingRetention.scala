@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types._
 
 /** Standing streaming retention — the streaming lift of
@@ -22,28 +21,20 @@ import org.apache.spark.sql.types._
   * SEMI-join the broadcast batch users; one state row per user per
   * touching batch, max-folded at read. [[compact]] folds files only.
   */
-final class StreamingRetention(spark: SparkSession, stateDir: String,
-    userCol: String, conds: Seq[(String, Column)], nBuckets: Int = 64)
-    extends Serializable {
+final class StreamingRetention(protected val spark: SparkSession,
+    protected val stateDir: String, userCol: String,
+    conds: Seq[(String, Column)], protected val nBuckets: Int = 64)
+    extends KeyedFold {
 
   require(conds.nonEmpty, "at least the anchor condition")
   require(conds.map(_._1).distinct.size == conds.size,
     "condition names must be distinct")
 
-  private val state = new BatchedState(spark, s"$stateDir/flags", Seq("kb"))
+  protected val state = new BatchedState(spark, s"$stateDir/flags", Seq("kb"))
   private val flagCols = conds.indices.map(i => s"f$i")
 
-  private def kBucket(u: Column): Column =
-    pmod(xxhash64(u), lit(nBuckets)).cast("int")
-
-  private val stateParams = Map("conds" -> conds.map(_._1).mkString(","),
+  protected val stateParams = Map("conds" -> conds.map(_._1).mkString(","),
     "nBuckets" -> nBuckets.toString)
-  @transient private var paramsChecked = false
-  private def ensureAdmissible(batchId: Long): Unit = if (!paramsChecked) {
-    BatchedState.validateParams(spark, stateDir, stateParams)
-    BatchedState.requireMonotonicBatchId(batchId, Seq(state), stateDir)
-    paramsChecked = true
-  }
 
   private val stateSchema = StructType(
     StructField("u", LongType) +:
@@ -69,53 +60,25 @@ final class StreamingRetention(spark: SparkSession, stateDir: String,
   /** Seed the standing flags from a (possibly empty) history, REPLACING
     * any previous state under `stateDir`.
     */
-  def seed(events: DataFrame): Unit = {
-    BatchedState.clearParams(spark, stateDir)
-    state.reset()
-    state.seed(batchFlags(events).withColumn("kb", kBucket(col("u"))))
-    BatchedState.writeParams(spark, stateDir, stateParams)
-    paramsChecked = true
+  def seed(events: DataFrame): Unit = reseed {
+    state.seed(withKb(batchFlags(events), "u"))
   }
 
   /** Admit micro-batch `batchId`: accumulate flags, emit the
     * anchor-gated retention row (r0, r1, ...) per touched user over
     * full history. Appends one folded flag row per touched user.
     */
-  def admit(batch: DataFrame, batchId: Long): DataFrame = {
-    ensureAdmissible(batchId)
-    val fresh = batchFlags(batch)
-      .withColumn("kb", kBucket(col("u"))).localCheckpoint()
-    val kbs = fresh.select("kb").distinct().collect().map(_.getInt(0))
-    val ref = state.read(before = batchId, fallback = Some(stateSchema))
-      .where(col("kb").isin(kbs.toIndexedSeq.map(Int.box): _*))
-      .join(broadcast(fresh.select(col("u"))), Seq("u"), "left_semi")
-      .select(col("u") +: flagCols.map(col): _*)
+  protected def admitBatch(batch: DataFrame, batchId: Long): DataFrame = {
+    val (fresh, pruned) =
+      prunedRead(batchFlags(batch), Seq("u"), batchId, Some(stateSchema))
+    val ref = pruned.select(col("u") +: flagCols.map(col): _*)
     val merged = foldFlags(ref.unionByName(
         fresh.select(col("u") +: flagCols.map(col): _*)))
       .localCheckpoint() // materialize before the state append
-    state.append(merged.withColumn("kb", kBucket(col("u"))), batchId)
+    state.append(withKb(merged, "u"), batchId)
     merged.select(col("u").as(userCol) +: conds.indices.map { i =>
       (if (i == 0) col("f0") else col("f0") * col(s"f$i"))
         .cast("int").as(s"r$i")
     }: _*)
   }
-
-  /** File compaction only ([[StreamingReplacingMerge.compact]]
-    * contract).
-    */
-  def compact(upTo: Long = Long.MaxValue): Unit =
-    state.compact(Long.MinValue, upTo)
-
-  /** Run the standing retention over a stream. */
-  def attach(source: DataFrame, outDir: String,
-      checkpointDir: String, autoCompactEvery: Int = 0): DataStreamWriter[Row] =
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admit(batch, batchId).write.mode("overwrite")
-          .parquet(s"$outDir/batch=$batchId")
-        if (autoCompactEvery > 0 && batchId > 0 &&
-          batchId % autoCompactEvery == 0) compact(upTo = batchId - 1)
-        ()
-      }
 }

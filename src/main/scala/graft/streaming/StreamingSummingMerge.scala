@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types._
 
 /** Standing streaming SummingMerge — the ClickHouse materialized-view
@@ -25,28 +24,19 @@ import org.apache.spark.sql.types._
   * SEMI-join the broadcast batch keys; one state row per touched key
   * per batch. [[compact]] folds files only.
   */
-final class StreamingSummingMerge(spark: SparkSession, stateDir: String,
-    keyCol: String, sumCols: Seq[String],
-    accType: String = "decimal(28,2)", nBuckets: Int = 64)
-    extends Serializable {
+final class StreamingSummingMerge(protected val spark: SparkSession,
+    protected val stateDir: String, keyCol: String, sumCols: Seq[String],
+    accType: String = "decimal(28,2)", protected val nBuckets: Int = 64)
+    extends KeyedFold {
 
   require(sumCols.nonEmpty, "at least one sum column")
   require(sumCols.distinct.size == sumCols.size, "sum columns must be distinct")
 
-  private val state = new BatchedState(spark, s"$stateDir/sums", Seq("kb"))
+  protected val state = new BatchedState(spark, s"$stateDir/sums", Seq("kb"))
 
-  private def kBucket(k: Column): Column =
-    pmod(xxhash64(k), lit(nBuckets)).cast("int")
-
-  private val stateParams = Map("keyCol" -> keyCol,
+  protected val stateParams = Map("keyCol" -> keyCol,
     "sumCols" -> sumCols.mkString(","), "accType" -> accType,
     "nBuckets" -> nBuckets.toString)
-  @transient private var paramsChecked = false
-  private def ensureAdmissible(batchId: Long): Unit = if (!paramsChecked) {
-    BatchedState.validateParams(spark, stateDir, stateParams)
-    BatchedState.requireMonotonicBatchId(batchId, Seq(state), stateDir)
-    paramsChecked = true
-  }
 
   private val accDataType =
     org.apache.spark.sql.catalyst.parser.CatalystSqlParser.parseDataType(accType)
@@ -67,56 +57,28 @@ final class StreamingSummingMerge(spark: SparkSession, stateDir: String,
   /** Seed the standing rollup from a (possibly empty) history, REPLACING
     * any previous state under `stateDir`.
     */
-  def seed(history: DataFrame): Unit = {
-    BatchedState.clearParams(spark, stateDir)
-    state.reset()
-    state.seed(batchSums(history).withColumn("kb", kBucket(col("k"))))
-    BatchedState.writeParams(spark, stateDir, stateParams)
-    paramsChecked = true
+  def seed(history: DataFrame): Unit = reseed {
+    state.seed(withKb(batchSums(history), "k"))
   }
 
   /** Admit micro-batch `batchId`: fold the batch's sums into the rollup
     * and emit (keyCol, sumCols...) for every touched key — the sums over
     * the key's full history so far.
     */
-  def admit(batch: DataFrame, batchId: Long): DataFrame = {
-    ensureAdmissible(batchId)
-    val fresh = batchSums(batch)
-      .withColumn("kb", kBucket(col("k"))).localCheckpoint()
-    val kbs = fresh.select("kb").distinct().collect().map(_.getInt(0))
+  protected def admitBatch(batch: DataFrame, batchId: Long): DataFrame = {
     // each state row carries the key's FULL total as of its batch, so —
     // addition not being idempotent — only the NEWEST row per key may
     // enter the fold (the StreamingReplacingMerge read, not the
     // max-fold the monotone-flag operators use)
-    val refRaw = state.read(before = batchId, fallback = Some(stateSchema))
-      .where(col("kb").isin(kbs.toIndexedSeq.map(Int.box): _*))
-      .join(broadcast(fresh.select(col("k"))), Seq("k"), "left_semi")
-      .select(col("k") +: col("batch") +: sumCols.map(col): _*)
+    val (fresh, pruned) =
+      prunedRead(batchSums(batch), Seq("k"), batchId, Some(stateSchema))
+    val refRaw = pruned.select(col("k") +: col("batch") +: sumCols.map(col): _*)
     val ref = graft.operators.MergeSemantics
       .replacingMerge(refRaw, Seq("k"), "batch").drop("batch")
     val merged = fold(ref.unionByName(
         fresh.select(col("k") +: sumCols.map(col): _*)))
       .localCheckpoint() // materialize before the state append
-    state.append(merged.withColumn("kb", kBucket(col("k"))), batchId)
+    state.append(withKb(merged, "k"), batchId)
     merged.select(col("k").as(keyCol) +: sumCols.map(col): _*)
   }
-
-  /** File compaction only ([[StreamingReplacingMerge.compact]]
-    * contract).
-    */
-  def compact(upTo: Long = Long.MaxValue): Unit =
-    state.compact(Long.MinValue, upTo)
-
-  /** Run the standing rollup over a stream. */
-  def attach(source: DataFrame, outDir: String,
-      checkpointDir: String, autoCompactEvery: Int = 0): DataStreamWriter[Row] =
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admit(batch, batchId).write.mode("overwrite")
-          .parquet(s"$outDir/batch=$batchId")
-        if (autoCompactEvery > 0 && batchId > 0 &&
-          batchId % autoCompactEvery == 0) compact(upTo = batchId - 1)
-        ()
-      }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Standing VersionedCollapsing view — the streaming lift of
   * [[graft.operators.MergeSemantics.versionedCollapsingMerge]], and the
@@ -31,27 +30,19 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * Versions must be numeric (cast to long) — the same contract the
   * batch operator's fold key has.
   */
-final class StreamingVersionedCollapsing(spark: SparkSession,
-    stateDir: String, keyCol: String, signCol: String, verCol: String,
-    payloadCols: Seq[String], nBuckets: Int = 64) extends Serializable {
+final class StreamingVersionedCollapsing(protected val spark: SparkSession,
+    protected val stateDir: String, keyCol: String, signCol: String,
+    verCol: String, payloadCols: Seq[String],
+    protected val nBuckets: Int = 64) extends KeyedFold {
 
   require(payloadCols.distinct.size == payloadCols.size,
     "payload columns must be distinct")
 
-  private val state = new BatchedState(spark, s"$stateDir/nets", Seq("kb"))
+  protected val state = new BatchedState(spark, s"$stateDir/nets", Seq("kb"))
 
-  private def kBucket(k: Column): Column =
-    pmod(xxhash64(k), lit(nBuckets)).cast("int")
-
-  private val stateParams = Map("keyCol" -> keyCol, "signCol" -> signCol,
+  protected val stateParams = Map("keyCol" -> keyCol, "signCol" -> signCol,
     "verCol" -> verCol, "payload" -> payloadCols.mkString(","),
     "nBuckets" -> nBuckets.toString)
-  @transient private var paramsChecked = false
-  private def ensureAdmissible(batchId: Long): Unit = if (!paramsChecked) {
-    BatchedState.validateParams(spark, stateDir, stateParams)
-    BatchedState.requireMonotonicBatchId(batchId, Seq(state), stateDir)
-    paramsChecked = true
-  }
 
   private def sideCols: Seq[String] =
     payloadCols.flatMap(c => Seq(s"${c}_p", s"${c}_m"))
@@ -77,28 +68,17 @@ final class StreamingVersionedCollapsing(spark: SparkSession,
   /** Seed the standing view from a (possibly empty) signed history,
     * REPLACING any previous state under `stateDir`.
     */
-  def seed(history: DataFrame): Unit = {
-    BatchedState.clearParams(spark, stateDir)
-    state.reset()
-    state.seed(batchNets(history).withColumn("kb", kBucket(col("k"))))
-    BatchedState.writeParams(spark, stateDir, stateParams)
-    paramsChecked = true
+  def seed(history: DataFrame): Unit = reseed {
+    state.seed(withKb(batchNets(history), "k"))
   }
 
   /** Admit micro-batch `batchId` and emit one row per touched
     * (key, version): full-history `net`, `surviving = net != 0`, and
     * the surviving side's payload (null once a pair has collapsed).
     */
-  def admit(batch: DataFrame, batchId: Long): DataFrame = {
-    ensureAdmissible(batchId)
-    val fresh = batchNets(batch)
-      .withColumn("kb", kBucket(col("k"))).localCheckpoint()
-    val kbs = fresh.select("kb").distinct().collect().map(_.getInt(0))
-    val refRaw = state.read(before = batchId, fallback = Some(fresh.schema))
-      .where(col("kb").isin(kbs.toIndexedSeq.map(Int.box): _*))
-      .join(broadcast(fresh.select(col("k"), col("ver"))),
-        Seq("k", "ver"), "left_semi")
-      .select(col("k") +: col("ver") +: col("batch") +: col("net") +:
+  protected def admitBatch(batch: DataFrame, batchId: Long): DataFrame = {
+    val (fresh, pruned) = prunedRead(batchNets(batch), Seq("k", "ver"), batchId)
+    val refRaw = pruned.select(col("k") +: col("ver") +: col("batch") +: col("net") +:
         sideCols.map(col): _*)
     // full nets, not deltas -> only the NEWEST state row per (k, ver)
     // may enter the fold
@@ -106,30 +86,10 @@ final class StreamingVersionedCollapsing(spark: SparkSession,
       .replacingMerge(refRaw, Seq("k", "ver"), "batch").drop("batch")
     val merged = fold(ref.unionByName(fresh.drop("kb")))
       .localCheckpoint() // materialize before the state append
-    state.append(merged.withColumn("kb", kBucket(col("k"))), batchId)
+    state.append(withKb(merged, "k"), batchId)
     merged.select(Seq(col("k").as(keyCol), col("ver").as(verCol),
       col("net"), (col("net") =!= 0).as("surviving")) ++
       payloadCols.map(c => when(col("net") > 0, col(s"${c}_p"))
         .when(col("net") < 0, col(s"${c}_m")).as(c)): _*)
   }
-
-  /** FILE compaction only ([[StreamingReplacingMerge.compact]]
-    * contract): net-0 tombstones and quiet versions are load-bearing,
-    * so row eviction is deliberately not exposed.
-    */
-  def compact(upTo: Long = Long.MaxValue): Unit =
-    state.compact(Long.MinValue, upTo)
-
-  /** Run the standing view over a stream. */
-  def attach(source: DataFrame, outDir: String,
-      checkpointDir: String, autoCompactEvery: Int = 0): DataStreamWriter[Row] =
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admit(batch, batchId).write.mode("overwrite")
-          .parquet(s"$outDir/batch=$batchId")
-        if (autoCompactEvery > 0 && batchId > 0 &&
-          batchId % autoCompactEvery == 0) compact(upTo = batchId - 1)
-        ()
-      }
 }

@@ -627,6 +627,37 @@ class BatchedStateSpec extends AnyFunSuite {
       e.getMessage.contains("layout"), e.getMessage)
   }
 
+  test("StreamingEmbeddingDedup admits the shipped pre-keyWidth layout " +
+      "as int64; a foreign keyWidth refuses") {
+    import graft.streaming.StreamingEmbeddingDedup
+    def unit(axis: Int): Seq[Double] =
+      (0 until 8).map(i => if (i == axis) 1.0 else 0.0)
+    val seedDf = (0 until 8).map(a => (a.toLong, unit(a)))
+      .toDF("vec_id", "embedding")
+    val batch = Seq((101L, unit(3)), (102L, unit(5))).toDF("vec_id", "embedding")
+    def op(dir: String) = new StreamingEmbeddingDedup(spark, dir, "vec_id",
+      "embedding", dims = 8, nBits = 64, bandBits = 8, threshold = 0.9)
+    def seeded(prefix: String): String = {
+      val dir = tmp(prefix); op(dir).seed(seedDf); dir
+    }
+    def pairs(dir: String): Set[(Long, Long)] = op(dir).admit(batch, 0L)
+      .select("ref_id", "new_id").as[(Long, Long)].collect().toSet
+    val expected = pairs(seeded("sed_kw_fresh"))
+    assert(expected === Set((3L, 101L), (5L, 102L)))
+    // a dir seeded before the key existed: same rows, marker without it
+    val legacy = seeded("sed_kw_legacy")
+    val stored = BatchedState.readParams(spark, legacy)
+    assert(stored.get("keyWidth") === Some("int64"), "seed must write keyWidth")
+    BatchedState.writeParams(spark, legacy, stored - "keyWidth")
+    assert(pairs(legacy) === expected)
+    // any other stored width is real drift
+    val foreign = seeded("sed_kw_int32")
+    BatchedState.writeParams(spark, foreign, stored + ("keyWidth" -> "int32"))
+    val e = intercept[IllegalStateException](pairs(foreign))
+    assert(e.getMessage.contains("different parameters") &&
+      e.getMessage.contains("keyWidth: stored=int32"), e.getMessage)
+  }
+
   test("StreamingSubstringDedup: seed stamps the pos layout key, admission " +
       "adopts a stored width without sniffing, a foreign width refuses") {
     import graft.streaming.StreamingSubstringDedup
