@@ -6,7 +6,7 @@ import java.util.regex.Pattern
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.{ChGetters, GoLayouts}
+import graft.functions.{ChGetters, GoLayouts, VariantAccess, VariantKind, VariantKindOps}
 import graft.sink.ChSql
 import graft.types.ChKind
 
@@ -15,7 +15,7 @@ import graft.types.ChKind
   * `output/clickhouse.go:550-659`).
   *
   * Detection is a distributed aggregation over the micro-batch: explode
-  * each message's top-level fields, keep unseen keys passing the white/
+  * each message's unseen top-level fields, keep keys passing the white/
   * black lists, and merge each key's variant type tags. Driver-side, the
   * merged tag maps to a ClickHouse column type with the reference's rules:
   *
@@ -51,12 +51,13 @@ object SchemaEvolution {
     val black = policy.blackList.map(Pattern.compile(_))
 
     val msg = parsedCol.map(col).getOrElse(ChGetters.parsed(col("value")))
+    // only the members outside knownKeys leave the message, each read in
+    // place (no per-value rebuild of the known ones)
     val fields = batch
-      .select(explode(try_variant_get(msg, "$", "map<string,variant>")).as(Seq("k", "v")))
-      .filter(!col("k").isin(knownKeys.toSeq: _*))
+      .select(explode(VariantAccess.newFields(msg, knownKeys)).as(Seq("k", "v")))
       .select(col("k"), schema_of_variant(col("v")).as("tag"),
-        when(schema_of_variant(col("v")) === "STRING",
-          try_variant_get(col("v"), "$", "string")).as("sample"))
+        when(VariantKind.of(col("v")) === VariantKindOps.StrK,
+          VariantAccess.string(col("v"))).as("sample"))
       .groupBy(col("k"))
       .agg(collect_set(col("tag")).as("tags"),
         first(col("sample"), ignoreNulls = true).as("sample"))

@@ -40,16 +40,13 @@ object ChGetters {
 
   // ---- variant plumbing ----------------------------------------------
 
-  private def vpath(key: String): String =
-    if (key.matches("[A-Za-z_][A-Za-z0-9_]*")) "$." + key
-    else "$['" + key.replace("'", "\\'") + "']"
-
   /** The parsed message: one parse per row. */
   def parsed(raw: Column): Column = try_parse_json(raw)
 
-  /** Extract one top-level field as variant (missing -> NULL). */
-  def field(msg: Column, key: String): Column =
-    try_variant_get(msg, vpath(key), "variant")
+  /** Extract one top-level field as variant (missing -> NULL), read in
+    * place from the message's bytes ([[VariantAccess]]).
+    */
+  def field(msg: Column, key: String): Column = VariantAccess.field(msg, key)
 
   /** O(1) binary type tag of a field (see [[VariantKind]]) — NOT
     * schema_of_variant, which computes a string per value per branch.
@@ -75,7 +72,8 @@ object ChGetters {
 
   private def asDec(f: Column): Column = try_variant_get(f, "$", "decimal(38,0)")
   private def asDouble(f: Column): Column = try_variant_get(f, "$", "double")
-  private def asString(f: Column): Column = try_variant_get(f, "$", "string")
+  // string payload only: every caller branches on StrK first
+  private def asString(f: Column): Column = VariantAccess.string(f)
   private def asLong(f: Column): Column = try_variant_get(f, "$", "bigint")
   private def asBool(f: Column): Column = try_variant_get(f, "$", "boolean")
 
@@ -238,7 +236,7 @@ object ChGetters {
     val m = asVariantMap(f)
     val kept = map_filter(m, (_, v) => isStrTy(kindOf(v)) || isNumTy(kindOf(v)))
     val strd = transform_values(kept, (_, v) =>
-      when(isStrTy(kindOf(v)), try_variant_get(v, "$", "string")).otherwise(to_json(v)))
+      when(isStrTy(kindOf(v)), asString(v)).otherwise(to_json(v)))
     coalesce(strd, map().cast(MapType(StringType, StringType)))
   }
 

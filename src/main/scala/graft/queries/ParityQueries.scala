@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
-import graft.functions.ChGetters
+import graft.functions.{ChGetters, VariantAccess}
 import graft.functions.ChGetters.ParseOpts
 import graft.parse.CsvGetters
 import graft.shard.Sharding
@@ -260,7 +260,7 @@ object ParityQueries {
           date_format(col("ts"), "yyyy-MM-dd").as("d"))).as("raw"))
       val msg = ChGetters.parsed(col("raw"))
       val pairs = raw.select(explode(
-        try_variant_get(msg, "$", "map<string,variant>")).as(Seq("k", "v")))
+        VariantAccess.newFields(msg, Set.empty)).as(Seq("k", "v")))
       val tag = schema_of_variant(col("v"))
       val chType = when(tag === "BOOLEAN", "Bool")
         .when(tag.isin("TINYINT", "SMALLINT", "INT", "BIGINT"), "Int64")

@@ -7,6 +7,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 
+import graft.sink.ChWriter
+
 /** Ops metrics (SURVEY A5; reference statistics/statistics.go:36-136):
   * the reference exports Prometheus counters for consumed/parse-error/
   * flush totals and write-duration histograms. Here the per-batch numbers
@@ -34,6 +36,17 @@ final class Metrics extends StreamingQueryListener {
     var i = 0
     while (i < Metrics.writeBucketsMs.length && ms > Metrics.writeBucketsMs(i)) i += 1
     bucketCounts(i).increment()
+  }
+
+  // -- writer outcome: the WriteStats ChWriter.write sums from its
+  //    accumulators, added once per batch (reference statistics.go flush
+  //    counters) ---------------------------------------------------------
+  val rowsWritten  = new LongAdder
+  val badRows      = new LongAdder
+  val writeRetries = new LongAdder
+
+  def observeWriteStats(s: ChWriter.WriteStats): Unit = {
+    rowsWritten.add(s.written); badRows.add(s.numBad); writeRetries.add(s.retries)
   }
 
   /** Cumulative (le -> count) buckets plus (sum, count), Prometheus-style. */
@@ -96,6 +109,12 @@ final class Metrics extends StreamingQueryListener {
     sb.append(s"graft_batches_completed ${batchesCompleted.sum()}\n")
     sb.append("# TYPE graft_rows_consumed counter\n")
     sb.append(s"graft_rows_consumed ${rowsConsumed.sum()}\n")
+    sb.append("# TYPE graft_rows_written counter\n")
+    sb.append(s"graft_rows_written ${rowsWritten.sum()}\n")
+    sb.append("# TYPE graft_bad_rows counter\n")
+    sb.append(s"graft_bad_rows ${badRows.sum()}\n")
+    sb.append("# TYPE graft_write_retries counter\n")
+    sb.append(s"graft_write_retries ${writeRetries.sum()}\n")
     sb.append("# TYPE graft_restart_failures counter\n")
     sb.append(s"graft_restart_failures ${restartFailures.sum()}\n")
     val (buckets, sum, count) = writeHistogram

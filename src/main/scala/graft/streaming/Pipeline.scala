@@ -156,8 +156,9 @@ object Pipeline {
             sink.numShards, sink.writersPerShard)
             .select((dims.map(d => col(d.name)) :+ col("__shard__")): _*)
           val t0 = System.nanoTime()
-          ChWriter.write(sharded, sink.writeCfg, sink.mkWriter)
-          metrics.foreach(_.observeWriteMs((System.nanoTime() - t0) / 1000000L))
+          val stats = ChWriter.write(sharded, sink.writeCfg, sink.mkWriter)
+          val ms = (System.nanoTime() - t0) / 1000000L
+          metrics.foreach { m => m.observeWriteMs(ms); m.observeWriteStats(stats) }
         } finally if (cached) input.unpersist()
         ()
       }

@@ -208,4 +208,45 @@ class PipelineSpec extends AnyFunSuite {
     assert(dims.map(_._1) === Seq("a", "b"))
     assert(!dims(1)._2.nullable) // refered-nullable override
   }
+
+  test("the writer's written/bad/retry counts reach /metrics") {
+    val inDir = Files.createTempDirectory("graft_in")
+    val ckDir = Files.createTempDirectory("graft_ck")
+    val lines = (1 to 9).map(i => s"""{"name": "ok$i"}""") ++
+      Seq("""{"name": "bad1"}""", """{"name": "bad2"}""", "not json")
+    Files.write(inDir.resolve("part-0.txt"), lines.mkString("\n").getBytes("UTF-8"))
+    val task = TaskConfig(name = "test_write_stats", topic = "topic1",
+      consumerGroup = "g1", bufferSize = 100, flushInterval = 1)
+    val sink = Pipeline.SinkSpec(1,
+      ChWriter.WriteConfig(1, retryTimes = 3, retryDelayMs = 1),
+      () => new FlakyFlaggingWriter)
+    val metrics = new graft.streaming.Metrics
+    val q = Pipeline.start(spark, Pipeline.fileSource(spark, inDir.toString, "topic1"),
+      task, Seq(Dim("name", ChType.whichType("String"))), sink, ckDir.toString,
+      metrics = Some(metrics))
+    q.processAllAvailable()
+    q.stop()
+    // the corrupt line never reaches the writer; one writer, one transient failure
+    assert(metrics.rowsWritten.sum() === 9L)
+    assert(metrics.badRows.sum() === 2L)
+    assert(metrics.writeRetries.sum() === 1L)
+    val prom = metrics.prometheus
+    assert(prom.contains("graft_rows_written 9\n"))
+    assert(prom.contains("graft_bad_rows 2\n"))
+    assert(prom.contains("graft_write_retries 1\n"))
+  }
+}
+
+/** Fails its first batch once (a transient error), then flags every row
+  * whose first column starts with "bad".
+  */
+final class FlakyFlaggingWriter extends ChWriter.RowWriter {
+  private var failedOnce = false
+  override def open(shard: Int): Unit = ()
+  override def writeBatch(rows: Seq[org.apache.spark.sql.Row]): Unit = {
+    if (!failedOnce) { failedOnce = true; throw new RuntimeException("transient") }
+    val bad = rows.zipWithIndex.collect { case (r, i) if r.getString(0).startsWith("bad") => i }
+    if (bad.nonEmpty) throw new ChWriter.BadRowsException(bad, "bad rows")
+  }
+  override def close(): Unit = ()
 }

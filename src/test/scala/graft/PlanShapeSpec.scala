@@ -77,6 +77,18 @@ class PlanShapeSpec extends AnyFunSuite {
     // and the message parses exactly once (the Once barrier holds)
     assert("parseJson".r.findAllIn(p).length === 1,
       s"parse_json must run once per row:\n$p")
+    assertNoFieldRebuild(p, dims = 3)
+  }
+
+  /** Each dim reads its field in place from the parsed message: one
+    * `variant_field` per dim, and no variant-typed `try_variant_get`
+    * (which rebuilds the field through a fresh VariantBuilder).
+    */
+  private def assertNoFieldRebuild(p: String, dims: Int): Unit = {
+    assert(!"try_variant_get\\([^)]*, VariantType,".r.findFirstIn(p).isDefined,
+      s"a field is rebuilt through try_variant_get(..., variant):\n$p")
+    assert("variant_field\\(".r.findAllIn(p).length === dims,
+      s"expected one in-place field read per dim:\n$p")
   }
 
   test("csv projection parses each line exactly once") {
@@ -370,6 +382,7 @@ class PlanShapeSpec extends AnyFunSuite {
       // itself must not re-parse
       assert("parseJson".r.findAllIn(p).length <= 1,
         s"message must parse at most once on the dynamic-schema path:\n$p")
+      assertNoFieldRebuild(p, dims = 2)
     } finally stage.unpersist()
   }
 
