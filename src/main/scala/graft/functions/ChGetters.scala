@@ -304,14 +304,4 @@ object ChGetters {
       getScalar(e, ti.kind, nullable = false, opts, ti.dateTime64Precision))
     coalesce(conv, array().cast(ArrayType(ti.elementSparkType, containsNull = false)))
   }
-
-  /** GetValueByType dispatcher (model/value.go:108-159): one projected
-    * column from the parsed message.
-    */
-  def getValue(msg: Column, sourceName: String, ti: ChTypeInfo, opts: ParseOpts): Column = {
-    val f = field(msg, sourceName)
-    if (ti.kind == ChKind.MapK) getMap(f, ti, opts)
-    else if (ti.array) getArray(f, ti, opts)
-    else getScalar(f, ti.kind, ti.nullable, opts, ti.dateTime64Precision)
-  }
 }

@@ -36,10 +36,10 @@ object Graph {
     * edge-dedup shuffle, the out-degree aggregation, the degree join,
     * and the node-set distinct from the scan up (~3 corpus-sized
     * exchanges × iterations of pure redundancy at 25 M edges, ~40 % of
-    * the r15 wall). Pins go to `bigPinLevel` — MEMORY_AND_DISK_SER by
-    * default: serialized blocks are compact enough not to reproduce the
-    * aggregate spill that DESERIALIZED in-memory pins measured (388 MB
-    * at 25 M edges, the r16 rejection), excess still overflows to disk
+    * the r15 wall). Pins are MEMORY_AND_DISK_SER: serialized blocks are
+    * compact enough not to reproduce the aggregate spill that
+    * DESERIALIZED in-memory pins measured (388 MB at 25 M edges, the r16
+    * rejection), excess still overflows to disk
     * instead of all-of-it, and because five rounds re-read the pins,
     * the all-disk shape is the one most exposed to disk contention —
     * measured at 25 M edges (BENCHNOTES r17): 48.2 s vs DISK_ONLY's
@@ -65,9 +65,7 @@ object Graph {
   def pageRank(edges: DataFrame, srcCol: String = "src",
       dstCol: String = "dst", iterations: Int = 5,
       dampNum: Long = 85, scale: Long = 1000000000000L,
-      pinEdgeThreshold: Long = 1000000L,
-      bigPinLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK_SER)
-      : DataFrame = {
+      pinEdgeThreshold: Long = 1000000L): DataFrame = {
     require(iterations >= 1, "at least one iteration")
     require(dampNum > 0 && dampNum < 100, "dampNum is a percentage in (0,100)")
     // drop malformed edges (null or uncastable src/dst) ONCE, before the
@@ -91,7 +89,7 @@ object Graph {
       // try, leaking e/nodes when a pin job itself failed
       val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       def pin(df: DataFrame): DataFrame = {
-        val p = df.persist(bigPinLevel); pinned += p
+        val p = df.persist(StorageLevel.MEMORY_AND_DISK_SER); pinned += p
         prePinHook(); p.count(); p
       }
       try {

@@ -682,11 +682,10 @@ object Similarity {
     * per-query lookup tables, cut to `k * rerank` candidates per query
     * (bounded-heap [[TopKAgg]]), and exact-cosine re-rank the winners
     * against their true vectors — a candidate-id POINT FETCH from the
-    * same pruned partitions (`pointFetch` default: cell files are
-    * id-sorted, so the parquet column index skips non-candidate pages
-    * of the wide vector column; measured 1.25x over the plain join
-    * fetch at 2M x 512, internal join-shape fallback past 65536
-    * candidate ids).
+    * same pruned partitions (cell files are id-sorted, so the parquet
+    * column index skips non-candidate pages of the wide vector column;
+    * measured 1.25x over the plain join fetch at 2M x 512, internal
+    * join-shape fallback past 65536 candidate ids).
     *
     * Physics: the LUTs ride the BROADCAST query side as DATA
     * (`array<array<double>>` — never plan literals, so plan/codegen
@@ -714,7 +713,7 @@ object Similarity {
   def ivfPqTopK(spark: org.apache.spark.sql.SparkSession, indexDir: String,
       queries: DataFrame, k: Int, nprobe: Int = 4, rerank: Int = 8,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      maxDriverQueries: Int = 10000, pointFetch: Boolean = true): DataFrame = {
+      maxDriverQueries: Int = 10000): DataFrame = {
     val cent = IvfIndex.load(spark, s"$indexDir/centroids")
     val books = PqIndex.load(spark, s"$indexDir/books")
     val vecd = col(vecCol).cast(ArrayType(DoubleType))
@@ -726,8 +725,7 @@ object Similarity {
       .localCheckpoint()
     val nq = qBase.count()
     if (nq <= maxDriverQueries)
-      ivfPqTopKChunk(spark, indexDir, cent, books, qBase, k, nprobe, rerank,
-        pointFetch)
+      ivfPqTopKChunk(spark, indexDir, cent, books, qBase, k, nprobe, rerank)
     else {
       // the ADC LUTs are driver-built per query (~20 KB at 512 dims:
       // vector + m x k doubles), so an unbounded batch would OOM the
@@ -753,11 +751,10 @@ object Similarity {
           .select(col("query_id"), col("q_vec"))
         // materialize the chunk's top-k NOW (≤ maxDriverQueries·k rows):
         // a lazy union would retain every chunk's query-vector/LUT
-        // LocalRelations (and with pointFetch=false the unexecuted ADC
-        // plans' broadcasts) until the caller executes — exactly the
+        // LocalRelations until the caller executes — exactly the
         // unbounded driver residency the chunking exists to prevent
         ivfPqTopKChunk(spark, indexDir, cent, books, slice, k, nprobe,
-          rerank, pointFetch).localCheckpoint()
+          rerank).localCheckpoint()
       }.reduce(_ union _)
     }
   }
@@ -769,8 +766,7 @@ object Similarity {
     */
   private def ivfPqTopKChunk(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, cent: Centroids, books: PqCodebooks,
-      qSlice: DataFrame, k: Int, nprobe: Int, rerank: Int,
-      pointFetch: Boolean): DataFrame = {
+      qSlice: DataFrame, k: Int, nprobe: Int, rerank: Int): DataFrame = {
     import spark.implicits._
     // localize the bounded query slice ONCE: probed cells and per-query
     // ADC lookup tables both derive from the same collect (probeCells
@@ -803,29 +799,26 @@ object Similarity {
     // point fetch derives its id set by MATERIALIZING candidates — pin
     // them so the ADC scoring pass doesn't run a second time for the
     // re-rank join
-    val candidates =
-      if (pointFetch) candidates0.localCheckpoint() else candidates0
+    val candidates = candidates0.localCheckpoint()
     // exact re-rank against true vectors, read from the SAME pruned
     // partitions (every candidate lives in a probed cell by construction)
     val qv = qRows.toSeq.map(r => (r.getLong(0), r.getSeq[Double](1)))
       .distinct.toDF("query_id", "q_vec")
-    // point-fetch shape (the DEFAULT — measured winner): localize the
-    // bounded candidate id set (≤ |q|·k·rerank longs) and push it into
-    // the vector read as a scan filter — cell files are id-sorted
+    // point-fetch shape (the measured winner): localize the bounded
+    // candidate id set (≤ |q|·k·rerank longs) and push it into the
+    // vector read as a scan filter — cell files are id-sorted
     // ([[writeCells]]), so the parquet column index skips
     // non-candidate pages of the wide nn_vec column. Measured at
     // 2M x 512, 100 queries (BENCHNOTES r16): 5.8 s vs 7.3 s min for
     // the join fetch (~1.25x), identical rows. The join shape remains
-    // for two cases: an explicit `pointFetch = false`, and the internal
-    // fallback when the candidate set outgrows a sane isin/InSet
-    // (> 65536 ids — a thousands-of-queries batch), where a filter
-    // that large costs more in plan/predicate weight than it prunes.
-    val candIds =
-      if (!pointFetch) Array.empty[Long]
-      else candidates.select("nn_id").distinct().collect()
-        .map(_.getLong(0)).sorted
+    // as the internal fallback when the candidate set outgrows a sane
+    // isin/InSet (> 65536 ids — a thousands-of-queries batch), where a
+    // filter that large costs more in plan/predicate weight than it
+    // prunes.
+    val candIds = candidates.select("nn_id").distinct().collect()
+      .map(_.getLong(0)).sorted
     val vecSide =
-      if (!pointFetch || candIds.length > 65536)
+      if (candIds.length > 65536)
         cells.select(col("nn_id"), col("nn_vec"))
       else cells.select(col("nn_id"), col("nn_vec"))
         .where(if (candIds.isEmpty) lit(false)

@@ -10,8 +10,7 @@ import graft.operators.ApproxAgg
   * aggregatable at 100 TB — union of slice sketches == whole-corpus
   * sketch).
   */
-class ApproxAggSpec extends AnyFunSuite {
-  lazy val spark = GraftSession.local(4)
+class ApproxAggSpec extends AnyFunSuite with LocalSpark {
   import spark.implicits._
 
   test("uniqHll: estimate within HLL error bounds of exact distinct") {

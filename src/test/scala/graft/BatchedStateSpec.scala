@@ -9,8 +9,7 @@ import graft.streaming.BatchedState
   * overwrite-idempotent appends, replay-deterministic `read(before)`,
   * crash-safe compaction, age eviction, partition-pruned reads.
   */
-class BatchedStateSpec extends AnyFunSuite {
-  lazy val spark = GraftSession.local(4)
+class BatchedStateSpec extends AnyFunSuite with LocalSpark {
   import spark.implicits._
 
   private def tmp(prefix: String): String =

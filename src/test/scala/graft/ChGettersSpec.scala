@@ -17,9 +17,8 @@ import graft.types.{ChKind, ChType, ChTypeInfo}
   * `-inf/+inf` array literals are dropped (fastjson extension, not JSON),
   * and Object('json') stringification orders keys canonically.
   */
-class ChGettersSpec extends AnyFunSuite {
+class ChGettersSpec extends AnyFunSuite with LocalSpark {
 
-  lazy val spark = GraftSession.local(4)
   import spark.implicits._
 
   // jsonSample minus the -inf/+inf literals (invalid strict JSON)

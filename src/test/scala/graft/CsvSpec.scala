@@ -12,8 +12,7 @@ import graft.types.ChType
   * parser_test.go:174-208): text cells parse with tolerant numeric
   * semantics, embedded JSON cells reuse the variant getters.
   */
-class CsvSpec extends AnyFunSuite {
-  lazy val spark = GraftSession.local(4)
+class CsvSpec extends AnyFunSuite with LocalSpark {
   import spark.implicits._
 
   val csvFormat = Seq("bool_true", "num_int", "num_float", "str", "str_date_1",

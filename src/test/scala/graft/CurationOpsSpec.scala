@@ -9,8 +9,7 @@ import graft.operators.{Dedup, Joins, Sampling, TextAnalysis}
   * (connected components), deterministic sampling/splits, vocabulary
   * stats, token-budget chunking and the as-of join.
   */
-class CurationOpsSpec extends AnyFunSuite {
-  lazy val spark = GraftSession.local(8)
+class CurationOpsSpec extends AnyFunSuite with LocalSpark {
   import spark.implicits._
 
   // ---- connected components -------------------------------------------

@@ -122,8 +122,7 @@ object FakeJdbcSpec {
     props = Map("async_insert" -> "1", "wait_for_async_insert" -> "0"))
 }
 
-class FakeJdbcSpec extends AnyFunSuite {
-  lazy val spark = GraftSession.local(4)
+class FakeJdbcSpec extends AnyFunSuite with LocalSpark {
   FakeJdbc.Driver // force registration
   private def mkWriter = FakeJdbcSpec.mkWriter
 

@@ -12,8 +12,7 @@ import graft.operators.{Dedup, Similarity}
   * referenced constant matrices); any value divergence is a correctness
   * bug that the per-corpus oracle might miss on tamer data.
   */
-class FusedParitySpec extends AnyFunSuite {
-  lazy val spark = GraftSession.local(4)
+class FusedParitySpec extends AnyFunSuite with LocalSpark {
   import spark.implicits._
 
   private val rnd = new scala.util.Random(42)

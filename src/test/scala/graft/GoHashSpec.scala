@@ -8,8 +8,7 @@ import graft.functions.{GoHash, PortableHash}
 /** XXH64(seed=0) parity — the reference's shard hash is cespare/xxhash
   * Sum64 == standard XXH64 seed 0 (`/root/reference/task/sharding.go:108`).
   */
-class GoHashSpec extends AnyFunSuite {
-  lazy val spark = GraftSession.local(2)
+class GoHashSpec extends AnyFunSuite with LocalSpark {
   import spark.implicits._
 
   test("known XXH64 vectors, seed 0") {

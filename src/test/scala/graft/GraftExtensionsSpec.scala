@@ -9,8 +9,7 @@ import graft.operators.{Sampling, Similarity, TextAnalysis}
   * from `spark.sql`, and each computes exactly what its Column-API twin
   * computes (registration adds names, never a second code path).
   */
-class GraftExtensionsSpec extends AnyFunSuite {
-  lazy val spark = GraftSession.local(4)
+class GraftExtensionsSpec extends AnyFunSuite with LocalSpark {
 
   private lazy val docsView: Unit =
     Tables(spark, "/root/testdata/sf0.001").documents

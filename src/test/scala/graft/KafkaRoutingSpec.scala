@@ -12,8 +12,7 @@ import graft.streaming.Pipeline
   * with a Kafka-shaped `headers` column (task/consumer.go:233-254,
   * input/kafka_franz.go:125-187).
   */
-class KafkaRoutingSpec extends AnyFunSuite {
-  lazy val spark = GraftSession.local(2)
+class KafkaRoutingSpec extends AnyFunSuite with LocalSpark {
 
   test("source options map brokers + TLS/SASL onto spark-kafka options (S1)") {
     val plain = KafkaConfig(brokers = "b1:9092,b2:9092")

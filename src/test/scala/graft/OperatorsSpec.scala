@@ -10,8 +10,7 @@ import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
   * found, approximate methods recall what the exact methods find, stubs
   * are deterministic.
   */
-class OperatorsSpec extends AnyFunSuite {
-  lazy val spark = GraftSession.local(8)
+class OperatorsSpec extends AnyFunSuite with LocalSpark {
   import spark.implicits._
 
   private val sf = "/root/testdata/sf0.001"

@@ -20,9 +20,8 @@ import graft.types.{ChKind, ChType}
   * (`newkey00 Bool .. newkey04 DateTime64(3)`, arrays/objects skipped)
   * asserted like go.test.sh:58-76.
   */
-class PipelineSpec extends AnyFunSuite {
+class PipelineSpec extends AnyFunSuite with LocalSpark {
 
-  lazy val spark = GraftSession.local(8)
   import spark.implicits._
 
   private def cohortMessages: IndexedSeq[String] = {

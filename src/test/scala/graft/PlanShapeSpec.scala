@@ -10,8 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * whole-stage codegen on the ingest path. Catching a regression here is
   * catching a 10x at scale.
   */
-class PlanShapeSpec extends AnyFunSuite {
-  lazy val spark = GraftSession.local(4)
+class PlanShapeSpec extends AnyFunSuite with LocalSpark {
   private val sf = "/root/testdata/sf0.001"
 
   private def plan(df: DataFrame): String =
@@ -773,8 +772,7 @@ class PlanShapeSpec extends AnyFunSuite {
   test("pageRank loop invariants are materialized: extra iterations add " +
       "only round-sized stages, never the edge-dedup/degree/node stages") {
     import graft.operators.Graph
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-      SparkListenerStageCompleted}
+    import graft.telemetry.StageTelemetry
     val l = Tables(spark, sf).lineitem
     val edges = l.select((col("l_orderkey") % 500).as("src"),
       (col("l_partkey") % 500).as("dst"))
@@ -783,35 +781,17 @@ class PlanShapeSpec extends AnyFunSuite {
     // they actually complete; the bus is drained deterministically
     // instead of slept on (a loaded machine drains late → undercount)
     val group = "pr-invariants"
-    val groupStages = java.util.concurrent.ConcurrentHashMap
-      .newKeySet[Int]()
-    val completed = new java.util.concurrent.atomic.AtomicInteger
-    val lsnr = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        if (j.properties != null &&
-          group == j.properties.getProperty("spark.jobGroup.id"))
-          j.stageInfos.foreach(si => { groupStages.add(si.stageId); () })
-        ()
-      }
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        if (groupStages.contains(s.stageInfo.stageId))
-          completed.incrementAndGet()
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(lsnr)
+    val tel = StageTelemetry.attach(spark.sparkContext)
     def stagesFor(iters: Int): Int = {
-      groupStages.clear()
-      completed.set(0)
+      tel.reset()
       spark.sparkContext.setJobGroup(group, "pageRank invariant count")
       // force the distributed path: the invariant-materialization claim
       // is about the big-graph loop, which a toy edge count would skip
       try Graph.pageRank(edges, iterations = iters,
         pinEdgeThreshold = 0L).count()
       finally spark.sparkContext.clearJobGroup()
-      org.apache.spark.GraftTestSparkAccess
-        .drainListenerBus(spark.sparkContext)
-      completed.get()
+      tel.drain()
+      tel.stagesInGroup(group).count(_.completed)
     }
     try {
       val s1 = stagesFor(1)
@@ -827,7 +807,7 @@ class PlanShapeSpec extends AnyFunSuite {
         s"per-iteration stage cost regrew ($marginal stages/iter, " +
           s"$s1 stages at 1 iter, $s3 at 3): loop invariants are being " +
           "recomputed inside the iteration lineage again")
-    } finally spark.sparkContext.removeSparkListener(lsnr)
+    } finally tel.detach()
   }
 
   test("classifier scoring: bounded model broadcasts; one doc-key shuffle " +

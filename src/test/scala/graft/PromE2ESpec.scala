@@ -19,8 +19,7 @@ import graft.types.ChType
   * across many micro-batches (the reference asserts metric <= 10000,
   * series == 1000).
   */
-class PromE2ESpec extends AnyFunSuite {
-  lazy val spark = GraftSession.local(8)
+class PromE2ESpec extends AnyFunSuite with LocalSpark {
   import spark.implicits._
 
   private val dims = Seq(

@@ -25,8 +25,7 @@ import graft.queries.Registry
   * golden line to add — then validate it end-to-end with
   * `python3 scripts/check_types.py <sfDir> <verifyOut>`.
   */
-class QuerySchemaSpec extends AnyFunSuite {
-  lazy val spark = GraftSession.local(4)
+class QuerySchemaSpec extends AnyFunSuite with LocalSpark {
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -40,7 +40,7 @@ import graft.types.ChType
   * `go.test.sh:27-76`; the Prometheus two-table flow and its
   * metric<=N / series==1000 asserts mirror `go.metrictest.sh:42-63`.
   */
-class RealEndpointsSpec extends AnyFunSuite {
+class RealEndpointsSpec extends AnyFunSuite with LocalSpark {
 
   private val kafkaBootstrap = sys.env.get("SPARK_GRAFT_KAFKA_BOOTSTRAP")
   private val chUrl  = sys.env.get("SPARK_GRAFT_CH_URL")
@@ -54,7 +54,6 @@ class RealEndpointsSpec extends AnyFunSuite {
     "real-endpoint E2E: set SPARK_GRAFT_KAFKA_BOOTSTRAP and " +
       "SPARK_GRAFT_CH_URL (see RealEndpointsSpec scaladoc)")
 
-  lazy val spark: SparkSession = GraftSession.local(8)
   import spark.implicits._
 
   // unique per run: we cannot delete topics without an admin client, so

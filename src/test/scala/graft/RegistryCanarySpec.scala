@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Queries run CONCURRENTLY (they are independent Spark jobs) to keep the
   * suite's wall time bounded.
   */
-class RegistryCanarySpec extends AnyFunSuite {
+class RegistryCanarySpec extends AnyFunSuite with LocalSpark {
   private val sf = "/root/testdata/sf0.001"
 
   private lazy val fixture: Map[String, (Long, String)] = {
@@ -47,7 +47,6 @@ class RegistryCanarySpec extends AnyFunSuite {
   }
 
   test("no snapshotted query's output schema or row count drifted") {
-    val spark = GraftSession.local(8)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)

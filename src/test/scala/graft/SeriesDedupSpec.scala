@@ -10,8 +10,7 @@ import graft.streaming.SeriesDedup.{SeriesRow, WriteQuota}
   * output/clickhouse.go:163-228): first sight of a sid writes, repeats
   * don't, a changed mid rewrites (quota-gated).
   */
-class SeriesDedupSpec extends AnyFunSuite {
-  lazy val spark = GraftSession.local(4)
+class SeriesDedupSpec extends AnyFunSuite with LocalSpark {
 
   test("streaming dedup: new sids pass, repeats drop, mid change rewrites") {
     import spark.implicits._

@@ -7,8 +7,7 @@ import graft.shard.Sharding
 import graft.types.ChType
 
 /** Shard policy parity (SURVEY §2.10; reference task/sharding.go). */
-class ShardingSpec extends AnyFunSuite {
-  lazy val spark = GraftSession.local(4)
+class ShardingSpec extends AnyFunSuite with LocalSpark {
   import spark.implicits._
 
   test("stripe policy (X1): (uint64(v)/stripe) % shards with wrap") {

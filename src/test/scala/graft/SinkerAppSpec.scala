@@ -17,9 +17,8 @@ import graft.types.ChType
   * refresh, and a query restart from the checkpoint; rows keep flowing
   * under the widened schema (reference task/task.go:198-219).
   */
-class SinkerAppSpec extends AnyFunSuite {
+class SinkerAppSpec extends AnyFunSuite with LocalSpark {
 
-  lazy val spark = GraftSession.local(8)
   import spark.implicits._
 
   private def waitFor(timeoutMs: Long)(cond: => Boolean): Boolean = {

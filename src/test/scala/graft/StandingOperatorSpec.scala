@@ -13,10 +13,9 @@ import graft.streaming._
   * with auto-compaction over a stream writes exactly the per-batch
   * output an `admit` loop on a fresh state returns.
   */
-class StandingOperatorSpec extends AnyFunSuite {
+class StandingOperatorSpec extends AnyFunSuite with LocalSpark {
   import StandingOperatorSpec._
 
-  lazy val spark: SparkSession = GraftSession.local(4)
 
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString

@@ -18,8 +18,7 @@ import graft.operators.{Dedup, TextAnalysis}
   * fullwidth, ß and compatibility ligatures agree without help and are
   * pinned too.
   */
-class UnicodeParitySpec extends AnyFunSuite {
-  lazy val spark = GraftSession.local(2)
+class UnicodeParitySpec extends AnyFunSuite with LocalSpark {
 
   // (input, DuckDB canonical form, DuckDB md5 of the canonical form)
   private val golden = Seq(

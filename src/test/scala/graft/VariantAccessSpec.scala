@@ -33,9 +33,8 @@ import graft.types.ChKind
   * the member's own value text, parsed (and, for strings, decoded by
   * Jackson).
   */
-class VariantAccessSpec extends AnyFunSuite {
+class VariantAccessSpec extends AnyFunSuite with LocalSpark {
 
-  lazy val spark = GraftSession.local(4)
   import spark.implicits._
 
   // ---- JSON text generation -------------------------------------------
