@@ -125,7 +125,7 @@ object BenchScale100 {
       // twin shift (base doc_id < 1e6), so ids never collide — GUARDED:
       // a larger base sf would otherwise silently alias docs across
       // replicas and break the unique-tag scaling property
-      val maxDoc = d.agg(max(col("doc_id")).cast("long")).head.getLong(0)
+      val maxDoc = d.agg(max(col("doc_id")).cast("long")).head().getLong(0)
       require(maxDoc < 10000000L,
         s"replica shift 1e7 would alias doc ids (max doc_id $maxDoc)")
       val rep = spark.range(reps.toLong).select(col("id").as("rep"))
@@ -169,7 +169,7 @@ object BenchScale100 {
       // break the fresh-user-population-per-replica scaling property —
       // guard loudly instead
       val mx = ev.agg(max(col("event_id")).cast("long"),
-        max(col("user_id")).cast("long")).head
+        max(col("user_id")).cast("long")).head()
       require(mx.getLong(0) < 100000000L && mx.getLong(1) < 10000000L,
         s"replica shifts would alias ids (max event_id ${mx.getLong(0)}, " +
           s"max user_id ${mx.getLong(1)})")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.{GoHash, PortableHash}
+import graft.functions.PortableHash
 
 /** Deduplication operators for training-data pipelines, each designed
   * around its shuffle shape at 100 TB:
@@ -680,8 +680,6 @@ object Dedup {
     */
   def connectedComponents(pairs: DataFrame, aCol: String = "a",
       bCol: String = "b", maxIter: Int = 25): DataFrame = {
-    val spark = pairs.sparkSession
-
     // canonical edge direction: u > v (larger node points to smaller)
     def canon(e: DataFrame): DataFrame =
       e.select(greatest(col("u"), col("v")).as("u"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -179,7 +179,7 @@ object Joins {
     // evaluated BEFORE any column is nulled so validTo itself can be in
     // rightCols without ordering hazards
     val live = col(validToCol).isNull || (col(tsCol) < col(validToCol))
-    matched.select(left.columns.map(col) ++
+    matched.select(left.columns.toIndexedSeq.map(col) ++
       rightCols.map(c => when(live, col(c)).as(c)): _*)
   }
 

@@ -34,14 +34,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** The typed envelope for a multimodal asset. */
-  val assetSchema: StructType = StructType(Seq(
-    StructField("asset_id", LongType, nullable = false),
-    StructField("modality", StringType, nullable = false),   // image|audio|video
-    StructField("mime", StringType, nullable = false),
-    StructField("content", BinaryType, nullable = false),
-    StructField("meta", MapType(StringType, StringType), nullable = true)))
-
   /** Deterministic REAL-binary fixture: payload bytes seeded by asset id
     * (`byte_j = (id*31 + j*7) mod 256`, built hex-side and `unhex`ed so
     * the byte stream is exact — never a UTF-8 re-encode of text), with

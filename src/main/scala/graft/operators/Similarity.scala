@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Encoder}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -565,8 +565,6 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       lutChunk: Int = 100, pinCodes: Boolean = true): DataFrame = {
     require(lutChunk >= 1, "lutChunk must be positive")
-    val spark = corpus.sparkSession
-    import spark.implicits._
     val vecd = col(vecCol).cast(ArrayType(DoubleType))
     // per-query ADC lookup tables, built driver-side from the bounded
     // query set. The id is cast to long BEFORE the collect so an int id
@@ -741,7 +739,7 @@ object Similarity {
       // [[ivfTopKFromIndex]]/[[lshTopK]] paths there.
       import org.apache.spark.sql.Row
       val withIdx = spark.createDataFrame(
-        qBase.rdd.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ i) },
+        qBase.rdd.zipWithIndex().map { case (r, i) => Row.fromSeq(r.toSeq :+ i) },
         qBase.schema.add("__idx", LongType))
       val nChunks = ((nq + maxDriverQueries - 1) / maxDriverQueries).toInt
       (0 until nChunks).map { c =>

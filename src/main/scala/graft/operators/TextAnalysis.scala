@@ -265,10 +265,6 @@ object TextAnalysis {
     "fr" -> Seq("le", "la", "les", "est", "et"),
     "zh" -> Seq("的", "是", "了", "在", "我"))
 
-  def langScore(text: Column, lang: String): Column =
-    stopwordHits(graft.functions.PortableCase.lowerPortable(text),
-      langMarkers(lang))
-
   /** Fused single-pass form: one lowercase + one padded copy per doc,
     * all 25 marker scans over it ([[graft.functions.WordHits.bestLang]]).
     * Tie/zero semantics identical to the compositional argmax
@@ -1404,7 +1400,4 @@ object TextAnalysis {
     */
   def fingerprint64(text: Column): Column =
     graft.functions.GoHash.goXxHash64(canonStr(text))
-
-  /** NFC twin of [[fingerprint64]] (see [[fingerprintNfc]]). */
-  def fingerprint64Nfc(text: Column): Column = fingerprint64(nfc(text))
 }

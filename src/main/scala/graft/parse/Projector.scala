@@ -41,8 +41,7 @@ object Projector {
     * JSON object merged over every message (P6, overwrite semantics).
     */
   def projectJson(df: DataFrame, dims: Seq[Dim], opts: ParseOpts,
-      fields: Map[String, String] = Map.empty,
-      dropCorrupt: Boolean = true): DataFrame = {
+      fields: Map[String, String] = Map.empty): DataFrame = {
     // Once(..) pins the parse to a single evaluation per row — without it
     // the corrupt filter below is predicate-pushed into the scan and the
     // message parses twice (see graft.functions.Once). A pre-parsed
@@ -53,8 +52,7 @@ object Projector {
       if (df.columns.contains("__msg__")) df
       else df.withColumn("__msg__", msg)
     // P5: unparseable JSON -> dropped (counted by the caller via metrics)
-    val parsed =
-      if (dropCorrupt) parsed0.filter(col("__msg__").isNotNull) else parsed0
+    val parsed = parsed0.filter(col("__msg__").isNotNull)
 
     // Stage 1: navigate the message ONCE per dim into a variant column.
     // Each getter inspects its field several times (type tag + casts);
@@ -78,35 +76,6 @@ object Projector {
       else valueColumn(col(s"__f_${d.name}"), d, opts).as(d.name)
     }
     withNotNullFilter(stage1.select(cols: _*), dims)
-  }
-
-  /** P3 — gjson-style PRUNED projection: `from_json` with a schema of
-    * ONLY the projected source keys, each typed Variant (type-preserving),
-    * so the Jackson parser skips everything else. Wins when the message
-    * is wide and the projection is narrow — the same trade the reference
-    * makes choosing gjson over fastjson (parser/gjson.go:42-58). Like
-    * gjson, parsing never "fails" a message: corrupt input yields a null
-    * struct -> all defaults, and there is no P5 drop filter.
-    */
-  def projectJsonLazy(df: DataFrame, dims: Seq[Dim], opts: ParseOpts,
-      fields: Map[String, String] = Map.empty): DataFrame = {
-    val valueDims = dims.filterNot(d => kafkaMeta.contains(d.name))
-    val pruned = StructType(
-      valueDims.map(_.source).distinct.map(s => StructField(s, VariantType)))
-    val stage1 = df.select(df.columns.map(col).toSeq :+
-      from_json(col("value"), pruned).as("__m__"): _*)
-    val stage2 = stage1.select(stage1.columns.map(col).toSeq ++ valueDims.map { d =>
-      (fields.get(d.source) match {
-        case Some(rawJson) => ChGetters.parsed(lit(rawJson))
-        case None          => col("__m__").getField(d.source)
-      }).as(s"__f_${d.name}")
-    }: _*)
-    val cols = dims.map { d =>
-      if (kafkaMeta.contains(d.name))
-        metaColumn(stage2, d).getOrElse(lit(null).cast(d.ti.sparkType).as(d.name))
-      else valueColumn(col(s"__f_${d.name}"), d, opts).as(d.name)
-    }
-    withNotNullFilter(stage2.select(cols: _*), dims)
   }
 
   /** Project a CSV-message DataFrame given the csvFormat column order

@@ -2,11 +2,17 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Union of all query groups exposed through SparkEntry. */
+/** Every query exposed through SparkEntry, one family object per file. */
 object Registry {
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ParityQueries.queries ++ ExtensionQueries.queries
+  val all: Seq[Query] =
+    IngestQueries.queries ++ AggregateQueries.queries ++
+      EventQueries.queries ++ DedupQueries.queries ++ TextQueries.queries ++
+      StreamReplayQueries.queries ++ SimilarityQueries.queries ++
+      SamplingQueries.queries ++ MultimodalQueries.queries
 
-  def oracle: Map[String, String] =
-    ParityQueries.oracle ++ ExtensionQueries.oracle
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    all.map(q => q.name -> q.run).toMap
+
+  lazy val oracle: Map[String, String] =
+    all.map(q => q.name -> q.oracle).toMap
 }

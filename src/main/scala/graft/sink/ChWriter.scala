@@ -1,10 +1,6 @@
 package graft.sink
 
-
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
-
-import graft.shard.Sharding
 
 /** Per-shard batch writing with the reference's delivery semantics
   * (SURVEY S4-S7, X4-X5):

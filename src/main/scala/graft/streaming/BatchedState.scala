@@ -1,6 +1,9 @@
 package graft.streaming
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.util.ShutdownHookManager
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -137,6 +140,7 @@ final class BatchedState(spark: SparkSession, dir: String,
       s"owner=${BatchedState.processOwnerId}\nts=${System.currentTimeMillis()}\n"
         .getBytes("UTF-8"))
     finally out.close()
+    BatchedState.stamped.put(dir, this)
   }
 
   /** Refuse when another live process holds the lease; otherwise stamp
@@ -407,6 +411,24 @@ object BatchedState {
   val processOwnerId: String =
     s"pid${ProcessHandle.current().pid()}-" +
       java.util.UUID.randomUUID().toString.take(8)
+
+  /** Every state this process stamped a lease on, by dir. */
+  private val stamped = new ConcurrentHashMap[String, BatchedState]()
+
+  /** Release every lease this process still holds ([[releaseLease]]
+    * leaves a lease another owner took over untouched). Runs when the
+    * JVM exits normally, before Hadoop closes its cached FileSystems, so
+    * a finished run hands its state dirs straight to the next process
+    * instead of blocking it for [[DefaultLeaseTimeoutMs]].
+    */
+  private[graft] def releaseStampedLeases(): Unit =
+    stamped.values().forEach { st =>
+      scala.util.Try(st.releaseLease())
+      ()
+    }
+
+  ShutdownHookManager.get().addShutdownHook(() => releaseStampedLeases(),
+    FileSystem.SHUTDOWN_HOOK_PRIORITY + 1)
 
   private def fsOf(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)

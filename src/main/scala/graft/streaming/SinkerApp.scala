@@ -2,15 +2,14 @@ package graft.streaming
 
 import java.util.concurrent.ConcurrentHashMap
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.config.{ConfigReload, KafkaConfig, TaskConfig}
+import graft.config.{ConfigReload, TaskConfig}
+import graft.dynamic.SchemaEvolution
+import graft.dynamic.SchemaEvolution.NewKeyPolicy
 import graft.parse.Projector.Dim
-import graft.sink.ChSql
-import graft.types.{ChKind, ChType, ChTypeInfo}
+import graft.types.{ChKind, ChTypeInfo}
 
 /** The driver loop (SURVEY §3.2-§3.3): owns per-task streaming queries,
   * wires schema introspection -> projection dims, and runs the
@@ -87,8 +86,12 @@ final class SinkerApp(
     */
   private def onNewKeys(task: TaskConfig, keys: Seq[(String, ChKind)]): Unit = {
     val dims = schemas.get(task.name)
-    val ddl = SchemaEvolutionDdl.statements(task, dims.size, keys)
-    ddl.foreach(execDdl)
+    val (db, tbl) = task.tableName.split('.') match {
+      case Array(d, t) => (d, t)
+      case Array(t)    => ("default", t)
+    }
+    SchemaEvolution.changeSchemaStatements(db, tbl, dims.size, keys,
+      NewKeyPolicy()).foreach(execDdl)
     val newDims = dims ++ keys.sortBy(_._1).map { case (k, kind) =>
       Dim(k, ChTypeInfo(kind, nullable = true,
         dateTime64Precision = if (kind == ChKind.DateTime) 3 else 0))
@@ -174,17 +177,5 @@ final class SinkerApp(
       byName.get(n).foreach(t => startTask(t, dimsFor(t)))
     }
     plan
-  }
-}
-
-/** DDL for schema evolution, shaped by the task config. */
-object SchemaEvolutionDdl {
-  def statements(task: TaskConfig, currentDims: Int,
-      keys: Seq[(String, ChKind)]): Seq[String] = {
-    val Array(db, tbl) = (task.tableName.split('.') match {
-      case Array(d, t) => Array(d, t)
-      case Array(t)    => Array("default", t)
-    })
-    ChSql.addColumnsStatements(db, tbl, keys)
   }
 }

@@ -102,6 +102,28 @@ trait StandingOperator extends Serializable {
     admitBatch(batch, batchId)
   }
 
+  /** Replay `batches` in order: admit batch k as id k (k = 0..n-1), tag
+    * its output with a `batch` column, fold the state after batch 0 (so
+    * later batches read it through a compaction), and union the outputs.
+    * Each admit runs under the job description `<operator> admit k`, so a
+    * job table attributes every job to its admit.
+    */
+  final def replay(batches: Seq[DataFrame]): DataFrame = {
+    val sc = spark.sparkContext
+    val prior = sc.getLocalProperty("spark.job.description")
+    val name = getClass.getSimpleName
+    try batches.zipWithIndex.map { case (batch, k) =>
+      sc.setJobDescription(s"$name admit $k")
+      val out = admit(batch, k.toLong).withColumn("batch", lit(k))
+      if (k == 0) {
+        sc.setJobDescription(s"$name compact 0")
+        compactStates(Long.MinValue, 0L)
+      }
+      out
+    }.reduce(_ unionByName _)
+    finally sc.setJobDescription(prior)
+  }
+
   /** Wire a streaming source into the standing operator: each
     * micro-batch is admitted and its output lands in `outDir/batch=<id>`
     * with overwrite semantics — replays rewrite the same dir, so

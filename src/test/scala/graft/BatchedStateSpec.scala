@@ -353,6 +353,26 @@ class BatchedStateSpec extends AnyFunSuite with LocalSpark {
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_lease")))
   }
 
+  test("writer lease: the exit hook releases this owner's leases, never another's") {
+    val ours = tmp("bs_lease_exit_ours")
+    val theirs = tmp("bs_lease_exit_theirs")
+    val a = new BatchedState(spark, ours)
+    val b = new BatchedState(spark, theirs)
+    a.seed(Seq(1L).toDF("id"))
+    b.seed(Seq(2L).toDF("id"))
+    // another owner takes over `theirs` after this process stamped it
+    forgeLease(theirs, owner = "pid99999-other", ts = System.currentTimeMillis())
+    BatchedState.releaseStampedLeases()
+    val conf = spark.sparkContext.hadoopConfiguration
+    def lease(dir: String) = {
+      val p = new org.apache.hadoop.fs.Path(s"$dir/_lease")
+      p.getFileSystem(conf).exists(p)
+    }
+    assert(!lease(ours), "this owner's lease survived the exit hook")
+    assert(lease(theirs), "the exit hook removed another owner's lease")
+    assert(rows(a) === Set((1L, -1L)))
+  }
+
   test("stray non-numeric dirs: state names refuse loudly, hidden names are ignored") {
     val dir = tmp("bs_stray")
     val st = new BatchedState(spark, dir)

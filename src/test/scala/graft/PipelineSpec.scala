@@ -206,6 +206,20 @@ class PipelineSpec extends AnyFunSuite with LocalSpark {
       referedNullable = Set("b"), excluded = Set("mat"))
     assert(dims.map(_._1) === Seq("a", "b"))
     assert(!dims(1)._2.nullable) // refered-nullable override
+    // S12: the Distributed tables over a local table, and the sharding key
+    assert(ChSql.distributedTablesQuery("db", "tbl", "c1") ===
+      """SELECT database, name FROM system.tables WHERE engine = 'Distributed' """ +
+      """AND match(engine_full, 'Distributed\\(\\s*\'c1\'\\s*,\\s*\'db\'\\s*,\\s*\'tbl\'.*\\)')""")
+    assert(ChSql.addShardingKeyStatement("db", "tbl") ===
+      "ALTER TABLE `db`.`tbl` ADD COLUMN IF NOT EXISTS `__shardingkey` Int64")
+    assert(ChSql.sortingKeysQuery("db", "tbl") ===
+      "SELECT name FROM system.columns WHERE database = 'db' AND table = 'tbl' " +
+      "AND is_in_sorting_key = 1 ORDER BY position")
+    // D4: the active-series count behind the series reload
+    assert(ChSql.countSeriesQuery("db", "series", "metric", 3600L) ===
+      "SELECT count() FROM (SELECT DISTINCT __series_id__ FROM `db`.`series` " +
+      "WHERE __series_id__ GLOBAL IN (SELECT DISTINCT __series_id__ FROM " +
+      "`db`.`metric` WHERE timestamp >= addSeconds(now(), -3600)))")
   }
 
   test("the writer's written/bad/retry counts reach /metrics") {

@@ -7,36 +7,27 @@ import graft.queries.Registry
 /** Registry consistency: the driver's correctness gate only checks
   * queries that ALSO have an oracle entry — a query silently missing its
   * oracle gets the weaker rows-only check, and an oracle without a query
-  * checks nothing. Pin the two maps to each other so drift fails CI
-  * loudly instead of quietly weakening the gate.
+  * checks nothing. `Query` takes its oracle as a constructor argument;
+  * pin the two maps SparkEntry serves to each other as well, so drift
+  * fails CI loudly instead of quietly weakening the gate.
   */
 class RegistrySpec extends AnyFunSuite {
-
-  // Queries whose exact result is hash-dependent and thus not
-  // SQL-expressible (the driver applies its weaker rows-only check).
-  // Every entry must carry a query-site comment justifying the
-  // exemption and unit tests pinning the non-oracle-checkable
-  // properties. Keep this list SHORT — the full-oracle rule is the gate.
-  // empty since r12: the last exemption (dedup_substring_winnow) grew a
-  // full DuckDB replay oracle — every registry query now has one
-  private val rowsOnlyByDesign = Set.empty[String]
 
   test("every query has an oracle and every oracle has a query") {
     val q = Registry.queries.keySet
     val o = Registry.oracle.keySet
-    assert((q -- o -- rowsOnlyByDesign).isEmpty,
-      s"queries missing oracles: ${(q -- o -- rowsOnlyByDesign).toSeq.sorted}")
+    assert((q -- o).isEmpty, s"queries missing oracles: ${(q -- o).toSeq.sorted}")
     assert((o -- q).isEmpty, s"orphaned oracles: ${(o -- q).toSeq.sorted}")
-    assert(rowsOnlyByDesign.subsetOf(q),
-      s"stale rows-only exemptions: ${(rowsOnlyByDesign -- q).toSeq.sorted}")
-    assert((rowsOnlyByDesign intersect o).isEmpty,
-      "a rows-only exemption grew an oracle — remove it from the list")
   }
 
   test("query names are unique across the groups (no silent overwrite)") {
-    import graft.queries.{ExtensionQueries, ParityQueries}
-    val dup = ParityQueries.queries.keySet intersect ExtensionQueries.queries.keySet
+    // every entry of every family file: a repeated name would otherwise
+    // vanish into the name-keyed maps SparkEntry serves
+    val dup = Registry.all.groupBy(_.name).collect {
+      case (name, qs) if qs.size > 1 => name
+    }
     assert(dup.isEmpty, s"duplicated query names: ${dup.toSeq.sorted}")
+    assert(Registry.queries.size === Registry.all.size)
   }
 
   test("bench 10x headline names all resolve to registered queries") {

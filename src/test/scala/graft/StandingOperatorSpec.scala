@@ -9,9 +9,10 @@ import graft.streaming._
 
 /** The standing-operator contract, table-driven over all 16 families:
   * a dir seeded under one different parameter refuses the first
-  * admission, a batch id below the state head refuses, and `attach`
-  * with auto-compaction over a stream writes exactly the per-batch
-  * output an `admit` loop on a fresh state returns.
+  * admission, a batch id below the state head refuses, `attach` with
+  * auto-compaction over a stream writes exactly the per-batch output an
+  * `admit` loop on a fresh state returns, and `replay` returns what the
+  * admit loop with a compaction after batch 0 returns.
   */
 class StandingOperatorSpec extends AnyFunSuite with LocalSpark {
   import StandingOperatorSpec._
@@ -73,6 +74,29 @@ class StandingOperatorSpec extends AnyFunSuite with LocalSpark {
       }
     }
   }
+
+  families.filter(_.standing).foreach { f =>
+    test(s"${f.name}: replay equals the admit loop compacting after batch 0") {
+      val loop = f.make(spark, tmp(s"so_rloop_${f.name}"), false)
+      loop.seed(f.df(spark, f.seedRows))
+      val expected = f.batches.indices.map { k =>
+        val out = loop.admit(f.df(spark, f.batches(k)), k.toLong)
+          .withColumn("batch", lit(k))
+        if (k == 0) loop.op.get match {
+          case ev: EvictingOperator => ev.compact(upTo = 0L)
+          case kf: KeyedFold => kf.compact(upTo = 0L)
+          case other => fail(s"no compaction for ${other.getClass}")
+        }
+        out
+      }.reduce(_ unionByName _)
+
+      val replayed = f.make(spark, tmp(s"so_replay_${f.name}"), false)
+      replayed.seed(f.df(spark, f.seedRows))
+      val got = replayed.op.get.replay(f.batches.map(f.df(spark, _)))
+      assert(got.count() > 0, "every batch output is empty")
+      assert(canon(got.collect()) === canon(expected.collect()))
+    }
+  }
 }
 
 object StandingOperatorSpec {
@@ -83,7 +107,8 @@ object StandingOperatorSpec {
   final case class Handle(seed: DataFrame => Unit,
       admit: (DataFrame, Long) => DataFrame,
       attach: (DataFrame, String, String) => DataStreamWriter[Row],
-      write: (DataFrame, Long) => Unit)
+      write: (DataFrame, Long) => Unit,
+      op: Option[StandingOperator] = None)
 
   /** `make(spark, dir, drifted)`: `drifted` changes ONE state parameter.
     * Inputs are JSON lines of `schema`, so the same rows feed a batch
@@ -91,7 +116,8 @@ object StandingOperatorSpec {
     */
   final case class Family(name: String, schema: String,
       seedRows: Seq[String], batches: Seq[Seq[String]],
-      make: (SparkSession, String, Boolean) => Handle) {
+      make: (SparkSession, String, Boolean) => Handle,
+      standing: Boolean = true) {
     def schemaOf: org.apache.spark.sql.types.StructType =
       org.apache.spark.sql.types.StructType.fromDDL(schema)
     def df(spark: SparkSession, rows: Seq[String]): DataFrame = {
@@ -100,11 +126,10 @@ object StandingOperatorSpec {
     }
   }
 
-  private def admitting(seed: DataFrame => Unit,
-      admit: (DataFrame, Long) => DataFrame,
-      attach: (DataFrame, String, String, Int) => DataStreamWriter[Row])
+  private def admitting(op: StandingOperator, seed: DataFrame => Unit)
       : Handle =
-    Handle(seed, admit, attach(_, _, _, 1), (df, id) => { admit(df, id); () })
+    Handle(seed, op.admit, op.attach(_, _, _, 1),
+      (df, id) => { op.admit(df, id); () }, Some(op))
 
   private def doc(id: Long, text: String) =
     s"""{"doc_id":$id,"text":"$text"}"""
@@ -146,13 +171,13 @@ object StandingOperatorSpec {
       Seq(doc(1, fox)), docBatches, (s, d, drift) => {
         val op = new StreamingDedup(s, d, "doc_id", "text",
           nBuckets = if (drift) 16 else 32)
-        admitting(op.seed, op.admit, op.attach)
+        admitting(op, op.seed)
       }),
     Family("StreamingSemanticDedup", "vec_id BIGINT, embedding ARRAY<DOUBLE>",
       vecSeed, vecBatches, (s, d, drift) => {
         val op = new StreamingSemanticDedup(s, d, "vec_id", "embedding",
           nCells = if (drift) 3 else 2, threshold = 0.9)
-        admitting(op.seed, op.admit, op.attach)
+        admitting(op, op.seed)
       }),
     Family("StreamingParagraphDedup", "doc_id BIGINT, text STRING",
       Seq(doc(1, "shared header\\nseed body one")),
@@ -163,21 +188,21 @@ object StandingOperatorSpec {
       (s, d, drift) => {
         val op = new StreamingParagraphDedup(s, d, "doc_id", "text",
           nBuckets = if (drift) 16 else 32)
-        admitting(op.seed, op.admit, op.attach)
+        admitting(op, op.seed)
       }),
     Family("StreamingDecontamination", "doc_id BIGINT, text STRING",
       Seq(doc(1, long1)), gateBatches, (s, d, drift) => {
         val op = new StreamingDecontamination(s, d, "doc_id", "text",
           nBuckets = if (drift) 16 else 32)
         Handle(op.seed(_, "text"), op.admit, op.attach(_, _, _, 1),
-          op.addBenchmark(_, "text", _))
+          op.addBenchmark(_, "text", _), Some(op))
       }),
     Family("StreamingEmbeddingDedup", "vec_id BIGINT, embedding ARRAY<DOUBLE>",
       vecSeed, vecBatches, (s, d, drift) => {
         val op = new StreamingEmbeddingDedup(s, d, "vec_id", "embedding",
           dims = 4, nBits = if (drift) 32 else 64, bandBits = 8,
           threshold = 0.9)
-        admitting(op.seed, op.admit, op.attach)
+        admitting(op, op.seed)
       }),
     Family("StreamingPhashDedup", "asset_id BIGINT, fp BIGINT",
       Seq("""{"asset_id":1,"fp":4660}""", """{"asset_id":2,"fp":65535}"""),
@@ -187,30 +212,30 @@ object StandingOperatorSpec {
       (s, d, drift) => {
         val op = new StreamingPhashDedup(s, d, "asset_id", "fp",
           maxHamming = if (drift) 2 else 3)
-        admitting(op.seed, op.admit, op.attach)
+        admitting(op, op.seed)
       }),
     Family("StreamingSubstringDedup", "doc_id BIGINT, text STRING",
       Seq(doc(1, fox)), docBatches, (s, d, drift) => {
         val op = new StreamingSubstringDedup(s, d, "doc_id", "text",
           k = if (drift) 12 else 10)
-        admitting(op.seed, op.admit, op.attach)
+        admitting(op, op.seed)
       }),
     Family("StreamingUniqHll", "k STRING, v BIGINT", Seq(kv("a", 1)),
       kvBatches, (s, d, drift) => {
         val op = new StreamingUniqHll(s, d, "k", "v",
           nBuckets = if (drift) 16 else 64)
-        admitting(op.seed, op.admit, op.attach)
+        admitting(op, op.seed)
       }),
     Family("StreamingUniqKmv", "k STRING, v BIGINT", Seq(kv("a", 1)),
       kvBatches, (s, d, drift) => {
         val op = new StreamingUniqKmv(s, d, "k", "v", k = if (drift) 32 else 64)
-        admitting(op.seed, op.admit, op.attach)
+        admitting(op, op.seed)
       }),
     Family("StreamingQuantile", "k STRING, v BIGINT", Seq(kv("a", 1)),
       kvBatches, (s, d, drift) => {
         val op = new StreamingQuantile(s, d, "k", "v", Seq(("p50", 1, 2)),
           sigBits = if (drift) 6 else 8)
-        admitting(op.seed, op.admit, op.attach)
+        admitting(op, op.seed)
       }),
     Family("StreamingReplacingMerge", "k BIGINT, ver BIGINT, v STRING",
       Seq("""{"k":1,"ver":1,"v":"a"}"""),
@@ -220,7 +245,7 @@ object StandingOperatorSpec {
       (s, d, drift) => {
         val op = new StreamingReplacingMerge(s, d, "k", "ver", Seq("v"),
           nBuckets = if (drift) 16 else 64)
-        admitting(op.seed, op.admit, op.attach)
+        admitting(op, op.seed)
       }),
     Family("StreamingSummingMerge", "k BIGINT, v BIGINT",
       Seq("""{"k":1,"v":10}"""),
@@ -230,7 +255,7 @@ object StandingOperatorSpec {
       (s, d, drift) => {
         val op = new StreamingSummingMerge(s, d, "k", Seq("v"),
           nBuckets = if (drift) 16 else 64)
-        admitting(op.seed, op.admit, op.attach)
+        admitting(op, op.seed)
       }),
     Family("StreamingRetention", "user_id BIGINT, event_type STRING",
       Seq("""{"user_id":1,"event_type":"visit"}"""),
@@ -243,7 +268,7 @@ object StandingOperatorSpec {
           "anchor" -> (col("event_type") === "signup"),
           "came_back" -> (col("event_type") === "visit")),
           nBuckets = if (drift) 16 else 64)
-        admitting(op.seed, op.admit, op.attach)
+        admitting(op, op.seed)
       }),
     Family("StreamingWindowFunnel",
       "user_id BIGINT, ts TIMESTAMP, event_type STRING",
@@ -256,7 +281,7 @@ object StandingOperatorSpec {
       (s, d, drift) => {
         val op = new StreamingWindowFunnel(s, d, "user_id", "ts",
           "event_type", Seq("a", "b", "c"), windowSec = if (drift) 5 else 10)
-        admitting(op.seed, op.admit, op.attach)
+        admitting(op, op.seed)
       }),
     Family("StreamingVersionedCollapsing",
       "k BIGINT, sign INT, ver BIGINT, p STRING",
@@ -269,7 +294,7 @@ object StandingOperatorSpec {
       (s, d, drift) => {
         val op = new StreamingVersionedCollapsing(s, d, "k", "sign", "ver",
           Seq("p"), nBuckets = if (drift) 16 else 64)
-        admitting(op.seed, op.admit, op.attach)
+        admitting(op, op.seed)
       }),
     // the curation composite gates through a decontamination state with
     // the default geometry; its drifted dir is seeded under n = 5
@@ -281,5 +306,5 @@ object StandingOperatorSpec {
         val gate = new StreamingDecontamination(s, d, "doc_id", "text", n = 5)
         Handle(if (drift) gate.seed(_, "text") else op.seed(_, "text"),
           op.curate, op.attach, op.addBenchmark(_, "text", _))
-      }))
+      }, standing = false))
 }
