@@ -19,8 +19,10 @@ than 10% slower are listed again at the end.
 It then lists what only one side has: rows of each tier, top-level
 fields, and the fields of the rows and of `ingest_isolated`. `shed` and
 `partial` are left out: Bench writes them only when a run sheds work or
-is cut, so they are run state, not artifact shape. The exit status is 1
-when a shape difference exists, else 0.
+is cut, so they are run state, not artifact shape. Last, it lists every
+row both sides hold, `ingest_isolated` included, whose output count
+(`rows`) differs. The exit status is 1 when a shape or row-count
+difference exists, else 0.
 """
 
 import argparse
@@ -85,12 +87,15 @@ def main():
     args = ap.parse_args()
     old, new = load(args.old), load(args.new)
 
-    slower, shape = [], []
+    slower, shape, counts = [], [], []
     one_sided("top-level field", old, new, shape)
     for tier, key, tier_ext, tier_io in TIERS:
         a, b = old.get(key) or {}, new.get(key) or {}
         one_sided(f"{tier} row", a, b, shape)
         both = sorted(set(a) & set(b))
+        counts += [f"{tier} {name}: rows {a[name].get('rows')} -> "
+                   f"{b[name].get('rows')}"
+                   for name in both if a[name].get("rows") != b[name].get("rows")]
         for side, x, y in (("OLD", a, b), ("NEW", b, a)):
             rows_by_field = {}
             for name in both:
@@ -122,8 +127,11 @@ def main():
         if logs:
             print(f"-- {tier} geomean speedup {math.exp(sum(logs) / len(logs)):.3f}"
                   f" over {len(logs)} rows")
-    one_sided("ingest_isolated field", old.get("ingest_isolated") or {},
-              new.get("ingest_isolated") or {}, shape)
+    iso_a, iso_b = old.get("ingest_isolated"), new.get("ingest_isolated")
+    one_sided("ingest_isolated field", iso_a or {}, iso_b or {}, shape)
+    if iso_a and iso_b and iso_a.get("rows") != iso_b.get("rows"):
+        counts.append(f"ingest_isolated: rows {iso_a.get('rows')} -> "
+                      f"{iso_b.get('rows')}")
 
     print(f"== rows more than {round((SLOWER - 1) * 100)}% slower: {len(slower)}")
     for tier, name, sa, sb in slower:
@@ -131,10 +139,13 @@ def main():
     print(f"== on one side only: {len(shape)}")
     for line in shape:
         print("  " + line)
+    print(f"== rows whose output count differs: {len(counts)}")
+    for line in counts:
+        print("  " + line)
     for side, doc in (("OLD", old), ("NEW", new)):
         if doc.get("errors"):
             print(f"  {side} errors: {sorted(doc['errors'])}")
-    sys.exit(1 if shape else 0)
+    sys.exit(1 if shape or counts else 0)
 
 
 if __name__ == "__main__":

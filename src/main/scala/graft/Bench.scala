@@ -1,12 +1,16 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.ChGetters.ParseOpts
 import graft.parse.Projector
 import graft.parse.Projector.Dim
-import graft.telemetry.{ExternalLoad, IoPressure, Measure, StageTelemetry}
+import graft.telemetry.{ExternalLoad, Measure, StageTelemetry}
 import graft.types.ChType
 
 /** The 10x-replicated second bench scale: generated once per base sf dir
@@ -439,213 +443,266 @@ object BenchScale100 {
   }
 }
 
-/** One 100x-tier artifact row: `best` and `tel` are the MIN run's
-  * (telemetry stays attributable to the recorded number), `runs` keeps
-  * every run visible so an outlier is self-explaining.
+/** The registry bench: one JSON artifact line with the 1x registry, the
+  * 10x headline rows, the 100x tier, the ingest headline and its
+  * isolated re-run. Every tier records [[Bench.Timed]] rows into one
+  * [[Bench.Record]], and [[Bench.line]] renders it.
   */
-final case class Row100(name: String, best: Measure.Sample,
-    tel: StageTelemetry.Totals, runs: Seq[Measure.Sample])
-
-
 object Bench {
+  /** Timed runs (min-of-N) per 1x and 10x row and per ingest measurement. */
+  val Runs: Int = 3
+  /** Timed runs per 100x row before the soft budget. */
+  val Runs100: Int = 2
+  /** Past the soft budget a 100x row keeps two runs if its first took at
+    * most this long.
+    */
+  val Cheap100Sec: Double = 30.0
+  /** External busy cores over which a run counts as contended ([[Rerun]]):
+    * the 100x tier's and the isolated ingest row's.
+    */
+  val Gate100: Double = 4.0
+  val GateIso: Double = 2.0
+
+  /** The wall budget (r20): 3000 s at 32 cores, scaled with the core
+    * count — the kill window is a FIXED wall while mandatory rows slow
+    * down as cores shrink (BENCH_r19_c8 hit rc 124 at 3573 s under a flat
+    * 3000) — and floored at 750 s so a 4-core run keeps its optional runs.
+    */
+  def budgetSec(cpus: Int): Double = math.max(750.0, 3000.0 * cpus / 32.0)
+
+  /** Timed runs of a 100x row planned at `planned` (r20 shed policy):
+    * all before the soft budget; past it, at most two for a row whose
+    * first run took at most [[Cheap100Sec]] (a second run of a sub-second
+    * detector row is the difference between a graded 0.3 s and 6.1 s of
+    * box weather), else one, so the mandatory tail still fits.
+    */
+  def runs100(planned: Int, overSoftBudget: Boolean, firstSec: Double): Int =
+    if (!overSoftBudget) planned
+    else if (firstSec <= Cheap100Sec) math.min(planned, 2)
+    else 1
+
+  /** The `shed` note of a 100x row cut from `planned` to `runs` runs. */
+  def shed100(planned: Int, runs: Int): Option[String] =
+    if (runs >= planned) None
+    else Some(s"runs=$runs(" +
+      (if (runs >= 2) "budget,cheap-min2)" else "budget)"))
+
+  /** One artifact row: its timed runs in order (none when it failed)
+    * and, in the 100x tier, each run's stage totals. The row's number and
+    * telemetry are its fastest run's; every run stays visible so an
+    * outlier explains itself.
+    */
+  final case class Timed(name: String, runs: Seq[Measure.Sample],
+      tels: Seq[StageTelemetry.Totals] = Nil) {
+    private def fastest: Int = runs.indices.minBy(runs(_).sec)
+    def best: Measure.Sample = runs(fastest)
+    def bestTel: StageTelemetry.Totals = tels(fastest)
+    def sec: Double = if (runs.isEmpty) 0.0 else best.sec
+    /** The first run's output count; -1 when the row failed. */
+    def rows: Long = runs.headOption.fold(-1L)(_.rows)
+  }
+
+  /** The 100x tier: replicas, corpus docs, corpus generation paid by this
+    * run, and its rows.
+    */
+  final case class Tier100(reps: Int, docs: Long,
+      setupSec: Option[Double] = None, rows: Vector[Timed] = Vector.empty)
+
+  /** The isolated ingest row, with the wall spent waiting for external
+    * load and whether its fastest run met [[GateIso]].
+    */
+  final case class Iso(run: Timed, waitSec: Double, gateMet: Boolean)
+
+  /** Everything a bench run has recorded so far. `host1x`/`host10x` span
+    * a whole tier: their `ext` and `io` are the tier's host context.
+    */
+  final case class Record(sf: String, budgetSec: Double,
+      ingest: Option[Timed] = None,
+      queries: Vector[Timed] = Vector.empty,
+      host1x: Option[Measure.Sample] = None,
+      queries10x: Option[Vector[Timed]] = None,
+      host10x: Option[Measure.Sample] = None,
+      tier100: Option[Tier100] = None,
+      iso: Option[Iso] = None,
+      shed: ListMap[String, String] = ListMap.empty,
+      errors: ListMap[String, String] = ListMap.empty)
+
+  private val mapper = new ObjectMapper()
+  private def r2(x: Double): Double = math.rint(x * 100) / 100
+  private def r3(x: Double): Double = math.rint(x * 1000) / 1000
+  private def putAll(o: ObjectNode, key: String, xs: Seq[Double]): Unit = {
+    val a = o.putArray(key)
+    xs.foreach(x => a.add(x))
+  }
+  private def putRows(o: ObjectNode, rows: Seq[Timed]): Unit =
+    rows.foreach { t =>
+      val j = o.putObject(t.name).put("sec", t.sec).put("rows", t.rows)
+      if (t.runs.nonEmpty) {
+        putAll(j, "runs", t.runs.map(_.sec))
+        putAll(j, "load", t.runs.map(_.load))
+      }
+    }
+
+  /** The artifact line of `rec`: every prior round's field layout, plus
+    * `partial`, `wall_sec`, `budget_sec` and `shed`, so a cut run
+    * describes itself.
+    */
+  def line(rec: Record, wallSec: Double, partial: Boolean): String = {
+    val o = mapper.createObjectNode()
+    val rows1x = rec.queries ++ rec.ingest
+    o.put("metric", "total").put("value", rows1x.map(_.sec).sum)
+      .put("unit", "sec")
+    putRows(o.putObject("queries"), rows1x)
+    o.put("sf", rec.sf)
+    rec.ingest.foreach(i => o.put("ingest_rows", i.rows)
+      .put("ingest_rows_per_sec", (i.rows / i.sec).toLong))
+    rec.host1x.foreach(h =>
+      o.put("ext_cores_1x", r2(h.ext)).put("io_psi_1x", r3(h.io)))
+    rec.queries10x.foreach { q =>
+      putRows(o.putObject("queries_10x"), q)
+      o.put("total_10x", q.map(_.sec).sum)
+    }
+    rec.host10x.foreach(h =>
+      o.put("ext_cores_10x", r2(h.ext)).put("io_psi_10x", r3(h.io)))
+    rec.tier100.foreach { t =>
+      val q = o.putObject("queries_100x")
+      t.rows.foreach { r =>
+        val (b, tel) = (r.best, r.bestTel)
+        val j = q.putObject(r.name).put("sec", b.sec).put("rows", b.rows)
+          .put("load", b.load).put("ext_cores", r2(b.ext))
+        putAll(j, "runs", r.runs.map(_.sec))
+        putAll(j, "loads", r.runs.map(_.load))
+        putAll(j, "ext", r.runs.map(s => r2(s.ext)))
+        putAll(j, "io", r.runs.map(s => r3(s.io)))
+        j.put("shuffle_write_bytes", tel.writeBytes)
+          .put("shuffle_read_bytes", tel.readBytes)
+          .put("max_task_shuffle_read_bytes", tel.maxTaskRead)
+          .put("read_tasks", tel.readTasks)
+          .put("skew_max_over_mean", r2(tel.skew))
+          .put("stage_skew", r2(tel.stageSkew))
+          .put("disk_spill_bytes", tel.spillBytes)
+      }
+      o.put("reps_100x", t.reps).put("docs_100x", t.docs)
+        .put("runs_100x", Runs100).put("ext_gate_100x", Gate100)
+      t.setupSec.foreach(s => o.put("setup_100x_sec", math.rint(s)))
+    }
+    rec.iso.foreach { iso =>
+      val r = iso.run
+      val j = o.putObject("ingest_isolated").put("sec", r.sec)
+        .put("rows", r.rows).put("rows_per_sec", (r.rows / r.sec).toLong)
+        .put("wait_sec", math.rint(iso.waitSec)).put("ext_gate", GateIso)
+        .put("gate_met", iso.gateMet)
+      putAll(j, "runs", r.runs.map(_.sec))
+      putAll(j, "load", r.runs.map(_.load))
+      putAll(j, "ext", r.runs.map(s => r2(s.ext)))
+      putAll(j, "io", r.runs.map(s => r3(s.io)))
+    }
+    if (partial) o.put("partial", true)
+    o.put("wall_sec", math.rint(wallSec)).put("budget_sec", rec.budgetSec)
+    if (rec.shed.nonEmpty) {
+      val s = o.putObject("shed")
+      rec.shed.foreach { case (k, v) => s.put(k, v) }
+    }
+    val e = o.putObject("errors")
+    rec.errors.foreach { case (k, v) => e.put(k, v.take(200)) }
+    mapper.writeValueAsString(o)
+  }
+
+  /** Waits for load outside this JVM to drain, and re-runs while a row's
+    * fastest run saw more than `gate` external busy cores ([[ExternalLoad]]
+    * subtracts this JVM; the 1-min loadavg lags by 60 s and cannot gate a
+    * tier that saturates the box itself). Each wait polls every `pollSec`
+    * for at most `maxWaitSec` of its own. `cap` re-runs are allowed over
+    * the instance's life: the 100x tier shares one across its rows (+2 per
+    * row turned a 45-min bench into a >60-min one on a busy box), the
+    * isolated ingest row has its own.
+    */
+  final class Rerun(cpus: Int, gate: Double, maxWaitSec: Double,
+      pollSec: Int, cap: Int) {
+    private var left = cap
+    /** Seconds spent in [[drain]], summed over every wait. */
+    var waitedSec = 0.0
+    def capped: Boolean = left <= 0
+    def contended(runs: Seq[Measure.Sample]): Boolean =
+      runs.minBy(_.sec).ext > gate
+
+    /** External busy cores over a 3 s window; -1 when unreadable. */
+    private def instantExt(): Double =
+      ExternalLoad.trySnap().map { a =>
+        Thread.sleep(3000)
+        ExternalLoad.coresSince(Some(a), cpus)
+      }.getOrElse(-1.0)
+
+    def drain(): Unit = {
+      val t0 = System.nanoTime()
+      def waited = (System.nanoTime() - t0) / 1e9
+      while (instantExt() > gate && waited < maxWaitSec)
+        Thread.sleep(pollSec * 1000L)
+      waitedSec += waited
+    }
+
+    /** While the fastest of `runs` is contended, a re-run is left and
+      * `allowed` holds: drain, then `rerun`.
+      */
+    def whileContended(runs: => Seq[Measure.Sample], allowed: => Boolean)(
+        rerun: => Unit): Unit =
+      while (contended(runs) && !capped && allowed) {
+        drain(); rerun; left -= 1
+      }
+  }
+
   def main(args: Array[String]): Unit = {
     val benchT0 = System.nanoTime()
     def wallSec: Double = (System.nanoTime() - benchT0) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // the shipped session: the bench measures what the engine ships
-    val spark = GraftSession.local(cpus.toInt)
-    // the bounded pool-rank windows (Retrieval.scala, documented
-    // <= 2*poolK pools by construction) and oracle-shape SQL emit
-    // hundreds of "No Partition Defined for Window operation" WARNs per
-    // run — they drowned the driver's truncated r18 log tail. The
-    // warning carries no signal for those plans; silence that one
-    // logger, keep WARN everywhere else
+    val spark = GraftSession.local(cpus)
+    // the bounded pool-rank windows (Retrieval.scala) and oracle-shape
+    // SQL emit hundreds of "No Partition Defined for Window operation"
+    // WARNs per run that carry no signal (they drowned the r18 log tail):
+    // silence that one logger, keep WARN everywhere else
     try org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
     catch { case _: Throwable => () }
 
-    // a failing query must fail the bench LOUDLY — a swallowed crash
-    // would score ~0s and *improve* the total (declared up front so
-    // env-parse problems can land here instead of aborting the bench)
-    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    // ---- wall budget (r19; BENCH_r18 was killed, rc 124 / parsed null):
+    // optional work (contended re-runs, min-of-N extras) grows exactly
+    // when the box is slow. Past the budget every row still RUNS but gets
+    // one timed run without warm-up and no re-run; everything shed lands
+    // in `shed`. The budget never drops a row, so a pathological wall can
+    // still exceed it — the incremental flush below is the backstop.
+    val budget = budgetSec(cpus)
+    def overBudget: Boolean = wallSec > budget
+    // the soft threshold leaves headroom for the mandatory 100x tail
+    def overSoftBudget: Boolean = wallSec > budget * 0.8
 
-    // resolved ONCE and used by both the measurement loops and the
-    // emitted artifact fields — re-reading the raw env at emit time let
-    // the artifact misstate the protocol actually run. Malformed values
-    // fall back to the default and are RECORDED: aborting the whole
-    // bench over a typo'd tuning knob would lose every tier's
-    // measurement
-    def envOr[A](name: String, default: A)(parse: String => A): A =
-      sys.env.get(name).flatMap { v =>
-        val p = scala.util.Try(parse(v.trim)).toOption
-        if (p.isEmpty) errors(s"env:$name") = v
-        p
-      }.getOrElse(default)
-    val runs = envOr("SPARK_GRAFT_BENCH_RUNS", 3)(_.toInt).max(1)
-    val runs100 = envOr("SPARK_GRAFT_100X_RUNS", 2)(_.toInt).max(1)
-    val extGate = envOr("SPARK_GRAFT_100X_EXT_GATE", 4.0)(_.toDouble)
-    // ---- wall budget (r19): BENCH_r18 was rc 124 / parsed null — the
-    // driver killed a run whose optional work (contended re-runs,
-    // min-of-N extras) grows exactly when the box is slow. Past the
-    // budget every remaining row still RUNS (each is a graded artifact
-    // row) but drops to one timed run, skips warm-ups where the 1x loop
-    // already JIT-warmed the path, and sheds re-run-under-load retries;
-    // everything shed is recorded in the artifact's `shed` map. The
-    // budget bounds OPTIONAL work — it never drops a row, so a
-    // pathological wall can still exceed it; the incremental flush
-    // below is the backstop that makes even a kill non-destructive.
-    //
-    // r20: the DEFAULT budget scales with the core count (reference:
-    // 3000 s at 32 cores — the driver's observed kill window is a FIXED
-    // wall regardless of cores, while every mandatory row's cost grows
-    // as cores shrink, so a lower-core run must shed optional work
-    // proportionally earlier to fit the same kill: BENCH_r19_c8 hit the
-    // hard rc 124 at 3573 s because its budget was still 3000), floored
-    // at 750 s so an env-less run (SPARK_GRAFT_CPUS defaults to 4) keeps
-    // its optional runs. An explicit SPARK_GRAFT_BENCH_BUDGET_SEC stays
-    // absolute.
-    val budgetSec = envOr("SPARK_GRAFT_BENCH_BUDGET_SEC",
-      math.max(750.0, 3000.0 * cpus.toInt / 32.0))(_.toDouble)
-    def overBudget: Boolean = wallSec > budgetSec
-    // r20 shed policy (VERDICT r19 item 1a): the r19 shed dropped every
-    // remaining 100x row to min-of-1 once the budget was EXHAUSTED —
-    // which (a) started too late to fit (the mandatory single runs of
-    // the expensive tail alone overran), and (b) shed exactly the wrong
-    // runs: a second run of a sub-second detector row costs nothing and
-    // is the difference between a graded 0.3 s and a graded 6.1 s of box
-    // weather, while a second 158 s winnow run is the budget. So:
-    // optional extras of EXPENSIVE rows shed at a SOFT threshold
-    // (leaving headroom for the mandatory tail), and rows whose first
-    // run came in under `cheap100Sec` keep min-of-2 even past the full
-    // budget (never past the driver's kill — a second cheap run is
-    // seconds).
-    val cheap100Sec = envOr("SPARK_GRAFT_100X_CHEAP_SEC", 30.0)(_.toDouble)
-    def overSoftBudget: Boolean = wallSec > budgetSec * 0.8
-    // contended re-runs capped GLOBALLY, not per row: the r18 protocol
-    // allowed +2 runs per row — 13 rows x (wait + run) is how a 45-min
-    // bench becomes a >60-min one precisely when the box is busy
-    var extrasLeft = envOr("SPARK_GRAFT_100X_EXTRA_CAP", 4)(_.toInt).max(0)
-
-    // ---- incremental artifact (r19): every tier/row records into the
-    // buffers below and flushes target/bench_last.json immediately,
-    // marked `"partial":true` until the final write — a timeout/SIGTERM
-    // (the r18 failure: ONE write at the very end, rc 124 = zero parsed
-    // rows) now yields a parseable artifact holding every completed
-    // measurement. A JVM shutdown hook re-flushes on the way out.
-    val artifact = new Object
-    val results = scala.collection.mutable.ArrayBuffer
-      .empty[(String, (Double, Long, Seq[Double], Seq[Double]))]
-    var ingest: Option[(Long, Double, Seq[Double], Seq[Double], Seq[Double],
-      Seq[Double])] = None
-    var ext1xOpt: Option[Double] = None
-    var io1xOpt: Option[Double] = None
-    val rows10 = scala.collection.mutable.ArrayBuffer
-      .empty[(String, (Double, Long, Seq[Double], Seq[Double]))]
-    var ran10 = false
-    var ext10xOpt: Option[Double] = None
-    var io10xOpt: Option[Double] = None
-    var meta100: Option[(Int, Long)] = None
-    var setup100Sec: Option[Double] = None
-    val rows100buf = scala.collection.mutable.ArrayBuffer.empty[Row100]
-    var isoState: Option[((Long, Double, Seq[Double], Seq[Double],
-      Seq[Double], Seq[Double]), Double, Double, Boolean)] = None
-    val shed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    // ---- incremental artifact (r19): every recorded row flushes
+    // target/bench_last.json, marked `"partial":true` until the final
+    // write, so a timeout/SIGTERM still leaves every completed
+    // measurement parseable; a JVM shutdown hook re-flushes on the way out.
+    val lock = new Object
+    var rec = Record(sfDir, budget)
     var finalWritten = false
-    def record(f: => Unit): Unit = artifact.synchronized(f)
-
-    def jstr(s: String): String = "\"" + s.replace("\\", "\\\\")
-      .replace("\"", "\\\"").replaceAll("[\\x00-\\x1f]", " ") + "\""
-    def qjson(
-        rs: Seq[(String, (Double, Long, Seq[Double], Seq[Double]))]): String =
-      rs.map { case (k, (sec, nRows, all, loads)) =>
-        val runsJson =
-          if (all.isEmpty) "" else all.mkString(""","runs":[""", ",", "]")
-        val loadJson =
-          if (loads.isEmpty) "" else loads.mkString(""","load":[""", ",", "]")
-        "\"" + k + s"""":{"sec":$sec,"rows":$nRows$runsJson$loadJson}"""
-      }.mkString("{", ",", "}")
-    def extJson(tag: String, v: Double): String =
-      s""","ext_cores_$tag":${math.rint(v * 100) / 100}"""
-    def ioJson(tag: String, v: Double): String =
-      s""","io_psi_$tag":${math.rint(v * 1000) / 1000}"""
-    // the whole current state as ONE artifact line — same field layout
-    // as every prior round's final artifact, plus `partial`/`wall_sec`/
-    // `budget_sec`/`shed` so a truncated run is self-describing
-    def emitLine(partial: Boolean): String = {
-      val qs = qjson(results.toSeq ++
-        ingest.map(ing => ("ingest_json", (ing._2, ing._1, ing._3, ing._4))))
-      val total = results.map(_._2._1).sum + ingest.map(_._2).getOrElse(0.0)
-      val ingestJson = ingest.map { ing =>
-        s""","ingest_rows":${ing._1},""" +
-          s""""ingest_rows_per_sec":${(ing._1 / ing._2).toLong}"""
-      }.getOrElse("")
-      val scaleJson = (if (ran10)
-        s""","queries_10x":${qjson(rows10.toSeq)},""" +
-          s""""total_10x":${rows10.map(_._2._1).sum}"""
-      else "") + ext10xOpt.map(extJson("10x", _)).getOrElse("") +
-        io10xOpt.map(ioJson("10x", _)).getOrElse("")
-      val scale100Json = meta100.map { case (reps, nDocs) =>
-        val qs100 = rows100buf.map { r =>
-          val (b, t) = (r.best, r.tel)
-          def arr(xs: Seq[Double]) = xs.mkString("[", ",", "]")
-          "\"" + r.name + s"""":{"sec":${b.sec},"rows":${b.rows},""" +
-            s""""load":${b.load},"ext_cores":${math.rint(b.ext * 100) / 100},""" +
-            s""""runs":${arr(r.runs.map(_.sec))},"loads":${arr(r.runs.map(_.load))},""" +
-            s""""ext":${arr(r.runs.map(x => math.rint(x.ext * 100) / 100))},""" +
-            s""""io":${arr(r.runs.map(x => math.rint(x.io * 1000) / 1000))},""" +
-            s""""shuffle_write_bytes":${t.writeBytes},""" +
-            s""""shuffle_read_bytes":${t.readBytes},""" +
-            s""""max_task_shuffle_read_bytes":${t.maxTaskRead},""" +
-            s""""read_tasks":${t.readTasks},""" +
-            s""""skew_max_over_mean":${math.rint(t.skew * 100) / 100},""" +
-            s""""stage_skew":${math.rint(t.stageSkew * 100) / 100},""" +
-            s""""disk_spill_bytes":${t.spillBytes}}"""
-        }.mkString("{", ",", "}")
-        s""","queries_100x":$qs100,"reps_100x":$reps,"docs_100x":$nDocs,""" +
-          s""""runs_100x":$runs100,"ext_gate_100x":$extGate""" +
-          setup100Sec.map(s => s""","setup_100x_sec":${math.rint(s)}""")
-            .getOrElse("")
-      }.getOrElse("")
-      val isoJson = isoState.map { case (ii, waitS, isoGate, gateMet) =>
-        val runsJ = ii._3.mkString("[", ",", "]")
-        val loadJ = ii._4.mkString("[", ",", "]")
-        val extJ = ii._5.map(x => math.rint(x * 100) / 100)
-          .mkString("[", ",", "]")
-        val ioJ = ii._6.map(x => math.rint(x * 1000) / 1000)
-          .mkString("[", ",", "]")
-        s""","ingest_isolated":{"sec":${ii._2},"rows":${ii._1},""" +
-          s""""rows_per_sec":${(ii._1 / ii._2).toLong},""" +
-          s""""wait_sec":${math.rint(waitS)},"ext_gate":$isoGate,""" +
-          s""""gate_met":$gateMet,""" +
-          s""""runs":$runsJ,"load":$loadJ,"ext":$extJ,"io":$ioJ}"""
-      }.getOrElse("")
-      val errJson = errors
-        .map { case (k, v) => jstr(k) + ":" + jstr(v.take(200)) }
-        .mkString("{", ",", "}")
-      val shedJson = if (shed.isEmpty) "" else
-        shed.map { case (k, v) => jstr(k) + ":" + jstr(v) }
-          .mkString(""","shed":{""", ",", "}")
-      val partialJson = if (partial) ""","partial":true""" else ""
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-        s""""sf":"$sfDir"$ingestJson""" +
-        ext1xOpt.map(extJson("1x", _)).getOrElse("") +
-        io1xOpt.map(ioJson("1x", _)).getOrElse("") +
-        scaleJson + scale100Json + isoJson + partialJson +
-        s""","wall_sec":${math.rint(wallSec)},"budget_sec":$budgetSec""" +
-        shedJson + s""","errors":$errJson}"""
-    }
-    // overwrite-in-place after every tier/row; the file is the durable
+    def record(f: Record => Record): Unit = lock.synchronized { rec = f(rec) }
+    def shed(key: String, note: String): Unit =
+      record(r => r.copy(shed = r.shed.updated(key, note)))
+    // a failing query must fail the bench LOUDLY — a swallowed crash
+    // would score ~0s and *improve* the total
+    def fail(key: String, e: Throwable): Unit = record(r => r.copy(errors =
+      r.errors.updated(key,
+        Option(e.getMessage).getOrElse(e.getClass.getName).take(200))))
+    // overwrite-in-place after every row; the file is the durable
     // artifact (the driver's stdout tail has truncated the line before),
     // stdout gets a copy at tier boundaries so a killed run's log tail
     // still ends in a parseable line
     def flush(partial: Boolean, toStdout: Boolean,
-        markFinal: Boolean = false): Unit = artifact.synchronized {
-      val line = emitLine(partial)
-      if (toStdout) println(line)
+        markFinal: Boolean = false): Unit = lock.synchronized {
+      val l = line(rec, wallSec, partial)
+      if (toStdout) println(l)
       try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("target/bench_last.json"), line + "\n")
+        java.nio.file.Paths.get("target/bench_last.json"), l + "\n")
       catch { case e: Throwable =>
         System.err.println(
           s"[bench] bench_last.json write failed: ${e.getMessage}")
@@ -653,7 +710,7 @@ object Bench {
       if (markFinal) finalWritten = true
     }
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      artifact.synchronized {
+      lock.synchronized {
         if (!finalWritten) {
           System.err.println(s"[bench] shutdown before the final write " +
             s"(wall ${math.rint(wallSec)} s) — flushing partial artifact")
@@ -666,23 +723,12 @@ object Bench {
     SparkEntry.queries("q1_agg")(spark, sfDir).count()
     SparkEntry.queries("q_parse_typed")(spark, sfDir).limit(1000).count()
 
-    // EXTERNAL busy cores over a 3 s window ([[ExternalLoad]]) — the
-    // gate statistic for the isolated-ingest row and the 100x tier, and
-    // the attribution marker recorded with the 1x/10x totals (the 1x
-    // registry total swung 262-325 s with box load across r16/r17 and
-    // the loadavg samples could not say whose load it was)
-    def instantExt(): Double =
-      ExternalLoad.trySnap().map { a =>
-        Thread.sleep(3000)
-        ExternalLoad.coresSince(Some(a), cpus.toInt)
-      }.getOrElse(-1.0)
-
     // headline: the reference's benchmark shape — JSON messages through
     // parse + tolerant typed projection (BASELINE.md: 142K rows/s/instance).
     // The event table is replicated 30x so the timed window is seconds,
-    // not a sub-second blip dominated by scheduling noise.
-    def ingestRun(): (Long, Double, Seq[Double], Seq[Double], Seq[Double],
-        Seq[Double]) = {
+    // not a sub-second blip dominated by scheduling noise. One warm-up,
+    // then min-of-[[Runs]].
+    def ingestRun(): Seq[Measure.Sample] = {
       val events = Tables(spark, sfDir).events
       val one = events.select(to_json(struct(
         date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ssXXX").as("time"),
@@ -693,7 +739,7 @@ object Bench {
         col("event_id").as("id"))).as("value"))
       val raw = (1 to 30).map(_ => one).reduce(_ union _)
         // mimic a Kafka source's partitioning (one partition per core)
-        .repartition(cpus.toInt).persist()
+        .repartition(cpus).persist()
       val n = raw.count()
       val dims = Seq(
         Dim("time", ChType.whichType("DateTime")),
@@ -704,87 +750,67 @@ object Bench {
         Dim("id", ChType.whichType("Int64")))
       val projected = Projector.projectJson(raw, dims, ParseOpts())
       projected.write.format("noop").mode("overwrite").save() // warm
-      // best of N timed runs: the measurement competes with GC/OS noise
-      val timedRuns = (1 to runs).map { _ =>
-        Measure.withContext(cpus.toInt) {
+      val runs = (1 to Runs).map { _ =>
+        Measure.withContext(cpus) {
           val t0 = System.nanoTime()
           projected.write.format("noop").mode("overwrite").save()
           ((System.nanoTime() - t0) / 1e9, n)
         }
       }
       raw.unpersist()
-      (n, timedRuns.map(_.sec).min, timedRuns.map(_.sec),
-        timedRuns.map(_.load), timedRuns.map(_.ext), timedRuns.map(_.io))
+      runs
     }
     // measure OUTSIDE the artifact lock — a SIGTERM mid-measurement must
     // not find the hook blocked behind a minutes-long tier
-    val ingest0 = ingestRun()
-    record { ingest = Some(ingest0) }
+    val ingest = Timed("ingest_json", ingestRun())
+    record(_.copy(ingest = Some(ingest)))
     flush(partial = true, toStdout = false)
 
-    // contention hardening: MIN of `runs` timed executions per query —
-    // median-of-N cannot reject machine contention that spans the whole
-    // bench window (observed twice on the shared driver box), min is the
-    // standard contention-robust wall-time statistic. Per-run times are
-    // emitted alongside so outliers stay visible in the artifact, and
-    // the output row count ([[Measure.runOnce]]'s observation ON the timed
-    // run) guards against a silently-empty result scoring fast.
-    // (min sec, rows, per-run secs, per-run 1-min loadavg); the warm-up
-    // is runOnce too — the same plan as the timed runs, not a count()
-    // that could prune columns/projections and leave the first timed run
-    // cold
-    def timedN(errKey: String, mk: () => DataFrame,
-        nRuns: Int, warm: Boolean): (Double, Long, Seq[Double], Seq[Double]) =
+    // contention hardening: MIN of [[Runs]] timed executions per query —
+    // median-of-N cannot reject contention spanning the whole bench
+    // window, min is the contention-robust wall-time statistic. The row
+    // count ([[Measure.runOnce]]'s observation ON the timed run) guards
+    // against a silently-empty result scoring fast; the warm-up is runOnce
+    // too, the same plan as the timed runs.
+    def timed(errKey: String, name: String, mk: () => DataFrame,
+        single: Boolean): Timed =
       try {
-        if (warm) Measure.runOnce(spark, mk)
-        val rs = (1 to nRuns).map { _ =>
-          val la = Measure.loadAvg(); (Measure.runOnce(spark, mk), la)
-        }
-        (rs.map(_._1._1).min, rs.head._1._2, rs.map(_._1._1), rs.map(_._2))
-      } catch {
-        case e: Throwable =>
-          errors(errKey) =
-            Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-          (0.0, -1L, Nil, Nil)
-      }
-    def timed(errKey: String, mk: () => DataFrame)
-        : (Double, Long, Seq[Double], Seq[Double]) =
-      timedN(errKey, mk, runs, warm = true)
-    // iteration aid: SPARK_GRAFT_BENCH_ONLY=a,b,c times just those
-    // queries (1x and 10x); the driver never sets it, so the graded
-    // artifact always covers the full registry
-    val only: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    // a typo'd name would otherwise silently filter everything out and
-    // produce an empty-but-plausible artifact — surface it in errors
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      if (unknown.nonEmpty)
-        errors("bench_only_unknown") = unknown.toSeq.sorted.mkString(",")
-    }
-    var shed1x = 0
-    val e1x0 = ExternalLoad.trySnap()
-    val io1x0 = IoPressure.totalStallUs()
-    val t1x0 = System.nanoTime()
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        // past the budget: one timed run, no extra warm-up — the
-        // min-of-N extras are exactly the optional work the budget sheds
-        val r =
-          if (overBudget) {
-            shed1x += 1
-            timedN(name, () => fn(spark, sfDir), 1, warm = false)
-          } else timed(name, () => fn(spark, sfDir))
-        record { results += name -> r }
+        if (!single) Measure.runOnce(spark, mk)
+        Timed(name, (1 to (if (single) 1 else Runs)).map(_ =>
+          Measure.withContext(cpus)(Measure.runOnce(spark, mk))))
+      } catch { case e: Throwable => fail(errKey, e); Timed(name, Nil) }
+    // one registry tier over `dir`: a `single` row, and past the budget
+    // every row, gets one timed run and no warm-up (the min-of-N extras
+    // are exactly the optional work the budget sheds; the count the
+    // budget cut lands in `shed` under the tier's label)
+    def tier(label: String, names: Seq[String], dir: String,
+        errKey: String => String, single: String => Boolean)(
+        add: Timed => Record => Record): Unit = {
+      var cut = 0
+      names.foreach { name =>
+        val cutNow = !single(name) && overBudget
+        if (cutNow) cut += 1
+        val t = timed(errKey(name), name,
+          () => SparkEntry.queries(name)(spark, dir), single(name) || cutNow)
+        record(add(t))
         flush(partial = true, toStdout = false)
       }
-    record {
-      ext1xOpt = Some(ExternalLoad.coresSince(e1x0, cpus.toInt))
-      io1xOpt = Some(IoPressure.stallFrac(io1x0, IoPressure.totalStallUs(),
-        (System.nanoTime() - t1x0) / 1e9))
-      if (shed1x > 0) shed("1x") = s"single-run-no-warm:$shed1x"
+      if (cut > 0) shed(label, s"single-run-no-warm:$cut")
     }
+    // a tier's host context: EXTERNAL busy cores and IO-stall fraction
+    // over the tier (the 1x total swung 262-325 s with box load across
+    // r16/r17, and loadavg could not say whose load it was)
+    def overTier(body: => Unit): Measure.Sample = Measure.withContext(cpus) {
+      val t0 = System.nanoTime()
+      body
+      ((System.nanoTime() - t0) / 1e9, 0L)
+    }
+
+    val host1x = overTier {
+      tier("1x", SparkEntry.queries.keys.toSeq.sorted, sfDir, identity,
+        _ => false)(t => r => r.copy(queries = r.queries :+ t))
+    }
+    record(_.copy(host1x = Some(host1x)))
     flush(partial = true, toStdout = true)
 
     // ---- second scale: the same headline queries over a 10x corpus
@@ -792,207 +818,109 @@ object Bench {
     // non-noise numbers. Replicas are id-shifted and lightly perturbed
     // (suffix token / +0.001*i on embeddings) so they are near- but not
     // exact duplicates — a cluster-heavy dedup workload, the hard case.
-    val e10x0 = ExternalLoad.trySnap()
-    val io10x0 = IoPressure.totalStallUs()
-    val t10x0 = System.nanoTime()
-    try {
-      val dir = BenchScale.ensure10x(spark, sfDir, cpus.toInt)
-      var shed10x = 0
-      record { ran10 = true }
-      BenchScale.headline
-        .filter(name => only.forall(_.contains(name)))
-        .foreach { name =>
-          // multi-batch streaming replays get ONE timed run, no warm-up:
-          // they already executed (warm + runs) times in the 1x registry
-          // loop above, and each 10x execution is minutes of checkpoint
-          // orchestration — a min-of-3 would triple bench wall for a
-          // number whose noise floor is file IO, not scheduling
-          val r =
-            if (BenchScale.singleRun(name))
-              timedN(s"10x:$name",
-                () => SparkEntry.queries(name)(spark, dir), 1, warm = false)
-            else if (overBudget) {
-              shed10x += 1
-              timedN(s"10x:$name",
-                () => SparkEntry.queries(name)(spark, dir), 1, warm = false)
-            } else
-              timed(s"10x:$name", () => SparkEntry.queries(name)(spark, dir))
-          record { rows10 += name -> r }
-          flush(partial = true, toStdout = false)
-        }
-      record { if (shed10x > 0) shed("10x") = s"single-run-no-warm:$shed10x" }
-    } catch { case e: Throwable =>
-      errors("10x:setup") =
-        Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
+    // The streaming replays in `singleRun` get ONE timed run, no warm-up:
+    // they already ran (warm + runs) times in the 1x loop, and each 10x
+    // execution is minutes of checkpoint orchestration whose noise floor
+    // is file IO, not scheduling.
+    val host10x = overTier {
+      try {
+        val dir = BenchScale.ensure10x(spark, sfDir, cpus)
+        record(_.copy(queries10x = Some(Vector.empty)))
+        tier("10x", BenchScale.headline, dir, n => s"10x:$n",
+          BenchScale.singleRun)(t => r =>
+          r.copy(queries10x = r.queries10x.map(_ :+ t)))
+      } catch { case e: Throwable => fail("10x:setup", e) }
     }
-    record {
-      ext10xOpt = Some(ExternalLoad.coresSince(e10x0, cpus.toInt))
-      io10xOpt = Some(IoPressure.stallFrac(io10x0, IoPressure.totalStallUs(),
-        (System.nanoTime() - t10x0) / 1e9))
-    }
+    record(_.copy(host10x = Some(host10x)))
     flush(partial = true, toStdout = true)
 
-    // ---- third scale: the 100x flagship proof. The registry's minhash
-    // dedup + clustering, executed end-to-end on a corpus 100x the base
-    // sf (driver sf0.1 -> 500k docs, 1M after the query's planted-twin
-    // union), with shuffle-byte / skew / spill telemetry riding on the
-    // run — the "would this survive a scale-up" claim as a measurement,
-    // not a plan-reading. The rows are [[BenchScale100.Table]]'s; every
-    // row's setup (corpus generation, cached under target/ behind a
-    // _READY marker, so only the first round pays it; `setup_100x_sec`
-    // records what this run paid) runs before any row is timed. One
-    // timed run per query at the budget, min-of-`runs100` otherwise.
-    // SPARK_GRAFT_BENCH_100X=0 skips; _REPS overrides the replica count
-    // (e.g. 2000 -> 10M docs).
-    if (sys.env.getOrElse("SPARK_GRAFT_BENCH_100X", "1") != "0" &&
-        only.isEmpty) {
-      try {
-        val setupT0 = System.nanoTime()
-        val reps = envOr("SPARK_GRAFT_BENCH_100X_REPS",
-          BenchScale100.DefaultReps)(_.toInt)
-        val table = new BenchScale100.Table(spark, sfDir, cpus.toInt, reps)
-        val nDocs = table.nDocs
-        record { meta100 = Some((reps, nDocs)) }
-        table.rows.foreach(_.setup())
-        record { setup100Sec = Some((System.nanoTime() - setupT0) / 1e9) }
-        flush(partial = true, toStdout = false)
-        val tel = StageTelemetry.attach(spark.sparkContext)
-        val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions",
-          BenchScale100.shufflePartitions(cpus.toInt).toString)
-        // ---- measurement protocol (the ingest row's gate, carried to
-        // this tier — r16's single un-gated runs swung ±2-4x with box
-        // load while the code got strictly better): MIN of `runs100`
-        // timed runs per row, each with its 1-min loadavg AND its
-        // measured EXTERNAL busy cores ([[ExternalLoad]]: /proc/stat
-        // minus our own JVM — the 1-min loadavg can't gate a tier that
-        // saturates the box itself). If even the fastest run was taken
-        // under external contention (> extGate cores), wait for the
-        // hog to drain (bounded) and re-run — globally capped at
-        // `extrasLeft` extra runs across the whole tier and shed
-        // entirely past the wall budget. The recorded number is (a) a
-        // minimum, and (b) provably taken on a quiet-enough box, or
-        // the emitted ext field / shed entry says otherwise.
-        def waitExternal(): Unit = {
-          val t0 = System.nanoTime()
-          var ext = instantExt()
-          while (ext > extGate && (System.nanoTime() - t0) / 1e9 < 180) {
-            Thread.sleep(10000); ext = instantExt()
+    // ---- third scale: the 100x flagship proof — [[BenchScale100.Table]]'s
+    // rows end-to-end on a corpus `reps` times the base sf, with shuffle
+    // byte / skew / spill telemetry riding on each run. Every row's setup
+    // (corpora cached under target/ behind a _READY marker;
+    // `setup_100x_sec` records what this run paid) runs before any row is
+    // timed. SPARK_GRAFT_BENCH_100X_REPS overrides the replica count.
+    // Protocol (r16's single un-gated runs swung ±2-4x with box load):
+    // min of [[runs100]] runs per row, re-run while the fastest was
+    // contended ([[Rerun]]). The number is a minimum taken on a quiet
+    // enough box, or its `ext` field and `shed` entry say otherwise.
+    try {
+      val setupT0 = System.nanoTime()
+      val reps = sys.env.get("SPARK_GRAFT_BENCH_100X_REPS").map(_.toInt)
+        .getOrElse(BenchScale100.DefaultReps)
+      val table = new BenchScale100.Table(spark, sfDir, cpus, reps)
+      val nDocs = table.nDocs
+      record(_.copy(tier100 = Some(Tier100(reps, nDocs))))
+      table.rows.foreach(_.setup())
+      val setupSec = (System.nanoTime() - setupT0) / 1e9
+      record(r => r.copy(tier100 =
+        r.tier100.map(_.copy(setupSec = Some(setupSec)))))
+      flush(partial = true, toStdout = false)
+      val tel = StageTelemetry.attach(spark.sparkContext)
+      val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions",
+        BenchScale100.shufflePartitions(cpus).toString)
+      val rerun = new Rerun(cpus, Gate100, maxWaitSec = 180, pollSec = 10,
+        cap = 4)
+      try table.rows.foreach { row =>
+        val name = row.name
+        try {
+          val runs = scala.collection.mutable.ArrayBuffer
+            .empty[Measure.Sample]
+          val tels = scala.collection.mutable.ArrayBuffer
+            .empty[StageTelemetry.Totals]
+          def one(): Unit = {
+            runs += Measure.sample(spark, cpus, tel, row.plan)
+            tels += tel.totals
           }
-        }
-        try table.rows.foreach { row =>
-          val name = row.name
-          try {
-            val all = scala.collection.mutable.ArrayBuffer
-              .empty[(Measure.Sample, StageTelemetry.Totals)]
-            def one(): Unit = {
-              val s = Measure.sample(spark, cpus.toInt, tel, row.plan)
-              all += ((s, tel.totals))
-            }
-            def best = all.minBy(_._1.sec)
-            one()
-            // budget shed, r20 shape: the first run's own wall decides
-            // what this row may cost in extras — sub-`cheap100Sec` rows
-            // keep min-of-2 even past the budget (a second run is
-            // seconds, and these rows are the regression detectors the
-            // r19 min-of-1 shed handed to box weather), expensive rows
-            // shed extras from the SOFT threshold so the mandatory tail
-            // still fits
-            val wantRuns =
-              if (!overSoftBudget) runs100
-              else if (all.head._1.sec <= cheap100Sec) math.min(runs100, 2)
-              else 1
-            if (wantRuns < runs100) record {
-              shed(s"100x:$name") = s"runs=$wantRuns(" +
-                (if (wantRuns >= 2) "budget,cheap-min2)" else "budget)")
-            }
-            (2 to wantRuns).foreach(_ => one())
-            while (best._1.ext > extGate && extrasLeft > 0 && !overBudget) {
-              waitExternal(); one(); extrasLeft -= 1
-            }
-            if (best._1.ext > extGate)
-              record { shed(s"100x:$name:rerun") =
-                if (overBudget) "skipped(budget)"
-                else if (extrasLeft <= 0) "skipped(global-cap)"
-                else "exhausted" }
-            record {
-              rows100buf += Row100(name, best._1, best._2, all.map(_._1).toSeq)
-            }
-            flush(partial = true, toStdout = true)
-          } catch {
-            case e: Throwable =>
-              errors(s"100x:$name") =
-                Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-          }
-        } finally {
-          spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-          tel.detach()
-        }
-      } catch {
-        case e: Throwable =>
-          errors("100x:setup") =
-            Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-          flush(partial = true, toStdout = false)
+          one()
+          // the first run's own wall decides what the row may cost
+          val want = runs100(Runs100, overSoftBudget, runs.head.sec)
+          shed100(Runs100, want).foreach(shed(s"100x:$name", _))
+          (2 to want).foreach(_ => one())
+          rerun.whileContended(runs.toSeq, !overBudget)(one())
+          if (rerun.contended(runs.toSeq))
+            shed(s"100x:$name:rerun",
+              if (overBudget) "skipped(budget)" else "skipped(global-cap)")
+          val t = Timed(name, runs.toSeq, tels.toSeq)
+          record(r => r.copy(tier100 = r.tier100.map(x =>
+            x.copy(rows = x.rows :+ t))))
+          flush(partial = true, toStdout = true)
+        } catch { case e: Throwable => fail(s"100x:$name", e) }
+      } finally {
+        spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+        tel.detach()
       }
+    } catch {
+      case e: Throwable =>
+        fail("100x:setup", e)
+        flush(partial = true, toStdout = false)
     }
 
-    // ---- isolated ingest re-run: same measurement as the in-loop
-    // headline but taken AFTER the full registry + scales have drained,
-    // with its own load + external-cores samples — the machine-readable
-    // twin of the BENCHNOTES "isolated re-run" prose (r12 What's-wrong
-    // #4). GATED on EXTERNAL busy cores draining first (the 100x tier's
-    // r17 gate applied to the one row that feeds bench_vs_baseline —
-    // r17 recorded this row at loadavg ~7.9 against a 6.0 loadavg gate
-    // after the wait expired, because loadavg lags our own just-drained
-    // loops by its 60 s time constant; ExternalLoad subtracts this JVM
-    // out, so the wait ends as soon as the box is OURS-quiet). If the
-    // fastest run still saw external contention, wait-and-re-measure up
-    // to twice; past that (or past the wall budget, which sheds the
-    // waits and retries — the row itself always runs) we record anyway
-    // and gate_met says so.
-    val isoExtGate = envOr("SPARK_GRAFT_ISO_EXT_GATE", 2.0)(_.toDouble)
-    // each wait gets its OWN bounded budget (a shared budget anchored
-    // before the first measurement would be exhausted by the
-    // measurement itself, turning the retry waits into silent no-ops),
-    // and wait_sec reports the CUMULATIVE wall spent waiting
-    var isoWaitSec = 0.0
-    def waitIsoExternal(): Unit = {
-      val t0 = System.nanoTime()
-      var ext = instantExt()
-      while (ext > isoExtGate && (System.nanoTime() - t0) / 1e9 < 600) {
-        Thread.sleep(15000); ext = instantExt()
-      }
-      isoWaitSec += (System.nanoTime() - t0) / 1e9
-    }
-    if (!overBudget) waitIsoExternal()
-    else record { shed("iso:wait") = "skipped(budget)" }
-    // ext of the MIN run is what gate_met adjudicates (the recorded
-    // number IS the min); extra attempts merge into the run arrays so
-    // every sample stays visible
-    def isoMinExt(r: (Long, Double, Seq[Double], Seq[Double], Seq[Double],
-        Seq[Double])): Double = r._5(r._3.indexOf(r._2))
-    var ingestIso = ingestRun()
-    var isoExtra = 0
-    while (isoMinExt(ingestIso) > isoExtGate && isoExtra < 2 && !overBudget) {
-      waitIsoExternal()
-      val again = ingestRun()
-      ingestIso = (ingestIso._1, math.min(ingestIso._2, again._2),
-        ingestIso._3 ++ again._3, ingestIso._4 ++ again._4,
-        ingestIso._5 ++ again._5, ingestIso._6 ++ again._6)
-      isoExtra += 1
-    }
-    if (isoMinExt(ingestIso) > isoExtGate && overBudget && isoExtra < 2)
-      record { shed("iso:rerun") = "skipped(budget)" }
-    val isoGateMet = {
-      val e = isoMinExt(ingestIso); e >= 0 && e <= isoExtGate
-    }
-    record { isoState = Some((ingestIso, isoWaitSec, isoExtGate, isoGateMet)) }
+    // ---- isolated ingest re-run: the headline measured again AFTER every
+    // tier has drained, GATED on external load draining first (this row
+    // feeds bench_vs_baseline). A contended fastest run is re-measured;
+    // past the cap or the budget (which sheds waits and retries, never
+    // the row) it records anyway and `gate_met` says so. `wait_sec` is
+    // the cumulative wait; every attempt's runs stay in the arrays.
+    val isoRerun = new Rerun(cpus, GateIso, maxWaitSec = 600, pollSec = 15,
+      cap = 2)
+    if (!overBudget) isoRerun.drain() else shed("iso:wait", "skipped(budget)")
+    val iso = scala.collection.mutable.ArrayBuffer.from(ingestRun())
+    isoRerun.whileContended(iso.toSeq, !overBudget)(iso ++= ingestRun())
+    if (isoRerun.contended(iso.toSeq) && overBudget && !isoRerun.capped)
+      shed("iso:rerun", "skipped(budget)")
+    val isoRow = Timed("ingest_isolated", iso.toSeq)
+    val isoExt = isoRow.best.ext
+    record(_.copy(iso = Some(Iso(isoRow, isoRerun.waitedSec,
+      gateMet = isoExt >= 0 && isoExt <= GateIso))))
 
     // the final (non-partial) artifact write; `markFinal` flips the
     // shutdown hook to a no-op inside the same lock, so the hook can
     // never clobber a complete artifact with a partial line
     flush(partial = false, toStdout = true, markFinal = true)
     spark.stop()
+    val errors = rec.errors
     if (errors.nonEmpty) {
       System.err.println(
         s"[bench] ${errors.size} queries FAILED: ${errors.keys.mkString(", ")}")

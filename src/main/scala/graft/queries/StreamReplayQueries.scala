@@ -280,11 +280,14 @@ object StreamReplayQueries {
       val sdc = new graft.streaming.StreamingDecontamination(s, stateDir,
         "doc_id", "text")
       sdc.seed(bench0, "text")
-      val b0 = sdc.admit(batchDf(0), 0L).withColumn("batch", lit(0))
-      sdc.addBenchmark(bench1, "text", 1L)
-      sdc.compact(upTo = 1L)
+      val b0 = sdc.described("admit", 0)(sdc.admit(batchDf(0), 0L))
+        .withColumn("batch", lit(0))
+      sdc.described("addBenchmark", 1)(sdc.addBenchmark(bench1, "text", 1L))
+      sdc.described("compact", 1)(sdc.compact(upTo = 1L))
       val rest = (1 until 3).map { k =>
-        sdc.admit(batchDf(k), (k + 1).toLong).withColumn("batch", lit(k + 1))
+        val id = (k + 1).toLong
+        sdc.described("admit", id)(sdc.admit(batchDf(k), id))
+          .withColumn("batch", lit(k + 1))
       }
       (b0 +: rest).reduce(_ unionByName _)
         .select(col("batch"), col("id"), col("n_grams"), col("n_hits"),
@@ -695,8 +698,8 @@ object StreamReplayQueries {
       f0.seed(e.filter(lit(false))); r0.seed(e.filter(lit(false)))
       def runBatch(f: graft.streaming.StreamingWindowFunnel,
           r: graft.streaming.StreamingRetention, b: Int) = {
-        val fl = f.admit(batches(b), b.toLong)
-        val rt = r.admit(batches(b), b.toLong)
+        val fl = f.described("admit", b)(f.admit(batches(b), b.toLong))
+        val rt = r.described("admit", b)(r.admit(batches(b), b.toLong))
         fl.join(rt, Seq("user_id"), "full_outer")
           .withColumn("batch", lit(b))
       }
@@ -704,7 +707,7 @@ object StreamReplayQueries {
       // force the admits before discarding the instances: the restart
       // must read batch 0's state from DISK, not from these objects
       out0.cache().count()
-      f0.compact(upTo = 0L)
+      f0.described("compact", 0)(f0.compact(upTo = 0L))
       val f1 = mkFunnel(); val r1 = mkRetention() // <- the restart
       val outs = out0 +: (1 until 3).map(b => runBatch(f1, r1, b))
       outs.reduce(_ unionByName _)
@@ -766,25 +769,27 @@ object StreamReplayQueries {
         // recomputing a scan five times is cheaper than holding 3
         // batches in block storage and losing lineage recovery
         val bd = batches(b)
+        def admit(op: graft.streaming.StandingOperator, df: DataFrame) =
+          op.described("admit", b)(op.admit(df, b.toLong))
         Seq(
-          t._1.admit(bd, b.toLong)
+          admit(t._1, bd)
             .select(lit("funnel").as("tier"),
             col("user_id").cast("string").as("k"),
             col("level").cast("double").as("v1"), dNull.as("v2")),
-          t._2.admit(bd, b.toLong)
+          admit(t._2, bd)
             .select(lit("retention").as("tier"),
             col("user_id").cast("string").as("k"),
             (col("r0") * 4 + col("r1") * 2 + col("r2"))
               .cast("double").as("v1"), dNull.as("v2")),
-          t._3.admit(bd, b.toLong)
+          admit(t._3, bd)
             .select(lit("uniq").as("tier"),
             col("event_type").as("k"), col("est").cast("double").as("v1"),
             col("n_regs").cast("double").as("v2")),
-          t._4.admit(quantIn(bd), b.toLong)
+          admit(t._4, quantIn(bd))
             .select(lit("quantile").as("tier"),
             col("event_type").as("k"), col("p50").as("v1"),
             col("p90").as("v2")),
-          t._5.admit(sumIn(bd), b.toLong)
+          admit(t._5, sumIn(bd))
             .select(lit("summing").as("tier"),
             col("k"), round(col("v").cast("double"), 6).as("v1"),
             dNull.as("v2"))
@@ -792,8 +797,8 @@ object StreamReplayQueries {
       }
       val out0 = runBatch(t0, 0)
       out0.cache().count() // force before instance discard
-      t0._1.compact(upTo = 0L); t0._3.compact(upTo = 0L)
-      t0._4.compact(upTo = 0L); t0._5.compact(upTo = 0L)
+      Seq[graft.streaming.KeyedFold](t0._1, t0._3, t0._4, t0._5).foreach(
+        op => op.described("compact", 0)(op.compact(upTo = 0L)))
       val t1 = mkTiers() // <- the cold restart: state re-read from disk
       val outs = out0 +: (1 until 3).map(b => runBatch(t1, b))
       outs.reduce(_ unionByName _)

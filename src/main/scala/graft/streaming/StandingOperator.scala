@@ -102,27 +102,29 @@ trait StandingOperator extends Serializable {
     admitBatch(batch, batchId)
   }
 
+  /** `body` under the job description `<operator> <step> <id>`, the
+    * prior description restored after it, so a job table attributes
+    * every job to the admit or compaction that ran it.
+    */
+  final def described[A](step: String, id: Long)(body: => A): A = {
+    val sc = spark.sparkContext
+    val prior = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"${getClass.getSimpleName} $step $id")
+    try body finally sc.setJobDescription(prior)
+  }
+
   /** Replay `batches` in order: admit batch k as id k (k = 0..n-1), tag
     * its output with a `batch` column, fold the state after batch 0 (so
     * later batches read it through a compaction), and union the outputs.
-    * Each admit runs under the job description `<operator> admit k`, so a
-    * job table attributes every job to its admit.
+    * Each step runs [[described]] `admit k` or `compact 0`.
     */
-  final def replay(batches: Seq[DataFrame]): DataFrame = {
-    val sc = spark.sparkContext
-    val prior = sc.getLocalProperty("spark.job.description")
-    val name = getClass.getSimpleName
-    try batches.zipWithIndex.map { case (batch, k) =>
-      sc.setJobDescription(s"$name admit $k")
-      val out = admit(batch, k.toLong).withColumn("batch", lit(k))
-      if (k == 0) {
-        sc.setJobDescription(s"$name compact 0")
-        compactStates(Long.MinValue, 0L)
-      }
+  final def replay(batches: Seq[DataFrame]): DataFrame =
+    batches.zipWithIndex.map { case (batch, k) =>
+      val out = described("admit", k)(admit(batch, k.toLong))
+        .withColumn("batch", lit(k))
+      if (k == 0) described("compact", 0)(compactStates(Long.MinValue, 0L))
       out
     }.reduce(_ unionByName _)
-    finally sc.setJobDescription(prior)
-  }
 
   /** Wire a streaming source into the standing operator: each
     * micro-batch is admitted and its output lands in `outDir/batch=<id>`

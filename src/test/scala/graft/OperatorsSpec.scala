@@ -46,6 +46,30 @@ class OperatorsSpec extends AnyFunSuite with LocalSpark {
     val ids = spark.table("dedup_stream").select("doc_id")
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(ids.length === 3 && ids.last === 5L)
+
+    // the bounded-state path: a fingerprint's state lives until the
+    // watermark passes its first event time + the 10 s delay
+    val timed = MemoryStream[(Long, String, java.sql.Timestamp)]
+    // event times well after the epoch: the initial watermark is 0, and a
+    // row at or below the watermark is dropped as late
+    def at(sec: Long) = new java.sql.Timestamp((1700000000L + sec) * 1000L)
+    val bounded = Dedup.dropExactStreamingWithinWatermark(
+      timed.toDS().toDF("doc_id", "text", "ts").withWatermark("ts", "10 seconds"),
+      col("text"))
+    val wq = bounded.writeStream.format("memory")
+      .queryName("dedup_stream_wm").outputMode("append").start()
+    timed.addData((1L, "alpha beta", at(0)), (2L, "gamma delta", at(0)))
+    wq.processAllAvailable()
+    timed.addData((3L, "Alpha  Beta ", at(5))) // twin inside the delay
+    wq.processAllAvailable()
+    timed.addData((4L, "epsilon", at(60))) // moves the watermark to 50 s
+    wq.processAllAvailable()
+    timed.addData((5L, "alpha beta", at(61))) // twin after its state expired
+    wq.processAllAvailable()
+    wq.stop()
+    val wmIds = spark.table("dedup_stream_wm").select("doc_id")
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(wmIds === Seq(1L, 2L, 4L, 5L))
   }
 
   test("curation ops compose in a streaming pipeline (filter -> scrub -> dedup)") {
