@@ -785,16 +785,11 @@ object Dedup {
     * `maxHamming` <= 7 at 17 keys per band — candidate growth
     * ~n²·68/65536, never the n²/64 a single-byte re-band would cost.
     *
-    * `maxBucketSize > 0` arms the hot-bucket guard: any (band, key)
-    * bucket holding more members than the cap is EXCLUDED from pairing
-    * (both the member side and the probe side), so a pathological key —
-    * boilerplate clones, adversarial near-constant text — degrades to a
-    * bounded skip instead of a quadratic blob on one reducer. The hot-key
-    * set is tiny by construction (> cap members each), so the exclusion
-    * is a broadcast anti-join, and documents in a dropped bucket remain
-    * discoverable through their other three bands. Off (0) by default:
-    * the guard trades recall on degenerate keys for worst-case bounds,
-    * which is an operator's call, not a silent one.
+    * `maxBucketSize > 0` arms [[HammingBands.withoutHotBuckets]]: a
+    * pathological key — boilerplate clones, adversarial near-constant
+    * text — degrades to a bounded skip. Off (0) by default: the guard
+    * trades recall on degenerate keys for worst-case bounds, which is an
+    * operator's call, not a silent one.
     *
     * NO occupancy refusal here, deliberately (the embedding bands'
     * [[Similarity.requireBandOccupancy]] rule was probed and does NOT
@@ -812,33 +807,10 @@ object Dedup {
   def nearDupPairsSimhash(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, wideRecall: Boolean = false,
       maxBucketSize: Int = 0): DataFrame = {
-    if (wideRecall) require(maxHamming >= 0 && maxHamming < 8,
-      "1-bit-probed 16-bit bands guarantee recall only for maxHamming <= 7")
-    else require(maxHamming >= 0 && maxHamming < 4,
-      "4 16-bit bands guarantee recall only for maxHamming <= 3; " +
-        "pass wideRecall=true (1-bit band probing) for 4..7")
-    val sigs = simhashDF(df, idCol, textCol)
-    val banded = sigs.select(col("id"), col("sh"),
-      posexplode(array((0 until 4).map(b =>
-        shiftright(col("sh"), b * 16).bitwiseAND(0xFFFFL)): _*)).as(Seq("band", "key")))
-    val probed = if (!wideRecall) banded
-    else sigs.select(col("id"), col("sh"),
-        posexplode(array((0 until 4).map { b =>
-          val key = shiftright(col("sh"), b * 16).bitwiseAND(0xFFFFL)
-          array(key +: (0 until 16).map(i =>
-            key.bitwiseXOR(lit(1L << i))): _*)
-        }: _*)).as(Seq("band", "keys")))
-      .select(col("id"), col("sh"), col("band"),
-        explode(col("keys")).as("key"))
-    val (memberSide, probeSide) = if (maxBucketSize <= 0) (banded, probed)
-    else {
-      val hot = banded.groupBy(col("band"), col("key"))
-        .agg(count(lit(1)).as("__n"))
-        .filter(col("__n") > maxBucketSize)
-        .select(col("band"), col("key"))
-      (banded.join(broadcast(hot), Seq("band", "key"), "left_anti"),
-        probed.join(broadcast(hot), Seq("band", "key"), "left_anti"))
-    }
+    HammingBands.requireRecall(maxHamming, wideRecall)
+    val sigs = simhashDF(df, idCol, textCol).select(col("id"), col("sh"))
+    val (memberSide, probeSide) = HammingBands.withoutHotBuckets(
+      HammingBands.sides(sigs, "sh", wideRecall), maxBucketSize)
     memberSide.as("l").join(probeSide.as("r"),
         col("l.band") === col("r.band") && col("l.key") === col("r.key") &&
         col("l.id") < col("r.id"))

@@ -294,7 +294,7 @@ object Multimodal {
     * image fingerprints. Default 4×16-bit bands (exact recall for
     * `maxHamming` <= 3, candidate-safe at corpus scale); `wideRecall`
     * probes each band's 1-bit ball for exact 4..7-bit recall
-    * ([[bandCols]]). The only exchange is the (band, key) equi-join over
+    * ([[HammingBands]]). The only exchange is the (band, key) equi-join over
     * narrow (id, hash) rows; payloads and luma maps never reach it.
     *
     * `collapseIdentical` (the DEFAULT) makes the pair output clique-safe:
@@ -577,40 +577,6 @@ object Multimodal {
         sum(col("energy")).as("energy_sum"))
   }
 
-  /** The hamming-banding knob shared by every 64-bit-fingerprint near-dup
-    * join: 4×16-bit bands, 65,536 keys per band (the same width the text
-    * tier's simhash banding uses, `Dedup.scala`) — EXACT recall for
-    * maxHamming <= 3 by pigeonhole, and the 100-TB-safe shape because a
-    * band key space this wide keeps candidate pairs proportional to true
-    * collisions. `wideRecall = true` keeps the SAME 16-bit bands but
-    * probes each band within a 1-bit ball ([[probeKeys]]): 7 differing
-    * bits across 4 bands leave some band with <= 1 differing bit, so
-    * recall is exact up to maxHamming <= 7 at ~(1+16)×4 keys per item —
-    * candidate growth ~n²·68/65536 ≈ n²/964 on adversarial corpora,
-    * 15× tighter than single-byte banding (the naive way to reach
-    * 7-bit recall, which collapses to 256 keys per band and ~n²/64).
-    */
-  private def bandCols(hash: Column): Seq[Column] =
-    (0 until 4).map(b => shiftright(hash, b * 16).bitwiseAND(0xFFFFL))
-
-  /** Per band: the exact key plus its 16 single-bit flips — the 1-bit
-    * probe ball of [[bandCols]]' key. A pair whose band keys differ in
-    * <= 1 bit collides on (band, key) between one side's exact key and
-    * the other side's ball.
-    */
-  private def probeKeys(hash: Column): Seq[Column] =
-    (0 until 4).map { b =>
-      val key = shiftright(hash, b * 16).bitwiseAND(0xFFFFL)
-      array(key +: (0 until 16).map(i => key.bitwiseXOR(lit(1L << i))): _*)
-    }
-
-  private def requireBandRecall(maxHamming: Int, wideRecall: Boolean): Unit =
-    if (wideRecall) require(maxHamming >= 0 && maxHamming < 8,
-      "1-bit-probed 16-bit bands guarantee recall only for maxHamming <= 7")
-    else require(maxHamming >= 0 && maxHamming < 4,
-      "4 16-bit bands guarantee recall only for maxHamming <= 3; " +
-        "pass wideRecall=true (1-bit band probing) for 4..7")
-
   /** Collapse identical fingerprints into one representative row:
     * (id = min asset_id of the clique, hash, clique = member count). A
     * single key-sized groupBy exchange — the pre-pass that makes pair
@@ -637,7 +603,7 @@ object Multimodal {
     * the shared engine behind [[imageNearDups]] and [[audioNearDups]]:
     * block on the hash's 4×16-bit bands (pigeonhole: recall EXACT for
     * maxHamming <= 3; `wideRecall` probes each band's 1-bit ball for
-    * exact recall <= 7, see [[bandCols]]), verify with true hamming. The
+    * exact recall <= 7, see [[HammingBands]]), verify with true hamming. The
     * only exchange is the (band, key) equi-join over narrow
     * (id, hash) rows.
     *
@@ -672,34 +638,14 @@ object Multimodal {
       maxHamming: Int, wideRecall: Boolean = false,
       collapseIdentical: Boolean = true,
       maxBucketSize: Int = 0): DataFrame = {
-    requireBandRecall(maxHamming, wideRecall)
+    HammingBands.requireRecall(maxHamming, wideRecall)
     val members =
       if (collapseIdentical) collapseByFingerprint(hashed, hashCol)
       else hashed.select(col("asset_id").as("id"), col(hashCol),
         lit(1L).as("clique"))
-    val anchor0 = members.select(col("id"), col(hashCol), col("clique"),
-      posexplode(array(bandCols(col(hashCol)): _*)).as(Seq("band", "key")))
-    // a <= 1-bit band difference collides between one side's EXACT key
-    // and the other side's probe ball, so only ONE side expands 17×
-    val probe0 = if (!wideRecall) anchor0
-    else members.select(col("id"), col(hashCol), col("clique"),
-        posexplode(array(probeKeys(col(hashCol)): _*)).as(Seq("band", "keys")))
-      .select(col("id"), col(hashCol), col("clique"), col("band"),
-        explode(col("keys")).as("key"))
-    // hot-bucket cap ([[Dedup.nearDupPairsSimhash]]'s guard, carried to
-    // the multimodal families): buckets over the cap are EXCLUDED from
-    // both sides via a tiny broadcast anti-join — a boilerplate-
-    // thumbnail key degrades to a bounded skip instead of a quadratic
-    // blob, and its members stay discoverable through their other bands
-    val (anchor, probe) = if (maxBucketSize <= 0) (anchor0, probe0)
-    else {
-      val hot = anchor0.groupBy(col("band"), col("key"))
-        .agg(count(lit(1)).as("__n"))
-        .filter(col("__n") > maxBucketSize)
-        .select(col("band"), col("key"))
-      (anchor0.join(broadcast(hot), Seq("band", "key"), "left_anti"),
-        probe0.join(broadcast(hot), Seq("band", "key"), "left_anti"))
-    }
+    val (anchor, probe) = HammingBands.withoutHotBuckets(HammingBands.sides(
+      members.select(col("id"), col(hashCol), col("clique")), hashCol,
+      wideRecall), maxBucketSize)
     anchor.as("l").join(probe.as("r"),
         col("l.band") === col("r.band") && col("l.key") === col("r.key") &&
         col("l.id") < col("r.id"))
@@ -713,7 +659,7 @@ object Multimodal {
   /** Energy-fingerprint audio near-dup pairs over [[decodeAudio]] output —
     * volume-shifted copies land at hamming 0, lightly-edited copies within
     * a few bits. Same banded shape as [[imageNearDups]]; `wideRecall`
-    * probes 1-bit band balls for 4..7-bit recall ([[bandCols]]).
+    * probes 1-bit band balls for 4..7-bit recall ([[HammingBands]]).
     * MIGRATION: the `collapseIdentical = true` default changed the pair
     * output exactly as documented on [[imageNearDups]] — exact-dup
     * members now ride [[collapseByFingerprint]], not (a, b).
@@ -895,7 +841,7 @@ object Multimodal {
   /** Video near-dup pairs over [[decodeVideoFrames]] output: band each
     * frame's dHash ([[bandedHammingPairs]]' pigeonhole; 4×16-bit bands,
     * recall-exact for `maxHamming` <= 3, `wideRecall` 1-bit band probing
-    * for 4..7 per [[bandCols]]) WITHIN its frame slot, count frame slots whose
+    * for 4..7 per [[HammingBands]]) WITHIN its frame slot, count frame slots whose
     * hashes sit within `maxHamming`, and keep pairs where at least
     * `minMatchPct` percent of the LONGER video's frames match — integer
     * arithmetic end to end, so oracles recompute it exactly. The only
@@ -921,7 +867,7 @@ object Multimodal {
   def videoNearDups(frames: DataFrame, maxHamming: Int = 3,
       minMatchPct: Int = 80, wideRecall: Boolean = false,
       collapseIdentical: Boolean = true): DataFrame = {
-    requireBandRecall(maxHamming, wideRecall)
+    HammingBands.requireRecall(maxHamming, wideRecall)
     require(minMatchPct >= 1 && minMatchPct <= 100,
       "minMatchPct is a percentage")
     // sequence signature = the ordered (frame_id, dhash) list: total
@@ -947,15 +893,9 @@ object Multimodal {
             size(col("__sig")).cast("long").as("n_frames"))
         frames.join(cliques, Seq("asset_id"))
       }
-    val banded = fr.select(col("asset_id").as("id"), col("frame_id"),
-      col("dhash"), col("clique"), col("n_frames"),
-      posexplode(array(bandCols(col("dhash")): _*)).as(Seq("band", "key")))
-    val probed = if (!wideRecall) banded
-    else fr.select(col("asset_id").as("id"), col("frame_id"),
-        col("dhash"), col("clique"), col("n_frames"),
-        posexplode(array(probeKeys(col("dhash")): _*)).as(Seq("band", "keys")))
-      .select(col("id"), col("frame_id"), col("dhash"), col("clique"),
-        col("n_frames"), col("band"), explode(col("keys")).as("key"))
+    val (banded, probed) = HammingBands.sides(
+      fr.select(col("asset_id").as("id"), col("frame_id"), col("dhash"),
+        col("clique"), col("n_frames")), "dhash", wideRecall)
     val framePairs = banded.as("l").join(probed.as("r"),
         col("l.frame_id") === col("r.frame_id") &&
         col("l.band") === col("r.band") && col("l.key") === col("r.key") &&

@@ -166,8 +166,7 @@ object Similarity {
     * query; exact cosine re-rank inside the candidate set. Recall rises
     * with more/narrower bands; the exact path above is the oracle.
     *
-    * `multiProbe` (on by default) additionally probes each query band
-    * key's 1-bit flips — the standard multi-probe trick: top-k
+    * Each query band key is also probed at its 1-bit flips — the standard multi-probe trick: top-k
     * neighbors are often WEAK-similarity pairs whose signatures land one
     * bit off the query's bucket, and probing the `bandBits` adjacent
     * buckets recovers them without adding bands. The probe expansion
@@ -177,7 +176,7 @@ object Similarity {
     * re-rank only.
     */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int, dims: Int,
-      nBits: Int = 16, bandBits: Int = 4, multiProbe: Boolean = true,
+      nBits: Int = 16, bandBits: Int = 4,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     def withBands(df: DataFrame, idAs: String, vecAs: String) =
       df.select(col(idCol).as(idAs), col(vecCol).as(vecAs),
@@ -187,12 +186,9 @@ object Similarity {
 
     val c = withBands(corpus, "nn_id", "nn_vec")
     val q0 = withBands(queries, "query_id", "q_vec")
-    val q =
-      if (!multiProbe) q0.select(col("query_id"), col("q_vec"), col("band"),
-        col("key").as("probe"))
-      else q0.select(col("query_id"), col("q_vec"), col("band"),
-        explode(array(col("key") +: (0 until bandBits).map(b =>
-          col("key").bitwiseXOR(lit(1L << b))): _*)).as("probe"))
+    val q = q0.select(col("query_id"), col("q_vec"), col("band"),
+      explode(array(col("key") +: (0 until bandBits).map(b =>
+        col("key").bitwiseXOR(lit(1L << b))): _*)).as("probe"))
     val candidates = c.join(broadcast(q),
         c("band") === q("band") && c("key") === col("probe") &&
         col("query_id") =!= col("nn_id"))
@@ -552,18 +548,15 @@ object Similarity {
   /** The no-train path against existing codebooks. `lutChunk` bounds
     * the literal LUTs per generate (see the scoring comment below);
     * the default is the measured codegen sweet spot — it is a physical
-    * knob only, results are identical at any value. `pinCodes` picks
-    * how multi-chunk batches materialize the encoded corpus:
-    * `localCheckpoint` (default — fastest, but severs lineage, so an
-    * executor lost after the pin is unrecoverable) vs
-    * `persist(DISK_ONLY)` (lineage retained — preemptible-executor
-    * deployments trade a possible re-encode for recoverability).
-    * Results are identical either way.
+    * knob only, results are identical at any value. Multi-chunk batches
+    * pin the encoded corpus with `localCheckpoint` (fastest, but it
+    * severs lineage, so an executor lost after the pin is
+    * unrecoverable).
     */
   def pqTopKWithBooks(corpus: DataFrame, queries: DataFrame, k: Int,
       books: PqCodebooks, rerank: Int = 8,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      lutChunk: Int = 100, pinCodes: Boolean = true): DataFrame = {
+      lutChunk: Int = 100): DataFrame = {
     require(lutChunk >= 1, "lutChunk must be positive")
     val vecd = col(vecCol).cast(ArrayType(DoubleType))
     // per-query ADC lookup tables, built driver-side from the bounded
@@ -582,8 +575,7 @@ object Similarity {
       books.encode(vecd).as("codes"))
     val codes =
       if (luts.lengthCompare(lutChunk) <= 0) codesPlan
-      else if (pinCodes) codesPlan.localCheckpoint()
-      else codesPlan.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+      else codesPlan.localCheckpoint()
     // ADC scoring as a joinless generate over the code scan: the luts
     // ride along as array LITERALS (the IVF centroid trick). The
     // previous broadcast-join form (`codes JOIN broadcast(luts) ON
@@ -1078,22 +1070,14 @@ object Similarity {
 
   /** Stage 1 of [[nearDupsPreparedEmbedding]]: (ref_id, new_id)
     * candidates from the RHP band equi-join, first-matching-band
-    * emission (so no distinct is needed). Broken out so
-    * [[graft.streaming.StreamingEmbeddingDedup]] can broadcast-hint the
-    * fresh side and pin the candidates before verification.
+    * emission (so no distinct is needed).
     */
-  def bandCandidatesEmbedding(kRef: DataFrame, kNew: DataFrame,
-      broadcastFresh: Boolean = false): DataFrame = {
-    // the hint goes ABOVE the explode: below it, it would have to
-    // propagate through Generate to reach the join
-    val fresh = if (broadcastFresh) broadcast(explodeWithPrefix(kNew))
-      else explodeWithPrefix(kNew)
-    explodeWithPrefix(kRef).as("l").join(fresh.as("r"),
+  def bandCandidatesEmbedding(kRef: DataFrame, kNew: DataFrame): DataFrame =
+    explodeWithPrefix(kRef).as("l").join(explodeWithPrefix(kNew).as("r"),
         col("l.band") === col("r.band") && col("l.key") === col("r.key"))
       .filter(!graft.functions.SharesEarlierBand.of(
         col("l.pre"), col("r.pre"), col("l.band")))
       .select(col("l.id").as("ref_id"), col("r.id").as("new_id"))
-  }
 
   /** The exploded-state twin of [[bandCandidatesEmbedding]]: both sides
     * arrive one-row-per-(id, band, key) — the layout a standing pipeline

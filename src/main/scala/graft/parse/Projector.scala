@@ -51,7 +51,8 @@ object Projector {
     val parsed0 =
       if (df.columns.contains("__msg__")) df
       else df.withColumn("__msg__", msg)
-    // P5: unparseable JSON -> dropped (counted by the caller via metrics)
+    // P5: unparseable JSON -> dropped. No caller counts these drops yet;
+    // ROADMAP direction 4 puts a parse-error counter on /metrics.
     val parsed = parsed0.filter(col("__msg__").isNotNull)
 
     // Stage 1: navigate the message ONCE per dim into a variant column.

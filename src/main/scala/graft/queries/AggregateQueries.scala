@@ -14,6 +14,8 @@ import graft.Tables
   * passed through, never re-associated.
   */
 object AggregateQueries {
+  import SharedOracles._
+
   val queries: Seq[Query] = Seq(
     // --- flagship: pricing summary (hash agg + exact decimal sums) ------
     Query("q1_agg",
@@ -267,16 +269,7 @@ object AggregateQueries {
       // weighted discrete quantile: per-(flag, tier) weight sums, then the
       // smallest tier whose cumulative weight reaches ceil(num*W/den) —
       // exact integer arithmetic end to end
-      """WITH t AS (
-        |  SELECT l_returnflag AS flag,
-        |    CAST(floor(l_extendedprice / 1000) AS BIGINT) AS v,
-        |    CAST(l_quantity AS BIGINT) AS w
-        |  FROM lineitem),
-        |g AS (SELECT flag, v, sum(w) AS w FROM t GROUP BY 1, 2),
-        |c AS (
-        |  SELECT flag, v, sum(w) OVER (PARTITION BY flag ORDER BY v) AS cum,
-        |    sum(w) OVER (PARTITION BY flag) AS n
-        |  FROM g)
+      s"""WITH $weightedRankCtes
         |SELECT flag, CAST(max(n) AS BIGINT) AS w_total,
         |  min(CASE WHEN cum >= (n * 1 + 1) // 2 THEN v END) AS p50,
         |  min(CASE WHEN cum >= (n * 9 + 9) // 10 THEN v END) AS p90,
@@ -584,26 +577,10 @@ object AggregateQueries {
       // uniqHLL replay: same md5 hash (md5_number_lower == PortableHash
       // .md5Lo), same 512 registers, same capped rho via bin() bit-length,
       // same single double division of exact-integer operands
-      """WITH h AS (
-        |  SELECT event_type,
-        |    CAST(md5_number_lower(CAST(user_id AS VARCHAR)) >> 4 AS BIGINT) AS h
-        |  FROM events),
-        |r AS (
-        |  SELECT event_type, h % 512 AS reg,
-        |    LEAST(CASE WHEN h // 512 = 0 THEN 52
-        |          ELSE 52 - length(bin(h // 512)) END, 30) AS rho
-        |  FROM h),
-        |m AS (SELECT event_type, reg, max(rho) AS m FROM r GROUP BY 1, 2),
-        |s AS (
-        |  SELECT event_type,
-        |    sum(CAST(1 AS BIGINT) << (30 - m)) AS s_present,
-        |    count(*) AS n_regs
-        |  FROM m GROUP BY 1),
+      s"""WITH $hllCtes,
         |e AS (
         |  SELECT event_type, n_regs, 512 - n_regs AS v0,
-        |    202600935058957.5 / CAST(
-        |      s_present + (512 - n_regs) * (CAST(1 AS BIGINT) << 30)
-        |      AS DOUBLE) AS raw
+        |    $hllRaw
         |  FROM s)
         |SELECT event_type,
         |  CAST(CASE WHEN v0 > 0 AND raw <= 1280.0
@@ -626,26 +603,10 @@ object AggregateQueries {
       // the DIRECT whole-corpus aggregate (same HLL replay as q_uniq_hll
       // plus exact count/sum) — the Spark side merges per-job partial
       // states, so equality IS the -State/-Merge invariance proof
-      """WITH h AS (
-        |  SELECT event_type,
-        |    CAST(md5_number_lower(CAST(user_id AS VARCHAR)) >> 4 AS BIGINT) AS h
-        |  FROM events),
-        |r AS (
-        |  SELECT event_type, h % 512 AS reg,
-        |    LEAST(CASE WHEN h // 512 = 0 THEN 52
-        |          ELSE 52 - length(bin(h // 512)) END, 30) AS rho
-        |  FROM h),
-        |m AS (SELECT event_type, reg, max(rho) AS m FROM r GROUP BY 1, 2),
-        |s AS (
-        |  SELECT event_type,
-        |    sum(CAST(1 AS BIGINT) << (30 - m)) AS s_present,
-        |    count(*) AS n_regs
-        |  FROM m GROUP BY 1),
+      s"""WITH $hllCtes,
         |e AS (
         |  SELECT event_type, n_regs, 512 - n_regs AS v0,
-        |    202600935058957.5 / CAST(
-        |      s_present + (512 - n_regs) * (CAST(1 AS BIGINT) << 30)
-        |      AS DOUBLE) AS raw
+        |    $hllRaw
         |  FROM s),
         |a AS (
         |  SELECT event_type, count(*) AS n,
@@ -688,15 +649,7 @@ object AggregateQueries {
       // count below k, floor of one double division above — the constant
       // 4703919738795935662080.0 is (k-1)*2^64 for k=256, parsed to the
       // identical IEEE double by both engines
-      """WITH h AS (
-        |  SELECT DISTINCT event_type,
-        |    md5_number_lower(CAST(event_id AS VARCHAR))::HUGEINT AS h
-        |  FROM events),
-        |r AS (
-        |  SELECT event_type, h,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY h) AS rn,
-        |    count(*) OVER (PARTITION BY event_type) AS n_d
-        |  FROM h)
+      s"""WITH ${kmvRankCtes("", "FROM events")}
         |SELECT event_type,
         |  CAST(CASE WHEN n_d < 256 THEN n_d
         |    ELSE floor(4703919738795935662080.0 / CAST(h AS DOUBLE))
@@ -818,21 +771,7 @@ object AggregateQueries {
       // HdrHistogram-style quantile sketch replay: scale to integer cents,
       // keep the top 8 bits (bin() bit-length, no float log2), pick each
       // quantile's bucket lower bound by exact integer ceil-rank
-      """WITH v AS (
-        |  SELECT l_returnflag,
-        |    CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS s
-        |  FROM lineitem),
-        |b AS (
-        |  SELECT l_returnflag, s,
-        |    GREATEST(length(bin(s)) - 8, 0) AS w FROM v),
-        |hist AS (
-        |  SELECT l_returnflag, (s >> w) << w AS blo, count(*) AS cnt
-        |  FROM b GROUP BY 1, 2),
-        |c AS (
-        |  SELECT l_returnflag, blo, cnt,
-        |    sum(cnt) OVER (PARTITION BY l_returnflag ORDER BY blo) AS cum,
-        |    sum(cnt) OVER (PARTITION BY l_returnflag) AS n
-        |  FROM hist)
+      s"""WITH $quantileSketchCtes
         |SELECT l_returnflag, CAST(max(n) AS BIGINT) AS n,
         |  CAST(min(CASE WHEN cum >= (n * 1 + 1) // 2 THEN blo END)
         |    AS DOUBLE) / CAST(100 AS DOUBLE) AS p50,
@@ -856,26 +795,10 @@ object AggregateQueries {
     Query("q_uniq_hll_sql",
       // same register replay as q_uniq_hll, trimmed to the UDAF's
       // single-column output
-      """WITH h AS (
-        |  SELECT event_type,
-        |    CAST(md5_number_lower(CAST(user_id AS VARCHAR)) >> 4 AS BIGINT) AS h
-        |  FROM events),
-        |r AS (
-        |  SELECT event_type, h % 512 AS reg,
-        |    LEAST(CASE WHEN h // 512 = 0 THEN 52
-        |          ELSE 52 - length(bin(h // 512)) END, 30) AS rho
-        |  FROM h),
-        |m AS (SELECT event_type, reg, max(rho) AS m FROM r GROUP BY 1, 2),
-        |s AS (
-        |  SELECT event_type,
-        |    sum(CAST(1 AS BIGINT) << (30 - m)) AS s_present,
-        |    count(*) AS n_regs
-        |  FROM m GROUP BY 1),
+      s"""WITH $hllCtes,
         |e AS (
         |  SELECT event_type, 512 - n_regs AS v0,
-        |    202600935058957.5 / CAST(
-        |      s_present + (512 - n_regs) * (CAST(1 AS BIGINT) << 30)
-        |      AS DOUBLE) AS raw
+        |    $hllRaw
         |  FROM s)
         |SELECT event_type,
         |  CAST(CASE WHEN v0 > 0 AND raw <= 1280.0
@@ -891,21 +814,7 @@ object AggregateQueries {
     Query("q_quantile_sketch_sql",
       // same bucket replay as q_quantile_sketch, trimmed to the UDAF's
       // per-quantile outputs
-      """WITH v AS (
-        |  SELECT l_returnflag,
-        |    CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS s
-        |  FROM lineitem),
-        |b AS (
-        |  SELECT l_returnflag, s,
-        |    GREATEST(length(bin(s)) - 8, 0) AS w FROM v),
-        |hist AS (
-        |  SELECT l_returnflag, (s >> w) << w AS blo, count(*) AS cnt
-        |  FROM b GROUP BY 1, 2),
-        |c AS (
-        |  SELECT l_returnflag, blo, cnt,
-        |    sum(cnt) OVER (PARTITION BY l_returnflag ORDER BY blo) AS cum,
-        |    sum(cnt) OVER (PARTITION BY l_returnflag) AS n
-        |  FROM hist)
+      s"""WITH $quantileSketchCtes
         |SELECT l_returnflag,
         |  CAST(min(CASE WHEN cum >= (n * 1 + 1) // 2 THEN blo END)
         |    AS DOUBLE) / CAST(100 AS DOUBLE) AS p50,
@@ -926,16 +835,7 @@ object AggregateQueries {
     Query("q_quantile_weighted_sql",
       // same weighted-rank replay as q_quantile_weighted, trimmed to the
       // UDAF's per-quantile outputs
-      """WITH t AS (
-        |  SELECT l_returnflag AS flag,
-        |    CAST(floor(l_extendedprice / 1000) AS BIGINT) AS v,
-        |    CAST(l_quantity AS BIGINT) AS w
-        |  FROM lineitem),
-        |g AS (SELECT flag, v, sum(w) AS w FROM t GROUP BY 1, 2),
-        |c AS (
-        |  SELECT flag, v, sum(w) OVER (PARTITION BY flag ORDER BY v) AS cum,
-        |    sum(w) OVER (PARTITION BY flag) AS n
-        |  FROM g)
+      s"""WITH $weightedRankCtes
         |SELECT flag,
         |  min(CASE WHEN cum >= (n * 1 + 1) // 2 THEN v END) AS p50,
         |  min(CASE WHEN cum >= (n * 9 + 9) // 10 THEN v END) AS p90
@@ -1334,4 +1234,43 @@ object AggregateQueries {
   )
 
   private def dec(c: Column): Column = c.cast(DecimalType(18, 2))
+
+  /** The uniqHLL registers over every event (the q_uniq_hll recipe). */
+  private lazy val hllCtes = hllRegisterCtes("", "", "FROM events")
+
+  /** The quantile-sketch buckets per return flag: prices in integer
+    * cents, the top 8 bits kept (bin() bit-length, no float log2), the
+    * per-bucket counts and their running sum `cum` of `n`.
+    */
+  private lazy val quantileSketchCtes =
+    """v AS (
+      |  SELECT l_returnflag,
+      |    CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS s
+      |  FROM lineitem),
+      |b AS (
+      |  SELECT l_returnflag, s,
+      |    GREATEST(length(bin(s)) - 8, 0) AS w FROM v),
+      |hist AS (
+      |  SELECT l_returnflag, (s >> w) << w AS blo, count(*) AS cnt
+      |  FROM b GROUP BY 1, 2),
+      |c AS (
+      |  SELECT l_returnflag, blo, cnt,
+      |    sum(cnt) OVER (PARTITION BY l_returnflag ORDER BY blo) AS cum,
+      |    sum(cnt) OVER (PARTITION BY l_returnflag) AS n
+      |  FROM hist)""".stripMargin
+
+  /** The weighted-quantile ranks per return flag: price tiers weighted
+    * by quantity, the running weight `cum` of the total `n`.
+    */
+  private lazy val weightedRankCtes =
+    """t AS (
+      |  SELECT l_returnflag AS flag,
+      |    CAST(floor(l_extendedprice / 1000) AS BIGINT) AS v,
+      |    CAST(l_quantity AS BIGINT) AS w
+      |  FROM lineitem),
+      |g AS (SELECT flag, v, sum(w) AS w FROM t GROUP BY 1, 2),
+      |c AS (
+      |  SELECT flag, v, sum(w) OVER (PARTITION BY flag ORDER BY v) AS cum,
+      |    sum(w) OVER (PARTITION BY flag) AS n
+      |  FROM g)""".stripMargin
 }

@@ -1,7 +1,7 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.Tables
 import graft.operators.{Dedup, Similarity, TextAnalysis}
@@ -24,35 +24,29 @@ object DedupQueries {
   val queries: Seq[Query] = Seq(
     // --- exact dedup: fingerprint groups over a corpus with planted dups -
     Query("dedup_exact",
-      """WITH corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 1000000, text FROM documents)
-        |SELECT md5(regexp_replace(replace(replace(lower(trim(text)), 'ς', 'σ'), 'i' || chr(775), 'i'), '\s+', ' ', 'g')) AS fp,
+      s"""WITH ${twinCorpusCte()}
+        |SELECT md5(${canon("text")}) AS fp,
         |  MIN(doc_id) AS keeper, COUNT(*) AS n
         |FROM corpus GROUP BY 1 ORDER BY fp""".stripMargin) { (s, dir) =>
       val d = Tables(s, dir).documents
       // plant exact duplicates: every doc re-appears with a shifted id
-      val corpus = d.select(col("doc_id"), col("text"))
-        .union(d.select((col("doc_id") + 1000000).as("doc_id"), col("text")))
+      val corpus = Fixtures.twinCorpus(d, "text")
       Dedup.exactGroups(corpus, col("text"), col("doc_id"))
         .orderBy(col("fp"))
     },
 
     // --- exact dedup, drop form: keep the min-id row per fingerprint ----
     Query("dedup_drop_exact",
-      """WITH corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 1000000, text FROM documents)
+      s"""WITH ${twinCorpusCte()}
         |SELECT doc_id FROM (
         |  SELECT doc_id,
         |    row_number() OVER (
-        |      PARTITION BY md5(regexp_replace(replace(replace(lower(trim(text)), 'ς', 'σ'), 'i' || chr(775), 'i'), '\s+', ' ', 'g'))
+        |      PARTITION BY md5(${canon("text")})
         |      ORDER BY doc_id) AS rn
         |  FROM corpus)
         |WHERE rn = 1 ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val d = Tables(s, dir).documents
-      val corpus = d.select(col("doc_id"), col("text"))
-        .union(d.select((col("doc_id") + 1000000).as("doc_id"), col("text")))
+      val corpus = Fixtures.twinCorpus(d, "text")
       Dedup.dropExact(corpus, col("text"), col("doc_id"))
         .select(col("doc_id"))
         .orderBy(col("doc_id"))
@@ -85,8 +79,7 @@ object DedupQueries {
     // --- minhash-LSH near-dups (oracle recomputes signatures + banding) --
     Query("dedup_minhash_lsh", minhashOracle) { (s, dir) =>
       val d = Tables(s, dir).documents
-      val corpus = d.select(col("doc_id"), col("text"))
-        .union(d.select((col("doc_id") + 1000000).as("doc_id"), col("text")))
+      val corpus = Fixtures.twinCorpus(d, "text")
       Dedup.nearDupPairsMinhash(corpus, "doc_id", "text",
           n = 3, bands = 8, rows = 4, threshold = 0.9)
         .select(col("a"), col("b"), round(col("jaccard"), 6).as("jaccard"))
@@ -131,10 +124,9 @@ object DedupQueries {
     },
 
     // --- simhash near-dups (oracle recomputes the 64-bit signatures) -----
-    Query("dedup_simhash", simhashOracle) { (s, dir) =>
+    Query("dedup_simhash", simhashOracle(maxHamming = 3, probe = 0)) { (s, dir) =>
       val d = Tables(s, dir).documents
-      val corpus = d.select(col("doc_id"), col("text"))
-        .union(d.select((col("doc_id") + 1000000).as("doc_id"), col("text")))
+      val corpus = Fixtures.twinCorpus(d, "text")
       Dedup.nearDupPairsSimhash(corpus, "doc_id", "text", maxHamming = 3)
         .orderBy(col("a"), col("b"))
     },
@@ -143,10 +135,9 @@ object DedupQueries {
     //     within a 1-bit flip ball (multi-probe), exact recall to
     //     hamming 6 — the scale path for looser thresholds, where a
     //     single-byte re-band would cost n²/64 candidates ---------------
-    Query("dedup_simhash_wide", simhashWideOracle) { (s, dir) =>
+    Query("dedup_simhash_wide", simhashOracle(maxHamming = 6, probe = 1)) { (s, dir) =>
       val d = Tables(s, dir).documents
-      val corpus = d.select(col("doc_id"), col("text"))
-        .union(d.select((col("doc_id") + 1000000).as("doc_id"), col("text")))
+      val corpus = Fixtures.twinCorpus(d, "text")
       Dedup.nearDupPairsSimhash(corpus, "doc_id", "text", maxHamming = 6,
           wideRecall = true)
         .orderBy(col("a"), col("b"))
@@ -195,15 +186,7 @@ object DedupQueries {
     Query("dedup_substring_exact",
       // the TRUE 40-char-window join: rolling-hash banding + witness
       // verification reproduce it exactly
-      s"""WITH d AS (SELECT doc_id, text FROM documents),
-         |spans AS (SELECT doc_id AS bid, substr(text, 1, 60) AS span
-         |  FROM d WHERE doc_id < 20),
-         |planted AS (
-         |  SELECT d.doc_id + 1000000 AS doc_id, d.text || ' ' || s.span AS text
-         |  FROM d JOIN spans s ON d.doc_id % 20 = s.bid
-         |  WHERE d.doc_id >= 100 AND d.doc_id < 200),
-         |corpus AS (SELECT doc_id, text FROM d
-         |  UNION ALL SELECT doc_id, text FROM planted),
+      s"""WITH $substrPlantedCtes,
          |g AS (SELECT doc_id, unnest(list_transform(
          |    range(1, greatest(length(text) - 38, 1)),
          |    i -> substr(text, i::INT, 40))) AS gm FROM corpus),
@@ -212,15 +195,7 @@ object DedupQueries {
          |FROM gd a JOIN gd b ON a.gm = b.gm AND a.doc_id < b.doc_id
          |ORDER BY a, b""".stripMargin) { (s, dir) =>
       val d = Tables(s, dir).documents.select(col("doc_id"), col("text"))
-      val spans = d.filter(col("doc_id") < 20)
-        .select(col("doc_id").as("bid"),
-          substring(col("text"), 1, 60).as("span"))
-      val planted = d.filter(col("doc_id") >= 100 && col("doc_id") < 200)
-        .withColumn("bid", col("doc_id") % 20)
-        .join(spans, "bid")
-        .select((col("doc_id") + 1000000).as("doc_id"),
-          concat(col("text"), lit(" "), col("span")).as("text"))
-      val corpus = d.union(planted)
+      val corpus = d.union(planted(d, Fixtures.charSpans(d)))
       Dedup.substringDupPairs(corpus, "doc_id", "text", k = 40)
         .orderBy(col("a"), col("b"))
     },
@@ -244,15 +219,7 @@ object DedupQueries {
       // "share a selected gram by content" (the Spark side's witness
       // verification makes 128-bit hash collisions unobservable), so the
       // final join is on the literal 40-char gram.
-      """WITH RECURSIVE d AS (SELECT doc_id, text FROM documents),
-        |spans AS (SELECT doc_id AS bid, substr(text, 1, 60) AS span
-        |  FROM d WHERE doc_id < 20),
-        |planted AS (
-        |  SELECT d.doc_id + 1000000 AS doc_id, d.text || ' ' || s.span AS text
-        |  FROM d JOIN spans s ON d.doc_id % 20 = s.bid
-        |  WHERE d.doc_id >= 100 AND d.doc_id < 200),
-        |corpus AS (SELECT doc_id, text FROM d
-        |  UNION ALL SELECT doc_id, text FROM planted),
+      s"""WITH RECURSIVE $substrPlantedCtes,
         |doc AS (SELECT doc_id, text, length(text) AS n FROM corpus
         |  WHERE length(text) >= 40),
         |pref AS (
@@ -292,15 +259,7 @@ object DedupQueries {
         |FROM sg a JOIN sg b ON a.gram = b.gram AND a.doc_id < b.doc_id
         |ORDER BY a, b""".stripMargin) { (s, dir) =>
       val d = Tables(s, dir).documents.select(col("doc_id"), col("text"))
-      val spans = d.filter(col("doc_id") < 20)
-        .select(col("doc_id").as("bid"),
-          substring(col("text"), 1, 60).as("span"))
-      val planted = d.filter(col("doc_id") >= 100 && col("doc_id") < 200)
-        .withColumn("bid", col("doc_id") % 20)
-        .join(spans, "bid")
-        .select((col("doc_id") + 1000000).as("doc_id"),
-          concat(col("text"), lit(" "), col("span")).as("text"))
-      val corpus = d.union(planted)
+      val corpus = d.union(planted(d, Fixtures.charSpans(d)))
       Dedup.substringDupPairsWinnowed(corpus, "doc_id", "text",
           k = 40, w = 10)
         .orderBy(col("a"), col("b"))
@@ -321,11 +280,8 @@ object DedupQueries {
         |  AND list_dot_product(q.v, c.v) /
         |      (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.v, c.v))) >= 0.75
         |ORDER BY a, b""".stripMargin) { (s, dir) =>
-      val e = Tables(s, dir).embeddings
-        .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("embedding"))
-      val corpus = e.union(
-        e.select((col("vec_id") + 1000000).as("vec_id"),
-          transform(col("embedding"), x => x + lit(0.05)).as("embedding")))
+      val e = Fixtures.vectors(s, dir)
+      val corpus = e.union(Fixtures.nudged(e))
       Similarity.embeddingNearDups(
           corpus, corpus.filter(col("vec_id") < 50), threshold = 0.75)
         .select(col("a"), col("b"), round(col("cos"), 6).as("cos"))
@@ -336,11 +292,8 @@ object DedupQueries {
     //     candidate pairs + exact cosine verify (no all-pairs product;
     //     oracle recomputes bands from the identical plane literals) ------
     Query("dedup_embedding_lsh", embeddingLshOracle) { (s, dir) =>
-      val e = Tables(s, dir).embeddings
-        .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("embedding"))
-      val corpus = e.union(
-        e.select((col("vec_id") + 1000000).as("vec_id"),
-          transform(col("embedding"), x => x + lit(0.05)).as("embedding")))
+      val e = Fixtures.vectors(s, dir)
+      val corpus = e.union(Fixtures.nudged(e))
       Similarity.nearDupPairsEmbedding(corpus, threshold = 0.75, dims = 64)
         .select(col("a"), col("b"), round(col("cos"), 6).as("cos"))
         .orderBy(col("a"), col("b"))
@@ -350,11 +303,9 @@ object DedupQueries {
     //     reference corpus only (cross-corpus candidates, exact cosine
     //     verify) --------------------------------------------------------
     Query("dedup_embedding_incr", embeddingIncrOracle) { (s, dir) =>
-      val e = Tables(s, dir).embeddings
-        .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("embedding"))
-      val fresh = e.select((col("vec_id") + 1000000).as("vec_id"),
-        transform(col("embedding"), x => x + lit(0.05)).as("embedding"))
-      Similarity.nearDupsAgainstEmbedding(e, fresh, threshold = 0.75, dims = 64)
+      val e = Fixtures.vectors(s, dir)
+      Similarity.nearDupsAgainstEmbedding(e, Fixtures.nudged(e),
+          threshold = 0.75, dims = 64)
         .select(col("ref_id"), col("new_id"), round(col("cos"), 6).as("cos"))
         .orderBy(col("ref_id"), col("new_id"))
     },
@@ -401,16 +352,8 @@ object DedupQueries {
     //     appending a benchmark span to 100 shifted docs) ----------------
     Query("text_decontaminate", decontaminateExactOracle) { (s, dir) =>
       val d = Tables(s, dir).documents.select(col("doc_id"), col("text"))
-      val words = graft.operators.TextAnalysis.canonToks(col("text"))
       val bench = d.filter(col("doc_id") < 20)
-      val spans = bench.select(col("doc_id").as("bid"),
-        concat_ws(" ", slice(words, 1, 8)).as("span"))
-      val planted = d.filter(col("doc_id") >= 100 && col("doc_id") < 200)
-        .withColumn("bid", col("doc_id") % 20)
-        .join(spans, "bid")
-        .select((col("doc_id") + 1000000).as("doc_id"),
-          concat(col("text"), lit(" "), col("span")).as("text"))
-      val corpus = d.union(planted)
+      val corpus = d.union(planted(d, Fixtures.wordSpans(bench)))
       TextAnalysis.contaminatedDocs(corpus, "doc_id", "text", bench, "text")
         .orderBy(col("doc_id"))
     },
@@ -426,16 +369,8 @@ object DedupQueries {
       // exact decontamination SQL.
       decontaminateExactOracle) { (s, dir) =>
       val d = Tables(s, dir).documents.select(col("doc_id"), col("text"))
-      val words = graft.operators.TextAnalysis.canonToks(col("text"))
       val bench = d.filter(col("doc_id") < 20)
-      val spans = bench.select(col("doc_id").as("bid"),
-        concat_ws(" ", slice(words, 1, 8)).as("span"))
-      val planted = d.filter(col("doc_id") >= 100 && col("doc_id") < 200)
-        .withColumn("bid", col("doc_id") % 20)
-        .join(spans, "bid")
-        .select((col("doc_id") + 1000000).as("doc_id"),
-          concat(col("text"), lit(" "), col("span")).as("text"))
-      val corpus = d.union(planted)
+      val corpus = d.union(planted(d, Fixtures.wordSpans(bench)))
       TextAnalysis.contaminatedDocsBloom(corpus, "doc_id", "text", bench,
         "text")
         .orderBy(col("doc_id"))
@@ -448,26 +383,7 @@ object DedupQueries {
     Query("text_contamination_frac",
       // per-doc DISTINCT 8-gram counts + benchmark-hit share; list_distinct
       // mirrors WordShingles' distinct semantics
-      {
-      val words8 =
-        "string_split(regexp_replace(replace(replace(lower(trim(text)), 'ς', 'σ'), 'i' || chr(775), 'i'), '\\s+', ' ', 'g'), ' ')"
-      val sh8 = """CASE WHEN len(words) < 8 THEN [array_to_string(words, ' ')]
-        |    ELSE list_transform(range(1, len(words) - 6),
-        |           i -> array_to_string(words[i:i+7], ' ')) END""".stripMargin
-      s"""WITH d AS (SELECT doc_id, text FROM documents),
-         |w0 AS (SELECT doc_id, $words8 AS words FROM d),
-         |spans AS (SELECT doc_id AS bid, array_to_string(words[1:8], ' ') AS span
-         |  FROM w0 WHERE doc_id < 20),
-         |planted AS (
-         |  SELECT d.doc_id + 1000000 AS doc_id, d.text || ' ' || s.span AS text
-         |  FROM d JOIN spans s ON d.doc_id % 20 = s.bid
-         |  WHERE d.doc_id >= 100 AND d.doc_id < 200),
-         |corpus AS (SELECT doc_id, text FROM d
-         |  UNION ALL SELECT doc_id, text FROM planted),
-         |cw AS (SELECT doc_id, $words8 AS words FROM corpus),
-         |csh AS (SELECT doc_id, unnest(list_distinct($sh8)) AS sg FROM cw),
-         |bw AS (SELECT doc_id, $words8 AS words FROM d WHERE doc_id < 20),
-         |bsh AS (SELECT DISTINCT unnest(list_distinct($sh8)) AS sg FROM bw),
+      s"""WITH ${gram8PlantedCtes(distinctPerDoc = true)},
          |agg AS (
          |  SELECT doc_id, count(*) AS n_grams,
          |    CAST(sum(CASE WHEN sg IN (SELECT sg FROM bsh) THEN 1 ELSE 0 END)
@@ -475,19 +391,10 @@ object DedupQueries {
          |  FROM csh GROUP BY doc_id)
          |SELECT doc_id, n_grams, n_contaminated,
          |  round(CAST(n_contaminated AS DOUBLE) / n_grams, 6) AS contamination
-         |FROM agg ORDER BY doc_id""".stripMargin
-    }) { (s, dir) =>
+         |FROM agg ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val d = Tables(s, dir).documents.select(col("doc_id"), col("text"))
-      val words = TextAnalysis.canonToks(col("text"))
       val bench = d.filter(col("doc_id") < 20)
-      val spans = bench.select(col("doc_id").as("bid"),
-        concat_ws(" ", slice(words, 1, 8)).as("span"))
-      val planted = d.filter(col("doc_id") >= 100 && col("doc_id") < 200)
-        .withColumn("bid", col("doc_id") % 20)
-        .join(spans, "bid")
-        .select((col("doc_id") + 1000000).as("doc_id"),
-          concat(col("text"), lit(" "), col("span")).as("text"))
-      val corpus = d.union(planted)
+      val corpus = d.union(planted(d, Fixtures.wordSpans(bench)))
       TextAnalysis.contaminationStats(corpus, "doc_id", "text", bench, "text")
         .select(col("doc_id"), col("n_grams"), col("n_contaminated"),
           round(col("contamination"), 6).as("contamination"))
@@ -544,8 +451,7 @@ object DedupQueries {
     //     the transitive closure -----------------------------------------
     Query("dedup_cluster_minhash", minhashClusterOracle) { (s, dir) =>
       val d = Tables(s, dir).documents
-      val corpus = d.select(col("doc_id"), col("text"))
-        .union(d.select((col("doc_id") + 1000000).as("doc_id"), col("text")))
+      val corpus = Fixtures.twinCorpus(d, "text")
       val pairs = Dedup.nearDupPairsMinhash(corpus, "doc_id", "text",
         n = 3, bands = 8, rows = 4, threshold = 0.9)
       val out = Dedup.cluster(corpus.select(col("doc_id")), pairs)
@@ -562,12 +468,10 @@ object DedupQueries {
     //     occurrence of each 16-token chunk survives, documents are
     //     reassembled from surviving chunks (twins vanish entirely) ------
     Query("text_chunk_dedup",
-      """WITH corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 1000000, text FROM documents),
+      s"""WITH ${twinCorpusCte()},
         |w AS (
         |  SELECT doc_id,
-        |    string_split(regexp_replace(replace(replace(lower(trim(text)), 'ς', 'σ'), 'i' || chr(775), 'i'), '\s+', ' ', 'g'), ' ') AS t
+        |    $canonWords AS t
         |  FROM corpus),
         |ch AS (
         |  SELECT doc_id AS id, CAST(i - 1 AS INT) AS chunk_id,
@@ -582,8 +486,7 @@ object DedupQueries {
         |  string_agg(chunk, ' ' ORDER BY chunk_id) AS text_dedup
         |FROM k WHERE rn = 1 GROUP BY id ORDER BY id""".stripMargin) { (s, dir) =>
       val d = Tables(s, dir).documents
-      val corpus = d.select(col("doc_id"), col("text"))
-        .union(d.select((col("doc_id") + 1000000).as("doc_id"), col("text")))
+      val corpus = Fixtures.twinCorpus(d, "text")
       Dedup.dropDupChunks(corpus, "doc_id", "text", maxTokens = 16)
         .orderBy(col("id"))
     },
@@ -729,42 +632,70 @@ object DedupQueries {
     }
   )
 
-  /** The planted-twin corpus used by the dedup oracles. */
-  private lazy val corpusCte =
-    """corpus AS (
-      |  SELECT doc_id, text FROM documents
-      |  UNION ALL SELECT doc_id + 1000000 AS doc_id, text FROM documents)""".stripMargin
-
-  /** Full minhash-LSH recomputation: md5-half permutations, 8 bands of 4,
-    * band-equality candidates, exact-Jaccard verify.
+  /** Docs 100..199 re-planted at +1000000 with the span of benchmark doc
+    * `doc_id % 20` appended.
     */
+  private def planted(d: DataFrame, spans: DataFrame): DataFrame =
+    Fixtures.shifted(Fixtures.quoting(
+      d.filter(col("doc_id") >= 100 && col("doc_id") < 200), spans, " "))
+
+  /** The planted-twin corpus used by the dedup oracles. */
+  private lazy val corpusCte = twinCorpusCte(as = " AS doc_id")
+
+  /** `corpus` = `d` plus docs 100..199 re-planted at +1000000 with the
+    * `spans` row of benchmark doc `doc_id % 20` appended — the SQL twin
+    * of [[planted]].
+    */
+  private def plantedCorpusCtes(spans: String): String =
+    s"""$spans,
+       |planted AS (
+       |  SELECT d.doc_id + 1000000 AS doc_id, d.text || ' ' || s.span AS text
+       |  FROM d JOIN spans s ON d.doc_id % 20 = s.bid
+       |  WHERE d.doc_id >= 100 AND d.doc_id < 200),
+       |corpus AS (SELECT doc_id, text FROM d
+       |  UNION ALL SELECT doc_id, text FROM planted)""".stripMargin
+
+  /** [[plantedCorpusCtes]] with 60-character benchmark spans. */
+  private lazy val substrPlantedCtes: String =
+    s"""d AS (SELECT doc_id, text FROM documents),
+       |${plantedCorpusCtes("""spans AS (SELECT doc_id AS bid, substr(text, 1, 60) AS span
+       |  FROM d WHERE doc_id < 20)""".stripMargin)}""".stripMargin
+
+  /** [[plantedCorpusCtes]] with 8-word benchmark spans, then the distinct
+    * 8-grams of the corpus (`cw`, `csh`, `distinct` applied per doc when
+    * asked) and of the benchmark docs (`bw`, `bsh`).
+    */
+  private def gram8PlantedCtes(distinctPerDoc: Boolean): String = {
+    val sh8 = if (distinctPerDoc) s"list_distinct(${gram8("words")})" else gram8("words")
+    s"""d AS (SELECT doc_id, text FROM documents),
+       |w0 AS (SELECT doc_id, $canonWords AS words FROM d),
+       |${plantedCorpusCtes("""spans AS (SELECT doc_id AS bid, array_to_string(words[1:8], ' ') AS span
+       |  FROM w0 WHERE doc_id < 20)""".stripMargin)},
+       |cw AS (SELECT doc_id, $canonWords AS words FROM corpus),
+       |csh AS (SELECT doc_id, unnest($sh8) AS sg FROM cw),
+       |bw AS (SELECT doc_id, $canonWords AS words FROM d WHERE doc_id < 20),
+       |bsh AS (SELECT DISTINCT unnest($sh8) AS sg FROM bw)""".stripMargin
+  }
+
   /** The shared minhash-pair CTE chain (corpus -> shingles -> md5-half
     * permutation signatures -> band-equality candidates -> exact
     * Jaccard), ending in `jac(a, b, j)`.
     */
-  private def minhashPairsCtes: String = {
-    val sigCols = (0 until 32).map(i => s"MIN(${wrappedPerm(i)}) AS m$i").mkString(",\n    ")
-    val bandEq = (0 until 8).map { b =>
-      (0 until 4).map(r => s"x.m${b * 4 + r} = y.m${b * 4 + r}").mkString("(", " AND ", ")")
-    }.mkString("\n      OR ")
+  private def minhashPairsCtes: String =
     s"""$corpusCte,
        |${shinglesCtes("corpus")},
-       |hs AS (SELECT doc_id, unnest(s) AS sg FROM sh),
-       |hv AS (SELECT doc_id,
-       |    md5_number_lower(sg)::HUGEINT AS h1,
-       |    md5_number_upper(sg)::HUGEINT AS h2 FROM hs),
-       |sig AS (SELECT doc_id,
-       |    $sigCols
-       |  FROM hv GROUP BY doc_id),
+       |$minhashSigCtes,
        |cand AS (
        |  SELECT x.doc_id AS a, y.doc_id AS b
        |  FROM sig x JOIN sig y ON x.doc_id < y.doc_id
-       |    AND ($bandEq)),
+       |    AND ($minhashBandEq)),
        |jac AS (
        |  SELECT c.a, c.b, $jaccardExpr AS j
        |  FROM cand c JOIN sh sa ON c.a = sa.doc_id JOIN sh sb ON c.b = sb.doc_id)""".stripMargin
-  }
 
+  /** Full minhash-LSH recomputation: md5-half permutations, 8 bands of 4,
+    * band-equality candidates, exact-Jaccard verify.
+    */
   private def minhashOracle: String =
     s"""WITH $minhashPairsCtes
        |SELECT a, b, round(j, 6) AS jaccard FROM jac
@@ -777,33 +708,22 @@ object DedupQueries {
     * [[graft.operators.Dedup.nearDupsAgainstMinhash]].
     */
   private def crossMinhashOracle(allcSql: String, refPred: String,
-      newPred: String, threshold: Double): String = {
-    val sigCols = (0 until 32).map(i => s"MIN(${wrappedPerm(i)}) AS m$i").mkString(",\n    ")
-    val bandEq = (0 until 8).map { b =>
-      (0 until 4).map(r => s"x.m${b * 4 + r} = y.m${b * 4 + r}").mkString("(", " AND ", ")")
-    }.mkString("\n      OR ")
+      newPred: String, threshold: Double): String =
     s"""WITH allc AS (
        |$allcSql),
        |${shinglesCtes("allc")},
-       |hs AS (SELECT doc_id, unnest(s) AS sg FROM sh),
-       |hv AS (SELECT doc_id,
-       |    md5_number_lower(sg)::HUGEINT AS h1,
-       |    md5_number_upper(sg)::HUGEINT AS h2 FROM hs),
-       |sig AS (SELECT doc_id,
-       |    $sigCols
-       |  FROM hv GROUP BY doc_id),
+       |$minhashSigCtes,
        |cand AS (
        |  SELECT x.doc_id AS ref_id, y.doc_id AS new_id
        |  FROM sig x JOIN sig y ON (${refPred.replace("doc_id", "x.doc_id")})
        |    AND (${newPred.replace("doc_id", "y.doc_id")})
-       |    AND ($bandEq)),
+       |    AND ($minhashBandEq)),
        |jac AS (
        |  SELECT c.ref_id, c.new_id, $jaccardExpr AS j
        |  FROM cand c JOIN sh sa ON c.ref_id = sa.doc_id
        |    JOIN sh sb ON c.new_id = sb.doc_id)
        |SELECT ref_id, new_id, round(j, 6) AS jaccard FROM jac
        |WHERE j >= $threshold ORDER BY ref_id, new_id""".stripMargin
-  }
 
   /** Incremental-dedup recomputation: fresh ids carry the +1000000
     * offset.
@@ -822,29 +742,10 @@ object DedupQueries {
     * Shared by text_decontaminate and text_decontaminate_bloom — the
     * Bloom prefilter never changes the answer, only the plan.
     */
-  private def decontaminateExactOracle: String = {
-    val words8 =
-      "string_split(regexp_replace(replace(replace(lower(trim(text)), 'ς', 'σ'), 'i' || chr(775), 'i'), '\\s+', ' ', 'g'), ' ')"
-    val sh8 = """CASE WHEN len(words) < 8 THEN [array_to_string(words, ' ')]
-      |    ELSE list_transform(range(1, len(words) - 6),
-      |           i -> array_to_string(words[i:i+7], ' ')) END""".stripMargin
-    s"""WITH d AS (SELECT doc_id, text FROM documents),
-       |w0 AS (SELECT doc_id, $words8 AS words FROM d),
-       |spans AS (SELECT doc_id AS bid, array_to_string(words[1:8], ' ') AS span
-       |  FROM w0 WHERE doc_id < 20),
-       |planted AS (
-       |  SELECT d.doc_id + 1000000 AS doc_id, d.text || ' ' || s.span AS text
-       |  FROM d JOIN spans s ON d.doc_id % 20 = s.bid
-       |  WHERE d.doc_id >= 100 AND d.doc_id < 200),
-       |corpus AS (SELECT doc_id, text FROM d
-       |  UNION ALL SELECT doc_id, text FROM planted),
-       |cw AS (SELECT doc_id, $words8 AS words FROM corpus),
-       |csh AS (SELECT doc_id, unnest($sh8) AS sg FROM cw),
-       |bw AS (SELECT doc_id, $words8 AS words FROM d WHERE doc_id < 20),
-       |bsh AS (SELECT DISTINCT unnest($sh8) AS sg FROM bw)
+  private def decontaminateExactOracle: String =
+    s"""WITH ${gram8PlantedCtes(distinctPerDoc = false)}
        |SELECT DISTINCT doc_id FROM csh WHERE sg IN (SELECT sg FROM bsh)
        |ORDER BY doc_id""".stripMargin
-  }
 
   /** Fuzzy decontamination: near-copies of benchmark docs (planted at
     * +2000000 with an id-salted suffix) flagged by cross-corpus minhash
@@ -880,20 +781,19 @@ object DedupQueries {
        |ORDER BY i.id""".stripMargin
 
   /** Full simhash recomputation: md5-lower token hashes, 64 sign
-    * counters, 4x16-bit banding, hamming verify.
+    * counters, 4x16-bit banding (`probe` = 0: some band equal, the
+    * default; 1: some band within the 1-bit probe ball, recall-exact for
+    * hamming <= 6), hamming verify.
     */
-  private def simhashOracle: String = {
+  private def simhashOracle(maxHamming: Int, probe: Int): String = {
     val cntCols = (0 until 64).map(j =>
       s"SUM(CASE WHEN ((h >> $j) & 1) = 1 THEN 1 ELSE -1 END) AS c$j").mkString(",\n    ")
     val sigExpr = (0 until 64).map(j =>
       s"CASE WHEN c$j > 0 THEN ${BigInt(1) << j}::UBIGINT ELSE 0::UBIGINT END")
       .mkString(" + ")
-    val bandEq = (0 until 4).map(b =>
-      s"((l.sh >> ${b * 16}) & 65535) = ((r.sh >> ${b * 16}) & 65535)")
-      .mkString("\n      OR ")
     s"""WITH $corpusCte,
        |tk AS (SELECT doc_id,
-       |    unnest(string_split(regexp_replace(replace(replace(lower(trim(text)), 'ς', 'σ'), 'i' || chr(775), 'i'), '\\s+', ' ', 'g'), ' ')) AS tok
+       |    unnest($canonWords) AS tok
        |  FROM corpus),
        |hv AS (SELECT doc_id, md5_number_lower(tok) AS h FROM tk),
        |cnt AS (SELECT doc_id,
@@ -904,119 +804,41 @@ object DedupQueries {
        |  SELECT l.doc_id AS a, r.doc_id AS b,
        |    CAST(bit_count(xor(l.sh, r.sh)) AS INT) AS hamming
        |  FROM sig l JOIN sig r ON l.doc_id < r.doc_id
-       |    AND ($bandEq))
-       |SELECT a, b, hamming FROM pairs WHERE hamming <= 3 ORDER BY a, b""".stripMargin
+       |    AND (${band16("sh", probe)}))
+       |SELECT a, b, hamming FROM pairs WHERE hamming <= $maxHamming ORDER BY a, b""".stripMargin
   }
 
-  /** [[simhashOracle]] with the multi-probe wide-recall gate: a pair is
-    * a candidate when some 16-bit band differs in <= 1 bit (the 1-bit
-    * probe ball), recall-exact for hamming <= 6.
+  /** Embedding near-dup recomputation over the planted-twin corpus: the
+    * 384 plane literals (same splitmix64 doubles as the Spark plan),
+    * 24x16-bit banding, band-equality candidates (`a`, `b` name the pair;
+    * `cross` bounds it; `sep` breaks the vector join), exact cosine
+    * verify.
     */
-  private def simhashWideOracle: String = {
-    val cntCols = (0 until 64).map(j =>
-      s"SUM(CASE WHEN ((h >> $j) & 1) = 1 THEN 1 ELSE -1 END) AS c$j").mkString(",\n    ")
-    val sigExpr = (0 until 64).map(j =>
-      s"CASE WHEN c$j > 0 THEN ${BigInt(1) << j}::UBIGINT ELSE 0::UBIGINT END")
-      .mkString(" + ")
-    val bandNear = (0 until 4).map(b =>
-      s"bit_count(xor((l.sh >> ${b * 16}) & 65535, (r.sh >> ${b * 16}) & 65535)) <= 1")
-      .mkString("\n      OR ")
-    s"""WITH $corpusCte,
-       |tk AS (SELECT doc_id,
-       |    unnest(string_split(regexp_replace(replace(replace(lower(trim(text)), 'ς', 'σ'), 'i' || chr(775), 'i'), '\\s+', ' ', 'g'), ' ')) AS tok
-       |  FROM corpus),
-       |hv AS (SELECT doc_id, md5_number_lower(tok) AS h FROM tk),
-       |cnt AS (SELECT doc_id,
-       |    $cntCols
-       |  FROM hv GROUP BY doc_id),
-       |sig AS (SELECT doc_id, ($sigExpr) AS sh FROM cnt),
-       |pairs AS (
-       |  SELECT l.doc_id AS a, r.doc_id AS b,
-       |    CAST(bit_count(xor(l.sh, r.sh)) AS INT) AS hamming
-       |  FROM sig l JOIN sig r ON l.doc_id < r.doc_id
-       |    AND ($bandNear))
-       |SELECT a, b, hamming FROM pairs WHERE hamming <= 6 ORDER BY a, b""".stripMargin
-  }
-
-  /** Corpus-wide embedding near-dup recomputation: the 384 plane literals
-    * (same splitmix64 doubles as the Spark plan), 24x16-bit banding over
-    * the planted-twin corpus, band-equality candidate self-join, exact
-    * cosine verify — mirrors [[Similarity.nearDupPairsEmbedding]] step
-    * for step (incl. the scale-safe band width).
-    */
-  private def embeddingLshOracle: String = {
-    def plane(b: Int): String =
-      (0 until 64).map(d => Similarity.planeComponent(b, d).toString)
-        .mkString("[", ", ", "]")
-    val bitCols = (0 until 384).map(b =>
-      s"(CASE WHEN list_dot_product(v, ${plane(b)}) >= 0 THEN 1 ELSE 0 END) AS b$b")
-      .mkString(",\n    ")
-    val keyCols = (0 until 24).map { band =>
-      val expr = (0 until 16).map(r => s"b${band * 16 + r}")
-        .reduce((acc, b) => s"($acc * 2 + $b)")
-      s"$expr AS k$band"
-    }.mkString(",\n    ")
-    val bandEq = (0 until 24).map(b => s"l.k$b = r.k$b").mkString(" OR ")
-    s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-       |e AS (
-       |  SELECT vec_id, v FROM base
-       |  UNION ALL SELECT vec_id + 1000000 AS vec_id,
-       |    list_transform(v, x -> x + 0.05) AS v FROM base),
-       |sg AS (SELECT vec_id, v,
-       |    $bitCols
-       |  FROM e),
-       |bd AS (SELECT vec_id,
-       |    $keyCols
-       |  FROM sg),
+  private def embeddingBandOracle(a: String, b: String, cross: String,
+      sep: String): String =
+    s"""WITH $vecTwinCtes,
+       |${rhpBandCtes(24, 16)},
        |cd AS (
-       |  SELECT DISTINCT l.vec_id AS a, r.vec_id AS b
-       |  FROM bd l JOIN bd r ON l.vec_id < r.vec_id AND ($bandEq)),
+       |  SELECT DISTINCT l.vec_id AS $a, r.vec_id AS $b
+       |  FROM bd l JOIN bd r ON $cross ($rhpBandEq)),
        |sc AS (
-       |  SELECT cd.a, cd.b, va.v AS qv, vb.v AS cv
-       |  FROM cd JOIN e va ON cd.a = va.vec_id JOIN e vb ON cd.b = vb.vec_id),
-       |scored AS (SELECT a, b, $cosExpr AS cos0 FROM sc)
-       |SELECT a, b, round(cos0, 6) AS cos FROM scored
-       |WHERE cos0 >= 0.75 ORDER BY a, b""".stripMargin
-  }
+       |  SELECT cd.$a, cd.$b, va.v AS qv, vb.v AS cv
+       |  FROM cd JOIN e va ON cd.$a = va.vec_id$sep JOIN e vb ON cd.$b = vb.vec_id),
+       |scored AS (SELECT $a, $b, $cosExpr AS cos0 FROM sc)
+       |SELECT $a, $b, round(cos0, 6) AS cos FROM scored
+       |WHERE cos0 >= 0.75 ORDER BY $a, $b""".stripMargin
 
-  /** Incremental embedding-dedup recomputation: identical plane-literal
-    * bands for reference (base ids) and fresh (+1000000 twins); the
-    * candidate join keeps only cross-corpus band collisions.
+  /** Corpus-wide embedding near-dups — mirrors
+    * [[Similarity.nearDupPairsEmbedding]] step for step (incl. the
+    * scale-safe band width).
     */
-  private def embeddingIncrOracle: String = {
-    def plane(b: Int): String =
-      (0 until 64).map(d => Similarity.planeComponent(b, d).toString)
-        .mkString("[", ", ", "]")
-    val bitCols = (0 until 384).map(b =>
-      s"(CASE WHEN list_dot_product(v, ${plane(b)}) >= 0 THEN 1 ELSE 0 END) AS b$b")
-      .mkString(",\n    ")
-    val keyCols = (0 until 24).map { band =>
-      val expr = (0 until 16).map(r => s"b${band * 16 + r}")
-        .reduce((acc, b) => s"($acc * 2 + $b)")
-      s"$expr AS k$band"
-    }.mkString(",\n    ")
-    val bandEq = (0 until 24).map(b => s"l.k$b = r.k$b").mkString(" OR ")
-    s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-       |e AS (
-       |  SELECT vec_id, v FROM base
-       |  UNION ALL SELECT vec_id + 1000000 AS vec_id,
-       |    list_transform(v, x -> x + 0.05) AS v FROM base),
-       |sg AS (SELECT vec_id, v,
-       |    $bitCols
-       |  FROM e),
-       |bd AS (SELECT vec_id,
-       |    $keyCols
-       |  FROM sg),
-       |cd AS (
-       |  SELECT DISTINCT l.vec_id AS ref_id, r.vec_id AS new_id
-       |  FROM bd l JOIN bd r ON l.vec_id < 1000000 AND r.vec_id >= 1000000
-       |    AND ($bandEq)),
-       |sc AS (
-       |  SELECT cd.ref_id, cd.new_id, va.v AS qv, vb.v AS cv
-       |  FROM cd JOIN e va ON cd.ref_id = va.vec_id
-       |    JOIN e vb ON cd.new_id = vb.vec_id),
-       |scored AS (SELECT ref_id, new_id, $cosExpr AS cos0 FROM sc)
-       |SELECT ref_id, new_id, round(cos0, 6) AS cos FROM scored
-       |WHERE cos0 >= 0.75 ORDER BY ref_id, new_id""".stripMargin
-  }
+  private def embeddingLshOracle: String =
+    embeddingBandOracle("a", "b", "l.vec_id < r.vec_id AND", "")
+
+  /** Incremental embedding dedup: identical plane-literal bands for
+    * reference (base ids) and fresh (+1000000 twins); the candidate join
+    * keeps only cross-corpus band collisions.
+    */
+  private def embeddingIncrOracle: String = embeddingBandOracle("ref_id",
+    "new_id", "l.vec_id < 1000000 AND r.vec_id >= 1000000\n    AND", "\n   ")
 }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -12,6 +13,8 @@ import graft.operators.Joins
   * oracle each.
   */
 object EventQueries {
+  import SharedOracles._
+
   val queries: Seq[Query] = Seq(
     Query("q_window_funnel_sql",
       // the same exists-chain replay grades the SQL-aggregate surface
@@ -55,28 +58,16 @@ object EventQueries {
     //     click at-or-before it (point-in-time lookup; the oracle is
     //     DuckDB's native ASOF JOIN) -------------------------------------
     Query("q_asof_join",
-      """WITH l AS (
-        |  SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-        |r AS (
-        |  SELECT user_id, ts, max(event_id) AS b_event_id,
-        |    arg_max(value, event_id) AS b_value
-        |  FROM events WHERE event_type = 'click' GROUP BY 1, 2)
+      s"""WITH ${asOfCtes("purchase")}
         |SELECT l.event_id, l.user_id, r.b_event_id,
         |  round(r.b_value, 6) AS b_value
         |FROM l ASOF LEFT JOIN r
         |  ON l.user_id = r.user_id AND l.ts >= r.ts
         |ORDER BY l.event_id""".stripMargin) { (s, dir) =>
-      val e = Tables(s, dir).events
-      val left = e.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val right = e.filter(col("event_type") === "click")
-        .select(col("event_id").as("b_event_id"), col("user_id"),
-          col("ts"), col("value").as("b_value"))
+      val (left, right) = asOfSides(s, dir, "purchase")
       Joins.asOf(left, right, Seq("user_id"), "ts",
           rightCols = Seq("b_event_id", "b_value"), ordCol = "b_event_id")
-        .select(col("event_id"), col("user_id"), col("b_event_id"),
-          round(col("b_value"), 6).as("b_value"))
-        .orderBy(col("event_id"))
+        .transform(asOfOut)
     },
 
     // --- as-of with tolerance: matches staler than 10 min nullify
@@ -84,12 +75,7 @@ object EventQueries {
     Query("q_asof_tolerance",
       // the matched right ts is selectable from an ASOF join, so the
       // tolerance nullify is a plain CASE over it
-      """WITH l AS (
-        |  SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-        |r AS (
-        |  SELECT user_id, ts, max(event_id) AS b_event_id,
-        |    arg_max(value, event_id) AS b_value
-        |  FROM events WHERE event_type = 'click' GROUP BY 1, 2)
+      s"""WITH ${asOfCtes("purchase")}
         |SELECT l.event_id, l.user_id,
         |  CASE WHEN r.ts >= l.ts - INTERVAL 600 SECOND
         |    THEN r.b_event_id END AS b_event_id,
@@ -98,18 +84,11 @@ object EventQueries {
         |FROM l ASOF LEFT JOIN r
         |  ON l.user_id = r.user_id AND l.ts >= r.ts
         |ORDER BY l.event_id""".stripMargin) { (s, dir) =>
-      val e = Tables(s, dir).events
-      val left = e.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val right = e.filter(col("event_type") === "click")
-        .select(col("event_id").as("b_event_id"), col("user_id"),
-          col("ts"), col("value").as("b_value"))
+      val (left, right) = asOfSides(s, dir, "purchase")
       Joins.asOf(left, right, Seq("user_id"), "ts",
           rightCols = Seq("b_event_id", "b_value"), ordCol = "b_event_id",
           toleranceSec = Some(600.0))
-        .select(col("event_id"), col("user_id"), col("b_event_id"),
-          round(col("b_value"), 6).as("b_value"))
-        .orderBy(col("event_id"))
+        .transform(asOfOut)
     },
 
     // --- temporal (SCD-2) join: each event picks the dimension VERSION
@@ -182,29 +161,17 @@ object EventQueries {
     Query("q_asof_forward",
       // forward direction: DuckDB ASOF with the inequality reversed picks
       // the EARLIEST right row at-or-after each left ts
-      """WITH l AS (
-        |  SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-        |r AS (
-        |  SELECT user_id, ts, max(event_id) AS b_event_id,
-        |    arg_max(value, event_id) AS b_value
-        |  FROM events WHERE event_type = 'click' GROUP BY 1, 2)
+      s"""WITH ${asOfCtes("purchase")}
         |SELECT l.event_id, l.user_id, r.b_event_id,
         |  round(r.b_value, 6) AS b_value
         |FROM l ASOF LEFT JOIN r
         |  ON l.user_id = r.user_id AND l.ts <= r.ts
         |ORDER BY l.event_id""".stripMargin) { (s, dir) =>
-      val e = Tables(s, dir).events
-      val left = e.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val right = e.filter(col("event_type") === "click")
-        .select(col("event_id").as("b_event_id"), col("user_id"),
-          col("ts"), col("value").as("b_value"))
+      val (left, right) = asOfSides(s, dir, "purchase")
       Joins.asOf(left, right, Seq("user_id"), "ts",
           rightCols = Seq("b_event_id", "b_value"), ordCol = "b_event_id",
           direction = "forward")
-        .select(col("event_id"), col("user_id"), col("b_event_id"),
-          round(col("b_value"), 6).as("b_value"))
-        .orderBy(col("event_id"))
+        .transform(asOfOut)
     },
 
     // --- as-of, nearest direction: closer of the backward/forward
@@ -214,12 +181,7 @@ object EventQueries {
       // nearest: recombine the two ASOF directions with the identical
       // interval-distance rule (exact timestamp arithmetic; ties prefer
       // the backward match)
-      """WITH l AS (
-        |  SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-        |r AS (
-        |  SELECT user_id, ts, max(event_id) AS b_event_id,
-        |    arg_max(value, event_id) AS b_value
-        |  FROM events WHERE event_type = 'click' GROUP BY 1, 2),
+      s"""WITH ${asOfCtes("purchase")},
         |bk AS (
         |  SELECT l.event_id, l.user_id, l.ts,
         |    r.ts AS m_ts, r.b_event_id AS m_id, r.b_value AS m_val
@@ -241,18 +203,11 @@ object EventQueries {
         |  FROM bk JOIN fw USING (event_id))
         |SELECT event_id, user_id, b_event_id, round(b_value, 6) AS b_value
         |FROM pick ORDER BY event_id""".stripMargin) { (s, dir) =>
-      val e = Tables(s, dir).events
-      val left = e.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val right = e.filter(col("event_type") === "click")
-        .select(col("event_id").as("b_event_id"), col("user_id"),
-          col("ts"), col("value").as("b_value"))
+      val (left, right) = asOfSides(s, dir, "purchase")
       Joins.asOf(left, right, Seq("user_id"), "ts",
           rightCols = Seq("b_event_id", "b_value"), ordCol = "b_event_id",
           direction = "nearest")
-        .select(col("event_id"), col("user_id"), col("b_event_id"),
-          round(col("b_value"), 6).as("b_value"))
-        .orderBy(col("event_id"))
+        .transform(asOfOut)
     },
 
     // --- as-of, strict inequality (pandas allowExactMatches=false): a
@@ -263,28 +218,17 @@ object EventQueries {
       // strict inequality: the self-match at l.ts = r.ts is skipped, the
       // previous click wins (DuckDB ASOF supports the strict operator
       // directly)
-      """WITH l AS (
-        |  SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-        |r AS (
-        |  SELECT user_id, ts, max(event_id) AS b_event_id,
-        |    arg_max(value, event_id) AS b_value
-        |  FROM events WHERE event_type = 'click' GROUP BY 1, 2)
+      s"""WITH ${asOfCtes("click")}
         |SELECT l.event_id, l.user_id, r.b_event_id,
         |  round(r.b_value, 6) AS b_value
         |FROM l ASOF LEFT JOIN r
         |  ON l.user_id = r.user_id AND l.ts > r.ts
         |ORDER BY l.event_id""".stripMargin) { (s, dir) =>
-      val e = Tables(s, dir).events
-      val clicks = e.filter(col("event_type") === "click")
-      val left = clicks.select(col("event_id"), col("user_id"), col("ts"))
-      val right = clicks.select(col("event_id").as("b_event_id"),
-        col("user_id"), col("ts"), col("value").as("b_value"))
+      val (left, right) = asOfSides(s, dir, "click")
       Joins.asOf(left, right, Seq("user_id"), "ts",
           rightCols = Seq("b_event_id", "b_value"), ordCol = "b_event_id",
           allowExactMatches = false)
-        .select(col("event_id"), col("user_id"), col("b_event_id"),
-          round(col("b_value"), 6).as("b_value"))
-        .orderBy(col("event_id"))
+        .transform(asOfOut)
     },
 
     // --- ReplacingMergeTree FINAL: greatest-version row per key (the
@@ -542,33 +486,7 @@ object EventQueries {
       // strict_increase: the same exists-chain with strictly increasing
       // chain timestamps (the greedy-earliest walk stays exact under the
       // strict inequality by the same exchange argument)
-      """WITH ev AS (
-        |  SELECT user_id, ts, event_type FROM events
-        |  WHERE event_type IN ('view', 'click', 'purchase')),
-        |u AS (SELECT DISTINCT user_id FROM ev),
-        |l1 AS (SELECT DISTINCT user_id FROM ev WHERE event_type = 'view'),
-        |l2 AS (
-        |  SELECT DISTINCT a.user_id
-        |  FROM ev a JOIN ev b ON a.user_id = b.user_id
-        |  WHERE a.event_type = 'view' AND b.event_type = 'click'
-        |    AND b.ts > a.ts AND b.ts <= a.ts + INTERVAL 14400 SECOND),
-        |l3 AS (
-        |  SELECT DISTINCT a.user_id
-        |  FROM ev a JOIN ev b ON a.user_id = b.user_id
-        |    JOIN ev c ON a.user_id = c.user_id
-        |  WHERE a.event_type = 'view' AND b.event_type = 'click'
-        |    AND c.event_type = 'purchase'
-        |    AND b.ts > a.ts AND b.ts <= a.ts + INTERVAL 14400 SECOND
-        |    AND c.ts > b.ts AND c.ts <= a.ts + INTERVAL 14400 SECOND)
-        |SELECT u.user_id,
-        |  CASE WHEN l3.user_id IS NOT NULL THEN 3
-        |       WHEN l2.user_id IS NOT NULL THEN 2
-        |       WHEN l1.user_id IS NOT NULL THEN 1
-        |       ELSE 0 END AS level
-        |FROM u LEFT JOIN l1 ON u.user_id = l1.user_id
-        |  LEFT JOIN l2 ON u.user_id = l2.user_id
-        |  LEFT JOIN l3 ON u.user_id = l3.user_id
-        |ORDER BY u.user_id""".stripMargin) { (s, dir) =>
+      funnelLevelOracle(">")) { (s, dir) =>
       graft.operators.EventAnalytics.windowFunnel(Tables(s, dir).events,
           "user_id", "ts", "event_type",
           steps = Seq("view", "click", "purchase"), windowSec = 14400,
@@ -722,34 +640,7 @@ object EventQueries {
     * (`q_window_funnel`) and its SQL-aggregate twin
     * (`q_window_funnel_sql`).
     */
-  private lazy val windowFunnelExistsOracle: String =
-      """WITH ev AS (
-        |  SELECT user_id, ts, event_type FROM events
-        |  WHERE event_type IN ('view', 'click', 'purchase')),
-        |u AS (SELECT DISTINCT user_id FROM ev),
-        |l1 AS (SELECT DISTINCT user_id FROM ev WHERE event_type = 'view'),
-        |l2 AS (
-        |  SELECT DISTINCT a.user_id
-        |  FROM ev a JOIN ev b ON a.user_id = b.user_id
-        |  WHERE a.event_type = 'view' AND b.event_type = 'click'
-        |    AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 14400 SECOND),
-        |l3 AS (
-        |  SELECT DISTINCT a.user_id
-        |  FROM ev a JOIN ev b ON a.user_id = b.user_id
-        |    JOIN ev c ON a.user_id = c.user_id
-        |  WHERE a.event_type = 'view' AND b.event_type = 'click'
-        |    AND c.event_type = 'purchase'
-        |    AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 14400 SECOND
-        |    AND c.ts >= b.ts AND c.ts <= a.ts + INTERVAL 14400 SECOND)
-        |SELECT u.user_id,
-        |  CASE WHEN l3.user_id IS NOT NULL THEN 3
-        |       WHEN l2.user_id IS NOT NULL THEN 2
-        |       WHEN l1.user_id IS NOT NULL THEN 1
-        |       ELSE 0 END AS level
-        |FROM u LEFT JOIN l1 ON u.user_id = l1.user_id
-        |  LEFT JOIN l2 ON u.user_id = l2.user_id
-        |  LEFT JOIN l3 ON u.user_id = l3.user_id
-        |ORDER BY u.user_id""".stripMargin
+  private lazy val windowFunnelExistsOracle: String = funnelLevelOracle(">=")
 
   /** Literal replay of [[graft.operators.EventAnalytics.funnelWalk]] for
     * the positional interrupt modes (strict_dedup / strict_order): per
@@ -788,4 +679,48 @@ object EventQueries {
        |SELECT e.u AS user_id, coalesce(b.level, 0) AS level
        |FROM (SELECT DISTINCT u FROM ev) e LEFT JOIN best b ON e.u = b.u
        |ORDER BY user_id""".stripMargin
+
+  /** Exists-chain funnel level per user: a view, a click `after` it and
+    * a purchase `after` that, all within 4h of the view.
+    */
+  private def funnelLevelOracle(after: String): String =
+    s"""WITH ${funnelEventsCte("ev")},
+       |u AS (SELECT DISTINCT user_id FROM ev),
+       |${funnelStepCtes("l", "", "ev", after)}
+       |SELECT u.user_id,
+       |  ${funnelLevel("  ")} AS level
+       |FROM u LEFT JOIN l1 ON u.user_id = l1.user_id
+       |  LEFT JOIN l2 ON u.user_id = l2.user_id
+       |  LEFT JOIN l3 ON u.user_id = l3.user_id
+       |ORDER BY u.user_id""".stripMargin
+
+  /** The as-of oracles' sides: `l` the `leftType` events, `r` the clicks
+    * per (user, ts) with their max event id and its value.
+    */
+  private def asOfCtes(leftType: String): String =
+    s"""l AS (
+       |  SELECT event_id, user_id, ts FROM events WHERE event_type = '$leftType'),
+       |r AS (
+       |  SELECT user_id, ts, max(event_id) AS b_event_id,
+       |    arg_max(value, event_id) AS b_value
+       |  FROM events WHERE event_type = 'click' GROUP BY 1, 2)""".stripMargin
+
+  /** The as-of joins' sides: the `leftType` events, and every click as
+    * (b_event_id, user_id, ts, b_value).
+    */
+  private def asOfSides(s: SparkSession, dir: String,
+      leftType: String): (DataFrame, DataFrame) = {
+    val e = Tables(s, dir).events
+    (e.filter(col("event_type") === leftType)
+      .select(col("event_id"), col("user_id"), col("ts")),
+     e.filter(col("event_type") === "click")
+      .select(col("event_id").as("b_event_id"), col("user_id"),
+        col("ts"), col("value").as("b_value")))
+  }
+
+  /** The as-of compare surface, by left event. */
+  private def asOfOut(df: DataFrame): DataFrame =
+    df.select(col("event_id"), col("user_id"), col("b_event_id"),
+        round(col("b_value"), 6).as("b_value"))
+      .orderBy(col("event_id"))
 }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -76,16 +77,8 @@ object MultimodalQueries {
     //     they COLLAPSE into a rep+clique under the default clique-safe
     //     path) and noise twins (a two-cell luma bump flips a few
     //     gradient bits — they pair with the representatives) -----------
-    Query("mm_phash_dedup", mmPhashOracle) { (s, dir) =>
-      val ids = Tables(s, dir).documents.filter(col("doc_id") < 300)
-        .select(col("doc_id").as("asset_id"))
-      def bmp(shift: Long, size: Int, noisy: Boolean) = ids
-        .select(col("asset_id"),
-          Multimodal.bmpContent(col("asset_id"), size, lit(noisy)).as("content"))
-        .select((col("asset_id") + shift).as("asset_id"), col("content"))
-      val decoded = Multimodal.decodeImages(bmp(0L, 8, noisy = false)
-        .unionByName(bmp(1000000L, 16, noisy = false))
-        .unionByName(bmp(2000000L, 8, noisy = true))).toDF()
+    Query("mm_phash_dedup", mmPhashOracle(maxHamming = 6, probe = 1)) { (s, dir) =>
+      val decoded = phashImages(s, dir)
       Multimodal.imageNearDups(decoded, maxHamming = 6, wideRecall = true)
         .select(col("a"), col("b"), col("hamming"),
           col("clique_a"), col("clique_b"))
@@ -95,16 +88,8 @@ object MultimodalQueries {
     // --- the DEFAULT (scale-safe) banding: 4×16-bit bands, exact recall
     //     for hamming <= 3 — the tightest-candidate shape; the wideRecall
     //     mode above adds 1-bit band probing for exact 4..7-bit recall --
-    Query("mm_phash_dedup_tight", mmPhashTightOracle) { (s, dir) =>
-      val ids = Tables(s, dir).documents.filter(col("doc_id") < 300)
-        .select(col("doc_id").as("asset_id"))
-      def bmp(shift: Long, size: Int, noisy: Boolean) = ids
-        .select(col("asset_id"),
-          Multimodal.bmpContent(col("asset_id"), size, lit(noisy)).as("content"))
-        .select((col("asset_id") + shift).as("asset_id"), col("content"))
-      val decoded = Multimodal.decodeImages(bmp(0L, 8, noisy = false)
-        .unionByName(bmp(1000000L, 16, noisy = false))
-        .unionByName(bmp(2000000L, 8, noisy = true))).toDF()
+    Query("mm_phash_dedup_tight", mmPhashOracle(maxHamming = 3, probe = 0)) { (s, dir) =>
+      val decoded = phashImages(s, dir)
       Multimodal.imageNearDups(decoded)
         .select(col("a"), col("b"), col("hamming"),
           col("clique_a"), col("clique_b"))
@@ -333,18 +318,16 @@ object MultimodalQueries {
        |FROM a JOIN st USING (asset_id) JOIN hs USING (asset_id)
        |ORDER BY a.asset_id""".stripMargin
 
-  /** Wide-recall candidate gate mirroring the Spark side's multi-probe
-    * banding: some 16-bit band differs in <= 1 bit (the 1-bit probe
-    * ball) — recall-complete for hamming <= 7 by pigeonhole, like the
-    * single-byte gate it replaced, but replaying the ACTUAL candidate
-    * generation.
+  /** The phash pair oracle: collapse-first (the operator's clique-safe
+    * default — identical hashes fold to (rep = min id, clique = count)
+    * before pairing), then the 4×16-bit band gate: `probe` = 1 mirrors
+    * the Spark side's multi-probe wide-recall banding (some band differs
+    * in <= 1 bit — recall-complete for hamming <= 7 by pigeonhole),
+    * `probe` = 0 the DEFAULT banding (recall-redundant for hamming <= 3,
+    * mirrored anyway so the oracle replays the exact candidate
+    * generation).
     */
-  private def mmPhashOracle: String = {
-    val bandEq = (0 until 4).map(b =>
-      s"bit_count(xor((l.dh >> ${b * 16}) & 65535, (r.dh >> ${b * 16}) & 65535)) <= 1")
-      .mkString("\n      OR ")
-    // collapse-first (the operator's clique-safe default): identical
-    // hashes fold to (rep = min id, clique = count) before pairing
+  private def mmPhashOracle(maxHamming: Int, probe: Int): String =
     s"""WITH ${mmPixelCtes(withNoisy = true)},
        |cl AS (
        |  SELECT dh, min(asset_id) AS rep, count(*) AS clique
@@ -354,32 +337,9 @@ object MultimodalQueries {
        |    CAST(bit_count(xor(l.dh, r.dh)) AS INT) AS hamming,
        |    l.clique AS clique_a, r.clique AS clique_b
        |  FROM cl l JOIN cl r ON l.rep < r.rep
-       |    AND ($bandEq))
+       |    AND (${band16("dh", probe)}))
        |SELECT a, b, hamming, clique_a, clique_b FROM pairs
-       |WHERE hamming <= 6 ORDER BY a, b""".stripMargin
-  }
-
-  /** [[mmPhashOracle]] at the DEFAULT banding: 4×16-bit bands (the band
-    * clause is recall-redundant for hamming <= 3 by pigeonhole, mirrored
-    * here anyway so the oracle replays the exact candidate generation).
-    */
-  private def mmPhashTightOracle: String = {
-    val bandEq = (0 until 4).map(b =>
-      s"((l.dh >> ${b * 16}) & 65535) = ((r.dh >> ${b * 16}) & 65535)")
-      .mkString("\n      OR ")
-    s"""WITH ${mmPixelCtes(withNoisy = true)},
-       |cl AS (
-       |  SELECT dh, min(asset_id) AS rep, count(*) AS clique
-       |  FROM hs GROUP BY dh),
-       |pairs AS (
-       |  SELECT l.rep AS a, r.rep AS b,
-       |    CAST(bit_count(xor(l.dh, r.dh)) AS INT) AS hamming,
-       |    l.clique AS clique_a, r.clique AS clique_b
-       |  FROM cl l JOIN cl r ON l.rep < r.rep
-       |    AND ($bandEq))
-       |SELECT a, b, hamming, clique_a, clique_b FROM pairs
-       |WHERE hamming <= 3 ORDER BY a, b""".stripMargin
-  }
+       |WHERE hamming <= $maxHamming ORDER BY a, b""".stripMargin
 
   /** Shared CTEs for the REAL audio-decode oracles: regenerate the WAV
     * fixture's PCM samples from the id arithmetic alone (uncompressed
@@ -440,9 +400,6 @@ object MultimodalQueries {
 
   private def mmAudioDedupOracle: String = {
     // the [[mmPhashOracle]] multi-probe wide-recall gate on the afp hash
-    val bandEq = (0 until 4).map(b =>
-      s"bit_count(xor((l.afp >> ${b * 16}) & 65535, (r.afp >> ${b * 16}) & 65535)) <= 1")
-      .mkString("\n      OR ")
     s"""WITH ${mmAudioCtes(
         """SELECT pid, pid AS asset_id, 16 AS bits, 1 AS gain, 0 AS noisy,
           |    0 AS mute FROM ids
@@ -456,7 +413,7 @@ object MultimodalQueries {
        |    CAST(bit_count(xor(l.afp, r.afp)) AS INT) AS hamming,
        |    l.clique AS clique_a, r.clique AS clique_b
        |  FROM cl l JOIN cl r ON l.rep < r.rep
-       |    AND ($bandEq))
+       |    AND (${band16("afp", 1)}))
        |SELECT a, b, hamming, clique_a, clique_b FROM pairs
        |WHERE hamming <= 7 ORDER BY a, b""".stripMargin
   }
@@ -641,5 +598,21 @@ object MultimodalQueries {
        |  CAST(coalesce(list_sum(list_transform(range(0, byte_len, stride),
        |    j -> ($hi) * 16 + ($lo))), 0) AS BIGINT) AS thumb_sum
        |FROM s ORDER BY asset_id""".stripMargin
+  }
+
+  /** The phash dedup images, decoded: pixel ids 0..299 as 8x8 BMPs,
+    * their byte-exact 16x16 scale twins at +1000000 and their noisy 8x8
+    * twins at +2000000.
+    */
+  private def phashImages(s: SparkSession, dir: String): DataFrame = {
+    val ids = Tables(s, dir).documents.filter(col("doc_id") < 300)
+      .select(col("doc_id").as("asset_id"))
+    def bmp(shift: Long, size: Int, noisy: Boolean) = ids
+      .select(col("asset_id"),
+        Multimodal.bmpContent(col("asset_id"), size, lit(noisy)).as("content"))
+      .select((col("asset_id") + shift).as("asset_id"), col("content"))
+    Multimodal.decodeImages(bmp(0L, 8, noisy = false)
+      .unionByName(bmp(1000000L, 16, noisy = false))
+      .unionByName(bmp(2000000L, 8, noisy = true))).toDF()
   }
 }

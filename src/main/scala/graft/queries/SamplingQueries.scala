@@ -19,21 +19,8 @@ object SamplingQueries {
     // --- the composed curation pipeline (capstone): exact-dedup the
     //     corpus, drop low-quality docs, roll up by predicted language —
     //     every stage individually oracle-proven, composed here ----------
-    Query("corpus_curate", {
-      val stopHits = TextAnalysis.enStopwords.map { w =>
-        s"CAST((length(' ' || text || ' ') - length(replace(' ' || text || ' ', ' $w ', ''))) // ${w.length + 2} AS BIGINT)"
-      }.mkString(" + ")
-      def hits(words: Seq[String]): String = words.map { w =>
-        s"CAST((length(' ' || replace(replace(lower(text), 'ς', 'σ'), 'i' || chr(775), 'i') || ' ') - length(replace(' ' || replace(replace(lower(text), 'ς', 'σ'), 'i' || chr(775), 'i') || ' ', ' $w ', ''))) // ${w.length + 2} AS BIGINT)"
-      }.mkString(" + ")
-      val de = hits(Seq("der", "die", "und", "ist", "das"))
-      val en = hits(Seq("the", "and", "is", "of", "to"))
-      val es = hits(Seq("el", "la", "los", "es", "y"))
-      val fr = hits(Seq("le", "la", "les", "est", "et"))
-      val zh = hits(Seq("的", "是", "了", "在", "我"))
-      s"""WITH corpus AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL SELECT doc_id + 1000000, text FROM documents),
+    Query("corpus_curate",
+      s"""WITH ${twinCorpusCte()},
          |dedup AS (
          |  SELECT doc_id, text FROM (
          |    SELECT doc_id, text, row_number() OVER (
@@ -58,24 +45,17 @@ object SamplingQueries {
          |f AS (SELECT doc_id, text, q FROM q WHERE q >= 0.5),
          |s AS (
          |  SELECT doc_id, q,
-         |    $de AS sde, $en AS sen, $es AS ses, $fr AS sfr, $zh AS szh
+         |    $langScoreCols
          |  FROM f),
          |p AS (
          |  SELECT doc_id, q,
-         |    CASE WHEN GREATEST(sde, sen, ses, sfr, szh) = 0 THEN 'und'
-         |         WHEN sde = GREATEST(sde, sen, ses, sfr, szh) THEN 'de'
-         |         WHEN sen = GREATEST(sde, sen, ses, sfr, szh) THEN 'en'
-         |         WHEN ses = GREATEST(sde, sen, ses, sfr, szh) THEN 'es'
-         |         WHEN sfr = GREATEST(sde, sen, ses, sfr, szh) THEN 'fr'
-         |         ELSE 'zh' END AS pred
+         |    ${langPred("    ")} AS pred
          |  FROM s)
          |SELECT pred, COUNT(*) AS n_docs,
          |  CAST(SUM(CAST(q AS DECIMAL(18,6))) AS DOUBLE) AS sum_quality
-         |FROM p GROUP BY pred ORDER BY pred""".stripMargin
-    }) { (s, dir) =>
+         |FROM p GROUP BY pred ORDER BY pred""".stripMargin) { (s, dir) =>
       val d = Tables(s, dir).documents
-      val corpus = d.select(col("doc_id"), col("text"))
-        .union(d.select((col("doc_id") + 1000000).as("doc_id"), col("text")))
+      val corpus = Fixtures.twinCorpus(d, "text")
       Dedup.dropExact(corpus, col("text"), col("doc_id"))
         .withColumn("q", TextAnalysis.qualityScore(col("text")))
         .filter(col("q") >= 0.5)
@@ -216,66 +196,11 @@ object SamplingQueries {
     //     filter -> PII scrub -> per-source cap -> train/val split ->
     //     per-(split, source) token accounting. Six oracle-proven stages
     //     composed end-to-end — the 100 TB pre-training data job --------
-    Query("corpus_pipeline", {
-      val stopHits = TextAnalysis.enStopwords.map { w =>
-        s"CAST((length(' ' || text || ' ') - length(replace(' ' || text || ' ', ' $w ', ''))) // ${w.length + 2} AS BIGINT)"
-      }.mkString(" + ")
-      val email = TextAnalysis.piiEmailRe
-      val ipv4 = TextAnalysis.piiIpv4Re
-      val num = TextAnalysis.piiLongNumRe
-      s"""WITH corpus AS (
-         |  SELECT doc_id, text, source FROM documents
-         |  UNION ALL SELECT doc_id + 1000000, text, source FROM documents),
-         |dedup AS (
-         |  SELECT doc_id, text, source FROM (
-         |    SELECT doc_id, text, source, row_number() OVER (
-         |      PARTITION BY md5(regexp_replace(replace(replace(lower(trim(text)), 'ς', 'σ'), 'i' || chr(775), 'i'), '\\s+', ' ', 'g'))
-         |      ORDER BY doc_id) AS rn
-         |    FROM corpus)
-         |  WHERE rn = 1),
-         |gm AS (
-         |  SELECT doc_id, text, source,
-         |    CASE WHEN trim(text) = '' THEN 0
-         |         ELSE len(string_split_regex(trim(text), '\\s+')) END AS n_words,
-         |    $stopHits AS stop_hits,
-         |    string_split(regexp_replace(replace(replace(lower(trim(text)), 'ς', 'σ'), 'i' || chr(775), 'i'), '\\s+', ' ', 'g'), ' ') AS w
-         |  FROM dedup),
-         |g AS (
-         |  SELECT doc_id, text, source FROM gm
-         |  WHERE n_words >= 20 AND n_words <= 100000
-         |    AND (CASE WHEN n_words = 0 THEN 0.0
-         |      ELSE CAST(length(regexp_replace(trim(text), '\\s+', '', 'g')) AS DOUBLE) / n_words END) >= 3.0
-         |    AND (CASE WHEN n_words = 0 THEN 0.0
-         |      ELSE CAST(length(regexp_replace(trim(text), '\\s+', '', 'g')) AS DOUBLE) / n_words END) <= 10.0
-         |    AND (CASE WHEN trim(text) = '' THEN 0.0
-         |      ELSE CAST(len(list_filter(w, x -> regexp_matches(x, '[a-z]'))) AS DOUBLE) / len(w) END) >= 0.8
-         |    AND stop_hits >= 2),
-         |scr AS (
-         |  SELECT doc_id, source,
-         |    regexp_replace(regexp_replace(regexp_replace(text,
-         |      '$email', '<EMAIL>', 'g'),
-         |      '$ipv4', '<IP>', 'g'),
-         |      '$num', '<NUM>', 'g') AS text
-         |  FROM g),
-         |b AS (
-         |  SELECT doc_id, source, text, $bucketExpr AS bucket,
-         |    row_number() OVER (PARTITION BY source
-         |      ORDER BY $bucketExpr, doc_id) AS rn
-         |  FROM scr),
-         |capped AS (SELECT doc_id, source, text, bucket FROM b WHERE rn <= 20),
-         |sp AS (
-         |  SELECT source, text,
-         |    CASE WHEN bucket < 9000 THEN 'train' ELSE 'val' END AS split
-         |  FROM capped)
-         |SELECT split, source, count(*) AS n,
-         |  CAST(sum(CASE WHEN trim(text) = '' THEN 0
-         |    ELSE len(string_split_regex(trim(text), '\\s+')) END) AS BIGINT) AS n_tokens
-         |FROM sp GROUP BY split, source ORDER BY split, source""".stripMargin
-    }) { (s, dir) =>
+    Query("corpus_pipeline",
+      s"""WITH ${twinCorpusCte("text, source")},
+         |${curationStages("", "corpus", "g")} ORDER BY split, source""".stripMargin) { (s, dir) =>
       val d = Tables(s, dir).documents
-      val corpus = d.select(col("doc_id"), col("text"), col("source"))
-        .union(d.select((col("doc_id") + 1000000).as("doc_id"),
-          col("text"), col("source")))
+      val corpus = Fixtures.twinCorpus(d, "text", "source")
       val scrubbed = Dedup.dropExact(corpus, col("text"), col("doc_id"))
         .filter(TextAnalysis.gopherKeep(col("text")))
         .withColumn("text", TextAnalysis.scrubPii(col("text")))
@@ -385,12 +310,10 @@ object SamplingQueries {
     Query("sample_split_safe",
       // exact-dup families are cliques on the fingerprint, so the cluster
       // is min(doc_id) per fp; the split hashes the COMPONENT id
-      """WITH corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 1000000, text FROM documents),
+      s"""WITH ${twinCorpusCte()},
         |fp AS (
         |  SELECT doc_id,
-        |    md5(regexp_replace(replace(replace(lower(trim(text)), 'ς', 'σ'), 'i' || chr(775), 'i'), '\s+', ' ', 'g')) AS f
+        |    md5(${canon("text")}) AS f
         |  FROM corpus),
         |comp AS (
         |  SELECT doc_id, min(doc_id) OVER (PARTITION BY f) AS component
@@ -403,9 +326,7 @@ object SamplingQueries {
         |  CASE WHEN bkt < 8000 THEN 'train'
         |       WHEN bkt < 9000 THEN 'val' ELSE 'test' END AS split
         |FROM sp ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      val d = Tables(s, dir).documents.select(col("doc_id"), col("text"))
-      val corpus = d.union(d.select((col("doc_id") + 1000000).as("doc_id"),
-        col("text")))
+      val corpus = Fixtures.twinCorpus(Tables(s, dir).documents, "text")
       val withFp = corpus.select(col("doc_id"),
         TextAnalysis.fingerprint(col("text")).as("fp"))
       val pairs = withFp.alias("x").join(withFp.alias("y"),

@@ -1,7 +1,7 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.Tables
 import graft.operators.{Similarity, TextAnalysis}
@@ -29,46 +29,34 @@ object SimilarityQueries {
         |  nn_id, round(cos0, 6) AS cos
         |FROM scored QUALIFY rank <= 5
         |ORDER BY query_id, rank""".stripMargin) { (s, dir) =>
-      val e = Tables(s, dir).embeddings
-        .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("embedding"))
+      val e = Fixtures.vectors(s, dir)
       Similarity.bruteForceTopK(e, e.filter(col("vec_id") < 20), k = 5)
-        .select(col("query_id"), col("rank"), col("nn_id"),
-          round(col("cos"), 6).as("cos"))
-        .orderBy(col("query_id"), col("rank"))
+        .transform(ranked)
     },
 
     // --- LSH-bucketed top-k (oracle recomputes bands from plane literals) -
     Query("sim_topk_lsh", lshOracle) { (s, dir) =>
-      val e = Tables(s, dir).embeddings
-        .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("embedding"))
+      val e = Fixtures.vectors(s, dir)
       Similarity.lshTopK(e, e.filter(col("vec_id") < 20), k = 5, dims = 64)
-        .select(col("query_id"), col("rank"), col("nn_id"),
-          round(col("cos"), 6).as("cos"))
-        .orderBy(col("query_id"), col("rank"))
+        .transform(ranked)
     },
 
     // --- IVF-cell top-k (oracle re-trains the same centroids in SQL) -----
     Query("sim_topk_ivf", ivfOracle) { (s, dir) =>
-      val e = Tables(s, dir).embeddings
-        .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("embedding"))
+      val e = Fixtures.vectors(s, dir)
       Similarity.ivfTopK(e, e.filter(col("vec_id") < 20), k = 5,
           nCells = 16, nprobe = 4)
-        .select(col("query_id"), col("rank"), col("nn_id"),
-          round(col("cos"), 6).as("cos"))
-        .orderBy(col("query_id"), col("rank"))
+        .transform(ranked)
     },
 
     // --- PQ/ADC top-k (oracle re-trains all eight subspace codebooks,
     //     re-encodes, replays the ADC lookup scoring and the exact
     //     re-rank in SQL) --------------------------------------------------
     Query("sim_topk_pq", pqOracle) { (s, dir) =>
-      val e = Tables(s, dir).embeddings
-        .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("embedding"))
+      val e = Fixtures.vectors(s, dir)
       Similarity.pqTopK(e, e.filter(col("vec_id") < 20), k = 5,
           m = 8, kCodes = 16, rerank = 8)
-        .select(col("query_id"), col("rank"), col("nn_id"),
-          round(col("cos"), 6).as("cos"))
-        .orderBy(col("query_id"), col("rank"))
+        .transform(ranked)
     },
 
     // --- the persisted-index SERVING paths under oracle: train once,
@@ -83,16 +71,13 @@ object SimilarityQueries {
       // and the persisted-inverted-list twin reads identical rows from
       // the cell-partitioned files, so it shares it too
       ivfOracle) { (s, dir) =>
-      val e = Tables(s, dir).embeddings
-        .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("embedding"))
+      val e = Fixtures.vectors(s, dir)
       val idxDir = Scratch.dir("ivf_index", dir)
       Similarity.IvfIndex.save(Similarity.trainCentroids(e, nCells = 16), s, idxDir)
       val loaded = Similarity.IvfIndex.load(s, idxDir)
       Similarity.ivfTopKWithIndex(e, e.filter(col("vec_id") < 20), k = 5,
           loaded, nprobe = 4)
-        .select(col("query_id"), col("rank"), col("nn_id"),
-          round(col("cos"), 6).as("cos"))
-        .orderBy(col("query_id"), col("rank"))
+        .transform(ranked)
     },
 
     // --- the persisted-inverted-list twin: the corpus is written out
@@ -101,29 +86,23 @@ object SimilarityQueries {
     //     prune) — no per-batch corpus re-assignment. Same centroids,
     //     same results as sim_topk_ivf; different physics -------------
     Query("sim_topk_ivf_persisted", ivfOracle) { (s, dir) =>
-      val e = Tables(s, dir).embeddings
-        .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("embedding"))
+      val e = Fixtures.vectors(s, dir)
       val idxDir = Scratch.dir("ivf_inv_index", dir)
       Similarity.IvfIndex.saveAssigned(e,
         Similarity.trainCentroids(e, nCells = 16), idxDir)
       Similarity.ivfTopKFromIndex(s, idxDir, e.filter(col("vec_id") < 20),
           k = 5, nprobe = 4)
-        .select(col("query_id"), col("rank"), col("nn_id"),
-          round(col("cos"), 6).as("cos"))
-        .orderBy(col("query_id"), col("rank"))
+        .transform(ranked)
     },
 
     Query("sim_topk_pq_indexed", pqOracle) { (s, dir) =>
-      val e = Tables(s, dir).embeddings
-        .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("embedding"))
+      val e = Fixtures.vectors(s, dir)
       val idxDir = Scratch.dir("pq_index", dir)
       Similarity.PqIndex.save(Similarity.trainPq(e, m = 8, k = 16), s, idxDir)
       val books = Similarity.PqIndex.load(s, idxDir)
       Similarity.pqTopKWithBooks(e, e.filter(col("vec_id") < 20), k = 5,
           books, rerank = 8)
-        .select(col("query_id"), col("rank"), col("nn_id"),
-          round(col("cos"), 6).as("cos"))
-        .orderBy(col("query_id"), col("rank"))
+        .transform(ranked)
     },
 
     // --- the standing-index ADMISSION lifecycle: the index is built on
@@ -137,8 +116,7 @@ object SimilarityQueries {
       // append-after-save answers == rebuild-on-union under frozen
       // centroids (trained on the even half, assignment over the union)
       ivfAppendedOracle) { (s, dir) =>
-      val e = Tables(s, dir).embeddings
-        .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("embedding"))
+      val e = Fixtures.vectors(s, dir)
       val seedHalf = e.filter(col("vec_id") % 2 === 0)
       val fresh = e.filter(col("vec_id") % 2 =!= 0)
       val idxDir = Scratch.dir("ivf_app_index", dir)
@@ -147,9 +125,7 @@ object SimilarityQueries {
       Similarity.IvfIndex.appendAssigned(fresh, idxDir)
       Similarity.ivfTopKFromIndex(s, idxDir, e.filter(col("vec_id") < 20),
           k = 5, nprobe = 4)
-        .select(col("query_id"), col("rank"), col("nn_id"),
-          round(col("cos"), 6).as("cos"))
-        .orderBy(col("query_id"), col("rank"))
+        .transform(ranked)
     },
 
     // --- the IVF-PQ serving composition (IVFADC): probe cells from the
@@ -159,17 +135,14 @@ object SimilarityQueries {
     //     pruned partitions. The oracle composes the deterministic IVF
     //     cell derivation with the PQ codebook derivation ---------------
     Query("sim_topk_ivfpq", ivfPqOracle) { (s, dir) =>
-      val e = Tables(s, dir).embeddings
-        .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("embedding"))
+      val e = Fixtures.vectors(s, dir)
       val idxDir = Scratch.dir("ivfpq_index", dir)
       Similarity.IvfPqIndex.save(e,
         Similarity.trainCentroids(e, nCells = 16),
         Similarity.trainPq(e, m = 8, k = 16), idxDir)
       Similarity.ivfPqTopK(s, idxDir, e.filter(col("vec_id") < 20),
           k = 5, nprobe = 4, rerank = 8)
-        .select(col("query_id"), col("rank"), col("nn_id"),
-          round(col("cos"), 6).as("cos"))
-        .orderBy(col("query_id"), col("rank"))
+        .transform(ranked)
     },
 
     // --- the composed-index ADMISSION lifecycle: the IVFADC index is
@@ -181,8 +154,7 @@ object SimilarityQueries {
       // append-after-save answers == rebuild-on-union under the frozen
       // even-half-trained centroids AND codebooks
       ivfPqAppendedOracle) { (s, dir) =>
-      val e = Tables(s, dir).embeddings
-        .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("embedding"))
+      val e = Fixtures.vectors(s, dir)
       val seedHalf = e.filter(col("vec_id") % 2 === 0)
       val fresh = e.filter(col("vec_id") % 2 =!= 0)
       val idxDir = Scratch.dir("ivfpq_app_index", dir)
@@ -192,9 +164,7 @@ object SimilarityQueries {
       Similarity.IvfPqIndex.append(fresh, idxDir)
       Similarity.ivfPqTopK(s, idxDir, e.filter(col("vec_id") < 20),
           k = 5, nprobe = 4, rerank = 8)
-        .select(col("query_id"), col("rank"), col("nn_id"),
-          round(col("cos"), 6).as("cos"))
-        .orderBy(col("query_id"), col("rank"))
+        .transform(ranked)
     },
 
     // --- int8 embedding quantization (vector-store compression): the
@@ -226,11 +196,8 @@ object SimilarityQueries {
     //     cosine pairs -> clusters + canonical survivors; the oracle
     //     re-trains the identical centroids AND recomputes the closure --
     Query("sim_semdedup", semdedupOracle) { (s, dir) =>
-      val e = Tables(s, dir).embeddings
-        .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("embedding"))
-      val corpus = e.union(
-        e.select((col("vec_id") + 1000000).as("vec_id"),
-          transform(col("embedding"), x => x + lit(0.05)).as("embedding")))
+      val e = Fixtures.vectors(s, dir)
+      val corpus = e.union(Fixtures.nudged(e))
       Similarity.semanticDedup(corpus, nCells = 16, threshold = 0.75)
         .orderBy(col("id"))
     },
@@ -261,14 +228,10 @@ object SimilarityQueries {
         |  nn_id, round(cos0, 6) AS cos
         |FROM banded QUALIFY rank <= 5
         |ORDER BY query_id, rank""".stripMargin) { (s, dir) =>
-      val e = Tables(s, dir).embeddings
-        .select(col("vec_id"),
-          col("embedding").cast(ArrayType(DoubleType)).as("embedding"))
+      val e = Fixtures.vectors(s, dir)
       Similarity.hardNegativesTopK(e, e.filter(col("vec_id") < 20), k = 5,
           loCos = 0.3, hiCos = 0.9)
-        .select(col("query_id"), col("rank"), col("nn_id"),
-          round(col("cos"), 6).as("cos"))
-        .orderBy(col("query_id"), col("rank"))
+        .transform(ranked)
     },
 
     // --- integer PageRank over a lineitem-derived link graph (5 exact
@@ -304,17 +267,6 @@ object SimilarityQueries {
     * exact doubles the Spark plan embeds (same splitmix64 derivation).
     */
   private def lshOracle: String = {
-    def plane(b: Int): String =
-      (0 until 64).map(d => Similarity.planeComponent(b, d).toString)
-        .mkString("[", ", ", "]")
-    val bitCols = (0 until 16).map(b =>
-      s"(CASE WHEN list_dot_product(v, ${plane(b)}) >= 0 THEN 1 ELSE 0 END) AS b$b")
-      .mkString(",\n    ")
-    val keyCols = (0 until 4).map { band =>
-      val expr = (0 until 4).map(r => s"b${band * 4 + r}")
-        .reduce((acc, b) => s"($acc * 2 + $b)")
-      s"$expr AS k$band"
-    }.mkString(",\n    ")
     // multi-probe: the corpus key matches the query key OR any 1-bit flip
     // of it — the identical probe set the Spark side explodes
     val bandEq = (0 until 4).map { b =>
@@ -323,12 +275,7 @@ object SimilarityQueries {
       s"c.k$b IN ($probes)"
     }.mkString("\n      OR ")
     s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-       |sg AS (SELECT vec_id, v,
-       |    $bitCols
-       |  FROM e),
-       |bd AS (SELECT vec_id, v,
-       |    $keyCols
-       |  FROM sg),
+       |${rhpBandCtes(4, 4, keep = " v,")},
        |cd AS (
        |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS nn_id, q.v AS qv, c.v AS cv
        |  FROM bd q JOIN bd c ON q.vec_id < 20 AND c.vec_id <> q.vec_id
@@ -379,35 +326,8 @@ object SimilarityQueries {
     */
   private def pqOracle: String = {
     val m = 8; val sub = 8; val kCodes = 16
-    val hSigned = "(md5_number_lower(CAST(vec_id AS VARCHAR))::HUGEINT - " +
-      "CASE WHEN md5_number_lower(CAST(vec_id AS VARCHAR)) >= 9223372036854775808 " +
-      "THEN 18446744073709551616::HUGEINT ELSE 0::HUGEINT END)"
     def lo(s: Int) = s * sub + 1
     def hi(s: Int) = (s + 1) * sub
-    val perSub = (0 until m).map { s =>
-      val meanCols = (0 until sub).map(d => s"round(avg(sv[${d + 1}]), 3) AS m$d")
-        .mkString(", ")
-      val centList = (0 until sub).map(d => s"coalesce(m.m$d, round(s.v[${lo(s) + d}], 3))")
-        .mkString("[", ", ", "]")
-      s"""a$s AS (
-         |  SELECT e.vec_id, e.v[${lo(s)}:${hi(s)}] AS sv, s.cell,
-         |    list_dot_product(e.v[${lo(s)}:${hi(s)}], s.v[${lo(s)}:${hi(s)}]) /
-         |      sqrt(list_dot_product(s.v[${lo(s)}:${hi(s)}], s.v[${lo(s)}:${hi(s)}])) AS score
-         |  FROM e CROSS JOIN seeds s),
-         |b$s AS (
-         |  SELECT vec_id, sv, cell FROM a$s
-         |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY score DESC, cell) = 1),
-         |m$s AS (SELECT cell, $meanCols FROM b$s GROUP BY cell),
-         |cent$s AS (
-         |  SELECT s.cell, $centList AS cv
-         |  FROM seeds s LEFT JOIN m$s m ON s.cell = m.cell),
-         |code$s AS (
-         |  SELECT e.vec_id, c.cell AS code
-         |  FROM e CROSS JOIN cent$s c
-         |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY
-         |    list_dot_product(e.v[${lo(s)}:${hi(s)}], c.cv) /
-         |      sqrt(list_dot_product(c.cv, c.cv)) DESC, c.cell) = 1)""".stripMargin
-    }.mkString(",\n")
     val adcScore = (0 until m)
       .map(s => s"list_dot_product(q.qv[${lo(s)}:${hi(s)}], c$s.cv)")
       .mkString(" + ")
@@ -417,9 +337,9 @@ object SimilarityQueries {
       .mkString("\n  ")
     s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
        |seeds AS (
-       |  SELECT row_number() OVER (ORDER BY $hSigned, vec_id) - 1 AS cell, v
-       |  FROM e ORDER BY $hSigned, vec_id LIMIT $kCodes),
-       |$perSub,
+       |  SELECT row_number() OVER (ORDER BY $signedVecIdMd5, vec_id) - 1 AS cell, v
+       |  FROM e ORDER BY $signedVecIdMd5, vec_id LIMIT $kCodes),
+       |${pqSubspaceCtes("e")},
        |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 20),
        |approx AS (
        |  SELECT q.query_id, e.vec_id AS nn_id, ($adcScore) AS ascore
@@ -462,35 +382,8 @@ object SimilarityQueries {
 
   private def ivfPqOracleTrainedOn(trainRel: String): String = {
     val m = 8; val sub = 8; val kCodes = 16
-    val hSigned = "(md5_number_lower(CAST(vec_id AS VARCHAR))::HUGEINT - " +
-      "CASE WHEN md5_number_lower(CAST(vec_id AS VARCHAR)) >= 9223372036854775808 " +
-      "THEN 18446744073709551616::HUGEINT ELSE 0::HUGEINT END)"
     def lo(s: Int) = s * sub + 1
     def hi(s: Int) = (s + 1) * sub
-    val perSub = (0 until m).map { s =>
-      val meanCols = (0 until sub).map(d => s"round(avg(sv[${d + 1}]), 3) AS m$d")
-        .mkString(", ")
-      val centList = (0 until sub).map(d => s"coalesce(m.m$d, round(s.v[${lo(s) + d}], 3))")
-        .mkString("[", ", ", "]")
-      s"""a$s AS (
-         |  SELECT e.vec_id, e.v[${lo(s)}:${hi(s)}] AS sv, s.cell,
-         |    list_dot_product(e.v[${lo(s)}:${hi(s)}], s.v[${lo(s)}:${hi(s)}]) /
-         |      sqrt(list_dot_product(s.v[${lo(s)}:${hi(s)}], s.v[${lo(s)}:${hi(s)}])) AS score
-         |  FROM $trainRel e CROSS JOIN seeds s),
-         |b$s AS (
-         |  SELECT vec_id, sv, cell FROM a$s
-         |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY score DESC, cell) = 1),
-         |m$s AS (SELECT cell, $meanCols FROM b$s GROUP BY cell),
-         |cent$s AS (
-         |  SELECT s.cell, $centList AS cv
-         |  FROM seeds s LEFT JOIN m$s m ON s.cell = m.cell),
-         |code$s AS (
-         |  SELECT e.vec_id, c.cell AS code
-         |  FROM e CROSS JOIN cent$s c
-         |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY
-         |    list_dot_product(e.v[${lo(s)}:${hi(s)}], c.cv) /
-         |      sqrt(list_dot_product(c.cv, c.cv)) DESC, c.cell) = 1)""".stripMargin
-    }.mkString(",\n")
     val adcScore = (0 until m)
       .map(s => s"list_dot_product(p.qv[${lo(s)}:${hi(s)}], c$s.cv)")
       .mkString(" + ")
@@ -504,8 +397,8 @@ object SimilarityQueries {
       .mkString("[", ", ", "]")
     s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
        |seeds AS (
-       |  SELECT row_number() OVER (ORDER BY $hSigned, vec_id) - 1 AS cell, v
-       |  FROM $trainRel ORDER BY $hSigned, vec_id LIMIT $kCodes),
+       |  SELECT row_number() OVER (ORDER BY $signedVecIdMd5, vec_id) - 1 AS cell, v
+       |  FROM $trainRel ORDER BY $signedVecIdMd5, vec_id LIMIT $kCodes),
        |ia AS (
        |  SELECT e.vec_id, e.v, s.cell,
        |    list_dot_product(e.v, s.v) / sqrt(list_dot_product(s.v, s.v)) AS score
@@ -529,7 +422,7 @@ object SimilarityQueries {
        |probes AS (
        |  SELECT vec_id AS query_id, v AS qv, cell FROM iac WHERE vec_id < 20
        |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY score DESC, cell) <= 4),
-       |$perSub,
+       |${pqSubspaceCtes(s"$trainRel e")},
        |approx AS (
        |  SELECT p.query_id, k.vec_id AS nn_id, ($adcScore) AS ascore
        |  FROM probes p JOIN cellof k ON p.cell = k.cell AND k.vec_id <> p.query_id
@@ -554,44 +447,9 @@ object SimilarityQueries {
     * [[ivfOracle]]), assigns cells, emits within-cell cosine pairs and
     * closes them into components with a recursive transitive closure.
     */
-  private def semdedupOracle: String = {
-    val meanCols = (0 until 64).map(d => s"round(avg(v[${d + 1}]), 3) AS m$d")
-      .mkString(",\n    ")
-    val centList = (0 until 64).map(d => s"coalesce(m.m$d, round(s.v[${d + 1}], 3))")
-      .mkString("[", ", ", "]")
-    val hSigned = "(md5_number_lower(CAST(vec_id AS VARCHAR))::HUGEINT - " +
-      "CASE WHEN md5_number_lower(CAST(vec_id AS VARCHAR)) >= 9223372036854775808 " +
-      "THEN 18446744073709551616::HUGEINT ELSE 0::HUGEINT END)"
-    s"""WITH RECURSIVE base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-       |e AS (
-       |  SELECT vec_id, v FROM base
-       |  UNION ALL SELECT vec_id + 1000000 AS vec_id,
-       |    list_transform(v, x -> x + 0.05) AS v FROM base),
-       |seeds AS (
-       |  SELECT row_number() OVER (
-       |      ORDER BY $hSigned, vec_id) - 1 AS cell, v
-       |  FROM e
-       |  ORDER BY $hSigned, vec_id LIMIT 16),
-       |a0 AS (
-       |  SELECT e.vec_id, e.v, s.cell,
-       |    list_dot_product(e.v, s.v) / sqrt(list_dot_product(s.v, s.v)) AS score
-       |  FROM e CROSS JOIN seeds s),
-       |b0 AS (
-       |  SELECT vec_id, v, cell FROM a0
-       |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY score DESC, cell) = 1),
-       |m AS (SELECT cell,
-       |    $meanCols
-       |  FROM b0 GROUP BY cell),
-       |cent AS (
-       |  SELECT s.cell, $centList AS cv
-       |  FROM seeds s LEFT JOIN m ON s.cell = m.cell),
-       |ac AS (
-       |  SELECT e.vec_id, e.v, c.cell,
-       |    list_dot_product(e.v, c.cv) / sqrt(list_dot_product(c.cv, c.cv)) AS score
-       |  FROM e CROSS JOIN cent c),
-       |cellof AS (
-       |  SELECT vec_id, v, cell FROM ac
-       |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY score DESC, cell) = 1),
+  private def semdedupOracle: String =
+    s"""WITH RECURSIVE $vecTwinCtes,
+       |${ivfCentroidCtes("e", "e", "e")},
        |pr AS (
        |  SELECT l.vec_id AS a, r.vec_id AS b, l.v AS qv, r.v AS cv
        |  FROM cellof l JOIN cellof r ON l.cell = r.cell AND l.vec_id < r.vec_id),
@@ -609,49 +467,17 @@ object SimilarityQueries {
        |  i.id = coalesce(comp.component, i.id) AS keep
        |FROM ids i LEFT JOIN comp ON i.id = comp.id
        |ORDER BY i.id""".stripMargin
-  }
 
   /** BM25 recomputation: identical literal-scan term frequencies (the
     * replace-length trick), one stats row, the same fixed-order float
     * arithmetic (constants embedded as the exact runtime doubles).
     */
-  private def bm25Oracle(terms: Seq[String], k: Int,
-      k1: Double = 1.2, b: Double = 0.75): String = {
-    def tf(tm: String) =
-      s"CAST((length(' ' || t || ' ') - length(replace(' ' || t || ' ', ' $tm ', ''))) // ${tm.length + 2} AS BIGINT)"
-    val tfCols = terms.zipWithIndex.map { case (tm, i) => s"${tf(tm)} AS tf$i" }
-      .mkString(",\n    ")
-    val dfCols = terms.indices.map(i =>
-      s"SUM(CASE WHEN tf$i > 0 THEN 1 ELSE 0 END) AS df$i").mkString(",\n    ")
-    val avgdl = "(CAST(tl AS DOUBLE) / CAST(n AS DOUBLE))"
-    val score = terms.indices.map { i =>
-      val tfD = s"CAST(tf$i AS DOUBLE)"
-      val dfD = s"CAST(df$i AS DOUBLE)"
-      s"ln(1.0 + (CAST(n AS DOUBLE) - $dfD + 0.5) / ($dfD + 0.5)) * " +
-        s"($tfD * ${k1 + 1.0}) / ($tfD + $k1 * (1.0 - $b + $b * CAST(dl AS DOUBLE) / $avgdl))"
-    }.mkString("\n    + ")
-    s"""WITH c AS (
-       |  SELECT doc_id AS id,
-       |    regexp_replace(replace(replace(lower(trim(text)), 'ς', 'σ'), 'i' || chr(775), 'i'), '\\s+', ' ', 'g') AS t
-       |  FROM documents),
-       |tfs AS (
-       |  SELECT id, t,
-       |    CASE WHEN t = '' THEN 0 ELSE len(string_split(t, ' ')) END AS dl,
-       |    $tfCols
-       |  FROM c),
-       |stats AS (
-       |  SELECT COUNT(*) AS n, SUM(dl) AS tl,
-       |    $dfCols
-       |  FROM tfs),
-       |scored AS (
-       |  SELECT id,
-       |    $score AS score
-       |  FROM tfs CROSS JOIN stats),
+  private def bm25Oracle(terms: Seq[String], k: Int): String =
+    s"""WITH ${bm25Ctes(terms, "scored")},
        |topk AS (
        |  SELECT id, score FROM scored WHERE score > 0
        |  ORDER BY score DESC, id LIMIT $k)
        |SELECT id, round(score, 6) AS score FROM topk ORDER BY id""".stripMargin
-  }
 
   /** RRF hybrid-search oracle: the BM25 pool CTEs (same arithmetic as
     * [[bm25Oracle]]), the dense cosine pool (same arithmetic as the
@@ -659,37 +485,8 @@ object SimilarityQueries {
     * two-term sum order.
     */
   private def hybridOracle(terms: Seq[String], queryVecId: Long, k: Int,
-      poolK: Int, kRrf: Int, k1: Double = 1.2, b: Double = 0.75): String = {
-    def tf(tm: String) =
-      s"CAST((length(' ' || t || ' ') - length(replace(' ' || t || ' ', ' $tm ', ''))) // ${tm.length + 2} AS BIGINT)"
-    val tfCols = terms.zipWithIndex.map { case (tm, i) => s"${tf(tm)} AS tf$i" }
-      .mkString(",\n    ")
-    val dfCols = terms.indices.map(i =>
-      s"SUM(CASE WHEN tf$i > 0 THEN 1 ELSE 0 END) AS df$i").mkString(",\n    ")
-    val avgdl = "(CAST(tl AS DOUBLE) / CAST(n AS DOUBLE))"
-    val score = terms.indices.map { i =>
-      val tfD = s"CAST(tf$i AS DOUBLE)"
-      val dfD = s"CAST(df$i AS DOUBLE)"
-      s"ln(1.0 + (CAST(n AS DOUBLE) - $dfD + 0.5) / ($dfD + 0.5)) * " +
-        s"($tfD * ${k1 + 1.0}) / ($tfD + $k1 * (1.0 - $b + $b * CAST(dl AS DOUBLE) / $avgdl))"
-    }.mkString("\n    + ")
-    s"""WITH c AS (
-       |  SELECT doc_id AS id,
-       |    regexp_replace(replace(replace(lower(trim(text)), 'ς', 'σ'), 'i' || chr(775), 'i'), '\\s+', ' ', 'g') AS t
-       |  FROM documents),
-       |tfs AS (
-       |  SELECT id, t,
-       |    CASE WHEN t = '' THEN 0 ELSE len(string_split(t, ' ')) END AS dl,
-       |    $tfCols
-       |  FROM c),
-       |stats AS (
-       |  SELECT COUNT(*) AS n, SUM(dl) AS tl,
-       |    $dfCols
-       |  FROM tfs),
-       |lexscored AS (
-       |  SELECT id,
-       |    $score AS score
-       |  FROM tfs CROSS JOIN stats),
+      poolK: Int, kRrf: Int): String =
+    s"""WITH ${bm25Ctes(terms, "lexscored")},
        |lexpool AS (
        |  SELECT id, score FROM lexscored WHERE score > 0
        |  ORDER BY score DESC, id LIMIT $poolK),
@@ -716,7 +513,6 @@ object SimilarityQueries {
        |SELECT doc_id, lex_rank, dense_rank, round(rrf, 6) AS rrf,
        |  CAST(row_number() OVER (ORDER BY rrf DESC, doc_id) AS INT) AS rank
        |FROM topk ORDER BY doc_id""".stripMargin
-  }
 
   /** Integer-PageRank oracle: the 5 update rounds unrolled as CTEs (the
     * [[graft.operators.TextAnalysis.bpeTrain]] oracle recipe) — every
@@ -747,5 +543,84 @@ object SimilarityQueries {
        |${(1 to iters).map(round).mkString(",\n")}
        |SELECT node, CAST(rank AS BIGINT) AS rank
        |FROM r$iters ORDER BY node""".stripMargin
+  }
+
+  /** The top-5 rows' compare surface, by query and rank. */
+  private def ranked(df: DataFrame): DataFrame =
+    df.select(col("query_id"), col("rank"), col("nn_id"),
+        round(col("cos"), 6).as("cos"))
+      .orderBy(col("query_id"), col("rank"))
+
+  /** The BM25 CTEs up to `scored(id, score)`: identical literal-scan
+    * term frequencies (the replace-length trick), one stats row, the
+    * same fixed-order float arithmetic (k1 = 1.2, b = 0.75, embedded as
+    * the exact runtime doubles).
+    */
+  private def bm25Ctes(terms: Seq[String], scored: String): String = {
+    val (k1, b) = (1.2, 0.75)
+    def tf(tm: String) =
+      s"CAST((length(' ' || t || ' ') - length(replace(' ' || t || ' ', ' $tm ', ''))) // ${tm.length + 2} AS BIGINT)"
+    val tfCols = terms.zipWithIndex.map { case (tm, i) => s"${tf(tm)} AS tf$i" }
+      .mkString(",\n    ")
+    val dfCols = terms.indices.map(i =>
+      s"SUM(CASE WHEN tf$i > 0 THEN 1 ELSE 0 END) AS df$i").mkString(",\n    ")
+    val avgdl = "(CAST(tl AS DOUBLE) / CAST(n AS DOUBLE))"
+    val score = terms.indices.map { i =>
+      val tfD = s"CAST(tf$i AS DOUBLE)"
+      val dfD = s"CAST(df$i AS DOUBLE)"
+      s"ln(1.0 + (CAST(n AS DOUBLE) - $dfD + 0.5) / ($dfD + 0.5)) * " +
+        s"($tfD * ${k1 + 1.0}) / ($tfD + $k1 * (1.0 - $b + $b * CAST(dl AS DOUBLE) / $avgdl))"
+    }.mkString("\n    + ")
+    s"""c AS (
+       |  SELECT doc_id AS id,
+       |    regexp_replace(replace(replace(lower(trim(text)), 'ς', 'σ'), 'i' || chr(775), 'i'), '\\s+', ' ', 'g') AS t
+       |  FROM documents),
+       |tfs AS (
+       |  SELECT id, t,
+       |    CASE WHEN t = '' THEN 0 ELSE len(string_split(t, ' ')) END AS dl,
+       |    $tfCols
+       |  FROM c),
+       |stats AS (
+       |  SELECT COUNT(*) AS n, SUM(dl) AS tl,
+       |    $dfCols
+       |  FROM tfs),
+       |$scored AS (
+       |  SELECT id,
+       |    $score AS score
+       |  FROM tfs CROSS JOIN stats)""".stripMargin
+  }
+
+  /** The eight 8-dim subspace codebooks over `e(vec_id, v)` (`a<s>` ..
+    * `code<s>`): trained from the shared `seeds` over `trainItem` (a FROM
+    * item aliased `e`), then every row of `e` coded.
+    */
+  private def pqSubspaceCtes(trainItem: String): String = {
+    val m = 8; val sub = 8
+    def lo(s: Int) = s * sub + 1
+    def hi(s: Int) = (s + 1) * sub
+    (0 until m).map { s =>
+      val meanCols = (0 until sub).map(d => s"round(avg(sv[${d + 1}]), 3) AS m$d")
+        .mkString(", ")
+      val centList = (0 until sub).map(d => s"coalesce(m.m$d, round(s.v[${lo(s) + d}], 3))")
+        .mkString("[", ", ", "]")
+      s"""a$s AS (
+         |  SELECT e.vec_id, e.v[${lo(s)}:${hi(s)}] AS sv, s.cell,
+         |    list_dot_product(e.v[${lo(s)}:${hi(s)}], s.v[${lo(s)}:${hi(s)}]) /
+         |      sqrt(list_dot_product(s.v[${lo(s)}:${hi(s)}], s.v[${lo(s)}:${hi(s)}])) AS score
+         |  FROM $trainItem CROSS JOIN seeds s),
+         |b$s AS (
+         |  SELECT vec_id, sv, cell FROM a$s
+         |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY score DESC, cell) = 1),
+         |m$s AS (SELECT cell, $meanCols FROM b$s GROUP BY cell),
+         |cent$s AS (
+         |  SELECT s.cell, $centList AS cv
+         |  FROM seeds s LEFT JOIN m$s m ON s.cell = m.cell),
+         |code$s AS (
+         |  SELECT e.vec_id, c.cell AS code
+         |  FROM e CROSS JOIN cent$s c
+         |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY
+         |    list_dot_product(e.v[${lo(s)}:${hi(s)}], c.cv) /
+         |      sqrt(list_dot_product(c.cv, c.cv)) DESC, c.cell) = 1)""".stripMargin
+    }.mkString(",\n")
   }
 }

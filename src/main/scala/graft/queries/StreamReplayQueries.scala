@@ -1,11 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.Tables
-import graft.operators.{Multimodal, Similarity, TextAnalysis}
+import graft.operators.Multimodal
 
 /** Standing-operator replays: each query seeds a [[graft.streaming]]
   * operator, admits deterministic batches (most through
@@ -119,20 +118,13 @@ object StreamReplayQueries {
     //     compact-after-0 structure over the RHP-banded vector state;
     //     every batch pairs with the seed and with earlier batches ------
     Query("stream_embdedup_replay", streamEmbReplayOracle) { (s, dir) =>
-      val e = Tables(s, dir).embeddings
-        .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("embedding"))
-      val base = e.filter(col("vec_id") % 5 === 0)
-      def batchDf(k: Int) = base.select(
-        (col("vec_id") + lit((k + 1) * 1000000L)).as("vec_id"),
-        when(col("vec_id") % 2 === 0, col("embedding"))
-          .otherwise(transform(col("embedding"), x => x + lit(0.05)))
-          .as("embedding"))
+      val (base, batches) = vecReplayInput(s, dir)
       val stateDir =
         Scratch.dir("stream_embreplay", dir)
       val sed = new graft.streaming.StreamingEmbeddingDedup(s, stateDir,
         "vec_id", "embedding", dims = 64, threshold = 0.75)
       sed.seed(base)
-      val pairs = sed.replay((0 until 3).map(batchDf))
+      val pairs = sed.replay(batches)
       pairs.select(col("batch"), col("ref_id"), col("new_id"),
           round(col("cos"), 6).as("cos"))
         .orderBy(col("batch"), col("ref_id"), col("new_id"))
@@ -143,20 +135,13 @@ object StreamReplayQueries {
     //     batches assign cells with the loaded index and pair within
     //     shared cells against everything admitted before -----------------
     Query("stream_semdedup_replay", streamSemReplayOracle) { (s, dir) =>
-      val e = Tables(s, dir).embeddings
-        .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("embedding"))
-      val base = e.filter(col("vec_id") % 5 === 0)
-      def batchDf(k: Int) = base.select(
-        (col("vec_id") + lit((k + 1) * 1000000L)).as("vec_id"),
-        when(col("vec_id") % 2 === 0, col("embedding"))
-          .otherwise(transform(col("embedding"), x => x + lit(0.05)))
-          .as("embedding"))
+      val (base, batches) = vecReplayInput(s, dir)
       val stateDir =
         Scratch.dir("stream_semreplay", dir)
       val ssd = new graft.streaming.StreamingSemanticDedup(s, stateDir,
         "vec_id", "embedding", nCells = 16, threshold = 0.75)
       ssd.seed(base)
-      val pairs = ssd.replay((0 until 3).map(batchDf))
+      val pairs = ssd.replay(batches)
       pairs.select(col("batch"), col("ref_id"), col("new_id"), col("cell"),
           round(col("cos"), 6).as("cos"))
         .orderBy(col("batch"), col("ref_id"), col("new_id"))
@@ -213,40 +198,17 @@ object StreamReplayQueries {
       // benchmark's gram set alone; batches 2+ gate against the UNION with
       // the release folded in at id 1 — the verdict flip on %4==3 docs
       // between batch 0 and batch 2 is the state-accumulation proof
-      {
-      val words8 =
-        "string_split(regexp_replace(replace(replace(lower(trim(text)), 'ς', 'σ'), 'i' || chr(775), 'i'), '\\s+', ' ', 'g'), ' ')"
-      def sh8(w: String) = s"""CASE WHEN len($w) < 8 THEN [array_to_string($w, ' ')]
-        |    ELSE list_transform(range(1, len($w) - 6),
-        |           i -> array_to_string($w[i:i+7], ' ')) END""".stripMargin
       s"""WITH d AS (SELECT doc_id, text FROM documents),
-         |w0 AS (SELECT doc_id, $words8 AS words FROM d),
-         |b0g AS (SELECT DISTINCT unnest(list_distinct(${sh8("words")})) AS sg
-         |  FROM w0 WHERE doc_id < 20),
-         |b1g AS (SELECT DISTINCT unnest(list_distinct(${sh8("words")})) AS sg
-         |  FROM w0 WHERE doc_id >= 20 AND doc_id < 40),
-         |spans0 AS (SELECT doc_id % 20 AS bid,
-         |    array_to_string(words[1:8], ' ') AS span
-         |  FROM w0 WHERE doc_id < 20),
-         |spans1 AS (SELECT doc_id % 20 AS bid,
-         |    array_to_string(words[1:8], ' ') AS span
-         |  FROM w0 WHERE doc_id >= 20 AND doc_id < 40),
+         |$benchGramCtes,
          |base AS (SELECT doc_id, text FROM d WHERE doc_id % 5 = 0),
          |raw AS (
          |  SELECT doc_id, text FROM base WHERE doc_id % 2 = 0
-         |  UNION ALL SELECT b.doc_id, b.text || ' ' || s.span
-         |    FROM base b JOIN spans0 s ON b.doc_id % 20 = s.bid
-         |    WHERE b.doc_id % 4 = 1
-         |  UNION ALL SELECT b.doc_id, b.text || ' ' || s.span
-         |    FROM base b JOIN spans1 s ON b.doc_id % 20 = s.bid
-         |    WHERE b.doc_id % 4 = 3),
+         |${quotedArms("")}),
          |batches AS (
          |  SELECT 0 AS batch, doc_id + 1000000 AS id, text FROM raw
          |  UNION ALL SELECT 2, doc_id + 2000000, text FROM raw
          |  UNION ALL SELECT 3, doc_id + 3000000, text FROM raw),
-         |bw AS (SELECT batch, id, $words8 AS words FROM batches),
-         |g AS (SELECT batch, id,
-         |    unnest(list_distinct(${sh8("words")})) AS sg FROM bw),
+         |${batchGramCtes("id")},
          |agg AS (
          |  SELECT batch, id, count(*) AS n_grams,
          |    CAST(SUM(CASE WHEN sg IN (SELECT sg FROM b0g)
@@ -254,25 +216,15 @@ object StreamReplayQueries {
          |      THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
          |  FROM g GROUP BY 1, 2)
          |SELECT batch, id, n_grams, n_hits, n_hits > 0 AS contaminated
-         |FROM agg ORDER BY batch, id""".stripMargin
-    }) { (s, dir) =>
+         |FROM agg ORDER BY batch, id""".stripMargin) { (s, dir) =>
       val d = Tables(s, dir).documents.select(col("doc_id"), col("text"))
       val bench0 = d.filter(col("doc_id") < 20)
       val bench1 = d.filter(col("doc_id") >= 20 && col("doc_id") < 40)
-      def spans(bench: DataFrame) = bench.select(
-        (col("doc_id") % 20).as("bid"),
-        concat_ws(" ",
-          slice(TextAnalysis.canonToks(col("text")), 1, 8)).as("span"))
       val base = d.filter(col("doc_id") % 5 === 0)
-      def quoted(bench: DataFrame, m: Int) = base
-        .filter(col("doc_id") % 4 === m)
-        .withColumn("bid", col("doc_id") % 20)
-        .join(spans(bench), "bid")
-        .select(col("doc_id"),
-          concat(col("text"), lit(" "), col("span")).as("text"))
       // ids shift AFTER the text is built (lateral-alias hazard)
       def batchDf(k: Int) = base.filter(col("doc_id") % 2 === 0)
-        .unionByName(quoted(bench0, 1)).unionByName(quoted(bench1, 3))
+        .unionByName(quoted(base, bench0, 1))
+        .unionByName(quoted(base, bench1, 3))
         .select(col("doc_id"), col("text"))
         .select((col("doc_id") + lit((k + 1) * 1000000L)).as("doc_id"),
           col("text"))
@@ -332,17 +284,12 @@ object StreamReplayQueries {
          |ORDER BY batch, ref_id, new_id""".stripMargin) { (s, dir) =>
       val d = Tables(s, dir).documents.select(col("doc_id"), col("text"))
       val base = d.filter(col("doc_id") % 5 === 0)
-      val spans = d.filter(col("doc_id") < 20)
-        .select((col("doc_id") % 20).as("bid"),
-          substring(col("text"), 1, 60).as("span"))
+      val spans = Fixtures.charSpans(d)
       def batchDf(k: Int) = {
         val plain = base.filter(col("doc_id") % 4 =!= 1)
           .select(col("doc_id"), concat(col("text"), lit(s" b$k")).as("text"))
-        val spliced = base.filter(col("doc_id") % 4 === 1)
-          .withColumn("bid", col("doc_id") % 20)
-          .join(spans, "bid")
-          .select(col("doc_id"),
-            concat(col("text"), lit(s" b$k "), col("span")).as("text"))
+        val spliced = Fixtures.quoting(base.filter(col("doc_id") % 4 === 1),
+          spans, s" b$k ")
         plain.unionByName(spliced)
           .select((col("doc_id") + lit((k + 1) * 1000000L)).as("doc_id"),
             col("text"))
@@ -376,24 +323,13 @@ object StreamReplayQueries {
         .select(col("doc_id"), col("text"), col("source"))
       val bench0 = d.filter(col("doc_id") < 20)
       val bench1 = d.filter(col("doc_id") >= 20 && col("doc_id") < 40)
-      def spans(bench: DataFrame) = bench.select(
-        (col("doc_id") % 20).as("bid"),
-        concat_ws(" ",
-          slice(TextAnalysis.canonToks(col("text")), 1, 8)).as("span"))
       val base = d.filter(col("doc_id") % 5 === 0)
-      def quoted(bench: DataFrame, m: Int) = base
-        .filter(col("doc_id") % 4 === m)
-        .withColumn("bid", col("doc_id") % 20)
-        .join(spans(bench), "bid")
-        .select(col("doc_id"),
-          concat(col("text"), lit(" "), col("span")).as("text"),
-          col("source"))
       val raw = base.filter(col("doc_id") % 4 =!= 1 && col("doc_id") % 4 =!= 3)
         .unionByName(base.filter(col("doc_id") % 4 === 2)
           .select((col("doc_id") + 500000L).as("doc_id"), col("text"),
             col("source")))
-        .unionByName(quoted(bench0, 1))
-        .unionByName(quoted(bench1, 3))
+        .unionByName(quoted(base, bench0, 1, col("source")))
+        .unionByName(quoted(base, bench1, 3, col("source")))
       def batchRows(k: Int): Seq[(Long, String, String)] = raw
         .select((col("doc_id") + lit((k + 1) * 1000000L)).as("doc_id"),
           col("text"), col("source"))
@@ -434,14 +370,9 @@ object StreamReplayQueries {
     Query("stream_retention_replay", retentionReplayOracle) { (s, dir) =>
       val e = Tables(s, dir).events
       val batches = eventBatches(e)
-      val w1 = lit("2024-01-08 00:00:00").cast("timestamp_ntz")
-      val w2 = lit("2024-01-15 00:00:00").cast("timestamp_ntz")
       val stateDir = Scratch.dir("stream_retention", dir)
       val sr = new graft.streaming.StreamingRetention(s, stateDir,
-        "user_id", Seq(
-          "anchor" -> (col("event_type") === "signup" && col("ts") < w1),
-          "week2" -> (col("ts") >= w1 && col("ts") < w2),
-          "week3" -> (col("ts") >= w2)))
+        "user_id", retentionConds)
       sr.seed(e.filter(lit(false)))
       val outs = sr.replay(batches)
       outs.select(col("batch"), col("user_id"), col("r0"), col("r1"),
@@ -484,17 +415,11 @@ object StreamReplayQueries {
            |    round(CAST(sum(price) AS DOUBLE), 6) AS price
            |  FROM t WHERE b <= $b AND k IN (SELECT k FROM t WHERE b = $b)
            |  GROUP BY k)"""
-      s"""WITH t AS (
+      replayUnion(""" t AS (
          |  SELECT l_partkey % 500 AS k, l_orderkey % 3 AS b,
          |    CAST(l_quantity AS DECIMAL(18,2)) AS qty,
          |    CAST(l_extendedprice AS DECIMAL(18,2)) AS price
-         |  FROM lineitem),
-         |${(0 to 2).map(out).mkString(",\n")}
-         |SELECT * FROM (
-         |  SELECT * FROM out0 UNION ALL
-         |  SELECT * FROM out1 UNION ALL
-         |  SELECT * FROM out2)
-         |ORDER BY batch, k""".stripMargin
+         |  FROM lineitem),""", (0 to 2).map(out), "batch, k")
     }) { (s, dir) =>
       val l = Tables(s, dir).lineitem.select(
         (col("l_partkey") % 500).as("k"),
@@ -538,7 +463,7 @@ object StreamReplayQueries {
            |  FROM t WHERE b <= $b AND EXISTS (SELECT 1 FROM t t2
            |    WHERE t2.b = $b AND t2.k = t.k AND t2.ver = t.ver)
            |  GROUP BY k, ver)"""
-      s"""WITH base AS (
+      replayUnion(""" base AS (
          |  SELECT o_orderkey % 149 AS k, o_orderkey // 149 AS ver,
          |    o_orderkey % 3 AS g, o_totalprice AS tp
          |  FROM orders WHERE o_orderkey < 3000),
@@ -551,13 +476,7 @@ object StreamReplayQueries {
          |  UNION ALL SELECT 2, k, -1, ver, tp FROM base
          |    WHERE g = 1 AND ver % 2 = 0
          |  UNION ALL SELECT 2, k, -1, ver, tp FROM base
-         |    WHERE g = 0 AND ver % 10 = 0),
-         |${(0 to 2).map(out).mkString(",\n")}
-         |SELECT * FROM (
-         |  SELECT * FROM out0 UNION ALL
-         |  SELECT * FROM out1 UNION ALL
-         |  SELECT * FROM out2)
-         |ORDER BY batch, k, ver""".stripMargin
+         |    WHERE g = 0 AND ver % 10 = 0),""", (0 to 2).map(out), "batch, k, ver")
     }) { (s, dir) =>
       val base = Tables(s, dir).orders.filter(col("o_orderkey") < 3000)
         .select((col("o_orderkey") % 149).as("k"),
@@ -611,16 +530,10 @@ object StreamReplayQueries {
            |    CAST(min(CASE WHEN cum >= (n * 9 + 9) // 10 THEN blo END)
            |      AS DOUBLE) / CAST(100 AS DOUBLE) AS p90
            |  FROM c$b GROUP BY flag)"""
-      s"""WITH v AS (
+      replayUnion(""" v AS (
          |  SELECT l_returnflag AS flag, l_orderkey % 3 AS b,
          |    CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS s
-         |  FROM lineitem),
-         |${(0 to 2).map(out).mkString(",\n")}
-         |SELECT * FROM (
-         |  SELECT * FROM out0 UNION ALL
-         |  SELECT * FROM out1 UNION ALL
-         |  SELECT * FROM out2)
-         |ORDER BY batch, flag""".stripMargin
+         |  FROM lineitem),""", (0 to 2).map(out), "batch, flag")
     }) { (s, dir) =>
       val l = Tables(s, dir).lineitem.select(
         col("l_returnflag").as("flag"),
@@ -682,18 +595,13 @@ object StreamReplayQueries {
     Query("stream_analytics_replay", analyticsReplayOracle) { (s, dir) =>
       val e = Tables(s, dir).events
       val batches = eventBatches(e)
-      val w1 = lit("2024-01-08 00:00:00").cast("timestamp_ntz")
-      val w2 = lit("2024-01-15 00:00:00").cast("timestamp_ntz")
       val funnelDir = Scratch.dir("stream_cap_funnel", dir)
       val retDir = Scratch.dir("stream_cap_ret", dir)
       def mkFunnel() = new graft.streaming.StreamingWindowFunnel(s, funnelDir,
         "user_id", "ts", "event_type",
         steps = Seq("view", "click", "purchase"), windowSec = 14400)
       def mkRetention() = new graft.streaming.StreamingRetention(s, retDir,
-        "user_id", Seq(
-          "anchor" -> (col("event_type") === "signup" && col("ts") < w1),
-          "week2" -> (col("ts") >= w1 && col("ts") < w2),
-          "week3" -> (col("ts") >= w2)))
+        "user_id", retentionConds)
       val f0 = mkFunnel(); val r0 = mkRetention()
       f0.seed(e.filter(lit(false))); r0.seed(e.filter(lit(false)))
       def runBatch(f: graft.streaming.StreamingWindowFunnel,
@@ -727,8 +635,6 @@ object StreamReplayQueries {
     Query("stream_multitier_replay", multitierReplayOracle) { (s, dir) =>
       val e = Tables(s, dir).events
       val batches = eventBatches(e)
-      val w1 = lit("2024-01-08 00:00:00").cast("timestamp_ntz")
-      val w2 = lit("2024-01-15 00:00:00").cast("timestamp_ntz")
       val root = Scratch.dir("stream_multitier", dir)
       def quantIn(df: DataFrame) = df.select(col("event_type"),
         col("value").cast("decimal(18,2)").as("v"))
@@ -745,9 +651,7 @@ object StreamReplayQueries {
           steps = Seq("view", "click", "purchase"), windowSec = 14400,
           nBuckets = 8),
         new graft.streaming.StreamingRetention(s, s"$root/ret", "user_id",
-          Seq("anchor" -> (col("event_type") === "signup" && col("ts") < w1),
-            "week2" -> (col("ts") >= w1 && col("ts") < w2),
-            "week3" -> (col("ts") >= w2)), nBuckets = 8),
+          retentionConds, nBuckets = 8),
         new graft.streaming.StreamingUniqHll(s, s"$root/hll",
           "event_type", "user_id", nBuckets = 8),
         new graft.streaming.StreamingQuantile(s, s"$root/quant",
@@ -847,6 +751,155 @@ object StreamReplayQueries {
       e.filter(col("ts") >= t2))
   }
 
+  /** The retention tiers' conditions: a week-1 signup anchor, then
+    * week-2 and week-3 activity.
+    */
+  private def retentionConds: Seq[(String, Column)] = {
+    def ntz(x: String) = lit(x).cast("timestamp_ntz")
+    val (w1, w2) = (ntz("2024-01-08 00:00:00"), ntz("2024-01-15 00:00:00"))
+    Seq("anchor" -> (col("event_type") === "signup" && col("ts") < w1),
+      "week2" -> (col("ts") >= w1 && col("ts") < w2),
+      "week3" -> (col("ts") >= w2))
+  }
+
+  /** The vector replays' seed (every 5th embedding) and their three
+    * batches: batch k is the seed again at +(k+1)e6, odd ids nudged by
+    * +0.05, so every batch pairs with the seed and the earlier batches.
+    */
+  private def vecReplayInput(s: SparkSession, dir: String)
+      : (DataFrame, Seq[DataFrame]) = {
+    val base = Fixtures.vectors(s, dir).filter(col("vec_id") % 5 === 0)
+    def batchDf(k: Int) = base.select(
+      (col("vec_id") + lit((k + 1) * 1000000L)).as("vec_id"),
+      when(col("vec_id") % 2 === 0, col("embedding"))
+        .otherwise(transform(col("embedding"), x => x + lit(0.05)))
+        .as("embedding"))
+    (base, (0 until 3).map(batchDf))
+  }
+
+  /** The benchmark quotes of the decontamination replays: `base` docs
+    * with `doc_id % 4 == m` quoting `bench`'s span for `doc_id % 20`.
+    */
+  private def quoted(base: DataFrame, bench: DataFrame, m: Int,
+      extra: Column*): DataFrame =
+    Fixtures.quoting(base.filter(col("doc_id") % 4 === m),
+      Fixtures.wordSpans(bench), " ", extra: _*)
+
+  /** One pair query per batch k, given k and the batch's id range
+    * [lo, hi) — everything below lo was admitted before it — joined by
+    * UNION ALL.
+    */
+  private def perBatch(pairs: (Int, Long, Long) => String): String =
+    (0 until 3).map(k => pairs(k, (k + 1) * 1000000L, (k + 2) * 1000000L))
+      .mkString("\nUNION ALL\n")
+
+  /** `WITH<head>`, the per-batch CTE blocks (block b ends in `out<b>`)
+    * and the union of out0..out2 ordered by `order`.
+    */
+  private def replayUnion(head: String, blocks: Seq[String], order: String,
+      cols: String = "*"): String =
+    s"""WITH$head
+       |${blocks.mkString(",\n")}
+       |SELECT $cols FROM (
+       |  SELECT * FROM out0 UNION ALL
+       |  SELECT * FROM out1 UNION ALL
+       |  SELECT * FROM out2)
+       |ORDER BY $order""".stripMargin
+
+  /** [[replayUnion]] over the event-time batches: `block` gets the batch
+    * id, the batch's own range and everything up to its upper bound —
+    * the SQL twin of [[eventBatches]].
+    */
+  private def eventReplay(head: String, order: String, cols: String = "*")(
+      block: (String, String, String) => String): String =
+    replayUnion(head, Seq(
+      ("0", "ts < TIMESTAMP '2024-01-11 00:00:00'",
+        "ts < TIMESTAMP '2024-01-11 00:00:00'"),
+      ("1", "ts >= TIMESTAMP '2024-01-11 00:00:00' AND ts < TIMESTAMP '2024-01-21 00:00:00'",
+        "ts < TIMESTAMP '2024-01-21 00:00:00'"),
+      ("2", "ts >= TIMESTAMP '2024-01-21 00:00:00'", "TRUE")
+    ).map(block.tupled), order, cols)
+
+  /** The rows up to a batch's bound whose `key` the batch touches. */
+  private def touched(key: String, upTo: String, inBatch: String,
+      sep: String = " "): String =
+    s"FROM events${sep}WHERE ($upTo) AND $key IN (\n" +
+      s"    SELECT DISTINCT $key FROM events WHERE $inBatch)"
+
+  /** One retention flag: did any of the user's rows meet `cond`. */
+  private def flag(cond: String): String =
+    s"max(CASE WHEN $cond THEN 1 ELSE 0 END)"
+
+  private lazy val anchor =
+    flag("event_type = 'signup' AND ts < TIMESTAMP '2024-01-08 00:00:00'")
+  private lazy val week2 =
+    flag("ts >= TIMESTAMP '2024-01-08 00:00:00' AND ts < TIMESTAMP '2024-01-15 00:00:00'")
+  private lazy val week3 = flag("ts >= TIMESTAMP '2024-01-15 00:00:00'")
+
+  /** The anchor-gated retention flags r0..r2 of a user's rows, grouped
+    * over the rows a batch touches.
+    */
+  private def retentionBlock(upTo: String, inBatch: String): String =
+    s"""    CAST($anchor AS INT) AS r0,
+       |    CAST($anchor
+       |      * $week2 AS INT) AS r1,
+       |    CAST($anchor
+       |      * $week3 AS INT) AS r2
+       |  ${touched("user_id", upTo, inBatch, "\n  ")}
+       |  GROUP BY user_id""".stripMargin
+
+  /** A batch's funnel CTEs over `<p>ev`: `<p>e<b>` (the events up to the
+    * batch's bound), `<p>u<b>` (the users it touches) and their steps.
+    */
+  private def funnelBatchCtes(p: String, b: String, inBatch: String,
+      upTo: String): String =
+    s"""${p}e$b AS (SELECT * FROM ${p}ev WHERE $upTo),
+       |${p}u$b AS (SELECT DISTINCT user_id FROM ${p}ev WHERE $inBatch),
+       |${funnelStepCtes(s"${p}l", s"_$b", s"${p}e$b")}""".stripMargin
+
+  /** The touched users joined to their [[funnelBatchCtes]] steps. */
+  private def funnelJoins(p: String, b: String): String =
+    s"""FROM ${p}u$b u LEFT JOIN ${p}l1_$b l1 ON u.user_id = l1.user_id
+       |    LEFT JOIN ${p}l2_$b l2 ON u.user_id = l2.user_id
+       |    LEFT JOIN ${p}l3_$b l3 ON u.user_id = l3.user_id""".stripMargin
+
+  /** The decontamination replays' benchmark grams and quotable spans:
+    * release 0 is docs < 20, release 1 docs 20..39 (`b<r>g`, `spans<r>`),
+    * over `d`'s canonical words `w0`.
+    */
+  private lazy val benchGramCtes: String = {
+    val releases = Seq("doc_id < 20", "doc_id >= 20 AND doc_id < 40")
+    val grams = releases.zipWithIndex.map { case (in, r) =>
+      s"""b${r}g AS (SELECT DISTINCT unnest(list_distinct(${gram8("words")})) AS sg
+         |  FROM w0 WHERE $in)""".stripMargin
+    }
+    val spans = releases.zipWithIndex.map { case (in, r) =>
+      s"""spans$r AS (SELECT doc_id % 20 AS bid,
+         |    array_to_string(words[1:8], ' ') AS span
+         |  FROM w0 WHERE $in)""".stripMargin
+    }
+    (s"w0 AS (SELECT doc_id, $canonWords AS words FROM d)" +: (grams ++ spans))
+      .mkString(",\n")
+  }
+
+  /** The `base` docs quoting the seed release's span (`doc_id % 4 == 1`)
+    * and the second release's (`== 3`), each row ending in `extra`.
+    */
+  private def quotedArms(extra: String): String =
+    Seq((0, 1), (1, 3)).map { case (r, m) =>
+      s"""  UNION ALL SELECT b.doc_id, b.text || ' ' || s.span$extra
+         |    FROM base b JOIN spans$r s ON b.doc_id % 20 = s.bid
+         |    WHERE b.doc_id % 4 = $m""".stripMargin
+    }.mkString("\n")
+
+  /** The distinct canonical word-8-grams `g(batch, <id>, sg)` of every
+    * batch doc.
+    */
+  private def batchGramCtes(id: String): String =
+    s"""bw AS (SELECT batch, $id, $canonWords AS words FROM batches),
+       |g AS (SELECT batch, $id,
+       |    unnest(list_distinct(${gram8("words")})) AS sg FROM bw)""".stripMargin
+
   /** The streaming-replay oracle: ONE signature computation over seed +
     * all three batches (seed at base ids, batch k at +(k+1)e6), then per
     * batch a candidate join restricted to (everything admitted before
@@ -855,44 +908,48 @@ object StreamReplayQueries {
     * exactly — exact-Jaccard verify, UNION ALL with the batch id.
     */
   private def streamReplayOracle: String = {
-    val sigCols = (0 until 32).map(i => s"MIN(${wrappedPerm(i)}) AS m$i")
-      .mkString(",\n    ")
-    val bandEq = (0 until 8).map { b =>
-      (0 until 4).map(r => s"x.m${b * 4 + r} = y.m${b * 4 + r}")
-        .mkString("(", " AND ", ")")
-    }.mkString("\n      OR ")
     val perturbed =
       "CASE WHEN doc_id % 2 = 0 THEN text ELSE text || ' zzre zzplay zzmark' END"
     val batchArms = (1 to 3).map(k =>
       s"  UNION ALL SELECT doc_id + ${k}000000 AS doc_id, $perturbed AS text FROM base")
       .mkString("\n")
-    val perBatch = (0 until 3).map { k =>
-      val lo = (k + 1) * 1000000L
-      val hi = (k + 2) * 1000000L
+    val pairs = perBatch { (k, lo, hi) =>
       s"""  SELECT $k AS batch, c.ref_id, c.new_id, $jaccardExpr AS j
          |  FROM (SELECT x.doc_id AS ref_id, y.doc_id AS new_id
          |    FROM sig x JOIN sig y ON x.doc_id < $lo
          |      AND y.doc_id >= $lo AND y.doc_id < $hi
-         |      AND ($bandEq)) c
+         |      AND ($minhashBandEq)) c
          |  JOIN sh sa ON c.ref_id = sa.doc_id
          |  JOIN sh sb ON c.new_id = sb.doc_id""".stripMargin
-    }.mkString("\nUNION ALL\n")
+    }
     s"""WITH base AS (SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0),
        |allc AS (
        |  SELECT doc_id, text FROM base
        |$batchArms),
        |${shinglesCtes("allc")},
-       |hs AS (SELECT doc_id, unnest(s) AS sg FROM sh),
-       |hv AS (SELECT doc_id,
-       |    md5_number_lower(sg)::HUGEINT AS h1,
-       |    md5_number_upper(sg)::HUGEINT AS h2 FROM hs),
-       |sig AS (SELECT doc_id,
-       |    $sigCols
-       |  FROM hv GROUP BY doc_id),
+       |$minhashSigCtes,
        |pairs AS (
-       |$perBatch)
+       |$pairs)
        |SELECT batch, ref_id, new_id, round(j, 6) AS jaccard FROM pairs
        |WHERE j >= 0.5 ORDER BY batch, ref_id, new_id""".stripMargin
+  }
+
+  /** The vector replays' corpus: `base` (every 5th embedding) and `e`
+    * (base plus batch k at +(k+1)e6, odd ids nudged by +0.05) — the SQL
+    * twin of [[vecReplayInput]].
+    */
+  private def vecReplayCtes: String = {
+    val perturbed =
+      "CASE WHEN vec_id % 2 = 0 THEN v ELSE list_transform(v, x -> x + 0.05) END"
+    val batchArms = (1 to 3).map(k =>
+      s"  UNION ALL SELECT vec_id + ${k}000000 AS vec_id, $perturbed AS v FROM base")
+      .mkString("\n")
+    s"""base AS (
+       |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
+       |  WHERE vec_id % 5 = 0),
+       |e AS (
+       |  SELECT vec_id, v FROM base
+       |$batchArms)""".stripMargin
   }
 
   /** The embedding replay oracle: one RHP band-key computation (the
@@ -903,49 +960,20 @@ object StreamReplayQueries {
     * [[graft.streaming.StreamingEmbeddingDedup]]'s admit sequence.
     */
   private def streamEmbReplayOracle: String = {
-    def plane(b: Int): String =
-      (0 until 64).map(d => Similarity.planeComponent(b, d).toString)
-        .mkString("[", ", ", "]")
-    val bitCols = (0 until 384).map(b =>
-      s"(CASE WHEN list_dot_product(v, ${plane(b)}) >= 0 THEN 1 ELSE 0 END) AS b$b")
-      .mkString(",\n    ")
-    val keyCols = (0 until 24).map { band =>
-      val expr = (0 until 16).map(r => s"b${band * 16 + r}")
-        .reduce((acc, b) => s"($acc * 2 + $b)")
-      s"$expr AS k$band"
-    }.mkString(",\n    ")
-    val bandEq = (0 until 24).map(b => s"l.k$b = r.k$b").mkString(" OR ")
-    val perturbed =
-      "CASE WHEN vec_id % 2 = 0 THEN v ELSE list_transform(v, x -> x + 0.05) END"
-    val batchArms = (1 to 3).map(k =>
-      s"  UNION ALL SELECT vec_id + ${k}000000 AS vec_id, $perturbed AS v FROM base")
-      .mkString("\n")
-    val perBatch = (0 until 3).map { k =>
-      val lo = (k + 1) * 1000000L
-      val hi = (k + 2) * 1000000L
+    val pairs = perBatch { (k, lo, hi) =>
       s"""  SELECT $k AS batch, sc.ref_id, sc.new_id, $cosExpr AS cos0 FROM (
          |    SELECT cd.ref_id, cd.new_id, va.v AS qv, vb.v AS cv FROM (
          |      SELECT DISTINCT l.vec_id AS ref_id, r.vec_id AS new_id
          |      FROM bd l JOIN bd r ON l.vec_id < $lo
          |        AND r.vec_id >= $lo AND r.vec_id < $hi
-         |        AND ($bandEq)) cd
+         |        AND ($rhpBandEq)) cd
          |    JOIN e va ON cd.ref_id = va.vec_id
          |    JOIN e vb ON cd.new_id = vb.vec_id) sc""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    s"""WITH base AS (
-       |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-       |  WHERE vec_id % 5 = 0),
-       |e AS (
-       |  SELECT vec_id, v FROM base
-       |$batchArms),
-       |sg AS (SELECT vec_id, v,
-       |    $bitCols
-       |  FROM e),
-       |bd AS (SELECT vec_id,
-       |    $keyCols
-       |  FROM sg),
+    }
+    s"""WITH $vecReplayCtes,
+       |${rhpBandCtes(24, 16)},
        |pairs AS (
-       |$perBatch)
+       |$pairs)
        |SELECT batch, ref_id, new_id, round(cos0, 6) AS cos FROM pairs
        |WHERE cos0 >= 0.75 ORDER BY batch, ref_id, new_id""".stripMargin
   }
@@ -958,61 +986,18 @@ object StreamReplayQueries {
     * the ids admitted before it.
     */
   private def streamSemReplayOracle: String = {
-    val meanCols = (0 until 64).map(d => s"round(avg(v[${d + 1}]), 3) AS m$d")
-      .mkString(",\n    ")
-    val centList = (0 until 64).map(d => s"coalesce(m.m$d, round(s.v[${d + 1}], 3))")
-      .mkString("[", ", ", "]")
-    val hSigned = "(md5_number_lower(CAST(vec_id AS VARCHAR))::HUGEINT - " +
-      "CASE WHEN md5_number_lower(CAST(vec_id AS VARCHAR)) >= 9223372036854775808 " +
-      "THEN 18446744073709551616::HUGEINT ELSE 0::HUGEINT END)"
-    val perturbed =
-      "CASE WHEN vec_id % 2 = 0 THEN v ELSE list_transform(v, x -> x + 0.05) END"
-    val batchArms = (1 to 3).map(k =>
-      s"  UNION ALL SELECT vec_id + ${k}000000 AS vec_id, $perturbed AS v FROM base")
-      .mkString("\n")
-    val perBatch = (0 until 3).map { k =>
-      val lo = (k + 1) * 1000000L
-      val hi = (k + 2) * 1000000L
+    val pairs = perBatch { (k, lo, hi) =>
       s"""  SELECT $k AS batch, sc.ref_id, sc.new_id, sc.cell, $cosExpr AS cos0 FROM (
          |    SELECT l.vec_id AS ref_id, r.vec_id AS new_id, l.cell,
          |      l.v AS qv, r.v AS cv
          |    FROM cellof l JOIN cellof r ON l.cell = r.cell
          |      AND l.vec_id < $lo
          |      AND r.vec_id >= $lo AND r.vec_id < $hi) sc""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    s"""WITH base AS (
-       |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-       |  WHERE vec_id % 5 = 0),
-       |e AS (
-       |  SELECT vec_id, v FROM base
-       |$batchArms),
-       |seeds AS (
-       |  SELECT row_number() OVER (
-       |      ORDER BY $hSigned, vec_id) - 1 AS cell, v
-       |  FROM base
-       |  ORDER BY $hSigned, vec_id LIMIT 16),
-       |a0 AS (
-       |  SELECT b.vec_id, b.v, s.cell,
-       |    list_dot_product(b.v, s.v) / sqrt(list_dot_product(s.v, s.v)) AS score
-       |  FROM base b CROSS JOIN seeds s),
-       |b0 AS (
-       |  SELECT vec_id, v, cell FROM a0
-       |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY score DESC, cell) = 1),
-       |m AS (SELECT cell,
-       |    $meanCols
-       |  FROM b0 GROUP BY cell),
-       |cent AS (
-       |  SELECT s.cell, $centList AS cv
-       |  FROM seeds s LEFT JOIN m ON s.cell = m.cell),
-       |ac AS (
-       |  SELECT e.vec_id, e.v, c.cell,
-       |    list_dot_product(e.v, c.cv) / sqrt(list_dot_product(c.cv, c.cv)) AS score
-       |  FROM e CROSS JOIN cent c),
-       |cellof AS (
-       |  SELECT vec_id, v, cell FROM ac
-       |  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY score DESC, cell) = 1),
+    }
+    s"""WITH $vecReplayCtes,
+       |${ivfCentroidCtes("base", "base b", "b")},
        |pairs AS (
-       |$perBatch)
+       |$pairs)
        |SELECT batch, ref_id, new_id, CAST(cell AS INT) AS cell,
        |  round(cos0, 6) AS cos FROM pairs
        |WHERE cos0 >= 0.75 ORDER BY batch, ref_id, new_id""".stripMargin
@@ -1029,23 +1014,20 @@ object StreamReplayQueries {
     * [[graft.streaming.StreamingPhashDedup]]'s admit sequence.
     */
   private def streamPhashReplayOracle: String = {
-    val bandEq = (0 until 4).map(b =>
-      s"bit_count(xor((l.dh >> ${b * 16}) & 65535, (r.dh >> ${b * 16}) & 65535)) <= 1")
-      .mkString("\n      OR ")
     val batchArms = (1 to 3).map(k =>
       s"  UNION ALL SELECT pid % 100, pid + ${k}000000, 8, " +
         s"CASE WHEN pid % 2 = 0 THEN 0 ELSE 1 END FROM ids")
       .mkString("\n")
-    val perBatch = (0 until 3).map { k =>
+    val pairs = perBatch { (k, _, _) =>
       s"""  SELECT $k AS batch, min(l.id) AS ref_id, r.id AS new_id,
          |    CAST(bit_count(xor(l.dh, r.dh)) AS INT) AS hamming,
          |    CAST(sum(l.clique) AS BIGINT) AS clique_ref,
          |    r.clique AS clique_new
          |  FROM reps l JOIN reps r ON l.b < $k AND r.b = $k
-         |    AND l.id <> r.id AND ($bandEq)
+         |    AND l.id <> r.id AND (${band16("dh", 1)})
          |  WHERE bit_count(xor(l.dh, r.dh)) <= 7
          |  GROUP BY l.dh, r.dh, r.id, r.clique""".stripMargin
-    }.mkString("\nUNION ALL\n")
+    }
     s"""WITH ${mmPixelCtesFor(
         s"""SELECT pid, pid AS asset_id, 8 AS size, 0 AS noisy FROM ids
            |$batchArms""".stripMargin)},
@@ -1055,7 +1037,7 @@ object StreamReplayQueries {
        |    dh, min(asset_id) AS id, count(*) AS clique
        |  FROM hs GROUP BY 1, 2),
        |pairs AS (
-       |$perBatch)
+       |$pairs)
        |SELECT batch, ref_id, new_id, hamming, clique_ref, clique_new
        |FROM pairs
        |ORDER BY batch, ref_id, new_id""".stripMargin
@@ -1066,49 +1048,21 @@ object StreamReplayQueries {
     * alone; batch 2 sees the release folded in at id 1), then runs the
     * batch-stage SQL of the `corpus_pipeline` oracle per batch.
     */
-  private def corpusPipelineStreamOracle: String = {
-    val words8 =
-      "string_split(regexp_replace(replace(replace(lower(trim(text)), 'ς', 'σ'), 'i' || chr(775), 'i'), '\\s+', ' ', 'g'), ' ')"
-    def sh8(w: String) = s"""CASE WHEN len($w) < 8 THEN [array_to_string($w, ' ')]
-      |    ELSE list_transform(range(1, len($w) - 6),
-      |           i -> array_to_string($w[i:i+7], ' ')) END""".stripMargin
-    val stopHits = TextAnalysis.enStopwords.map { w =>
-      s"CAST((length(' ' || text || ' ') - length(replace(' ' || text || ' ', ' $w ', ''))) // ${w.length + 2} AS BIGINT)"
-    }.mkString(" + ")
-    val email = TextAnalysis.piiEmailRe
-    val ipv4 = TextAnalysis.piiIpv4Re
-    val num = TextAnalysis.piiLongNumRe
+  private def corpusPipelineStreamOracle: String =
     s"""WITH d AS (SELECT doc_id, text, source FROM documents),
-       |w0 AS (SELECT doc_id, $words8 AS words FROM d),
-       |b0g AS (SELECT DISTINCT unnest(list_distinct(${sh8("words")})) AS sg
-       |  FROM w0 WHERE doc_id < 20),
-       |b1g AS (SELECT DISTINCT unnest(list_distinct(${sh8("words")})) AS sg
-       |  FROM w0 WHERE doc_id >= 20 AND doc_id < 40),
-       |spans0 AS (SELECT doc_id % 20 AS bid,
-       |    array_to_string(words[1:8], ' ') AS span
-       |  FROM w0 WHERE doc_id < 20),
-       |spans1 AS (SELECT doc_id % 20 AS bid,
-       |    array_to_string(words[1:8], ' ') AS span
-       |  FROM w0 WHERE doc_id >= 20 AND doc_id < 40),
+       |$benchGramCtes,
        |base AS (SELECT doc_id, text, source FROM d WHERE doc_id % 5 = 0),
        |raw AS (
        |  SELECT doc_id, text, source FROM base
        |    WHERE doc_id % 4 != 1 AND doc_id % 4 != 3
        |  UNION ALL SELECT doc_id + 500000, text, source FROM base
        |    WHERE doc_id % 4 = 2
-       |  UNION ALL SELECT b.doc_id, b.text || ' ' || s.span, b.source
-       |    FROM base b JOIN spans0 s ON b.doc_id % 20 = s.bid
-       |    WHERE b.doc_id % 4 = 1
-       |  UNION ALL SELECT b.doc_id, b.text || ' ' || s.span, b.source
-       |    FROM base b JOIN spans1 s ON b.doc_id % 20 = s.bid
-       |    WHERE b.doc_id % 4 = 3),
+       |${quotedArms(", b.source")}),
        |batches AS (
        |  SELECT 0 AS batch, doc_id + 1000000 AS doc_id, text, source FROM raw
        |  UNION ALL SELECT 1, doc_id + 2000000, text, source FROM raw
        |  UNION ALL SELECT 2, doc_id + 3000000, text, source FROM raw),
-       |bw AS (SELECT batch, doc_id, $words8 AS words FROM batches),
-       |g AS (SELECT batch, doc_id,
-       |    unnest(list_distinct(${sh8("words")})) AS sg FROM bw),
+       |${batchGramCtes("doc_id")},
        |contam AS (
        |  SELECT DISTINCT batch, doc_id FROM g
        |  WHERE sg IN (SELECT sg FROM b0g)
@@ -1117,174 +1071,46 @@ object StreamReplayQueries {
        |  SELECT b.batch, b.doc_id, b.text, b.source FROM batches b
        |  WHERE NOT EXISTS (SELECT 1 FROM contam c
        |    WHERE c.batch = b.batch AND c.doc_id = b.doc_id)),
-       |dedup AS (
-       |  SELECT batch, doc_id, text, source FROM (
-       |    SELECT batch, doc_id, text, source, row_number() OVER (
-       |      PARTITION BY batch, md5(regexp_replace(replace(replace(lower(trim(text)), 'ς', 'σ'), 'i' || chr(775), 'i'), '\\s+', ' ', 'g'))
-       |      ORDER BY doc_id) AS rn
-       |    FROM clean)
-       |  WHERE rn = 1),
-       |gm AS (
-       |  SELECT batch, doc_id, text, source,
-       |    CASE WHEN trim(text) = '' THEN 0
-       |         ELSE len(string_split_regex(trim(text), '\\s+')) END AS n_words,
-       |    $stopHits AS stop_hits,
-       |    $words8 AS w
-       |  FROM dedup),
-       |gk AS (
-       |  SELECT batch, doc_id, text, source FROM gm
-       |  WHERE n_words >= 20 AND n_words <= 100000
-       |    AND (CASE WHEN n_words = 0 THEN 0.0
-       |      ELSE CAST(length(regexp_replace(trim(text), '\\s+', '', 'g')) AS DOUBLE) / n_words END) >= 3.0
-       |    AND (CASE WHEN n_words = 0 THEN 0.0
-       |      ELSE CAST(length(regexp_replace(trim(text), '\\s+', '', 'g')) AS DOUBLE) / n_words END) <= 10.0
-       |    AND (CASE WHEN trim(text) = '' THEN 0.0
-       |      ELSE CAST(len(list_filter(w, x -> regexp_matches(x, '[a-z]'))) AS DOUBLE) / len(w) END) >= 0.8
-       |    AND stop_hits >= 2),
-       |scr AS (
-       |  SELECT batch, doc_id, source,
-       |    regexp_replace(regexp_replace(regexp_replace(text,
-       |      '$email', '<EMAIL>', 'g'),
-       |      '$ipv4', '<IP>', 'g'),
-       |      '$num', '<NUM>', 'g') AS text
-       |  FROM gk),
-       |b AS (
-       |  SELECT batch, doc_id, source, text, $bucketExpr AS bucket,
-       |    row_number() OVER (PARTITION BY batch, source
-       |      ORDER BY $bucketExpr, doc_id) AS rn
-       |  FROM scr),
-       |capped AS (SELECT batch, doc_id, source, text, bucket FROM b WHERE rn <= 20),
-       |sp AS (
-       |  SELECT batch, source, text,
-       |    CASE WHEN bucket < 9000 THEN 'train' ELSE 'val' END AS split
-       |  FROM capped)
-       |SELECT batch, split, source, count(*) AS n,
-       |  CAST(sum(CASE WHEN trim(text) = '' THEN 0
-       |    ELSE len(string_split_regex(trim(text), '\\s+')) END) AS BIGINT) AS n_tokens
-       |FROM sp GROUP BY batch, split, source
+       |${curationStages("batch, ", "clean", "gk")}
        |ORDER BY batch, split, source""".stripMargin
-  }
 
   /** Streaming-retention replay oracle: per batch b, every user with an
     * event in b's range gets the anchor-gated flags recomputed over ALL
     * events up to b's upper bound.
     */
-  private def retentionReplayOracle: String = {
-    val anchor = "event_type = 'signup' AND ts < TIMESTAMP '2024-01-08 00:00:00'"
-    val c1 = "ts >= TIMESTAMP '2024-01-08 00:00:00' AND ts < TIMESTAMP '2024-01-15 00:00:00'"
-    val c2 = "ts >= TIMESTAMP '2024-01-15 00:00:00'"
-    val bounds = Seq(
-      ("0", "ts < TIMESTAMP '2024-01-11 00:00:00'",
-        "ts < TIMESTAMP '2024-01-11 00:00:00'"),
-      ("1", "ts >= TIMESTAMP '2024-01-11 00:00:00' AND ts < TIMESTAMP '2024-01-21 00:00:00'",
-        "ts < TIMESTAMP '2024-01-21 00:00:00'"),
-      ("2", "ts >= TIMESTAMP '2024-01-21 00:00:00'", "TRUE"))
-    val blocks = bounds.map { case (b, inBatch, upTo) =>
+  private def retentionReplayOracle: String =
+    eventReplay("", "batch, user_id") { (b, inBatch, upTo) =>
       s"""out$b AS (
          |  SELECT $b AS batch, user_id,
-         |    CAST(max(CASE WHEN $anchor THEN 1 ELSE 0 END) AS INT) AS r0,
-         |    CAST(max(CASE WHEN $anchor THEN 1 ELSE 0 END)
-         |      * max(CASE WHEN $c1 THEN 1 ELSE 0 END) AS INT) AS r1,
-         |    CAST(max(CASE WHEN $anchor THEN 1 ELSE 0 END)
-         |      * max(CASE WHEN $c2 THEN 1 ELSE 0 END) AS INT) AS r2
-         |  FROM events
-         |  WHERE ($upTo) AND user_id IN (
-         |    SELECT DISTINCT user_id FROM events WHERE $inBatch)
-         |  GROUP BY user_id)"""
+         |${retentionBlock(upTo, inBatch)})"""
     }
-    s"""WITH
-       |${blocks.mkString(",\n")}
-       |SELECT * FROM (
-       |  SELECT * FROM out0 UNION ALL
-       |  SELECT * FROM out1 UNION ALL
-       |  SELECT * FROM out2)
-       |ORDER BY batch, user_id""".stripMargin
-  }
 
   /** Streaming-funnel replay oracle: per batch b, the users with step
     * events in b's event-time range get the BATCH funnel level over the
     * full history up to b's upper bound — the equivalence the standing
     * state maintains.
     */
-  private def funnelReplayOracle: String = {
-    val bounds = Seq(
-      ("0", "ts < TIMESTAMP '2024-01-11 00:00:00'",
-        "ts < TIMESTAMP '2024-01-11 00:00:00'"),
-      ("1", "ts >= TIMESTAMP '2024-01-11 00:00:00' AND ts < TIMESTAMP '2024-01-21 00:00:00'",
-        "ts < TIMESTAMP '2024-01-21 00:00:00'"),
-      ("2", "ts >= TIMESTAMP '2024-01-21 00:00:00'", "TRUE"))
-    val blocks = bounds.map { case (b, inBatch, upTo) =>
-      s"""e$b AS (SELECT * FROM ev WHERE $upTo),
-         |u$b AS (SELECT DISTINCT user_id FROM ev WHERE $inBatch),
-         |l1_$b AS (SELECT DISTINCT user_id FROM e$b WHERE event_type = 'view'),
-         |l2_$b AS (
-         |  SELECT DISTINCT a.user_id
-         |  FROM e$b a JOIN e$b b ON a.user_id = b.user_id
-         |  WHERE a.event_type = 'view' AND b.event_type = 'click'
-         |    AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 14400 SECOND),
-         |l3_$b AS (
-         |  SELECT DISTINCT a.user_id
-         |  FROM e$b a JOIN e$b b ON a.user_id = b.user_id
-         |    JOIN e$b c ON a.user_id = c.user_id
-         |  WHERE a.event_type = 'view' AND b.event_type = 'click'
-         |    AND c.event_type = 'purchase'
-         |    AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 14400 SECOND
-         |    AND c.ts >= b.ts AND c.ts <= a.ts + INTERVAL 14400 SECOND),
-         |out$b AS (
-         |  SELECT $b AS batch, u.user_id,
-         |    CASE WHEN l3.user_id IS NOT NULL THEN 3
-         |         WHEN l2.user_id IS NOT NULL THEN 2
-         |         WHEN l1.user_id IS NOT NULL THEN 1
-         |         ELSE 0 END AS level
-         |  FROM u$b u LEFT JOIN l1_$b l1 ON u.user_id = l1.user_id
-         |    LEFT JOIN l2_$b l2 ON u.user_id = l2.user_id
-         |    LEFT JOIN l3_$b l3 ON u.user_id = l3.user_id)"""
+  private def funnelReplayOracle: String =
+    eventReplay(s" ${funnelEventsCte("ev")},", "batch, user_id") {
+      (b, inBatch, upTo) =>
+        s"""${funnelBatchCtes("", b, inBatch, upTo)},
+           |out$b AS (
+           |  SELECT $b AS batch, u.user_id,
+           |    ${funnelLevel("    ")} AS level
+           |  ${funnelJoins("", b)})"""
     }
-    s"""WITH ev AS (
-       |  SELECT user_id, ts, event_type FROM events
-       |  WHERE event_type IN ('view', 'click', 'purchase')),
-       |${blocks.mkString(",\n")}
-       |SELECT * FROM (
-       |  SELECT * FROM out0 UNION ALL
-       |  SELECT * FROM out1 UNION ALL
-       |  SELECT * FROM out2)
-       |ORDER BY batch, user_id""".stripMargin
-  }
 
   /** Streaming-uniqHLL replay oracle: per batch b, the full uniqHLL
     * pipeline (the q_uniq_hll recipe) over events visible up to b's
     * bound, restricted to the event types touched in b — the estimate
     * the standing register state must reproduce exactly.
     */
-  private def streamingUniqHllOracle: String = {
-    val bounds = Seq(
-      ("0", "ts < TIMESTAMP '2024-01-11 00:00:00'",
-        "ts < TIMESTAMP '2024-01-11 00:00:00'"),
-      ("1", "ts >= TIMESTAMP '2024-01-11 00:00:00' AND ts < TIMESTAMP '2024-01-21 00:00:00'",
-        "ts < TIMESTAMP '2024-01-21 00:00:00'"),
-      ("2", "ts >= TIMESTAMP '2024-01-21 00:00:00'", "TRUE"))
-    val blocks = bounds.map { case (b, inBatch, upTo) =>
-      s"""h$b AS (
-         |  SELECT event_type,
-         |    CAST(md5_number_lower(CAST(user_id AS VARCHAR)) >> 4 AS BIGINT) AS h
-         |  FROM events WHERE ($upTo) AND event_type IN (
-         |    SELECT DISTINCT event_type FROM events WHERE $inBatch)),
-         |r$b AS (
-         |  SELECT event_type, h % 512 AS reg,
-         |    LEAST(CASE WHEN h // 512 = 0 THEN 52
-         |          ELSE 52 - length(bin(h // 512)) END, 30) AS rho
-         |  FROM h$b),
-         |m$b AS (SELECT event_type, reg, max(rho) AS m FROM r$b GROUP BY 1, 2),
-         |s$b AS (
-         |  SELECT event_type,
-         |    sum(CAST(1 AS BIGINT) << (30 - m)) AS s_present,
-         |    count(*) AS n_regs
-         |  FROM m$b GROUP BY 1),
+  private def streamingUniqHllOracle: String =
+    eventReplay("", "batch, event_type") { (b, inBatch, upTo) =>
+      s"""${hllRegisterCtes("", b, touched("event_type", upTo, inBatch))},
          |x$b AS (
          |  SELECT event_type, n_regs, 512 - n_regs AS v0,
-         |    202600935058957.5 / CAST(
-         |      s_present + (512 - n_regs) * (CAST(1 AS BIGINT) << 30)
-         |      AS DOUBLE) AS raw
+         |    $hllRaw
          |  FROM s$b),
          |out$b AS (
          |  SELECT $b AS batch, event_type,
@@ -1294,14 +1120,6 @@ object StreamReplayQueries {
          |    n_regs
          |  FROM x$b)"""
     }
-    s"""WITH
-       |${blocks.mkString(",\n")}
-       |SELECT * FROM (
-       |  SELECT * FROM out0 UNION ALL
-       |  SELECT * FROM out1 UNION ALL
-       |  SELECT * FROM out2)
-       |ORDER BY batch, event_type""".stripMargin
-  }
 
   /** Streaming-KMV replay oracle: per batch b, the q_kmv_distinct
     * recipe over events visible up to b's bound, restricted to the
@@ -1309,24 +1127,9 @@ object StreamReplayQueries {
     * must reproduce exactly (the fold is idempotent min-k, so the
     * oracle needs no newest-row discipline).
     */
-  private def streamingKmvOracle: String = {
-    val bounds = Seq(
-      ("0", "ts < TIMESTAMP '2024-01-11 00:00:00'",
-        "ts < TIMESTAMP '2024-01-11 00:00:00'"),
-      ("1", "ts >= TIMESTAMP '2024-01-11 00:00:00' AND ts < TIMESTAMP '2024-01-21 00:00:00'",
-        "ts < TIMESTAMP '2024-01-21 00:00:00'"),
-      ("2", "ts >= TIMESTAMP '2024-01-21 00:00:00'", "TRUE"))
-    val blocks = bounds.map { case (b, inBatch, upTo) =>
-      s"""h$b AS (
-         |  SELECT DISTINCT event_type,
-         |    md5_number_lower(CAST(event_id AS VARCHAR))::HUGEINT AS h
-         |  FROM events WHERE ($upTo) AND event_type IN (
-         |    SELECT DISTINCT event_type FROM events WHERE $inBatch)),
-         |r$b AS (
-         |  SELECT event_type, h,
-         |    row_number() OVER (PARTITION BY event_type ORDER BY h) AS rn,
-         |    count(*) OVER (PARTITION BY event_type) AS n_d
-         |  FROM h$b),
+  private def streamingKmvOracle: String =
+    eventReplay("", "batch, event_type") { (b, inBatch, upTo) =>
+      s"""${kmvRankCtes(b, touched("event_type", upTo, inBatch))},
          |out$b AS (
          |  SELECT $b AS batch, event_type,
          |    CAST(CASE WHEN n_d < 256 THEN n_d
@@ -1335,14 +1138,6 @@ object StreamReplayQueries {
          |    CAST(least(n_d, 256) AS INT) AS n_kept
          |  FROM r$b WHERE rn = least(n_d, 256))"""
     }
-    s"""WITH
-       |${blocks.mkString(",\n")}
-       |SELECT * FROM (
-       |  SELECT * FROM out0 UNION ALL
-       |  SELECT * FROM out1 UNION ALL
-       |  SELECT * FROM out2)
-       |ORDER BY batch, event_type""".stripMargin
-  }
 
   /** Analytics-capstone replay oracle: the funnel and retention replay
     * recipes composed — per batch, the funnel block's touched users
@@ -1350,68 +1145,22 @@ object StreamReplayQueries {
     * between batches 0 and 1 is invisible to the oracle by design: a
     * correct recovery produces exactly the same per-batch views.
     */
-  private def analyticsReplayOracle: String = {
-    val anchor = "event_type = 'signup' AND ts < TIMESTAMP '2024-01-08 00:00:00'"
-    val c1 = "ts >= TIMESTAMP '2024-01-08 00:00:00' AND ts < TIMESTAMP '2024-01-15 00:00:00'"
-    val c2 = "ts >= TIMESTAMP '2024-01-15 00:00:00'"
-    val bounds = Seq(
-      ("0", "ts < TIMESTAMP '2024-01-11 00:00:00'",
-        "ts < TIMESTAMP '2024-01-11 00:00:00'"),
-      ("1", "ts >= TIMESTAMP '2024-01-11 00:00:00' AND ts < TIMESTAMP '2024-01-21 00:00:00'",
-        "ts < TIMESTAMP '2024-01-21 00:00:00'"),
-      ("2", "ts >= TIMESTAMP '2024-01-21 00:00:00'", "TRUE"))
-    val blocks = bounds.map { case (b, inBatch, upTo) =>
-      s"""e$b AS (SELECT * FROM ev WHERE $upTo),
-         |u$b AS (SELECT DISTINCT user_id FROM ev WHERE $inBatch),
-         |l1_$b AS (SELECT DISTINCT user_id FROM e$b WHERE event_type = 'view'),
-         |l2_$b AS (
-         |  SELECT DISTINCT a.user_id
-         |  FROM e$b a JOIN e$b b ON a.user_id = b.user_id
-         |  WHERE a.event_type = 'view' AND b.event_type = 'click'
-         |    AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 14400 SECOND),
-         |l3_$b AS (
-         |  SELECT DISTINCT a.user_id
-         |  FROM e$b a JOIN e$b b ON a.user_id = b.user_id
-         |    JOIN e$b c ON a.user_id = c.user_id
-         |  WHERE a.event_type = 'view' AND b.event_type = 'click'
-         |    AND c.event_type = 'purchase'
-         |    AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 14400 SECOND
-         |    AND c.ts >= b.ts AND c.ts <= a.ts + INTERVAL 14400 SECOND),
-         |fout$b AS (
-         |  SELECT u.user_id,
-         |    CASE WHEN l3.user_id IS NOT NULL THEN 3
-         |         WHEN l2.user_id IS NOT NULL THEN 2
-         |         WHEN l1.user_id IS NOT NULL THEN 1
-         |         ELSE 0 END AS level
-         |  FROM u$b u LEFT JOIN l1_$b l1 ON u.user_id = l1.user_id
-         |    LEFT JOIN l2_$b l2 ON u.user_id = l2.user_id
-         |    LEFT JOIN l3_$b l3 ON u.user_id = l3.user_id),
-         |rout$b AS (
-         |  SELECT user_id,
-         |    CAST(max(CASE WHEN $anchor THEN 1 ELSE 0 END) AS INT) AS r0,
-         |    CAST(max(CASE WHEN $anchor THEN 1 ELSE 0 END)
-         |      * max(CASE WHEN $c1 THEN 1 ELSE 0 END) AS INT) AS r1,
-         |    CAST(max(CASE WHEN $anchor THEN 1 ELSE 0 END)
-         |      * max(CASE WHEN $c2 THEN 1 ELSE 0 END) AS INT) AS r2
-         |  FROM events
-         |  WHERE ($upTo) AND user_id IN (
-         |    SELECT DISTINCT user_id FROM events WHERE $inBatch)
-         |  GROUP BY user_id),
-         |out$b AS (
-         |  SELECT $b AS batch, coalesce(f.user_id, r.user_id) AS user_id,
-         |    f.level, r.r0, r.r1, r.r2
-         |  FROM fout$b f FULL OUTER JOIN rout$b r ON f.user_id = r.user_id)"""
+  private def analyticsReplayOracle: String =
+    eventReplay(s" ${funnelEventsCte("ev")},", "batch, user_id") {
+      (b, inBatch, upTo) =>
+        s"""${funnelBatchCtes("", b, inBatch, upTo)},
+           |fout$b AS (
+           |  SELECT u.user_id,
+           |    ${funnelLevel("    ")} AS level
+           |  ${funnelJoins("", b)}),
+           |rout$b AS (
+           |  SELECT user_id,
+           |${retentionBlock(upTo, inBatch)}),
+           |out$b AS (
+           |  SELECT $b AS batch, coalesce(f.user_id, r.user_id) AS user_id,
+           |    f.level, r.r0, r.r1, r.r2
+           |  FROM fout$b f FULL OUTER JOIN rout$b r ON f.user_id = r.user_id)"""
     }
-    s"""WITH ev AS (
-       |  SELECT user_id, ts, event_type FROM events
-       |  WHERE event_type IN ('view', 'click', 'purchase')),
-       |${blocks.mkString(",\n")}
-       |SELECT * FROM (
-       |  SELECT * FROM out0 UNION ALL
-       |  SELECT * FROM out1 UNION ALL
-       |  SELECT * FROM out2)
-       |ORDER BY batch, user_id""".stripMargin
-  }
 
   /** Multi-tier capstone replay oracle: the funnel, retention, uniqHLL,
     * quantile-sketch, and summing replay recipes composed into one tall
@@ -1420,70 +1169,25 @@ object StreamReplayQueries {
     * restart and compaction between batches 0 and 1 are invisible to
     * the oracle by design: correct recovery reproduces the same views.
     */
-  private def multitierReplayOracle: String = {
-    val anchor = "event_type = 'signup' AND ts < TIMESTAMP '2024-01-08 00:00:00'"
-    val c1 = "ts >= TIMESTAMP '2024-01-08 00:00:00' AND ts < TIMESTAMP '2024-01-15 00:00:00'"
-    val c2 = "ts >= TIMESTAMP '2024-01-15 00:00:00'"
-    val bounds = Seq(
-      ("0", "ts < TIMESTAMP '2024-01-11 00:00:00'",
-        "ts < TIMESTAMP '2024-01-11 00:00:00'"),
-      ("1", "ts >= TIMESTAMP '2024-01-11 00:00:00' AND ts < TIMESTAMP '2024-01-21 00:00:00'",
-        "ts < TIMESTAMP '2024-01-21 00:00:00'"),
-      ("2", "ts >= TIMESTAMP '2024-01-21 00:00:00'", "TRUE"))
-    val blocks = bounds.map { case (b, inBatch, upTo) =>
-      s"""fe$b AS (SELECT * FROM fev WHERE $upTo),
-         |fu$b AS (SELECT DISTINCT user_id FROM fev WHERE $inBatch),
-         |fl1_$b AS (SELECT DISTINCT user_id FROM fe$b WHERE event_type = 'view'),
-         |fl2_$b AS (
-         |  SELECT DISTINCT a.user_id
-         |  FROM fe$b a JOIN fe$b b ON a.user_id = b.user_id
-         |  WHERE a.event_type = 'view' AND b.event_type = 'click'
-         |    AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 14400 SECOND),
-         |fl3_$b AS (
-         |  SELECT DISTINCT a.user_id
-         |  FROM fe$b a JOIN fe$b b ON a.user_id = b.user_id
-         |    JOIN fe$b c ON a.user_id = c.user_id
-         |  WHERE a.event_type = 'view' AND b.event_type = 'click'
-         |    AND c.event_type = 'purchase'
-         |    AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 14400 SECOND
-         |    AND c.ts >= b.ts AND c.ts <= a.ts + INTERVAL 14400 SECOND),
+  private def multitierReplayOracle: String =
+    eventReplay(s" ${funnelEventsCte("fev")},", "batch, tier, k",
+        "batch, tier, k, v1, v2") { (b, inBatch, upTo) =>
+      s"""${funnelBatchCtes("f", b, inBatch, upTo)},
          |fout$b AS (
          |  SELECT 'funnel' AS tier, CAST(u.user_id AS VARCHAR) AS k,
-         |    CAST(CASE WHEN l3.user_id IS NOT NULL THEN 3
-         |         WHEN l2.user_id IS NOT NULL THEN 2
-         |         WHEN l1.user_id IS NOT NULL THEN 1
-         |         ELSE 0 END AS DOUBLE) AS v1, CAST(NULL AS DOUBLE) AS v2
-         |  FROM fu$b u LEFT JOIN fl1_$b l1 ON u.user_id = l1.user_id
-         |    LEFT JOIN fl2_$b l2 ON u.user_id = l2.user_id
-         |    LEFT JOIN fl3_$b l3 ON u.user_id = l3.user_id),
+         |    CAST(${funnelLevel("    ")} AS DOUBLE) AS v1, CAST(NULL AS DOUBLE) AS v2
+         |  ${funnelJoins("f", b)}),
          |rout$b AS (
          |  SELECT 'retention' AS tier, CAST(user_id AS VARCHAR) AS k,
-         |    CAST(max(CASE WHEN $anchor THEN 1 ELSE 0 END) * 4
-         |      + max(CASE WHEN $anchor THEN 1 ELSE 0 END)
-         |        * max(CASE WHEN $c1 THEN 1 ELSE 0 END) * 2
-         |      + max(CASE WHEN $anchor THEN 1 ELSE 0 END)
-         |        * max(CASE WHEN $c2 THEN 1 ELSE 0 END) AS DOUBLE) AS v1,
+         |    CAST($anchor * 4
+         |      + $anchor
+         |        * $week2 * 2
+         |      + $anchor
+         |        * $week3 AS DOUBLE) AS v1,
          |    CAST(NULL AS DOUBLE) AS v2
-         |  FROM events
-         |  WHERE ($upTo) AND user_id IN (
-         |    SELECT DISTINCT user_id FROM events WHERE $inBatch)
+         |  ${touched("user_id", upTo, inBatch, "\n  ")}
          |  GROUP BY user_id),
-         |hh$b AS (
-         |  SELECT event_type,
-         |    CAST(md5_number_lower(CAST(user_id AS VARCHAR)) >> 4 AS BIGINT) AS h
-         |  FROM events WHERE ($upTo) AND event_type IN (
-         |    SELECT DISTINCT event_type FROM events WHERE $inBatch)),
-         |hr$b AS (
-         |  SELECT event_type, h % 512 AS reg,
-         |    LEAST(CASE WHEN h // 512 = 0 THEN 52
-         |          ELSE 52 - length(bin(h // 512)) END, 30) AS rho
-         |  FROM hh$b),
-         |hm$b AS (SELECT event_type, reg, max(rho) AS m FROM hr$b GROUP BY 1, 2),
-         |hs$b AS (
-         |  SELECT event_type,
-         |    sum(CAST(1 AS BIGINT) << (30 - m)) AS s_present,
-         |    count(*) AS n_regs
-         |  FROM hm$b GROUP BY 1),
+         |${hllRegisterCtes("h", b, touched("event_type", upTo, inBatch))},
          |hout$b AS (
          |  SELECT 'uniq' AS tier, event_type AS k,
          |    CAST(CAST(CASE WHEN 512 - n_regs > 0 AND raw <= 1280.0
@@ -1491,14 +1195,11 @@ object StreamReplayQueries {
          |      ELSE floor(raw) END AS BIGINT) AS DOUBLE) AS v1,
          |    CAST(n_regs AS DOUBLE) AS v2
          |  FROM (SELECT event_type, n_regs,
-         |    202600935058957.5 / CAST(
-         |      s_present + (512 - n_regs) * (CAST(1 AS BIGINT) << 30)
-         |      AS DOUBLE) AS raw FROM hs$b)),
+         |    $hllRaw FROM hs$b)),
          |qv$b AS (
          |  SELECT event_type,
          |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS s
-         |  FROM events WHERE ($upTo) AND event_type IN (
-         |    SELECT DISTINCT event_type FROM events WHERE $inBatch)),
+         |  ${touched("event_type", upTo, inBatch)}),
          |qh$b AS (
          |  SELECT event_type, (s >> w) << w AS blo, count(*) AS cnt
          |  FROM (SELECT event_type, s,
@@ -1519,9 +1220,7 @@ object StreamReplayQueries {
          |  SELECT 'summing' AS tier, CAST(user_id % 10 AS VARCHAR) AS k,
          |    round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 6) AS v1,
          |    CAST(NULL AS DOUBLE) AS v2
-         |  FROM events
-         |  WHERE ($upTo) AND user_id % 10 IN (
-         |    SELECT DISTINCT user_id % 10 FROM events WHERE $inBatch)
+         |  ${touched("user_id % 10", upTo, inBatch, "\n  ")}
          |  GROUP BY user_id % 10),
          |out$b AS (
          |  SELECT $b AS batch, * FROM (
@@ -1529,16 +1228,6 @@ object StreamReplayQueries {
          |    UNION ALL SELECT * FROM hout$b UNION ALL SELECT * FROM qout$b
          |    UNION ALL SELECT * FROM sout$b))"""
     }
-    s"""WITH fev AS (
-       |  SELECT user_id, ts, event_type FROM events
-       |  WHERE event_type IN ('view', 'click', 'purchase')),
-       |${blocks.mkString(",\n")}
-       |SELECT batch, tier, k, v1, v2 FROM (
-       |  SELECT * FROM out0 UNION ALL
-       |  SELECT * FROM out1 UNION ALL
-       |  SELECT * FROM out2)
-       |ORDER BY batch, tier, k""".stripMargin
-  }
 
   /** Standing-CDC replay oracle: all updates stamped with their batch id
     * (seed = -1), then per batch b the current/previous state for b's
@@ -1565,7 +1254,7 @@ object StreamReplayQueries {
          |    round(c.tp, 6) AS totalprice, p.ver AS prev_ver,
          |    (p.ver IS NULL OR c.ver != p.ver) AS changed
          |  FROM cur$b c LEFT JOIN prev$b p ON c.k = p.k)"""
-    s"""WITH ks AS (SELECT DISTINCT o_orderkey % 300 AS k FROM orders),
+    replayUnion(""" ks AS (SELECT DISTINCT o_orderkey % 300 AS k FROM orders),
        |upd AS (
        |  SELECT o_orderkey % 300 AS k, o_orderkey AS ver,
        |    o_orderstatus AS status, o_totalprice AS tp, -1 AS b FROM orders
@@ -1577,12 +1266,6 @@ object StreamReplayQueries {
        |  FROM ks WHERE k % 4 = 0
        |  UNION ALL
        |  SELECT k, k + 1000, 'U2', CAST(k AS DOUBLE) * 3.5, 2
-       |  FROM ks WHERE k % 5 = 0),
-       |${(0 to 2).map(out).mkString(",\n")}
-       |SELECT * FROM (
-       |  SELECT * FROM out0 UNION ALL
-       |  SELECT * FROM out1 UNION ALL
-       |  SELECT * FROM out2)
-       |ORDER BY batch, k""".stripMargin
+       |  FROM ks WHERE k % 5 = 0),""", (0 to 2).map(out), "batch, k")
   }
 }

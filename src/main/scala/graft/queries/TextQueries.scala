@@ -11,6 +11,8 @@ import graft.operators.TextAnalysis
   * recomputes the operator from the base table in DuckDB SQL.
   */
 object TextQueries {
+  import SharedOracles._
+
   val queries: Seq[Query] = Seq(
     // --- per-doc character-distribution Shannon entropy (compressibility
     //     proxy: degenerate repetition scores ~0, prose ~4, junk high;
@@ -36,28 +38,14 @@ object TextQueries {
     },
 
     // --- language identification -----------------------------------------
-    Query("text_langid", {
-      def hits(words: Seq[String]): String = words.map { w =>
-        s"CAST((length(' ' || replace(replace(lower(text), 'ς', 'σ'), 'i' || chr(775), 'i') || ' ') - length(replace(' ' || replace(replace(lower(text), 'ς', 'σ'), 'i' || chr(775), 'i') || ' ', ' $w ', ''))) // ${w.length + 2} AS BIGINT)"
-      }.mkString(" + ")
-      val de = hits(Seq("der", "die", "und", "ist", "das"))
-      val en = hits(Seq("the", "and", "is", "of", "to"))
-      val es = hits(Seq("el", "la", "los", "es", "y"))
-      val fr = hits(Seq("le", "la", "les", "est", "et"))
-      val zh = hits(Seq("的", "是", "了", "在", "我"))
+    Query("text_langid",
       s"""WITH s AS (
          |  SELECT doc_id, lang,
-         |    $de AS sde, $en AS sen, $es AS ses, $fr AS sfr, $zh AS szh
+         |    $langScoreCols
          |  FROM documents)
          |SELECT doc_id, lang,
-         |  CASE WHEN GREATEST(sde, sen, ses, sfr, szh) = 0 THEN 'und'
-         |       WHEN sde = GREATEST(sde, sen, ses, sfr, szh) THEN 'de'
-         |       WHEN sen = GREATEST(sde, sen, ses, sfr, szh) THEN 'en'
-         |       WHEN ses = GREATEST(sde, sen, ses, sfr, szh) THEN 'es'
-         |       WHEN sfr = GREATEST(sde, sen, ses, sfr, szh) THEN 'fr'
-         |       ELSE 'zh' END AS predicted
-         |FROM s ORDER BY doc_id""".stripMargin
-    }) { (s, dir) =>
+         |  ${langPred("  ")} AS predicted
+         |FROM s ORDER BY doc_id""".stripMargin) { (s, dir) =>
       Tables(s, dir).documents
         .select(col("doc_id"), col("lang"),
           TextAnalysis.langId(col("text")).as("predicted"))
@@ -185,10 +173,7 @@ object TextQueries {
     },
 
     // --- quality scoring ---------------------------------------------------
-    Query("text_quality", {
-      val stopHits = TextAnalysis.enStopwords.map { w =>
-        s"CAST((length(' ' || text || ' ') - length(replace(' ' || text || ' ', ' $w ', ''))) // ${w.length + 2} AS BIGINT)"
-      }.mkString(" + ")
+    Query("text_quality",
       s"""WITH t AS (
          |  SELECT doc_id, text,
          |    CASE WHEN trim(text) = '' THEN 0
@@ -209,8 +194,7 @@ object TextQueries {
          |  round(LEAST(n_tokens / 20.0, 1.0) * 0.4
          |      + LEAST(stop_hits / 3.0, 1.0) * 0.3
          |      + GREATEST(0.0, 1.0 - praw * 5.0) * 0.3, 6) AS quality
-         |FROM t ORDER BY doc_id""".stripMargin
-    }) { (s, dir) =>
+         |FROM t ORDER BY doc_id""".stripMargin) { (s, dir) =>
       Tables(s, dir).documents
         .select(col("doc_id"),
           TextAnalysis.wsTokenCount(col("text")).as("n_tokens"),
@@ -405,31 +389,22 @@ object TextQueries {
 
     // --- Gopher rule battery: word-count / mean-length / alpha-word /
     //     stopword bounds -> keep verdict (scan-local projection) --------
-    Query("text_gopher", {
-      val stopHits = TextAnalysis.enStopwords.map { w =>
-        s"CAST((length(' ' || text || ' ') - length(replace(' ' || text || ' ', ' $w ', ''))) // ${w.length + 2} AS BIGINT)"
-      }.mkString(" + ")
+    Query("text_gopher",
       s"""WITH t AS (
          |  SELECT doc_id, text,
-         |    CASE WHEN trim(text) = '' THEN 0
-         |         ELSE len(string_split_regex(trim(text), '\\s+')) END AS n_words,
-         |    $stopHits AS stop_hits,
-         |    string_split(regexp_replace(replace(replace(lower(trim(text)), 'ς', 'σ'), 'i' || chr(775), 'i'), '\\s+', ' ', 'g'), ' ') AS w
+         |$gopherCols
          |  FROM documents),
          |m AS (
          |  SELECT doc_id, n_words, stop_hits,
-         |    CASE WHEN n_words = 0 THEN 0.0
-         |      ELSE CAST(length(regexp_replace(trim(text), '\\s+', '', 'g')) AS DOUBLE) / n_words END AS mwl,
-         |    CASE WHEN trim(text) = '' THEN 0.0
-         |      ELSE CAST(len(list_filter(w, x -> regexp_matches(x, '[a-z]'))) AS DOUBLE) / len(w) END AS awr
+         |    $meanWordLen AS mwl,
+         |    $alphaWordRatio AS awr
          |  FROM t)
          |SELECT doc_id, CAST(n_words AS BIGINT) AS n_words,
          |  round(mwl, 6) AS mean_word_len,
          |  round(awr, 6) AS alpha_word_ratio, stop_hits,
          |  (n_words >= 20 AND n_words <= 100000 AND mwl >= 3.0 AND mwl <= 10.0
          |   AND awr >= 0.8 AND stop_hits >= 2) AS keep
-         |FROM m ORDER BY doc_id""".stripMargin
-    }) { (s, dir) =>
+         |FROM m ORDER BY doc_id""".stripMargin) { (s, dir) =>
       Tables(s, dir).documents
         .select(col("doc_id"),
           TextAnalysis.wsTokenCount(col("text")).as("n_words"),

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -538,11 +538,7 @@ final class StreamingPhashDedup(protected val spark: SparkSession,
     maxHamming: Int = 3, wideRecall: Boolean = false, nBuckets: Int = 32,
     collapseBatch: Boolean = true) extends EvictingOperator {
 
-  if (wideRecall) require(maxHamming >= 0 && maxHamming < 8,
-    "1-bit-probed 16-bit bands guarantee recall only for maxHamming <= 7")
-  else require(maxHamming >= 0 && maxHamming < 4,
-    "4 16-bit bands guarantee recall only for maxHamming <= 3; " +
-      "pass wideRecall=true (1-bit band probing) for 4..7")
+  graft.operators.HammingBands.requireRecall(maxHamming, wideRecall)
 
   private val fps = new BatchedState(spark, s"$stateDir/fps", Seq("bb"))
   protected def states: Seq[BatchedState] = Seq(fps)
@@ -570,32 +566,18 @@ final class StreamingPhashDedup(protected val spark: SparkSession,
         .select(col("id"), col("fp"), col("clique"))
     else df.select(col(idCol).as("id"), col(hashCol).as("fp"))
 
-  private def carried: Seq[Column] =
-    if (collapseBatch) Seq(col("clique")) else Seq.empty
-
   /** Exploded EXACT-key rows — the stored state layout. */
-  private def bandRows(df: DataFrame): DataFrame =
-    normalized(df).select(col("id") +: col("fp") +: carried :+
-        posexplode(array((0 until 4).map(b =>
-          shiftright(col("fp"), b * 16).bitwiseAND(0xFFFFL)): _*))
-          .as(Seq("band", "key")): _*)
-      .withColumn("bb", bucket(nBuckets, col("band"), col("key")))
+  private def bandRows(df: DataFrame): DataFrame = bucketed(
+    graft.operators.HammingBands.sides(normalized(df), "fp", wideRecall = false)._1)
 
-  /** The batch-side probe rows: exact keys, plus each key's 16
-    * single-bit flips when `wideRecall` (a <= 1-bit band difference
-    * collides between the state's exact key and the batch's ball).
+  /** The batch-side probe rows: exact keys, plus each key's 1-bit ball
+    * when `wideRecall` (see [[graft.operators.HammingBands.sides]]).
     */
-  private def probeRows(df: DataFrame): DataFrame =
-    if (!wideRecall) bandRows(df)
-    else normalized(df).select(col("id") +: col("fp") +: carried :+
-        posexplode(array((0 until 4).map { b =>
-          val key = shiftright(col("fp"), b * 16).bitwiseAND(0xFFFFL)
-          array(key +: (0 until 16).map(i =>
-            key.bitwiseXOR(lit(1L << i))): _*)
-        }: _*)).as(Seq("band", "keys")): _*)
-      .select(col("id") +: col("fp") +: carried :+ col("band") :+
-        explode(col("keys")).as("key"): _*)
-      .withColumn("bb", bucket(nBuckets, col("band"), col("key")))
+  private def probeRows(df: DataFrame): DataFrame = bucketed(
+    graft.operators.HammingBands.sides(normalized(df), "fp", wideRecall)._2)
+
+  private def bucketed(rows: DataFrame): DataFrame =
+    rows.withColumn("bb", bucket(nBuckets, col("band"), col("key")))
 
   /** Seed the persisted reference state, REPLACING any previous state
     * under `stateDir`.

@@ -4,9 +4,11 @@ import scala.collection.mutable
 
 import org.apache.spark.SparkContext
 import org.apache.spark.graftbridge.ListenerBusBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-  SparkListenerJobStart, SparkListenerStageCompleted,
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted,
   SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd,
+  SparkListenerSQLExecutionStart}
 
 /** The one job-mapped stage listener. It records every job (id, job
   * group, description, start/end time, stage ids) and every stage ATTEMPT
@@ -26,12 +28,29 @@ final class StageTelemetry private (sc: SparkContext) extends SparkListener {
 
   private val jobRecs = mutable.LinkedHashMap.empty[Int, Job]
   private val stageRecs = mutable.LinkedHashMap.empty[(Int, Int), Stage]
+  // running SQL executions: id -> description (the job description set
+  // when the action started, else the action's call site)
+  private val executionLabels = mutable.HashMap.empty[Long, String]
 
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case s: SparkListenerSQLExecutionStart =>
+      synchronized(executionLabels(s.executionId) = s.description)
+    case s: SparkListenerSQLExecutionEnd =>
+      synchronized(executionLabels -= s.executionId)
+    case _ =>
+  }
+
+  /** A job without its own description takes its SQL execution's: a
+    * broadcast exchange runs its job on another thread, whose call site
+    * names only a CompletableFuture frame.
+    */
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
     val props = Option(e.properties)
     def prop(k: String) = props.flatMap(p => Option(p.getProperty(k)))
     jobRecs(e.jobId) = Job(e.jobId, prop("spark.jobGroup.id"),
       prop("spark.job.description")
+        .orElse(prop("spark.sql.execution.id")
+          .flatMap(id => executionLabels.get(id.toLong)))
         .orElse(e.stageInfos.maxByOption(_.stageId).map(_.name))
         .getOrElse("").takeWhile(_ != '\n'),
       e.time, -1L, e.stageIds)
@@ -130,8 +149,8 @@ object StageTelemetry {
   }
 
   /** One job; times are the scheduler's event times (epoch ms), `endMs`
-    * is -1 while it runs. `description` is the job's own, else its
-    * result stage's call site.
+    * is -1 while it runs. `description` is the job's own, else its SQL
+    * execution's, else its result stage's call site.
     */
   final case class Job(id: Int, group: Option[String], description: String,
       startMs: Long, endMs: Long, stageIds: Seq[Int])

@@ -35,6 +35,24 @@ class RegistrySpec extends AnyFunSuite {
     assert(missing.isEmpty, s"headline entries without queries: $missing")
   }
 
+  test("every oracle's SQL is byte-identical to its pinned sha-256") {
+    // src/test/resources/oracle_sql_sha256.json: regenerate it with
+    // graft.tools.SnapshotOracleSql only when an oracle changes on purpose
+    val src = scala.io.Source.fromInputStream(
+      getClass.getResourceAsStream("/oracle_sql_sha256.json"), "UTF-8")
+    val text = try src.mkString finally src.close()
+    val pinned = """"([^"]+)": "([0-9a-f]{64})"""".r.findAllMatchIn(text)
+      .map(m => m.group(1) -> m.group(2)).toMap
+    val got = graft.tools.SnapshotOracleSql.hashes.toMap
+    assert(pinned.size === 199, "golden truncated")
+    assert((pinned.keySet -- got.keySet).isEmpty,
+      s"pinned but gone: ${(pinned.keySet -- got.keySet).toSeq.sorted}")
+    assert((got.keySet -- pinned.keySet).isEmpty,
+      s"not pinned: ${(got.keySet -- pinned.keySet).toSeq.sorted}")
+    val changed = pinned.collect { case (n, h) if got(n) != h => n }
+    assert(changed.isEmpty, s"oracle SQL changed: ${changed.toSeq.sorted}")
+  }
+
   test("oracle SQL strings are non-empty") {
     Registry.oracle.foreach { case (name, sql) =>
       assert(sql.trim.nonEmpty, s"$name: empty oracle")

@@ -56,6 +56,35 @@ class TelemetrySpec extends AnyFunSuite with LocalSpark {
     } finally tel.detach()
   }
 
+  test("a broadcast-exchange job carries the label of the query that " +
+      "built it") {
+    import org.apache.spark.sql.functions.broadcast
+    val sc = spark.sparkContext
+    val small = spark.range(50).selectExpr("id AS k", "id * 2 AS v")
+    val big = spark.range(20000).selectExpr("id % 50 AS k")
+    // Spark builds the broadcast relation in its own job on another
+    // thread, whose call site is only a CompletableFuture frame
+    def labels(description: Option[String]): Seq[String] = {
+      val tel = StageTelemetry.attach(sc)
+      try {
+        description.foreach(sc.setJobDescription)
+        val rows = try big.join(broadcast(small), "k").count()
+          finally sc.setJobDescription(null)
+        assert(rows === 20000L)
+        tel.drain()
+        assert(tel.jobs.size >= 2, tel.jobs)
+        tel.jobs.map(_.description)
+      } finally tel.detach()
+    }
+    val label = "telemetry-spec broadcast join"
+    assert(labels(Some(label)).forall(_ == label))
+    // without a description, every job of the query takes the query's
+    // call site
+    val bare = labels(None)
+    assert(bare.distinct.size === 1, bare)
+    assert(bare.head.startsWith("count at TelemetrySpec.scala"), bare)
+  }
+
   test("stageSkew ignores a stage below 1% of the read bytes") {
     val big = Stage(1, 0, 0, readBytes = 1000000000L, readTasks = 100,
       maxTaskRead = 11000000L)
