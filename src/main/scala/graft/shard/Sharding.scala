@@ -9,14 +9,14 @@ import graft.types.{ChKind, ChTypeInfo}
 
 /** Shard-routing policies (SURVEY §2.10, reference
   * `/root/reference/task/sharding.go`). Each policy yields a `shard`
-  * Column in [0, numShards); the pipeline then repartitions on it so one
-  * Spark partition maps to one ClickHouse shard batch.
+  * Column in [0, numShards).
   *
-  * Scale note: this is the ONE shuffle of the ingest path (reference has
-  * the same single hop). Everything upstream (parse/project) is
-  * narrow/pipelined; everything downstream (per-shard write) is
-  * partition-local. At 1000 executors the shuffle fan-in per shard is
-  * bounded by numShards, and AQE coalesces small shard partitions.
+  * Scale note: the ingest path has no exchange. The reference routes rows
+  * into per-shard buffers inside the consumer, with no network hop
+  * (task/sharding.go:120-195); here each Spark write task routes its own
+  * rows ([[graft.sink.ChWriter.write]]), so parse, projection, shard
+  * column and write run as ONE stage per batch, and write parallelism
+  * follows the source's partitions.
   */
 object Sharding {
 
@@ -61,22 +61,12 @@ object Sharding {
   def autoShardingKey(sortingKeys: Seq[Column]): Column =
     GoHash.goXxHash64(concat_ws(".", sortingKeys: _*))
 
-  /** X4/X5 — route a batch: add the shard column and co-locate each shard
-    * in its own partition group for the per-shard writer. With
-    * `writersPerShard > 1` the repartition key is salted so each shard's
-    * rows spread over that many Spark tasks — the analogue of the
-    * reference's `MaxOpenConns` writer pool per shard
-    * (util/workerpool.go:29-118, pool/conn.go:178): write parallelism is
-    * `numShards * writersPerShard`, not bounded by the shard count.
+  /** X4 — tag a batch with its `__shard__` column. No exchange: each
+    * write task routes its own rows to their shard's writer. `numShards`
+    * and `writersPerShard` are ignored; they stay only for callers that
+    * pass them positionally (the sinkbench harness).
     */
   def partitionByShard(df: DataFrame, shard: Column, numShards: Int,
       writersPerShard: Int = 1): DataFrame =
-    if (writersPerShard <= 1)
-      df.withColumn("__shard__", shard)
-        .repartition(numShards, col("__shard__"))
-    else
-      df.withColumn("__shard__", shard)
-        .withColumn("__salt__", pmod(spark_partition_id(), lit(writersPerShard)))
-        .repartition(numShards * writersPerShard, col("__shard__"), col("__salt__"))
-        .drop("__salt__")
+    df.withColumn("__shard__", shard)
 }

@@ -5,8 +5,9 @@ import org.apache.spark.sql.{DataFrame, Row}
 /** Per-shard batch writing with the reference's delivery semantics
   * (SURVEY S4-S7, X4-X5):
   *
-  *   - one buffered batch per shard (here: one Spark partition per shard
-  *     after `repartition(numShards, shard)`)
+  *   - one buffered batch per shard: each write task routes its rows
+  *     into a bounded buffer per shard value, as the reference's consumer
+  *     does (task/sharding.go:120-195) — no exchange before the write
   *   - tolerant writes: a failing batch is retried with the bad rows
   *     skipped and counted (pool/ck_cli.go:197-229)
   *   - a bounded retry loop around each batch (output/clickhouse.go:263-295)
@@ -17,7 +18,8 @@ import org.apache.spark.sql.{DataFrame, Row}
   * The wire backend is pluggable: [[JdbcRowWriter]] drives a real
   * ClickHouse JDBC endpoint per shard; [[JsonLinesWriter]] is the local
   * test stand-in. Executors write their partitions in parallel — the
-  * reference's per-shard worker pool (X5) maps onto task parallelism.
+  * reference's per-shard worker pool (X5) maps onto task parallelism, so
+  * a batch makes one INSERT per shard per write task (source partition).
   */
 object ChWriter {
 
@@ -43,14 +45,14 @@ object ChWriter {
       extends RuntimeException(msg)
 
   final case class WriteConfig(
-      numShards: Int,
+      numShards: Int,               // unused; kept for the sinkbench harness
       retryTimes: Int = 3,          // <=0 => infinite (reference default)
       retryDelayMs: Long = 10000L,  // 10 s like retry.Do in loopWrite
       batchSize: Int = 16384)
 
   final case class WriteStats(written: Long, numBad: Long, retries: Long)
 
-  /** Write an already shard-partitioned DataFrame (see
+  /** Write a DataFrame tagged with its `__shard__` column (see
     * [[Sharding.partitionByShard]]); returns global stats via accumulators.
     */
   def write(sharded: DataFrame, cfg: WriteConfig, mkWriter: () => RowWriter): WriteStats = {
@@ -61,24 +63,24 @@ object ChWriter {
     val shardIdx = sharded.schema.fieldIndex("__shard__")
 
     sharded.foreachPartition { (it: Iterator[Row]) =>
-      // hash-partitioning can co-locate several shard values in one Spark
-      // partition; each shard gets its own writer and a BOUNDED buffer
-      // (<= batchSize rows) flushed as the iterator streams — the
-      // partition is never materialized (task/sharding.go:120-195 streams
-      // into per-shard buffers the same way)
+      // a task's rows may span every shard; each shard gets its own
+      // writer and a BOUNDED buffer (<= batchSize rows) flushed as the
+      // iterator streams — the partition is never materialized
       val writers = scala.collection.mutable.Map.empty[Int, RowWriter]
       val buffers = scala.collection.mutable.Map.empty[Int, scala.collection.mutable.ArrayBuffer[Row]]
       def flush(shard: Int): Unit = {
         val buf = buffers(shard)
         if (buf.nonEmpty) {
-          val w = writers.getOrElseUpdate(shard, {
-            val nw = mkWriter(); nw.open(shard); nw
+          val w = writers.getOrElse(shard, {
+            // registered before open(), so a half-opened writer is closed too
+            val nw = mkWriter(); writers(shard) = nw; nw.open(shard); nw
           })
           val (ok, bad, r) = writeWithRetry(w, buf.toSeq, cfg)
           written.add(ok); numBad.add(bad); retries.add(r)
           buf.clear()
         }
       }
+      var failure: Throwable = null
       try {
         it.foreach { row =>
           val shard = row.getInt(shardIdx)
@@ -89,16 +91,16 @@ object ChWriter {
           if (buf.length >= cfg.batchSize) flush(shard)
         }
         buffers.keys.foreach(flush)
-      } finally {
-        // close each writer independently — one throwing close() must not
-        // leak the remaining writers' connections/file handles
-        var firstErr: Throwable = null
-        writers.values.foreach { w =>
-          try w.close()
-          catch { case e: Throwable => if (firstErr == null) firstErr = e }
-        }
-        if (firstErr != null) throw firstErr
+      } catch { case e: Throwable => failure = e }
+      // close each writer independently — one throwing close() must not
+      // leak the remaining writers' connections/file handles, nor replace
+      // the write failure already in flight (it rides along as suppressed)
+      writers.values.foreach { w =>
+        try w.close()
+        catch { case e: Throwable =>
+          if (failure == null) failure = e else failure.addSuppressed(e) }
       }
+      if (failure != null) throw failure
     }
     WriteStats(written.value, numBad.value, retries.value)
   }
@@ -216,9 +218,8 @@ object ChWriter {
       }
       stmt.clearBatch()
     }
-    override def close(): Unit = {
-      if (stmt != null) stmt.close()
-      if (conn != null) conn.close()
-    }
+    override def close(): Unit =
+      try if (stmt != null) stmt.close()
+      finally if (conn != null) conn.close()
   }
 }

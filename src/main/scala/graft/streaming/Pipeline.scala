@@ -19,9 +19,12 @@ import graft.types.ChKind
   *
   * {{{
   * Kafka source --> tolerant typed projection --> shard column
-  *   --> foreachBatch: repartition(numShards, shard) --> per-shard write
+  *   --> foreachBatch: each task routes its rows to per-shard writers
   *   --> checkpoint advances (= offset commit AFTER write, at-least-once)
   * }}}
+  *
+  * A fixed-schema batch runs as one job of one stage, with no shard
+  * exchange; write parallelism follows the source's partitions.
   *
   * The reference's buffer/flush knobs map to `maxOffsetsPerTrigger`
   * (bufferSize) + `Trigger.ProcessingTime` (flushInterval); duplicates on
@@ -35,7 +38,9 @@ object Pipeline {
       numShards: Int,
       writeCfg: ChWriter.WriteConfig,
       mkWriter: () => ChWriter.RowWriter,
-      /** X5 — writer-pool width per shard (reference MaxOpenConns). */
+      /** Ignored: write parallelism follows the source's partitions. Kept
+        * only for the sinkbench harness, which passes it positionally.
+        */
       writersPerShard: Int = 1)
 
   /** S1 — the Kafka micro-batch source with the reference's consumer
@@ -153,7 +158,7 @@ object Pipeline {
           val projected = project(input, task, dims ++ metaDims)
           val sharded = Sharding.partitionByShard(
             projected, shardColumn(task, dims ++ metaDims, sink.numShards),
-            sink.numShards, sink.writersPerShard)
+            sink.numShards)
             .select((dims.map(d => col(d.name)) :+ col("__shard__")): _*)
           val t0 = System.nanoTime()
           val stats = ChWriter.write(sharded, sink.writeCfg, sink.mkWriter)

@@ -54,6 +54,8 @@ final class SinkerApp(
       val t = new Thread(r, "graft-evolution-restart"); t.setDaemon(true); t
     })
   private val pendingBounce = ConcurrentHashMap.newKeySet[String]()
+  /** How long a batch that found new keys waits for its restart. */
+  private val holdForRestartMs = 60000L
 
   def currentDims(task: String): Seq[Dim] = schemas.get(task)
   def restartCount(task: String): Int =
@@ -75,8 +77,10 @@ final class SinkerApp(
 
   /** §3.3 — dynamic schema evolution: issue ALTERs, refresh the cached
     * dims, and restart the query from its checkpoint under the new
-    * schema. The in-flight micro-batch still writes under the old schema
-    * (the reference drains, then restarts — same observable behavior).
+    * schema. The in-flight micro-batch is re-run under the new schema,
+    * never written under the old one: this callback holds the stream
+    * thread until the restart's `stop()` interrupts it (a write racing
+    * a slow stop lands under the old schema, with the batches after it).
     *
     * When the consumer group has more than one task, the WHOLE group is
     * bounced (the reference restarts the shared consumer before the ALTER
@@ -108,6 +112,9 @@ final class SinkerApp(
           restartAfterEvolution(task)
         }
       })
+    // the stop ends this with an InterruptedException; past the bound
+    // (a stop that never came) the batch writes under the old schema
+    Thread.sleep(holdForRestartMs)
   }
 
   /** The restart thread body: bounce the task (or its whole group), with

@@ -3,7 +3,7 @@ package graft
 import java.lang.reflect.{InvocationHandler, Method, Proxy}
 import java.sql.{BatchUpdateException, Connection, PreparedStatement, SQLException, Statement}
 import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
 import scala.jdk.CollectionConverters._
 
@@ -16,8 +16,9 @@ import graft.sink.{ChSql, ChWriter}
 /** Drives the REAL ClickHouse JDBC write path (`ChWriter.JdbcRowWriter`,
   * mirroring pool/ck_cli.go:190-236) against an in-process fake
   * `java.sql.Driver`: records connections/SQL/batches, injects transient
-  * failures and per-row BatchUpdateExceptions. Covers
-  * open / batched INSERT / bad-row-skip / retry / close without a server.
+  * failures, per-row BatchUpdateExceptions and failing prepare/close
+  * calls. Covers open / batched INSERT / bad-row-skip / retry / close
+  * without a server.
   */
 object FakeJdbc {
   final case class Batch(url: String, rows: Seq[Seq[Any]])
@@ -28,10 +29,13 @@ object FakeJdbc {
   val closed = new AtomicInteger(0)
   val failuresRemaining = new AtomicInteger(0)
   val badRowsOnce = new java.util.concurrent.atomic.AtomicReference[Seq[Int]](Nil)
+  val failPrepare = new AtomicBoolean(false)
+  val failStatementClose = new AtomicBoolean(false)
 
   def reset(): Unit = {
     batches.clear(); preparedSql.clear(); connProps.clear()
     opened.set(0); closed.set(0); failuresRemaining.set(0); badRowsOnce.set(Nil)
+    failPrepare.set(false); failStatementClose.set(false)
   }
 
   object Driver extends java.sql.Driver {
@@ -55,6 +59,7 @@ object FakeJdbc {
       override def invoke(proxy: Any, m: Method, args: Array[AnyRef]): AnyRef =
         m.getName match {
           case "prepareStatement" =>
+            if (failPrepare.get()) throw new SQLException("injected prepare failure")
             preparedSql.add(args(0).asInstanceOf[String])
             newStatement(url)
           case "close" => closed.incrementAndGet(); null
@@ -97,7 +102,9 @@ object FakeJdbc {
             batch.clear()
             counts
           case "clearBatch" => batch.clear(); null
-          case "close" => null
+          case "close" =>
+            if (failStatementClose.get()) throw new SQLException("injected close failure")
+            null
           case _ => defaultValue(m)
         }
     }
@@ -132,6 +139,9 @@ class FakeJdbcSpec extends AnyFunSuite with LocalSpark {
     Sharding.partitionByShard(df, pmod(col("id"), lit(2)).cast("int"), 2)
   }
 
+  private def causes(t: Throwable): Seq[Throwable] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+
   test("open/batch/close: rows land on their shard's endpoint, batched") {
     FakeJdbc.reset()
     val stats = ChWriter.write(sharded(40),
@@ -158,7 +168,9 @@ class FakeJdbcSpec extends AnyFunSuite with LocalSpark {
   test("bad rows are skipped and counted, good rows retried without them (S6)") {
     FakeJdbc.reset()
     FakeJdbc.badRowsOnce.set(Seq(1, 3))
-    val stats = ChWriter.write(sharded(8),
+    // one write task, so each shard's 4 rows form one INSERT and the
+    // injected bad indexes exist in the first one
+    val stats = ChWriter.write(sharded(8).coalesce(1),
       ChWriter.WriteConfig(numShards = 2, batchSize = 100, retryDelayMs = 1L), mkWriter)
     assert(stats.numBad === 2)
     assert(stats.written === 6)
@@ -189,5 +201,33 @@ class FakeJdbcSpec extends AnyFunSuite with LocalSpark {
     def chain(t: Throwable): String =
       if (t == null) "" else t.getMessage + " | " + chain(t.getCause)
     assert(chain(ex).contains("write failed"))
+  }
+
+  test("a failing open or close releases every connection and keeps the root cause") {
+    FakeJdbc.reset()
+    FakeJdbc.failPrepare.set(true)
+    val openErr = intercept[Exception] {
+      ChWriter.write(sharded(4).coalesce(1),
+        ChWriter.WriteConfig(numShards = 2, retryDelayMs = 1L), mkWriter)
+    }
+    assert(causes(openErr).exists(_.getMessage.contains("injected prepare failure")))
+    // the connection the half-opened writer got is closed
+    assert(FakeJdbc.opened.get() === 1 && FakeJdbc.closed.get() === 1)
+
+    FakeJdbc.reset()
+    FakeJdbc.failuresRemaining.set(100)
+    FakeJdbc.failStatementClose.set(true)
+    val writeErr = intercept[Exception] {
+      ChWriter.write(sharded(4).coalesce(1),
+        ChWriter.WriteConfig(numShards = 2, retryTimes = 1, retryDelayMs = 1L),
+        mkWriter)
+    }
+    // the write failure stays the root cause; the close failure rides along
+    val root = causes(writeErr).find(_.getMessage.startsWith("write failed"))
+    assert(root.nonEmpty, causes(writeErr).map(_.getMessage))
+    assert(root.get.getSuppressed.exists(_.getMessage == "injected close failure"))
+    // a statement whose close() throws still closes its connection
+    assert(FakeJdbc.opened.get() > 0)
+    assert(FakeJdbc.opened.get() === FakeJdbc.closed.get())
   }
 }

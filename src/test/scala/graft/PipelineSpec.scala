@@ -11,6 +11,7 @@ import graft.dynamic.SchemaEvolution.NewKeyPolicy
 import graft.parse.Projector.Dim
 import graft.sink.{ChSql, ChWriter}
 import graft.streaming.Pipeline
+import graft.telemetry.StageTelemetry
 import graft.types.{ChKind, ChType}
 
 /** E2E golden test mirroring the reference's `go.test.sh`: 100 000 JSON
@@ -84,6 +85,41 @@ class PipelineSpec extends AnyFunSuite with LocalSpark {
       count(when(col("name").startsWith("name"), 1)).as("named")).head()
     assert(r.getDouble(0) === (1L to 100000L).map(_.toDouble).sum)
     assert(r.getLong(1) === 100000L)
+  }
+
+  test("a fixed-schema batch runs as one job of one stage, with no shuffle") {
+    val inDir  = Files.createTempDirectory("graft_in")
+    val outDir = Files.createTempDirectory("graft_out")
+    val ckDir  = Files.createTempDirectory("graft_ck")
+    Files.write(inDir.resolve("part-0.txt"),
+      cohortMessages.take(2000).mkString("\n").getBytes("UTF-8"))
+    val task = TaskConfig(name = "test_one_stage", topic = "topic1",
+      consumerGroup = "g1", bufferSize = 50000, flushInterval = 1)
+    val outStr = outDir.toString
+    val colNames = fixedDims.map(_.name)
+    val sink = Pipeline.SinkSpec(4,
+      ChWriter.WriteConfig(4, retryTimes = 2, retryDelayMs = 10),
+      () => new ChWriter.JsonLinesWriter(outStr, colNames))
+    val tel = StageTelemetry.attach(spark.sparkContext)
+    try {
+      val q = Pipeline.start(spark,
+        Pipeline.fileSource(spark, inDir.toString, "topic1"),
+        task, fixedDims, sink, ckDir.toString)
+      q.processAllAvailable()
+      q.stop()
+      tel.drain()
+      val batch = tel.jobs.filter(_.group.contains(q.runId.toString))
+      val stages = tel.stagesInGroup(q.runId.toString)
+      // the shard exchange is gone: parse, projection, shard routing and
+      // the per-shard writes share one stage
+      assert(batch.size === 1, tel.jobs)
+      assert(stages.size === 1, stages)
+      assert(stages.map(s => s.writeBytes + s.readBytes).sum === 0L, stages)
+    } finally tel.detach()
+    // the write tasks routed their rows to all four shards' writers
+    val shardDirs = outDir.toFile.listFiles().filter(_.isDirectory)
+    assert(shardDirs.length === 4)
+    assert(spark.read.json(outStr + "/shard=*/*.jsonl").count() === 2000L)
   }
 
   test("go.test.sh dynamic-schema golden: newkey00-04 added, 05-10 skipped") {

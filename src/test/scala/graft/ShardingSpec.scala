@@ -46,36 +46,4 @@ class ShardingSpec extends AnyFunSuite with LocalSpark {
       graft.functions.GoHash.goXxHash64(lit("x.1")).as("e")).head()
     assert(k.getLong(0) === k.getLong(1))
   }
-
-  test("partitionByShard co-locates each shard (X4)") {
-    val df = (1 to 1000).toDF("v")
-    val sharded = Sharding.partitionByShard(df, pmod(col("v"), lit(4)), 4)
-    // every shard lands wholly in one Spark partition (the writer handles
-    // two shards sharing a partition, but a shard must never split)
-    val parts = sharded
-      .withColumn("pid", spark_partition_id())
-      .groupBy(col("__shard__"))
-      .agg(countDistinct(col("pid")).as("n"))
-      .collect().map(_.getLong(1))
-    assert(parts.length === 4)
-    assert(parts.forall(_ === 1L))
-  }
-
-  test("salted repartition widens write parallelism beyond numShards (X5)") {
-    val df = (1 to 4000).toDF("v").repartition(8)
-    val sharded = Sharding.partitionByShard(df, pmod(col("v"), lit(2)), 2,
-      writersPerShard = 4)
-    // 2 shards x 4 writers -> 8 write tasks; each shard's rows spread
-    // over several partitions instead of collapsing to one per shard
-    assert(sharded.rdd.getNumPartitions === 8)
-    val spread = sharded
-      .withColumn("pid", spark_partition_id())
-      .groupBy(col("__shard__"))
-      .agg(countDistinct(col("pid")).as("n"))
-      .collect().map(_.getLong(1))
-    assert(spread.forall(_ > 1L),
-      s"each shard should write from multiple tasks, got spread ${spread.toSeq}")
-    // and no rows lost
-    assert(sharded.count() === 4000)
-  }
 }
