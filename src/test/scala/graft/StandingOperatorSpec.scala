@@ -75,6 +75,15 @@ class StandingOperatorSpec extends AnyFunSuite with LocalSpark {
     }
   }
 
+  test("every family's persisted _params equals its pinned golden") {
+    val got = families.map { f =>
+      val dir = tmp(s"so_params_${f.name}")
+      f.make(spark, dir, false).seed(f.df(spark, f.seedRows))
+      f.name -> BatchedState.readParams(spark, dir)
+    }.toMap
+    assert(got === paramsGolden)
+  }
+
   families.filter(_.standing).foreach { f =>
     test(s"${f.name}: replay equals the admit loop compacting after batch 0") {
       val loop = f.make(spark, tmp(s"so_rloop_${f.name}"), false)
@@ -100,6 +109,41 @@ class StandingOperatorSpec extends AnyFunSuite with LocalSpark {
 }
 
 object StandingOperatorSpec {
+  /** Every family's `_params` after a seed under `make(.., false)`: a
+    * state dir seeded before a change must still pass the admission
+    * guard after it, so these keys and values never move.
+    */
+  val paramsGolden: Map[String, Map[String, String]] = Map(
+    "StreamingCuration" -> Map("n" -> "8", "nBuckets" -> "32"),
+    "StreamingDecontamination" -> Map("n" -> "8", "nBuckets" -> "32"),
+    "StreamingDedup" -> Map("bands" -> "8", "n" -> "3", "nBuckets" -> "32",
+      "rows" -> "4", "shingles" -> "fp64"),
+    "StreamingEmbeddingDedup" -> Map("bandBits" -> "8", "dims" -> "4",
+      "keyWidth" -> "int64", "keysLayout" -> "banded", "nBits" -> "64",
+      "nBuckets" -> "32"),
+    "StreamingParagraphDedup" -> Map("nBuckets" -> "32"),
+    "StreamingPhashDedup" -> Map("collapseBatch" -> "true", "layout" -> "v1",
+      "maxHamming" -> "3", "nBuckets" -> "32", "wideRecall" -> "false"),
+    "StreamingQuantile" -> Map("keyCol" -> "k", "nBuckets" -> "64",
+      "scale" -> "100", "sigBits" -> "8", "valueCol" -> "v"),
+    "StreamingReplacingMerge" -> Map("keyCol" -> "k", "nBuckets" -> "64",
+      "payload" -> "v", "verCol" -> "ver"),
+    "StreamingRetention" -> Map("conds" -> "anchor,came_back",
+      "nBuckets" -> "64"),
+    "StreamingSemanticDedup" -> Map("nCells" -> "2"),
+    "StreamingSubstringDedup" -> Map("k" -> "10", "nBuckets" -> "32",
+      "pos" -> "int32", "w" -> "1"),
+    "StreamingSummingMerge" -> Map("accType" -> "decimal(28,2)",
+      "keyCol" -> "k", "nBuckets" -> "64", "sumCols" -> "v"),
+    "StreamingUniqHll" -> Map("keyCol" -> "k", "nBuckets" -> "64", "p" -> "9",
+      "valueCol" -> "v"),
+    "StreamingUniqKmv" -> Map("k" -> "64", "keyCol" -> "k", "nBuckets" -> "64",
+      "valueCol" -> "v"),
+    "StreamingVersionedCollapsing" -> Map("keyCol" -> "k", "nBuckets" -> "64",
+      "payload" -> "p", "signCol" -> "sign", "verCol" -> "ver"),
+    "StreamingWindowFunnel" -> Map("mode" -> "default", "nBuckets" -> "64",
+      "steps" -> "a,b,c", "windowSec" -> "10"))
+
   /** One family under a uniform handle. `write` is the call that appends
     * state at a batch id (`admit` for every family except the
     * decontamination gate, whose state grows only by `addBenchmark`).
