@@ -110,10 +110,8 @@ final case class TaskConfig(
     csvFormat: Seq[String] = Nil,
     delimiter: String = ",",
     fields: Map[String, String] = Map.empty, // static fields, raw JSON values
-    clickhouse: String = "default",
     tableName: String = "",
     dims: Seq[Dim] = Nil,
-    autoSchema: Boolean = false,
     excludeColumns: Seq[String] = Nil,
     dynamicSchema: Boolean = false,
     whiteList: Option[String] = None,
@@ -124,8 +122,7 @@ final case class TaskConfig(
     flushInterval: Int = 10,            // seconds (config.go:219-222,458-462)
     timeZone: String = "UTC",
     timeUnit: Double = 1.0,
-    prometheusSchema: Boolean = false,
-    promLabelsBlackList: Option[String] = None)
+    prometheusSchema: Boolean = false)
 
 object TaskConfig {
 
@@ -184,10 +181,8 @@ object TaskConfig {
       } else Nil,
       delimiter = str(n, "delimiter", ","),
       fields = fields,
-      clickhouse = str(n, "clickhouse", "default"),
       tableName = str(n, "tableName"),
       dims = dims,
-      autoSchema = n.has("autoSchema") && n.get("autoSchema").asBoolean(),
       excludeColumns = if (n.has("excludeColumns")) {
         val it = n.get("excludeColumns").elements()
         Iterator.continually(it).takeWhile(_.hasNext).map(_.next().asText()).toSeq
@@ -201,7 +196,7 @@ object TaskConfig {
       flushInterval = if (n.has("flushInterval")) n.get("flushInterval").asInt() else 10,
       timeZone = str(n, "timeZone", "UTC"),
       timeUnit = if (n.has("timeUnit")) n.get("timeUnit").asDouble() else 1.0,
-      prometheusSchema = n.has("prometheusSchema") && n.get("prometheusSchema").asBoolean(),
-      promLabelsBlackList = opt(n, "promLabelsBlackList"))
+      prometheusSchema =
+        n.has("prometheusSchema") && n.get("prometheusSchema").asBoolean())
   }
 }

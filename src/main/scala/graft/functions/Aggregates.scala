@@ -80,16 +80,17 @@ object Aggregates {
   /** `graft_quantile_sketch(value, num, den)`: HdrHistogram-style bucket
     * sketch quantile at q = num/den, == the corresponding column of
     * [[ApproxAgg.quantileSketch]] (lower bucket bound of the
-    * ceil(q*n)-th value, divided back by `scale`). Input arrives
+    * ceil(q*n)-th value, divided back by `scale`; 8 significant bits
+    * per bucket, the operator's default). Input arrives
     * PRE-SCALED to long by the registration builder (the exact
     * `(value * scale) CAST AS BIGINT` the DataFrame operator applies),
     * so bucket ids are bit-identical. NULLs are skipped; an all-NULL
     * group yields SQL NULL.
     */
-  class QuantileSketchAgg(num: Int, den: Int, scale: Int = 100,
-      sigBits: Int = 8)
+  class QuantileSketchAgg(num: Int, den: Int, scale: Int = 100)
       extends Aggregator[java.lang.Long, Map[Long, Long], java.lang.Double] {
     require(den > 0 && num >= 0 && num <= den, s"need 0 <= $num/$den <= 1")
+    private val sigBits = 8
 
     override def zero: Map[Long, Long] = Map.empty
 

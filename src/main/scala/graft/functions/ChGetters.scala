@@ -43,11 +43,6 @@ object ChGetters {
   /** The parsed message: one parse per row. */
   def parsed(raw: Column): Column = try_parse_json(raw)
 
-  /** Extract one top-level field as variant (missing -> NULL), read in
-    * place from the message's bytes ([[VariantAccess]]).
-    */
-  def field(msg: Column, key: String): Column = VariantAccess.field(msg, key)
-
   /** O(1) binary type tag of a field (see [[VariantKind]]) — NOT
     * schema_of_variant, which computes a string per value per branch.
     *
@@ -151,10 +146,14 @@ object ChGetters {
       .otherwise(defaultOr(nullable, lit(0.0), t))
   }
 
-  /** F5: decimal via float64 round-trip (decimal.NewFromFloat parity). */
-  def getDecimal(f: Column, nullable: Boolean, t: DecimalType = DecimalType(38, 9)): Column =
+  /** F5: decimal via float64 round-trip (decimal.NewFromFloat parity),
+    * as DECIMAL(38, 9).
+    */
+  def getDecimal(f: Column, nullable: Boolean): Column = {
+    val t = DecimalType(38, 9)
     when(isNumTy(kindOf(f)), asDouble(f).cast(t))
       .otherwise(defaultOr(nullable, lit(0), t))
+  }
 
   /** F6: string — strings kept as-is, any other value becomes its JSON
     * text (fastjson.go:712-728).
@@ -232,7 +231,7 @@ object ChGetters {
   /** F10: JSON object keeping only string & number members, stringified
     * (Object('json') target; fastjson.go:681-710). Non-object -> empty map.
     */
-  def getObject(f: Column, nullable: Boolean): Column = {
+  def getObject(f: Column): Column = {
     val m = asVariantMap(f)
     val kept = map_filter(m, (_, v) => isStrTy(kindOf(v)) || isNumTy(kindOf(v)))
     val strd = transform_values(kept, (_, v) =>
@@ -259,7 +258,7 @@ object ChGetters {
     case ChKind.Decimal  => getDecimal(f, nullable)
     case ChKind.DateTime => getDateTime(f, nullable, opts, dt64Precision)
     case ChKind.Str      => getString(f, nullable)
-    case ChKind.Obj      => getObject(f, nullable)
+    case ChKind.Obj      => getObject(f)
     case ChKind.IPv4     => getIPv4(f, nullable)
     case ChKind.IPv6     => getIPv6(f, nullable)
     case ChKind.MapK =>

@@ -185,6 +185,9 @@ case class VariantNewFields(child: Expression, known: Set[String]) extends Varia
 }
 
 object VariantAccess {
+  /** Top-level field `key` of the parsed message as a variant (missing ->
+    * NULL), read in place from the message's bytes.
+    */
   def field(msg: Column, key: String): Column = toColumn(VariantField(toExpression(msg), key))
   def string(f: Column): Column = toColumn(VariantString(toExpression(f)))
   def newFields(msg: Column, known: Set[String]): Column =

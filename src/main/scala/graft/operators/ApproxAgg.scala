@@ -175,17 +175,16 @@ object ApproxAgg {
 
   /** Mergeable quantile sketch: per key, for each requested quantile
     * num/den, the LOWER BOUND of the histogram bucket holding the
-    * ceil(q*n)-th value, divided back by `scale` as a double (one exact
-    * division). Quantile ranks use integer ceil arithmetic — no float
-    * q*n whose rounding could straddle a rank boundary. Output:
-    * keyCols..., `n` (BIGINT), one DOUBLE column per quantile name.
+    * ceil(q*n)-th value, divided back by the scale 100 as a double (one
+    * exact division), over [[quantileHistogram]]'s default buckets.
+    * Quantile ranks use integer ceil arithmetic — no float q*n whose
+    * rounding could straddle a rank boundary. Output: keyCols..., `n`
+    * (BIGINT), one DOUBLE column per quantile name.
     */
   def quantileSketch(df: DataFrame, keyCols: Seq[String], valueCol: Column,
-      quantiles: Seq[(String, Int, Int)], scale: Int = 100,
-      sigBits: Int = 8): DataFrame =
-    quantilesOfHistogram(
-      quantileHistogram(df, keyCols, valueCol, scale, sigBits),
-      keyCols, quantiles, scale)
+      quantiles: Seq[(String, Int, Int)]): DataFrame =
+    quantilesOfHistogram(quantileHistogram(df, keyCols, valueCol),
+      keyCols, quantiles)
 
   /** AggregatingMergeTree FINAL for histogram states ([[hllMerge]]'s
     * quantile sibling): (keyCols..., blo, cnt) partial frames from any

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.PortableHash
+import graft.functions.{PortableHash, SetJaccard, WordShingles}
 
 /** Deduplication operators for training-data pipelines, each designed
   * around its shuffle shape at 100 TB:
@@ -178,24 +178,6 @@ object Dedup {
             s => s.getField("para")),
           "\n").as("text_dedup"))
   }
-
-  // ---- shingling ------------------------------------------------------
-
-  /** Distinct word n-gram shingles of the canonical text — a codegen'd
-    * expression ([[graft.functions.WordShingles]]); the equivalent
-    * split/sequence/transform/array_distinct chain runs interpreted and
-    * was the minhash bottleneck.
-    */
-  def wordShingles(text: Column, n: Int): Column =
-    graft.functions.WordShingles.of(text, n)
-
-  /** Exact Jaccard similarity of two shingle-array columns — a fused
-    * single-hash-build expression ([[graft.functions.SetJaccard]]); the
-    * `array_intersect`/`array_union` composition builds two hash sets
-    * per pair and was the dominant cost of the verify stages at
-    * millions of candidate pairs.
-    */
-  def jaccard(a: Column, b: Column): Column = graft.functions.SetJaccard.of(a, b)
 
   // ---- minhash + LSH --------------------------------------------------
 
@@ -391,7 +373,7 @@ object Dedup {
       composeNfc: Boolean): (DataFrame, DataFrame) = {
     val shingled = df.select(
       col(idCol).as("id"),
-      wordShingles(prepText(col(textCol), composeNfc), n).as("shingles"))
+      WordShingles.of(prepText(col(textCol), composeNfc), n).as("shingles"))
     // signature via explode + codegen'd min-aggregate; banding needs only
     // (id, sig) — the shingle arrays rejoin solely at the verify stage
     val withSig = minhashSignatureDF(shingled, "id", "shingles", bands * rows)
@@ -494,11 +476,9 @@ object Dedup {
   def nearDupsAgainstMinhash(reference: DataFrame, fresh: DataFrame,
       idCol: String, textCol: String,
       n: Int = 3, bands: Int = 8, rows: Int = 4,
-      threshold: Double = 0.7, composeNfc: Boolean = false): DataFrame = {
-    val (shRef, bRef) =
-      prepMinhash(reference, idCol, textCol, n, bands, rows, composeNfc)
-    val (shNew, bNew) =
-      prepMinhash(fresh, idCol, textCol, n, bands, rows, composeNfc)
+      threshold: Double = 0.7): DataFrame = {
+    val (shRef, bRef) = prepMinhash(reference, idCol, textCol, n, bands, rows)
+    val (shNew, bNew) = prepMinhash(fresh, idCol, textCol, n, bands, rows)
     nearDupsPrepared(shRef, bRef, shNew, bNew, threshold)
   }
 
@@ -508,7 +488,7 @@ object Dedup {
     * byte-stable.
     */
   private def prepText(text: Column, composeNfc: Boolean): Column =
-    if (composeNfc) TextAnalysis.nfc(text) else text
+    if (composeNfc) graft.functions.NfcNormalize.of(text) else text
 
   /** One scan-local pass over a corpus side: (shingles table
     * `(id, shingles)`, banded-signature table `(doc_id, band,
@@ -517,10 +497,9 @@ object Dedup {
     * reference signatures are computed once, not per batch.
     */
   def prepMinhash(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, bands: Int = 8, rows: Int = 4,
-      composeNfc: Boolean = false): (DataFrame, DataFrame) = {
+      n: Int = 3, bands: Int = 8, rows: Int = 4): (DataFrame, DataFrame) = {
     val shingled = df.select(col(idCol).as("id"),
-      wordShingles(prepText(col(textCol), composeNfc), n).as("shingles"))
+      WordShingles.of(col(textCol), n).as("shingles"))
     val banded = lshBands(
       minhashSignatureDF(shingled, "id", "shingles", bands * rows),
       col("id"), col("sig"), bands, rows)
@@ -576,27 +555,16 @@ object Dedup {
           .as("jaccard"))
       .filter(col("jaccard") >= threshold)
 
-  /** Corpus-wide embedding near-duplicate pairs — the dedup-suite entry
-    * for the embedding modality; see
-    * [[graft.operators.Similarity.nearDupPairsEmbedding]] (random-
-    * hyperplane band buckets, equi-self-join candidates, exact cosine
-    * verify — never an all-pairs product).
-    */
-  def nearDupPairsEmbedding(corpus: DataFrame, threshold: Double, dims: Int,
-      nBits: Int = 16, bandBits: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    Similarity.nearDupPairsEmbedding(corpus, threshold, dims, nBits, bandBits,
-      idCol, vecCol)
-
   /** Exact n-gram Jaccard over ALL pairs (quadratic — the oracle/baseline
     * path for small data; production uses the LSH variant above).
     */
   def nearDupPairsExact(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, threshold: Double = 0.7): DataFrame = {
-    val sh = df.select(col(idCol).as("id"), wordShingles(col(textCol), n).as("sh"))
+    val sh = df.select(col(idCol).as("id"),
+      WordShingles.of(col(textCol), n).as("sh"))
     sh.as("x").join(sh.as("y"), col("x.id") < col("y.id"))
       .select(col("x.id").as("a"), col("y.id").as("b"),
-        jaccard(col("x.sh"), col("y.sh")).as("jaccard"))
+        SetJaccard.of(col("x.sh"), col("y.sh")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 
@@ -613,7 +581,7 @@ object Dedup {
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, threshold: Double = 0.5): DataFrame = {
     val sh = df.select(col(idCol).as("id"),
-      wordShingles(col(textCol), n).as("sh"))
+      WordShingles.of(col(textCol), n).as("sh"))
     val c = size(array_intersect(col("x.sh"), col("y.sh")))
       .cast(DoubleType) / size(col("x.sh"))
     sh.as("x").join(sh.as("y"), col("x.id") =!= col("y.id"))
@@ -674,12 +642,14 @@ object Dedup {
     *   - `localCheckpoint` truncates the iterative lineage each round so
     *     the plan doesn't grow superlinearly.
     *
-    * Returns (id, component) for every node appearing in `pairs`, where
-    * component = the minimum node id of the connected component — the
-    * canonical-survivor rule (keep `id == component`, drop the rest).
+    * Returns (id, component) for every node appearing in `pairs` (edge
+    * columns `a`, `b`), where component = the minimum node id of the
+    * connected component — the canonical-survivor rule (keep
+    * `id == component`, drop the rest). Refuses after 25 rounds without
+    * a fixed point.
     */
-  def connectedComponents(pairs: DataFrame, aCol: String = "a",
-      bCol: String = "b", maxIter: Int = 25): DataFrame = {
+  def connectedComponents(pairs: DataFrame): DataFrame = {
+    val maxIter = 25
     // canonical edge direction: u > v (larger node points to smaller)
     def canon(e: DataFrame): DataFrame =
       e.select(greatest(col("u"), col("v")).as("u"),
@@ -722,8 +692,8 @@ object Dedup {
     }
 
     var edges = canon(
-      pairs.select(col(aCol).cast(LongType).as("u"),
-        col(bCol).cast(LongType).as("v"))).localCheckpoint()
+      pairs.select(col("a").cast(LongType).as("u"),
+        col("b").cast(LongType).as("v"))).localCheckpoint()
     var cks = checksum(edges)
     var iter = 0
     var converged = false
@@ -754,9 +724,9 @@ object Dedup {
     * tail of a near-dup pipeline: `cluster(corpus, pairs).filter("keep")`
     * is the deduplicated corpus.
     */
-  def cluster(corpus: DataFrame, pairs: DataFrame, idCol: String = "doc_id",
-      aCol: String = "a", bCol: String = "b"): DataFrame = {
-    val comp = connectedComponents(pairs, aCol, bCol)
+  def cluster(corpus: DataFrame, pairs: DataFrame,
+      idCol: String = "doc_id"): DataFrame = {
+    val comp = connectedComponents(pairs)
     corpus.select(col(idCol).cast(LongType).as("id"))
       .join(comp, Seq("id"), "left_outer")
       .select(col("id"),

@@ -11,19 +11,21 @@ import org.apache.spark.storage.StorageLevel
 object Graph {
 
   /** PageRank in exact scaled-integer arithmetic: ranks live as
-    * `floor(p * scale)` BIGINTs and every update is integer division /
+    * `floor(p * Scale)` BIGINTs and every update is integer division /
     * multiplication, so the result is bit-identical on any engine, any
     * partitioning, any summation order — float PageRank cannot promise
     * that (FP addition is not associative; a shuffle reorder changes the
     * last ulps), which is why this tier quantizes like the classifier
     * weights do.
     *
-    * Update rule (damping d = dampNum/100):
-    * `R'(v) = ((scale * (100-dampNum)) div 100) div n
-    *          + (sum over in-edges of R(u) div deg(u)) * dampNum div 100`.
+    * Update rule (damping d = DampNum/100 = 0.85, ranks scaled by
+    * `Scale` = 10^12):
+    * `R'(v) = ((Scale * (100-DampNum)) div 100) div n
+    *          + (sum over in-edges of R(u) div deg(u)) * DampNum div 100`.
     * Dangling-node mass is dropped, not redistributed (the common
-    * simplification; ranks then sum to < scale — documented contract).
-    * Duplicate edges are collapsed before ranking.
+    * simplification; ranks then sum to < Scale — documented contract).
+    * Duplicate edges are collapsed before ranking. Edges are read from
+    * the `src` and `dst` columns.
     *
     * Scale shape (edge count >= `pinEdgeThreshold`): per iteration ONE
     * equi-join of edges against the current rank vector plus one
@@ -62,25 +64,21 @@ object Graph {
     * construction (unit-pinned). The 100 TB path is the distributed
     * one; the gate only decides who pays scheduling overhead.
     */
-  def pageRank(edges: DataFrame, srcCol: String = "src",
-      dstCol: String = "dst", iterations: Int = 5,
-      dampNum: Long = 85, scale: Long = 1000000000000L,
+  def pageRank(edges: DataFrame, iterations: Int = 5,
       pinEdgeThreshold: Long = 1000000L): DataFrame = {
     require(iterations >= 1, "at least one iteration")
-    require(dampNum > 0 && dampNum < 100, "dampNum is a percentage in (0,100)")
     // drop malformed edges (null or uncastable src/dst) ONCE, before the
     // path gate: the local loop would NPE on a null Row.getLong and the
     // distributed one would silently keep a null node — both paths must
     // see the same edge set for the bit-identical contract to mean
     // anything
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
+    val e = edges.select(col("src").cast("long").as("src"),
+        col("dst").cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     val m = e.count() // sizes the path choice; materializes e either way
     if (m < pinEdgeThreshold)
-      try pageRankLocal(edges.sparkSession, e.collect(), iterations,
-        dampNum, scale)
+      try pageRankLocal(edges.sparkSession, e.collect(), iterations)
       finally e.unpersist()
     else {
       // every pinned frame is tracked BEFORE its count job runs, so a
@@ -103,9 +101,9 @@ object Graph {
         e.unpersist() // consumed by nodes/eDeg; never read again
         val n = nodes.count()
         require(n > 0, "empty graph")
-        val base = ((scale * (100 - dampNum)) / 100) / n // exact Long math
+        val base = ((Scale * (100 - DampNum)) / 100) / n // exact Long math
 
-        var rank = nodes.select(col("node"), lit(scale / n).as("rank"))
+        var rank = nodes.select(col("node"), lit(Scale / n).as("rank"))
         for (_ <- 1 to iterations) {
           val contribs = eDeg
             .join(rank.withColumnRenamed("node", "src"), "src")
@@ -113,7 +111,7 @@ object Graph {
             .groupBy(col("node")).agg(sum(col("c")).as("s"))
           rank = nodes.join(contribs, Seq("node"), "left")
             .selectExpr("node",
-              s"$base + (coalesce(s, CAST(0 AS BIGINT)) * $dampNum) div 100 AS rank")
+              s"$base + (coalesce(s, CAST(0 AS BIGINT)) * $DampNum) div 100 AS rank")
             .localCheckpoint()
         }
         rank
@@ -133,14 +131,16 @@ object Graph {
     */
   private[graft] var prePinHook: () => Unit = () => ()
 
+  private val DampNum = 85L
+  private val Scale = 1000000000000L
+
   /** The sub-threshold driver-local loop: the identical integer
     * recurrence over collected (src, dst) rows. Integer sums are
     * order-independent, so this is bit-identical to the distributed
     * path — not an approximation tier.
     */
   private def pageRankLocal(spark: SparkSession,
-      rows: Array[org.apache.spark.sql.Row], iterations: Int,
-      dampNum: Long, scale: Long): DataFrame = {
+      rows: Array[org.apache.spark.sql.Row], iterations: Int): DataFrame = {
     import spark.implicits._
     val deg = new scala.collection.mutable.HashMap[Long, Long]
     val nodes = new scala.collection.mutable.LinkedHashSet[Long]
@@ -152,8 +152,8 @@ object Graph {
     }
     val n = nodes.size.toLong
     require(n > 0, "empty graph")
-    val base = ((scale * (100 - dampNum)) / 100) / n
-    var rank = nodes.iterator.map(_ -> scale / n).toMap
+    val base = ((Scale * (100 - DampNum)) / 100) / n
+    var rank = nodes.iterator.map(_ -> Scale / n).toMap
     for (_ <- 1 to iterations) {
       val s = new scala.collection.mutable.HashMap[Long, Long]
       rows.foreach { r =>
@@ -162,7 +162,7 @@ object Graph {
         s.update(dst, s.getOrElse(dst, 0L) + rank(src) / deg(src))
       }
       rank = nodes.iterator
-        .map(v => v -> (base + s.getOrElse(v, 0L) * dampNum / 100)).toMap
+        .map(v => v -> (base + s.getOrElse(v, 0L) * DampNum / 100)).toMap
     }
     nodes.toSeq.map(v => (v, rank(v))).toDF("node", "rank")
   }

@@ -41,11 +41,11 @@ object Multimodal {
     * than a frame window (id%17=1 -> 0..3 bytes), larger than the 64x64
     * resize budget (id%17=2 -> 5000 bytes), else a 5..997-byte spread.
     * The same arithmetic is SQL-expressible, so oracles regenerate
-    * byte-identical payloads from the id column alone.
+    * byte-identical payloads from the `asset_id` column alone.
     */
-  def syntheticAssets(ids: DataFrame, idCol: String = "asset_id",
+  def syntheticAssets(ids: DataFrame,
       modality: String = "binary"): DataFrame = {
-    val id = col(idCol)
+    val id = col("asset_id")
     val len = when(id % 17 === 0, lit(0L))
       .when(id % 17 === 1, id % 4)
       .when(id % 17 === 2, lit(5000L))
@@ -60,13 +60,14 @@ object Multimodal {
 
   /** Cheap metadata extraction — pure Catalyst, no decode: sizes, digests,
     * magic-byte sniffing. This is the first pass a 100 TB pipeline runs to
-    * partition/route assets before any codec work.
+    * partition/route assets before any codec work. Reads the `content`
+    * column.
     */
-  def withByteMetadata(assets: DataFrame, content: String = "content"): DataFrame =
+  def withByteMetadata(assets: DataFrame): DataFrame =
     assets
-      .withColumn("byte_len", octet_length(col(content)).cast(LongType))
-      .withColumn("sha256", sha2(col(content), 256))
-      .withColumn("magic", hex(substring(col(content), 1, 4)))
+      .withColumn("byte_len", octet_length(col("content")).cast(LongType))
+      .withColumn("sha256", sha2(col("content"), 256))
+      .withColumn("magic", hex(substring(col("content"), 1, 4)))
 
   /** Deterministic stand-in for the codec stage. A real deployment swaps
     * `decode` for an image/audio library call; everything around it —
@@ -177,21 +178,16 @@ object Multimodal {
     */
   // ---- real image decode tier (javax.imageio) -------------------------
 
-  /** Pluggable image decode: bytes -> (width, height, row-major luma
-    * 0..255), or None for an undecodable payload (corrupt file, format
-    * with no reader). The luma map is the integer BT.601 approximation
-    * `(299r + 587g + 114b) / 1000` — exact integer arithmetic, so every
-    * downstream feature recomputes bit-identically in SQL.
+  /** Image decode over the JDK's built-in codecs: bytes -> (width,
+    * height, row-major luma 0..255), or None for an undecodable payload
+    * (corrupt file, format with no reader). The luma map is the integer
+    * BT.601 approximation `(299r + 587g + 114b) / 1000` — exact integer
+    * arithmetic, so every downstream feature recomputes bit-identically
+    * in SQL. `ImageIO.setUseCache(false)` keeps executor-side decodes in
+    * memory (the default spills every image through a temp FILE — a
+    * pathological I/O pattern for a 100 TB scan).
     */
-  trait ImageDecoder extends Serializable {
-    def decode(bytes: Array[Byte]): Option[(Int, Int, Array[Int])]
-  }
-
-  /** The JDK-built-in decode path. `ImageIO.setUseCache(false)` keeps
-    * executor-side decodes in memory (the default spills every image
-    * through a temp FILE — a pathological I/O pattern for a 100 TB scan).
-    */
-  object ImageIoDecoder extends ImageDecoder {
+  object ImageIoDecoder {
     @transient private lazy val init: Unit =
       javax.imageio.ImageIO.setUseCache(false)
 
@@ -261,15 +257,14 @@ object Multimodal {
     * images here, and a corrupt straggler must not fail a 100 TB job.
     * Only the narrow (id, dims, stats, 64-bit hash) rows flow on.
     */
-  def decodeImages(assets: DataFrame,
-      decoder: ImageDecoder = ImageIoDecoder): Dataset[DecodedImage] = {
+  def decodeImages(assets: DataFrame): Dataset[DecodedImage] = {
     val spark = assets.sparkSession
     import spark.implicits._
     val idIdx = assets.schema.fieldIndex("asset_id")
     val cIdx  = assets.schema.fieldIndex("content")
     assets.mapPartitions { (it: Iterator[Row]) =>
       it.flatMap { r =>
-        decoder.decode(r.getAs[Array[Byte]](cIdx)).map { case (w, h, luma) =>
+        ImageIoDecoder.decode(r.getAs[Array[Byte]](cIdx)).map { case (w, h, luma) =>
           var sum = 0L
           var mn = 255
           var mx = 0
@@ -379,22 +374,17 @@ object Multimodal {
   final case class WavPcm(sampleRate: Int, channels: Int, bits: Int,
       samples: Array[Int])
 
-  /** Pluggable audio decode: bytes -> PCM, or None for an undecodable
-    * payload. Mirrors [[ImageDecoder]]: route-then-decode sends plausible
-    * audio here, and a corrupt straggler must not fail a 100 TB job.
+  /** Zero-dependency RIFF/WAV parser, bytes -> PCM, or None for an
+    * undecodable payload (route-then-decode sends plausible audio here,
+    * and a corrupt straggler must not fail a 100 TB job): walks the
+    * chunk list (tolerating LIST/INFO/fact chunks and odd-size pad bytes
+    * per the RIFF spec, so real-world encoder output parses — not just
+    * the 44-byte canonical layout), requires PCM (format 1) at 8 or 16
+    * bits, and clamps the data chunk to the bytes actually present
+    * (truncated tail frames drop). 8-bit WAV samples are unsigned,
+    * centered by -128.
     */
-  trait AudioDecoder extends Serializable {
-    def decode(bytes: Array[Byte]): Option[WavPcm]
-  }
-
-  /** Zero-dependency RIFF/WAV parser: walks the chunk list (tolerating
-    * LIST/INFO/fact chunks and odd-size pad bytes per the RIFF spec, so
-    * real-world encoder output parses — not just the 44-byte canonical
-    * layout), requires PCM (format 1) at 8 or 16 bits, and clamps the
-    * data chunk to the bytes actually present (truncated tail frames
-    * drop). 8-bit WAV samples are unsigned, centered by -128.
-    */
-  object WavDecoder extends AudioDecoder {
+  object WavDecoder {
     def decode(bytes: Array[Byte]): Option[WavPcm] = {
       if (bytes == null || bytes.length < 12) return None
       def u8(i: Int): Int = bytes(i) & 0xff
@@ -481,15 +471,14 @@ object Multimodal {
     * loudness stats + the energy fingerprint; undecodable payloads DROP.
     * Only narrow (id, format, stats, 64-bit hash) rows flow on.
     */
-  def decodeAudio(assets: DataFrame,
-      decoder: AudioDecoder = WavDecoder): Dataset[DecodedAudio] = {
+  def decodeAudio(assets: DataFrame): Dataset[DecodedAudio] = {
     val spark = assets.sparkSession
     import spark.implicits._
     val idIdx = assets.schema.fieldIndex("asset_id")
     val cIdx  = assets.schema.fieldIndex("content")
     assets.mapPartitions { (it: Iterator[Row]) =>
       it.flatMap { r =>
-        decoder.decode(r.getAs[Array[Byte]](cIdx)).map { pcm =>
+        WavDecoder.decode(r.getAs[Array[Byte]](cIdx)).map { pcm =>
           var sum = 0L
           var peak = 0
           var k = 0
@@ -516,16 +505,15 @@ object Multimodal {
     * the asset's total so thresholds stay single-pass), emitted
     * scan-local like every decode here.
     */
-  def audioWindows(assets: DataFrame, decoder: AudioDecoder = WavDecoder,
-      nWindows: Int = 65): Dataset[AudioWindow] = {
-    require(nWindows > 0, "nWindows must be positive")
+  def audioWindows(assets: DataFrame): Dataset[AudioWindow] = {
+    val nWindows = 65
     val spark = assets.sparkSession
     import spark.implicits._
     val idIdx = assets.schema.fieldIndex("asset_id")
     val cIdx  = assets.schema.fieldIndex("content")
     assets.mapPartitions { (it: Iterator[Row]) =>
       it.flatMap { r =>
-        decoder.decode(r.getAs[Array[Byte]](cIdx)).toSeq.flatMap { pcm =>
+        WavDecoder.decode(r.getAs[Array[Byte]](cIdx)).toSeq.flatMap { pcm =>
           val n = pcm.samples.length
           val e = new Array[Long](nWindows)
           var total = 0L
@@ -583,21 +571,19 @@ object Multimodal {
     * output linear in DISTINCT fingerprints instead of quadratic in
     * clique size. Public so callers can read the clique table itself
     * (members of a clique ARE mutual hamming-0 near-dups; `clique > 1`
-    * rows are the exact-duplicate groups). `idCol` names the asset-id
-    * column (default matches [[decodeImages]]/[[decodeAudio]] output,
-    * same convention as the Similarity operators' idCol).
+    * rows are the exact-duplicate groups). Ids come from the `asset_id`
+    * column of [[decodeImages]]/[[decodeAudio]] output.
     *
     * To recover per-member exact-dup EDGES (what the pre-collapse pair
     * output used to carry), read this table with `clique > 1`: every
     * member of a group is a hamming-0 dup of its representative `id`.
     * Keep the full member list with
-    * `hashed.groupBy(hashCol).agg(min(idCol) as "id", collect_list(idCol))`
+    * `hashed.groupBy(hashCol).agg(min(asset_id) as "id", collect_list(asset_id))`
     * when ids themselves are needed rather than counts.
     */
-  def collapseByFingerprint(hashed: DataFrame, hashCol: String,
-      idCol: String = "asset_id"): DataFrame =
+  def collapseByFingerprint(hashed: DataFrame, hashCol: String): DataFrame =
     hashed.groupBy(col(hashCol))
-      .agg(min(col(idCol)).as("id"), count(lit(1)).as("clique"))
+      .agg(min(col("asset_id")).as("id"), count(lit(1)).as("clique"))
 
   /** Banded hamming near-dup pairs over any 64-bit fingerprint column —
     * the shared engine behind [[imageNearDups]] and [[audioNearDups]]:
@@ -666,10 +652,9 @@ object Multimodal {
     */
   def audioNearDups(decoded: DataFrame, maxHamming: Int = 3,
       wideRecall: Boolean = false,
-      collapseIdentical: Boolean = true,
-      maxBucketSize: Int = 0): DataFrame =
+      collapseIdentical: Boolean = true): DataFrame =
     bandedHammingPairs(decoded, "afp", maxHamming, wideRecall,
-      collapseIdentical, maxBucketSize)
+      collapseIdentical)
 
   /** Deterministic 16-bit (or 8-bit) mono PCM WAV fixture, built entirely
     * in Catalyst like [[bmpContent]]: a real RIFF file [[WavDecoder]]
@@ -684,11 +669,12 @@ object Multimodal {
     * copy is an EXACT 2x rescale and must fingerprint identically. 8-bit
     * sample k stores the unsigned byte `t % 256` (gain/noisy
     * unsupported — the clamp-free guarantee holds only for 16-bit
-    * headroom).
+    * headroom). The header declares an 8 kHz sample rate.
     */
   def wavContent(sampleId: Column, nSamples: Int, gain: Int = 1,
       noisy: Column = lit(false), bits: Int = 16,
-      sampleRate: Int = 8000, mute: Column = lit(false)): Column = {
+      mute: Column = lit(false)): Column = {
+    val sampleRate = 8000
     require(nSamples > 0, "nSamples must be positive")
     require(bits == 16 || bits == 8, "PCM fixture supports 8/16-bit only")
     require(bits == 16 || (gain == 1), "gain needs 16-bit headroom")

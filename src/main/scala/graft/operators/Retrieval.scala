@@ -13,7 +13,8 @@ object Retrieval {
   /** Hybrid search: reciprocal-rank fusion (RRF, Cormack et al., SIGIR
     * 2009) of the BM25 lexical ranking for `terms` and the dense cosine
     * top-k around `queryVecId`'s embedding. Each doc scores
-    * `sum over channels of 1 / (kRrf + rank_channel)`; a doc missing
+    * `sum over channels of 1 / (60 + rank_channel)` (RRF's constant
+    * k = 60); a doc missing
     * from a channel contributes 0 from it. Ties break on id, so the
     * fused ranking is fully deterministic and the SQL oracle replays it.
     *
@@ -25,27 +26,27 @@ object Retrieval {
     * unpartitioned rank window is deliberate: it sees only the fused
     * pool, never the corpus.
     *
-    * The query document itself is absent from the dense channel
+    * `embeddings` carries `vec_id` and `embedding` columns. The query
+    * document itself is absent from the dense channel
     * (self-match excluded by the ANN tier); it can still surface via the
     * lexical channel like any other doc.
     */
   def hybridTopK(docs: DataFrame, idCol: String, textCol: String,
       terms: Seq[String], embeddings: DataFrame, queryVecId: Long, k: Int,
-      poolK: Int = 50, kRrf: Int = 60,
-      vecIdCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+      poolK: Int = 50): DataFrame = {
     require(k <= poolK, "k must not exceed the per-channel pool size")
     val lex = TextAnalysis.bm25TopK(docs, idCol, textCol, terms, poolK)
       .select(col("id"), row_number()
         .over(Window.orderBy(col("score").desc, col("id")))
         .cast(IntegerType).as("lex_rank"))
-    val e = embeddings.select(col(vecIdCol),
-      col(vecCol).cast(ArrayType(DoubleType)).as(vecCol))
+    val e = embeddings.select(col("vec_id"),
+      col("embedding").cast(ArrayType(DoubleType)).as("embedding"))
     val dense = Similarity.bruteForceTopK(e,
-        e.filter(col(vecIdCol) === queryVecId), poolK, vecIdCol, vecCol)
+        e.filter(col("vec_id") === queryVecId), poolK)
       .select(col("nn_id").as("id"), col("rank").as("dense_rank"))
     val rrf =
-      coalesce(lit(1.0) / (lit(kRrf) + col("lex_rank")), lit(0.0)) +
-      coalesce(lit(1.0) / (lit(kRrf) + col("dense_rank")), lit(0.0))
+      coalesce(lit(1.0) / (lit(60) + col("lex_rank")), lit(0.0)) +
+      coalesce(lit(1.0) / (lit(60) + col("dense_rank")), lit(0.0))
     val fused = lex.join(dense, Seq("id"), "outer")
       .select(col("id"), col("lex_rank"), col("dense_rank"), rrf.as("rrf"))
       .orderBy(col("rrf").desc, col("id")).limit(k)

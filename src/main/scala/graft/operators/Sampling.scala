@@ -22,11 +22,14 @@ import graft.functions.PortableHash
   */
 object Sampling {
 
+  /** The bucket count every sampler and split resolves fractions on. */
+  private val Buckets = 10000
+
   /** Stable bucket in [0, buckets) from a row key: top 63 bits of the
     * md5-lower half (unsigned shift keeps it non-negative on both
     * engines) mod the bucket count.
     */
-  def hashBucket(key: Column, buckets: Int = 10000): Column =
+  def hashBucket(key: Column, buckets: Int = Buckets): Column =
     shiftrightunsigned(PortableHash.md5Lo(key), 1) % buckets
 
   /** Deterministic weighted split assignment (train/val/test and
@@ -35,11 +38,11 @@ object Sampling {
     * the same key ALWAYS land in the same split.
     */
   def assignSplit(df: DataFrame, key: Column,
-      splits: Seq[(String, Double)], buckets: Int = 10000): DataFrame = {
+      splits: Seq[(String, Double)]): DataFrame = {
     require(splits.nonEmpty, "at least one split")
-    val b = hashBucket(key, buckets)
+    val b = hashBucket(key)
     val thresholds = splits.scanLeft(0.0)(_ + _._2).tail
-      .map(w => math.round(w * buckets))
+      .map(w => math.round(w * Buckets))
     val assigned = splits.init.zip(thresholds.init)
       .foldLeft(None: Option[Column]) { case (acc, ((name, _), t)) =>
         Some(acc match {
@@ -54,12 +57,11 @@ object Sampling {
   }
 
   /** Keep a deterministic ~`fraction` sample: rows whose bucket falls
-    * below `fraction * buckets`. Scan-local — pushes down past the
+    * below `fraction * 10000`. Scan-local — pushes down past the
     * filter like any other predicate.
     */
-  def sampleByHash(df: DataFrame, key: Column, fraction: Double,
-      buckets: Int = 10000): DataFrame =
-    df.filter(hashBucket(key, buckets) < math.round(fraction * buckets))
+  def sampleByHash(df: DataFrame, key: Column, fraction: Double): DataFrame =
+    df.filter(hashBucket(key) < math.round(fraction * Buckets))
 
   /** Deterministic corpus mixing toward target stratum weights — the
     * "data mixing" knob of training pipelines (rebalance languages /
@@ -77,16 +79,15 @@ object Sampling {
     * engines and cluster sizes.
     */
   def mixToWeights(df: DataFrame, key: Column, stratum: Column,
-      weights: Map[String, Double], buckets: Int = 10000): DataFrame =
-    mixWithCounts(df, key, stratum, buckets)((counts, _) =>
+      weights: Map[String, Double]): DataFrame =
+    mixWithCounts(df, key, stratum)((counts, _) =>
       counts.map { case (s, _) => s -> weights.getOrElse(s, 0.0) }.toMap)
 
   /** Shared mixing core: ONE per-stratum count collect (|strata| rows),
     * weights derived by `deriveWeights(counts, total)`, applied as
     * min(1, w*total/n) keep fractions over the portable buckets.
     */
-  private def mixWithCounts(df: DataFrame, key: Column, stratum: Column,
-      buckets: Int)(
+  private def mixWithCounts(df: DataFrame, key: Column, stratum: Column)(
       deriveWeights: (Seq[(String, Long)], Long) => Map[String, Double]): DataFrame = {
     val counts = df.groupBy(stratum.as("__s__"))
       .agg(count(lit(1)).as("__n__"))
@@ -99,7 +100,7 @@ object Sampling {
     val fractions = counts.map { case (s, n) =>
       s -> math.min(1.0, weights.getOrElse(s, 0.0) * total / n)
     }.toMap
-    stratifiedSample(df, key, stratum, fractions, defaultFraction = 0.0, buckets)
+    stratifiedSample(df, key, stratum, fractions, defaultFraction = 0.0)
   }
 
   /** Temperature-based mixture reweighting (the multilingual-sampling
@@ -119,14 +120,14 @@ object Sampling {
     * underneath remains the engine-portable md5 filter.)
     */
   def mixToTemperature(df: DataFrame, key: Column, stratum: Column,
-      temperature: Double, buckets: Int = 10000): DataFrame = {
+      temperature: Double): DataFrame = {
     require(temperature > 0, "temperature must be positive")
     def share(n: Double): Double = temperature match {
       case 2.0 => math.sqrt(n)
       case 4.0 => math.sqrt(math.sqrt(n))
       case t   => math.pow(n, 1.0 / t)
     }
-    mixWithCounts(df, key, stratum, buckets) { (counts, _) =>
+    mixWithCounts(df, key, stratum) { (counts, _) =>
       val powed = counts.map { case (s, n) => s -> share(n.toDouble) }
       val z = powed.map(_._2).sum
       powed.map { case (s, p) => s -> p / z }.toMap
@@ -149,14 +150,14 @@ object Sampling {
     * Returns (group, id) for the kept rows; join back on id for payload
     * columns.
     */
-  def capPerGroup(df: DataFrame, id: Column, group: Column, maxN: Int,
-      buckets: Int = 10000): DataFrame = {
+  def capPerGroup(df: DataFrame, id: Column, group: Column,
+      maxN: Int): DataFrame = {
     require(maxN > 0, "maxN must be positive")
     val agg = org.apache.spark.sql.functions.udaf(new Similarity.TopKAgg(maxN))
     // TopKAgg keeps top-k by (score DESC, id ASC); negating the bucket
     // turns that into (bucket ASC, id ASC) — the hash order above
     df.select(group.as("group"), id.as("id"),
-        (-hashBucket(id, buckets)).cast("double").as("nb"))
+        (-hashBucket(id)).cast("double").as("nb"))
       .groupBy(col("group"))
       .agg(agg(col("nb"), col("id")).as("top"))
       .select(col("group"), explode(col("top")).as("kept"))
@@ -177,14 +178,14 @@ object Sampling {
     * against broadcast centroid literals (no shuffle, no index join);
     * the cap is the bounded-heap partial aggregate, so the one shuffle
     * carries at most nCells x maxPerCell candidate rows per mapper.
-    * Returns (cell, id) for kept rows; join back on id for payloads.
+    * Vectors are read from the `embedding` column. Returns (cell, id) for
+    * kept rows; join back on id for payloads.
     */
   def clusterBalancedSample(vectors: DataFrame, id: Column,
-      centroids: Similarity.Centroids, maxPerCell: Int,
-      vecCol: String = "embedding"): DataFrame = {
+      centroids: Similarity.Centroids, maxPerCell: Int): DataFrame = {
     import org.apache.spark.sql.types.{ArrayType, DoubleType}
     val assigned = vectors.select(id.as("id"),
-      centroids.assignCell(col(vecCol).cast(ArrayType(DoubleType)))
+      centroids.assignCell(col("embedding").cast(ArrayType(DoubleType)))
         .as("cell"))
     capPerGroup(assigned, col("id"), col("cell"), maxPerCell)
       .select(col("group").as("cell"), col("id"))
@@ -208,14 +209,14 @@ object Sampling {
     * SQL cumulative window.
     */
   def capPerGroupTokens(df: DataFrame, id: Column, group: Column,
-      tokens: Column, budget: Long, buckets: Int = 10000): DataFrame = {
+      tokens: Column, budget: Long): DataFrame = {
     require(budget > 0, "budget must be positive")
     val spark = df.sparkSession
     import spark.implicits._
     val p = spark.sessionState.conf.numShufflePartitions
     val staged = df.select(group.cast("string").as("group"),
         id.cast("long").as("id"), tokens.cast("long").as("n_tokens"),
-        hashBucket(id, buckets).cast("int").as("bucket"))
+        hashBucket(id).cast("int").as("bucket"))
       .repartitionByRange(p, col("group"), col("bucket"), col("id"))
       .sortWithinPartitions(col("group"), col("bucket"), col("id"))
     val rdd = staged.select(col("group").as("_1"), col("id").as("_2"),
@@ -255,19 +256,18 @@ object Sampling {
     * use `defaultFraction`.
     */
   def stratifiedSample(df: DataFrame, key: Column, stratum: Column,
-      fractions: Map[String, Double], defaultFraction: Double,
-      buckets: Int = 10000): DataFrame = {
-    val b = hashBucket(key, buckets)
+      fractions: Map[String, Double], defaultFraction: Double): DataFrame = {
+    val b = hashBucket(key)
     val threshold = fractions.toSeq.sortBy(_._1)
       .foldLeft(None: Option[Column]) { case (acc, (s, f)) =>
-        val t = lit(math.round(f * buckets))
+        val t = lit(math.round(f * Buckets))
         Some(acc match {
           case None    => when(stratum === s, t)
           case Some(c) => c.when(stratum === s, t)
         })
       } match {
-        case Some(c) => c.otherwise(lit(math.round(defaultFraction * buckets)))
-        case None    => lit(math.round(defaultFraction * buckets))
+        case Some(c) => c.otherwise(lit(math.round(defaultFraction * Buckets)))
+        case None    => lit(math.round(defaultFraction * Buckets))
       }
     df.filter(b < threshold)
   }
@@ -282,9 +282,8 @@ object Sampling {
     * of a hard cutoff. Weights outside [0,1] behave as clamped (bucket
     * comparison saturates).
     */
-  def sampleByWeight(df: DataFrame, key: Column, weight: Column,
-      buckets: Int = 10000): DataFrame =
-    df.filter(hashBucket(key, buckets).cast("double") < weight * buckets)
+  def sampleByWeight(df: DataFrame, key: Column, weight: Column): DataFrame =
+    df.filter(hashBucket(key).cast("double") < weight * Buckets)
 
   /** Leakage-safe (cluster-coherent) split: near-duplicate documents
     * must never straddle train/eval — a twin of a training doc inside
@@ -296,9 +295,9 @@ object Sampling {
     * `component` and `split`.
     */
   def leakageSafeSplit(df: DataFrame, idCol: String, pairs: DataFrame,
-      splits: Seq[(String, Double)], buckets: Int = 10000): DataFrame = {
+      splits: Seq[(String, Double)]): DataFrame = {
     val comp = Dedup.cluster(df.select(col(idCol)), pairs, idCol)
       .select(col("id").as(idCol), col("component"))
-    assignSplit(df.join(comp, Seq(idCol)), col("component"), splits, buckets)
+    assignSplit(df.join(comp, Seq(idCol)), col("component"), splits)
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.PortableHash
+import graft.functions.{PortableHash, RhpBandKeys, VecDot}
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`). Three tiers, by corpus size:
@@ -32,16 +32,11 @@ import graft.functions.PortableHash
   */
 object Similarity {
 
-  /** Codegen'd dense dot product (see [[graft.functions.VecDot]]); the
-    * zip_with/aggregate formulation runs interpreted and is ~50x slower.
-    */
-  def dot(a: Column, b: Column): Column = graft.functions.VecDot.of(a, b)
-
-  def norm(a: Column): Column = sqrt(dot(a, a))
+  def norm(a: Column): Column = sqrt(VecDot.of(a, a))
 
   def cosine(a: Column, b: Column): Column = {
     val d = norm(a) * norm(b)
-    when(d === 0, lit(0.0)).otherwise(dot(a, b) / d)
+    when(d === 0, lit(0.0)).otherwise(VecDot.of(a, b) / d)
   }
 
   // ---- bounded top-k aggregation --------------------------------------
@@ -105,14 +100,16 @@ object Similarity {
     * dissimilar enough to not be latent duplicates (the standard
     * in-batch-negatives upgrade). Same plan as [[bruteForceTopK]]: the
     * band filter sits in the scan-shaped scored projection, the cut is
-    * the bounded-heap TopKAgg — never a corpus sort.
+    * the bounded-heap TopKAgg — never a corpus sort. Frames carry
+    * `vec_id` and `embedding`, as in every top-k below.
     */
   def hardNegativesTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      loCos: Double, hiCos: Double, idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
+      loCos: Double, hiCos: Double): DataFrame = {
     require(loCos < hiCos, "need loCos < hiCos")
-    val c = corpus.select(col(idCol).as("nn_id"), col(vecCol).as("nn_vec"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
+    val c = corpus.select(col("vec_id").as("nn_id"),
+      col("embedding").as("nn_vec"))
+    val q = queries.select(col("vec_id").as("query_id"),
+      col("embedding").as("q_vec"))
     val scored = c.join(broadcast(q), col("query_id") =!= col("nn_id"))
       .select(col("query_id"), col("nn_id"),
         cosine(col("q_vec"), col("nn_vec")).as("cos"))
@@ -124,23 +121,17 @@ object Similarity {
     * nearest corpus vectors by cosine. Deterministic tie-break on corpus
     * id.
     */
-  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val c = corpus.select(col(idCol).as("nn_id"), col(vecCol).as("nn_vec"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
+  def bruteForceTopK(corpus: DataFrame, queries: DataFrame,
+      k: Int): DataFrame = {
+    val c = corpus.select(col("vec_id").as("nn_id"),
+      col("embedding").as("nn_vec"))
+    val q = queries.select(col("vec_id").as("query_id"),
+      col("embedding").as("q_vec"))
     val scored = c.join(broadcast(q), col("query_id") =!= col("nn_id"))
       .select(col("query_id"), col("nn_id"),
         cosine(col("q_vec"), col("nn_vec")).as("cos"))
     topKPerQuery(scored, k)
   }
-
-  /** Deterministic pseudo-random hyperplane component for (seed, dim) —
-    * the canonical derivation lives in
-    * [[graft.functions.RhpBandKeys.planeComponent]]; oracle SQL embeds
-    * the identical doubles.
-    */
-  def planeComponent(seed: Int, dim: Int): Double =
-    graft.functions.RhpBandKeys.planeComponent(seed, dim)
 
   /** nBits-bit random-hyperplane signature of a vector column — the
     * definitional (compositional) form; the operators below use the
@@ -149,8 +140,10 @@ object Similarity {
     */
   def rhpSignature(vec: Column, dims: Int, nBits: Int): Column =
     array((0 until nBits).map { b =>
-      val plane = array((0 until dims).map(d => lit(planeComponent(b, d))): _*)
-      when(dot(vec.cast(ArrayType(DoubleType)), plane) >= 0, lit(1L)).otherwise(lit(0L))
+      val plane = array((0 until dims).map(d =>
+        lit(RhpBandKeys.planeComponent(b, d))): _*)
+      when(VecDot.of(vec.cast(ArrayType(DoubleType)), plane) >= 0, lit(1L))
+        .otherwise(lit(0L))
     }: _*)
 
   /** Pack signature bits into band keys of `bandBits` each (definitional
@@ -164,7 +157,8 @@ object Similarity {
 
   /** LSH top-k: candidates share at least one signature band with the
     * query; exact cosine re-rank inside the candidate set. Recall rises
-    * with more/narrower bands; the exact path above is the oracle.
+    * with more/narrower bands (here 16 bits in 4-bit bands, over
+    * `vec_id`/`embedding` frames); the exact path above is the oracle.
     *
     * Each query band key is also probed at its 1-bit flips — the standard multi-probe trick: top-k
     * neighbors are often WEAK-similarity pairs whose signatures land one
@@ -175,13 +169,14 @@ object Similarity {
     * 0.94 at identical corpus cost, candidates up ~5x on the bounded
     * re-rank only.
     */
-  def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int, dims: Int,
-      nBits: Int = 16, bandBits: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+  def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
+      dims: Int): DataFrame = {
+    val nBits = 16
+    val bandBits = 4
     def withBands(df: DataFrame, idAs: String, vecAs: String) =
-      df.select(col(idCol).as(idAs), col(vecCol).as(vecAs),
+      df.select(col("vec_id").as(idAs), col("embedding").as(vecAs),
         posexplode(graft.functions.RhpBandKeys.of(
-          col(vecCol).cast(ArrayType(DoubleType)), dims, nBits, bandBits))
+          col("embedding").cast(ArrayType(DoubleType)), dims, nBits, bandBits))
           .as(Seq("band", "key")))
 
     val c = withBands(corpus, "nn_id", "nn_vec")
@@ -287,13 +282,12 @@ object Similarity {
     * and IVFADC, initial save and admission append): project to
     * (nn_id, nn_vec[, codes]), assign against the given centroids,
     * cluster by cell, partitioned write — so the four call sites can
-    * never drift in layout.
+    * never drift in layout. Reads `vec_id` and `embedding`.
     */
   private def writeCells(corpus: DataFrame, cent: Centroids,
-      books: Option[PqCodebooks], dir: String, mode: String,
-      idCol: String, vecCol: String): Unit = {
-    val base = corpus.select(col(idCol).as("nn_id"),
-      col(vecCol).cast(ArrayType(DoubleType)).as("nn_vec"))
+      books: Option[PqCodebooks], dir: String, mode: String): Unit = {
+    val base = corpus.select(col("vec_id").as("nn_id"),
+      col("embedding").cast(ArrayType(DoubleType)).as("nn_vec"))
     books.fold(base)(b => base.withColumn("codes", b.encode(col("nn_vec"))))
       .withColumn("cell", cent.assignCell(col("nn_vec")))
       .repartition(col("cell"))
@@ -331,10 +325,9 @@ object Similarity {
       * vector per batch (measured at 2M vectors: assignment dominates
       * and query wall is flat in nprobe).
       */
-    def saveAssigned(corpus: DataFrame, c: Centroids, dir: String,
-        idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
+    def saveAssigned(corpus: DataFrame, c: Centroids, dir: String): Unit = {
       save(c, corpus.sparkSession, s"$dir/centroids")
-      writeCells(corpus, c, None, dir, "overwrite", idCol, vecCol)
+      writeCells(corpus, c, None, dir, "overwrite")
     }
 
     /** Append a NEW batch to a [[saveAssigned]] index: assign against
@@ -352,10 +345,9 @@ object Similarity {
       * centroids, so appended rows land in exactly the cells a full
       * rebuild would give them.
       */
-    def appendAssigned(batch: DataFrame, dir: String,
-        idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
+    def appendAssigned(batch: DataFrame, dir: String): Unit =
       writeCells(batch, load(batch.sparkSession, s"$dir/centroids"),
-        None, dir, "append", idCol, vecCol)
+        None, dir, "append")
   }
 
   /** Top-k over a [[IvfIndex.saveAssigned]] index: load the centroids,
@@ -368,12 +360,11 @@ object Similarity {
     */
   def ivfTopKFromIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String,
-      queries: DataFrame, k: Int, nprobe: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+      queries: DataFrame, k: Int, nprobe: Int = 4): DataFrame = {
     val cent = IvfIndex.load(spark, s"$indexDir/centroids")
     val qExploded = queries
-      .select(col(idCol).as("query_id"),
-        col(vecCol).cast(ArrayType(DoubleType)).as("q_vec"))
+      .select(col("vec_id").as("query_id"),
+        col("embedding").cast(ArrayType(DoubleType)).as("q_vec"))
       .select(col("query_id"), col("q_vec"),
         explode(cent.probeCells(col("q_vec"), nprobe)).as("cell"))
     // the query batch is the bounded (broadcast) side by contract:
@@ -402,22 +393,20 @@ object Similarity {
     * exact re-rank inside the probed cells.
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      nCells: Int = 16, nprobe: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    ivfTopKWithIndex(corpus, queries, k,
-      trainCentroids(corpus, nCells, idCol, vecCol), nprobe, idCol, vecCol)
+      nCells: Int = 16, nprobe: Int = 4): DataFrame =
+    ivfTopKWithIndex(corpus, queries, k, trainCentroids(corpus, nCells),
+      nprobe)
 
   /** The no-train query path against an existing index (trained here or
     * loaded via [[IvfIndex.load]]).
     */
   def ivfTopKWithIndex(corpus: DataFrame, queries: DataFrame, k: Int,
-      centroids: Centroids, nprobe: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+      centroids: Centroids, nprobe: Int = 4): DataFrame = {
     val c = corpus
-      .select(col(idCol).as("nn_id"), col(vecCol).as("nn_vec"))
+      .select(col("vec_id").as("nn_id"), col("embedding").as("nn_vec"))
       .withColumn("cell", centroids.assignCell(col("nn_vec")))
     val q = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
+      .select(col("vec_id").as("query_id"), col("embedding").as("q_vec"))
       .select(col("query_id"), col("q_vec"),
         explode(centroids.probeCells(col("q_vec"), nprobe)).as("cell"))
 
@@ -485,15 +474,14 @@ object Similarity {
   /** Train PQ codebooks (Jegou et al. 2011's product quantizer, with
     * this library's deterministic k-means-lite per subspace).
     */
-  def trainPq(corpus: DataFrame, m: Int, k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): PqCodebooks = {
-    val vecd = col(vecCol).cast(ArrayType(DoubleType))
+  def trainPq(corpus: DataFrame, m: Int, k: Int): PqCodebooks = {
+    val vecd = col("embedding").cast(ArrayType(DoubleType))
     val dims = corpus.select(size(vecd)).first().getInt(0)
     require(dims % m == 0, s"pq: $dims dims not divisible into $m subspaces")
     val subDims = dims / m
     PqCodebooks(subDims, (0 until m).map { s =>
-      trainCentroids(corpus.select(col(idCol),
-        slice(vecd, s * subDims + 1, subDims).as("__sub")), k, idCol, "__sub")
+      trainCentroids(corpus.select(col("vec_id"),
+        slice(vecd, s * subDims + 1, subDims).as("__sub")), k, "vec_id", "__sub")
     }.toIndexedSeq)
   }
 
@@ -512,10 +500,8 @@ object Similarity {
     * oracle replays training, encoding, ADC and re-rank in SQL.
     */
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      m: Int = 8, kCodes: Int = 16, rerank: Int = 8,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    pqTopKWithBooks(corpus, queries, k, trainPq(corpus, m, kCodes, idCol, vecCol),
-      rerank, idCol, vecCol)
+      m: Int = 8, kCodes: Int = 16, rerank: Int = 8): DataFrame =
+    pqTopKWithBooks(corpus, queries, k, trainPq(corpus, m, kCodes), rerank)
 
   /** Per-query ADC lookup table: lut(s)(j) = fixed-order dot(q_s,
     * book_s[j]) over the id-sorted codebook cells — the exact arithmetic
@@ -555,15 +541,15 @@ object Similarity {
     */
   def pqTopKWithBooks(corpus: DataFrame, queries: DataFrame, k: Int,
       books: PqCodebooks, rerank: Int = 8,
-      idCol: String = "vec_id", vecCol: String = "embedding",
       lutChunk: Int = 100): DataFrame = {
     require(lutChunk >= 1, "lutChunk must be positive")
-    val vecd = col(vecCol).cast(ArrayType(DoubleType))
+    val vecd = col("embedding").cast(ArrayType(DoubleType))
     // per-query ADC lookup tables, built driver-side from the bounded
     // query set. The id is cast to long BEFORE the collect so an int id
     // column (the rest of the library handles ids generically) doesn't
     // ClassCastException on getLong.
-    val luts = queries.select(col(idCol).cast(LongType).as("query_id"), vecd.as("q"))
+    val luts = queries
+      .select(col("vec_id").cast(LongType).as("query_id"), vecd.as("q"))
       .collect().toIndexedSeq.map { r =>
         (r.getLong(0), adcLut(r.getSeq[Double](1).toArray, books))
       }
@@ -571,7 +557,7 @@ object Similarity {
     // and without the pin every chunk would re-run the m*k-dot ENCODE of
     // the whole corpus — the expensive part — instead of re-reading its
     // (cheap, materialized) output
-    val codesPlan = corpus.select(col(idCol).as("nn_id"),
+    val codesPlan = corpus.select(col("vec_id").as("nn_id"),
       books.encode(vecd).as("codes"))
     val codes =
       if (luts.lengthCompare(lutChunk) <= 0) codesPlan
@@ -615,8 +601,9 @@ object Similarity {
       .select(col("query_id"), col("nn_id"))
     // exact re-rank of the bounded candidate set (query_id stays long —
     // it joins against the lut-derived candidates)
-    val c = corpus.select(col(idCol).as("nn_id"), vecd.as("nn_vec"))
-    val q = queries.select(col(idCol).cast(LongType).as("query_id"), vecd.as("q_vec"))
+    val c = corpus.select(col("vec_id").as("nn_id"), vecd.as("nn_vec"))
+    val q = queries
+      .select(col("vec_id").cast(LongType).as("query_id"), vecd.as("q_vec"))
     val exact = candidates
       .join(c, Seq("nn_id"))
       .join(broadcast(q), Seq("query_id"))
@@ -641,11 +628,10 @@ object Similarity {
     */
   object IvfPqIndex {
     def save(corpus: DataFrame, cent: Centroids, books: PqCodebooks,
-        dir: String, idCol: String = "vec_id",
-        vecCol: String = "embedding"): Unit = {
+        dir: String): Unit = {
       IvfIndex.save(cent, corpus.sparkSession, s"$dir/centroids")
       PqIndex.save(books, corpus.sparkSession, s"$dir/books")
-      writeCells(corpus, cent, Some(books), dir, "overwrite", idCol, vecCol)
+      writeCells(corpus, cent, Some(books), dir, "overwrite")
     }
 
     /** Append a NEW batch to a [[save]]d composed index: assign + encode
@@ -657,12 +643,10 @@ object Similarity {
       * both assignment and encoding depend only on the frozen
       * centroids/books.
       */
-    def append(batch: DataFrame, dir: String,
-        idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
+    def append(batch: DataFrame, dir: String): Unit = {
       val spark = batch.sparkSession
       writeCells(batch, IvfIndex.load(spark, s"$dir/centroids"),
-        Some(PqIndex.load(spark, s"$dir/books")), dir, "append",
-        idCol, vecCol)
+        Some(PqIndex.load(spark, s"$dir/books")), dir, "append")
     }
   }
 
@@ -702,16 +686,15 @@ object Similarity {
     */
   def ivfPqTopK(spark: org.apache.spark.sql.SparkSession, indexDir: String,
       queries: DataFrame, k: Int, nprobe: Int = 4, rerank: Int = 8,
-      idCol: String = "vec_id", vecCol: String = "embedding",
       maxDriverQueries: Int = 10000): DataFrame = {
     val cent = IvfIndex.load(spark, s"$indexDir/centroids")
     val books = PqIndex.load(spark, s"$indexDir/books")
-    val vecd = col(vecCol).cast(ArrayType(DoubleType))
+    val vecd = col("embedding").cast(ArrayType(DoubleType))
     // evaluate the (possibly expensive) upstream query plan exactly ONCE;
     // the size check, the chunk slicing, and every per-chunk collect
     // below all re-read the pinned rows instead of re-running the plan
     val qBase = queries
-      .select(col(idCol).cast(LongType).as("query_id"), vecd.as("q_vec"))
+      .select(col("vec_id").cast(LongType).as("query_id"), vecd.as("q_vec"))
       .localCheckpoint()
     val nq = qBase.count()
     if (nq <= maxDriverQueries)
@@ -827,39 +810,14 @@ object Similarity {
     * materializes an all-pairs product.
     */
   def embeddingNearDups(corpus: DataFrame, queries: DataFrame,
-      threshold: Double,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val c = corpus.select(col(idCol).as("b"), col(vecCol).as("b_vec"))
-    val q = queries.select(col(idCol).as("a"), col(vecCol).as("a_vec"))
+      threshold: Double): DataFrame = {
+    val c = corpus.select(col("vec_id").as("b"), col("embedding").as("b_vec"))
+    val q = queries.select(col("vec_id").as("a"), col("embedding").as("a_vec"))
     c.join(broadcast(q), col("a") < col("b"))
       .select(col("a"), col("b"), cosine(col("a_vec"), col("b_vec")).as("cos"))
       .filter(col("cos") >= threshold)
   }
 
-  /** Corpus-wide embedding near-duplicate pairs, the 100 TB path: the
-    * same random-hyperplane signature as [[lshTopK]] buckets the corpus
-    * by (band, key); candidate pairs are rows sharing any band bucket
-    * (an equi-self-join — shuffle on the band key only, NEVER an
-    * all-pairs product), verified with exact cosine >= threshold.
-    * Returns (a, b, cos) with a < b.
-    *
-    * Recall is the LSH band recall (pairs whose signatures share no band
-    * are missed — the standard trade; more/narrower bands raise recall).
-    * Band WIDTH is the scale lever — buckets per band must track corpus
-    * size to hold occupancy ~O(1): 4-bit keys (16 buckets/band) measured
-    * 70x slower + executor OOM at a mere 40K-vector corpus because every
-    * band collapsed into a handful of quadratic buckets; 16 bands x 12
-    * bits left ~8M random-collision candidates at 40K vectors (bucket
-    * occupancy ~10); the default 24 bands x 16 bits (65536 buckets/band,
-    * occupancy < 1) verifies 40% faster at the same corpus with recall
-    * 0.95 on +0.05-perturbed twins — more, wider bands buy back the
-    * per-band recall that width alone destroys (4x16 scored below 0.5).
-    * Residual skewed buckets (a boilerplate embedding cluster) are
-    * handled by AQE skew-join splitting, same as the minhash path.
-    * Don't hand-pick `bandBits` at scale — [[bandBitsFor]] encodes the
-    * rule (key space must track corpus size: 16-bit bands measured
-    * quadratic at 2M vectors, 32-bit linear at identical twin recall).
-    */
   /** Band-key width for an RHP-banded corpus of `n` vectors — the r14
     * scale finding made a rule instead of a caller footgun: bucket
     * occupancy per band is ~n / 2^bandBits, so the key space must GROW
@@ -867,16 +825,16 @@ object Similarity {
     * quadratic — 16-bit keys measured fine at 200K vectors but
     * quadratic at 2M, where 32-bit keys ran linear at identical twin
     * recall. Returns the smallest divisor of `nBits` at least
-    * ceil(log2 n) + `margin` (margin 4 ~= target occupancy 1/16),
+    * ceil(log2 n) + 4 (a margin of 4 ~= target occupancy 1/16),
     * capped at 32 (packed keys are longs; 2^32 buckets/band outgrows
     * any single corpus this library bands). Divisibility matters:
     * bands partition the signature, so bandBits must divide nBits.
     */
-  def bandBitsFor(n: Long, nBits: Int = 384, margin: Int = 4): Int = {
+  def bandBitsFor(n: Long, nBits: Int = 384): Int = {
     require(n > 0, "corpus size must be positive")
     require(nBits > 0, "nBits must be positive")
     val log2 = 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n - 1))
-    val want = log2 + margin
+    val want = log2 + 4
     val divisors = (1 to math.min(32, nBits)).filter(nBits % _ == 0)
     divisors.find(_ >= want).getOrElse(divisors.last)
   }
@@ -902,13 +860,37 @@ object Similarity {
         "wider explicit bandBits")
   }
 
+  /** Corpus-wide embedding near-duplicate pairs, the 100 TB path: the
+    * same random-hyperplane signature as [[lshTopK]] buckets the corpus
+    * by (band, key); candidate pairs are rows sharing any band bucket
+    * (an equi-self-join — shuffle on the band key only, NEVER an
+    * all-pairs product), verified with exact cosine >= threshold.
+    * Returns (a, b, cos) with a < b, over `vec_id`/`embedding` frames
+    * and 384-bit signatures.
+    *
+    * Recall is the LSH band recall (pairs whose signatures share no band
+    * are missed — the standard trade; more/narrower bands raise recall).
+    * Band WIDTH is the scale lever — buckets per band must track corpus
+    * size to hold occupancy ~O(1): 4-bit keys (16 buckets/band) measured
+    * 70x slower + executor OOM at a mere 40K-vector corpus because every
+    * band collapsed into a handful of quadratic buckets; 16 bands x 12
+    * bits left ~8M random-collision candidates at 40K vectors (bucket
+    * occupancy ~10); the default 24 bands x 16 bits (65536 buckets/band,
+    * occupancy < 1) verifies 40% faster at the same corpus with recall
+    * 0.95 on +0.05-perturbed twins — more, wider bands buy back the
+    * per-band recall that width alone destroys (4x16 scored below 0.5).
+    * Residual skewed buckets (a boilerplate embedding cluster) are
+    * handled by AQE skew-join splitting, same as the minhash path.
+    * Don't hand-pick `bandBits` at scale — [[bandBitsFor]] encodes the
+    * rule (key space must track corpus size: 16-bit bands measured
+    * quadratic at 2M vectors, 32-bit linear at identical twin recall).
+    */
   def nearDupPairsEmbedding(corpus: DataFrame, threshold: Double, dims: Int,
-      nBits: Int = 384, bandBits: Int = 16,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      expectedN: Option[Long] = None): DataFrame = {
+      bandBits: Int = 16, expectedN: Option[Long] = None): DataFrame = {
+    val nBits = 384
     requireBandOccupancy(bandBits, nBits, expectedN)
-    val vecs = corpus.select(col(idCol).as("id"),
-      col(vecCol).cast(ArrayType(DoubleType)).as("v"))
+    val vecs = corpus.select(col("vec_id").as("id"),
+      col("embedding").cast(ArrayType(DoubleType)).as("v"))
     // keys narrowed to int when they provably fit (bandBits <= 32 —
     // truncation is injective there, so every equality below, and
     // therefore the pair set, is unchanged): halves both the join-key
@@ -962,11 +944,10 @@ object Similarity {
     * other skewed join bucket.
     */
   def withinCellNearDupPairs(corpus: DataFrame, nCells: Int,
-      threshold: Double, idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    val centroids = trainCentroids(corpus, nCells, idCol, vecCol)
-    val c = corpus.select(col(idCol).as("id"),
-        col(vecCol).cast(ArrayType(DoubleType)).as("v"))
+      threshold: Double): DataFrame = {
+    val centroids = trainCentroids(corpus, nCells)
+    val c = corpus.select(col("vec_id").as("id"),
+        col("embedding").cast(ArrayType(DoubleType)).as("v"))
       .withColumn("cell", centroids.assignCell(col("v")))
     c.as("l").join(c.as("r"),
         col("l.cell") === col("r.cell") && col("l.id") < col("r.id"))
@@ -982,11 +963,11 @@ object Similarity {
     * Returns (id, component, keep) for every corpus vector;
     * `.filter("keep")` is the semantically deduplicated corpus.
     */
-  def semanticDedup(corpus: DataFrame, nCells: Int, threshold: Double,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val pairs = withinCellNearDupPairs(corpus, nCells, threshold, idCol, vecCol)
+  def semanticDedup(corpus: DataFrame, nCells: Int,
+      threshold: Double): DataFrame = {
+    val pairs = withinCellNearDupPairs(corpus, nCells, threshold)
       .select(col("a"), col("b"))
-    Dedup.cluster(corpus.select(col(idCol)), pairs, idCol)
+    Dedup.cluster(corpus.select(col("vec_id")), pairs, "vec_id")
   }
 
   /** Incremental embedding near-dup detection: a FRESH batch of vectors
@@ -1000,16 +981,17 @@ object Similarity {
     */
   def nearDupsAgainstEmbedding(reference: DataFrame, fresh: DataFrame,
       threshold: Double, dims: Int, nBits: Int = 384, bandBits: Int = 16,
-      idCol: String = "vec_id", vecCol: String = "embedding",
       expectedN: Option[Long] = None): DataFrame = {
     requireBandOccupancy(bandBits, nBits, expectedN)
     // both sides prep with the SAME key width (int at bandBits <= 32) —
     // the band equi-join and the prefix predicate compare them raw
     val narrow = bandBits <= 32
     val (vRef, kRef) =
-      prepEmbedding(reference, dims, nBits, bandBits, idCol, vecCol, narrow)
+      prepEmbedding(reference, dims, nBits, bandBits, "vec_id", "embedding",
+        narrow)
     val (vNew, kNew) =
-      prepEmbedding(fresh, dims, nBits, bandBits, idCol, vecCol, narrow)
+      prepEmbedding(fresh, dims, nBits, bandBits, "vec_id", "embedding",
+        narrow)
     nearDupsPreparedEmbedding(vRef, kRef, vNew, kNew, threshold)
   }
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.WordShingles
+
 /** Text-analysis operators for large-scale training-data pipelines:
   * language ID, quality scoring, token counting, fingerprinting. All pure
   * Catalyst expressions (codegen'd, no UDFs), so they run at scan speed
@@ -192,22 +194,19 @@ object TextAnalysis {
   }
 
   /** Gopher-style rule-battery keep decision (Rae et al. 2021 §A1.1,
-    * adapted to the signals available at scan speed): word count within
-    * bounds, mean token length within bounds, enough alpha words, at
-    * least `minStopHits` stopword occurrences. Every input is an
-    * existing scan-local metric, so the verdict is a pure codegen'd
-    * projection — and SQL-recomputable for the oracle.
+    * adapted to the signals available at scan speed): 20 to 100000
+    * words, mean token length in [3, 10], an alpha-word ratio of at least
+    * 0.8, at least 2 stopword occurrences. Every input is an existing
+    * scan-local metric, so the verdict is a pure codegen'd projection —
+    * and SQL-recomputable for the oracle.
     */
-  def gopherKeep(text: Column,
-      minWords: Long = 20, maxWords: Long = 100000,
-      minMeanLen: Double = 3.0, maxMeanLen: Double = 10.0,
-      minAlphaWordRatio: Double = 0.8, minStopHits: Long = 2): Column = {
+  def gopherKeep(text: Column): Column = {
     val n = wsTokenCount(text)
     val m = meanTokenLen(text)
-    n >= minWords && n <= maxWords &&
-      m >= minMeanLen && m <= maxMeanLen &&
-      alphaWordRatio(text) >= minAlphaWordRatio &&
-      stopwordHits(text) >= minStopHits
+    n >= 20L && n <= 100000L &&
+      m >= 3.0 && m <= 10.0 &&
+      alphaWordRatio(text) >= 0.8 &&
+      stopwordHits(text) >= 2L
   }
 
   /** Occurrences of a literal word surrounded by spaces, via the
@@ -230,8 +229,8 @@ object TextAnalysis {
     * copy + one indexOf scan per word, instead of one padded copy + one
     * replace() pass per word. Identical counts (FusedParitySpec).
     */
-  def stopwordHits(text: Column, words: Seq[String] = enStopwords): Column =
-    graft.functions.WordHits.totalOf(text, words)
+  def stopwordHits(text: Column): Column =
+    graft.functions.WordHits.totalOf(text, enStopwords)
 
   /** The definitional per-word replace-trick composition, kept as the
     * parity pin for the fused kernel.
@@ -402,7 +401,7 @@ object TextAnalysis {
   // ---- benchmark decontamination --------------------------------------
 
   /** Benchmark decontamination: ids of corpus documents sharing at least
-    * one word n-gram (default 8 — the usual decontamination span) with
+    * one word 8-gram (the usual decontamination span) with
     * the benchmark set. The benchmark side is deduped and expected to be
     * small relative to the corpus, so Catalyst plans a broadcast
     * left-semi join against the exploded corpus shingles — one pass over
@@ -412,11 +411,11 @@ object TextAnalysis {
     */
   def contaminatedDocs(docs: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String, bench: org.apache.spark.sql.DataFrame,
-      benchTextCol: String, n: Int = 8): org.apache.spark.sql.DataFrame = {
+      benchTextCol: String): org.apache.spark.sql.DataFrame = {
     val dsh = docs.select(col(idCol).as("doc_id"),
-      explode(Dedup.wordShingles(col(textCol), n)).as("sg"))
+      explode(WordShingles.of(col(textCol), 8)).as("sg"))
     val bsh = bench
-      .select(explode(Dedup.wordShingles(col(benchTextCol), n)).as("sg"))
+      .select(explode(WordShingles.of(col(benchTextCol), 8)).as("sg"))
       .distinct()
     dsh.join(bsh, Seq("sg"), "left_semi").select(col("doc_id")).distinct()
   }
@@ -424,27 +423,26 @@ object TextAnalysis {
   /** [[contaminatedDocs]] for the regime where the benchmark gram set is
     * itself too large to broadcast as a hash relation (a full eval-suite
     * sweep: hundreds of millions of distinct grams). Same answer — the
-    * Bloom admits ~fpp false positives and the trailing exact semi-join
+    * Bloom admits ~1% false positives and the trailing exact semi-join
     * removes them — but the corpus side is pruned SCAN-LOCAL by a
     * broadcast-cheap Bloom of the benchmark grams before any exchange,
-    * so the corpus exchange carries ~fpp of its rows instead of all of
+    * so the corpus exchange carries ~1% of its rows instead of all of
     * them. See [[BloomPrune]] for the cost model.
     */
   def contaminatedDocsBloom(docs: org.apache.spark.sql.DataFrame,
       idCol: String, textCol: String, bench: org.apache.spark.sql.DataFrame,
-      benchTextCol: String, n: Int = 8,
-      fpp: Double = 0.01): org.apache.spark.sql.DataFrame = {
+      benchTextCol: String): org.apache.spark.sql.DataFrame = {
     val dsh = docs.select(col(idCol).as("doc_id"),
-      explode(Dedup.wordShingles(col(textCol), n)).as("sg"))
+      explode(WordShingles.of(col(textCol), 8)).as("sg"))
     val bsh = bench
-      .select(explode(Dedup.wordShingles(col(benchTextCol), n)).as("sg"))
+      .select(explode(WordShingles.of(col(benchTextCol), 8)).as("sg"))
       .distinct()
-    BloomPrune.semiJoin(dsh, col("sg"), bsh, col("sg"), fpp)
+    BloomPrune.semiJoin(dsh, col("sg"), bsh, col("sg"), 0.01)
       .select(col("doc_id")).distinct()
   }
 
   /** Per-document contamination FRACTION: the share of a document's
-    * DISTINCT word n-grams present in the benchmark set — the standard
+    * DISTINCT word 8-grams present in the benchmark set — the standard
     * contamination-REPORT metric (a doc quoting one benchmark span
     * scores low, a verbatim benchmark copy scores ~1) where
     * [[contaminatedDocs]] answers only membership. Same scale shape: the
@@ -455,11 +453,11 @@ object TextAnalysis {
     */
   def contaminationStats(docs: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String, bench: org.apache.spark.sql.DataFrame,
-      benchTextCol: String, n: Int = 8): org.apache.spark.sql.DataFrame = {
+      benchTextCol: String): org.apache.spark.sql.DataFrame = {
     val dsh = docs.select(col(idCol).as("doc_id"),
-      explode(Dedup.wordShingles(col(textCol), n)).as("sg"))
+      explode(WordShingles.of(col(textCol), 8)).as("sg"))
     val bsh = bench
-      .select(explode(Dedup.wordShingles(col(benchTextCol), n)).as("sg"))
+      .select(explode(WordShingles.of(col(benchTextCol), 8)).as("sg"))
       .distinct()
       .withColumn("__hit", lit(1))
     dsh.join(bsh, Seq("sg"), "left")
@@ -486,11 +484,14 @@ object TextAnalysis {
     * Term contributions are summed in the fixed argument order, so the
     * doubles are bit-reproducible and a SQL oracle recomputes them
     * exactly. Documents containing no query term (score 0) are omitted.
+    * Parameters are the standard k1 = 1.2, b = 0.75.
     */
   def bm25TopK(docs: org.apache.spark.sql.DataFrame, idCol: String,
-      textCol: String, terms: Seq[String], k: Int,
-      k1: Double = 1.2, b: Double = 0.75): org.apache.spark.sql.DataFrame = {
+      textCol: String, terms: Seq[String],
+      k: Int): org.apache.spark.sql.DataFrame = {
     require(terms.nonEmpty, "bm25 needs at least one query term")
+    val k1 = 1.2
+    val b = 0.75
     val canon = canonStr(col(textCol))
     val base = docs.select(col(idCol).as("id"), canon.as("t"))
       .select(col("id"), col("t"), wsTokenCount(col("t")).as("dl"))
@@ -762,8 +763,8 @@ object TextAnalysis {
     * just its words. Per bigram position (w1, w2):
     *   - bigram bucket seen:  qlog2(cnt_bigram) - qlog2(cnt_w1)
     *     (the quantized conditional log-MLE log2 c(w1 w2)/c(w1)),
-    *   - unseen: qlog2(cnt_w2) - backoffPenalty
-    *     (backoff to the unigram with alpha = 2^-penalty — Stupid
+    *   - unseen: qlog2(cnt_w2) - 4
+    *     (backoff to the unigram with alpha = 2^-4 — Stupid
     *     Backoff's fixed discount, no normalization by design).
     * All contributions are exact integers (the bin()-length qlog), so
     * the per-doc sums replay bit-identically in the oracle; one double
@@ -777,9 +778,10 @@ object TextAnalysis {
     */
   def bigramLmScore(df: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String, uniLm: org.apache.spark.sql.DataFrame,
-      biLm: org.apache.spark.sql.DataFrame, nBuckets: Int = 4096,
-      backoffPenalty: Int = 4): org.apache.spark.sql.DataFrame = {
-    require(nBuckets > 0 && backoffPenalty >= 0, "bad params")
+      biLm: org.apache.spark.sql.DataFrame,
+      nBuckets: Int = 4096): org.apache.spark.sql.DataFrame = {
+    require(nBuckets > 0, "bad params")
+    val backoffPenalty = 4
     val pos = df.select(col(idCol).as("id"),
         graft.functions.Once(canonToks(col(textCol))).as("__tk"))
       // guard: Spark's sequence(1, 0) DESCENDS — size < 2 must yield an
@@ -1272,22 +1274,6 @@ object TextAnalysis {
       .groupBy(col("domain"))
       .agg(countDistinct(col("id")).as("n_docs"), count(lit(1)).as("n_hits"))
 
-  // ---- Unicode NFC normalization --------------------------------------
-
-  /** Unicode NFC normalization ([[graft.functions.NfcNormalize]] — a
-    * codegen'd native expression): composed/decomposed sequences
-    * canonicalize before fingerprinting/shingling, so `e`+U+0301 and
-    * precomposed `é` dedup as the same text.
-    */
-  def nfc(text: Column): Column = graft.functions.NfcNormalize.of(text)
-
-  /** NFKC ([[graft.functions.NfkcNormalize]]): compatibility folding of
-    * ligatures/fullwidth/super-subscripts before recomposition — the
-    * BERT-style pre-tokenization normalizer. Unit-only (no DuckDB NFKC
-    * to oracle against; see the expression's scaladoc).
-    */
-  def nfkc(text: Column): Column = graft.functions.NfkcNormalize.of(text)
-
   // ---- C4-style heuristic cleaning ------------------------------------
 
   /** Number of non-empty whitespace-separated tokens in one line —
@@ -1299,11 +1285,11 @@ object TextAnalysis {
 
   /** C4's line keep rule (Raffel et al. 2020 §2.2): a line survives iff
     * it ends in terminal punctuation (. ! ? or a closing quote), has at
-    * least `minWordsPerLine` words, and does not mention javascript.
+    * least 5 words, and does not mention javascript.
     */
-  def c4LineKeep(line: Column, minWordsPerLine: Int = 5): Column =
+  def c4LineKeep(line: Column): Column =
     trim(line).rlike("[.!?\"”]$") &&
-      lineWordCount(line) >= minWordsPerLine &&
+      lineWordCount(line) >= 5 &&
       !lower(line).contains("javascript")
 
   /** The C4 heuristic-cleaning battery as one scan-local projection:
@@ -1314,12 +1300,12 @@ object TextAnalysis {
     * split/filter/array arithmetic inside codegen (no shuffle, no UDF)
     * and SQL-recomputable for the oracle. The reference has no cleaning
     * stage at all (it ships rows as-is); this is the training-data lift.
+    * A page keeps at least 3 lines that pass [[c4LineKeep]].
     */
   def c4Signals(df: org.apache.spark.sql.DataFrame, idCol: String,
-      textCol: String, minWordsPerLine: Int = 5,
-      minLinesKept: Int = 3): org.apache.spark.sql.DataFrame = {
+      textCol: String): org.apache.spark.sql.DataFrame = {
     val lines = split(col(textCol), "\n")
-    val kept = filter(lines, l => c4LineKeep(l, minWordsPerLine))
+    val kept = filter(lines, l => c4LineKeep(l))
     df.select(
       col(idCol).as("id"),
       size(lines).cast(LongType).as("n_lines"),
@@ -1328,7 +1314,7 @@ object TextAnalysis {
       col(textCol).contains("{").as("has_curly"),
       array_join(kept, "\n").as("clean_text"))
     .withColumn("keep",
-      col("n_lines_kept") >= minLinesKept &&
+      col("n_lines_kept") >= 3 &&
         !col("has_lorem") && !col("has_curly"))
   }
 
@@ -1393,7 +1379,8 @@ object TextAnalysis {
     * them ONE dedup key. Opt-in — the plain [[fingerprint]] stays
     * byte-stable for corpora with upstream normalization.
     */
-  def fingerprintNfc(text: Column): Column = fingerprint(nfc(text))
+  def fingerprintNfc(text: Column): Column =
+    fingerprint(graft.functions.NfcNormalize.of(text))
 
   /** 64-bit rolling content hash (xxh64 of the canonical form) — cheaper
     * join key than the md5 hex string at shuffle time.

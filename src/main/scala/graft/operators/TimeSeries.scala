@@ -114,10 +114,10 @@ object TimeSeries {
     * is the same IEEE expression the oracle evaluates — one division,
     * no accumulation, so results are bit-reproducible cross-engine.
     * Two windows (backward carry, forward reach) + any caller windows
-    * share ONE key partitioning.
+    * share ONE key partitioning. The result lands in column `interp`.
     */
   def interpolate(df: DataFrame, keyCols: Seq[String], bucketCol: String,
-      valueCol: String, outName: String = "interp"): DataFrame = {
+      valueCol: String): DataFrame = {
     val wb = Window.partitionBy(keyCols.map(col): _*)
       .orderBy(col(bucketCol))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -130,7 +130,7 @@ object TimeSeries {
     val nv = first(col(valueCol), ignoreNulls = true).over(wf).cast("double")
     val nb = first(when(col(valueCol).isNotNull, col(bucketCol)),
       ignoreNulls = true).over(wf)
-    df.withColumn(outName,
+    df.withColumn("interp",
       when(col(valueCol).isNotNull, col(valueCol).cast("double"))
         .otherwise(pv + (nv - pv) *
           ((col(bucketCol) - pb).cast("double") /
@@ -139,28 +139,28 @@ object TimeSeries {
 
   /** runningDifference: value minus the previous bucket's value within
     * the key (null at each series head). Exact when the value column is
-    * decimal/integer.
+    * decimal/integer. The result lands in column `delta`.
     */
   def runningDelta(df: DataFrame, keyCols: Seq[String], bucketCol: String,
-      valueCol: String, deltaName: String = "delta"): DataFrame = {
+      valueCol: String): DataFrame = {
     val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col(bucketCol))
-    df.withColumn(deltaName, col(valueCol) - lag(col(valueCol), 1).over(w))
+    df.withColumn("delta", col(valueCol) - lag(col(valueCol), 1).over(w))
   }
 
   /** Trailing moving average over the last `nBuckets` buckets: the
     * moving SUM is exact (decimal/integer input), the division happens
     * once at the end — so the result is bit-reproducible where a
-    * float-accumulated window average is not.
+    * float-accumulated window average is not. The result lands in column
+    * `mov_avg`.
     */
   def movingAvg(df: DataFrame, keyCols: Seq[String], bucketCol: String,
-      valueCol: String, nBuckets: Int,
-      avgName: String = "mov_avg"): DataFrame = {
+      valueCol: String, nBuckets: Int): DataFrame = {
     require(nBuckets >= 1, "nBuckets must be at least 1")
     val w = Window.partitionBy(keyCols.map(col): _*)
       .orderBy(col(bucketCol))
       .rowsBetween(-(nBuckets - 1), Window.currentRow)
     val cnt = count(col(valueCol)).over(w)
-    df.withColumn(avgName,
+    df.withColumn("mov_avg",
       when(cnt > 0, // an all-null frame (series head before LOCF has
         // anything to carry) must yield null, not 0/0 = NaN
         round(sum(col(valueCol)).over(w).cast("double") /

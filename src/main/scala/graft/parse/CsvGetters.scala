@@ -111,7 +111,7 @@ object CsvGetters {
       case ChKind.Decimal  => getDecimal(s, ti.nullable)
       case ChKind.DateTime => getDateTime(s, ti.nullable, opts, ti.dateTime64Precision)
       case ChKind.Str      => getString(s, ti.nullable)
-      case ChKind.Obj      => ChGetters.getObject(try_parse_json(s), ti.nullable)
+      case ChKind.Obj      => ChGetters.getObject(try_parse_json(s))
       case ChKind.IPv4     => getIp(s, ti.nullable, "0.0.0.0")
       case ChKind.IPv6     => getIp(s, ti.nullable, "::")
       case ChKind.MapK     => throw new IllegalStateException("handled above")

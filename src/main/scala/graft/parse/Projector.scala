@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.ChGetters
+import graft.functions.{ChGetters, VariantAccess}
 import graft.functions.ChGetters.ParseOpts
 import graft.types.{ChKind, ChTypeInfo}
 
@@ -64,7 +64,7 @@ object Projector {
       (fields.get(d.source) match {
         // static fields win over message content (fastjson.go:54-58)
         case Some(rawJson) => ChGetters.parsed(lit(rawJson))
-        case None          => ChGetters.field(col("__msg__"), d.source)
+        case None          => VariantAccess.field(col("__msg__"), d.source)
       }).as(s"__f_${d.name}")
     }
     val passthrough = parsed.columns.filter(_ != "__msg__").map(col).toSeq

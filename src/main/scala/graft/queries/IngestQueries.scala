@@ -43,7 +43,7 @@ object IngestQueries {
           col("value").as("v"),
           date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_str"))).as("raw"))
       val msg = ChGetters.parsed(col("raw"))
-      def f(n: String) = ChGetters.field(msg, n)
+      def f(n: String) = VariantAccess.field(msg, n)
       raw.select(
         col("event_id"),
         ChGetters.getSigned(f("id"), nullable = false, LongType).as("id_i64"),

@@ -1,6 +1,7 @@
 package graft.queries
 
-import graft.operators.{Similarity, TextAnalysis}
+import graft.functions.RhpBandKeys
+import graft.operators.TextAnalysis
 
 /** DuckDB oracle SQL builders that more than one query family uses:
   * the planted-twin corpora, the canonical text forms, the shingle,
@@ -106,7 +107,7 @@ private[queries] object SharedOracles {
     */
   def rhpBandCtes(bands: Int, rows: Int, keep: String = ""): String = {
     def plane(b: Int): String =
-      (0 until 64).map(d => Similarity.planeComponent(b, d).toString)
+      (0 until 64).map(d => RhpBandKeys.planeComponent(b, d).toString)
         .mkString("[", ", ", "]")
     val bitCols = (0 until bands * rows).map(b =>
       s"(CASE WHEN list_dot_product(v, ${plane(b)}) >= 0 THEN 1 ELSE 0 END) AS b$b")

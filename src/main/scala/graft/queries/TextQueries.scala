@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.NfcNormalize
 import graft.operators.TextAnalysis
 
 /** Text analysis over `documents`: language id, cleaning, script and
@@ -842,8 +843,8 @@ object TextQueries {
         concat(col("text"),
           lit(" cafe\u0301 \u1100\u1161")).as("text"))
       corpus.select(col("doc_id"),
-          TextAnalysis.nfc(col("text")).as("nfc_text"),
-          (TextAnalysis.nfc(col("text")) =!= col("text")).as("changed"))
+          NfcNormalize.of(col("text")).as("nfc_text"),
+          (NfcNormalize.of(col("text")) =!= col("text")).as("changed"))
         .orderBy(col("doc_id"))
     },
 

@@ -1,5 +1,7 @@
 package graft.shard
 
+import scala.annotation.unused
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -66,7 +68,7 @@ object Sharding {
     * and `writersPerShard` are ignored; they stay only for callers that
     * pass them positionally (the sinkbench harness).
     */
-  def partitionByShard(df: DataFrame, shard: Column, numShards: Int,
-      writersPerShard: Int = 1): DataFrame =
+  def partitionByShard(df: DataFrame, shard: Column, @unused numShards: Int,
+      @unused writersPerShard: Int = 1): DataFrame =
     df.withColumn("__shard__", shard)
 }

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.annotation.unused
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -118,10 +120,12 @@ object Pipeline {
   /** Assemble the full streaming query. `onNewKeys` is invoked (with the
     * batch's accepted new keys) before the batch is written when
     * dynamicSchema is on — the caller issues the ALTERs and restarts
-    * (SURVEY §3.3).
+    * (SURVEY §3.3). `spark` is ignored (the session is `src`'s); it
+    * stays only for callers that pass it positionally (the sinkbench
+    * harness).
     */
-  def start(spark: SparkSession, src: DataFrame, task: TaskConfig, dims: Seq[Dim],
-      sink: SinkSpec, checkpoint: String,
+  def start(@unused spark: SparkSession, src: DataFrame, task: TaskConfig,
+      dims: Seq[Dim], sink: SinkSpec, checkpoint: String,
       onNewKeys: Seq[(String, ChKind)] => Unit = _ => (),
       metrics: Option[Metrics] = None): StreamingQuery = {
 

@@ -80,7 +80,7 @@ object SeriesDedup {
     val timeoutConf =
       if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
       else GroupStateTimeout.NoTimeout()
-    val fn = (sid: Long, it: Iterator[SeriesRow], state: GroupState[Long]) => {
+    val fn = (_: Long, it: Iterator[SeriesRow], state: GroupState[Long]) => {
       stateTtl.foreach(state.setTimeoutDuration)
       var out = List.empty[SeriesRow]
       it.foreach { r =>
@@ -154,7 +154,7 @@ object SeriesDedup {
   def dedupBatch(rows: Dataset[SeriesRow]): Dataset[SeriesRow] = {
     import rows.sparkSession.implicits._
     rows.groupByKey(_.sid)
-      .reduceGroups((a, b) => a) // first occurrence wins per sid
+      .reduceGroups((a, _) => a) // first occurrence wins per sid
       .map(_._2)
   }
 }

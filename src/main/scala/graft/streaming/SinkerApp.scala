@@ -62,8 +62,12 @@ final class SinkerApp(
     Option(restarts.get(task)).map(_.intValue).getOrElse(0)
   def query(name: String): Option[StreamingQuery] = Option(queries.get(name))
 
-  /** Start one task (one streaming query). */
+  /** Start one task (one streaming query). A dynamicSchema task whose
+    * `tableName` its ALTERs could not name is refused here, before any
+    * query starts ([[dbTable]]).
+    */
   def startTask(task: TaskConfig, initialDims: Seq[Dim]): StreamingQuery = {
+    if (task.dynamicSchema) dbTable(task)
     schemas.putIfAbsent(task.name, initialDims)
     taskConfigs.put(task.name, task)
     val dims = schemas.get(task.name)
@@ -90,10 +94,7 @@ final class SinkerApp(
     */
   private def onNewKeys(task: TaskConfig, keys: Seq[(String, ChKind)]): Unit = {
     val dims = schemas.get(task.name)
-    val (db, tbl) = task.tableName.split('.') match {
-      case Array(d, t) => (d, t)
-      case Array(t)    => ("default", t)
-    }
+    val (db, tbl) = dbTable(task)
     SchemaEvolution.changeSchemaStatements(db, tbl, dims.size, keys,
       NewKeyPolicy()).foreach(execDdl)
     val newDims = dims ++ keys.sortBy(_._1).map { case (k, kind) =>
@@ -116,6 +117,18 @@ final class SinkerApp(
     // (a stop that never came) the batch writes under the old schema
     Thread.sleep(holdForRestartMs)
   }
+
+  /** `tableName` as (database, table): `table` (in `default`) or
+    * `db.table`, every part non-empty; anything else is refused.
+    */
+  private def dbTable(task: TaskConfig): (String, String) =
+    task.tableName.split("\\.", -1) match {
+      case Array(d, t) if d.nonEmpty && t.nonEmpty => (d, t)
+      case Array(t) if t.nonEmpty                  => ("default", t)
+      case _ => throw new IllegalArgumentException(
+        s"task ${task.name}: tableName '${task.tableName}' is not " +
+          "`table` or `db.table`")
+    }
 
   /** The restart thread body: bounce the task (or its whole group), with
     * bounded retries; a final failure is logged AND surfaced via

@@ -78,7 +78,9 @@ final class StreamingUniqHll(protected val spark: SparkSession,
   */
 final class StreamingUniqKmv(protected val spark: SparkSession,
     protected val stateDir: String, keyCol: String, valueCol: String,
-    k: Int = 256, protected val nBuckets: Int = 64) extends KeyedFold {
+    k: Int = 256) extends KeyedFold {
+
+  protected val nBuckets = 64
 
   protected val state = new BatchedState(spark, s"$stateDir/kmv", Seq("kb"))
 
@@ -141,10 +143,13 @@ final class StreamingUniqKmv(protected val spark: SparkSession,
   */
 final class StreamingQuantile(protected val spark: SparkSession,
     protected val stateDir: String, keyCol: String, valueCol: String,
-    quantiles: Seq[(String, Int, Int)], scale: Int = 100, sigBits: Int = 8,
+    quantiles: Seq[(String, Int, Int)], sigBits: Int = 8,
     protected val nBuckets: Int = 64) extends KeyedFold {
 
   require(quantiles.nonEmpty, "at least one quantile")
+
+  // values scale to integers by 100 (ApproxAgg.quantileHistogram's default)
+  private val scale = 100
 
   protected val state = new BatchedState(spark, s"$stateDir/hist", Seq("kb"))
 

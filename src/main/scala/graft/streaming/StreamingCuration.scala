@@ -12,7 +12,8 @@ import graft.operators.{Dedup, Sampling, TextAnalysis}
   * ([[StreamingDecontamination]] — the only STATEFUL stage, so standing
   * state cost is the decontamination gram set alone), then flows the
   * exact batch stages the capstone composes: exact dedup, Gopher
-  * quality filter, PII scrub, per-source cap, split assignment, and the
+  * quality filter, PII scrub, a cap of 20 documents per source, a
+  * train/val 0.9/0.1 split assignment, and the
   * per-(split, source) rollup — the curation ledger a training-data
   * pipeline emits per micro-batch.
   *
@@ -30,10 +31,11 @@ import graft.operators.{Dedup, Sampling, TextAnalysis}
   * batch replaces its own output — exactly-once per batch dir.
   */
 final class StreamingCuration(spark: SparkSession, stateDir: String,
-    idCol: String, textCol: String, sourceCol: String,
-    maxPerSource: Int = 20,
-    splits: Seq[(String, Double)] = Seq("train" -> 0.9, "val" -> 0.1))
+    idCol: String, textCol: String, sourceCol: String)
     extends Serializable {
+
+  private val maxPerSource = 20
+  private val splits = Seq("train" -> 0.9, "val" -> 0.1)
 
   private val decon =
     new StreamingDecontamination(spark, stateDir, idCol, textCol)

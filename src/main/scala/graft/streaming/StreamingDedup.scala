@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.WordShingles
 import graft.operators.Dedup
 import StandingOperator.bucket
 
@@ -101,7 +102,7 @@ final class StreamingDedup(protected val spark: SparkSession,
     // derived tables (fingerprints AND banded signatures) — the same
     // single-snapshot discipline as [[seed]], |batch|-bounded
     val shRaw = batch.select(col(idCol).as("id"),
-      Dedup.wordShingles(col(textCol), n).as("shingles")).localCheckpoint()
+      WordShingles.of(col(textCol), n).as("shingles")).localCheckpoint()
     // pin the derived tables too (they feed three consumers: prune-set
     // collect, the joins, the state append)
     val shNew = Dedup.shingleFingerprints(shRaw)
@@ -330,12 +331,12 @@ final class StreamingDecontamination(protected val spark: SparkSession,
   protected val stateParams =
     Map("n" -> n.toString, "nBuckets" -> nBuckets.toString)
 
-  /** Distinct benchmark grams of a corpus ([[Dedup.wordShingles]]
+  /** Distinct benchmark grams of a corpus ([[graft.functions.WordShingles]]
     * semantics: per-doc distinct, whole text as the single gram for
     * docs shorter than `n` words).
     */
   private def benchGrams(bench: DataFrame, benchTextCol: String): DataFrame =
-    bench.select(explode(Dedup.wordShingles(col(benchTextCol), n)).as("sg"))
+    bench.select(explode(WordShingles.of(col(benchTextCol), n)).as("sg"))
       .distinct()
       .withColumn("gb", bucket(nBuckets, col("sg")))
 
@@ -371,7 +372,7 @@ final class StreamingDecontamination(protected val spark: SparkSession,
     */
   protected def admitBatch(batch: DataFrame, batchId: Long): DataFrame = {
     val docGrams = batch.select(col(idCol).as("id"),
-        explode(Dedup.wordShingles(col(textCol), n)).as("sg"))
+        explode(WordShingles.of(col(textCol), n)).as("sg"))
       .withColumn("gb", bucket(nBuckets, col("sg")))
       .localCheckpoint()
     val ref = grams.read(before = batchId, fallback =
@@ -417,9 +418,11 @@ final class StreamingDecontamination(protected val spark: SparkSession,
 final class StreamingEmbeddingDedup(protected val spark: SparkSession,
     protected val stateDir: String, idCol: String, vecCol: String,
     dims: Int, nBits: Int = 384, bandBits: Int = 16,
-    threshold: Double = 0.99, nBuckets: Int = 32) extends EvictingOperator {
+    threshold: Double = 0.99) extends EvictingOperator {
 
   import graft.operators.Similarity
+
+  private val nBuckets = 32
 
   private val vecs = new BatchedState(spark, s"$stateDir/vectors", Seq("ib"))
   private val keys = new BatchedState(spark, s"$stateDir/keys", Seq("bb"))
@@ -535,10 +538,12 @@ final class StreamingEmbeddingDedup(protected val spark: SparkSession,
   */
 final class StreamingPhashDedup(protected val spark: SparkSession,
     protected val stateDir: String, idCol: String, hashCol: String,
-    maxHamming: Int = 3, wideRecall: Boolean = false, nBuckets: Int = 32,
+    maxHamming: Int = 3, wideRecall: Boolean = false,
     collapseBatch: Boolean = true) extends EvictingOperator {
 
   graft.operators.HammingBands.requireRecall(maxHamming, wideRecall)
+
+  private val nBuckets = 32
 
   private val fps = new BatchedState(spark, s"$stateDir/fps", Seq("bb"))
   protected def states: Seq[BatchedState] = Seq(fps)
@@ -670,7 +675,9 @@ final class StreamingPhashDedup(protected val spark: SparkSession,
   */
 final class StreamingSubstringDedup(protected val spark: SparkSession,
     protected val stateDir: String, idCol: String, textCol: String,
-    k: Int = 40, w: Int = 1, nBuckets: Int = 32) extends EvictingOperator {
+    k: Int = 40, w: Int = 1) extends EvictingOperator {
+
+  private val nBuckets = 32
 
   private val grams = new BatchedState(spark, s"$stateDir/grams", Seq("gb"))
   private val texts = new BatchedState(spark, s"$stateDir/texts", Seq("ib"))

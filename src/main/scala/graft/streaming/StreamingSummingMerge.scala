@@ -12,8 +12,8 @@ import org.apache.spark.sql.types._
   * contract, and each emitted row equals the batch aggregate over the
   * key's FULL history (the replay oracle checks exactly that).
   *
-  * Accumulator discipline: every fold casts back to `accType` (default
-  * DECIMAL(28,2)) so the state schema stays FIXED across batches —
+  * Accumulator discipline: every fold casts back to DECIMAL(28,2) so
+  * the state schema stays FIXED across batches —
   * decimal sums otherwise widen per fold (18,2 -> 28,2 -> 38,2 -> ...)
   * and a drifting schema would poison the persisted state. Exact
   * arithmetic only (integers / decimals), as with
@@ -26,8 +26,9 @@ import org.apache.spark.sql.types._
   */
 final class StreamingSummingMerge(protected val spark: SparkSession,
     protected val stateDir: String, keyCol: String, sumCols: Seq[String],
-    accType: String = "decimal(28,2)", protected val nBuckets: Int = 64)
-    extends KeyedFold {
+    protected val nBuckets: Int = 64) extends KeyedFold {
+
+  private val accType = "decimal(28,2)"
 
   require(sumCols.nonEmpty, "at least one sum column")
   require(sumCols.distinct.size == sumCols.size, "sum columns must be distinct")

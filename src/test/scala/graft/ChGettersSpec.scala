@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.ChGetters
+import graft.functions.{ChGetters, VariantAccess}
 import graft.functions.ChGetters.ParseOpts
 import graft.types.{ChKind, ChType, ChTypeInfo}
 
@@ -62,7 +62,8 @@ class ChGettersSpec extends AnyFunSuite with LocalSpark {
     df.select(cols.map { case (n, c) => c.as(n) }: _*).head()
   }
 
-  private def g(name: String) = ChGetters.field(ChGetters.parsed(col("raw")), name)
+  private def g(name: String) =
+    VariantAccess.field(ChGetters.parsed(col("raw")), name)
 
   private def micros(i: Instant): Long = i.getEpochSecond * 1000000L + i.getNano / 1000L
 
@@ -197,10 +198,10 @@ class ChGettersSpec extends AnyFunSuite with LocalSpark {
 
   test("object getter keeps only scalar members (F10)") {
     val r = row(
-      "obj" -> ChGetters.getObject(g("obj"), nullable = false),
-      "ss"  -> ChGetters.getObject(g("map_str_str"), nullable = false),
-      "sf"  -> ChGetters.getObject(g("map_str_float"), nullable = false),
-      "non" -> ChGetters.getObject(g("num_int"), nullable = false))
+      "obj" -> ChGetters.getObject(g("obj")),
+      "ss"  -> ChGetters.getObject(g("map_str_str")),
+      "sf"  -> ChGetters.getObject(g("map_str_float")),
+      "non" -> ChGetters.getObject(g("num_int")))
     assert(r.getMap[String, String](0) === Map.empty) // all members are arrays
     assert(r.getMap[String, String](1) === Map("i" -> "first", "j" -> "second"))
     assert(r.getMap[String, String](2) === Map("i" -> "3.1415", "j" -> "9.876"))
@@ -233,7 +234,7 @@ class ChGettersSpec extends AnyFunSuite with LocalSpark {
       """{"v4":"192.168.1.1","bad":"256.1.1.1","v6":"2001:db8::1","num":3232235777,"obj":{"a":1}}"""
     val df  = Seq(ipJson).toDF("raw")
     val msg = ChGetters.parsed(col("raw"))
-    def f(n: String) = ChGetters.field(msg, n)
+    def f(n: String) = VariantAccess.field(msg, n)
     val r = df.select(
       ChGetters.getIPv4(f("v4"), nullable = false).as("a"),
       ChGetters.getIPv4(f("bad"), nullable = false).as("b"),
@@ -258,7 +259,7 @@ class ChGettersSpec extends AnyFunSuite with LocalSpark {
     // even though its value is integral
     val df = Seq("""{"fi":28.0,"fn":-3.0,"i":28}""").toDF("raw")
     val msg = ChGetters.parsed(col("raw"))
-    def f(n: String) = ChGetters.field(msg, n)
+    def f(n: String) = VariantAccess.field(msg, n)
     val r = df.select(
       ChGetters.getSigned(f("fi"), nullable = false, LongType).as("a"),
       ChGetters.getUint8(f("fi"), nullable = false).as("b"),

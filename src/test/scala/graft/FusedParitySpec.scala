@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.{SetJaccard, VecDot}
 import graft.operators.{Dedup, Similarity}
 
 /** Randomized parity for the fused codegen expressions vs their
@@ -40,7 +41,7 @@ class FusedParitySpec extends AnyFunSuite with LocalSpark {
       val uni = size(array_union(col("a"), col("b"))).cast("double")
       when(uni === 0, lit(0.0)).otherwise(inter / uni)
     }
-    val got = df.select(Dedup.jaccard(col("a"), col("b")).as("f"),
+    val got = df.select(SetJaccard.of(col("a"), col("b")).as("f"),
       composed.as("c")).collect()
     got.foreach(r => assert(r.getDouble(0) === r.getDouble(1)))
   }
@@ -86,7 +87,7 @@ class FusedParitySpec extends AnyFunSuite with LocalSpark {
     val structs = array(centroids.indices.map { c =>
       val cv = array(centroids(c).map(lit).toIndexedSeq: _*)
       val s = if (norms(c) == 0.0) lit(Double.NegativeInfinity)
-              else Similarity.dot(col("v"), cv) / lit(norms(c))
+              else VecDot.of(col("v"), cv) / lit(norms(c))
       struct(s.as("s"), lit(-c).as("negc"))
     }: _*)
     val comp = df.select(col("id"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.{SetJaccard, WordShingles}
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
 
 /** Behavior tests for the training-data operators: planted duplicates are
@@ -335,14 +336,14 @@ class OperatorsSpec extends AnyFunSuite with LocalSpark {
       val uni = size(array_union(col("a"), col("b"))).cast("double")
       when(uni === 0, lit(0.0)).otherwise(inter / uni)
     }
-    val got = pairs.select(Dedup.jaccard(col("a"), col("b")).as("f"),
+    val got = pairs.select(SetJaccard.of(col("a"), col("b")).as("f"),
       composed.as("c")).collect()
     got.foreach(r => assert(r.getDouble(0) === r.getDouble(1), r.toString))
   }
 
   test("fused MinHashSig equals the explode-aggregate signature form") {
     val shingled = docs.limit(100).select(col("doc_id"),
-      Dedup.wordShingles(col("text"), 3).as("sh"))
+      WordShingles.of(col("text"), 3).as("sh"))
     val fused = Dedup.minhashSignatureDF(shingled, "doc_id", "sh", 32)
     val comp = Dedup.minhashSignatureExplodeDF(shingled, "doc_id", "sh", 32)
     assert(fused.except(comp).isEmpty && comp.except(fused).isEmpty)
@@ -1956,11 +1957,11 @@ class OperatorsSpec extends AnyFunSuite with LocalSpark {
       "set (distinct) semantics") {
     import graft.functions.SetJaccardLong
     val sh = docs.limit(40)
-      .select(col("doc_id"), Dedup.wordShingles(col("text"), 3).as("s"))
+      .select(col("doc_id"), WordShingles.of(col("text"), 3).as("s"))
     val both = sh.as("x").crossJoin(sh.as("y"))
       .filter(col("x.doc_id") < col("y.doc_id"))
       .select(
-        Dedup.jaccard(col("x.s"), col("y.s")).as("js"),
+        SetJaccard.of(col("x.s"), col("y.s")).as("js"),
         SetJaccardLong.of(
           transform(col("x.s"), v => xxhash64(v)),
           transform(col("y.s"), v => xxhash64(v))).as("jh"))
@@ -2138,11 +2139,11 @@ class OperatorsSpec extends AnyFunSuite with LocalSpark {
     // recompute every reported pair's jaccard over the STRING shingle
     // sets (the form the DuckDB oracle replays)
     val shRef = ref.select(col("doc_id").as("rid"),
-      Dedup.wordShingles(col("text"), 3).as("sr"))
+      WordShingles.of(col("text"), 3).as("sr"))
     val shNew = fresh.select(col("doc_id").as("nid"),
-      Dedup.wordShingles(col("text"), 3).as("sn"))
+      WordShingles.of(col("text"), 3).as("sn"))
     val stringJ = shRef.crossJoin(shNew)
-      .select(col("rid"), col("nid"), Dedup.jaccard(col("sr"), col("sn")).as("j"))
+      .select(col("rid"), col("nid"), SetJaccard.of(col("sr"), col("sn")).as("j"))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
       .toMap
     got.foreach { case (pair, jh) =>

@@ -211,7 +211,9 @@ class PipelineSpec extends AnyFunSuite with LocalSpark {
         |  consumerGroup: "group1",
         |  earliest: true,
         |  parser: "json",
+        |  clickhouse: "default",
         |  autoSchema: true,
+        |  promLabelsBlackList: "^go_",
         |  excludeColumns: ["day"],
         |  dynamicSchema: true,
         |  bufferSize: 50000,

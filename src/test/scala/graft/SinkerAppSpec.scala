@@ -230,6 +230,23 @@ class SinkerAppSpec extends AnyFunSuite with LocalSpark {
     app.stopAll()
   }
 
+  test("a dynamicSchema task whose tableName is not `table` or `db.table` " +
+      "is refused before its query starts") {
+    val app = new SinkerApp(spark,
+      mkSource = t => fail(s"source built for refused table '${t.tableName}'"),
+      mkSink = (_, _) => fail("sink built for a refused task"),
+      execDdl = _ => (),
+      checkpointRoot = Files.createTempDirectory("bad_tbl_ck").toString)
+    val dims = Seq(Dim("name", ChType.whichType("String")))
+    Seq("a.b.c", "", "db.", ".t").foreach { table =>
+      val task = TaskConfig(name = s"bad_$table", topic = "t",
+        consumerGroup = "g", tableName = table, dynamicSchema = true)
+      val e = intercept[IllegalArgumentException](app.startTask(task, dims))
+      assert(e.getMessage.contains(s"'$table'"), e.getMessage)
+      assert(app.query(task.name).isEmpty)
+    }
+  }
+
   test("metrics listener tracks batches and rows (A5)") {
     val m = Metrics.install(spark)
     val inDir = Files.createTempDirectory("m_in")
