@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """List default-valued Scala parameters that no call in the code base sets.
 
-Usage: python3 scripts/unset_defaults.py [--all] [--scope]
+Usage: python3 scripts/unset_defaults.py [--scope]
 
 Scans every `def` and class constructor under src/main for parameters
 with a default (`name: T = v`), then every call under src/main, src/test
@@ -17,7 +17,7 @@ towards "set"); compiling without the parameter is the proof.
 Prints `file:line def(param)` for each unset parameter and a summary:
 all default-valued parameters in src/main, and how many no call sets.
 `--scope` restricts the listing to graft.operators, graft.functions and
-the `Streaming*` standing operators; `--all` prints the set ones too.
+the `Streaming*` standing operators.
 """
 import re
 import sys
@@ -205,7 +205,6 @@ def parsed(args):
 
 def main():
     scope_only = "--scope" in sys.argv
-    show_all = "--all" in sys.argv
     sources = {}
     for root in CALL_ROOTS:
         for p in sorted(root.rglob("*.scala")):
@@ -237,11 +236,8 @@ def main():
                                             pname in copy_named)
                     total += 1
                     unset += not is_set
-                    if scope_only and not in_scope:
-                        continue
-                    if show_all or not is_set:
-                        print(f"{rel}:{line} {name}({pname})"
-                              + ("" if not is_set else "  set"))
+                    if not is_set and (in_scope or not scope_only):
+                        print(f"{rel}:{line} {name}({pname})")
     print(f"default-valued parameters in src/main: {total}; "
           f"set by no call: {unset}", file=sys.stderr)
 
