@@ -6,7 +6,9 @@ Usage: python3 scripts/unset_defaults.py [--scope]
 Scans every `def` and class constructor under src/main for parameters
 with a default (`name: T = v`), then every call under src/main, src/test
 and sinkbench/src: `name(...)`, `new Name(...)`, `extends Name(...)` and
-`.copy(...)`, with each following argument list. A parameter counts as
+`.copy(...)`, with each following argument list, in code and in the
+`${...}` splices of interpolated strings (comments and the literal text
+of strings are skipped). A parameter counts as
 set when a call passes it by name, or passes positional arguments up to
 its position. A call qualified by a capitalized name
 (`Sampling.capPerGroup(...)`) matches only defs inside that object or
@@ -31,39 +33,66 @@ IDENT = r"(?:[A-Za-z_][A-Za-z0-9_]*|`[^`]+`)"
 
 
 def blank(src):
-    """Comments and string literals become spaces (offsets are kept)."""
-    out, i, n = list(src), 0, len(src)
+    """Comments and string literals become spaces (offsets are kept). The
+    `${...}` splices of an interpolated string (`s"..."`, triple-quoted
+    too) stay code: calls inside them count."""
+    out, n = list(src), len(src)
 
     def fill(a, b):
         for k in range(a, b):
             if out[k] != "\n":
                 out[k] = " "
-    while i < n:
-        if src.startswith("//", i):
-            j = src.find("\n", i)
-            j = n if j < 0 else j
-            fill(i, j); i = j
-        elif src.startswith("/*", i):
-            j = src.find("*/", i + 2)
-            j = n if j < 0 else j + 2
-            fill(i, j); i = j
-        elif src.startswith('"""', i):
-            j = src.find('"""', i + 3)
-            j = n if j < 0 else j + 3
-            while j < n and src[j] == '"':
-                j += 1
-            fill(i + 1, j - 1); i = j
-        elif src[i] == '"':
-            j = i + 1
-            while j < n and src[j] != '"' and src[j] != "\n":
-                j += 2 if src[j] == "\\" else 1
-            fill(i + 1, j); i = j + 1
-        elif src[i] == "'" and i + 2 < n and (src[i + 2] == "'" or
-                                             src[i + 1] == "\\"):
-            j = src.find("'", i + 2)
-            fill(i + 1, j); i = j + 1
-        else:
-            i += 1
+
+    def code(i, in_splice):
+        """Scan code from i; in a `${` splice, stop past its closing brace."""
+        depth = 0
+        while i < n:
+            if src.startswith("//", i):
+                j = src.find("\n", i)
+                j = n if j < 0 else j
+                fill(i, j); i = j
+            elif src.startswith("/*", i):
+                j = src.find("*/", i + 2)
+                j = n if j < 0 else j + 2
+                fill(i, j); i = j
+            elif src[i] == '"':
+                i = string(i, i > 0 and (src[i - 1].isalnum() or src[i - 1] == "_"))
+            elif src[i] == "'" and i + 2 < n and (src[i + 2] == "'" or
+                                                 src[i + 1] == "\\"):
+                j = src.find("'", i + 2)
+                fill(i + 1, j); i = j + 1
+            elif in_splice and src[i] == "{":
+                depth += 1; i += 1
+            elif in_splice and src[i] == "}":
+                if depth == 0:
+                    return i + 1
+                depth -= 1; i += 1
+            else:
+                i += 1
+        return i
+
+    def string(i, interpolated):
+        """Blank the literal opening at i; return the index past it."""
+        triple = src.startswith('"""', i)
+        j = i + (3 if triple else 1)
+        while j < n:
+            if triple and src.startswith('"""', j):
+                k = j + 3
+                while k < n and src[k] == '"':
+                    k += 1
+                fill(j, k - 3)
+                return k
+            if not triple and src[j] in '"\n':
+                return j + 1
+            if interpolated and src.startswith("${", j):
+                j = code(j + 2, True)
+            elif not triple and src[j] == "\\":
+                fill(j, min(j + 2, n)); j += 2
+            else:
+                fill(j, j + 1); j += 1
+        return n
+
+    code(0, False)
     return "".join(out)
 
 

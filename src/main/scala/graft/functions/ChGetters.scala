@@ -26,9 +26,11 @@ import graft.types.{ChKind, ChTypeInfo}
   *   - invalid IPs            -> zero-IP defaults
   *   - non-object for Map     -> empty map; non-array for Array -> empty array
   *
-  * Everything is pure Catalyst expressions (no Scala UDF in the hot path
-  * except the IPv6 validator), so whole-stage codegen and column pruning
-  * apply. Known deltas vs the reference, by design: variant objects
+  * A scalar is one codegen'd typed read ([[ScalarRead]]) that returns the
+  * getter's result unboxed; maps, arrays and Object('json') are built-in
+  * Catalyst expressions over those reads. No Scala UDF is in the hot
+  * path, so whole-stage codegen and column pruning apply. Known deltas
+  * vs the reference, by design: variant objects
   * serialize with sorted keys (fastjson preserves insertion order) and
   * non-numeric float literals (`inf`) are not valid JSON here.
   */
@@ -43,190 +45,34 @@ object ChGetters {
   /** The parsed message: one parse per row. */
   def parsed(raw: Column): Column = try_parse_json(raw)
 
-  /** O(1) binary type tag of a field (see [[VariantKind]]) — NOT
-    * schema_of_variant, which computes a string per value per branch.
-    *
-    * Integer literals up to int64 always store as LONG in variant; a
-    * zero-scale DECIMAL beyond int64 is a big integer literal; any
-    * fractional decimal/double means float syntax ("28.0"), which
-    * fastjson's Int64()/Uint64() reject.
-    */
-  private def kindOf(f: Column): Column = VariantKind.of(f)
-
-  import VariantKindOps._
-  private def isBoolTy(k: Column): Column = k === BoolK
-  private def isIntTag(k: Column): Column = k === IntK
-  private def isZeroScaleDec(k: Column): Column = k === Dec0K
-  private def isNumTy(k: Column): Column =
-    k.isin(IntK, FloatK, Dec0K, DecFracK)
-  private def isStrTy(k: Column): Column = k === StrK
-
-  private val Dec38 = DecimalType(38, 0)
-  private val TwoPow32 = 4294967296.0
-  private val MaxUint64 = BigDecimal(BigInt(1) << 64) - 1
-
-  private def asDec(f: Column): Column = try_variant_get(f, "$", "decimal(38,0)")
-  private def asDouble(f: Column): Column = try_variant_get(f, "$", "double")
-  // string payload only: every caller branches on StrK first
-  private def asString(f: Column): Column = VariantAccess.string(f)
-  private def asLong(f: Column): Column = try_variant_get(f, "$", "bigint")
-  private def asBool(f: Column): Column = try_variant_get(f, "$", "boolean")
-
-  private def defaultOr(nullable: Boolean, dflt: Column, t: DataType): Column =
-    if (nullable) lit(null).cast(t) else dflt.cast(t)
-
-  // ---- scalar getters (F1-F10) ---------------------------------------
-
-  /** F1: strict bool — only JSON true/false accepted. */
-  def getBool(f: Column, nullable: Boolean): Column =
-    when(isBoolTy(kindOf(f)), asBool(f))
-      .otherwise(defaultOr(nullable, lit(false), BooleanType))
-
-  /** F2: signed integer with range clamp; bool -> 0/1; floats rejected. */
-  def getSigned(f: Column, nullable: Boolean, t: DataType): Column = {
-    val (minV, maxV) = t match {
-      case ByteType    => (Byte.MinValue.toLong, Byte.MaxValue.toLong)
-      case ShortType   => (Short.MinValue.toLong, Short.MaxValue.toLong)
-      case IntegerType => (Int.MinValue.toLong, Int.MaxValue.toLong)
-      case LongType    => (Long.MinValue, Long.MaxValue)
-      case other       => throw new IllegalArgumentException(s"not a signed type: $other")
-    }
-    val k = kindOf(f)
-    // Go parity: v.Int64() fails on float syntax and outside int64 ->
-    // default; in-range values clamp to the target width
-    // (fastjson.go:129-151). IntK guarantees int64 range, so the clamp is
-    // pure long arithmetic — no decimal in the hot path.
-    when(isBoolTy(k), getBool(f, nullable = false).cast(t))
-      .when(isIntTag(k),
-        greatest(least(asLong(f), lit(maxV)), lit(minV)).cast(t))
-      .otherwise(defaultOr(nullable, lit(0L), t))
-  }
-
-  /** F3: unsigned integer — widened Spark target, clamp at max; negatives
-    * and > 2^64-1 rejected like Go's Uint64() error path.
-    */
-  def getUnsigned(f: Column, nullable: Boolean, maxU: BigDecimal, t: DataType): Column = {
-    val k = kindOf(f)
-    val l = asLong(f)
-    // the common path is int64-tagged and non-negative: pure long clamp;
-    // big integer literals in (int64max, 2^64) — which Go's Uint64()
-    // accepts — go through the rare decimal branch
-    val d = asDec(f)
-    val bigLit = isZeroScaleDec(k) &&
-      d > lit(Long.MaxValue).cast(Dec38) &&
-      d <= lit(MaxUint64.bigDecimal).cast(Dec38)
-    val fastMax =
-      if (maxU <= BigDecimal(Long.MaxValue)) least(l, lit(maxU.toLong)).cast(t)
-      else l.cast(t) // UInt64 target: any non-negative int64 fits
-    when(isBoolTy(k), getBool(f, nullable = false).cast(t))
-      .when(isIntTag(k) && l >= 0, fastMax)
-      .when(bigLit, least(d, lit(maxU.bigDecimal).cast(Dec38)).cast(t))
-      .otherwise(defaultOr(nullable, lit(0L), t))
-  }
-
-  def getUint8(f: Column, nullable: Boolean): Column =
-    getUnsigned(f, nullable, BigDecimal(255), ShortType)
-  def getUint16(f: Column, nullable: Boolean): Column =
-    getUnsigned(f, nullable, BigDecimal(65535), IntegerType)
-  def getUint32(f: Column, nullable: Boolean): Column =
-    getUnsigned(f, nullable, BigDecimal(4294967295L), LongType)
-  def getUint64(f: Column, nullable: Boolean): Column =
-    getUnsigned(f, nullable, MaxUint64, DecimalType(20, 0))
-
-  /** F4: float — numbers only (bools rejected: Go Float64() errors on
-    * bool), clamped at +max like fastjson.go:175-188.
-    */
-  def getFloat(f: Column, nullable: Boolean, t: DataType): Column = {
-    val maxV = t match {
-      case FloatType  => Float.MaxValue.toDouble
-      case DoubleType => Double.MaxValue
-      case other      => throw new IllegalArgumentException(s"not a float type: $other")
-    }
-    when(isNumTy(kindOf(f)), least(asDouble(f), lit(maxV)).cast(t))
-      .otherwise(defaultOr(nullable, lit(0.0), t))
-  }
-
-  /** F5: decimal via float64 round-trip (decimal.NewFromFloat parity),
-    * as DECIMAL(38, 9).
-    */
-  def getDecimal(f: Column, nullable: Boolean): Column = {
-    val t = DecimalType(38, 9)
-    when(isNumTy(kindOf(f)), asDouble(f).cast(t))
-      .otherwise(defaultOr(nullable, lit(0), t))
-  }
-
-  /** F6: string — strings kept as-is, any other value becomes its JSON
-    * text (fastjson.go:712-728).
-    */
-  def getString(f: Column, nullable: Boolean): Column = {
-    val k = kindOf(f)
-    when(isStrTy(k), asString(f))
-      .when(k.isNotNull && k =!= VariantKindOps.NullK, to_json(f))
-      .otherwise(defaultOr(nullable, lit(""), StringType))
-  }
-
-  // ---- datetime (F7/F8) ----------------------------------------------
-
-  private def epochTs: Column = timestamp_seconds(lit(0))
-
   def autoTimestamp(s: Column, timeZone: String): Column =
     toColumn(AutoTimestamp(toExpression(s), timeZone))
 
-  /** F7: epoch-number (scaled by timeUnit, range-checked to [0, 2^32)) or
-    * layout-detected string; anything else -> Epoch / NULL.
+  // ---- scalar getters (F1-F9) ----------------------------------------
+
+  /** The scalar getter of `kind` at the root of variant `f`: one typed
+    * read ([[ScalarRead]]) for every scalar kind, the object getter for
+    * Object('json'). Map values, array elements, static `fields` and
+    * CSV's JSON cells read through here; a message's top-level dims read
+    * the same typed read at their key ([[VariantAccess.read]]).
     */
-  def getDateTime(f: Column, nullable: Boolean, opts: ParseOpts,
-      dateTime64Precision: Int = 0): Column = {
-    val unit =
-      if (dateTime64Precision > 0) math.pow(10.0, -dateTime64Precision)
-      else opts.timeUnit
-    val k   = kindOf(f)
-    val sec = asDouble(f) * lit(unit)
-    val fromNum =
-      when(sec < 0.0 || sec >= TwoPow32, epochTs).otherwise(timestamp_seconds(sec))
-    val s = asString(f)
-    val fromStr = autoTimestamp(s, opts.timeZone)
-    val dflt = defaultOr(nullable, epochTs, TimestampType)
-    when(isNumTy(k), fromNum)
-      .when(isStrTy(k) && s =!= "", coalesce(fromStr, dflt))
-      .otherwise(dflt)
-  }
-
-  // ---- IP (F9) --------------------------------------------------------
-
-  private val validIpUdf = udf((s: String) => IpUtil.isValidIp(s))
-
-  private def uintToDottedQuad(u: Column): Column =
-    concat_ws(".",
-      shiftright(u, 24).bitwiseAND(255).cast("string"),
-      shiftright(u, 16).bitwiseAND(255).cast("string"),
-      shiftright(u, 8).bitwiseAND(255).cast("string"),
-      u.bitwiseAND(255).cast("string"))
-
-  /** F9: valid IP strings kept (either family — Go net.ParseIP); IPv4 also
-    * accepts a uint32 (rendered dotted-quad); invalid -> 0.0.0.0.
-    */
-  def getIPv4(f: Column, nullable: Boolean): Column = {
-    val k = kindOf(f)
-    val s = asString(f)
-    when(isStrTy(k), when(validIpUdf(s), s).otherwise(lit("0.0.0.0")))
-      .when(isIntTag(k), uintToDottedQuad(getUint32(f, nullable = false)))
-      .when(k.isNotNull && k =!= VariantKindOps.NullK, lit("0.0.0.0"))
-      .otherwise(defaultOr(nullable, lit(""), StringType))
-  }
-
-  def getIPv6(f: Column, nullable: Boolean): Column = {
-    val k = kindOf(f)
-    val s = asString(f)
-    when(isStrTy(k), when(validIpUdf(s), s).otherwise(lit("::")))
-      .when(k.isNotNull && k =!= VariantKindOps.NullK, lit("::"))
-      .otherwise(defaultOr(nullable, lit(""), StringType))
+  def getScalar(f: Column, kind: ChKind, nullable: Boolean, opts: ParseOpts,
+      dt64Precision: Int): Column = kind match {
+    case ChKind.Obj  => getObject(f)
+    case ChKind.MapK =>
+      throw new IllegalArgumentException("nested Map handled by getMap")
+    case _ => VariantAccess.read(f, None, kind, nullable, opts, dt64Precision)
   }
 
   // ---- object / map / array (F10-F12) --------------------------------
 
   private def asVariantMap(f: Column): Column =
     try_variant_get(f, "$", "map<string,variant>")
+
+  import VariantKindOps._
+  private def kindOf(f: Column): Column = VariantKind.of(f)
+  private def isStrTy(k: Column): Column = k === StrK
+  private def isNumTy(k: Column): Column = k.isin(IntK, FloatK, Dec0K, DecFracK)
 
   /** F10: JSON object keeping only string & number members, stringified
     * (Object('json') target; fastjson.go:681-710). Non-object -> empty map.
@@ -235,34 +81,8 @@ object ChGetters {
     val m = asVariantMap(f)
     val kept = map_filter(m, (_, v) => isStrTy(kindOf(v)) || isNumTy(kindOf(v)))
     val strd = transform_values(kept, (_, v) =>
-      when(isStrTy(kindOf(v)), asString(v)).otherwise(to_json(v)))
+      when(isStrTy(kindOf(v)), VariantAccess.string(v)).otherwise(to_json(v)))
     coalesce(strd, map().cast(MapType(StringType, StringType)))
-  }
-
-  /** Scalar getter dispatch for one variant value (used for map values and
-    * array elements; element defaults are the non-nullable defaults).
-    */
-  def getScalar(f: Column, kind: ChKind, nullable: Boolean, opts: ParseOpts,
-      dt64Precision: Int = 0): Column = kind match {
-    case ChKind.Bool     => getBool(f, nullable)
-    case ChKind.Int8     => getSigned(f, nullable, ByteType)
-    case ChKind.Int16    => getSigned(f, nullable, ShortType)
-    case ChKind.Int32    => getSigned(f, nullable, IntegerType)
-    case ChKind.Int64    => getSigned(f, nullable, LongType)
-    case ChKind.UInt8    => getUint8(f, nullable)
-    case ChKind.UInt16   => getUint16(f, nullable)
-    case ChKind.UInt32   => getUint32(f, nullable)
-    case ChKind.UInt64   => getUint64(f, nullable)
-    case ChKind.Float32  => getFloat(f, nullable, FloatType)
-    case ChKind.Float64  => getFloat(f, nullable, DoubleType)
-    case ChKind.Decimal  => getDecimal(f, nullable)
-    case ChKind.DateTime => getDateTime(f, nullable, opts, dt64Precision)
-    case ChKind.Str      => getString(f, nullable)
-    case ChKind.Obj      => getObject(f)
-    case ChKind.IPv4     => getIPv4(f, nullable)
-    case ChKind.IPv6     => getIPv6(f, nullable)
-    case ChKind.MapK =>
-      throw new IllegalArgumentException("nested Map handled by getMap")
   }
 
   /** F11: Map(K, V) — object keys cast to the map-key type, values cast

@@ -15,23 +15,27 @@ import org.apache.spark.unsafe.types.VariantVal
   */
 object VariantKindOps {
   // branch tags; stable ints compiled into the generated code
-  val NullK = 0; val BoolK = 1; val IntK = 2; val FloatK = 3
-  val Dec0K = 4; val DecFracK = 5; val StrK = 6; val ObjK = 7
-  val ArrK = 8; val OtherK = 9
+  final val NullK = 0; final val BoolK = 1; final val IntK = 2; final val FloatK = 3
+  final val Dec0K = 4; final val DecFracK = 5; final val StrK = 6; final val ObjK = 7
+  final val ArrK = 8; final val OtherK = 9
 
-  def kind(v: VariantVal): Int = {
+  def kind(v: VariantVal): Int = kindAt(v.getValue, 0)
+
+  /** The kind of the value at `pos` of `value`: the one switch every
+    * typed read ([[ScalarRead]]) and [[VariantKind]] make.
+    */
+  def kindAt(value: Array[Byte], pos: Int): Int = {
     import VariantUtil.Type
-    VariantUtil.getType(v.getValue, 0) match {
+    VariantUtil.getType(value, pos) match {
       case Type.NULL    => NullK
       case Type.BOOLEAN => BoolK
       case Type.LONG    => IntK // all JSON ints up to int64
       case Type.DOUBLE | Type.FLOAT => FloatK
-      case Type.DECIMAL =>
-        // zero-scale decimals are big integer literals (> int64); any
-        // fractional scale means float syntax in the source text
-        if (VariantUtil.getDecimalWithOriginalScale(v.getValue, 0)
-            .stripTrailingZeros().scale() <= 0) Dec0K
-        else DecFracK
+      // the decimal's scale as parsed (the byte after the header), not
+      // stripped: scale 0 is a big integer literal (> int64), any other
+      // scale float syntax in the source text, even "9223372036854775808.0",
+      // which fastjson's Int64()/Uint64() reject
+      case Type.DECIMAL => if (value(pos + 1) == 0) Dec0K else DecFracK
       case Type.STRING  => StrK
       case Type.OBJECT  => ObjK
       case Type.ARRAY   => ArrK

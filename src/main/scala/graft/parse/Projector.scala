@@ -55,29 +55,43 @@ object Projector {
     // ROADMAP direction 4 puts a parse-error counter on /metrics.
     val parsed = parsed0.filter(col("__msg__").isNotNull)
 
-    // Stage 1: navigate the message ONCE per dim into a variant column.
-    // Each getter inspects its field several times (type tag + casts);
-    // binding the extraction here keeps those as cheap attribute reads and
-    // stops CollapseProject from re-inlining the path walk per use.
-    val (metaDims, valueDims) = dims.partition(d => kafkaMeta.contains(d.name))
-    val fieldCols = valueDims.map { d =>
-      (fields.get(d.source) match {
-        // static fields win over message content (fastjson.go:54-58)
-        case Some(rawJson) => ChGetters.parsed(lit(rawJson))
-        case None          => VariantAccess.field(col("__msg__"), d.source)
-      }).as(s"__f_${d.name}")
-    }
-    val passthrough = parsed.columns.filter(_ != "__msg__").map(col).toSeq
-    val stage1 = parsed.select(passthrough ++ fieldCols: _*)
+    // Static fields win over message content (fastjson.go:54-58): such a
+    // dim reads the root of its own parsed JSON instead of its key.
+    def static(d: Dim): Option[Column] =
+      fields.get(d.source).map(rawJson => ChGetters.parsed(lit(rawJson)))
 
-    // Stage 2: tolerant typed getters over the bound fields.
+    // Stage 1: maps, arrays and Object('json') stay on the built-in path,
+    // over a variant field bound once here.
+    val (metaDims, valueDims) = dims.partition(d => kafkaMeta.contains(d.name))
+    val fieldCols = valueDims.filterNot(isScalar).map { d =>
+      static(d).getOrElse(VariantAccess.field(col("__msg__"), d.source)).as(s"__f_${d.name}")
+    }
+    val stage1 = parsed.select(parsed.columns.map(col).toSeq ++ fieldCols: _*)
+
+    // Stage 2: every scalar dim is ONE typed read over the message
+    // (graft.functions.ScalarRead): it finds its key in place, switches
+    // once on the value's type tag and returns the getter's result
+    // unboxed, with no field binding and no casts. That keeps the stage's
+    // generated code small: above HotSpot's 8,000-byte method limit the
+    // JIT never compiles processNext and the batch runs interpreted.
     val cols = dims.map { d =>
-      if (kafkaMeta.contains(d.name))
+      if (metaDims.contains(d))
         metaColumn(stage1, d).getOrElse(lit(null).cast(d.ti.sparkType).as(d.name))
-      else valueColumn(col(s"__f_${d.name}"), d, opts).as(d.name)
+      else if (!isScalar(d)) valueColumn(col(s"__f_${d.name}"), d, opts).as(d.name)
+      else {
+        val (v, key) = static(d) match {
+          case Some(v) => (v, None)
+          case None    => (col("__msg__"), Some(d.source))
+        }
+        VariantAccess.read(v, key, d.ti.kind, d.ti.nullable, opts, d.ti.dateTime64Precision)
+          .as(d.name)
+      }
     }
     withNotNullFilter(stage1.select(cols: _*), dims)
   }
+
+  private def isScalar(d: Dim): Boolean =
+    !d.ti.array && d.ti.kind != ChKind.MapK && d.ti.kind != ChKind.Obj
 
   /** Project a CSV-message DataFrame given the csvFormat column order
     * (P4 — RFC-4180, custom delimiter, strict arity; parser/csv.go).
@@ -125,8 +139,7 @@ object Projector {
   private def valueColumn(f: Column, d: Dim, opts: ParseOpts): Column =
     if (d.ti.kind == ChKind.MapK) ChGetters.getMap(f, d.ti, opts)
     else if (d.ti.array) ChGetters.getArray(f, d.ti, opts)
-    else ChGetters.getScalar(f, d.ti.kind, d.ti.nullable, opts,
-      d.ti.dateTime64Precision)
+    else ChGetters.getObject(f)
 
   /** F14/FL2 — a NULL in a NotNullable dim drops the whole message. */
   private def withNotNullFilter(df: DataFrame, dims: Seq[Dim]): DataFrame = {

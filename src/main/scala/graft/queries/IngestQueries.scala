@@ -8,7 +8,7 @@ import graft.functions.{ChGetters, VariantAccess}
 import graft.functions.ChGetters.ParseOpts
 import graft.parse.CsvGetters
 import graft.shard.Sharding
-import graft.types.ChType
+import graft.types.{ChKind, ChType}
 
 /** Reference-parity ingest surface (SURVEY §2), phrased over the driver's
   * parquet tables: JSON and CSV parsing into the tolerant typed
@@ -43,16 +43,16 @@ object IngestQueries {
           col("value").as("v"),
           date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_str"))).as("raw"))
       val msg = ChGetters.parsed(col("raw"))
-      def f(n: String) = VariantAccess.field(msg, n)
+      def f(n: String, k: ChKind) = VariantAccess.read(msg, Some(n), k, nullable = false, opts, 0)
       raw.select(
         col("event_id"),
-        ChGetters.getSigned(f("id"), nullable = false, LongType).as("id_i64"),
-        ChGetters.getUint8(f("uid"), nullable = false).cast(IntegerType).as("uid_u8"),
-        ChGetters.getString(f("etype"), nullable = false).as("etype_str"),
-        ChGetters.getFloat(f("v"), nullable = false, DoubleType).as("v_f64"),
-        ChGetters.getDateTime(f("ts_str"), nullable = false, opts).as("ts_parsed"),
-        ChGetters.getSigned(f("v"), nullable = false, LongType).as("v_as_int"),
-        ChGetters.getBool(f("etype"), nullable = false).as("etype_as_bool"))
+        f("id", ChKind.Int64).as("id_i64"),
+        f("uid", ChKind.UInt8).cast(IntegerType).as("uid_u8"),
+        f("etype", ChKind.Str).as("etype_str"),
+        f("v", ChKind.Float64).as("v_f64"),
+        f("ts_str", ChKind.DateTime).as("ts_parsed"),
+        f("v", ChKind.Int64).as("v_as_int"),
+        f("etype", ChKind.Bool).as("etype_as_bool"))
         .orderBy(col("event_id"))
     },
 

@@ -14,7 +14,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   *   - `/metrics` — Prometheus exposition text from [[Metrics]]
   *   - `/ready`   — 200 once the app reports ready (queries started),
   *                  503 before
-  *   - `/live`    — 200 while the driver is healthy, 503 otherwise
+  *   - `/live`    — 200 whenever the driver answers at all
   *
   * Uses the JDK's built-in httpserver — no new dependency; this is a
   * low-rate ops endpoint, not a data path. Bind port 0 to let the OS pick
@@ -23,8 +23,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 final class OpsServer(
     metrics: Metrics,
     port: Int = 0,
-    ready: () => Boolean = () => true,
-    live: () => Boolean = () => true) extends AutoCloseable {
+    ready: () => Boolean = () => true) extends AutoCloseable {
 
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
   // A small pool so a slow /state render can't block /live (the liveness
@@ -90,8 +89,7 @@ final class OpsServer(
     if (ready()) respond(ex, 200, "text/plain", "ready\n")
     else respond(ex, 503, "text/plain", "not ready\n")) _)
   server.createContext("/live", guarded(ex =>
-    if (live()) respond(ex, 200, "text/plain", "live\n")
-    else respond(ex, 503, "text/plain", "dead\n")) _)
+    respond(ex, 200, "text/plain", "live\n")) _)
 
   /** The actual bound port (after `port = 0` auto-assignment). */
   def boundPort: Int = server.getAddress.getPort

@@ -1,7 +1,9 @@
 package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.{BenchScale100, GraftSession, SparkEntry}
@@ -18,11 +20,26 @@ import graft.telemetry.{Measure, StageTelemetry}
   * tier's shuffle partitions, exactly as the bench times it. Every run
   * prints its wall, rows, 1-min load, external busy cores and IO-stall
   * fraction. The last run also prints its job table (with the driver
-  * gap before each job), its stage table, and the exchange, join and
-  * scan lines of its executed plan. The session is the bench's
+  * gap before each job), its stage table, the exchange, join and scan
+  * lines of its executed plan, and each whole-stage codegen stage's
+  * largest generated method. The session is the bench's
   * (`GraftSession.local`, SPARK_GRAFT_CPUS cores).
   */
-object Profile {
+object Profile extends AdaptiveSparkPlanHelper {
+  /** HotSpot's `HugeMethodLimit`: the JIT never compiles a method of more
+    * bytecode bytes (unless `-XX:-DontCompileHugeMethods`), so a codegen
+    * stage whose `processNext` is larger runs in the interpreter.
+    */
+  val HugeMethodLimit = 8000
+
+  /** Each whole-stage codegen stage of `plan`, through adaptive query
+    * stages and subqueries, with its largest generated method in bytes.
+    */
+  def codegenMethodSizes(plan: SparkPlan): Seq[(Int, Int)] =
+    collectWithSubqueries(plan) { case ws: WholeStageCodegenExec =>
+      ws.codegenStageId -> CodeGenerator.compile(ws.doCodeGen()._2)._2.maxMethodCodeSize
+    }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: Profile <sfDir> <name[,name...]> [runs]")
@@ -123,6 +140,12 @@ object Profile {
       .filter(l => l.contains("Exchange") || l.contains("Join") ||
         l.contains("Scan"))
       .foreach(l => println("  " + l.take(160))))
+    println(s"PROFILE $name codegen (last run: largest generated method per " +
+      s"stage; over $HugeMethodLimit bytes HotSpot does not JIT-compile it)")
+    plans.qe.foreach(qe => codegenMethodSizes(qe.executedPlan).foreach { case (id, bytes) =>
+      println(f"  stage *($id%d) max_method=$bytes%6d B" +
+        (if (bytes > HugeMethodLimit) "  NOT JIT-compiled (interpreted)" else ""))
+    })
   }
 
   private def mb(b: Long): String = f"${b / 1e6}%9.2f MB"

@@ -65,6 +65,10 @@ class ChGettersSpec extends AnyFunSuite with LocalSpark {
   private def g(name: String) =
     VariantAccess.field(ChGetters.parsed(col("raw")), name)
 
+  /** The scalar getter of `kind` at the root of field `f`. */
+  private def get(f: org.apache.spark.sql.Column, kind: ChKind, nullable: Boolean = false) =
+    ChGetters.getScalar(f, kind, nullable, opts, 0)
+
   private def micros(i: Instant): Long = i.getEpochSecond * 1000000L + i.getNano / 1000L
 
   private def tsOf(r: Row, i: Int): Long =
@@ -72,12 +76,12 @@ class ChGettersSpec extends AnyFunSuite with LocalSpark {
 
   test("bool getter (F1)") {
     val r = row(
-      "t"  -> ChGetters.getBool(g("bool_true"), nullable = false),
-      "f"  -> ChGetters.getBool(g("bool_false"), nullable = false),
-      "n"  -> ChGetters.getBool(g("num_int"), nullable = false),
-      "nn" -> ChGetters.getBool(g("num_int"), nullable = true),
-      "m"  -> ChGetters.getBool(g("not_exist"), nullable = false),
-      "mn" -> ChGetters.getBool(g("not_exist"), nullable = true))
+      "t"  -> get(g("bool_true"), ChKind.Bool),
+      "f"  -> get(g("bool_false"), ChKind.Bool),
+      "n"  -> get(g("num_int"), ChKind.Bool),
+      "nn" -> get(g("num_int"), ChKind.Bool, nullable = true),
+      "m"  -> get(g("not_exist"), ChKind.Bool),
+      "mn" -> get(g("not_exist"), ChKind.Bool, nullable = true))
     assert(r.getBoolean(0) === true)
     assert(r.getBoolean(1) === false)
     assert(r.getBoolean(2) === false)
@@ -88,11 +92,11 @@ class ChGettersSpec extends AnyFunSuite with LocalSpark {
 
   test("signed int getters with clamp (F2)") {
     val r = row(
-      "i"   -> ChGetters.getSigned(g("num_int"), nullable = false, LongType),
-      "b"   -> ChGetters.getSigned(g("bool_true"), nullable = false, LongType),
-      "f"   -> ChGetters.getSigned(g("num_float"), nullable = false, LongType),
-      "s"   -> ChGetters.getSigned(g("str_int"), nullable = false, LongType),
-      "sn"  -> ChGetters.getSigned(g("str_int"), nullable = true, LongType),
+      "i"   -> get(g("num_int"), ChKind.Int64),
+      "b"   -> get(g("bool_true"), ChKind.Int64),
+      "f"   -> get(g("num_float"), ChKind.Int64),
+      "s"   -> get(g("str_int"), ChKind.Int64),
+      "sn"  -> get(g("str_int"), ChKind.Int64, nullable = true),
       "arr" -> ChGetters.getArray(g("array_num_int_1"),
         ChTypeInfo(ChKind.Int64, array = true), opts),
       "arr8" -> ChGetters.getArray(g("array_num_int_2"),
@@ -128,13 +132,13 @@ class ChGettersSpec extends AnyFunSuite with LocalSpark {
 
   test("float/decimal getters (F4/F5)") {
     val r = row(
-      "f"  -> ChGetters.getFloat(g("num_float"), nullable = false, DoubleType),
-      "i"  -> ChGetters.getFloat(g("num_int"), nullable = false, DoubleType),
-      "b"  -> ChGetters.getFloat(g("bool_true"), nullable = false, DoubleType),
-      "s"  -> ChGetters.getFloat(g("str_float"), nullable = false, DoubleType),
+      "f"  -> get(g("num_float"), ChKind.Float64),
+      "i"  -> get(g("num_int"), ChKind.Float64),
+      "b"  -> get(g("bool_true"), ChKind.Float64),
+      "s"  -> get(g("str_float"), ChKind.Float64),
       "big"-> ChGetters.getArray(g("array_num_int_1"),
         ChTypeInfo(ChKind.Float64, array = true), opts),
-      "d"  -> ChGetters.getDecimal(g("num_float"), nullable = false))
+      "d"  -> get(g("num_float"), ChKind.Decimal))
     assert(r.getDouble(0) === 123.321)
     assert(r.getDouble(1) === 123.0)
     assert(r.getDouble(2) === 0.0) // bool rejected for float target
@@ -146,13 +150,13 @@ class ChGettersSpec extends AnyFunSuite with LocalSpark {
 
   test("string getter (F6)") {
     val r = row(
-      "s"   -> ChGetters.getString(g("str"), nullable = false),
-      "dot" -> ChGetters.getString(g("app.kubernetes.io/name"), nullable = false),
-      "i"   -> ChGetters.getString(g("num_int"), nullable = false),
-      "f"   -> ChGetters.getString(g("num_float"), nullable = false),
-      "b"   -> ChGetters.getString(g("bool_true"), nullable = false),
-      "nul" -> ChGetters.getString(g("null"), nullable = false),
-      "nuln"-> ChGetters.getString(g("null"), nullable = true),
+      "s"   -> get(g("str"), ChKind.Str),
+      "dot" -> get(g("app.kubernetes.io/name"), ChKind.Str),
+      "i"   -> get(g("num_int"), ChKind.Str),
+      "f"   -> get(g("num_float"), ChKind.Str),
+      "b"   -> get(g("bool_true"), ChKind.Str),
+      "nul" -> get(g("null"), ChKind.Str),
+      "nuln"-> get(g("null"), ChKind.Str, nullable = true),
       "arr" -> ChGetters.getArray(g("array_num_int_1"),
         ChTypeInfo(ChKind.Str, array = true), opts))
     assert(r.getString(0) === "escaped_\"ws")
@@ -168,15 +172,15 @@ class ChGettersSpec extends AnyFunSuite with LocalSpark {
 
   test("datetime getter (F7/F8)") {
     val r = row(
-      "d1"  -> ChGetters.getDateTime(g("str_date_1"), nullable = false, opts),
-      "d2"  -> ChGetters.getDateTime(g("str_date_2"), nullable = false, opts),
-      "r1"  -> ChGetters.getDateTime(g("str_time_rfc3339_1"), nullable = false, opts),
-      "r2"  -> ChGetters.getDateTime(g("str_time_rfc3339_2"), nullable = false, opts),
-      "c1"  -> ChGetters.getDateTime(g("str_time_clickhouse_1"), nullable = false, opts),
-      "c2"  -> ChGetters.getDateTime(g("str_time_clickhouse_2"), nullable = false, opts),
-      "num" -> ChGetters.getDateTime(g("num_int"), nullable = false, opts),
-      "bad" -> ChGetters.getDateTime(g("str"), nullable = false, opts),
-      "badn"-> ChGetters.getDateTime(g("str"), nullable = true, opts),
+      "d1"  -> get(g("str_date_1"), ChKind.DateTime),
+      "d2"  -> get(g("str_date_2"), ChKind.DateTime),
+      "r1"  -> get(g("str_time_rfc3339_1"), ChKind.DateTime),
+      "r2"  -> get(g("str_time_rfc3339_2"), ChKind.DateTime),
+      "c1"  -> get(g("str_time_clickhouse_1"), ChKind.DateTime),
+      "c2"  -> get(g("str_time_clickhouse_2"), ChKind.DateTime),
+      "num" -> get(g("num_int"), ChKind.DateTime),
+      "bad" -> get(g("str"), ChKind.DateTime),
+      "badn"-> get(g("str"), ChKind.DateTime, nullable = true),
       "arr" -> ChGetters.getArray(g("array_str_date_1"),
         ChTypeInfo(ChKind.DateTime, array = true), opts))
     def iso(s: String) = micros(Instant.parse(s))
@@ -236,14 +240,14 @@ class ChGettersSpec extends AnyFunSuite with LocalSpark {
     val msg = ChGetters.parsed(col("raw"))
     def f(n: String) = VariantAccess.field(msg, n)
     val r = df.select(
-      ChGetters.getIPv4(f("v4"), nullable = false).as("a"),
-      ChGetters.getIPv4(f("bad"), nullable = false).as("b"),
-      ChGetters.getIPv4(f("v6"), nullable = false).as("c"),
-      ChGetters.getIPv4(f("num"), nullable = false).as("d"),
-      ChGetters.getIPv4(f("obj"), nullable = false).as("e"),
-      ChGetters.getIPv4(f("missing"), nullable = false).as("g"),
-      ChGetters.getIPv6(f("v6"), nullable = false).as("h"),
-      ChGetters.getIPv6(f("bad"), nullable = false).as("i")).head()
+      get(f("v4"), ChKind.IPv4).as("a"),
+      get(f("bad"), ChKind.IPv4).as("b"),
+      get(f("v6"), ChKind.IPv4).as("c"),
+      get(f("num"), ChKind.IPv4).as("d"),
+      get(f("obj"), ChKind.IPv4).as("e"),
+      get(f("missing"), ChKind.IPv4).as("g"),
+      get(f("v6"), ChKind.IPv6).as("h"),
+      get(f("bad"), ChKind.IPv6).as("i")).head()
     assert(r.getString(0) === "192.168.1.1")
     assert(r.getString(1) === "0.0.0.0")
     assert(r.getString(2) === "2001:db8::1") // Go net.ParseIP accepts either family
@@ -261,16 +265,35 @@ class ChGettersSpec extends AnyFunSuite with LocalSpark {
     val msg = ChGetters.parsed(col("raw"))
     def f(n: String) = VariantAccess.field(msg, n)
     val r = df.select(
-      ChGetters.getSigned(f("fi"), nullable = false, LongType).as("a"),
-      ChGetters.getUint8(f("fi"), nullable = false).as("b"),
-      ChGetters.getSigned(f("i"), nullable = false, LongType).as("c"),
-      ChGetters.getFloat(f("fi"), nullable = false, DoubleType).as("d"),
-      ChGetters.getSigned(f("fn"), nullable = false, LongType).as("e")).head()
+      get(f("fi"), ChKind.Int64).as("a"),
+      get(f("fi"), ChKind.UInt8).as("b"),
+      get(f("i"), ChKind.Int64).as("c"),
+      get(f("fi"), ChKind.Float64).as("d"),
+      get(f("fn"), ChKind.Int64).as("e")).head()
     assert(r.getLong(0) === 0L)
     assert(r.getShort(1) === 0)
     assert(r.getLong(2) === 28L)
     assert(r.getDouble(3) === 28.0)
     assert(r.getLong(4) === 0L)
+  }
+
+  test("float-syntax big literals are rejected by unsigned getters") {
+    // past int64 the parse keeps ".0" and ".00" as decimals of scale 1
+    // and 2: float syntax still, which fastjson's Uint64() rejects; the
+    // same digits without a fraction are a big integer literal and clamp
+    val df = Seq("""{"a":9223372036854775808.0,"b":18446744073709551615.00,""" +
+      """"c":9223372036854775808,"d":18446744073709551615}""").toDF("raw")
+    val msg = ChGetters.parsed(col("raw"))
+    val kinds = Seq(ChKind.UInt8, ChKind.UInt16, ChKind.UInt32, ChKind.UInt64)
+    val keys = Seq("a", "b", "c", "d")
+    val r = df.select(kinds.flatMap(k => keys.map(n =>
+      get(VariantAccess.field(msg, n), k).cast(StringType))): _*).head()
+    val got = r.toSeq.grouped(keys.size).toSeq
+    assert(got === Seq(
+      Seq("0", "0", "255", "255"),
+      Seq("0", "0", "65535", "65535"),
+      Seq("0", "0", "4294967295", "4294967295"),
+      Seq("0", "0", "9223372036854775808", "18446744073709551615")))
   }
 
   test("array edge cases (F12)") {

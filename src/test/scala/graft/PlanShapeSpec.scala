@@ -76,18 +76,63 @@ class PlanShapeSpec extends AnyFunSuite with LocalSpark {
     // and the message parses exactly once (the Once barrier holds)
     assert("parseJson".r.findAllIn(p).length === 1,
       s"parse_json must run once per row:\n$p")
-    assertNoFieldRebuild(p, dims = 3)
+    assertOneReadPerDim(projected, dims = 3)
   }
 
-  /** Each dim reads its field in place from the parsed message: one
-    * `variant_field` per dim, and no variant-typed `try_variant_get`
-    * (which rebuilds the field through a fresh VariantBuilder).
+  /** Each scalar dim is one typed read in place over the parsed message:
+    * one `variant_read` per dim, and no `try_variant_get` (a cast per
+    * call, or a field rebuilt through a fresh VariantBuilder) or
+    * `variant_kind` anywhere in the projection.
     */
-  private def assertNoFieldRebuild(p: String, dims: Int): Unit = {
-    assert(!"try_variant_get\\([^)]*, VariantType,".r.findFirstIn(p).isDefined,
-      s"a field is rebuilt through try_variant_get(..., variant):\n$p")
-    assert("variant_field\\(".r.findAllIn(p).length === dims,
-      s"expected one in-place field read per dim:\n$p")
+  private def assertOneReadPerDim(df: DataFrame, dims: Int): Unit = {
+    import graft.functions.{VariantKind, VariantRead}
+    import org.apache.spark.sql.catalyst.expressions.variant.VariantGet
+    val p = df.queryExecution.executedPlan
+    // the expressions themselves: a wide Project's string is truncated
+    val exprs = p.collect { case n => n.expressions }.flatten.flatMap(_.collect { case e => e })
+    assert(!exprs.exists(_.isInstanceOf[VariantGet]),
+      s"a getter casts through try_variant_get:\n$p")
+    assert(!exprs.exists(_.isInstanceOf[VariantKind]), s"a getter branches on variant_kind:\n$p")
+    assert(exprs.count(_.isInstanceOf[VariantRead]) === dims,
+      s"expected one typed read per scalar dim:\n$p")
+  }
+
+  test("the access-log projection compiles to methods the JIT will compile") {
+    import graft.config.TaskConfig
+    import graft.functions.ChGetters.ParseOpts
+    import graft.parse.Projector.Dim
+    import graft.shard.Sharding
+    import graft.streaming.Pipeline
+    import graft.types.ChType
+    // the access_log benchmark's batch: 27 dims (two times, three ints,
+    // 21 strings, the stamp), the two __kafka_* dims the default shard
+    // policy reads, and the offset shard column
+    def dim(n: String, t: String) = Dim(n, ChType.whichType(t))
+    val strs = Seq("@hostname", "@ip", "@path", "@message", "agent", "auth", "clientIp",
+      "device_family", "httpversion", "ident", "os_family", "os_major", "os_minor",
+      "referrer", "request", "response", "userAgent_family", "userAgent_major",
+      "userAgent_minor", "verb", "xforwardfor")
+    val dims = Seq(dim("@collectiontime", "DateTime"), dim("timestamp", "DateTime"),
+      dim("@lineno", "Int64"), dim("bytes", "Int64"), dim("requesttime", "Int64")) ++
+      strs.map(dim(_, "String")) :+ dim("stamp", "Int64")
+    val meta = Seq(dim("__kafka_offset", "Int64"), dim("__kafka_partition", "Int64"))
+    val task = TaskConfig(name = "access_log", topic = "access_log", consumerGroup = "g",
+      tableName = "default.access_log")
+    val src = Tables(spark, sf).events.select(
+      to_json(struct(col("event_id").as("@lineno"), col("event_type").as("verb"))).as("value"),
+      lit(0).as("partition"), crc32(col("event_type").cast("binary")).as("offset"))
+    val batch = Sharding.partitionByShard(Pipeline.project(src, task, dims ++ meta),
+      Pipeline.shardColumn(task, dims ++ meta, 3), 3)
+      .select(dims.map(d => col(d.name)) :+ col("__shard__"): _*)
+    assert(dims.size === 27 && ParseOpts() === ParseOpts(task.timeZone, task.timeUnit))
+    val plan = batch.queryExecution.executedPlan
+    assertOneReadPerDim(batch, dims = 27) // the meta dims come from source columns
+    val sizes = graft.tools.Profile.codegenMethodSizes(plan)
+    assert(sizes.nonEmpty, s"no whole-stage codegen stage:\n$plan")
+    sizes.foreach { case (stage, bytes) =>
+      assert(bytes <= graft.tools.Profile.HugeMethodLimit, s"codegen stage $stage's largest method is $bytes bytes; " +
+        s"HotSpot does not JIT-compile a method over 8,000 bytes:\n$plan")
+    }
   }
 
   test("csv projection parses each line exactly once") {
@@ -381,7 +426,7 @@ class PlanShapeSpec extends AnyFunSuite with LocalSpark {
       // itself must not re-parse
       assert("parseJson".r.findAllIn(p).length <= 1,
         s"message must parse at most once on the dynamic-schema path:\n$p")
-      assertNoFieldRebuild(p, dims = 2)
+      assertOneReadPerDim(projected, dims = 2)
     } finally stage.unpersist()
   }
 
