@@ -12,7 +12,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData, MapData}
 import org.apache.spark.sql.graftbridge.CatalystBridge.{toColumn, toExpression}
 import org.apache.spark.sql.types._
-import org.apache.spark.types.variant.Variant
 import org.apache.spark.types.variant.VariantUtil._
 import org.apache.spark.unsafe.types.{UTF8String, VariantVal}
 
@@ -39,12 +38,13 @@ object VariantAccessOps {
     * is a variant null, not a SQL NULL.
     */
   def field(v: VariantVal, key: Array[Byte]): VariantVal = {
-    val value = v.getValue
-    val at = locate(value, v.getMetadata, key)
-    if (at < 0) null
-    else new VariantVal(
-      java.util.Arrays.copyOfRange(value, at, at + valueSize(value, at)), v.getMetadata)
+    val at = locate(v.getValue, v.getMetadata, key)
+    if (at < 0) null else valueAt(v.getValue, at, v.getMetadata)
   }
+
+  /** A copy of the value at `at` of `value`, over the metadata `meta`. */
+  def valueAt(value: Array[Byte], at: Int, meta: Array[Byte]): VariantVal =
+    new VariantVal(java.util.Arrays.copyOfRange(value, at, at + valueSize(value, at)), meta)
 
   /** The offset in `value` of top-level field `key` (UTF-8), found in
     * place; -1 when the root is not an object or has no such key. The
@@ -118,11 +118,7 @@ object VariantAccessOps {
 
     def fieldOffset(i: Int): Int = dataStart + readUnsigned(value, offStart + i * offSize, offSize)
 
-    def fieldValue(i: Int, meta: Array[Byte]): VariantVal = {
-      val start = fieldOffset(i)
-      new VariantVal(
-        java.util.Arrays.copyOfRange(value, start, start + valueSize(value, start)), meta)
-    }
+    def fieldValue(i: Int, meta: Array[Byte]): VariantVal = valueAt(value, fieldOffset(i), meta)
   }
 
   /** The metadata key dictionary (variant spec: header, dictionary size,
@@ -283,11 +279,8 @@ object ScalarRead {
   }
 
   /** Any value's JSON text, as `to_json` writes the variant. */
-  def json(v: VariantVal, at: Int): UTF8String = {
-    val value = v.getValue
-    UTF8String.fromString(new Variant(java.util.Arrays.copyOfRange(value, at,
-      at + valueSize(value, at)), v.getMetadata).toJson(java.time.ZoneOffset.UTC))
-  }
+  def json(v: VariantVal, at: Int): UTF8String = UTF8String.fromString(
+    VariantAccessOps.valueAt(v.getValue, at, v.getMetadata).toJson(java.time.ZoneOffset.UTC))
 
   def defaultString(nullable: Boolean): UTF8String =
     if (nullable) null else UTF8String.EMPTY_UTF8

@@ -62,8 +62,7 @@ object Projector {
 
     // Stage 1: maps, arrays and Object('json') stay on the built-in path,
     // over a variant field bound once here.
-    val (metaDims, valueDims) = dims.partition(d => kafkaMeta.contains(d.name))
-    val fieldCols = valueDims.filterNot(isScalar).map { d =>
+    val fieldCols = dims.filterNot(d => kafkaMeta.contains(d.name) || isScalar(d)).map { d =>
       static(d).getOrElse(VariantAccess.field(col("__msg__"), d.source)).as(s"__f_${d.name}")
     }
     val stage1 = parsed.select(parsed.columns.map(col).toSeq ++ fieldCols: _*)
@@ -75,7 +74,7 @@ object Projector {
     // generated code small: above HotSpot's 8,000-byte method limit the
     // JIT never compiles processNext and the batch runs interpreted.
     val cols = dims.map { d =>
-      if (metaDims.contains(d))
+      if (kafkaMeta.contains(d.name))
         metaColumn(stage1, d).getOrElse(lit(null).cast(d.ti.sparkType).as(d.name))
       else if (!isScalar(d)) valueColumn(col(s"__f_${d.name}"), d, opts).as(d.name)
       else {
