@@ -407,8 +407,13 @@ final case class DecimalRead(key: Option[String], nullable: Boolean) extends Sca
     if (!ScalarRead.isNumber(k)) { if (nullable) null else Decimal(0L, 38, 9) }
     else {
       // the double -> DECIMAL(38, 9) cast: round half up, NULL on overflow
-      val d = Decimal(ScalarRead.number(v.getValue, at, k))
-      if (d.changePrecision(38, 9)) d else null
+      // and on +-Infinity (a number past the double range parses to one)
+      val x = ScalarRead.number(v.getValue, at, k)
+      if (x.isInfinite) null
+      else {
+        val d = Decimal(x)
+        if (d.changePrecision(38, 9)) d else null
+      }
     }
   }
   def eval(v: VariantVal): Any = read(v)

@@ -20,14 +20,6 @@ import graft.types.ChKind
   * the tag, which comes from `schema_of_variant` (see `kindOf`) instead
   * of the main code's `variant_kind`.
   */
-/** The scale a variant decimal was parsed with ("28.0" has scale 1). */
-case class ParsedScale(child: Expression) extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = IntegerType
-  override protected def nullSafeEval(v: Any): Any =
-    VariantUtil.getDecimalWithOriginalScale(v.asInstanceOf[VariantVal].getValue, 0).scale
-  override protected def withNewChildInternal(c: Expression): ParsedScale = copy(child = c)
-}
-
 object ColumnGetters {
 
   /** The field's kind tag ([[VariantKindOps]]'s ints), classified from
@@ -250,4 +242,12 @@ object ColumnGetters {
     case ChKind.MapK =>
       throw new IllegalArgumentException("nested Map handled by getMap")
   }
+}
+
+/** The scale a variant decimal was parsed with ("28.0" has scale 1). */
+case class ParsedScale(child: Expression) extends UnaryExpression with CodegenFallback {
+  override def dataType: DataType = IntegerType
+  override protected def nullSafeEval(v: Any): Any =
+    VariantUtil.getDecimalWithOriginalScale(v.asInstanceOf[VariantVal].getValue, 0).scale
+  override protected def withNewChildInternal(c: Expression): ParsedScale = copy(child = c)
 }

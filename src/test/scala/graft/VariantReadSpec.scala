@@ -23,10 +23,11 @@ import graft.types.ChKind
   * projection itself is generated code). The values cover a missing key
   * and a JSON null, bools, every target's clamp edges and one past them,
   * 2^63 and 2^64 +- 1, big and fractional decimals with their ".0" forms,
-  * doubles up to +-max in exponent form, empty, 63/64-byte, 10 KB and
-  * non-ASCII strings, nested objects and arrays, valid and invalid IPs,
-  * epoch numbers around 0 and 2^32 under a millisecond timeUnit and
-  * DateTime64(3), and a sample of each of the 27 date layouts.
+  * doubles up to +-max in exponent form and past it (+-Infinity), empty,
+  * 63/64-byte, 10 KB and non-ASCII strings, nested objects and arrays,
+  * valid and invalid IPs, epoch numbers around 0 and 2^32 under a
+  * millisecond timeUnit and DateTime64(3), and a sample of each of the
+  * 27 date layouts.
   *
   * Both sides decode strings and object keys the same way, so non-ASCII
   * values are compared under whatever default charset the JVM has.
@@ -85,6 +86,8 @@ class VariantReadSpec extends AnyFunSuite with LocalSpark {
     "1.7976931348623157e308", "-1.7976931348623157e308", "1.7976931348623157E+308",
     "3.4028234663852886e38", "3.5e38", "-3.5e38", "1e-300", "4.9e-324", "1.5e300",
     "-0.0", "1E2", "2.5e-3", "1e19", "1.8446744073709552e19", "-1e19",
+    // past the double range: parsed as a DOUBLE of +-Infinity
+    "1e400", "-1e400", "9" * 400,
     // epoch numbers around 0 and 2^32, in seconds and in milliseconds
     "1500000000", "1500000000123", "4294967295999", "4294967296000", "4294967295.5",
     "1500000000.5", "-0.001", "0.0",
