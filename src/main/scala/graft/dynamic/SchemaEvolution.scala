@@ -3,21 +3,26 @@ package graft.dynamic
 import java.time.ZoneId
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.{ChGetters, GoLayouts, VariantAccess, VariantKind, VariantKindOps}
+import graft.functions.{ChGetters, GoLayouts, VariantAccessOps, VariantKindOps}
+import graft.functions.VariantKindOps.{BoolK, Dec0K, DecFracK, FloatK, IntK, NullK, StrK}
+import graft.parse.Projector.Dim
 import graft.sink.ChSql
-import graft.types.ChKind
+import graft.types.{ChKind, ChTypeInfo}
 
 /** Dynamic schema detection + evolution (SURVEY §2.9 D1-D3; reference
   * `parser/fastjson.go:512-658`, `task/task.go:198-219`,
   * `output/clickhouse.go:550-659`).
   *
-  * Detection is a distributed aggregation over the micro-batch: explode
-  * each message's unseen top-level fields, keep keys passing the white/
-  * black lists, and merge each key's variant type tags. Driver-side, the
-  * merged tag maps to a ClickHouse column type with the reference's rules:
+  * Detection is one scan-local pass over the micro-batch, with no
+  * shuffle: each task walks its messages' top-level members in place and
+  * folds every unseen key into the set of its values' kinds plus its
+  * first string value ([[KeyFold]]); the driver merges the tasks' folds,
+  * keeps keys passing the white/black lists, and maps each fold to a
+  * ClickHouse column type with the reference's rules:
   *
   *   - bool -> Bool; integer -> Int64; float/decimal -> Float64
   *   - string -> DateTime when the first sampled value matches a layout,
@@ -26,8 +31,9 @@ import graft.types.ChKind
   *     go.test.sh golden shows newkey05-10 intentionally NOT added)
   *
   * Evolution then emits `ALTER TABLE … ADD COLUMN IF NOT EXISTS` DDL and
-  * the caller restarts the streaming query with the refreshed schema —
-  * the same stop-flush-alter-restart cycle the reference runs.
+  * widens the task's dims, inside the batch that found the keys: that
+  * batch and every later one are written under the widened schema, and
+  * the query keeps running.
   */
 object SchemaEvolution {
 
@@ -37,76 +43,105 @@ object SchemaEvolution {
       maxDims: Int = Int.MaxValue,
       timeZone: String = "UTC")
 
+  /** What a batch shows of one new key: bit `k` of `kinds` is set when
+    * some value has [[VariantKindOps]] kind `k`; `sample` is the first
+    * string value seen, null when there is none.
+    */
+  final case class KeyFold(kinds: Int, sample: String)
+
   /** D1+D2 — returns (key -> inferred kind) for new keys in the batch.
     *
     * `parsedCol`: when the caller already parsed `value` (the pipeline's
     * single-parse invariant — reference piggybacks GetNewKeys on the one
     * parse, parser/fastjson.go:512-536), pass that column's name and the
-    * detection aggregates over it instead of re-parsing.
+    * detection walks it instead of re-parsing.
     */
   def detectNewKeys(batch: DataFrame, knownKeys: Set[String],
       policy: NewKeyPolicy = NewKeyPolicy(),
       parsedCol: Option[String] = None): Seq[(String, ChKind)] = {
     val white = policy.whiteList.map(Pattern.compile(_))
     val black = policy.blackList.map(Pattern.compile(_))
-
-    val msg = parsedCol.map(col).getOrElse(ChGetters.parsed(col("value")))
-    // only the members outside knownKeys leave the message, each read in
-    // place (no per-value rebuild of the known ones)
-    val fields = batch
-      .select(explode(VariantAccess.newFields(msg, knownKeys)).as(Seq("k", "v")))
-      .select(col("k"), schema_of_variant(col("v")).as("tag"),
-        when(VariantKind.of(col("v")) === VariantKindOps.StrK,
-          VariantAccess.string(col("v"))).as("sample"))
-      .groupBy(col("k"))
-      .agg(collect_set(col("tag")).as("tags"),
-        first(col("sample"), ignoreNulls = true).as("sample"))
-      .collect()
-
     val zone = ZoneId.of(policy.timeZone)
-    fields.toSeq
-      .filter { r =>
-        val k = r.getString(0)
+    val msg = parsedCol.map(col).getOrElse(ChGetters.parsed(col("value")))
+    foldNewKeys(batch, msg, knownKeys).toSeq
+      .filter { case (k, _) =>
         white.forall(_.matcher(k).find()) && !black.exists(_.matcher(k).find())
       }
-      .sortBy(_.getString(0))
-      .flatMap { r =>
-        // the reference types a key from its first occurrence; mixed-type
-        // keys are inherently racy there — we require a consistent type
-        // FAMILY (variant numeric tags carry per-value precision, e.g.
-        // DECIMAL(3,1) vs DECIMAL(10,2), and must unify)
-        val fams = r.getSeq[String](1).filterNot(_ == "VOID")
-          .map(tagFamily).distinct
-        if (fams.size != 1) None
-        else inferKind(fams.head, Option(r.getString(2)), zone)
-          .map(r.getString(0) -> _)
-      }
+      .sortBy(_._1)
+      .flatMap { case (k, f) => inferKind(f, zone).map(k -> _) }
   }
 
-  /** Variant tag -> unification family (a representative tag, so
-    * [[inferKind]] stays the single tag->kind decision table).
+  /** D1 — the [[KeyFold]] of every top-level key of the parsed messages
+    * `msg` that is not in `knownKeys`, in one job of one stage. Each task
+    * folds its own rows; the driver merges the folds in partition order.
+    * The fold keeps only copies (keys and samples), since `toRdd` reuses
+    * its rows.
     */
-  private def tagFamily(tag: String): String = tag match {
-    case "TINYINT" | "SMALLINT" | "INT" => "BIGINT"
-    case "FLOAT" | "DOUBLE" => "DOUBLE"
-    case t if t.startsWith("DECIMAL") => "DOUBLE"
-    case other => other
+  def foldNewKeys(batch: DataFrame, msg: Column,
+      knownKeys: Set[String]): Map[String, KeyFold] = {
+    val known = knownKeys.toSeq
+    batch.select(msg).queryExecution.toRdd.mapPartitions { rows =>
+      val knownSet = new java.util.HashSet[UTF8String]()
+      known.foreach(k => knownSet.add(UTF8String.fromString(k)))
+      val folds = new java.util.LinkedHashMap[UTF8String, Acc]()
+      rows.foreach { r =>
+        if (!r.isNullAt(0)) {
+          val v = r.getVariant(0)
+          VariantAccessOps.foreachMember(v) { (key, at) =>
+            if (!knownSet.contains(key)) {
+              val kind = VariantKindOps.kindAt(v.getValue, at)
+              var acc = folds.get(key)
+              if (acc == null) { acc = new Acc; folds.put(key.copy(), acc) }
+              acc.kinds |= 1 << kind
+              if (kind == StrK && acc.sample == null)
+                acc.sample = VariantAccessOps.stringAt(v.getValue, at).toString
+            }
+          }
+        }
+      }
+      val out = Array.newBuilder[(String, KeyFold)]
+      folds.forEach((k, a) => out += (k.toString -> KeyFold(a.kinds, a.sample)))
+      Iterator.single(out.result())
+    }.collect().foldLeft(Map.empty[String, KeyFold]) { (merged, part) =>
+      part.foldLeft(merged) { case (m, (k, f)) =>
+        m.updated(k, m.get(k).fold(f)(g =>
+          KeyFold(g.kinds | f.kinds, if (g.sample != null) g.sample else f.sample)))
+      }
+    }
   }
 
-  /** D2 — variant tag -> dynamic column kind (fjDetectType parity). */
-  def inferKind(tag: String, sample: Option[String], zone: ZoneId): Option[ChKind] =
-    tag match {
-      case "BOOLEAN" => Some(ChKind.Bool)
-      case "TINYINT" | "SMALLINT" | "INT" | "BIGINT" => Some(ChKind.Int64)
-      case "FLOAT" | "DOUBLE" => Some(ChKind.Float64)
-      case t if t.startsWith("DECIMAL") => Some(ChKind.Float64)
-      case "STRING" =>
-        sample match {
-          case Some(s) if GoLayouts.detect(s, zone)._2 >= 0 => Some(ChKind.DateTime)
-          case _ => Some(ChKind.Str)
-        }
-      // objects, arrays, mixed -> unsupported for dynamic columns
+  /** A task's running [[KeyFold]]. */
+  private final class Acc {
+    var kinds: Int = 0
+    var sample: String = null
+  }
+
+  private val NumberKinds = (1 << FloatK) | (1 << Dec0K) | (1 << DecFracK)
+
+  /** D2 — a key's dynamic column kind from its fold (fjDetectType
+    * parity). The reference types a key from its first occurrence, so
+    * mixed-type keys are racy there; here every non-null value must be of
+    * one family: bools, integers, numbers (floats and decimals unify) or
+    * strings. Objects, arrays, mixed families and all-null keys -> None.
+    */
+  def inferKind(f: KeyFold, zone: ZoneId): Option[ChKind] =
+    f.kinds & ~(1 << NullK) match {
+      case k if k == 1 << BoolK => Some(ChKind.Bool)
+      case k if k == 1 << IntK  => Some(ChKind.Int64)
+      case k if k != 0 && (k & ~NumberKinds) == 0 => Some(ChKind.Float64)
+      case k if k == 1 << StrK =>
+        Some(if (f.sample != null && GoLayouts.detect(f.sample, zone)._2 >= 0)
+          ChKind.DateTime else ChKind.Str)
       case _ => None
+    }
+
+  /** `dims` widened by the new keys, in key order, each a Nullable
+    * column of its kind (a DateTime as DateTime64(3)).
+    */
+  def widen(dims: Seq[Dim], newKeys: Seq[(String, ChKind)]): Seq[Dim] =
+    dims ++ newKeys.sortBy(_._1).map { case (k, kind) =>
+      Dim(k, ChTypeInfo(kind, nullable = true,
+        dateTime64Precision = if (kind == ChKind.DateTime) 3 else 0))
     }
 
   /** D3 — DDL for the accepted new keys (MaxDims guard included;

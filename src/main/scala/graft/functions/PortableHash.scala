@@ -63,35 +63,9 @@ object PortableHash {
       copy(child = newChild)
   }
 
-  /** Both halves from ONE digest, as [lo, hi]. */
-  def pair(s: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val md = tl.get(); md.reset()
-    val d = md.digest(s.getBytes)
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      Array[Any](leLong(d, 8), leLong(d, 0)))
-  }
-
-  case class Md5Pair(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def prettyName: String = "md5_pair64"
-    override def nullSafeEval(input: Any): Any =
-      pair(input.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.functions.PortableHash.pair($c)")
-    override protected def withNewChildInternal(newChild: Expression): Md5Pair =
-      copy(child = newChild)
-  }
-
   /** md5_number_lower(c) as a signed long column. */
   def md5Lo(c: Column): Column = toColumn(Md5Half(toExpression(c.cast("string")), upper = false))
 
   /** md5_number_upper(c) as a signed long column. */
   def md5Hi(c: Column): Column = toColumn(Md5Half(toExpression(c.cast("string")), upper = true))
-
-  /** [md5Lo(c), md5Hi(c)] from a single digest — wrap in
-    * [[graft.functions.Once]] when both halves are consumed in the same
-    * projection, or CollapseProject will inline (and re-digest) it per
-    * use.
-    */
-  def md5Pair(c: Column): Column = toColumn(Md5Pair(toExpression(c.cast("string"))))
 }

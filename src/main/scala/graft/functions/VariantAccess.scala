@@ -2,14 +2,11 @@ package graft.functions
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData, MapData}
 import org.apache.spark.sql.graftbridge.CatalystBridge.{toColumn, toExpression}
 import org.apache.spark.sql.types._
 import org.apache.spark.types.variant.VariantUtil._
@@ -80,25 +77,21 @@ object VariantAccessOps {
     else null
   }
 
-  /** Top-level members of `v` whose key is not in `known`, as a key ->
-    * field map in field order; null when `v` is not an object.
+  /** Calls `f(key, at)` for each top-level member of `v`, in field order:
+    * `key` is a view over `v`'s metadata (copy it to keep it) and `at` the
+    * offset of the member's value in `v`'s value bytes. Nothing when `v`
+    * is not an object.
     */
-  def newFields(v: VariantVal, known: java.util.Set[UTF8String]): MapData = {
+  def foreachMember(v: VariantVal)(f: (UTF8String, Int) => Unit): Unit = {
     val value = v.getValue
-    val meta = v.getMetadata
-    if ((value(0) & BASIC_TYPE_MASK) != OBJECT) return null
+    if ((value(0) & BASIC_TYPE_MASK) != OBJECT) return
     val obj = new ObjectLayout(value)
-    val dict = new Dictionary(meta)
-    val keys = new java.util.ArrayList[UTF8String]()
-    val vals = new java.util.ArrayList[VariantVal]()
+    val dict = new Dictionary(v.getMetadata)
     var j = 0
     while (j < obj.size) {
-      val k = dict.key(obj.fieldId(j))
-      if (!known.contains(k)) { keys.add(k); vals.add(obj.fieldValue(j, meta)) }
+      f(dict.key(obj.fieldId(j)), obj.fieldOffset(j))
       j += 1
     }
-    new ArrayBasedMapData(
-      new GenericArrayData(keys.toArray), new GenericArrayData(vals.toArray))
   }
 
   /** The header of an object value (variant spec: size, field ids, field
@@ -117,8 +110,6 @@ object VariantAccessOps {
     def fieldId(i: Int): Int = readUnsigned(value, idStart + i * idSize, idSize)
 
     def fieldOffset(i: Int): Int = dataStart + readUnsigned(value, offStart + i * offSize, offSize)
-
-    def fieldValue(i: Int, meta: Array[Byte]): VariantVal = valueAt(value, fieldOffset(i), meta)
   }
 
   /** The metadata key dictionary (variant spec: header, dictionary size,
@@ -183,19 +174,6 @@ case class VariantString(child: Expression) extends VariantAccessCall {
   override def dataType: DataType = StringType
   override def prettyName: String = "variant_string"
   override protected def withNewChildInternal(newChild: Expression): VariantString =
-    copy(child = newChild)
-}
-
-/** The top-level members of `msg` whose key is not in `known`, as
-  * `map<string, variant>`: see [[VariantAccessOps.newFields]].
-  */
-case class VariantNewFields(child: Expression, known: Set[String]) extends VariantAccessCall {
-  private val knownSet: java.util.Set[UTF8String] =
-    new java.util.HashSet(known.map(UTF8String.fromString).asJava)
-  override def call(v: VariantVal): AnyRef = VariantAccessOps.newFields(v, knownSet)
-  override def dataType: DataType = MapType(StringType, VariantType, valueContainsNull = false)
-  override def prettyName: String = "variant_new_fields"
-  override protected def withNewChildInternal(newChild: Expression): VariantNewFields =
     copy(child = newChild)
 }
 
@@ -521,8 +499,6 @@ object VariantAccess {
     */
   def field(msg: Column, key: String): Column = toColumn(VariantField(toExpression(msg), key))
   def string(f: Column): Column = toColumn(VariantString(toExpression(f)))
-  def newFields(msg: Column, known: Set[String]): Column =
-    toColumn(VariantNewFields(toExpression(msg), known))
 
   /** The tolerant getter of scalar `kind`, read in place at top-level
     * `key` of `v`, or at `v`'s root when `key` is None: see [[ScalarRead]].

@@ -197,28 +197,6 @@ object Dedup {
       .select(col(idCol).as("id"),
         graft.functions.MinHashSig.of(col(shinglesCol), k).as("sig"))
 
-  /** The definitional (explode + k-min-column aggregate) twin of
-    * [[minhashSignatureDF]], kept for the parity test pinning the fused
-    * expression's values.
-    */
-  private[graft] def minhashSignatureExplodeDF(df: DataFrame, idCol: String,
-      shinglesCol: String, k: Int): DataFrame = {
-    val exploded = df.select(col(idCol).as("id"),
-      explode(col(shinglesCol)).as("sh"))
-      // ONE digest per shingle: Once pins the pair against CollapseProject
-      // re-inlining it into each half
-      .select(col("id"),
-        graft.functions.Once(PortableHash.md5Pair(col("sh"))).as("p"))
-      .select(col("id"),
-        element_at(col("p"), 1).as("h1"),
-        element_at(col("p"), 2).as("h2"))
-    val aggs = (0 until k).map(i =>
-      min(col("h1") + lit(i.toLong) * col("h2")).as(s"m$i"))
-    exploded.groupBy(col("id"))
-      .agg(aggs.head, aggs.tail: _*)
-      .select(col("id"), array((0 until k).map(i => col(s"m$i")): _*).as("sig"))
-  }
-
   /** LSH banding: (docId, band, bandKey) rows — b bands of r rows each
     * (k = b*r). Docs sharing any (band, bandKey) bucket are candidates.
     * The key is the band's raw m-value slice (not a hash of it), so the

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.{PortableHash, RhpBandKeys, VecDot}
+import graft.functions.{PortableHash, VecDot}
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`). Three tiers, by corpus size:
@@ -132,28 +132,6 @@ object Similarity {
         cosine(col("q_vec"), col("nn_vec")).as("cos"))
     topKPerQuery(scored, k)
   }
-
-  /** nBits-bit random-hyperplane signature of a vector column — the
-    * definitional (compositional) form; the operators below use the
-    * fused [[graft.functions.RhpBandKeys]] expression, which computes
-    * identical bits in one codegen'd pass.
-    */
-  def rhpSignature(vec: Column, dims: Int, nBits: Int): Column =
-    array((0 until nBits).map { b =>
-      val plane = array((0 until dims).map(d =>
-        lit(RhpBandKeys.planeComponent(b, d))): _*)
-      when(VecDot.of(vec.cast(ArrayType(DoubleType)), plane) >= 0, lit(1L))
-        .otherwise(lit(0L))
-    }: _*)
-
-  /** Pack signature bits into band keys of `bandBits` each (definitional
-    * twin of the packing inside [[graft.functions.RhpBandKeys]]).
-    */
-  private[graft] def bandKeys(sig: Column, nBits: Int, bandBits: Int): Column =
-    array((0 until nBits / bandBits).map { band =>
-      aggregate(slice(sig, band * bandBits + 1, bandBits),
-        lit(0L), (acc, b) => acc * 2 + b)
-    }: _*)
 
   /** LSH top-k: candidates share at least one signature band with the
     * query; exact cosine re-rank inside the candidate set. Recall rises

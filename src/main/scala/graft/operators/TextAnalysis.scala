@@ -232,13 +232,6 @@ object TextAnalysis {
   def stopwordHits(text: Column): Column =
     graft.functions.WordHits.totalOf(text, enStopwords)
 
-  /** The definitional per-word replace-trick composition, kept as the
-    * parity pin for the fused kernel.
-    */
-  private[graft] def stopwordHitsCompositional(text: Column,
-      words: Seq[String] = enStopwords): Column =
-    words.map(wordHits(text, _)).reduce(_ + _)
-
   /** Composite quality score in [0,1] — the usual corpus-filter shape:
     * enough tokens, sane token length, some stopwords, low punctuation.
     * Deterministic and SQL-expressible; weights are explicit.
@@ -272,21 +265,6 @@ object TextAnalysis {
   def langId(text: Column): Column =
     graft.functions.WordHits.langIdOf(text,
       langMarkers.keys.toSeq.sorted.map(l => l -> langMarkers(l)))
-
-  /** The definitional when-chain argmax, kept as the parity pin (built
-    * entirely from the compositional word counter).
-    */
-  private[graft] def langIdCompositional(text: Column): Column = {
-    val langs  = langMarkers.keys.toSeq.sorted
-    val scores = langs.map(l =>
-      stopwordHitsCompositional(
-        graft.functions.PortableCase.lowerPortable(text), langMarkers(l)))
-    val best   = scores.reduce((a, b) => greatest(a, b))
-    // first language (in sorted order) reaching the max score
-    langs.zip(scores).foldRight(lit("und")) { case ((l, s), acc) =>
-      when(s === best && best > 0, lit(l)).otherwise(acc)
-    }
-  }
 
   // ---- HTML-to-text extraction ----------------------------------------
 

@@ -52,7 +52,7 @@ object Projector {
       if (df.columns.contains("__msg__")) df
       else df.withColumn("__msg__", msg)
     // P5: unparseable JSON -> dropped. No caller counts these drops yet;
-    // ROADMAP direction 4 puts a parse-error counter on /metrics.
+    // ROADMAP direction 2 puts a parse-error counter on /metrics.
     val parsed = parsed0.filter(col("__msg__").isNotNull)
 
     // Static fields win over message content (fastjson.go:54-58): such a

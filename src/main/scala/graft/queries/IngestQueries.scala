@@ -309,7 +309,7 @@ object IngestQueries {
           date_format(col("ts"), "yyyy-MM-dd").as("d"))).as("raw"))
       val msg = ChGetters.parsed(col("raw"))
       val pairs = raw.select(explode(
-        VariantAccess.newFields(msg, Set.empty)).as(Seq("k", "v")))
+        try_variant_get(msg, "$", "map<string,variant>")).as(Seq("k", "v")))
       val tag = schema_of_variant(col("v"))
       val chType = when(tag === "BOOLEAN", "Bool")
         .when(tag.isin("TINYINT", "SMALLINT", "INT", "BIGINT"), "Int64")

@@ -61,22 +61,25 @@ final class Metrics extends StreamingQueryListener {
     (cum, writeSumMs.sum(), writeCount.sum())
   }
 
-  // -- schema-evolution restart outcomes (a restart thread failure must
-  //    be VISIBLE, not die with the thread — VERDICT r2 "what's wrong" #1)
-  private val restartErrs = new ConcurrentHashMap[String, String]()
+  // -- task failures: a query that ended with an exception (a failed
+  //    write, an ALTER that threw) stays visible until a query of that
+  //    name starts again. `restartFailures` counts them; the name is kept
+  //    for the sinkbench harness, which reads it.
+  private val names = new ConcurrentHashMap[java.util.UUID, String]()
+  private val failures = new ConcurrentHashMap[String, String]()
   val restartFailures = new LongAdder
 
-  def recordRestartFailure(task: String, err: String): Unit = {
-    restartFailures.increment()
-    restartErrs.put(task, err)
-  }
-  def recordRestartSuccess(task: String): Unit = restartErrs.remove(task)
-  def restartErrors: Map[String, String] = {
+  /** Task name -> the first line of the exception its query ended with. */
+  def taskFailures: Map[String, String] = {
     import scala.jdk.CollectionConverters._
-    restartErrs.asScala.toMap
+    failures.asScala.toMap
   }
 
-  override def onQueryStarted(event: QueryStartedEvent): Unit = ()
+  override def onQueryStarted(event: QueryStartedEvent): Unit = {
+    val name = Option(event.name).getOrElse(event.id.toString)
+    names.put(event.id, name)
+    failures.remove(name)
+  }
 
   override def onQueryProgress(event: QueryProgressEvent): Unit = {
     val p = event.progress
@@ -94,7 +97,13 @@ final class Metrics extends StreamingQueryListener {
       lag))
   }
 
-  override def onQueryTerminated(event: QueryTerminatedEvent): Unit = ()
+  override def onQueryTerminated(event: QueryTerminatedEvent): Unit = {
+    val name = Option(names.remove(event.id)).getOrElse(event.id.toString)
+    event.exception.foreach { e =>
+      restartFailures.increment()
+      failures.put(name, e.linesIterator.nextOption().getOrElse(""))
+    }
+  }
 
   /** `/state`-style snapshot (reference cmd/clickhouse_sinker/main.go:163-237). */
   def state: Map[String, QuerySnapshot] = {
@@ -115,8 +124,8 @@ final class Metrics extends StreamingQueryListener {
     sb.append(s"graft_bad_rows ${badRows.sum()}\n")
     sb.append("# TYPE graft_write_retries counter\n")
     sb.append(s"graft_write_retries ${writeRetries.sum()}\n")
-    sb.append("# TYPE graft_restart_failures counter\n")
-    sb.append(s"graft_restart_failures ${restartFailures.sum()}\n")
+    sb.append("# TYPE graft_task_failures counter\n")
+    sb.append(s"graft_task_failures ${restartFailures.sum()}\n")
     val (buckets, sum, count) = writeHistogram
     sb.append("# TYPE graft_write_duration_ms histogram\n")
     buckets.foreach { case (le, c) =>
@@ -128,8 +137,8 @@ final class Metrics extends StreamingQueryListener {
       sb.append(s"""graft_processed_rows_per_second{task="${s.name}"} ${s.processedRowsPerSecond}\n""")
       sb.append(s"""graft_consumer_lag{task="${s.name}"} ${s.consumerLag}\n""")
     }
-    restartErrors.foreach { case (task, _) =>
-      sb.append(s"""graft_task_restart_failed{task="$task"} 1\n""")
+    taskFailures.foreach { case (task, _) =>
+      sb.append(s"""graft_task_failed{task="$task"} 1\n""")
     }
     sb.toString
   }

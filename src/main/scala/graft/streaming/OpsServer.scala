@@ -10,7 +10,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * cmd/clickhouse_sinker/main.go:163-237):
   *
   *   - `/state`   — JSON per-task snapshots (batch id, rates, lag) plus
-  *                  any schema-evolution restart errors
+  *                  the tasks whose query failed, with the error
   *   - `/metrics` — Prometheus exposition text from [[Metrics]]
   *   - `/ready`   — 200 once the app reports ready (queries started),
   *                  503 before
@@ -62,7 +62,7 @@ final class OpsServer(
       case c => c.toString
     } + "\""
 
-  /** The `/state` payload: per-task progress + restart errors. */
+  /** The `/state` payload: per-task progress + task failures. */
   def stateJson: String = {
     val tasks = metrics.state.toSeq.sortBy(_._1).map { case (name, s) =>
       s"${jsonStr(name)}:{" +
@@ -73,10 +73,10 @@ final class OpsServer(
         s""""batchDurationMs":${s.batchDurationMs},""" +
         s""""consumerLag":${s.consumerLag}}"""
     }.mkString("{", ",", "}")
-    val errs = metrics.restartErrors.toSeq.sortBy(_._1)
+    val errs = metrics.taskFailures.toSeq.sortBy(_._1)
       .map { case (k, v) => s"${jsonStr(k)}:${jsonStr(v)}" }
       .mkString("{", ",", "}")
-    s"""{"tasks":$tasks,"restartErrors":$errs,""" +
+    s"""{"tasks":$tasks,"taskFailures":$errs,""" +
       s""""batchesCompleted":${metrics.batchesCompleted.sum()},""" +
       s""""rowsConsumed":${metrics.rowsConsumed.sum()}}"""
   }

@@ -117,19 +117,21 @@ object Pipeline {
           task.bufferSize, numShards)
     }
 
-  /** Assemble the full streaming query. `onNewKeys` is invoked (with the
-    * batch's accepted new keys) before the batch is written when
-    * dynamicSchema is on — the caller issues the ALTERs and restarts
-    * (SURVEY §3.3). `spark` is ignored (the session is `src`'s); it
-    * stays only for callers that pass it positionally (the sinkbench
-    * harness).
+  /** Assemble the full streaming query. With dynamicSchema on, each
+    * batch's new keys are detected before any of its rows is written, and
+    * `onNewKeys` gets the accepted ones: it issues the ALTERs and returns
+    * the widened dims and their sink, under which this batch and every
+    * later one are projected and written (SURVEY §3.3); None keeps the
+    * current ones. If it throws, the batch fails unwritten and its offsets
+    * stay uncommitted, so a query restarted from the checkpoint replays
+    * it. `spark` is ignored (the session is `src`'s); it stays only for
+    * callers that pass it positionally (the sinkbench harness).
     */
   def start(@unused spark: SparkSession, src: DataFrame, task: TaskConfig,
       dims: Seq[Dim], sink: SinkSpec, checkpoint: String,
-      onNewKeys: Seq[(String, ChKind)] => Unit = _ => (),
+      onNewKeys: Seq[(String, ChKind)] => Option[(Seq[Dim], SinkSpec)] = _ => None,
       metrics: Option[Metrics] = None): StreamingQuery = {
 
-    val knownKeys = dims.map(_.source).toSet
     // the default policy shards on kafka coordinates (X3) -> carry the
     // metadata dims through projection, drop them again before the write
     val metaDims =
@@ -137,6 +139,10 @@ object Pipeline {
         Seq(Dim("__kafka_offset", graft.types.ChType.whichType("Int64")),
           Dim("__kafka_partition", graft.types.ChType.whichType("Int64")))
       else Nil
+    // the task's current schema; only the stream thread, one batch at a
+    // time, reads and widens it
+    var (curDims, curSink) = (dims, sink)
+    val dynamic = task.dynamicSchema && task.parser != "csv"
 
     src.writeStream
       .queryName(task.name)
@@ -147,28 +153,29 @@ object Pipeline {
         // GetNewKeys piggybacked — parser/fastjson.go:512-536): with
         // dynamicSchema on, parse ONCE into a cached stage and run both
         // the new-key detection and the projection from it.
-        val (input, cached) =
-          if (task.dynamicSchema && task.parser != "csv") {
-            val stage = batch.withColumn("__msg__",
-              graft.functions.Once(ChGetters.parsed(col("value")))).persist()
+        val input =
+          if (dynamic) batch.withColumn("__msg__",
+            graft.functions.Once(ChGetters.parsed(col("value")))).persist()
+          else batch
+        try {
+          if (dynamic) {
             val newKeys = SchemaEvolution.detectNewKeys(
-              stage, knownKeys,
+              input, curDims.map(_.source).toSet,
               NewKeyPolicy(task.whiteList, task.blackList, timeZone = task.timeZone),
               parsedCol = Some("__msg__"))
-            if (newKeys.nonEmpty) onNewKeys(newKeys)
-            (stage, true)
-          } else (batch, false)
-        try {
-          val projected = project(input, task, dims ++ metaDims)
+            if (newKeys.nonEmpty)
+              onNewKeys(newKeys).foreach { case (d, s) => curDims = d; curSink = s }
+          }
+          val allDims = curDims ++ metaDims
           val sharded = Sharding.partitionByShard(
-            projected, shardColumn(task, dims ++ metaDims, sink.numShards),
-            sink.numShards)
-            .select((dims.map(d => col(d.name)) :+ col("__shard__")): _*)
+            project(input, task, allDims),
+            shardColumn(task, allDims, curSink.numShards), curSink.numShards)
+            .select((curDims.map(d => col(d.name)) :+ col("__shard__")): _*)
           val t0 = System.nanoTime()
-          val stats = ChWriter.write(sharded, sink.writeCfg, sink.mkWriter)
+          val stats = ChWriter.write(sharded, curSink.writeCfg, curSink.mkWriter)
           val ms = (System.nanoTime() - t0) / 1000000L
           metrics.foreach { m => m.observeWriteMs(ms); m.observeWriteStats(stats) }
-        } finally if (cached) input.unpersist()
+        } finally if (dynamic) input.unpersist()
         ()
       }
       .start()

@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.annotation.unused
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -9,18 +11,20 @@ import graft.config.{ConfigReload, TaskConfig}
 import graft.dynamic.SchemaEvolution
 import graft.dynamic.SchemaEvolution.NewKeyPolicy
 import graft.parse.Projector.Dim
-import graft.types.{ChKind, ChTypeInfo}
+import graft.types.ChKind
 
 /** The driver loop (SURVEY §3.2-§3.3): owns per-task streaming queries,
-  * wires schema introspection -> projection dims, and runs the
-  * stop-flush-ALTER-restart cycle when dynamic schema detects new keys —
-  * the same lifecycle as the reference's Sinker.Run / applyConfig /
-  * cloneTask chain, minus Nacos (Spark's own cluster manager schedules;
-  * SURVEY C1-C2 non-goals).
+  * wires schema introspection -> projection dims, and evolves a
+  * dynamic-schema task inside the batch that found its new keys — the
+  * lifecycle of the reference's Sinker.Run / applyConfig / cloneTask
+  * chain, minus Nacos (Spark's own cluster manager schedules; SURVEY
+  * C1-C2 non-goals).
   *
-  * Tasks sharing a consumerGroup share one source DataFrame fan-out
-  * (C4): each task filters the shared stream by its routing predicate
-  * (FL7) and writes to its own sink.
+  * Each task is its own streaming query over its own source (C4): it
+  * filters that source by its routing predicate (FL7) and writes to its
+  * own sink. So a task's schema change touches no other task, and needs
+  * no restart: the reference restarts because every task of a group
+  * shares one consumer and its parser (task/task.go:198-219).
   */
 final class SinkerApp(
     spark: SparkSession,
@@ -29,37 +33,20 @@ final class SinkerApp(
     /** Executes DDL against ClickHouse (or records it under test). */
     execDdl: String => Unit,
     checkpointRoot: String,
-    /** Restart failures surface here (and in `/state`) instead of dying
-      * silently with the restart thread.
+    /** Passed to every task's query (write counters); a failed query
+      * shows there when it is also the session's query listener.
       */
-    metrics: Option[Metrics] = None,
-    restartRetries: Int = 3,
-    restartRetryDelayMs: Long = 200L) {
+    metrics: Option[Metrics] = None) {
 
   /** Live schema per task: dims evolve as ALTERs land. */
   private val schemas = new ConcurrentHashMap[String, Seq[Dim]]()
   private val queries = new ConcurrentHashMap[String, StreamingQuery]()
-  private val restarts = new ConcurrentHashMap[String, Integer]()
-  private val taskConfigs = new ConcurrentHashMap[String, TaskConfig]()
-  /** All evolution restarts run on ONE thread: two tasks of a shared
-    * group evolving in the same window must not bounce the group
-    * concurrently (interleaved stop/start could leave a stale query
-    * writing beside its replacement). `pendingBounce` coalesces bounces
-    * queued for the same consumer group: the queued run reads the LATEST
-    * schemas when it executes, so a second evolution arriving before it
-    * starts needs no second bounce.
-    */
-  private val restartExec = java.util.concurrent.Executors.newSingleThreadExecutor(
-    (r: Runnable) => {
-      val t = new Thread(r, "graft-evolution-restart"); t.setDaemon(true); t
-    })
-  private val pendingBounce = ConcurrentHashMap.newKeySet[String]()
-  /** How long a batch that found new keys waits for its restart. */
-  private val holdForRestartMs = 60000L
 
   def currentDims(task: String): Seq[Dim] = schemas.get(task)
-  def restartCount(task: String): Int =
-    Option(restarts.get(task)).map(_.intValue).getOrElse(0)
+  /** Always 0: a schema change no longer restarts the query. Kept only
+    * for the sinkbench harness, which reads it.
+    */
+  def restartCount(@unused task: String): Int = 0
   def query(name: String): Option[StreamingQuery] = Option(queries.get(name))
 
   /** Start one task (one streaming query). A dynamicSchema task whose
@@ -69,53 +56,31 @@ final class SinkerApp(
   def startTask(task: TaskConfig, initialDims: Seq[Dim]): StreamingQuery = {
     if (task.dynamicSchema) dbTable(task)
     schemas.putIfAbsent(task.name, initialDims)
-    taskConfigs.put(task.name, task)
     val dims = schemas.get(task.name)
     val src  = Pipeline.routingFilter(mkSource(task), task)
     val q = Pipeline.start(spark, src, task, dims,
       mkSink(task, dims), s"$checkpointRoot/${task.name}",
-      onNewKeys = keys => onNewKeys(task, keys), metrics = metrics)
+      onNewKeys = keys => Some(evolve(task, keys)), metrics = metrics)
     queries.put(task.name, q)
     q
   }
 
-  /** §3.3 — dynamic schema evolution: issue ALTERs, refresh the cached
-    * dims, and restart the query from its checkpoint under the new
-    * schema. The in-flight micro-batch is re-run under the new schema,
-    * never written under the old one: this callback holds the stream
-    * thread until the restart's `stop()` interrupts it (a write racing
-    * a slow stop lands under the old schema, with the batches after it).
-    *
-    * When the consumer group has more than one task, the WHOLE group is
-    * bounced (the reference restarts the shared consumer before the ALTER
-    * when `len(group.Tasks) > 1` — task/task.go:198-211): with a shared
-    * source fan-out, siblings reading on while one task ALTERs would
-    * observe a torn group state.
+  /** §3.3 — dynamic schema evolution, run by the batch that found the
+    * keys, before any of its rows is written: issue the ALTERs, then
+    * widen the task's dims and build their sink. An ALTER that throws
+    * fails the batch unwritten, with its offsets uncommitted; a task
+    * started again from the checkpoint replays it, and `ADD COLUMN IF NOT
+    * EXISTS` makes the repeated ALTERs safe.
     */
-  private def onNewKeys(task: TaskConfig, keys: Seq[(String, ChKind)]): Unit = {
+  private def evolve(task: TaskConfig,
+      keys: Seq[(String, ChKind)]): (Seq[Dim], Pipeline.SinkSpec) = {
     val dims = schemas.get(task.name)
     val (db, tbl) = dbTable(task)
     SchemaEvolution.changeSchemaStatements(db, tbl, dims.size, keys,
       NewKeyPolicy()).foreach(execDdl)
-    val newDims = dims ++ keys.sortBy(_._1).map { case (k, kind) =>
-      Dim(k, ChTypeInfo(kind, nullable = true,
-        dateTime64Precision = if (kind == ChKind.DateTime) 3 else 0))
-    }
-    schemas.put(task.name, newDims)
-    restarts.merge(task.name, Integer.valueOf(1), (a, b) => Integer.valueOf(a + b))
-    // restart asynchronously (stopping the query from inside its own
-    // batch handler would deadlock on the streaming lock), serialized on
-    // restartExec; skip if a bounce for this group is already queued
-    if (pendingBounce.add(task.consumerGroup))
-      restartExec.submit(new Runnable {
-        def run(): Unit = {
-          pendingBounce.remove(task.consumerGroup)
-          restartAfterEvolution(task)
-        }
-      })
-    // the stop ends this with an InterruptedException; past the bound
-    // (a stop that never came) the batch writes under the old schema
-    Thread.sleep(holdForRestartMs)
+    val widened = SchemaEvolution.widen(dims, keys)
+    schemas.put(task.name, widened)
+    (widened, mkSink(task, widened))
   }
 
   /** `tableName` as (database, table): `table` (in `default`) or
@@ -129,46 +94,6 @@ final class SinkerApp(
         s"task ${task.name}: tableName '${task.tableName}' is not " +
           "`table` or `db.table`")
     }
-
-  /** The restart thread body: bounce the task (or its whole group), with
-    * bounded retries; a final failure is logged AND surfaced via
-    * [[Metrics]] — never swallowed (the reference Fatal-exits so a
-    * supervisor restarts it; a library can't exit the JVM, so visible +
-    * retried is the equivalent).
-    */
-  private def restartAfterEvolution(task: TaskConfig): Unit = {
-    import scala.jdk.CollectionConverters._
-    val group = taskConfigs.values.asScala
-      .filter(_.consumerGroup == task.consumerGroup).toSeq.sortBy(_.name)
-    val targets = if (group.size > 1) group else Seq(task)
-    targets.foreach { t =>
-      Option(queries.get(t.name)).foreach { q =>
-        try q.stop() catch { case _: Exception => () }
-      }
-    }
-    targets.foreach { t =>
-      var attempt = 0
-      var started = false
-      var lastErr: Throwable = null
-      while (!started && attempt <= restartRetries) {
-        try {
-          startTask(t, schemas.get(t.name))
-          started = true
-          metrics.foreach(_.recordRestartSuccess(t.name))
-        } catch {
-          case e: Exception =>
-            lastErr = e
-            attempt += 1
-            metrics.foreach(_.recordRestartFailure(t.name,
-              Option(e.getMessage).getOrElse(e.getClass.getName)))
-            if (attempt <= restartRetries) Thread.sleep(restartRetryDelayMs)
-        }
-      }
-      if (!started)
-        System.err.println(s"[graft] task ${t.name} failed to restart after " +
-          s"$restartRetries retries: ${lastErr.getMessage}")
-    }
-  }
 
   def awaitAllProcessed(): Unit =
     queries.values().forEach(q => if (q.isActive) q.processAllAvailable())
@@ -191,7 +116,6 @@ final class SinkerApp(
       // dimsFor — startTask's putIfAbsent would otherwise pin the OLD
       // config's dims onto the restarted query
       schemas.remove(n)
-      taskConfigs.remove(n)
     }
     (plan.startTasks ++ plan.restartTasks).foreach { n =>
       byName.get(n).foreach(t => startTask(t, dimsFor(t)))

@@ -53,7 +53,7 @@ class FusedParitySpec extends AnyFunSuite with LocalSpark {
     }
     val df = rows.toDF("doc_id", "sh")
     val fused = Dedup.minhashSignatureDF(df, "doc_id", "sh", 16)
-    val comp = Dedup.minhashSignatureExplodeDF(df, "doc_id", "sh", 16)
+    val comp = UnfusedForms.minhashSignatureExplodeDF(df, "doc_id", "sh", 16)
     assert(fused.except(comp).isEmpty && comp.except(fused).isEmpty)
   }
 
@@ -67,7 +67,7 @@ class FusedParitySpec extends AnyFunSuite with LocalSpark {
     val fused = df.select(col("id"),
       graft.functions.RhpBandKeys.of(col("v"), 64, 24, 8).as("k"))
     val comp = df.select(col("id"),
-      Similarity.bandKeys(Similarity.rhpSignature(col("v"), 64, 24), 24, 8).as("k"))
+      UnfusedForms.bandKeys(UnfusedForms.rhpSignature(col("v"), 64, 24), 24, 8).as("k"))
     assert(fused.except(comp).isEmpty && comp.except(fused).isEmpty)
   }
 
@@ -134,9 +134,9 @@ class FusedParitySpec extends AnyFunSuite with LocalSpark {
     val df = (salted ++ docs).toDF("text")
     val got = df.select(
       TextAnalysis.stopwordHits(col("text")).as("f"),
-      TextAnalysis.stopwordHitsCompositional(col("text")).as("c"),
+      UnfusedForms.stopwordHitsCompositional(col("text")).as("c"),
       TextAnalysis.langId(col("text")).as("fl"),
-      TextAnalysis.langIdCompositional(col("text")).as("cl")).collect()
+      UnfusedForms.langIdCompositional(col("text")).as("cl")).collect()
     got.foreach { r =>
       assert(r.getLong(0) === r.getLong(1))
       assert(r.getString(2) === r.getString(3))

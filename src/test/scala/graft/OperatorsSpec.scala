@@ -345,7 +345,7 @@ class OperatorsSpec extends AnyFunSuite with LocalSpark {
     val shingled = docs.limit(100).select(col("doc_id"),
       WordShingles.of(col("text"), 3).as("sh"))
     val fused = Dedup.minhashSignatureDF(shingled, "doc_id", "sh", 32)
-    val comp = Dedup.minhashSignatureExplodeDF(shingled, "doc_id", "sh", 32)
+    val comp = UnfusedForms.minhashSignatureExplodeDF(shingled, "doc_id", "sh", 32)
     assert(fused.except(comp).isEmpty && comp.except(fused).isEmpty)
   }
 
@@ -365,7 +365,7 @@ class OperatorsSpec extends AnyFunSuite with LocalSpark {
     val fused = e.select(col("vec_id"),
       graft.functions.RhpBandKeys.of(col("v"), 64, 32, 8).as("k"))
     val comp = e.select(col("vec_id"),
-      Similarity.bandKeys(Similarity.rhpSignature(col("v"), 64, 32), 32, 8).as("k"))
+      UnfusedForms.bandKeys(UnfusedForms.rhpSignature(col("v"), 64, 32), 32, 8).as("k"))
     assert(fused.except(comp).isEmpty && comp.except(fused).isEmpty)
   }
 

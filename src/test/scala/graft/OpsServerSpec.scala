@@ -4,6 +4,8 @@ import java.net.{HttpURLConnection, URI}
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryStartedEvent, QueryTerminatedEvent}
+
 import graft.streaming.{Metrics, OpsServer}
 
 /** C5 — the ops HTTP surface over a real socket, and the write-duration
@@ -46,7 +48,11 @@ class OpsServerSpec extends AnyFunSuite {
   test("serves /state /metrics /ready /live over a real socket") {
     val m = new Metrics
     m.observeWriteMs(12L)
-    m.recordRestartFailure("taskA", "boom \"quoted\"")
+    // a query of task A ends with an exception (the listener's view)
+    val idA = java.util.UUID.randomUUID()
+    m.onQueryStarted(new QueryStartedEvent(idA, java.util.UUID.randomUUID(), "taskA", "t0"))
+    m.onQueryTerminated(new QueryTerminatedEvent(idA, java.util.UUID.randomUUID(),
+      Some("boom \"quoted\"\n\tat some.Frame(Frame.scala:1)")))
     @volatile var isReady = false
     val srv = new OpsServer(m, port = 0, ready = () => isReady).start()
     try {
@@ -64,21 +70,26 @@ class OpsServerSpec extends AnyFunSuite {
       val (mc, metricsBody) = get(port, "/metrics")
       assert(mc === 200)
       assert(metricsBody.contains("graft_write_duration_ms_count 1"))
-      assert(metricsBody.contains("graft_restart_failures 1"))
-      assert(metricsBody.contains("""graft_task_restart_failed{task="taskA"} 1"""))
+      assert(metricsBody.contains("graft_task_failures 1"))
+      assert(metricsBody.contains("""graft_task_failed{task="taskA"} 1"""))
 
       val (sc, stateBody) = get(port, "/state")
       assert(sc === 200)
-      // valid JSON with the restart error surfaced (and escaped)
+      // valid JSON with the failure's first line surfaced (and escaped)
       val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(stateBody)
-      assert(node.get("restartErrors").get("taskA").asText() === "boom \"quoted\"")
+      assert(node.get("taskFailures").get("taskA").asText() === "boom \"quoted\"")
       assert(node.has("tasks") && node.has("batchesCompleted"))
 
-      // a recovered task drops off the error map
-      m.recordRestartSuccess("taskA")
+      // a query that stops cleanly records nothing; a task whose query
+      // starts again drops off the failure map
+      val idB = java.util.UUID.randomUUID()
+      m.onQueryStarted(new QueryStartedEvent(idB, java.util.UUID.randomUUID(), "taskB", "t1"))
+      m.onQueryTerminated(new QueryTerminatedEvent(idB, java.util.UUID.randomUUID(), None))
+      m.onQueryStarted(new QueryStartedEvent(idA, java.util.UUID.randomUUID(), "taskA", "t2"))
       val after = new com.fasterxml.jackson.databind.ObjectMapper()
         .readTree(get(port, "/state")._2)
-      assert(!after.get("restartErrors").has("taskA"))
+      assert(after.get("taskFailures").size() === 0)
+      assert(m.restartFailures.sum() === 1L)
     } finally srv.close()
   }
 }

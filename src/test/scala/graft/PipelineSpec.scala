@@ -122,6 +122,51 @@ class PipelineSpec extends AnyFunSuite with LocalSpark {
     assert(spark.read.json(outStr + "/shard=*/*.jsonl").count() === 2000L)
   }
 
+  test("a dynamic-schema batch runs as two jobs of one stage each, with no shuffle") {
+    val inDir  = Files.createTempDirectory("graft_in")
+    val outDir = Files.createTempDirectory("graft_out")
+    val ckDir  = Files.createTempDirectory("graft_ck")
+    // 1,000 base messages, then 1,000 with newkey00/newkey01
+    Files.write(inDir.resolve("part-0.txt"),
+      cohortMessages.slice(9000, 11000).mkString("\n").getBytes("UTF-8"))
+    val task = TaskConfig(name = "test_dynamic_stages", topic = "topic1",
+      consumerGroup = "g1", bufferSize = 50000, flushInterval = 1,
+      dynamicSchema = true)
+    val outStr = outDir.toString
+    def sinkFor(dims: Seq[Dim]) = {
+      val colNames = dims.map(_.name)
+      Pipeline.SinkSpec(4,
+        ChWriter.WriteConfig(4, retryTimes = 2, retryDelayMs = 10),
+        () => new ChWriter.JsonLinesWriter(outStr, colNames))
+    }
+    val tel = StageTelemetry.attach(spark.sparkContext)
+    try {
+      val q = Pipeline.start(spark,
+        Pipeline.fileSource(spark, inDir.toString, "topic1"),
+        task, fixedDims, sinkFor(fixedDims), ckDir.toString,
+        onNewKeys = keys => {
+          val dims = SchemaEvolution.widen(fixedDims, keys)
+          Some(dims -> sinkFor(dims))
+        })
+      q.processAllAvailable()
+      q.stop()
+      tel.drain()
+      val batch = tel.jobs.filter(_.group.contains(q.runId.toString))
+      val stages = tel.stagesInGroup(q.runId.toString)
+      // one scan-local job fills the parsed stage's cache and folds the
+      // new keys; one job projects and writes from that cache
+      assert(batch.size === 2, tel.jobs)
+      assert(batch.forall(_.stageIds.size == 1), batch)
+      assert(stages.size === 2, stages)
+      assert(stages.map(s => s.writeBytes + s.readBytes).sum === 0L, stages)
+    } finally tel.detach()
+    // the batch that found the keys was written under them
+    val written = spark.read.json(outStr + "/shard=*/*.jsonl")
+    assert(written.count() === 2000L)
+    assert(written.filter(col("newkey01").isNotNull).count() === 1000L)
+    assert(written.filter(col("newkey00") === false).count() === 1000L)
+  }
+
   test("go.test.sh dynamic-schema golden: newkey00-04 added, 05-10 skipped") {
     val df = cohortMessages.toDF("value")
     val known = fixedDims.map(_.name).toSet

@@ -154,20 +154,29 @@ class RealEndpointsSpec extends AnyFunSuite with LocalSpark {
     * exercised end-to-end.
     */
   private def runSinker(task: TaskConfig, dims: Seq[Dim],
-      onNewKeys: Seq[(String, graft.types.ChKind)] => Unit = _ => ())
+      alter: Seq[(String, graft.types.ChKind)] => Unit = _ => ())
       : Unit = {
     val kc = KafkaConfig(brokers = kafkaBootstrap.get)
     val src = Pipeline.kafkaSource(spark, kc, task)
     val routed = Pipeline.routingFilter(src, task)
-    val cols = dims.map(_.name)
     val url = chUrl.get
     val (u, pw, dbName, tbl) = (chUser, chPass, db, task.tableName)
-    val sink = Pipeline.SinkSpec(1,
-      ChWriter.WriteConfig(1, retryTimes = 3, retryDelayMs = 500),
-      () => new ChWriter.JdbcRowWriter(Map(0 -> url), dbName, tbl, cols,
-        Map("user" -> u) ++ (if (pw.nonEmpty) Map("password" -> pw) else Map.empty)))
-    val q = Pipeline.start(spark, routed, task, dims, sink,
-      Files.createTempDirectory(s"ck_${task.name}").toString, onNewKeys)
+    def sinkFor(ds: Seq[Dim]) = {
+      val cols = ds.map(_.name)
+      Pipeline.SinkSpec(1,
+        ChWriter.WriteConfig(1, retryTimes = 3, retryDelayMs = 500),
+        () => new ChWriter.JdbcRowWriter(Map(0 -> url), dbName, tbl, cols,
+          Map("user" -> u) ++ (if (pw.nonEmpty) Map("password" -> pw) else Map.empty)))
+    }
+    // a dynamic-schema batch ALTERs, then writes under the widened dims
+    var cur = dims
+    val q = Pipeline.start(spark, routed, task, dims, sinkFor(dims),
+      Files.createTempDirectory(s"ck_${task.name}").toString,
+      keys => {
+        alter(keys)
+        cur = SchemaEvolution.widen(cur, keys)
+        Some(cur -> sinkFor(cur))
+      })
     q.processAllAvailable()
     q.stop()
   }
@@ -219,7 +228,7 @@ class RealEndpointsSpec extends AnyFunSuite with LocalSpark {
         tableName = table, bufferSize = 50000, flushInterval = 1,
         dynamicSchema = true),
       fixedDims,
-      onNewKeys = keys => SchemaEvolution.changeSchemaStatements(
+      alter = keys => SchemaEvolution.changeSchemaStatements(
         db, table, currentDims = fixedDims.size, keys, NewKeyPolicy())
         .foreach(exec))
     // go.test.sh:66-70 DESC golden: exactly newkey00-04, arrays/objects

@@ -123,7 +123,7 @@ class UnicodeParitySpec extends AnyFunSuite with LocalSpark {
     sim.foreach(r => assert(r.getLong(0) === r.getLong(1), "simhash diverged"))
     val lang = df.select(
       TextAnalysis.langId(col("text")).as("fused"),
-      TextAnalysis.langIdCompositional(col("text")).as("comp")).collect()
+      UnfusedForms.langIdCompositional(col("text")).as("comp")).collect()
     lang.foreach(r => assert(r.getString(0) === r.getString(1), "langId diverged"))
     val sh = df.select(
       graft.functions.WordShingles.of(col("text"), 1).as("fused"),

@@ -256,24 +256,51 @@ class VariantAccessSpec extends AnyFunSuite with LocalSpark {
 
   // ---- detectNewKeys ---------------------------------------------------
 
-  /** The (key, tag, sample) rows detection aggregates: through the
-    * rebuild path, and through the in-place walk.
+  /** Per new key: the kinds of its values and its string values. */
+  private type Seen = Map[String, (Set[Int], Set[String])]
+
+  /** What the built-in map path shows of each key outside `known`
+    * (keys decoded with the default charset; strings read by their bytes).
     */
-  private def builtinDetectRows(batch: DataFrame, known: Set[String]): DataFrame =
+  private def builtinSeen(batch: DataFrame, known: Set[String]): Seen =
     batch
       .select(explode(try_variant_get(try_parse_json(col("value")), "$",
         "map<string,variant>")).as(Seq("k", "v")))
       .filter(!col("k").isin(known.toSeq: _*))
-      .select(col("k"), schema_of_variant(col("v")).as("tag"),
-        when(schema_of_variant(col("v")) === "STRING", builtinStr(col("v"))).as("sample"))
+      .groupBy(col("k"))
+      .agg(collect_set(VariantKind.of(col("v"))), collect_set(VariantAccess.string(col("v"))))
+      .collect()
+      .map(r => r.getString(0) -> ((r.getSeq[Int](1).toSet, r.getSeq[String](2).toSet)))
+      .toMap
 
-  private def inPlaceDetectRows(batch: DataFrame, known: Set[String]): DataFrame =
-    batch
-      .select(explode(VariantAccess.newFields(try_parse_json(col("value")), known))
-        .as(Seq("k", "v")))
-      .select(col("k"), schema_of_variant(col("v")).as("tag"),
-        when(VariantKind.of(col("v")) === VariantKindOps.StrK,
-          VariantAccess.string(col("v"))).as("sample"))
+  /** The same from the members' own value texts: parsed for the kind,
+    * decoded by Jackson for the string; no key is decoded by Spark.
+    */
+  private def memberSeen(msgs: Seq[Msg], known: Set[String]): Seen = {
+    val pairs = msgs.flatMap(_.members.getOrElse(Nil)).filterNot(p => known(p._1))
+    val kinds = pairs.map(_._2).distinct.toDF("t")
+      .select(col("t"), VariantKind.of(parse_json(col("t")))).collect()
+      .map(r => r.getString(0) -> r.getInt(1)).toMap
+    pairs.groupBy(_._1).map { case (k, ps) =>
+      k -> ((ps.map(p => kinds(p._2)).toSet,
+        ps.flatMap(p => Option(jackson.readTree(p._2).textValue())).toSet))
+    }
+  }
+
+  /** The fold's kind bits are the set of the key's value kinds, and its
+    * sample one of the key's string values (null when it has none).
+    */
+  private def assertFolds(got: Map[String, SchemaEvolution.KeyFold], want: Seen): Unit = {
+    assert(want.nonEmpty)
+    assert(got.keySet === want.keySet)
+    want.foreach { case (k, (kinds, strs)) =>
+      val f = got(k)
+      assert(f.kinds === kinds.foldLeft(0)((bits, kind) => bits | (1 << kind)),
+        s"kinds differ for key '$k'")
+      if (strs.isEmpty) assert(f.sample === null, s"sample for string-less key '$k'")
+      else assert(strs.contains(f.sample), s"sample '${f.sample}' is not a value of '$k'")
+    }
+  }
 
   private def cohorts: DataFrame = {
     val now = "2023-05-01T12:34:56.789Z"
@@ -300,19 +327,19 @@ class VariantAccessSpec extends AnyFunSuite with LocalSpark {
 
   test("detectNewKeys: the in-place walk keeps the rebuild path's keys, tags and samples") {
     val known = Set("time", "name", "value", "price", "id")
-    val ascii = generated(200, seed = 11L, keys = asciiKeys).map(_.text)
-    // the built-in's samples are charset-decoded: compare non-ASCII ones
-    // only under a UTF-8 default (the field test checks them by Jackson)
-    def comparable(rows: DataFrame): DataFrame =
-      if (utf8Default) rows
-      else rows.withColumn("sample", when(col("sample").rlike("^[\\x00-\\x7f]*$"),
-        col("sample")).otherwise(lit("<non-ascii>")))
-    Seq(cohorts, mixed.toDF("value"), ascii.toDF("value")).foreach { b =>
-      val got = comparable(inPlaceDetectRows(b, known))
-      val want = comparable(builtinDetectRows(b, known))
-      assert(got.count() > 0)
-      assert(got.count() === want.count())
-      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    def fold(b: DataFrame) =
+      SchemaEvolution.foldNewKeys(b, ChGetters.parsed(col("value")), known)
+    val ascii = generated(200, seed = 11L, keys = asciiKeys)
+    val unicode = generated(200, seed = 13L)
+    assert(unicode.exists(_.members.exists(_.exists(!_._1.forall(_ < 0x80)))))
+    // the built-in map path, on every corpus whose keys it decodes
+    (Seq(cohorts, mixed.toDF("value"), ascii.map(_.text).toDF("value")) ++
+      (if (utf8Default) Seq(unicode.map(_.text).toDF("value")) else Nil)).foreach { b =>
+      assertFolds(fold(b), builtinSeen(b, known))
+    }
+    // the members' own value texts, whatever the default charset
+    Seq(ascii, unicode).foreach { msgs =>
+      assertFolds(fold(msgs.map(_.text).toDF("value")), memberSeen(msgs, known))
     }
   }
 
