@@ -1,24 +1,25 @@
 #!/usr/bin/env python3
-"""Name scan: the src/main definitions that nothing else names.
+"""Name scan: the src/main definitions that no program code names.
 
 Lists every definition in src/main (def, class, object, trait, type, and
 the val/var members of a template) whose name appears nowhere in the code
-of src/main or sinkbench/src other than on its own definition line.
+of src/main or sinkbench/src other than on its own definition line, in
+two groups: those that src/test names ("reached only by tests") and those
+that nothing names ("reached by nothing").
 Comments are left out of the search, so a name that only a doc comment
 mentions counts as unreached; string literals stay in, so a name that code
 spells as a string (a class named by reflection) counts as reached.
 
 It is a name scan, not a call graph: a definition is reached as soon as
 anything with the same name is named, and overrides, `main` (and a file's
-objects when it defines one), `apply` and `unapply` are never listed. Tests are not searched, so a definition that
-only tests reach is listed.
+objects when it defines one), `apply` and `unapply` are never listed.
 
 Run from the repo root:
 
     python3 scripts/main_reach.py
 
-Prints one `path:line kind name` row per unreached definition, then the
-line count of src/main.
+Prints each group's `path:line kind name` rows under its heading, then
+both counts and the line count of src/main.
 """
 import os
 import re
@@ -26,6 +27,7 @@ import sys
 
 ROOTS = ["src/main"]
 SEARCH = ["src/main", "sinkbench/src"]
+TESTS = ["src/test"]
 SKIP = {"main", "apply", "unapply", "toString", "equals", "hashCode"}
 
 DEF = re.compile(
@@ -93,25 +95,35 @@ def definitions(lines):
         yield no, kind, name
 
 
-def main():
-    code = {p: strip_comments(open(p, encoding="utf-8").read())
-            for p in scala_files(SEARCH)}
+def word_index(roots, code):
     words = {}
-    for p, text in code.items():
-        for no, line in enumerate(text.split("\n"), 1):
+    for p in scala_files(roots):
+        for no, line in enumerate(code[p].split("\n"), 1):
             for w in set(re.findall(r"[A-Za-z_]\w*", line)):
                 words.setdefault(w, set()).add((p, no))
-    unreached = []
+    return words
+
+
+def main():
+    code = {p: strip_comments(open(p, encoding="utf-8").read())
+            for p in scala_files(SEARCH + TESTS)}
+    program, tests = word_index(SEARCH, code), word_index(TESTS, code)
+    nothing, only_tests = [], []
     for p in scala_files(ROOTS):
         for no, kind, name in definitions(code[p].split("\n")):
-            if not (words.get(name, set()) - {(p, no)}):
-                unreached.append((p, no, kind, name))
-    for p, no, kind, name in unreached:
-        print(f"{p}:{no} {kind} {name}")
+            if program.get(name, set()) - {(p, no)}:
+                continue
+            (only_tests if name in tests else nothing).append((p, no, kind, name))
+    for title, rows in (("reached by nothing", nothing),
+                        ("reached only by tests", only_tests)):
+        print(f"{title}:")
+        for p, no, kind, name in rows:
+            print(f"  {p}:{no} {kind} {name}")
     total = sum(open(p, "rb").read().count(b"\n")
                 for root in ROOTS for d, _, fs in os.walk(root)
                 for p in (os.path.join(d, f) for f in fs))
-    print(f"{len(unreached)} unreached definitions; src/main: {total} lines")
+    print(f"{len(nothing)} reached by nothing, {len(only_tests)} reached only by tests; "
+          f"src/main: {total} lines")
     return 0
 
 

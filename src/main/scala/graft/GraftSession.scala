@@ -55,7 +55,6 @@ final case class Tables(spark: SparkSession, sfDir: String) {
   def region: DataFrame     = t("region")
   def nation: DataFrame     = t("nation")
   def customer: DataFrame   = t("customer")
-  def supplier: DataFrame   = t("supplier")
   def part: DataFrame       = t("part")
   def orders: DataFrame     = t("orders")
   def lineitem: DataFrame   = t("lineitem")

@@ -87,7 +87,7 @@ object SchemaEvolution {
       rows.foreach { r =>
         if (!r.isNullAt(0)) {
           val v = r.getVariant(0)
-          VariantAccessOps.foreachMember(v) { (key, at) =>
+          VariantAccessOps.foreachMember(v, 0) { (key, at) =>
             if (!knownSet.contains(key)) {
               val kind = VariantKindOps.kindAt(v.getValue, at)
               var acc = folds.get(key)

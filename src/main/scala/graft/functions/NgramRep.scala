@@ -14,9 +14,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * `dup` = fraction of dupN-gram characters in dupN-grams occurring 2+
   * times (every occurrence counts).
   *
-  * Replaces the compositional sorted-array + run-length aggregate
-  * ([[graft.operators.TextAnalysis.repetitionNgramStatsCompositional]]),
-  * whose interpreted per-element lambdas cost ~6 ms/document; here the
+  * Replaces the compositional sorted-array + run-length aggregate (kept
+  * in test scope as this kernel's parity oracle), whose interpreted
+  * per-element lambdas cost ~6 ms/document; here the
   * gram counts build in one hash map per n where the document is
   * scanned. Tokenization is [[PortableCase.canonToksJvm]] — byte-
   * identical to `canonToks`, so the DuckDB oracle recomputes identical

@@ -1,12 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.CatalystBridge.{toColumn, toExpression}
-import org.apache.spark.sql.types.{DataType, IntegerType}
 import org.apache.spark.types.variant.VariantUtil
-import org.apache.spark.unsafe.types.VariantVal
 
 /** O(1) variant type tag as an int, read straight from the variant binary
   * header — the tolerant getters branch on this instead of
@@ -19,10 +13,8 @@ object VariantKindOps {
   final val Dec0K = 4; final val DecFracK = 5; final val StrK = 6; final val ObjK = 7
   final val ArrK = 8; final val OtherK = 9
 
-  def kind(v: VariantVal): Int = kindAt(v.getValue, 0)
-
   /** The kind of the value at `pos` of `value`: the one switch every
-    * typed read ([[ScalarRead]]) and [[VariantKind]] make.
+    * typed read ([[ValueRead]]) and new-key detection make.
     */
   def kindAt(value: Array[Byte], pos: Int): Int = {
     import VariantUtil.Type
@@ -42,24 +34,4 @@ object VariantKindOps {
       case _            => OtherK
     }
   }
-}
-
-case class VariantKind(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-  override def prettyName: String = "variant_kind"
-
-  override def nullSafeEval(input: Any): Any =
-    VariantKindOps.kind(input.asInstanceOf[VariantVal])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.VariantKindOps.kind($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): VariantKind =
-    copy(child = newChild)
-}
-
-object VariantKind {
-  def of(c: Column): Column = toColumn(VariantKind(toExpression(c)))
 }

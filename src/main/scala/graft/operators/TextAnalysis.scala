@@ -46,18 +46,12 @@ object TextAnalysis {
       .otherwise(lit(1.0) - size(array_distinct(toks)).cast(DoubleType) / n)
   }
 
-  /** Word n-grams of the canonical tokens (space-joined), empty when the
-    * text has fewer than n tokens.
-    */
-  private def wordNgrams(text: Column, n: Int): Column =
-    ngramsOfToks(canonToks(text), n)
-
   /** N-grams over an ALREADY-TOKENIZED array — callers that need both
     * the tokens and their n-grams stage the token array once (behind
     * [[graft.functions.Once]]) instead of re-running canonicalization
     * per n-gram width.
     */
-  private def ngramsOfToks(toks: Column, n: Int): Column =
+  private[graft] def ngramsOfToks(toks: Column, n: Int): Column =
     when(size(toks) >= n,
       transform(sequence(lit(1), size(toks) - (n - 1)),
         i => concat_ws(" ", slice(toks, i, lit(n)))))
@@ -66,17 +60,9 @@ object TextAnalysis {
   /** Gopher §A1.1 repetition signals over the documents of `df`:
     * `top<topN>` = fraction of n-gram characters covered by the single
     * most frequent topN-gram; `dup<dupN>` = fraction of n-gram
-    * characters in dupN-grams occurring 2+ times. Scan-local (sorted
-    * gram array + one run-length/neighbor pass — no per-doc explode, no
-    * shuffle).
-    *
-    * The sorted gram arrays are pinned behind [[graft.functions.Once]]
-    * in their own projection: referenced naively from inside the
-    * fraction lambdas, the `array_sort(ngrams(...))` subtree would be
-    * COPIED into every `element_at` of the aggregate and re-evaluated
-    * per element — O(m^2) interpreted work per document (measured 1 s/doc
-    * at ~200 tokens). The barrier + attribute reference makes it
-    * once-per-row.
+    * characters in dupN-grams occurring 2+ times. Scan-local: one fused
+    * pass per document ([[graft.functions.NgramRepFractions]]), no
+    * per-doc explode, no shuffle.
     */
   def repetitionNgramStats(df: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String, topN: Int = 2, dupN: Int = 5): org.apache.spark.sql.DataFrame =
@@ -85,76 +71,6 @@ object TextAnalysis {
       .select(col(idCol),
         col("__r").getField("top").as(s"top$topN"),
         col("__r").getField("dup").as(s"dup$dupN"))
-
-  /** The definitional sorted-array + run-length composition, kept as the
-    * parity pin for the fused kernel (its interpreted per-element
-    * lambdas cost ~6 ms/doc — never use it on a real corpus).
-    */
-  private[graft] def repetitionNgramStatsCompositional(
-      df: org.apache.spark.sql.DataFrame, idCol: String,
-      textCol: String, topN: Int, dupN: Int): org.apache.spark.sql.DataFrame =
-    df.select(col(idCol),
-        graft.functions.Once(array_sort(wordNgrams(col(textCol), topN))).as("__st"),
-        graft.functions.Once(array_sort(wordNgrams(col(textCol), dupN))).as("__sd"))
-      .select(col(idCol),
-        topNgramCharFractionOfSorted(col("__st")).as(s"top$topN"),
-        dupNgramCharFractionOfSorted(col("__sd")).as(s"dup$dupN"))
-
-  /** Gopher §A1.1 "duplicate n-gram" signal over a PRE-SORTED gram array
-    * (see [[repetitionNgramStats]] for why the sort must be pinned in
-    * its own projection): an occurrence is duplicated iff it equals a
-    * neighbor. 0 when fewer than 2 grams.
-    */
-  def dupNgramCharFractionOfSorted(sorted: Column): Column = {
-    val m = size(sorted)
-    val dupChars = aggregate(sequence(lit(1), m), lit(0L), (acc, i) => {
-      val cur = element_at(sorted, i)
-      val prevEq = coalesce(
-        when(i >= 2, element_at(sorted, i - 1) === cur), lit(false))
-      val nextEq = coalesce(
-        when(i < m, element_at(sorted, i + 1) === cur), lit(false))
-      acc + when(prevEq || nextEq, length(cur).cast(LongType)).otherwise(0L)
-    })
-    val totChars = aggregate(sorted, lit(0L), (a, s) => a + length(s))
-    when(m < 2 || totChars === 0, lit(0.0))
-      .otherwise(round(dupChars.cast(DoubleType) / totChars.cast(DoubleType), 6))
-  }
-
-  /** Gopher §A1.1 "top n-gram" signal over a PRE-SORTED gram array: the
-    * fraction of n-gram characters covered by the single most frequent
-    * n-gram (ties break to the lexicographically smallest). One
-    * run-length pass — SQL-twinned by a windowed argmax.
-    */
-  def topNgramCharFractionOfSorted(sorted: Column): Column = {
-    val state0 = struct(lit("").as("prev"), lit(0L).as("run"),
-      lit(0L).as("bestRun"), lit("").as("best"))
-    val agg = aggregate(sorted, state0,
-      (st, x) => {
-        val same = st.getField("prev") === x
-        val closedBetter = !same && st.getField("run") > st.getField("bestRun")
-        struct(
-          x.as("prev"),
-          when(same, st.getField("run") + 1L).otherwise(lit(1L)).as("run"),
-          when(closedBetter, st.getField("run"))
-            .otherwise(st.getField("bestRun")).as("bestRun"),
-          when(closedBetter, st.getField("prev"))
-            .otherwise(st.getField("best")).as("best"))
-      },
-      st => {
-        val finalBetter = st.getField("run") > st.getField("bestRun")
-        struct(
-          when(finalBetter, st.getField("run"))
-            .otherwise(st.getField("bestRun")).as("bestRun"),
-          when(finalBetter, st.getField("prev"))
-            .otherwise(st.getField("best")).as("best"))
-      })
-    val totChars = aggregate(sorted, lit(0L), (a, s) => a + length(s))
-    when(size(sorted) === 0 || totChars === 0, lit(0.0))
-      .otherwise(round(
-        agg.getField("bestRun").cast(DoubleType) *
-          length(agg.getField("best")).cast(DoubleType) /
-          totChars.cast(DoubleType), 6))
-  }
 
   // ---- quality scoring ------------------------------------------------
 
@@ -925,7 +841,7 @@ object TextAnalysis {
     * bounded bucket space.
     */
   /** DSIR feature rows with the tokenization staged ONCE per row: the naive
-    * `concat(canonToks(t), wordNgrams(t, 2))` runs the regex-heavy
+    * `concat(canonToks(t), ngramsOfToks(canonToks(t), 2))` runs the regex-heavy
     * canonicalization twice per document per pass (once for unigrams,
     * once inside the bigram builder) — on the corpus-scale feature scans
     * that doubled the dominant cost. `prev` carries the other columns

@@ -5,14 +5,14 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.ChGetters.ParseOpts
-import graft.functions.{ChGetters, IpUtil}
+import graft.functions.{ChGetters, IpUtil, VariantAccess}
 import graft.types.{ChKind, ChTypeInfo}
 
 /** Text-cell tolerant getters for the CSV parser path (SURVEY P4;
   * reference `/root/reference/parser/csv.go`). Unlike the JSON path, CSV
   * cells are all text, so numeric getters PARSE the text ("123" -> 123),
   * with the same clamp/default/Epoch rules as the JSON getters. Array/map
-  * cells arrive as embedded JSON and reuse the variant getters.
+  * cells arrive as embedded JSON and reuse the JSON path's typed reads.
   */
 object CsvGetters {
 
@@ -87,14 +87,13 @@ object CsvGetters {
       .when(validIpUdf(s), s)
       .otherwise(lit(zero))
 
-  /** Dispatcher; embedded-JSON cells (arrays/maps/objects) reuse the
-    * variant getters (csv.go parses them with fastjson too).
+  /** Dispatcher; embedded-JSON cells (arrays/maps/objects) are the JSON
+    * path's typed reads at the root of the parsed cell (csv.go parses
+    * them with fastjson too).
     */
   def getValue(s: Column, ti: ChTypeInfo, opts: ParseOpts): Column = {
-    if (ti.kind == ChKind.MapK)
-      ChGetters.getMap(try_parse_json(s), ti, opts)
-    else if (ti.array)
-      ChGetters.getArray(try_parse_json(s), ti, opts)
+    if (ti.kind == ChKind.MapK || ti.array || ti.kind == ChKind.Obj)
+      VariantAccess.read(try_parse_json(s), None, ti, opts)
     else ti.kind match {
       case ChKind.Bool     => getBool(s, ti.nullable)
       case ChKind.Int8     => getSigned(s, ti.nullable, ByteType)
@@ -111,10 +110,9 @@ object CsvGetters {
       case ChKind.Decimal  => getDecimal(s, ti.nullable)
       case ChKind.DateTime => getDateTime(s, ti.nullable, opts, ti.dateTime64Precision)
       case ChKind.Str      => getString(s, ti.nullable)
-      case ChKind.Obj      => ChGetters.getObject(try_parse_json(s))
       case ChKind.IPv4     => getIp(s, ti.nullable, "0.0.0.0")
       case ChKind.IPv6     => getIp(s, ti.nullable, "::")
-      case ChKind.MapK     => throw new IllegalStateException("handled above")
+      case ChKind.MapK | ChKind.Obj => throw new IllegalStateException("handled above")
     }
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.functions.{ChGetters, VariantAccess}
 import graft.functions.ChGetters.ParseOpts
-import graft.types.{ChKind, ChTypeInfo}
+import graft.types.ChTypeInfo
 
 /** Message -> typed row projection (SURVEY §2.2-§2.4): the declarative
   * equivalent of the reference's parse + metric2Row hot path
@@ -60,37 +60,29 @@ object Projector {
     def static(d: Dim): Option[Column] =
       fields.get(d.source).map(rawJson => ChGetters.parsed(lit(rawJson)))
 
-    // Stage 1: maps, arrays and Object('json') stay on the built-in path,
-    // over a variant field bound once here.
-    val fieldCols = dims.filterNot(d => kafkaMeta.contains(d.name) || isScalar(d)).map { d =>
-      static(d).getOrElse(VariantAccess.field(col("__msg__"), d.source)).as(s"__f_${d.name}")
-    }
-    val stage1 = parsed.select(parsed.columns.map(col).toSeq ++ fieldCols: _*)
-
-    // Stage 2: every scalar dim is ONE typed read over the message
-    // (graft.functions.ScalarRead): it finds its key in place, switches
-    // once on the value's type tag and returns the getter's result
-    // unboxed, with no field binding and no casts. That keeps the stage's
-    // generated code small: above HotSpot's 8,000-byte method limit the
-    // JIT never compiles processNext and the batch runs interpreted.
+    // Every dim but a meta dim is ONE typed read over the message
+    // (graft.functions.ValueRead): it finds its key in place and returns
+    // the getter's result, a map or an array reading its members at their
+    // offsets, with no field binding, cast or higher-order function. That
+    // keeps the projection in one codegen stage small enough for the JIT:
+    // above HotSpot's 8,000-byte method limit processNext runs interpreted.
+    // A read keeps the dim's own nullability even when notNullable is
+    // set: the reference extracts with Nullable semantics and then DROPS
+    // the message on null (task/task.go:303-314), it does not substitute
+    // a default.
     val cols = dims.map { d =>
       if (kafkaMeta.contains(d.name))
-        metaColumn(stage1, d).getOrElse(lit(null).cast(d.ti.sparkType).as(d.name))
-      else if (!isScalar(d)) valueColumn(col(s"__f_${d.name}"), d, opts).as(d.name)
+        metaColumn(parsed, d).getOrElse(lit(null).cast(d.ti.sparkType).as(d.name))
       else {
         val (v, key) = static(d) match {
           case Some(v) => (v, None)
           case None    => (col("__msg__"), Some(d.source))
         }
-        VariantAccess.read(v, key, d.ti.kind, d.ti.nullable, opts, d.ti.dateTime64Precision)
-          .as(d.name)
+        VariantAccess.read(v, key, d.ti, opts).as(d.name)
       }
     }
-    withNotNullFilter(stage1.select(cols: _*), dims)
+    withNotNullFilter(parsed.select(cols: _*), dims)
   }
-
-  private def isScalar(d: Dim): Boolean =
-    !d.ti.array && d.ti.kind != ChKind.MapK && d.ti.kind != ChKind.Obj
 
   /** Project a CSV-message DataFrame given the csvFormat column order
     * (P4 — RFC-4180, custom delimiter, strict arity; parser/csv.go).
@@ -130,15 +122,6 @@ object Projector {
       if (df.columns.contains(src)) Some(col(src).cast(d.ti.sparkType).as(d.name))
       else None
     }
-
-  // NOTE: the getter keeps the dim's own nullability even when
-  // notNullable is set — the reference extracts with Nullable semantics
-  // and then DROPS the message on null (task/task.go:303-314), it does
-  // not substitute a default.
-  private def valueColumn(f: Column, d: Dim, opts: ParseOpts): Column =
-    if (d.ti.kind == ChKind.MapK) ChGetters.getMap(f, d.ti, opts)
-    else if (d.ti.array) ChGetters.getArray(f, d.ti, opts)
-    else ChGetters.getObject(f)
 
   /** F14/FL2 — a NULL in a NotNullable dim drops the whole message. */
   private def withNotNullFilter(df: DataFrame, dims: Seq[Dim]): DataFrame = {

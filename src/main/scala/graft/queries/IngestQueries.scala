@@ -8,7 +8,7 @@ import graft.functions.{ChGetters, VariantAccess}
 import graft.functions.ChGetters.ParseOpts
 import graft.parse.CsvGetters
 import graft.shard.Sharding
-import graft.types.{ChKind, ChType}
+import graft.types.{ChKind, ChType, ChTypeInfo}
 
 /** Reference-parity ingest surface (SURVEY §2), phrased over the driver's
   * parquet tables: JSON and CSV parsing into the tolerant typed
@@ -43,7 +43,7 @@ object IngestQueries {
           col("value").as("v"),
           date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_str"))).as("raw"))
       val msg = ChGetters.parsed(col("raw"))
-      def f(n: String, k: ChKind) = VariantAccess.read(msg, Some(n), k, nullable = false, opts, 0)
+      def f(n: String, k: ChKind) = VariantAccess.read(msg, Some(n), ChTypeInfo(k), opts)
       raw.select(
         col("event_id"),
         f("id", ChKind.Int64).as("id_i64"),

@@ -33,10 +33,15 @@ final class SinkerApp(
     /** Executes DDL against ClickHouse (or records it under test). */
     execDdl: String => Unit,
     checkpointRoot: String,
-    /** Passed to every task's query (write counters); a failed query
-      * shows there when it is also the session's query listener.
+    /** Passed to every task's query (write counters), and registered
+      * as the session's query listener unless it already is one, so a
+      * failed query shows on its `/state` and `/metrics`.
       */
     metrics: Option[Metrics] = None) {
+
+  metrics.foreach { m =>
+    if (!spark.streams.listListeners().contains(m)) spark.streams.addListener(m)
+  }
 
   /** Live schema per task: dims evolve as ALTERs land. */
   private val schemas = new ConcurrentHashMap[String, Seq[Dim]]()
@@ -94,9 +99,6 @@ final class SinkerApp(
         s"task ${task.name}: tableName '${task.tableName}' is not " +
           "`table` or `db.table`")
     }
-
-  def awaitAllProcessed(): Unit =
-    queries.values().forEach(q => if (q.isActive) q.processAllAvailable())
 
   def stopAll(): Unit = queries.values().forEach(_.stop())
 

@@ -51,23 +51,24 @@ class ChGettersSpec extends AnyFunSuite with LocalSpark {
     "map_str_float": {"i":3.1415, "j":9.876},
     "map_uint_uint": {"1":1, "2":2},
     "map_int_string": {"1":"3.1415", "2":"9.876"},
-    "map_str_map": {"i":{"i":1, "j":2}, "j":{"i":3, "j":4}}
+    "map_str_map": {"i":{"i":1, "j":2}, "j":{"i":3, "j":4}},
+    "map_int_poison": {"x":"dropped", "1":"later", "01":"earlier", "2":"two"}
   }"""
 
   val opts = ParseOpts(timeZone = "UTC", timeUnit = 0.000001) // micros, like the Go tests
 
   private def row(cols: (String, org.apache.spark.sql.Column)*): Row = {
     val df  = Seq(jsonSample).toDF("raw")
-    val msg = ChGetters.parsed(col("raw"))
     df.select(cols.map { case (n, c) => c.as(n) }: _*).head()
   }
 
-  private def g(name: String) =
-    VariantAccess.field(ChGetters.parsed(col("raw")), name)
+  /** The getter of `ti` read at top-level key `name` of column `raw`. */
+  private def read(name: String, ti: ChTypeInfo) =
+    VariantAccess.read(ChGetters.parsed(col("raw")), Some(name), ti, opts)
 
-  /** The scalar getter of `kind` at the root of field `f`. */
-  private def get(f: org.apache.spark.sql.Column, kind: ChKind, nullable: Boolean = false) =
-    ChGetters.getScalar(f, kind, nullable, opts, 0)
+  /** The scalar getter of `kind` at top-level key `name`. */
+  private def get(name: String, kind: ChKind, nullable: Boolean = false) =
+    read(name, ChTypeInfo(kind, nullable))
 
   private def micros(i: Instant): Long = i.getEpochSecond * 1000000L + i.getNano / 1000L
 
@@ -76,12 +77,12 @@ class ChGettersSpec extends AnyFunSuite with LocalSpark {
 
   test("bool getter (F1)") {
     val r = row(
-      "t"  -> get(g("bool_true"), ChKind.Bool),
-      "f"  -> get(g("bool_false"), ChKind.Bool),
-      "n"  -> get(g("num_int"), ChKind.Bool),
-      "nn" -> get(g("num_int"), ChKind.Bool, nullable = true),
-      "m"  -> get(g("not_exist"), ChKind.Bool),
-      "mn" -> get(g("not_exist"), ChKind.Bool, nullable = true))
+      "t"  -> get("bool_true", ChKind.Bool),
+      "f"  -> get("bool_false", ChKind.Bool),
+      "n"  -> get("num_int", ChKind.Bool),
+      "nn" -> get("num_int", ChKind.Bool, nullable = true),
+      "m"  -> get("not_exist", ChKind.Bool),
+      "mn" -> get("not_exist", ChKind.Bool, nullable = true))
     assert(r.getBoolean(0) === true)
     assert(r.getBoolean(1) === false)
     assert(r.getBoolean(2) === false)
@@ -92,15 +93,15 @@ class ChGettersSpec extends AnyFunSuite with LocalSpark {
 
   test("signed int getters with clamp (F2)") {
     val r = row(
-      "i"   -> get(g("num_int"), ChKind.Int64),
-      "b"   -> get(g("bool_true"), ChKind.Int64),
-      "f"   -> get(g("num_float"), ChKind.Int64),
-      "s"   -> get(g("str_int"), ChKind.Int64),
-      "sn"  -> get(g("str_int"), ChKind.Int64, nullable = true),
-      "arr" -> ChGetters.getArray(g("array_num_int_1"),
-        ChTypeInfo(ChKind.Int64, array = true), opts),
-      "arr8" -> ChGetters.getArray(g("array_num_int_2"),
-        ChTypeInfo(ChKind.Int8, array = true), opts))
+      "i"   -> get("num_int", ChKind.Int64),
+      "b"   -> get("bool_true", ChKind.Int64),
+      "f"   -> get("num_float", ChKind.Int64),
+      "s"   -> get("str_int", ChKind.Int64),
+      "sn"  -> get("str_int", ChKind.Int64, nullable = true),
+      "arr" -> read("array_num_int_1",
+        ChTypeInfo(ChKind.Int64, array = true)),
+      "arr8" -> read("array_num_int_2",
+        ChTypeInfo(ChKind.Int8, array = true)))
     assert(r.getLong(0) === 123L)
     assert(r.getLong(1) === 1L)
     assert(r.getLong(2) === 0L) // float rejected for int target
@@ -114,12 +115,12 @@ class ChGettersSpec extends AnyFunSuite with LocalSpark {
 
   test("unsigned getters (F3)") {
     val r = row(
-      "u8"  -> ChGetters.getArray(g("array_num_int_1"),
-        ChTypeInfo(ChKind.UInt8, array = true), opts),
-      "u64" -> ChGetters.getArray(g("array_num_int_1"),
-        ChTypeInfo(ChKind.UInt64, array = true), opts),
-      "neg" -> ChGetters.getArray(g("array_num_int_2"),
-        ChTypeInfo(ChKind.UInt32, array = true), opts))
+      "u8"  -> read("array_num_int_1",
+        ChTypeInfo(ChKind.UInt8, array = true)),
+      "u64" -> read("array_num_int_1",
+        ChTypeInfo(ChKind.UInt64, array = true)),
+      "neg" -> read("array_num_int_2",
+        ChTypeInfo(ChKind.UInt32, array = true)))
     // 2^64-1 fits Go's Uint64() and clamps to 255; 2^64 overflows -> default
     assert(r.getSeq[Short](0) === Seq[Short](0, 255, 255, 255, 255, 255, 255, 255, 0))
     val u64 = r.getSeq[java.math.BigDecimal](1).map(_.toBigInteger.toString)
@@ -132,13 +133,13 @@ class ChGettersSpec extends AnyFunSuite with LocalSpark {
 
   test("float/decimal getters (F4/F5)") {
     val r = row(
-      "f"  -> get(g("num_float"), ChKind.Float64),
-      "i"  -> get(g("num_int"), ChKind.Float64),
-      "b"  -> get(g("bool_true"), ChKind.Float64),
-      "s"  -> get(g("str_float"), ChKind.Float64),
-      "big"-> ChGetters.getArray(g("array_num_int_1"),
-        ChTypeInfo(ChKind.Float64, array = true), opts),
-      "d"  -> get(g("num_float"), ChKind.Decimal))
+      "f"  -> get("num_float", ChKind.Float64),
+      "i"  -> get("num_int", ChKind.Float64),
+      "b"  -> get("bool_true", ChKind.Float64),
+      "s"  -> get("str_float", ChKind.Float64),
+      "big"-> read("array_num_int_1",
+        ChTypeInfo(ChKind.Float64, array = true)),
+      "d"  -> get("num_float", ChKind.Decimal))
     assert(r.getDouble(0) === 123.321)
     assert(r.getDouble(1) === 123.0)
     assert(r.getDouble(2) === 0.0) // bool rejected for float target
@@ -150,15 +151,15 @@ class ChGettersSpec extends AnyFunSuite with LocalSpark {
 
   test("string getter (F6)") {
     val r = row(
-      "s"   -> get(g("str"), ChKind.Str),
-      "dot" -> get(g("app.kubernetes.io/name"), ChKind.Str),
-      "i"   -> get(g("num_int"), ChKind.Str),
-      "f"   -> get(g("num_float"), ChKind.Str),
-      "b"   -> get(g("bool_true"), ChKind.Str),
-      "nul" -> get(g("null"), ChKind.Str),
-      "nuln"-> get(g("null"), ChKind.Str, nullable = true),
-      "arr" -> ChGetters.getArray(g("array_num_int_1"),
-        ChTypeInfo(ChKind.Str, array = true), opts))
+      "s"   -> get("str", ChKind.Str),
+      "dot" -> get("app.kubernetes.io/name", ChKind.Str),
+      "i"   -> get("num_int", ChKind.Str),
+      "f"   -> get("num_float", ChKind.Str),
+      "b"   -> get("bool_true", ChKind.Str),
+      "nul" -> get("null", ChKind.Str),
+      "nuln"-> get("null", ChKind.Str, nullable = true),
+      "arr" -> read("array_num_int_1",
+        ChTypeInfo(ChKind.Str, array = true)))
     assert(r.getString(0) === "escaped_\"ws")
     assert(r.getString(1) === "kube-state-metrics")
     assert(r.getString(2) === "123")
@@ -172,17 +173,17 @@ class ChGettersSpec extends AnyFunSuite with LocalSpark {
 
   test("datetime getter (F7/F8)") {
     val r = row(
-      "d1"  -> get(g("str_date_1"), ChKind.DateTime),
-      "d2"  -> get(g("str_date_2"), ChKind.DateTime),
-      "r1"  -> get(g("str_time_rfc3339_1"), ChKind.DateTime),
-      "r2"  -> get(g("str_time_rfc3339_2"), ChKind.DateTime),
-      "c1"  -> get(g("str_time_clickhouse_1"), ChKind.DateTime),
-      "c2"  -> get(g("str_time_clickhouse_2"), ChKind.DateTime),
-      "num" -> get(g("num_int"), ChKind.DateTime),
-      "bad" -> get(g("str"), ChKind.DateTime),
-      "badn"-> get(g("str"), ChKind.DateTime, nullable = true),
-      "arr" -> ChGetters.getArray(g("array_str_date_1"),
-        ChTypeInfo(ChKind.DateTime, array = true), opts))
+      "d1"  -> get("str_date_1", ChKind.DateTime),
+      "d2"  -> get("str_date_2", ChKind.DateTime),
+      "r1"  -> get("str_time_rfc3339_1", ChKind.DateTime),
+      "r2"  -> get("str_time_rfc3339_2", ChKind.DateTime),
+      "c1"  -> get("str_time_clickhouse_1", ChKind.DateTime),
+      "c2"  -> get("str_time_clickhouse_2", ChKind.DateTime),
+      "num" -> get("num_int", ChKind.DateTime),
+      "bad" -> get("str", ChKind.DateTime),
+      "badn"-> get("str", ChKind.DateTime, nullable = true),
+      "arr" -> read("array_str_date_1",
+        ChTypeInfo(ChKind.DateTime, array = true)))
     def iso(s: String) = micros(Instant.parse(s))
     assert(tsOf(r, 0) === iso("2009-07-13T00:00:00Z"))
     assert(tsOf(r, 1) === iso("2009-07-13T00:00:00Z"))
@@ -202,10 +203,10 @@ class ChGettersSpec extends AnyFunSuite with LocalSpark {
 
   test("object getter keeps only scalar members (F10)") {
     val r = row(
-      "obj" -> ChGetters.getObject(g("obj")),
-      "ss"  -> ChGetters.getObject(g("map_str_str")),
-      "sf"  -> ChGetters.getObject(g("map_str_float")),
-      "non" -> ChGetters.getObject(g("num_int")))
+      "obj" -> read("obj", ChTypeInfo(ChKind.Obj)),
+      "ss"  -> read("map_str_str", ChTypeInfo(ChKind.Obj)),
+      "sf"  -> read("map_str_float", ChTypeInfo(ChKind.Obj)),
+      "non" -> read("num_int", ChTypeInfo(ChKind.Obj)))
     assert(r.getMap[String, String](0) === Map.empty) // all members are arrays
     assert(r.getMap[String, String](1) === Map("i" -> "first", "j" -> "second"))
     assert(r.getMap[String, String](2) === Map("i" -> "3.1415", "j" -> "9.876"))
@@ -218,11 +219,14 @@ class ChGettersSpec extends AnyFunSuite with LocalSpark {
     val mapIntStr  = ChType.whichType("Map(Int64, String)")
     val mapStrMap  = ChType.whichType("Map(String, Map(String, UInt32))")
     val r = row(
-      "su" -> ChGetters.getMap(g("map_str_uint"), mapStrUint, opts),
-      "uu" -> ChGetters.getMap(g("map_uint_uint"), mapUintUint, opts),
-      "is" -> ChGetters.getMap(g("map_int_string"), mapIntStr, opts),
-      "sm" -> ChGetters.getMap(g("map_str_map"), mapStrMap, opts),
-      "no" -> ChGetters.getMap(g("num_int"), mapStrUint, opts))
+      "su" -> read("map_str_uint", mapStrUint),
+      "uu" -> read("map_uint_uint", mapUintUint),
+      "is" -> read("map_int_string", mapIntStr),
+      "sm" -> read("map_str_map", mapStrMap),
+      "no" -> read("num_int", mapStrUint),
+      // a key that does not convert is dropped; of "01" and "1", the later
+      // in the object's stored (sorted) key order gives key 1's value
+      "ip" -> read("map_int_poison", mapIntStr))
     assert(r.getMap[String, java.math.BigDecimal](0).view.mapValues(_.longValue).toMap
       === Map("i" -> 1L, "j" -> 2L))
     assert(r.getMap[java.math.BigDecimal, java.math.BigDecimal](1)
@@ -231,23 +235,22 @@ class ChGettersSpec extends AnyFunSuite with LocalSpark {
     assert(r.getMap[String, Map[String, Long]](3) ===
       Map("i" -> Map("i" -> 1L, "j" -> 2L), "j" -> Map("i" -> 3L, "j" -> 4L)))
     assert(r.getMap[String, java.math.BigDecimal](4) === Map.empty)
+    assert(r.getMap[Long, String](5) === Map(1L -> "later", 2L -> "two"))
   }
 
   test("ip getters (F9)") {
     val ipJson =
       """{"v4":"192.168.1.1","bad":"256.1.1.1","v6":"2001:db8::1","num":3232235777,"obj":{"a":1}}"""
     val df  = Seq(ipJson).toDF("raw")
-    val msg = ChGetters.parsed(col("raw"))
-    def f(n: String) = VariantAccess.field(msg, n)
     val r = df.select(
-      get(f("v4"), ChKind.IPv4).as("a"),
-      get(f("bad"), ChKind.IPv4).as("b"),
-      get(f("v6"), ChKind.IPv4).as("c"),
-      get(f("num"), ChKind.IPv4).as("d"),
-      get(f("obj"), ChKind.IPv4).as("e"),
-      get(f("missing"), ChKind.IPv4).as("g"),
-      get(f("v6"), ChKind.IPv6).as("h"),
-      get(f("bad"), ChKind.IPv6).as("i")).head()
+      get("v4", ChKind.IPv4).as("a"),
+      get("bad", ChKind.IPv4).as("b"),
+      get("v6", ChKind.IPv4).as("c"),
+      get("num", ChKind.IPv4).as("d"),
+      get("obj", ChKind.IPv4).as("e"),
+      get("missing", ChKind.IPv4).as("g"),
+      get("v6", ChKind.IPv6).as("h"),
+      get("bad", ChKind.IPv6).as("i")).head()
     assert(r.getString(0) === "192.168.1.1")
     assert(r.getString(1) === "0.0.0.0")
     assert(r.getString(2) === "2001:db8::1") // Go net.ParseIP accepts either family
@@ -262,14 +265,12 @@ class ChGettersSpec extends AnyFunSuite with LocalSpark {
     // fastjson Int64()/Uint64() parse the raw text: "28.0" is float syntax
     // even though its value is integral
     val df = Seq("""{"fi":28.0,"fn":-3.0,"i":28}""").toDF("raw")
-    val msg = ChGetters.parsed(col("raw"))
-    def f(n: String) = VariantAccess.field(msg, n)
     val r = df.select(
-      get(f("fi"), ChKind.Int64).as("a"),
-      get(f("fi"), ChKind.UInt8).as("b"),
-      get(f("i"), ChKind.Int64).as("c"),
-      get(f("fi"), ChKind.Float64).as("d"),
-      get(f("fn"), ChKind.Int64).as("e")).head()
+      get("fi", ChKind.Int64).as("a"),
+      get("fi", ChKind.UInt8).as("b"),
+      get("i", ChKind.Int64).as("c"),
+      get("fi", ChKind.Float64).as("d"),
+      get("fn", ChKind.Int64).as("e")).head()
     assert(r.getLong(0) === 0L)
     assert(r.getShort(1) === 0)
     assert(r.getLong(2) === 28L)
@@ -283,11 +284,10 @@ class ChGettersSpec extends AnyFunSuite with LocalSpark {
     // same digits without a fraction are a big integer literal and clamp
     val df = Seq("""{"a":9223372036854775808.0,"b":18446744073709551615.00,""" +
       """"c":9223372036854775808,"d":18446744073709551615}""").toDF("raw")
-    val msg = ChGetters.parsed(col("raw"))
     val kinds = Seq(ChKind.UInt8, ChKind.UInt16, ChKind.UInt32, ChKind.UInt64)
     val keys = Seq("a", "b", "c", "d")
     val r = df.select(kinds.flatMap(k => keys.map(n =>
-      get(VariantAccess.field(msg, n), k).cast(StringType))): _*).head()
+      get(n, k).cast(StringType))): _*).head()
     val got = r.toSeq.grouped(keys.size).toSeq
     assert(got === Seq(
       Seq("0", "0", "255", "255"),
@@ -298,16 +298,16 @@ class ChGettersSpec extends AnyFunSuite with LocalSpark {
 
   test("array edge cases (F12)") {
     val r = row(
-      "empty" -> ChGetters.getArray(g("array_empty"),
-        ChTypeInfo(ChKind.Int64, array = true), opts),
-      "nulls" -> ChGetters.getArray(g("array_null"),
-        ChTypeInfo(ChKind.Int64, array = true), opts),
-      "nullsS" -> ChGetters.getArray(g("array_null"),
-        ChTypeInfo(ChKind.Str, array = true), opts),
-      "bools" -> ChGetters.getArray(g("array_bool"),
-        ChTypeInfo(ChKind.Int64, array = true), opts),
-      "scalar" -> ChGetters.getArray(g("num_int"),
-        ChTypeInfo(ChKind.Int64, array = true), opts))
+      "empty" -> read("array_empty",
+        ChTypeInfo(ChKind.Int64, array = true)),
+      "nulls" -> read("array_null",
+        ChTypeInfo(ChKind.Int64, array = true)),
+      "nullsS" -> read("array_null",
+        ChTypeInfo(ChKind.Str, array = true)),
+      "bools" -> read("array_bool",
+        ChTypeInfo(ChKind.Int64, array = true)),
+      "scalar" -> read("num_int",
+        ChTypeInfo(ChKind.Int64, array = true)))
     assert(r.getSeq[Long](0) === Seq.empty)
     assert(r.getSeq[Long](1) === Seq(0L)) // null element -> default
     assert(r.getSeq[String](2) === Seq(""))

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -9,18 +11,30 @@ import org.apache.spark.sql.types._
 import org.apache.spark.types.variant.VariantUtil
 import org.apache.spark.unsafe.types.VariantVal
 
-import graft.functions.{ChGetters, IpUtil, VariantAccess, VariantKindOps}
+import graft.functions.{ChGetters, IpUtil, VariantAccessOps, VariantKindOps}
 import graft.functions.ChGetters.ParseOpts
-import graft.types.ChKind
+import graft.types.{ChKind, ChTypeInfo}
 
-/** The Column-composed tolerant scalar getters (F1-F9) that the typed
-  * reads ([[graft.functions.ScalarRead]]) replaced, kept as the oracle of
-  * [[VariantReadSpec]]: each is a `CASE WHEN` over a kind tag and
-  * `try_variant_get` casts of a bound field. They are unchanged but for
-  * the tag, which comes from `schema_of_variant` (see `kindOf`) instead
-  * of the main code's `variant_kind`.
+/** The Column-composed tolerant getters that the typed reads
+  * ([[graft.functions.ValueRead]]) replaced, kept as the oracle of
+  * [[VariantReadSpec]]: each scalar getter (F1-F9) is a `CASE WHEN` over
+  * a kind tag and `try_variant_get` casts of a bound field, and the
+  * container getters (F10-F12) cast to `map<string,variant>` or
+  * `array<variant>` and apply the scalar getters through
+  * `transform_values`, `transform_keys`, `map_filter` and `transform`.
+  * They are unchanged but for the tag, which comes from
+  * `schema_of_variant` (see `kindOf`) instead of the main code's kind
+  * switch.
+  *
+  * `field`, `string` and `kind` expose the main code's in-place walk
+  * ([[VariantAccessOps]], [[VariantKindOps]]) as Columns: a top-level
+  * field as a variant, a string's payload and the kind tag.
   */
 object ColumnGetters {
+
+  def field(msg: Column, key: String): Column = toColumn(FieldOf(toExpression(msg), key))
+  def string(f: Column): Column = toColumn(StringOf(toExpression(f)))
+  def kind(f: Column): Column = toColumn(KindOf(toExpression(f)))
 
   /** The field's kind tag ([[VariantKindOps]]'s ints), classified from
     * `schema_of_variant` here rather than by the main code's kind switch,
@@ -63,7 +77,7 @@ object ColumnGetters {
   private def asDec(f: Column): Column = try_variant_get(f, "$", "decimal(38,0)")
   private def asDouble(f: Column): Column = try_variant_get(f, "$", "double")
   // string payload only: every caller branches on StrK first
-  private def asString(f: Column): Column = VariantAccess.string(f)
+  private def asString(f: Column): Column = string(f)
   private def asLong(f: Column): Column = try_variant_get(f, "$", "bigint")
   private def asBool(f: Column): Column = try_variant_get(f, "$", "boolean")
 
@@ -236,12 +250,108 @@ object ColumnGetters {
     case ChKind.Decimal  => getDecimal(f, nullable)
     case ChKind.DateTime => getDateTime(f, nullable, opts, dt64Precision)
     case ChKind.Str      => getString(f, nullable)
-    case ChKind.Obj      => ChGetters.getObject(f)
+    case ChKind.Obj      => getObject(f)
     case ChKind.IPv4     => getIPv4(f, nullable)
     case ChKind.IPv6     => getIPv6(f, nullable)
     case ChKind.MapK =>
       throw new IllegalArgumentException("nested Map handled by getMap")
   }
+
+  // ---- object / map / array (F10-F12) --------------------------------
+
+  private def asVariantMap(f: Column): Column =
+    try_variant_get(f, "$", "map<string,variant>")
+
+  /** F10: JSON object keeping only string & number members, stringified
+    * (Object('json') target; fastjson.go:681-710). Non-object -> empty map.
+    */
+  def getObject(f: Column): Column = {
+    val m = asVariantMap(f)
+    val kept = map_filter(m, (_, v) => isStrTy(kindOf(v)) || isNumTy(kindOf(v)))
+    val strd = transform_values(kept, (_, v) =>
+      when(isStrTy(kindOf(v)), asString(v)).otherwise(to_json(v)))
+    coalesce(strd, map().cast(MapType(StringType, StringType)))
+  }
+
+  /** F11: Map(K, V) — object keys cast to the map-key type, values cast
+    * recursively (fastjson.go:327-455,660-679). Non-object -> empty map.
+    * A key that does not convert, or two that convert to one value, make
+    * `transform_keys` throw (NULL_MAP_KEY, DUPLICATED_MAP_KEY) before the
+    * `map_filter` runs.
+    */
+  def getMap(f: Column, ti: ChTypeInfo, opts: ParseOpts): Column = {
+    val keyTi = ti.mapKey.getOrElse(ChTypeInfo(ChKind.Str))
+    val valTi = ti.mapValue.getOrElse(ChTypeInfo(ChKind.Str))
+    val m = asVariantMap(f)
+    val valued = transform_values(m, (_, v) =>
+      if (valTi.kind == ChKind.MapK) getMap(v, valTi, opts)
+      else if (valTi.array) getArray(v, valTi, opts)
+      else getScalar(v, valTi.kind, nullable = valTi.nullable, opts,
+        valTi.dateTime64Precision))
+    val keyed = keyTi.kind match {
+      case ChKind.Str => valued
+      case k =>
+        val cast = transform_keys(valued, (kcol, _) => k match {
+          case ChKind.DateTime =>
+            coalesce(autoTimestamp(kcol, opts.timeZone),
+              timestamp_seconds(kcol.cast("double") * lit(opts.timeUnit)))
+          case _ => kcol.cast(ChTypeInfo(k).elementSparkType)
+        })
+        map_filter(cast, (kcol, _) => kcol.isNotNull)
+    }
+    val target = ti.elementSparkType.asInstanceOf[MapType]
+    coalesce(keyed, map().cast(target))
+  }
+
+  /** F12: Array(T) — elementwise scalar getter with non-null defaults;
+    * non-array -> empty array (fastjson.go:204-325).
+    */
+  def getArray(f: Column, ti: ChTypeInfo, opts: ParseOpts): Column = {
+    val arr = try_variant_get(f, "$", "array<variant>")
+    val conv = transform(arr, e =>
+      getScalar(e, ti.kind, nullable = false, opts, ti.dateTime64Precision))
+    coalesce(conv, array().cast(ArrayType(ti.elementSparkType, containsNull = false)))
+  }
+
+  /** The getter of `ti` at the root of variant `f`. */
+  def get(f: Column, ti: ChTypeInfo, opts: ParseOpts): Column =
+    if (ti.kind == ChKind.MapK) getMap(f, ti, opts)
+    else if (ti.array) getArray(f, ti, opts)
+    else getScalar(f, ti.kind, ti.nullable, opts, ti.dateTime64Precision)
+}
+
+/** Top-level field `key` of a parsed message as a variant, found in place
+  * ([[VariantAccessOps.locate]]) and copied out over the message's
+  * metadata; NULL when the root is not an object or has no such key. A
+  * JSON `null` member is a variant null, not a SQL NULL.
+  */
+case class FieldOf(child: Expression, key: String) extends UnaryExpression with CodegenFallback {
+  private val keyBytes = key.getBytes(UTF_8)
+  override def dataType: DataType = VariantType
+  override def nullable: Boolean = true
+  override protected def nullSafeEval(input: Any): Any = {
+    val v = input.asInstanceOf[VariantVal]
+    val at = VariantAccessOps.locate(v.getValue, v.getMetadata, keyBytes)
+    if (at < 0) null else VariantAccessOps.valueAt(v.getValue, at, v.getMetadata)
+  }
+  override protected def withNewChildInternal(c: Expression): FieldOf = copy(child = c)
+}
+
+/** The payload of a string variant over its bytes; NULL for any other type. */
+case class StringOf(child: Expression) extends UnaryExpression with CodegenFallback {
+  override def dataType: DataType = StringType
+  override def nullable: Boolean = true
+  override protected def nullSafeEval(v: Any): Any =
+    VariantAccessOps.stringAt(v.asInstanceOf[VariantVal].getValue, 0)
+  override protected def withNewChildInternal(c: Expression): StringOf = copy(child = c)
+}
+
+/** A variant's kind tag ([[VariantKindOps.kindAt]] at its root). */
+case class KindOf(child: Expression) extends UnaryExpression with CodegenFallback {
+  override def dataType: DataType = IntegerType
+  override protected def nullSafeEval(v: Any): Any =
+    VariantKindOps.kindAt(v.asInstanceOf[VariantVal].getValue, 0)
+  override protected def withNewChildInternal(c: Expression): KindOf = copy(child = c)
 }
 
 /** The scale a variant decimal was parsed with ("28.0" has scale 1). */

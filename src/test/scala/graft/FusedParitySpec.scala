@@ -116,7 +116,7 @@ class FusedParitySpec extends AnyFunSuite with LocalSpark {
     for ((tn, dn) <- Seq((2, 5), (2, 2), (3, 4))) {
       val fused = TextAnalysis.repetitionNgramStats(df, "id", "text", tn, dn)
         .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
-      val comp = TextAnalysis.repetitionNgramStatsCompositional(df, "id", "text", tn, dn)
+      val comp = UnfusedForms.repetitionNgramStatsCompositional(df, "id", "text", tn, dn)
         .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
       assert(fused === comp, s"diverged at topN=$tn dupN=$dn")
     }

@@ -64,37 +64,46 @@ class PlanShapeSpec extends AnyFunSuite with LocalSpark {
     import graft.types.ChType
     val raw = Tables(spark, sf).events
       .select(to_json(struct(col("event_id").as("id"), col("event_type").as("s"))).as("value"))
-    val projected = Projector.projectJson(raw,
-      Seq(Dim("id", ChType.whichType("Int64")), Dim("s", ChType.whichType("String")),
-        Dim("t", ChType.whichType("DateTime"), sourceName = Some("s"))),
-      ParseOpts())
-    val p = plan(projected)
-    // every operator carries the codegen stage marker "*(n)"
-    assert(!p.linesIterator.exists(l =>
-      l.trim.startsWith("Project") || l.trim.startsWith("Filter")),
-      s"found non-codegen Project/Filter on the ingest path:\n$p")
-    // and the message parses exactly once (the Once barrier holds)
-    assert("parseJson".r.findAllIn(p).length === 1,
-      s"parse_json must run once per row:\n$p")
-    assertOneReadPerDim(projected, dims = 3)
+    def dim(n: String, t: String, src: String) = Dim(n, ChType.whichType(t), sourceName = Some(src))
+    val scalars = Seq(dim("id", "Int64", "id"), dim("s", "String", "s"), dim("t", "DateTime", "s"))
+    // maps, arrays and Object('json') beside the scalars: each is one read too
+    val containers = Seq(dim("ms", "Map(String, UInt64)", "m"), dim("mi", "Map(Int64, String)", "m"),
+      dim("ai", "Array(Int32)", "a"), dim("ad", "Array(DateTime64(3))", "a"),
+      dim("o", "Object('json')", "m"))
+    for (dims <- Seq(scalars, scalars ++ containers)) {
+      val projected = Projector.projectJson(raw, dims, ParseOpts())
+      val p = plan(projected)
+      // every operator carries the codegen stage marker "*(n)"
+      assert(!p.linesIterator.exists(l =>
+        l.trim.startsWith("Project") || l.trim.startsWith("Filter")),
+        s"found non-codegen Project/Filter on the ingest path:\n$p")
+      // and the message parses exactly once (the Once barrier holds)
+      assert("parseJson".r.findAllIn(p).length === 1,
+        s"parse_json must run once per row:\n$p")
+      assertOneReadPerDim(projected, dims = dims.size)
+    }
   }
 
-  /** Each scalar dim is one typed read in place over the parsed message:
-    * one `variant_read` per dim, and no `try_variant_get` (a cast per
-    * call, or a field rebuilt through a fresh VariantBuilder) or
-    * `variant_kind` anywhere in the projection.
+  /** Each dim is one typed read in place over the parsed message: one
+    * `variant_read` per dim, and no `try_variant_get` (a cast per call, or
+    * a value rebuilt through a fresh VariantBuilder), `variant_kind` or
+    * interpreted (`CodegenFallback`) expression, such as a higher-order
+    * function, anywhere in the projection.
     */
   private def assertOneReadPerDim(df: DataFrame, dims: Int): Unit = {
-    import graft.functions.{VariantKind, VariantRead}
+    import graft.functions.VariantRead
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
     import org.apache.spark.sql.catalyst.expressions.variant.VariantGet
     val p = df.queryExecution.executedPlan
     // the expressions themselves: a wide Project's string is truncated
     val exprs = p.collect { case n => n.expressions }.flatten.flatMap(_.collect { case e => e })
     assert(!exprs.exists(_.isInstanceOf[VariantGet]),
       s"a getter casts through try_variant_get:\n$p")
-    assert(!exprs.exists(_.isInstanceOf[VariantKind]), s"a getter branches on variant_kind:\n$p")
+    assert(!exprs.exists(_.prettyName == "variant_kind"), s"a getter branches on variant_kind:\n$p")
+    assert(!exprs.exists(_.isInstanceOf[CodegenFallback]),
+      s"an interpreted expression in the projection:\n$p")
     assert(exprs.count(_.isInstanceOf[VariantRead]) === dims,
-      s"expected one typed read per scalar dim:\n$p")
+      s"expected one typed read per dim:\n$p")
   }
 
   test("the access-log projection compiles to methods the JIT will compile") {

@@ -202,6 +202,41 @@ class SinkerAppSpec extends AnyFunSuite with LocalSpark {
     } finally spark.streams.removeListener(metrics)
   }
 
+  test("SinkerApp registers its Metrics once as the query listener; a failure counts once") {
+    val inDir  = Files.createTempDirectory("rm_in")
+    val outStr = Files.createTempDirectory("rm_out").toString
+    val ckDir  = Files.createTempDirectory("rm_ck")
+    val metrics = new Metrics // not installed by this caller
+    val task = TaskConfig(name = "rm", topic = "t", consumerGroup = "grm",
+      tableName = "default.rm", dynamicSchema = true,
+      bufferSize = 1000, flushInterval = 1)
+    def mkApp() = new SinkerApp(
+      spark,
+      mkSource = t => Pipeline.fileSource(spark, inDir.toString, t.topic),
+      mkSink = jsonSink(outStr),
+      execDdl = _ => throw new RuntimeException("injected: ALTER refused"),
+      checkpointRoot = ckDir.toString,
+      metrics = Some(metrics))
+    def registered = spark.streams.listListeners().count(_ eq metrics)
+    val app = mkApp()
+    try {
+      assert(registered === 1)
+      mkApp() // the same Metrics: already the listener, not added again
+      assert(registered === 1)
+      publish(inDir, "p0.txt", Seq("""{"name":"a","value":1,"nk":2}"""))
+      val q = app.startTask(task, baseDims)
+      intercept[StreamingQueryException](q.processAllAvailable())
+      assert(waitFor(20000)(metrics.taskFailures.contains("rm")),
+        "the failed query did not reach the metrics")
+      assert(metrics.taskFailures("rm").contains("injected: ALTER refused"))
+      assert(metrics.restartFailures.sum() === 1L)
+      assert(metrics.prometheus.contains("""graft_task_failed{task="rm"} 1"""))
+    } finally {
+      app.stopAll()
+      spark.streams.removeListener(metrics)
+    }
+  }
+
   test("applyConfig restarts only the changed task, with re-introspected dims") {
     val inDir  = Files.createTempDirectory("cfg_in")
     val outDir = Files.createTempDirectory("cfg_out").toString

@@ -72,4 +72,83 @@ object UnfusedForms {
       when(s === best && best > 0, lit(l)).otherwise(acc)
     }
   }
+
+  /** The sorted-array + run-length composition that
+    * [[graft.functions.NgramRepFractions]] fuses, behind the same columns
+    * as [[graft.operators.TextAnalysis.repetitionNgramStats]] (its
+    * interpreted per-element lambdas cost ~6 ms/doc).
+    *
+    * The sorted gram arrays are pinned behind [[graft.functions.Once]]
+    * in their own projection: referenced naively from inside the
+    * fraction lambdas, the `array_sort(ngrams(...))` subtree would be
+    * COPIED into every `element_at` of the aggregate and re-evaluated
+    * per element — O(m^2) interpreted work per document (measured 1 s/doc
+    * at ~200 tokens). The barrier + attribute reference makes it
+    * once-per-row.
+    */
+  def repetitionNgramStatsCompositional(df: DataFrame, idCol: String,
+      textCol: String, topN: Int, dupN: Int): DataFrame = {
+    def sortedGrams(n: Int) = graft.functions.Once(array_sort(
+      TextAnalysis.ngramsOfToks(TextAnalysis.canonToks(col(textCol)), n)))
+    df.select(col(idCol), sortedGrams(topN).as("__st"), sortedGrams(dupN).as("__sd"))
+      .select(col(idCol),
+        topNgramCharFractionOfSorted(col("__st")).as(s"top$topN"),
+        dupNgramCharFractionOfSorted(col("__sd")).as(s"dup$dupN"))
+  }
+
+  /** Gopher §A1.1 "duplicate n-gram" signal over a PRE-SORTED gram array
+    * (see [[repetitionNgramStatsCompositional]] for why the sort must be pinned in
+    * its own projection): an occurrence is duplicated iff it equals a
+    * neighbor. 0 when fewer than 2 grams.
+    */
+  def dupNgramCharFractionOfSorted(sorted: Column): Column = {
+    val m = size(sorted)
+    val dupChars = aggregate(sequence(lit(1), m), lit(0L), (acc, i) => {
+      val cur = element_at(sorted, i)
+      val prevEq = coalesce(
+        when(i >= 2, element_at(sorted, i - 1) === cur), lit(false))
+      val nextEq = coalesce(
+        when(i < m, element_at(sorted, i + 1) === cur), lit(false))
+      acc + when(prevEq || nextEq, length(cur).cast(LongType)).otherwise(0L)
+    })
+    val totChars = aggregate(sorted, lit(0L), (a, s) => a + length(s))
+    when(m < 2 || totChars === 0, lit(0.0))
+      .otherwise(round(dupChars.cast(DoubleType) / totChars.cast(DoubleType), 6))
+  }
+
+  /** Gopher §A1.1 "top n-gram" signal over a PRE-SORTED gram array: the
+    * fraction of n-gram characters covered by the single most frequent
+    * n-gram (ties break to the lexicographically smallest). One
+    * run-length pass — SQL-twinned by a windowed argmax.
+    */
+  def topNgramCharFractionOfSorted(sorted: Column): Column = {
+    val state0 = struct(lit("").as("prev"), lit(0L).as("run"),
+      lit(0L).as("bestRun"), lit("").as("best"))
+    val agg = aggregate(sorted, state0,
+      (st, x) => {
+        val same = st.getField("prev") === x
+        val closedBetter = !same && st.getField("run") > st.getField("bestRun")
+        struct(
+          x.as("prev"),
+          when(same, st.getField("run") + 1L).otherwise(lit(1L)).as("run"),
+          when(closedBetter, st.getField("run"))
+            .otherwise(st.getField("bestRun")).as("bestRun"),
+          when(closedBetter, st.getField("prev"))
+            .otherwise(st.getField("best")).as("best"))
+      },
+      st => {
+        val finalBetter = st.getField("run") > st.getField("bestRun")
+        struct(
+          when(finalBetter, st.getField("run"))
+            .otherwise(st.getField("bestRun")).as("bestRun"),
+          when(finalBetter, st.getField("prev"))
+            .otherwise(st.getField("best")).as("best"))
+      })
+    val totChars = aggregate(sorted, lit(0L), (a, s) => a + length(s))
+    when(size(sorted) === 0 || totChars === 0, lit(0.0))
+      .otherwise(round(
+        agg.getField("bestRun").cast(DoubleType) *
+          length(agg.getField("best")).cast(DoubleType) /
+          totChars.cast(DoubleType), 6))
+  }
 }

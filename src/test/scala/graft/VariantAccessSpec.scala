@@ -12,12 +12,15 @@ import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dynamic.SchemaEvolution
-import graft.functions.{ChGetters, VariantAccess, VariantKind, VariantKindOps}
+import graft.functions.{ChGetters, VariantKindOps}
 import graft.types.ChKind
 
-/** The in-place variant reads agree with the built-ins they replace:
-  * `VariantAccess.field` with `try_variant_get(msg, path, "variant")` and
-  * `VariantAccess.string` with `try_variant_get(f, "$", "string")` (on
+/** The in-place variant walk that every typed read stands on
+  * ([[graft.functions.VariantAccessOps]]: `locate`, `stringAt`, and
+  * `kindAt` for the kind tag), exposed as Columns by
+  * [[ColumnGetters]]' `field`, `string` and `kind`, agrees with the
+  * built-ins it replaces: a field with `try_variant_get(msg, path,
+  * "variant")` and a string with `try_variant_get(f, "$", "string")` (on
   * strings; NULL elsewhere), compared by `to_json`, kind tag and string
   * over generated messages that cover every byte layout the walk decodes:
   * 1- and 4-byte object sizes, 1- and 2-byte field ids, value offsets and
@@ -159,7 +162,7 @@ class VariantAccessSpec extends AnyFunSuite with LocalSpark {
   }
 
   private def read(f: Column, str: Column): Column =
-    struct(to_json(f).as("json"), VariantKind.of(f).as("kind"), str.as("str"))
+    struct(to_json(f).as("json"), ColumnGetters.kind(f).as("kind"), str.as("str"))
 
   private def builtinStr(f: Column): Column = try_variant_get(f, "$", "string")
 
@@ -177,10 +180,10 @@ class VariantAccessSpec extends AnyFunSuite with LocalSpark {
     probes.indices.grouped(8).foreach { chunk =>
       val cols = chunk.flatMap { i =>
         val k = probes(i)
-        val mine = VariantAccess.field(msg, k)
+        val mine = ColumnGetters.field(msg, k)
         val want = parse_json(col(s"e$i"))
         val builtin = try_variant_get(msg, "$['" + k + "']", "variant")
-        Seq(read(mine, VariantAccess.string(mine)), read(want, lit(null)),
+        Seq(read(mine, ColumnGetters.string(mine)), read(want, lit(null)),
           if (builtinKeys(k)) read(builtin, builtinStr(builtin)) else lit(null))
       }
       df.select(cols: _*).collect().zip(msgs).foreach { case (r, m) =>
@@ -227,8 +230,8 @@ class VariantAccessSpec extends AnyFunSuite with LocalSpark {
       Seq("[1,2]", "\"s\"", "42", "null", "true", "{}").map(Msg(_, None)) :+ Msg(null, None)
     assertAgree(msgs)
     // a long-string payload is read without a rebuild, byte for byte
-    val s = frame(msgs).select(VariantAccess.string(
-      VariantAccess.field(parse_json(col("value")), "a"))).collect().map(_.getString(0))
+    val s = frame(msgs).select(ColumnGetters.string(
+      ColumnGetters.field(parse_json(col("value")), "a"))).collect().map(_.getString(0))
     assert(s.toSeq.contains("v" * 300))
   }
 
@@ -236,9 +239,9 @@ class VariantAccessSpec extends AnyFunSuite with LocalSpark {
     val df = Seq("""{"a": null, "b": 1}""", "[1]", "not json").toDF("value")
     val msg = ChGetters.parsed(col("value"))
     val r = df.select(
-      VariantKind.of(VariantAccess.field(msg, "a")),
-      VariantAccess.field(msg, "zz").isNull,
-      VariantAccess.field(msg, "b").isNull).collect()
+      ColumnGetters.kind(ColumnGetters.field(msg, "a")),
+      ColumnGetters.field(msg, "zz").isNull,
+      ColumnGetters.field(msg, "b").isNull).collect()
     assert(r(0).getInt(0) === VariantKindOps.NullK)
     assert(r(0).getBoolean(1) && !r(0).getBoolean(2))
     assert(r(1).isNullAt(0) && r(1).getBoolean(1) && r(1).getBoolean(2))
@@ -250,7 +253,7 @@ class VariantAccessSpec extends AnyFunSuite with LocalSpark {
       .toDF("value")
     val msg = parse_json(col("value"))
     val r = df.select(Seq("it's", "back\\slash", "say \"hi\"", "$.a")
-      .map(k => to_json(VariantAccess.field(msg, k))): _*).head()
+      .map(k => to_json(ColumnGetters.field(msg, k))): _*).head()
     assert(r.toSeq === Seq("1", "\"b\"", "[2]", "true"))
   }
 
@@ -268,7 +271,7 @@ class VariantAccessSpec extends AnyFunSuite with LocalSpark {
         "map<string,variant>")).as(Seq("k", "v")))
       .filter(!col("k").isin(known.toSeq: _*))
       .groupBy(col("k"))
-      .agg(collect_set(VariantKind.of(col("v"))), collect_set(VariantAccess.string(col("v"))))
+      .agg(collect_set(ColumnGetters.kind(col("v"))), collect_set(ColumnGetters.string(col("v"))))
       .collect()
       .map(r => r.getString(0) -> ((r.getSeq[Int](1).toSet, r.getSeq[String](2).toSet)))
       .toMap
@@ -279,7 +282,7 @@ class VariantAccessSpec extends AnyFunSuite with LocalSpark {
   private def memberSeen(msgs: Seq[Msg], known: Set[String]): Seen = {
     val pairs = msgs.flatMap(_.members.getOrElse(Nil)).filterNot(p => known(p._1))
     val kinds = pairs.map(_._2).distinct.toDF("t")
-      .select(col("t"), VariantKind.of(parse_json(col("t")))).collect()
+      .select(col("t"), ColumnGetters.kind(parse_json(col("t")))).collect()
       .map(r => r.getString(0) -> r.getInt(1)).toMap
     pairs.groupBy(_._1).map { case (k, ps) =>
       k -> ((ps.map(p => kinds(p._2)).toSet,
