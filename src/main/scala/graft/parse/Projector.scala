@@ -29,13 +29,17 @@ object Projector {
     def source: String = sourceName.getOrElse(name)
   }
 
-  /** F13 — `__kafka*` metadata dims (task/task.go:285-298). */
-  private val kafkaMeta: Map[String, String] = Map(
-    "__kafka_topic"     -> "topic",
-    "__kafka_partition" -> "partition",
-    "__kafka_offset"    -> "offset",
-    "__kafka_key"       -> "key",
-    "__kafka_timestamp" -> "timestamp")
+  /** F13 — the source column a `__kafka*` metadata dim is filled from
+    * (task/task.go:285-298); None for any other dim name.
+    */
+  def metaSource(dimName: String): Option[String] = dimName match {
+    case "__kafka_topic"     => Some("topic")
+    case "__kafka_partition" => Some("partition")
+    case "__kafka_offset"    => Some("offset")
+    case "__kafka_key"       => Some("key")
+    case "__kafka_timestamp" => Some("timestamp")
+    case _                   => None
+  }
 
   /** Project a JSON-message DataFrame. `fields` is the task-level static
     * JSON object merged over every message (P6, overwrite semantics).
@@ -71,7 +75,7 @@ object Projector {
     // the message on null (task/task.go:303-314), it does not substitute
     // a default.
     val cols = dims.map { d =>
-      if (kafkaMeta.contains(d.name))
+      if (metaSource(d.name).isDefined)
         metaColumn(parsed, d).getOrElse(lit(null).cast(d.ti.sparkType).as(d.name))
       else {
         val (v, key) = static(d) match {
@@ -118,7 +122,7 @@ object Projector {
   }
 
   private def metaColumn(df: DataFrame, d: Dim): Option[Column] =
-    kafkaMeta.get(d.name).flatMap { src =>
+    metaSource(d.name).flatMap { src =>
       if (df.columns.contains(src)) Some(col(src).cast(d.ti.sparkType).as(d.name))
       else None
     }

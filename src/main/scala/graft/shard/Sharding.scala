@@ -17,8 +17,8 @@ import graft.types.{ChKind, ChTypeInfo}
   * into per-shard buffers inside the consumer, with no network hop
   * (task/sharding.go:120-195); here each Spark write task routes its own
   * rows ([[graft.sink.ChWriter.write]]), so parse, projection, shard
-  * column and write run as ONE stage per batch, and write parallelism
-  * follows the source's partitions.
+  * column and write run as ONE stage per batch, written by
+  * min(source partitions, cores) tasks.
   */
 object Sharding {
 

@@ -44,22 +44,18 @@ object ChSql {
     s"SELECT database, name FROM system.tables WHERE engine = 'Distributed' " +
       s"AND match(engine_full, 'Distributed\\\\(\\\\s*\\'$cluster\\'\\\\s*,\\\\s*\\'$db\\'\\\\s*,\\\\s*\\'$table\\'.*\\\\)')"
 
-  /** S13 — cluster topology (discovery/discovery.go:15). */
-  def clusterQuery(cluster: String): String =
-    s"SELECT shard_num, replica_num, host_name, host_address, port " +
-      s"FROM system.clusters WHERE cluster = '$cluster' ORDER BY shard_num, replica_num"
-
   /** S10/S13 — per-shard multi-replica JDBC URLs from the
-    * [[clusterQuery]] topology rows, mirroring the reference's per-shard
-    * replica lists (`pool/conn.go:140-201`: one ShardConn per shard, each
-    * holding every replica address of that shard, rotating to the next
-    * good replica on failure). The JDBC driver's multi-host URL form
+    * `system.clusters` topology rows (discovery/discovery.go:15),
+    * mirroring the reference's per-shard replica lists
+    * (`pool/conn.go:140-201`: one ShardConn per shard, each holding every
+    * replica address of that shard, rotating to the next good replica on
+    * failure). The JDBC driver's multi-host URL form
     * (`jdbc:clickhouse://h1:p1,h2:p2/db`) delegates the same failover to
     * the driver; replicas stay in replica_num order so retry order is
     * deterministic.
     *
-    * @param topology rows of (shard_num, replica_num, host, port) as
-    *                 returned by [[clusterQuery]]
+    * @param topology rows of (shard_num, replica_num, host, port) of
+    *                 `system.clusters`, ordered by shard_num, replica_num
     * @return shard_num -> multi-replica JDBC URL, one entry per shard
     */
   def shardJdbcUrls(topology: Seq[(Int, Int, String, Int)], db: String,
@@ -88,13 +84,6 @@ object ChSql {
     s"SELECT count() FROM (SELECT DISTINCT __series_id__ FROM ${bq(db)}.${bq(seriesTable)} " +
       s"WHERE __series_id__ GLOBAL IN (SELECT DISTINCT __series_id__ FROM " +
       s"${bq(db)}.${bq(metricTable)} WHERE timestamp >= addSeconds(now(), -$activeSeconds)))"
-
-  def loadSeriesQuery(db: String, seriesTable: String, metricTable: String,
-      activeSeconds: Long): String =
-    s"SELECT DISTINCT __series_id__, __mgmt_id__ FROM ${bq(db)}.${bq(seriesTable)} " +
-      s"WHERE __series_id__ GLOBAL IN (SELECT DISTINCT __series_id__ FROM " +
-      s"${bq(db)}.${bq(metricTable)} WHERE timestamp >= addSeconds(now(), -$activeSeconds)) " +
-      s"ORDER BY __series_id__"
 
   /** D3 — dynamic-schema ALTERs (output/clickhouse.go:550-659): each new
     * key becomes a Nullable column (unless notNullable), DateTime widens to

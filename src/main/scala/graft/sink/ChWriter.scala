@@ -19,7 +19,9 @@ import org.apache.spark.sql.{DataFrame, Row}
   * ClickHouse JDBC endpoint per shard; [[JsonLinesWriter]] is the local
   * test stand-in. Executors write their partitions in parallel — the
   * reference's per-shard worker pool (X5) maps onto task parallelism, so
-  * a batch makes one INSERT per shard per write task (source partition).
+  * a batch makes one INSERT per shard per write task (per `batchSize`
+  * rows), and [[graft.streaming.Pipeline.start]] writes a batch with
+  * min(source partitions, cores) tasks.
   */
 object ChWriter {
 

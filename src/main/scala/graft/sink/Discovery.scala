@@ -2,7 +2,7 @@ package graft.sink
 
 /** Cluster-topology discovery (SURVEY S13; reference
   * `discovery/discovery.go:72-163`): poll `system.clusters`
-  * ([[ChSql.clusterQuery]]), fold the ordered rows into shard -> replica
+  * (discovery.go:15), fold the ordered rows into shard -> replica
   * lists, diff against the configured hosts, and publish the new topology
   * when it changed. Pure functions here; the caller owns the JDBC fetch
   * and the publish side effect (a driver-side control loop — topology
@@ -13,8 +13,8 @@ object Discovery {
   type Replicas = Seq[String]
   type Shards = Seq[Replicas]
 
-  /** Fold ordered (shard_num, replica_num, host) rows — the exact output
-    * of [[ChSql.clusterQuery]] — into replica groups per shard
+  /** Fold (shard_num, replica_num, host) rows of `system.clusters`,
+    * ordered by shard_num and replica_num, into replica groups per shard
     * (discovery.go:81-106: consecutive-run grouping on shard_num).
     */
   def shardsFromClusterRows(rows: Seq[(Int, Int, String)]): Shards = {

@@ -3,6 +3,7 @@ package graft.streaming
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.LongAdder
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener._
@@ -126,6 +127,12 @@ final class Metrics extends StreamingQueryListener {
     sb.append(s"graft_write_retries ${writeRetries.sum()}\n")
     sb.append("# TYPE graft_task_failures counter\n")
     sb.append(s"graft_task_failures ${restartFailures.sum()}\n")
+    // generated-code classes Spark compiled in this JVM (in local mode,
+    // the executors' too): a count that moves in every batch of a steady
+    // stream means each batch's code differs and misses Spark's
+    // generated-code cache
+    sb.append("# TYPE graft_codegen_compilations counter\n")
+    sb.append(s"graft_codegen_compilations ${CodegenMetrics.METRIC_COMPILATION_TIME.getCount}\n")
     val (buckets, sum, count) = writeHistogram
     sb.append("# TYPE graft_write_duration_ms histogram\n")
     buckets.foreach { case (le, c) =>

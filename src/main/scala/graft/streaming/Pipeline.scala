@@ -15,7 +15,7 @@ import graft.parse.Projector
 import graft.parse.Projector.Dim
 import graft.shard.Sharding
 import graft.sink.ChWriter
-import graft.types.ChKind
+import graft.types.{ChKind, ChType}
 
 /** The end-to-end ingest pipeline (SURVEY §3.1), Spark-first:
   *
@@ -26,7 +26,7 @@ import graft.types.ChKind
   * }}}
   *
   * A fixed-schema batch runs as one job of one stage, with no shard
-  * exchange; write parallelism follows the source's partitions.
+  * exchange; it is written by min(source partitions, cores) tasks.
   *
   * The reference's buffer/flush knobs map to `maxOffsetsPerTrigger`
   * (bufferSize) + `Trigger.ProcessingTime` (flushInterval); duplicates on
@@ -40,8 +40,9 @@ object Pipeline {
       numShards: Int,
       writeCfg: ChWriter.WriteConfig,
       mkWriter: () => ChWriter.RowWriter,
-      /** Ignored: write parallelism follows the source's partitions. Kept
-        * only for the sinkbench harness, which passes it positionally.
+      /** Ignored: a batch is written by min(source partitions, cores)
+        * tasks. Kept only for the sinkbench harness, which passes it
+        * positionally.
         */
       writersPerShard: Int = 1)
 
@@ -117,6 +118,23 @@ object Pipeline {
           task.bufferSize, numShards)
     }
 
+  /** The dims the default shard policy (X3) routes on: the Kafka
+    * coordinates, carried through projection and dropped before the write.
+    */
+  private def shardMetaDims(task: TaskConfig): Seq[Dim] =
+    if (task.shardingKey.isEmpty)
+      Seq(Dim("__kafka_offset", ChType.whichType("Int64")),
+        Dim("__kafka_partition", ChType.whichType("Int64")))
+    else Nil
+
+  /** The source columns a task reads: `value`, and the source column of
+    * each `__kafka_*` meta dim ([[Projector.metaSource]]), the default
+    * shard policy's offset and partition among them.
+    */
+  private def sourceColumns(task: TaskConfig, dims: Seq[Dim]): Seq[String] =
+    ("value" +: (dims ++ shardMetaDims(task)).flatMap(d => Projector.metaSource(d.name)))
+      .distinct
+
   /** Assemble the full streaming query. With dynamicSchema on, each
     * batch's new keys are detected before any of its rows is written, and
     * `onNewKeys` gets the accepted ones: it issues the ALTERs and returns
@@ -126,37 +144,46 @@ object Pipeline {
     * stay uncommitted, so a query restarted from the checkpoint replays
     * it. `spark` is ignored (the session is `src`'s); it stays only for
     * callers that pass it positionally (the sinkbench harness).
+    *
+    * The per-batch fixed cost stays small and constant:
+    *   - The query reads only [[sourceColumns]]. Spark's foreachBatch
+    *     sink computes every column of its input before the batch
+    *     function sees it, and a per-batch literal in one (a file source's
+    *     `current_timestamp()` is the batch's timestamp) makes the stage's
+    *     generated code differ in every batch, so Spark compiles it again
+    *     each time. A `__kafka_*` dim that schema evolution adds later
+    *     finds its source column pruned and reads NULL, unless the default
+    *     shard policy keeps that column (offset, partition).
+    *   - A batch is written by one task per core: `coalesce` to the
+    *     session's default parallelism is narrow (one stage, no shuffle)
+    *     and packs the source's partitions by count, not by size. A batch
+    *     with fewer partitions than cores keeps its own.
     */
   def start(@unused spark: SparkSession, src: DataFrame, task: TaskConfig,
       dims: Seq[Dim], sink: SinkSpec, checkpoint: String,
       onNewKeys: Seq[(String, ChKind)] => Option[(Seq[Dim], SinkSpec)] = _ => None,
       metrics: Option[Metrics] = None): StreamingQuery = {
 
-    // the default policy shards on kafka coordinates (X3) -> carry the
-    // metadata dims through projection, drop them again before the write
-    val metaDims =
-      if (task.shardingKey.isEmpty)
-        Seq(Dim("__kafka_offset", graft.types.ChType.whichType("Int64")),
-          Dim("__kafka_partition", graft.types.ChType.whichType("Int64")))
-      else Nil
+    val metaDims = shardMetaDims(task)
     // the task's current schema; only the stream thread, one batch at a
     // time, reads and widens it
     var (curDims, curSink) = (dims, sink)
     val dynamic = task.dynamicSchema && task.parser != "csv"
 
-    src.writeStream
+    src.select(sourceColumns(task, dims).map(col): _*).writeStream
       .queryName(task.name)
       .trigger(Trigger.ProcessingTime(task.flushInterval * 1000L))
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
+        val perCore = batch.coalesce(batch.sparkSession.sparkContext.defaultParallelism)
         // Single-parse invariant (reference: one parse per message,
         // GetNewKeys piggybacked — parser/fastjson.go:512-536): with
         // dynamicSchema on, parse ONCE into a cached stage and run both
         // the new-key detection and the projection from it.
         val input =
-          if (dynamic) batch.withColumn("__msg__",
+          if (dynamic) perCore.withColumn("__msg__",
             graft.functions.Once(ChGetters.parsed(col("value")))).persist()
-          else batch
+          else perCore
         try {
           if (dynamic) {
             val newKeys = SchemaEvolution.detectNewKeys(
@@ -166,7 +193,8 @@ object Pipeline {
             if (newKeys.nonEmpty)
               onNewKeys(newKeys).foreach { case (d, s) => curDims = d; curSink = s }
           }
-          val allDims = curDims ++ metaDims
+          // a task's own offset/partition dim is the one X3 routes on
+          val allDims = curDims ++ metaDims.filterNot(m => curDims.exists(_.name == m.name))
           val sharded = Sharding.partitionByShard(
             project(input, task, allDims),
             shardColumn(task, allDims, curSink.numShards), curSink.numShards)

@@ -66,8 +66,8 @@ object SeriesDedup {
     *
     * `bootstrap` seeds the state store with a (sid, mid) snapshot before
     * the first batch — the reference loads `map[sid]mid` from ClickHouse
-    * at startup (task/sinker.go:561-614; the SQL is
-    * [[graft.sink.ChSql.loadSeriesQuery]]): pre-seeded sids with an
+    * at startup (task/sinker.go:561-614: the DISTINCT (sid, mid) pairs of
+    * the series active in the reload window): pre-seeded sids with an
     * unchanged mid never re-emit across restarts.
     */
   def dedup(rows: Dataset[SeriesRow], quota: WriteQuota,
@@ -110,8 +110,8 @@ object SeriesDedup {
     }
   }
 
-  /** Adapter: a ClickHouse series snapshot (the result of
-    * [[graft.sink.ChSql.loadSeriesQuery]] read over JDBC) -> bootstrap
+  /** Adapter: a ClickHouse series snapshot (the reference's startup
+    * load, task/sinker.go:561-614, read over JDBC) -> bootstrap
     * dataset for [[dedup]]. The snapshot is DISTINCT (sid, mid) PAIRS —
     * a series whose mid was ever rewritten appears once per mid (a
     * ReplacingMergeTree dedups only eventually) — and
@@ -129,10 +129,10 @@ object SeriesDedup {
   }
 
   /** Driver-side re-seed ticker: every `intervalMs` runs `tick` (which
-    * should read [[graft.sink.ChSql.loadSeriesQuery]] restricted to the
-    * active range and inject [[seedRows]] into the stream). Mirrors the
-    * reference's ReloadSeriesMapInterval loop (task/sinker.go:135-286);
-    * tick failures are logged and the ticker keeps running.
+    * should read the active range's series snapshot and inject
+    * [[seedRows]] into the stream). Mirrors the reference's
+    * ReloadSeriesMapInterval loop (task/sinker.go:135-286); tick failures
+    * are logged and the ticker keeps running.
     */
   final class Reseeder(intervalMs: Long)(tick: () => Unit) extends AutoCloseable {
     private val exec =

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, StandardCopyOption}
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,7 +10,7 @@ import graft.dynamic.SchemaEvolution
 import graft.dynamic.SchemaEvolution.NewKeyPolicy
 import graft.parse.Projector.Dim
 import graft.sink.{ChSql, ChWriter}
-import graft.streaming.Pipeline
+import graft.streaming.{Metrics, Pipeline}
 import graft.telemetry.StageTelemetry
 import graft.types.{ChKind, ChType}
 
@@ -46,6 +46,15 @@ class PipelineSpec extends AnyFunSuite with LocalSpark {
     Dim("name", ChType.whichType("String")),
     Dim("value", ChType.whichType("Float32")),
     Dim("price", ChType.whichType("Decimal32(3)")))
+
+  /** A 4-shard JSON-lines sink under `out` for `dims`; the writer
+    * factory captures only its two locals, not the suite.
+    */
+  private def jsonSink(out: String, dims: Seq[Dim]): Pipeline.SinkSpec = {
+    val colNames = dims.map(_.name)
+    Pipeline.SinkSpec(4, ChWriter.WriteConfig(4, retryTimes = 2, retryDelayMs = 10),
+      () => new ChWriter.JsonLinesWriter(out, colNames))
+  }
 
   test("go.test.sh fixed-schema E2E: 100k messages through the stream") {
     val inDir  = Files.createTempDirectory("graft_in")
@@ -96,10 +105,7 @@ class PipelineSpec extends AnyFunSuite with LocalSpark {
     val task = TaskConfig(name = "test_one_stage", topic = "topic1",
       consumerGroup = "g1", bufferSize = 50000, flushInterval = 1)
     val outStr = outDir.toString
-    val colNames = fixedDims.map(_.name)
-    val sink = Pipeline.SinkSpec(4,
-      ChWriter.WriteConfig(4, retryTimes = 2, retryDelayMs = 10),
-      () => new ChWriter.JsonLinesWriter(outStr, colNames))
+    val sink = jsonSink(outStr, fixedDims)
     val tel = StageTelemetry.attach(spark.sparkContext)
     try {
       val q = Pipeline.start(spark,
@@ -133,20 +139,14 @@ class PipelineSpec extends AnyFunSuite with LocalSpark {
       consumerGroup = "g1", bufferSize = 50000, flushInterval = 1,
       dynamicSchema = true)
     val outStr = outDir.toString
-    def sinkFor(dims: Seq[Dim]) = {
-      val colNames = dims.map(_.name)
-      Pipeline.SinkSpec(4,
-        ChWriter.WriteConfig(4, retryTimes = 2, retryDelayMs = 10),
-        () => new ChWriter.JsonLinesWriter(outStr, colNames))
-    }
     val tel = StageTelemetry.attach(spark.sparkContext)
     try {
       val q = Pipeline.start(spark,
         Pipeline.fileSource(spark, inDir.toString, "topic1"),
-        task, fixedDims, sinkFor(fixedDims), ckDir.toString,
+        task, fixedDims, jsonSink(outStr, fixedDims), ckDir.toString,
         onNewKeys = keys => {
           val dims = SchemaEvolution.widen(fixedDims, keys)
-          Some(dims -> sinkFor(dims))
+          Some(dims -> jsonSink(outStr, dims))
         })
       q.processAllAvailable()
       q.stop()
@@ -165,6 +165,138 @@ class PipelineSpec extends AnyFunSuite with LocalSpark {
     assert(written.count() === 2000L)
     assert(written.filter(col("newkey01").isNotNull).count() === 1000L)
     assert(written.filter(col("newkey00") === false).count() === 1000L)
+  }
+
+  test("a batch is written by min(source partitions, cores) tasks, every row once") {
+    val inDir  = Files.createTempDirectory("graft_in")
+    val outDir = Files.createTempDirectory("graft_out")
+    val ckDir  = Files.createTempDirectory("graft_ck")
+    cohortMessages.take(1600).grouped(100).zipWithIndex.foreach { case (chunk, i) =>
+      Files.write(inDir.resolve(s"part-$i.txt"), chunk.mkString("\n").getBytes("UTF-8"))
+    }
+    val task = TaskConfig(name = "test_tasks_per_core", topic = "topic1",
+      consumerGroup = "g1", bufferSize = 50000, flushInterval = 1)
+    val outStr = outDir.toString
+    val sink = jsonSink(outStr, fixedDims)
+    // a file's open cost at the split size gives the scan one partition
+    // per file, as the benchmark's 1.5 MB files have
+    val openCost = "spark.sql.files.openCostInBytes"
+    val before = spark.conf.get(openCost)
+    val tel = StageTelemetry.attach(spark.sparkContext)
+    try {
+      spark.conf.set(openCost, spark.conf.get("spark.sql.files.maxPartitionBytes"))
+      assert(spark.read.text(inDir.toString).rdd.getNumPartitions === 16)
+      val q = Pipeline.start(spark,
+        Pipeline.fileSource(spark, inDir.toString, "topic1"),
+        task, fixedDims, sink, ckDir.toString)
+      q.processAllAvailable()
+      q.stop()
+      tel.drain()
+      val batch = tel.jobs.filter(_.group.contains(q.runId.toString))
+      val stages = tel.stagesInGroup(q.runId.toString)
+      assert(batch.size === 1, tel.jobs)
+      assert(stages.size === 1, stages)
+      assert(stages.head.tasks === math.min(16, spark.sparkContext.defaultParallelism), stages)
+    } finally { spark.conf.set(openCost, before); tel.detach() }
+    val written = spark.read.json(outStr + "/shard=*/*.jsonl")
+    assert(written.count() === 1600L)
+    assert(written.select("name").distinct().count() === 1600L)
+  }
+
+  test("a steady-state batch compiles no generated code") {
+    val inDir  = Files.createTempDirectory("graft_in")
+    val stage  = Files.createTempDirectory("graft_stage")
+    val outDir = Files.createTempDirectory("graft_out")
+    val ckDir  = Files.createTempDirectory("graft_ck")
+    val task = TaskConfig(name = "test_no_recompile", topic = "topic1",
+      consumerGroup = "g1", bufferSize = 50000, flushInterval = 1)
+    val outStr = outDir.toString
+    val sink = jsonSink(outStr, fixedDims)
+    val metrics = new Metrics
+    def compilations: Long = metrics.prometheus.linesIterator
+      .collectFirst { case l if l.startsWith("graft_codegen_compilations ") =>
+        l.stripPrefix("graft_codegen_compilations ").toLong }
+      .getOrElse(fail("graft_codegen_compilations is not on /metrics"))
+    // fileSource keeps current_timestamp() in its `timestamp` column: a
+    // streaming batch writes it as the batch's own literal
+    val q = Pipeline.start(spark, Pipeline.fileSource(spark, inDir.toString, "topic1"),
+      task, fixedDims, sink, ckDir.toString)
+    val seen = try (1 to 6).map { b =>
+      // one file per batch, moved in whole so no batch sees half of it
+      val f = stage.resolve(s"part-$b.txt")
+      Files.write(f, cohortMessages.slice(b * 500, b * 500 + 500).mkString("\n")
+        .getBytes("UTF-8"))
+      Files.move(f, inDir.resolve(f.getFileName), StandardCopyOption.ATOMIC_MOVE)
+      q.processAllAvailable()
+      compilations
+    } finally q.stop()
+    assert(q.recentProgress.count(_.numInputRows > 0) === 6)
+    // batches 3-6 reuse the generated classes the first batches compiled
+    assert(seen(5) === seen(1), seen)
+    assert(spark.read.json(outStr + "/shard=*/*.jsonl").count() === 3000L)
+  }
+
+  test("F13: every __kafka_* meta dim reads its source column, also when evolution adds it") {
+    val outDir = Files.createTempDirectory("graft_out")
+    def run(name: String, lines: Seq[String], dims: Seq[Dim],
+        dynamic: Boolean): Map[String, org.apache.spark.sql.Row] = {
+      val inDir = Files.createTempDirectory("graft_in")
+      val ckDir = Files.createTempDirectory("graft_ck")
+      Files.write(inDir.resolve("part-0.txt"), lines.mkString("\n").getBytes("UTF-8"))
+      val out = s"$outDir/$name"
+      val task = TaskConfig(name = name, topic = "topic1", consumerGroup = "g1",
+        bufferSize = 50000, flushInterval = 1, dynamicSchema = dynamic)
+      val q = Pipeline.start(spark, Pipeline.fileSource(spark, inDir.toString, "topic1"),
+        task, dims, jsonSink(out, dims), ckDir.toString,
+        onNewKeys = keys => {
+          val widened = SchemaEvolution.widen(dims, keys)
+          Some(widened -> jsonSink(out, widened))
+        })
+      q.processAllAvailable()
+      q.stop()
+      spark.read.json(out + "/shard=*/*.jsonl").collect()
+        .map(r => r.getAs[String]("name") -> r).toMap
+    }
+    def crc(line: String): Long = {
+      val c = new java.util.zip.CRC32
+      c.update(line.getBytes("UTF-8"))
+      c.getValue
+    }
+
+    // the task's own dims: each is filled from fileSource's column
+    val lines = (1 to 50).map(i => s"""{"name": "n$i", "__kafka_topic": "in-message"}""")
+    val meta = Seq(
+      Dim("__kafka_topic", ChType.whichType("String")),
+      Dim("__kafka_partition", ChType.whichType("Int64")),
+      Dim("__kafka_offset", ChType.whichType("Int64")),
+      Dim("__kafka_key", ChType.whichType("Nullable(String)")),
+      Dim("__kafka_timestamp", ChType.whichType("DateTime64(3)")))
+    val static = run("f13_static", lines, Dim("name", ChType.whichType("String")) +: meta,
+      dynamic = false)
+    assert(static.size === 50)
+    lines.zipWithIndex.foreach { case (line, i) =>
+      val r = static(s"n${i + 1}")
+      assert(r.getAs[String]("__kafka_topic") === "topic1")
+      assert(r.getAs[Long]("__kafka_partition") === 0L)
+      assert(r.getAs[Long]("__kafka_offset") === crc(line))
+      assert(r.isNullAt(r.fieldIndex("__kafka_key")))
+      assert(!r.isNullAt(r.fieldIndex("__kafka_timestamp")))
+    }
+
+    // keys that schema evolution adds later: the query reads only the
+    // source columns of its starting dims, so `topic` is gone and
+    // __kafka_topic reads NULL, while the default shard policy keeps
+    // `offset` and __kafka_offset reads it, not the message's value
+    val evolving = (1 to 50).map(i =>
+      s"""{"name": "e$i", "__kafka_topic": "in-message", "__kafka_offset": -$i}""")
+    val evolved = run("f13_evolved", evolving, Seq(Dim("name", ChType.whichType("String"))),
+      dynamic = true)
+    assert(evolved.size === 50)
+    evolving.zipWithIndex.foreach { case (line, i) =>
+      val r = evolved(s"e${i + 1}")
+      assert(r.isNullAt(r.fieldIndex("__kafka_topic")))
+      assert(r.getAs[Long]("__kafka_offset") === crc(line))
+    }
   }
 
   test("go.test.sh dynamic-schema golden: newkey00-04 added, 05-10 skipped") {

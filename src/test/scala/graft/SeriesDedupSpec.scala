@@ -42,7 +42,7 @@ class SeriesDedupSpec extends AnyFunSuite with LocalSpark {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[SeriesRow]
-    // ClickHouse snapshot (ChSql.loadSeriesQuery result): sid 1 -> mid 10,
+    // ClickHouse snapshot (the startup series load): sid 1 -> mid 10,
     // sid 2 -> mid 20 already known at startup. Sid 1 appears TWICE (an
     // old mid not yet merged away) — the bootstrap must keep max(mid)
     // or the initial state would have duplicate keys and crash
