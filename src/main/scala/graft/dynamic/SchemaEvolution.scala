@@ -3,11 +3,14 @@ package graft.dynamic
 import java.time.ZoneId
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.annotation.unused
+
+import com.fasterxml.jackson.core.{JsonParser, JsonToken}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.{ChGetters, GoLayouts, VariantAccessOps, VariantKindOps}
+import graft.functions.{Decoded, GoLayouts, JsonDecoder, MemberWalk}
 import graft.functions.VariantKindOps.{BoolK, Dec0K, DecFracK, FloatK, IntK, NullK, StrK}
 import graft.parse.Projector.Dim
 import graft.sink.ChSql
@@ -18,8 +21,8 @@ import graft.types.{ChKind, ChTypeInfo}
   * `output/clickhouse.go:550-659`).
   *
   * Detection is one scan-local pass over the micro-batch, with no
-  * shuffle: each task walks its messages' top-level members in place and
-  * folds every unseen key into the set of its values' kinds plus its
+  * shuffle: each task walks its messages' top-level members with the
+  * ingest decoder (one Jackson pass, no variant) and folds every unseen key into the set of its values' kinds plus its
   * first string value ([[KeyFold]]); the driver merges the tasks' folds,
   * keeps keys passing the white/black lists, and maps each fold to a
   * ClickHouse column type with the reference's rules:
@@ -49,21 +52,18 @@ object SchemaEvolution {
     */
   final case class KeyFold(kinds: Int, sample: String)
 
-  /** D1+D2 — returns (key -> inferred kind) for new keys in the batch.
-    *
-    * `parsedCol`: when the caller already parsed `value` (the pipeline's
-    * single-parse invariant — reference piggybacks GetNewKeys on the one
-    * parse, parser/fastjson.go:512-536), pass that column's name and the
-    * detection walks it instead of re-parsing.
+  /** D1+D2 — returns (key -> inferred kind) for new keys in the batch's
+    * `value` messages. `parsedCol` is ignored: detection decodes `value`
+    * itself ([[foldNewKeys]]); it stays only for callers that name it
+    * (the sinkbench harness).
     */
   def detectNewKeys(batch: DataFrame, knownKeys: Set[String],
       policy: NewKeyPolicy = NewKeyPolicy(),
-      parsedCol: Option[String] = None): Seq[(String, ChKind)] = {
+      @unused parsedCol: Option[String] = None): Seq[(String, ChKind)] = {
     val white = policy.whiteList.map(Pattern.compile(_))
     val black = policy.blackList.map(Pattern.compile(_))
     val zone = ZoneId.of(policy.timeZone)
-    val msg = parsedCol.map(col).getOrElse(ChGetters.parsed(col("value")))
-    foldNewKeys(batch, msg, knownKeys).toSeq
+    foldNewKeys(batch, knownKeys).toSeq
       .filter { case (k, _) =>
         white.forall(_.matcher(k).find()) && !black.exists(_.matcher(k).find())
       }
@@ -71,42 +71,55 @@ object SchemaEvolution {
       .flatMap { case (k, f) => inferKind(f, zone).map(k -> _) }
   }
 
-  /** D1 — the [[KeyFold]] of every top-level key of the parsed messages
-    * `msg` that is not in `knownKeys`, in one job of one stage. Each task
-    * folds its own rows; the driver merges the folds in partition order.
-    * The fold keeps only copies (keys and samples), since `toRdd` reuses
-    * its rows.
+  /** D1 — the [[KeyFold]] of every top-level key of the batch's `value`
+    * messages that is not in `knownKeys`, in one job of one stage. Each
+    * task walks its messages with the ingest decoder ([[MemberWalk]]: one
+    * Jackson pass, no variant) and folds the members of every message
+    * that parses; the driver merges the folds in partition order.
     */
-  def foldNewKeys(batch: DataFrame, msg: Column,
-      knownKeys: Set[String]): Map[String, KeyFold] = {
-    val known = knownKeys.toSeq
-    batch.select(msg).queryExecution.toRdd.mapPartitions { rows =>
-      val knownSet = new java.util.HashSet[UTF8String]()
-      known.foreach(k => knownSet.add(UTF8String.fromString(k)))
-      val folds = new java.util.LinkedHashMap[UTF8String, Acc]()
-      rows.foreach { r =>
-        if (!r.isNullAt(0)) {
-          val v = r.getVariant(0)
-          VariantAccessOps.foreachMember(v, 0) { (key, at) =>
-            if (!knownSet.contains(key)) {
-              val kind = VariantKindOps.kindAt(v.getValue, at)
-              var acc = folds.get(key)
-              if (acc == null) { acc = new Acc; folds.put(key.copy(), acc) }
-              acc.kinds |= 1 << kind
-              if (kind == StrK && acc.sample == null)
-                acc.sample = VariantAccessOps.stringAt(v.getValue, at).toString
-            }
-          }
-        }
-      }
-      val out = Array.newBuilder[(String, KeyFold)]
-      folds.forEach((k, a) => out += (k.toString -> KeyFold(a.kinds, a.sample)))
-      Iterator.single(out.result())
+  def foldNewKeys(batch: DataFrame, knownKeys: Set[String]): Map[String, KeyFold] =
+    batch.select(col("value")).queryExecution.toRdd.mapPartitions { rows =>
+      val walk = new NewKeys(knownKeys)
+      rows.foreach(r => if (!r.isNullAt(0)) walk.fold(r.getUTF8String(0)))
+      Iterator.single(walk.folds)
     }.collect().foldLeft(Map.empty[String, KeyFold]) { (merged, part) =>
       part.foldLeft(merged) { case (m, (k, f)) =>
         m.updated(k, m.get(k).fold(f)(g =>
           KeyFold(g.kinds | f.kinds, if (g.sample != null) g.sample else f.sample)))
       }
+    }
+
+  /** A task's running [[KeyFold]]s: a message's unknown members count
+    * only once the whole message has parsed.
+    */
+  private final class NewKeys(known: Set[String]) extends MemberWalk {
+    private val accs = new java.util.LinkedHashMap[String, Acc]()
+    private val pending = new java.util.ArrayList[(String, Int, String)]()
+    private val d = new Decoded
+
+    protected def member(name: String, p: JsonParser, t: JsonToken): Unit = {
+      once(name, p)
+      if (known(name)) JsonDecoder.skip(p)
+      else {
+        JsonDecoder.decode(p, t, d, 0)
+        pending.add((name, d.kind, if (d.kind == StrK) d.string.toString else null))
+      }
+    }
+
+    protected def start(): Unit = pending.clear()
+
+    def fold(s: UTF8String): Unit =
+      if (walk(s)) pending.forEach { case (name, kind, str) =>
+        var acc = accs.get(name)
+        if (acc == null) { acc = new Acc; accs.put(name, acc) }
+        acc.kinds |= 1 << kind
+        if (acc.sample == null) acc.sample = str
+      }
+
+    def folds: Array[(String, KeyFold)] = {
+      val out = Array.newBuilder[(String, KeyFold)]
+      accs.forEach((k, a) => out += (k -> KeyFold(a.kinds, a.sample)))
+      out.result()
     }
   }
 

@@ -126,6 +126,79 @@ object GoLayouts {
   }
 }
 
+/** Layout 0, `2006-01-02T15:04:05Z07:00`, read from a string's bytes
+  * without `java.time`: `yyyy-MM-ddTHH:mm:ss`, an optional `.` and 1-9
+  * fraction digits, then `Z` or `+hh:mm`/`-hh:mm`. Only a plainly valid
+  * value is read here: a real day of its month, hour 0-23, minute and
+  * second 0-59, an offset within 18:00. Anything else (lowercase `t` or
+  * `z`, Feb 30, `24:00:00`, second 60, ten fraction digits) is
+  * [[Rfc3339.NotPlain]] and left to `java.time`, whose SMART resolver
+  * accepts some of it (Feb 30 reads as Feb 29; 24:00 as the next day).
+  */
+object Rfc3339 {
+  final val NotPlain = Long.MinValue
+
+  /** UTC micros, or NotPlain. */
+  def micros(s: UTF8String): Long = {
+    val n = s.numBytes
+    if (n < 20) return NotPlain
+    def digit(i: Int): Int = {
+      val c = s.getByte(i) - '0'
+      if (c >= 0 && c <= 9) c else -100000
+    }
+    def two(i: Int): Int = digit(i) * 10 + digit(i + 1)
+    def is(i: Int, c: Char): Boolean = s.getByte(i) == c
+    val year = two(0) * 100 + two(2)
+    val month = two(5)
+    val day = two(8)
+    val hour = two(11)
+    val minute = two(14)
+    val second = two(17)
+    if (year < 0 || !is(4, '-') || !is(7, '-') || !is(10, 'T') || !is(13, ':') ||
+      !is(16, ':') || month < 1 || month > 12 || day < 1 || day > daysIn(year, month) ||
+      hour < 0 || hour > 23 || minute < 0 || minute > 59 || second < 0 || second > 59)
+      return NotPlain
+    var i = 19
+    var nanos = 0L
+    if (is(i, '.')) {
+      i += 1
+      val start = i
+      while (i < n && digit(i) >= 0) { nanos = nanos * 10 + digit(i); i += 1 }
+      val digits = i - start
+      if (digits < 1 || digits > 9) return NotPlain
+      nanos *= math.pow(10, 9 - digits).toLong
+    }
+    val offset =
+      if (i == n - 1 && is(i, 'Z')) 0
+      else if (i == n - 6 && (is(i, '+') || is(i, '-')) && is(i + 3, ':')) {
+        val hh = two(i + 1)
+        val mm = two(i + 4)
+        if (hh < 0 || mm < 0 || mm > 59 || hh * 60 + mm > 18 * 60) return NotPlain
+        (if (is(i, '-')) -60 else 60) * (hh * 60 + mm)
+      } else return NotPlain
+    val sec = epochDay(year, month, day) * 86400L + hour * 3600 + minute * 60 + second - offset
+    sec * 1000000L + nanos / 1000L
+  }
+
+  private def leap(y: Int): Boolean = y % 4 == 0 && (y % 100 != 0 || y % 400 == 0)
+
+  private def daysIn(y: Int, m: Int): Int =
+    if (m == 2) { if (leap(y)) 29 else 28 }
+    else if (m == 4 || m == 6 || m == 9 || m == 11) 30 else 31
+
+  /** Days from 1970-01-01 of a proleptic Gregorian date (the ISO
+    * chronology's; H. Hinnant's days_from_civil).
+    */
+  private def epochDay(year: Int, m: Int, d: Int): Long = {
+    val y = if (m <= 2) year - 1 else year
+    val era = (if (y >= 0) y else y - 399) / 400
+    val yoe = y - era * 400
+    val doy = (153 * (if (m > 2) m - 3 else m + 9) + 2) / 5 + d - 1
+    val doe = yoe * 365 + yoe / 4 - yoe / 100 + doy
+    era * 146097L + doe - 719468L
+  }
+}
+
 case class AutoTimestamp(child: Expression, zone: String)
     extends UnaryExpression {
 
@@ -142,12 +215,21 @@ case class AutoTimestamp(child: Expression, zone: String)
   @transient private var cachedLayoutPlus1: Int = 0
 
   /** Parse to UTC micros, or null. Called from both interpreted eval and
-    * generated code.
+    * generated code. While no layout or layout 0 is cached, a plainly
+    * valid layout-0 string is read straight from its bytes
+    * ([[Rfc3339.micros]]); any other string goes through `java.time`.
     */
   def parseMicros(s: UTF8String): java.lang.Long = {
-    val str = s.toString
-    if (str.isEmpty) return null
+    if (s.numBytes == 0) return null
     val cached = cachedLayoutPlus1 - 1
+    if (cached <= 0) {
+      val fast = Rfc3339.micros(s)
+      if (fast != Rfc3339.NotPlain) {
+        cachedLayoutPlus1 = 1
+        return fast
+      }
+    }
+    val str = s.toString
     if (cached >= 0) {
       GoLayouts.parseWith(cached, str, zoneId)
     } else {

@@ -147,29 +147,88 @@ object VariantAccessOps {
   }
 }
 
-/** The tolerant getter of one ClickHouse type ([[ChGetters]]' F1-F12),
-  * read in place: at top-level `key` of a parsed message, or at the root
-  * of a variant when `key` is None. A read finds its value as an offset
-  * into the variant's value bytes ([[VariantAccessOps.locate]], no field
-  * copy), switches once on that value's kind tag
-  * ([[VariantKindOps.kindAt]]) and returns the getter's result: unboxed
-  * from `read`, boxed (or null) from `evalAt`. A SQL NULL variant, a
-  * missing key and a JSON null are all "no value": the kind's default, or
-  * NULL for a Nullable dim.
+/** One JSON value as the typed reads see it, decoded once: its kind tag
+  * ([[VariantKindOps]]) and its payload. It comes from a variant's bytes
+  * ([[Decoded.load]]: map values, array elements, static fields, CSV's
+  * embedded JSON) or from a message's JSON token ([[JsonDecoder]]); each
+  * getter is written once, over this.
   *
-  * `readAt`/`evalAt` read the value at any offset of the variant's value
-  * bytes, so map values and array elements ([[MapRead]], [[ArrayRead]])
-  * are the same reads, with no copy and no rebuild.
+  * `tree` is the value as a variant at offset `at` of its value bytes,
+  * which maps, arrays, objects and a non-string's JSON text read; null
+  * when the value was decoded from its token alone.
+  */
+final class Decoded {
+  var kind: Int = NullK
+  /** IntK's value; BoolK's as 1 or 0. */
+  var long: Long = 0L
+  /** FloatK's value. */
+  var double: Double = 0.0
+  /** Dec0K's and DecFracK's value, at the scale it was written with. */
+  var decimal: java.math.BigDecimal = null
+  /** StrK's UTF-8 payload. */
+  var string: UTF8String = null
+  var tree: VariantVal = null
+  var at: Int = -1
+
+  /** This, holding the value at `pos` of `v`'s value bytes (a null `v`
+    * or `pos` -1: no value).
+    */
+  def load(v: VariantVal, pos: Int): Decoded = {
+    tree = v
+    at = pos
+    kind = if (v == null || pos < 0) NullK else VariantKindOps.kindAt(v.getValue, pos)
+    kind match {
+      case BoolK => long = if (getBoolean(v.getValue, pos)) 1L else 0L
+      case IntK  => long = getLong(v.getValue, pos)
+      case FloatK =>
+        double = if (getType(v.getValue, pos) == Type.FLOAT) getFloat(v.getValue, pos).toDouble
+          else getDouble(v.getValue, pos)
+      case Dec0K | DecFracK => decimal = getDecimalWithOriginalScale(v.getValue, pos)
+      case StrK  => string = VariantAccessOps.stringAt(v.getValue, pos)
+      case _     =>
+    }
+    this
+  }
+
+  /** A number as `try_variant_get(_, "$", "double")` reads it. */
+  def number: Double = kind match {
+    case IntK   => long.toDouble
+    case FloatK => double
+    case _      => decimal.doubleValue
+  }
+
+  def isNumber: Boolean = ScalarRead.isNumber(kind)
+}
+
+/** The tolerant getter of one ClickHouse type ([[ChGetters]]' F1-F12),
+  * over a [[Decoded]] value. Over a variant it reads at top-level `key` of
+  * a parsed message, or at the root when `key` is None: it finds its
+  * value as an offset into the variant's value bytes
+  * ([[VariantAccessOps.locate]], no field copy) and returns the getter's
+  * result: unboxed from `read`, boxed (or null) from `evalAt`. Over a
+  * message's tokens, [[JsonDecoder]] hands it the decoded value
+  * (`evalDecoded`). A SQL NULL variant, a missing key and a JSON null are
+  * all "no value": the kind's default, or NULL for a Nullable dim.
+  *
+  * `evalAt` reads the value at any offset of the variant's value bytes,
+  * so map values and array elements ([[MapRead]], [[ArrayRead]]) are the
+  * same reads, with no copy and no rebuild.
   */
 sealed abstract class ValueRead(key: Option[String]) extends Serializable {
   def nullable: Boolean
   def dataType: DataType
+  /** The result for `d`, boxed, or null. */
+  def evalDecoded(d: Decoded): Any
   /** The result for the value at `at` of `v`'s value bytes (-1: no value),
     * boxed, or null.
     */
-  def evalAt(v: VariantVal, at: Int): Any
+  def evalAt(v: VariantVal, at: Int): Any = evalDecoded(decodedAt(v, at))
   /** The result for interpreted evaluation: boxed, or null. */
   final def eval(v: VariantVal): Any = evalAt(v, offset(v))
+  /** Bits of the kinds whose values this read takes from `Decoded.tree`:
+    * a token decoder builds the variant of such a value.
+    */
+  def treeKinds: Int = 0
 
   private val keyBytes = key.map(_.getBytes(UTF_8)).orNull
 
@@ -178,6 +237,8 @@ sealed abstract class ValueRead(key: Option[String]) extends Serializable {
     if (v == null) -1
     else if (keyBytes == null) 0
     else VariantAccessOps.locate(v.getValue, v.getMetadata, keyBytes)
+
+  protected final def decodedAt(v: VariantVal, at: Int): Decoded = new Decoded().load(v, at)
 
   protected final def kindOf(v: VariantVal, at: Int): Int =
     if (at < 0) NullK else VariantKindOps.kindAt(v.getValue, at)
@@ -231,20 +292,9 @@ object ScalarRead {
   def isNumber(kind: Int): Boolean =
     kind == IntK || kind == FloatK || kind == Dec0K || kind == DecFracK
 
-  /** A number as `try_variant_get(_, "$", "double")` reads it. */
-  def number(value: Array[Byte], at: Int, kind: Int): Double = kind match {
-    case IntK   => getLong(value, at).toDouble
-    case FloatK =>
-      if (getType(value, at) == Type.FLOAT) getFloat(value, at).toDouble
-      else getDouble(value, at)
-    case _      => getDecimalWithOriginalScale(value, at).doubleValue
-  }
-
   /** A zero-scale decimal that Go's Uint64() accepts: (int64 max, 2^64 - 1]. */
-  def uint64Literal(value: Array[Byte], at: Int): java.math.BigDecimal = {
-    val d = getDecimalWithOriginalScale(value, at)
+  def uint64Literal(d: java.math.BigDecimal): java.math.BigDecimal =
     if (d.compareTo(LongMax) > 0 && d.compareTo(MaxUint64) <= 0) d else null
-  }
 
   /** Any value's JSON text, as `to_json` writes the variant. */
   def json(v: VariantVal, at: Int): UTF8String = UTF8String.fromString(
@@ -270,22 +320,22 @@ sealed abstract class PrimitiveRead(key: Option[String]) extends ScalarRead(key)
 /** F1: strict bool, only JSON true/false. */
 final case class BoolRead(key: Option[String], nullable: Boolean) extends PrimitiveRead(key) {
   def dataType: DataType = BooleanType
-  def read(v: VariantVal): Boolean = readAt(v, offset(v))
-  def readAt(v: VariantVal, at: Int): Boolean = {
-    miss = kindOf(v, at) != BoolK
-    !miss && getBoolean(v.getValue, at)
+  def read(v: VariantVal): Boolean = get(decodedAt(v, offset(v)))
+  def get(d: Decoded): Boolean = {
+    miss = d.kind != BoolK
+    !miss && d.long != 0L
   }
-  def evalAt(v: VariantVal, at: Int): Any = orNull(readAt(v, at))
+  def evalDecoded(d: Decoded): Any = orNull(get(d))
 }
 
 /** A read whose integer result narrows to `dataType` (the generated code
   * casts the long).
   */
 sealed abstract class IntegralRead(key: Option[String]) extends PrimitiveRead(key) {
-  final def read(v: VariantVal): Long = readAt(v, offset(v))
-  def readAt(v: VariantVal, at: Int): Long
-  def evalAt(v: VariantVal, at: Int): Any = {
-    val x = readAt(v, at)
+  final def read(v: VariantVal): Long = get(decodedAt(v, offset(v)))
+  def get(d: Decoded): Long
+  def evalDecoded(d: Decoded): Any = {
+    val x = get(d)
     orNull(dataType match {
       case ByteType    => x.toByte
       case ShortType   => x.toShort
@@ -300,11 +350,11 @@ sealed abstract class IntegralRead(key: Option[String]) extends PrimitiveRead(ke
   */
 final case class SignedRead(key: Option[String], nullable: Boolean, dataType: DataType,
     min: Long, max: Long) extends IntegralRead(key) {
-  def readAt(v: VariantVal, at: Int): Long = {
+  def get(d: Decoded): Long = {
     miss = false
-    kindOf(v, at) match {
-      case BoolK => if (getBoolean(v.getValue, at)) 1L else 0L
-      case IntK  => math.max(math.min(getLong(v.getValue, at), max), min)
+    d.kind match {
+      case BoolK => d.long
+      case IntK  => math.max(math.min(d.long, max), min)
       case _     => miss = true; 0L
     }
   }
@@ -316,14 +366,12 @@ final case class SignedRead(key: Option[String], nullable: Boolean, dataType: Da
   */
 final case class UnsignedRead(key: Option[String], nullable: Boolean, dataType: DataType,
     max: Long) extends IntegralRead(key) {
-  def readAt(v: VariantVal, at: Int): Long = {
+  def get(d: Decoded): Long = {
     miss = false
-    kindOf(v, at) match {
-      case BoolK => if (getBoolean(v.getValue, at)) 1L else 0L
-      case IntK  =>
-        val l = getLong(v.getValue, at)
-        if (l >= 0) math.min(l, max) else { miss = true; 0L }
-      case Dec0K if ScalarRead.uint64Literal(v.getValue, at) != null => max
+    d.kind match {
+      case BoolK => d.long
+      case IntK  => if (d.long >= 0) math.min(d.long, max) else { miss = true; 0L }
+      case Dec0K if ScalarRead.uint64Literal(d.decimal) != null => max
       case _     => miss = true; 0L
     }
   }
@@ -334,21 +382,19 @@ final case class UnsignedRead(key: Option[String], nullable: Boolean, dataType: 
   */
 final case class UInt64Read(key: Option[String], nullable: Boolean) extends ScalarRead(key) {
   def dataType: DataType = DecimalType(20, 0)
-  def read(v: VariantVal): Decimal = readAt(v, offset(v))
-  def readAt(v: VariantVal, at: Int): Decimal = {
-    val d = kindOf(v, at) match {
-      case BoolK => Decimal(if (getBoolean(v.getValue, at)) 1L else 0L)
-      case IntK  =>
-        val l = getLong(v.getValue, at)
-        if (l >= 0) Decimal(l) else null
+  def read(v: VariantVal): Decimal = get(decodedAt(v, offset(v)))
+  def get(d: Decoded): Decimal = {
+    val x = d.kind match {
+      case BoolK => Decimal(d.long)
+      case IntK  => if (d.long >= 0) Decimal(d.long) else null
       case Dec0K =>
-        val big = ScalarRead.uint64Literal(v.getValue, at)
+        val big = ScalarRead.uint64Literal(d.decimal)
         if (big != null) Decimal(big) else null
       case _     => null
     }
-    if (d != null || nullable) d else Decimal(0L)
+    if (x != null || nullable) x else Decimal(0L)
   }
-  def evalAt(v: VariantVal, at: Int): Any = readAt(v, at)
+  def evalDecoded(d: Decoded): Any = get(d)
 }
 
 /** F4: any number as a double, clamped at +max (fastjson.go:175-188);
@@ -356,14 +402,13 @@ final case class UInt64Read(key: Option[String], nullable: Boolean) extends Scal
   */
 final case class FloatRead(key: Option[String], nullable: Boolean, dataType: DataType,
     max: Double) extends PrimitiveRead(key) {
-  def read(v: VariantVal): Double = readAt(v, offset(v))
-  def readAt(v: VariantVal, at: Int): Double = {
-    val k = kindOf(v, at)
-    miss = !ScalarRead.isNumber(k)
-    if (miss) 0.0 else math.min(ScalarRead.number(v.getValue, at, k), max)
+  def read(v: VariantVal): Double = get(decodedAt(v, offset(v)))
+  def get(d: Decoded): Double = {
+    miss = !d.isNumber
+    if (miss) 0.0 else math.min(d.number, max)
   }
-  def evalAt(v: VariantVal, at: Int): Any = {
-    val x = readAt(v, at)
+  def evalDecoded(d: Decoded): Any = {
+    val x = get(d)
     orNull(if (dataType == FloatType) x.toFloat else x)
   }
 }
@@ -373,22 +418,20 @@ final case class FloatRead(key: Option[String], nullable: Boolean, dataType: Dat
   */
 final case class DecimalRead(key: Option[String], nullable: Boolean) extends ScalarRead(key) {
   def dataType: DataType = DecimalType(38, 9)
-  def read(v: VariantVal): Decimal = readAt(v, offset(v))
-  def readAt(v: VariantVal, at: Int): Decimal = {
-    val k = kindOf(v, at)
-    if (!ScalarRead.isNumber(k)) { if (nullable) null else Decimal(0L, 38, 9) }
+  def read(v: VariantVal): Decimal = get(decodedAt(v, offset(v)))
+  def get(d: Decoded): Decimal =
+    if (!d.isNumber) { if (nullable) null else Decimal(0L, 38, 9) }
     else {
       // the double -> DECIMAL(38, 9) cast: round half up, NULL on overflow
       // and on +-Infinity (a number past the double range parses to one)
-      val x = ScalarRead.number(v.getValue, at, k)
+      val x = d.number
       if (x.isInfinite) null
       else {
-        val d = Decimal(x)
-        if (d.changePrecision(38, 9)) d else null
+        val dec = Decimal(x)
+        if (dec.changePrecision(38, 9)) dec else null
       }
     }
-  }
-  def evalAt(v: VariantVal, at: Int): Any = readAt(v, at)
+  def evalDecoded(d: Decoded): Any = get(d)
 }
 
 /** F7/F8: an epoch number scaled by `unit` (out of [0, 2^32) -> Epoch),
@@ -400,32 +443,31 @@ final case class DateTimeRead(key: Option[String], nullable: Boolean, unit: Doub
     zone: String) extends PrimitiveRead(key) {
   private val layouts = AutoTimestamp(Literal(null, StringType), zone)
   def dataType: DataType = TimestampType
-  def read(v: VariantVal): Long = readAt(v, offset(v))
-  def readAt(v: VariantVal, at: Int): Long = {
-    val k = kindOf(v, at)
+  def read(v: VariantVal): Long = get(decodedAt(v, offset(v)))
+  def get(d: Decoded): Long = {
     miss = false
-    if (ScalarRead.isNumber(k)) {
-      val sec = ScalarRead.number(v.getValue, at, k) * unit
+    if (d.isNumber) {
+      val sec = d.number * unit
       if (sec < 0.0 || sec >= ScalarRead.TwoPow32) 0L else (sec * 1000000L).toLong
     } else {
-      val micros =
-        if (k == StrK) layouts.parseMicros(VariantAccessOps.stringAt(v.getValue, at)) else null
+      val micros = if (d.kind == StrK) layouts.parseMicros(d.string) else null
       if (micros == null) { miss = true; 0L } else micros.longValue
     }
   }
-  def evalAt(v: VariantVal, at: Int): Any = orNull(readAt(v, at))
+  def evalDecoded(d: Decoded): Any = orNull(get(d))
 }
 
 /** F6: a string as-is; any other value as its JSON text (fastjson.go:712-728). */
 final case class StringRead(key: Option[String], nullable: Boolean) extends ScalarRead(key) {
   def dataType: DataType = StringType
-  def read(v: VariantVal): UTF8String = readAt(v, offset(v))
-  def readAt(v: VariantVal, at: Int): UTF8String = kindOf(v, at) match {
-    case StrK  => VariantAccessOps.stringAt(v.getValue, at)
+  def read(v: VariantVal): UTF8String = get(decodedAt(v, offset(v)))
+  def get(d: Decoded): UTF8String = d.kind match {
+    case StrK  => d.string
     case NullK => ScalarRead.defaultString(nullable)
-    case _     => ScalarRead.json(v, at)
+    case _     => ScalarRead.json(d.tree, d.at)
   }
-  def evalAt(v: VariantVal, at: Int): Any = readAt(v, at)
+  def evalDecoded(d: Decoded): Any = get(d)
+  override def treeKinds: Int = ~((1 << StrK) | (1 << NullK))
 }
 
 /** F9: a valid IP string of either family kept (Go net.ParseIP), any
@@ -435,26 +477,33 @@ final case class IpRead(key: Option[String], nullable: Boolean, v4: Boolean)
     extends ScalarRead(key) {
   private val zero = UTF8String.fromString(if (v4) "0.0.0.0" else "::")
   def dataType: DataType = StringType
-  def read(v: VariantVal): UTF8String = readAt(v, offset(v))
-  def readAt(v: VariantVal, at: Int): UTF8String = kindOf(v, at) match {
-    case StrK  =>
-      val s = VariantAccessOps.stringAt(v.getValue, at)
-      if (IpUtil.isValidIp(s.toString)) s else zero
+  def read(v: VariantVal): UTF8String = get(decodedAt(v, offset(v)))
+  def get(d: Decoded): UTF8String = d.kind match {
+    case StrK  => if (IpUtil.isValidIp(d.string.toString)) d.string else zero
     case IntK if v4 =>
-      val l = getLong(v.getValue, at)
-      val u = if (l >= 0) math.min(l, 4294967295L) else 0L
+      val u = if (d.long >= 0) math.min(d.long, 4294967295L) else 0L
       UTF8String.fromString(s"${(u >> 24) & 255}.${(u >> 16) & 255}.${(u >> 8) & 255}.${u & 255}")
     case NullK => ScalarRead.defaultString(nullable)
     case _     => zero
   }
-  def evalAt(v: VariantVal, at: Int): Any = readAt(v, at)
+  def evalDecoded(d: Decoded): Any = get(d)
+}
+
+/** A read of a JSON container: its value is the variant subtree
+  * (`Decoded.tree`) of a value of kind `treeKind`.
+  */
+sealed abstract class ContainerRead(key: Option[String], treeKind: Int) extends ValueRead(key) {
+  def readAt(v: VariantVal, at: Int): Any
+  override def evalAt(v: VariantVal, at: Int): Any = readAt(v, at)
+  def evalDecoded(d: Decoded): Any = readAt(d.tree, if (d.tree == null) -1 else d.at)
+  override def treeKinds: Int = 1 << treeKind
 }
 
 /** F10: an Object('json') value keeps its string and number members, a
   * string as its payload and a number as its JSON text
   * (fastjson.go:681-710); a non-object gives the empty map.
   */
-final case class ObjectRead(key: Option[String]) extends ValueRead(key) {
+final case class ObjectRead(key: Option[String]) extends ContainerRead(key, ObjK) {
   def nullable: Boolean = false
   def dataType: DataType = MapType(StringType, StringType)
   def read(v: VariantVal): MapData = readAt(v, offset(v))
@@ -471,7 +520,6 @@ final case class ObjectRead(key: Option[String]) extends ValueRead(key) {
     }
     new ArrayBasedMapData(new GenericArrayData(keys.toArray), new GenericArrayData(vals.toArray))
   }
-  def evalAt(v: VariantVal, at: Int): Any = readAt(v, at)
 }
 
 /** F11: Map(K, V) over a JSON object (fastjson.go:327-455,660-679): each
@@ -487,7 +535,7 @@ final case class ObjectRead(key: Option[String]) extends ValueRead(key) {
   * object's keys are distinct.
   */
 final case class MapRead(key: Option[String], keyType: DataType,
-    keyConversion: Option[Expression], value: ValueRead) extends ValueRead(key) {
+    keyConversion: Option[Expression], value: ValueRead) extends ContainerRead(key, ObjK) {
   def nullable: Boolean = false
   def dataType: DataType = MapType(keyType, value.dataType)
   @transient private lazy val keyRow = new GenericInternalRow(1)
@@ -508,7 +556,6 @@ final case class MapRead(key: Option[String], keyType: DataType,
     }
     new ArrayBasedMapData(new GenericArrayData(keys.toArray), new GenericArrayData(vals.toArray))
   }
-  def evalAt(v: VariantVal, at: Int): Any = readAt(v, at)
 }
 
 object MapRead {
@@ -536,7 +583,7 @@ object MapRead {
   * read by `element` (a non-Nullable read, so a missing value gives the
   * default); a non-array gives the empty array.
   */
-final case class ArrayRead(key: Option[String], element: ValueRead) extends ValueRead(key) {
+final case class ArrayRead(key: Option[String], element: ValueRead) extends ContainerRead(key, ArrK) {
   def nullable: Boolean = false
   def dataType: DataType = ArrayType(element.dataType, containsNull = true)
   def read(v: VariantVal): ArrayData = readAt(v, offset(v))
@@ -546,7 +593,6 @@ final case class ArrayRead(key: Option[String], element: ValueRead) extends Valu
       VariantAccessOps.foreachElement(v.getValue, at)(off => out += element.evalAt(v, off))
     new GenericArrayData(out.toArray)
   }
-  def evalAt(v: VariantVal, at: Int): Any = readAt(v, at)
 }
 
 /** A [[ValueRead]] over a variant column. The generated code is one call

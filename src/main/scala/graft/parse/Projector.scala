@@ -2,9 +2,11 @@ package graft.parse
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CatalystBridge.{toColumn, toExpression}
 import org.apache.spark.sql.types._
+import org.apache.spark.util.LongAccumulator
 
-import graft.functions.{ChGetters, VariantAccess}
+import graft.functions.{ChGetters, JsonDecode, Once, ValueRead, VariantAccess}
 import graft.functions.ChGetters.ParseOpts
 import graft.types.ChTypeInfo
 
@@ -43,49 +45,39 @@ object Projector {
 
   /** Project a JSON-message DataFrame. `fields` is the task-level static
     * JSON object merged over every message (P6, overwrite semantics).
+    * `parseErrors`, when given, counts the messages dropped as corrupt
+    * (P5).
     */
   def projectJson(df: DataFrame, dims: Seq[Dim], opts: ParseOpts,
-      fields: Map[String, String] = Map.empty): DataFrame = {
-    // Once(..) pins the parse to a single evaluation per row — without it
-    // the corrupt filter below is predicate-pushed into the scan and the
-    // message parses twice (see graft.functions.Once). A pre-parsed
-    // `__msg__` column (the dynamic-schema single-parse path) is reused
-    // as-is.
-    val msg = graft.functions.Once(ChGetters.parsed(col("value")))
-    val parsed0 =
-      if (df.columns.contains("__msg__")) df
-      else df.withColumn("__msg__", msg)
-    // P5: unparseable JSON -> dropped. No caller counts these drops yet;
-    // ROADMAP direction 2 puts a parse-error counter on /metrics.
-    val parsed = parsed0.filter(col("__msg__").isNotNull)
-
+      fields: Map[String, String] = Map.empty,
+      parseErrors: Option[LongAccumulator] = None): DataFrame = {
     // Static fields win over message content (fastjson.go:54-58): such a
     // dim reads the root of its own parsed JSON instead of its key.
     def static(d: Dim): Option[Column] =
-      fields.get(d.source).map(rawJson => ChGetters.parsed(lit(rawJson)))
-
-    // Every dim but a meta dim is ONE typed read over the message
-    // (graft.functions.ValueRead): it finds its key in place and returns
-    // the getter's result, a map or an array reading its members at their
-    // offsets, with no field binding, cast or higher-order function. That
-    // keeps the projection in one codegen stage small enough for the JIT:
-    // above HotSpot's 8,000-byte method limit processNext runs interpreted.
-    // A read keeps the dim's own nullability even when notNullable is
-    // set: the reference extracts with Nullable semantics and then DROPS
-    // the message on null (task/task.go:303-314), it does not substitute
-    // a default.
+      fields.get(d.source).map(rawJson =>
+        VariantAccess.read(ChGetters.parsed(lit(rawJson)), None, d.ti, opts))
+    // Every dim but a meta dim or a static field is one typed read
+    // (ValueRead) inside ONE decoder: a single Jackson pass over the message's bytes hands
+    // each known key's value to its dims' reads and skips the rest, with
+    // no variant per message (JsonDecode). A read keeps the dim's own
+    // nullability even when notNullable is set: the reference extracts
+    // with Nullable semantics and then DROPS the message on null
+    // (task/task.go:303-314), it does not substitute a default.
+    val decoded = dims.filter(d => metaSource(d.name).isEmpty && !fields.contains(d.source))
+    val decode = toColumn(JsonDecode(toExpression(col("value")), decoded.map(_.source),
+      decoded.map(d => ValueRead(None, d.ti, opts)), parseErrors))
+    // Once(..) pins the decode to a single evaluation per row: without it
+    // the corrupt filter below is predicate-pushed into the scan and each
+    // field read inlines its own decode (see graft.functions.Once).
+    // P5: a message that does not parse -> dropped.
+    val rows = df.withColumn("__row__", Once(decode)).filter(col("__row__").isNotNull)
+    val field = decoded.zipWithIndex.toMap
     val cols = dims.map { d =>
       if (metaSource(d.name).isDefined)
-        metaColumn(parsed, d).getOrElse(lit(null).cast(d.ti.sparkType).as(d.name))
-      else {
-        val (v, key) = static(d) match {
-          case Some(v) => (v, None)
-          case None    => (col("__msg__"), Some(d.source))
-        }
-        VariantAccess.read(v, key, d.ti, opts).as(d.name)
-      }
+        metaColumn(rows, d).getOrElse(lit(null).cast(d.ti.sparkType).as(d.name))
+      else static(d).getOrElse(col("__row__").getField(s"_${field(d)}")).as(d.name)
     }
-    withNotNullFilter(parsed.select(cols: _*), dims)
+    withNotNullFilter(rows.select(cols: _*), dims)
   }
 
   /** Project a CSV-message DataFrame given the csvFormat column order

@@ -50,6 +50,12 @@ final class Metrics extends StreamingQueryListener {
     rowsWritten.add(s.written); badRows.add(s.numBad); writeRetries.add(s.retries)
   }
 
+  /** Messages dropped as corrupt JSON (P5; the reference's parse-error
+    * counter), added by `Pipeline.start` once per batch from its write
+    * tasks' accumulator.
+    */
+  val parseErrors = new LongAdder
+
   /** Cumulative (le -> count) buckets plus (sum, count), Prometheus-style. */
   def writeHistogram: (Seq[(String, Long)], Long, Long) = {
     var acc = 0L
@@ -125,6 +131,8 @@ final class Metrics extends StreamingQueryListener {
     sb.append(s"graft_bad_rows ${badRows.sum()}\n")
     sb.append("# TYPE graft_write_retries counter\n")
     sb.append(s"graft_write_retries ${writeRetries.sum()}\n")
+    sb.append("# TYPE graft_parse_errors counter\n")
+    sb.append(s"graft_parse_errors ${parseErrors.sum()}\n")
     sb.append("# TYPE graft_task_failures counter\n")
     sb.append(s"graft_task_failures ${restartFailures.sum()}\n")
     // generated-code classes Spark compiled in this JVM (in local mode,

@@ -5,11 +5,11 @@ import scala.annotation.unused
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.util.LongAccumulator
 
 import graft.config.{KafkaConfig, TaskConfig}
 import graft.dynamic.SchemaEvolution
 import graft.dynamic.SchemaEvolution.NewKeyPolicy
-import graft.functions.ChGetters
 import graft.functions.ChGetters.ParseOpts
 import graft.parse.Projector
 import graft.parse.Projector.Dim
@@ -95,12 +95,15 @@ object Pipeline {
           col("topic") === task.topic))
     else src.filter(col("topic") === task.topic)
 
-  /** Parse + project one (micro-)batch according to the task config. */
-  def project(src: DataFrame, task: TaskConfig, dims: Seq[Dim]): DataFrame = {
+  /** Parse + project one (micro-)batch according to the task config;
+    * `parseErrors` counts the JSON messages dropped as corrupt.
+    */
+  def project(src: DataFrame, task: TaskConfig, dims: Seq[Dim],
+      parseErrors: Option[LongAccumulator] = None): DataFrame = {
     val opts = ParseOpts(task.timeZone, task.timeUnit)
     task.parser match {
       case "csv" => Projector.projectCsv(src, task.csvFormat, dims, opts, task.delimiter)
-      case _     => Projector.projectJson(src, dims, opts, task.fields)
+      case _     => Projector.projectJson(src, dims, opts, task.fields, parseErrors)
     }
   }
 
@@ -169,6 +172,8 @@ object Pipeline {
     // time, reads and widens it
     var (curDims, curSink) = (dims, sink)
     val dynamic = task.dynamicSchema && task.parser != "csv"
+    // messages the decoder drops as corrupt, summed by the write tasks
+    val parseErrors = src.sparkSession.sparkContext.longAccumulator(s"${task.name} parse errors")
 
     src.select(sourceColumns(task, dims).map(col): _*).writeStream
       .queryName(task.name)
@@ -176,33 +181,33 @@ object Pipeline {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val perCore = batch.coalesce(batch.sparkSession.sparkContext.defaultParallelism)
-        // Single-parse invariant (reference: one parse per message,
-        // GetNewKeys piggybacked — parser/fastjson.go:512-536): with
-        // dynamicSchema on, parse ONCE into a cached stage and run both
-        // the new-key detection and the projection from it.
-        val input =
-          if (dynamic) perCore.withColumn("__msg__",
-            graft.functions.Once(ChGetters.parsed(col("value")))).persist()
-          else perCore
+        // With dynamicSchema on, the batch's source columns are cached
+        // once: new-key detection and the projection each decode every
+        // message from them once, and no variant is built per message
+        // (the reference piggybacks GetNewKeys on its one parse,
+        // parser/fastjson.go:512-536).
+        val input = if (dynamic) perCore.persist() else perCore
         try {
           if (dynamic) {
             val newKeys = SchemaEvolution.detectNewKeys(
               input, curDims.map(_.source).toSet,
-              NewKeyPolicy(task.whiteList, task.blackList, timeZone = task.timeZone),
-              parsedCol = Some("__msg__"))
+              NewKeyPolicy(task.whiteList, task.blackList, timeZone = task.timeZone))
             if (newKeys.nonEmpty)
               onNewKeys(newKeys).foreach { case (d, s) => curDims = d; curSink = s }
           }
           // a task's own offset/partition dim is the one X3 routes on
           val allDims = curDims ++ metaDims.filterNot(m => curDims.exists(_.name == m.name))
           val sharded = Sharding.partitionByShard(
-            project(input, task, allDims),
+            project(input, task, allDims, Some(parseErrors)),
             shardColumn(task, allDims, curSink.numShards), curSink.numShards)
             .select((curDims.map(d => col(d.name)) :+ col("__shard__")): _*)
           val t0 = System.nanoTime()
           val stats = ChWriter.write(sharded, curSink.writeCfg, curSink.mkWriter)
           val ms = (System.nanoTime() - t0) / 1000000L
-          metrics.foreach { m => m.observeWriteMs(ms); m.observeWriteStats(stats) }
+          val corrupt = parseErrors.value
+          parseErrors.reset()
+          metrics.foreach { m =>
+            m.observeWriteMs(ms); m.observeWriteStats(stats); m.parseErrors.add(corrupt) }
         } finally if (dynamic) input.unpersist()
         ()
       }

@@ -236,6 +236,41 @@ class PipelineSpec extends AnyFunSuite with LocalSpark {
     assert(spark.read.json(outStr + "/shard=*/*.jsonl").count() === 3000L)
   }
 
+  test("/metrics counts every message the decoder drops as corrupt, over batches") {
+    val inDir  = Files.createTempDirectory("graft_in")
+    val stage  = Files.createTempDirectory("graft_stage")
+    val outDir = Files.createTempDirectory("graft_out")
+    val ckDir  = Files.createTempDirectory("graft_ck")
+    val task = TaskConfig(name = "test_parse_errors", topic = "topic1",
+      consumerGroup = "g1", bufferSize = 50000, flushInterval = 1)
+    val dims = Seq(Dim("name", ChType.whichType("String")))
+    val good = (1 to 40).map(i => s"""{"name": "n$i"}""".getBytes("UTF-8"))
+    // parsed by try_parse_json too: trailing content, roots that are not
+    // objects, an overlong UTF-8 sequence (read as U+FFFD)
+    val kept = Seq("""{"name": "t"} trailing""", "[1]", "\"s\"").map(_.getBytes("UTF-8")) :+
+      ("{\"name\": \"".getBytes("UTF-8") ++ Array(0xC0, 0xAF).map(_.toByte) ++ "\"}".getBytes("UTF-8"))
+    // corrupt: truncated, not JSON, empty, a duplicate key (top level and
+    // nested), a byte-order mark
+    val corrupt = Seq("""{"name": "x"""", "not json", "", """{"name": "a", "name": "b"}""",
+      """{"name": "a", "o": {"k": 1, "k": 2}}""").map(_.getBytes("UTF-8")) :+
+      (Array(0xEF, 0xBB, 0xBF).map(_.toByte) ++ """{"name": "bom"}""".getBytes("UTF-8"))
+    val batches = Seq(good.take(20) ++ corrupt.take(2) ++ kept,
+      corrupt.drop(2) ++ good.drop(20))
+    val metrics = new Metrics
+    val q = Pipeline.start(spark, Pipeline.fileSource(spark, inDir.toString, "topic1"),
+      task, dims, jsonSink(outDir.toString, dims), ckDir.toString, metrics = Some(metrics))
+    try batches.zipWithIndex.foreach { case (lines, b) =>
+      val f = stage.resolve(s"part-$b.txt")
+      Files.write(f, lines.reduce(_ ++ "\n".getBytes("UTF-8") ++ _))
+      Files.move(f, inDir.resolve(f.getFileName), StandardCopyOption.ATOMIC_MOVE)
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(q.recentProgress.count(_.numInputRows > 0) === 2)
+    assert(metrics.parseErrors.sum() === corrupt.size.toLong)
+    assert(metrics.prometheus.contains(s"graft_parse_errors ${corrupt.size}\n"))
+    assert(metrics.rowsWritten.sum() === (good.size + kept.size).toLong)
+  }
+
   test("F13: every __kafka_* meta dim reads its source column, also when evolution adds it") {
     val outDir = Files.createTempDirectory("graft_out")
     def run(name: String, lines: Seq[String], dims: Seq[Dim],

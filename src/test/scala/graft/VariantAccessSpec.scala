@@ -331,7 +331,7 @@ class VariantAccessSpec extends AnyFunSuite with LocalSpark {
   test("detectNewKeys: the in-place walk keeps the rebuild path's keys, tags and samples") {
     val known = Set("time", "name", "value", "price", "id")
     def fold(b: DataFrame) =
-      SchemaEvolution.foldNewKeys(b, ChGetters.parsed(col("value")), known)
+      SchemaEvolution.foldNewKeys(b, known)
     val ascii = generated(200, seed = 11L, keys = asciiKeys)
     val unicode = generated(200, seed = 13L)
     assert(unicode.exists(_.members.exists(_.exists(!_._1.forall(_ < 0x80)))))

@@ -9,8 +9,6 @@ import scala.util.Try
 import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import org.scalacheck.Gen
-import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{GoLayouts, VariantAccess}
@@ -43,86 +41,7 @@ import graft.types.{ChKind, ChType, ChTypeInfo}
   * with a non-ASCII object key.
   */
 class VariantReadSpec extends AnyFunSuite with LocalSpark {
-
-  private def quote(s: String): String = {
-    val sb = new StringBuilder("\"")
-    s.foreach {
-      case '"'  => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case c if c < 0x20 => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.append('"').toString
-  }
-
-  /** One sample per Go layout, in `GoLayouts.goLayouts` order. */
-  private val layoutSamples: IndexedSeq[String] = IndexedSeq(
-    "2009-07-13T09:07:13+08:00", "2009-07-13T09:07:13+0800", "2009-07-13T09:07:13",
-    "2009-07-13 09:07:13+08:00", "2009-07-13 09:07:13+0800", "2009-07-13 09:07:13.123",
-    "Mon Jul  6 09:07:13 2009", "Mon Jul  6 09:07:13 UTC 2009",
-    "Mon Jul 13 09:07:13 -0700 2009", "13 Jul 09 09:07 UTC", "13 Jul 09 09:07 -0700",
-    "Monday, 13-Jul-09 09:07:13 UTC", "Mon, 13 Jul 2009 09:07:13 UTC",
-    "Mon, 13 Jul 2009 09:07:13 -0700", "Mon Jul 13 09:07:13 UTC 2009",
-    "Mon 13 Jul 2009 09:07:13 AM UTC", "Jul 13, 2009 09:07:13+08:00",
-    "Jul 13, 2009 09:07:13+0800", "Jul 13, 2009 09:07:13", "13/Jul/2009 09:07:13 +08:00",
-    "13/Jul/2009 09:07:13 +0800", "13/Jul/2009 09:07:13", "2009-07-13", "13/07/2009",
-    "13/Jul/2009", "Jul 13, 2009", "Mon Jul 13, 2009")
-
-  private val strings: Seq[String] = Seq("", "x" * 63, "y" * 64, "z" * 10000, "é" * 40,
-    "日本語テキスト", "😀 emoji", "quote \" back \\ nl \n tab \t ctl \u0001", "123", "true",
-    "192.168.1.1", "256.1.1.1", "2001:db8::1", "::", "::ffff:1.2.3.4", "01.2.3.4",
-    "fe80::1%eth0", "1.2.3", "abc", "0.0.0.0", "not a date") ++ layoutSamples
-
-  /** JSON value texts at every edge the getters branch on. */
-  private val edges: Seq[String] = Seq(
-    "true", "false", "null", "0", "-1", "1",
-    "-129", "-128", "-127", "126", "127", "128", "254", "255", "256",
-    "-32769", "-32768", "-32767", "32766", "32767", "32768", "65534", "65535", "65536",
-    "-2147483649", "-2147483648", "-2147483647", "2147483646", "2147483647", "2147483648",
-    "4294967294", "4294967295", "4294967296",
-    "-9223372036854775809", "-9223372036854775808", "-9223372036854775807",
-    "9223372036854775806", "9223372036854775807", "9223372036854775808", "9223372036854775809",
-    "18446744073709551614", "18446744073709551615", "18446744073709551616",
-    "18446744073709551617", "99999999999999999999999999999999999999",
-    // decimals: fractional, ".0" forms beside the same digits without
-    // one, rounding and overflow edges of DECIMAL(38, 9)
-    "28.0", "-3.0", "28.00", "123.321", "0.5", "-0.5", "1.0000000005", "1.00000000049",
-    "9223372036854775807.0", "9223372036854775808.0", "9223372036854775808.00",
-    "18446744073709551615.0", "18446744073709551615.00", "18446744073709551616.0",
-    "-9223372036854775809.0", "12345678901234567890.123456789",
-    "99999999999999999999999999999.9999999994", "99999999999999999999999999999.9999999995",
-    "100000000000000000000000000000.0",
-    // doubles
-    "1.7976931348623157e308", "-1.7976931348623157e308", "1.7976931348623157E+308",
-    "3.4028234663852886e38", "3.5e38", "-3.5e38", "1e-300", "4.9e-324", "1.5e300",
-    "-0.0", "1E2", "2.5e-3", "1e19", "1.8446744073709552e19", "-1e19",
-    // past the double range: parsed as a DOUBLE of +-Infinity
-    "1e400", "-1e400", "9" * 400,
-    // epoch numbers around 0 and 2^32, in seconds and in milliseconds
-    "1500000000", "1500000000123", "4294967295999", "4294967296000", "4294967295.5",
-    "1500000000.5", "-0.001", "0.0",
-    // nested values
-    "{}", "[]", """{"a":1,"b":[1,2,{"c":"d"}]}""", """[1,"x",null,true]""",
-    """{"é":"ü","k":{"z":null}}""") ++ strings.map(quote)
-
-  private final case class Target(name: String, kind: ChKind, opts: ParseOpts, dt64: Int) {
-    def ti(nullable: Boolean): ChTypeInfo =
-      ChTypeInfo(kind, nullable = nullable, dateTime64Precision = dt64)
-  }
-
-  private val utc = ParseOpts()
-  private val targets: Seq[(Target, Boolean)] = Seq(
-    Target("Bool", ChKind.Bool, utc, 0),
-    Target("Int8", ChKind.Int8, utc, 0), Target("Int16", ChKind.Int16, utc, 0),
-    Target("Int32", ChKind.Int32, utc, 0), Target("Int64", ChKind.Int64, utc, 0),
-    Target("UInt8", ChKind.UInt8, utc, 0), Target("UInt16", ChKind.UInt16, utc, 0),
-    Target("UInt32", ChKind.UInt32, utc, 0), Target("UInt64", ChKind.UInt64, utc, 0),
-    Target("Float32", ChKind.Float32, utc, 0), Target("Float64", ChKind.Float64, utc, 0),
-    Target("Decimal", ChKind.Decimal, utc, 0), Target("DateTime", ChKind.DateTime, utc, 0),
-    Target("DateTime ms", ChKind.DateTime, ParseOpts("Asia/Shanghai", 0.001), 0),
-    Target("DateTime64(3)", ChKind.DateTime, utc, 3), Target("String", ChKind.Str, utc, 0),
-    Target("IPv4", ChKind.IPv4, utc, 0), Target("IPv6", ChKind.IPv6, utc, 0)
-  ).flatMap(t => Seq(t -> false, t -> true))
+  import ReadCorpus._
 
   /** Oracle, keyed read, root read, oracle and root read per array element. */
   private def reads(t: Target, nullable: Boolean, msg: Column, key: String): Seq[Column] = {
@@ -159,10 +78,6 @@ class VariantReadSpec extends AnyFunSuite with LocalSpark {
     }
   }
 
-  private def message(v: String, fillers: Seq[(String, String)] = Nil): String =
-    (fillers ++ Seq("v" -> v, "a" -> s"[$v]"))
-      .map { case (k, x) => s"${quote(k)}:$x" }.mkString("{", ",", "}")
-
   test("each scalar kind reads every edge value like the Column getter") {
     val texts = edges.map(message(_)) ++ Seq(
       """{"w": 1}""", """{"v": null, "a": [null]}""", """{}""", "[1]", "5", "\"s\"",
@@ -171,21 +86,7 @@ class VariantReadSpec extends AnyFunSuite with LocalSpark {
   }
 
   test("each scalar kind agrees with the Column getter on generated messages") {
-    val values: Gen[String] = Gen.frequency(
-      4 -> Gen.oneOf(edges),
-      2 -> Gen.choose(Long.MinValue, Long.MaxValue).map(_.toString),
-      2 -> Gen.choose(-70000L, 70000L).map(_.toString),
-      1 -> Gen.choose(-1e20, 1e20).map(_.toString),
-      1 -> Gen.choose(0.0, 5e9).map(d => f"$d%.3f"),
-      1 -> Gen.alphaNumStr.map(quote),
-      1 -> Gen.oneOf(layoutSamples).map(quote))
-    val fillers: Gen[Seq[(String, String)]] = Gen.choose(0, 40).flatMap(n =>
-      Gen.listOfN(n, values).map(_.zipWithIndex.map { case (x, i) => f"k$i%02d" -> x }))
-    val msgs: Gen[String] = Gen.frequency(
-      8 -> (for { v <- values; f <- fillers } yield message(v, f)),
-      1 -> fillers.map(f => f.map { case (k, x) => s"${quote(k)}:$x" }.mkString("{", ",", "}")),
-      1 -> values)
-    val texts = Gen.listOfN(400, msgs).pureApply(Gen.Parameters.default, Seed(42L))
+    val texts = ReadCorpus.generated(400, seed = 42L)
     assert(texts.count(_.contains("\"v\":")) > 300)
     assertAgree(texts)
   }
@@ -225,22 +126,6 @@ class VariantReadSpec extends AnyFunSuite with LocalSpark {
   }
 
   // ---- maps, arrays and Object('json') ----------------------------------
-
-  /** A container read's target: its type and the options its reads use. */
-  private final case class Container(name: String, ti: ChTypeInfo, opts: ParseOpts)
-
-  private def mapOf(t: Target, nullable: Boolean): Container =
-    Container(s"Map(String, ${if (nullable) s"Nullable(${t.name})" else t.name})",
-      ChTypeInfo(ChKind.MapK, mapKey = Some(ChTypeInfo(ChKind.Str)),
-        mapValue = Some(t.ti(nullable))), t.opts)
-
-  private val containers: Seq[Container] =
-    targets.map { case (t, n) => mapOf(t, n) } ++
-      targets.collect { case (t, false) =>
-        Container(s"Array(${t.name})", t.ti(nullable = false).copy(array = true), t.opts) } ++
-      Seq(Container("Object('json')", ChTypeInfo(ChKind.Obj), utc),
-        Container("Map(String, Map(String, UInt32))",
-          ChType.whichType("Map(String, Map(String, UInt32))"), utc))
 
   /** Typed map keys, each converted as the oracle's `transform_keys` does. */
   private val keyed: Seq[Container] = Seq("Int64", "Int8", "UInt8", "UInt64", "IPv4")
